@@ -57,25 +57,13 @@ class ReducedGraph:
         violated back for scoring)."""
         return self.kept + self.violated
 
-    # -------------------------------------------------------- point query
-
-    def _point_rel(self, a, b) -> str:
-        g = self.graph
-        if g._find(a) == g._find(b):
-            return "="
-        if g._reachable(g._find(a), g._find(b)):
-            return "<"
-        if g._reachable(g._find(b), g._find(a)):
-            return ">"
-        return "UNKNOWN"
-
     def entails(self, x: str, y: str, rel: str) -> bool:
         """interval_rel_X_Y(x, y, tg, rel, 'evaluation') == 'true'."""
         rel = _norm(rel)
         if x not in self.entities or y not in self.entities:
             return False
         sx, ex, sy, ey = ("s", x), ("e", x), ("s", y), ("e", y)
-        pr = self._point_rel
+        pr = self.graph.point_rel
         if rel == "BEFORE":
             return pr(ex, sy) == "<"
         if rel == "AFTER":
@@ -158,40 +146,16 @@ def reduce_relations(relations) -> ReducedGraph:
         if (x, y, rel) in seen:
             continue
         seen.add((x, y, rel))
-        cons = _CONSTRAINTS.get(rel)
-        if cons is None:
+        if rel not in _CONSTRAINTS:
             continue
         both_exist = x in rg.entities and y in rg.entities
         if both_exist and rg.entails(x, y, rel):
             rg.redundant.append((x, y, rel))
             continue
-        # attempt insertion (rolls back on inconsistency)
-        for e in (x, y):
-            if ("s", e) not in g._parent:
-                g._parent[("s", e)] = ("s", e)
-                g._parent[("e", e)] = ("e", e)
-                g.add_lt(("s", e), ("e", e))
-        ents = (x, y)
-        parent_snap = dict(g._parent)
-        lt_snap = {k: set(v) for k, v in g._lt.items()}
-        ok = True
-        for kind, (p1, i1), (p2, i2) in cons:
-            a, b = (p1, ents[i1]), (p2, ents[i2])
-            if kind == "<":
-                if not g.can_add_lt(a, b):
-                    ok = False
-                    break
-                g.add_lt(a, b)
-            else:
-                if not g.can_add_eq(a, b):
-                    ok = False
-                    break
-                g.add_eq(a, b)
-        if ok:
+        if g.add_relation(x, y, rel):
             rg.kept.append((x, y, rel))
             rg.entities.update((x, y))
         else:
-            g._parent, g._lt = parent_snap, lt_snap
             rg.violated.append((x, y, rel))
     return rg
 

@@ -340,7 +340,17 @@ def _gov_substitute(doc: DocState, e: Mention, tok_id: str) -> str:
 
 
 def ee_dependency_path(doc: DocState, e1: Mention, e2: Mention) -> str:
-    """EventEventFeatureVector.getMateDependencyPath (127-217)."""
+    """EventEventFeatureVector.getMateDependencyPath (127-217). Memoized
+    per ordered pair: the EE rule sieve and the EE/causal features ask for
+    the same pairs."""
+    key = ("ee_path", e1.mid, e2.mid)
+    path = doc.memo.get(key)
+    if path is None:
+        path = doc.memo[key] = _ee_dependency_path(doc, e1, e2)
+    return path
+
+
+def _ee_dependency_path(doc: DocState, e1: Mention, e2: Mention) -> str:
     if not is_same_sentence(doc, e1, e2):
         return "O"
     t1, t2 = e1.start_tok, e2.start_tok

@@ -3,7 +3,8 @@
 Vocabularies are copied from /root/reference/src/model/feature/
 PairFeatureVector.java:39-88; block semantics from the
 addBinaryFeatureToVector switch (2615-3373). Four fixed layouts are
-produced, matching the shipped liblinear featureLists:
+produced, matching the shipped liblinear featureLists (each matrix ends
+with the label column):
 
 * DCT   (EventDctRelationClassifier.java:75-83):  pos, chunk, eventClass,
   tense, aspect, polarity, mainVerb, hasModal                -> 167 cols
@@ -11,7 +12,7 @@ produced, matching the shipped liblinear featureLists:
   aspect, polarity                                           -> 19 cols
 * EE    (EventEventRelationClassifier.java:61-86)            -> 269 cols
 * CAUSAL(EventEventCausalClassifier.java:44-67) + the 14-wide tlink one-hot
-  appended by CauseRelPro.java:213                           -> 372 cols
+  appended by CauseRelPro.java:213                           -> 377 cols
 
 Replicated quirks:
 * pos/chunk blocks use substring containment, not equality (2632-2641);
@@ -21,11 +22,28 @@ Replicated quirks:
   reference build we parity-test against, so it is the constant 0.0 bucket
   (EventEventFeatureVector.java:46-66).
 
-Encoding is plain numpy against fixed vocabularies, so the Spark layer can
-vectorize whole Arrow batches at once.
+How a matrix is built. ``et_vector``, ``ee_vector`` and ``causal_vector``
+take one sieve group - every pair of a document that reaches that
+classifier - and return its float64 matrix. The pipeline calls them only
+after the rule sieves and the causal signal gate have run, so no row is
+built for a pair that never reaches a model, and a document whose pairs
+are all rule-decided builds nothing. The first call on a document starts
+its mention encoding (``doc.memo['feature_codes']``): each mention that
+reaches a classifier is encoded once, as one row of its pos/chunk
+containment one-hots, eventClass/tense/aspect/polarity, mainVerb and
+hasModal, plus integer codes of the attributes the same* and distance
+features compare. A group's per-mention blocks are then numpy row
+selections of that table. The per-pair blocks (dependency path, signal
+markers, wnSim, tlink type, label) are one-hots of strings, cached per
+(string, vocabulary); the markers and dependency paths themselves are
+memoized per entity or per pair in ``doc.memo`` by core.markers and
+core.deps, so the rule sieves, the causal gate and the features share
+them. Blocks are joined with ``hstack`` in featureList column order.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 import numpy as np
 
@@ -78,16 +96,18 @@ DEP_SIGNAL_PATH = ("SBJ", "OBJ", "OPRD", "IM", "ADV", "PRP", "SUB", "PRD",
 TLINK_TYPES = TEMP_LABELS  # the 14 TLINK types, same order
 
 
-def _onehot_eq(value, vocab, out):
-    out.extend(1.0 if s == value else 0.0 for s in vocab)
+@lru_cache(maxsize=8192)
+def _onehot(value, vocab: tuple, contains: bool = False) -> tuple:
+    """One block for one string: 1.0 where the vocabulary entry equals
+    ``value`` (or, with ``contains``, is a substring of it)."""
+    if contains:
+        return tuple(1.0 if s in value else 0.0 for s in vocab)
+    return tuple(1.0 if s == value else 0.0 for s in vocab)
 
 
-def _onehot_contains(value, vocab, out):
-    out.extend(1.0 if s in value else 0.0 for s in vocab)
-
-
-def _sign(v: int) -> float:
-    return 1.0 if v > 0 else (-1.0 if v < 0 else 0.0)
+def _rows(rows: list, width: int) -> np.ndarray:
+    """Per-pair tuples -> an (n, width) float64 block."""
+    return np.array(rows, dtype=np.float64).reshape(len(rows), width)
 
 
 def _label_value(label: str, vocab) -> float:
@@ -141,121 +161,224 @@ def wn_similarity_bucket(lemma1: str, lemma2: str) -> float:
     return discretize(db.lin(lemma1, lemma2))
 
 
-def et_vector(doc: DocState, ev: Mention, tmx: Mention, label: str,
-              dct_layout: bool) -> list:
-    """Feature row for an event-timex pair (event first). ``dct_layout``
-    selects the event-DCT featureList, else the plain ET featureList."""
-    v: list = []
-    if dct_layout:
-        _onehot_contains(deps.token_attr(doc, ev, "pos"), POS, v)
-        _onehot_contains(deps.token_attr(doc, tmx, "pos"), POS, v)
-        _onehot_contains(deps.token_attr(doc, ev, "chunk"), CHUNK, v)
-        _onehot_contains(deps.token_attr(doc, tmx, "chunk"), CHUNK, v)
-    _onehot_eq(deps.entity_attr(doc, ev, "eventClass"), EV_CLASS, v)
-    _onehot_eq(deps.entity_attr(doc, ev, "tense"), EV_TENSE, v)
-    _onehot_eq(deps.entity_attr(doc, ev, "aspect"), EV_ASPECT, v)
-    v.append(0.0 if deps.entity_attr(doc, ev, "polarity") == "neg" else 1.0)
-    if dct_layout:
-        v.append(1.0 if deps.mate_main_verb(doc, ev) == "MAIN" else 0.0)
-        v.append(0.0 if deps.mate_modal_verb(doc, ev.start_tok) == "O" else 1.0)
-    v.append(_label_value(label, TEMP_LABELS))
-    return v
+def _wn_values(doc: DocState, pairs) -> list:
+    if _wordnet() is None:
+        return [0.0] * len(pairs)
+    return [wn_similarity_bucket(deps.token_attr(doc, p[0], "lemma"),
+                                 deps.token_attr(doc, p[1], "lemma"))
+            for p in pairs]
 
 
-def _ee_common_prefix(doc: DocState, e1: Mention, e2: Mention, v: list,
-                      with_same_attrs: bool, with_has_modal: bool):
-    """The shared EE block: pos..mainVerb[,hasModal] in featureList order."""
-    pos1 = deps.token_attr(doc, e1, "pos")
-    pos2 = deps.token_attr(doc, e2, "pos")
-    _onehot_contains(pos1, POS, v)
-    _onehot_contains(pos2, POS, v)
-    v.append(1.0 if pos1 == pos2 else 0.0)                      # samePos
-    _onehot_contains(deps.token_attr(doc, e1, "chunk"), CHUNK, v)
-    _onehot_contains(deps.token_attr(doc, e2, "chunk"), CHUNK, v)
-    v.append(_sign(deps.entity_distance(doc, e1, e2)))          # entDistance
-    v.append(_sign(deps.sentence_distance(doc, e1, e2)))        # sentDistance
-    cls1 = deps.entity_attr(doc, e1, "eventClass")
-    cls2 = deps.entity_attr(doc, e2, "eventClass")
-    _onehot_eq(cls1, EV_CLASS, v)
-    _onehot_eq(cls2, EV_CLASS, v)
-    t1 = deps.entity_attr(doc, e1, "tense")
-    t2 = deps.entity_attr(doc, e2, "tense")
-    _onehot_eq(t1, EV_TENSE, v)
-    _onehot_eq(t2, EV_TENSE, v)
-    a1 = deps.entity_attr(doc, e1, "aspect")
-    a2 = deps.entity_attr(doc, e2, "aspect")
-    _onehot_eq(a1, EV_ASPECT, v)
-    _onehot_eq(a2, EV_ASPECT, v)
-    p1 = deps.entity_attr(doc, e1, "polarity")
-    p2 = deps.entity_attr(doc, e2, "polarity")
-    v.append(0.0 if p1 == "neg" else 1.0)
-    v.append(0.0 if p2 == "neg" else 1.0)
-    if with_same_attrs:
-        v.append(1.0 if cls1 == cls2 else 0.0)                  # sameEventClass
-        v.append(1.0 if (t1 == t2 and a1 == a2) else 0.0)       # sameTenseAspect
-        v.append(1.0 if p1 == p2 else 0.0)                      # samePolarity
-    _onehot_eq(deps.ee_dependency_path(doc, e1, e2), DEP_EVENT_PATH, v)
-    v.append(1.0 if deps.mate_main_verb(doc, e1) == "MAIN" else 0.0)
-    v.append(1.0 if deps.mate_main_verb(doc, e2) == "MAIN" else 0.0)
-    if with_has_modal:
-        v.append(0.0 if deps.mate_modal_verb(doc, e1.start_tok) == "O" else 1.0)
-        v.append(0.0 if deps.mate_modal_verb(doc, e2.start_tok) == "O" else 1.0)
+# per-mention table columns: pos | chunk | eventClass tense aspect polarity
+# | mainVerb | hasModal
+_POS = slice(0, len(POS))
+_CHUNK = slice(_POS.stop, _POS.stop + len(CHUNK))
+_CLASS = slice(_CHUNK.stop, _CHUNK.stop + len(EV_CLASS))
+_TENSE = slice(_CLASS.stop, _CLASS.stop + len(EV_TENSE))
+_ASPECT = slice(_TENSE.stop, _TENSE.stop + len(EV_ASPECT))
+_POLARITY = slice(_ASPECT.stop, _ASPECT.stop + 1)
+_MAIN_VERB = slice(_POLARITY.stop, _POLARITY.stop + 1)
+_HAS_MODAL = slice(_MAIN_VERB.stop, _MAIN_VERB.stop + 1)
+_EVENT_ATTRS = slice(_CLASS.start, _POLARITY.stop)
+_MENTION_WIDTH = _HAS_MODAL.stop
+_NO_EVENT = (0.0,) * (_MENTION_WIDTH - _CLASS.start)
+# per-mention key columns (integer codes)
+_K_POS, _K_CLASS, _K_TENSE, _K_ASPECT, _K_POL, _K_SID, _K_SENT, _K_ENT = \
+    range(8)
 
 
-def ee_vector(doc: DocState, e1: Mention, e2: Mention, label: str,
-              lexicons) -> list:
-    """Feature row for a temporal event-event pair (EE featureList)."""
-    v: list = []
-    _ee_common_prefix(doc, e1, e2, v, with_same_attrs=True, with_has_modal=True)
-    m = markers.get_temporal_signal_per_entity(doc, e2, lexicons)
-    _onehot_eq(m.cluster, TEMP_SIGNAL_EVENT, v)       # tempSignal2ClusText
-    _onehot_eq(m.cluster, MARKER_POSITION, v)         # tempSignal2Pos (quirk)
-    _onehot_contains(m.dep1 or "", DEP_SIGNAL_PATH, v)  # tempSignal2Dep
-    v.append(wn_similarity_bucket(deps.token_attr(doc, e1, "lemma"),
-                                  deps.token_attr(doc, e2, "lemma")))
-    v.append(_label_value(label, TEMP_LABELS))
-    return v
+class _MentionCodes:
+    """One document's mention encoding, grown as mentions reach a
+    classifier: ``table`` rows are per-mention feature blocks, ``keys``
+    rows the integer codes (strings interned per document) that the
+    same*/distance features compare."""
+    __slots__ = ("index", "rows", "keys", "strings", "table", "key_table")
+
+    def __init__(self):
+        self.index: dict = {}       # mention id -> row
+        self.rows: list = []
+        self.keys: list = []
+        self.strings: dict = {}
+        self.table = self.key_table = None
+
+    def _code(self, s) -> int:
+        return self.strings.setdefault(s, len(self.strings))
+
+    def _add(self, doc: DocState, e: Mention) -> None:
+        pos = deps.token_attr(doc, e, "pos")
+        row = (_onehot(pos, POS, True)
+               + _onehot(deps.token_attr(doc, e, "chunk"), CHUNK, True))
+        attrs = (None,) * 4
+        sent = doc.sentences.get(e.sent_id)
+        if e.kind == "EVENT":
+            attrs = tuple(deps.entity_attr(doc, e, f) for f in
+                          ("eventClass", "tense", "aspect", "polarity"))
+            cls, tense, aspect, pol = attrs
+            row += (_onehot(cls, EV_CLASS) + _onehot(tense, EV_TENSE)
+                    + _onehot(aspect, EV_ASPECT)
+                    + (0.0 if pol == "neg" else 1.0,
+                       1.0 if deps.mate_main_verb(doc, e) == "MAIN" else 0.0,
+                       0.0 if deps.mate_modal_verb(doc, e.start_tok) == "O"
+                       else 1.0))
+        else:
+            row += _NO_EVENT
+        self.index[e.mid] = len(self.rows)
+        self.rows.append(row)
+        self.keys.append(tuple(self._code(s) for s in (pos,) + attrs)
+                         + (self._code(sent.sid if sent else None),
+                            sent.idx if sent else -1, e.idx))
+        self.table = self.key_table = None
+
+    def lookup(self, doc: DocState, mentions) -> np.ndarray:
+        """Row indices of ``mentions``, encoding the ones not seen yet."""
+        index = self.index
+        for e in mentions:
+            if e.mid not in index:
+                self._add(doc, e)
+        if self.table is None:
+            self.table = _rows(self.rows, _MENTION_WIDTH)
+            self.key_table = np.array(self.keys, dtype=np.int64).reshape(
+                len(self.keys), _K_ENT + 1)
+        return np.array([index[e.mid] for e in mentions], dtype=np.intp)
 
 
-def causal_vector(doc: DocState, e1: Mention, e2: Mention, label: str,
-                  lexicons, tlink_type: str,
-                  caus_signal_marker=None) -> list:
-    """Feature row for a causal event-event pair (causal liblinear
-    featureList, EventEventCausalClassifier.java:70-106, + tlink one-hot +
-    labelCaus; CauseRelPro.java:196-216)."""
-    v: list = []
-    _ee_common_prefix(doc, e1, e2, v, with_same_attrs=True,
-                      with_has_modal=True)
-    tm = markers.get_temporal_signal(doc, e1, e2, lexicons)
-    _onehot_eq(tm.cluster, TEMP_SIGNAL_TIMEX, v)      # tempSignalClusText
-    _onehot_eq(tm.cluster, TEMP_SIGNAL_EVENT, v)
-    _onehot_eq(tm.cluster, MARKER_POSITION, v)        # tempSignalPos (quirk)
-    if tm.cluster == "O" or tm.cluster is None:       # tempSignalDep1Dep2
-        v.extend([0.0] * (2 * len(DEP_SIGNAL_PATH)))
-    else:
-        _onehot_contains(tm.dep1 or "", DEP_SIGNAL_PATH, v)
-        _onehot_contains(tm.dep2 or "", DEP_SIGNAL_PATH, v)
-    cm = caus_signal_marker
-    if cm is None:
+def _encoded(doc: DocState, mentions: list) -> tuple:
+    """(table rows, key rows) of ``mentions`` from the document's mention
+    encoding, started on first use."""
+    codes = doc.memo.get("feature_codes")
+    if codes is None:
+        codes = doc.memo["feature_codes"] = _MentionCodes()
+    idx = codes.lookup(doc, mentions)
+    return codes.table[idx], codes.key_table[idx]
+
+
+def et_vector(doc: DocState, pairs, dct_layout: bool) -> np.ndarray:
+    """Feature matrix for event-timex pairs ``[(event, timex, label)]``.
+    ``dct_layout`` selects the event-DCT featureList, else the plain ET
+    featureList."""
+    n = len(pairs)
+    label = _rows([(_label_value(p[2], TEMP_LABELS),) for p in pairs], 1)
+    if not dct_layout:
+        ev, _ = _encoded(doc, [p[0] for p in pairs])
+        return np.hstack((ev[:, _EVENT_ATTRS], label))
+    rows, _ = _encoded(doc, [p[0] for p in pairs] + [p[1] for p in pairs])
+    ev, tmx = rows[:n], rows[n:]
+    return np.hstack((ev[:, _POS], tmx[:, _POS], ev[:, _CHUNK],
+                      tmx[:, _CHUNK], ev[:, _EVENT_ATTRS], ev[:, _MAIN_VERB],
+                      ev[:, _HAS_MODAL], label))
+
+
+_PAIR_SCALARS = 6   # samePos entDistance sentDistance sameEventClass
+#                     sameTenseAspect samePolarity
+
+
+def _ee_columns(tail_width: int) -> np.ndarray:
+    """Column gather from hstack((mention-1 rows, mention-2 rows, pair
+    scalars, per-pair strings)) into EE-family featureList order. The
+    per-pair strings are the dependency-path one-hot followed by
+    ``tail_width`` more columns."""
+    t1, t2 = 0, _MENTION_WIDTH
+    pair = 2 * _MENTION_WIDTH
+    path = pair + _PAIR_SCALARS
+    tail = path + len(DEP_EVENT_PATH)
+
+    def cols(base, sl):
+        return range(base + sl.start, base + sl.stop)
+    order = [cols(t1, _POS), cols(t2, _POS), [pair],
+             cols(t1, _CHUNK), cols(t2, _CHUNK), [pair + 1, pair + 2],
+             cols(t1, _CLASS), cols(t2, _CLASS),
+             cols(t1, _TENSE), cols(t2, _TENSE),
+             cols(t1, _ASPECT), cols(t2, _ASPECT),
+             cols(t1, _POLARITY), cols(t2, _POLARITY),
+             [pair + 3, pair + 4, pair + 5], range(path, tail),
+             cols(t1, _MAIN_VERB), cols(t2, _MAIN_VERB),
+             cols(t1, _HAS_MODAL), cols(t2, _HAS_MODAL),
+             range(tail, tail + tail_width)]
+    return np.array([c for block in order for c in block], dtype=np.intp)
+
+
+def _ee_matrix(doc: DocState, pairs, strings: list,
+               columns: np.ndarray) -> np.ndarray:
+    """An EE-family matrix: the per-mention blocks and pair scalars come
+    from the mention encoding; ``strings`` holds each pair's one-hot row
+    (dependency path first, label last)."""
+    n = len(pairs)
+    rows, keys = _encoded(doc, [p[0] for p in pairs] + [p[1] for p in pairs])
+    t1, t2, k1, k2 = rows[:n], rows[n:], keys[:n], keys[n:]
+    same = k1 == k2
+    scalars = np.empty((n, _PAIR_SCALARS))
+    scalars[:, 0] = same[:, _K_POS]
+    scalars[:, 1] = np.sign(np.where(
+        same[:, _K_SID], np.abs(k1[:, _K_ENT] - k2[:, _K_ENT]) - 1, -1))
+    scalars[:, 2] = np.sign(np.abs(k1[:, _K_SENT] - k2[:, _K_SENT]))
+    scalars[:, 3] = same[:, _K_CLASS]
+    scalars[:, 4] = same[:, _K_TENSE] & same[:, _K_ASPECT]
+    scalars[:, 5] = same[:, _K_POL]
+    width = len(columns) - 2 * _MENTION_WIDTH - _PAIR_SCALARS
+    return np.hstack((t1, t2, scalars, _rows(strings, width)))[:, columns]
+
+
+_EE_TAIL = (len(TEMP_SIGNAL_EVENT) + len(MARKER_POSITION)
+            + len(DEP_SIGNAL_PATH) + 2)                # ... wnSim, label
+_EE_COLUMNS = _ee_columns(_EE_TAIL)
+
+
+def ee_vector(doc: DocState, pairs, lexicons) -> np.ndarray:
+    """Feature matrix for temporal event-event pairs ``[(e1, e2, label)]``
+    (EE featureList)."""
+    strings = []
+    for (e1, e2, label), wn in zip(pairs, _wn_values(doc, pairs)):
+        m = markers.get_temporal_signal_per_entity(doc, e2, lexicons)
+        strings.append(
+            _onehot(deps.ee_dependency_path(doc, e1, e2), DEP_EVENT_PATH)
+            + _onehot(m.cluster, TEMP_SIGNAL_EVENT)     # tempSignal2ClusText
+            + _onehot(m.cluster, MARKER_POSITION)       # tempSignal2Pos
+            + _onehot(m.dep1 or "", DEP_SIGNAL_PATH, True)
+            + (wn, _label_value(label, TEMP_LABELS)))
+    return _ee_matrix(doc, pairs, strings, _EE_COLUMNS)
+
+
+_NO_SIGNAL_DEPS = (0.0,) * (2 * len(DEP_SIGNAL_PATH))
+
+
+def _signal_deps(m) -> tuple:
+    """Dep1Dep2 block of a pair marker: empty without a signal cluster."""
+    if m.cluster == "O" or m.cluster is None:
+        return _NO_SIGNAL_DEPS
+    return (_onehot(m.dep1 or "", DEP_SIGNAL_PATH, True)
+            + _onehot(m.dep2 or "", DEP_SIGNAL_PATH, True))
+
+
+_CAUSAL_TAIL = (len(TEMP_SIGNAL_TIMEX) + len(TEMP_SIGNAL_EVENT)
+                + len(MARKER_POSITION) + len(CAUS_SIGNAL)
+                + len(MARKER_POSITION) + 2 * len(_NO_SIGNAL_DEPS)
+                + 1 + len(TLINK_TYPES) + 1)     # ... wnSim, tlink, label
+_CAUSAL_COLUMNS = _ee_columns(_CAUSAL_TAIL)
+
+
+def causal_vector(doc: DocState, pairs, lexicons) -> np.ndarray:
+    """Feature matrix for causal event-event pairs
+    ``[(e1, e2, label, tlink_type)]`` (causal liblinear featureList,
+    EventEventCausalClassifier.java:70-106, + tlink one-hot + labelCaus;
+    CauseRelPro.java:196-216)."""
+    strings = []
+    for (e1, e2, label, tlink_type), wn in zip(pairs, _wn_values(doc, pairs)):
+        tm = markers.get_temporal_signal(doc, e1, e2, lexicons)
         cm = markers.get_causal_signal(doc, e1, e2, lexicons)
-    if cm.cluster == "O" or cm.cluster is None:       # causSignalClusText
-        v.extend([0.0] * len(CAUS_SIGNAL))
-    else:
-        _onehot_eq(cm.cluster, CAUS_SIGNAL, v)
-    if cm.position == "O":                            # causSignalPos
-        v.extend([0.0] * len(MARKER_POSITION))
-    else:
-        _onehot_eq(cm.position, MARKER_POSITION, v)
-    if cm.cluster == "O" or cm.cluster is None:       # causSignalDep1Dep2
-        v.extend([0.0] * (2 * len(DEP_SIGNAL_PATH)))
-    else:
-        _onehot_contains(cm.dep1 or "", DEP_SIGNAL_PATH, v)
-        _onehot_contains(cm.dep2 or "", DEP_SIGNAL_PATH, v)
-    v.append(wn_similarity_bucket(deps.token_attr(doc, e1, "lemma"),
-                                  deps.token_attr(doc, e2, "lemma")))
-    _onehot_eq(tlink_type, TLINK_TYPES, v)            # tlink one-hot
-    v.append(_label_value(label, CAUS_LABELS))        # labelCaus
-    return v
+        # an 'O'/None cluster or 'O' position matches no vocabulary entry,
+        # so the causSignal blocks are empty exactly as the Java leaves them
+        strings.append(
+            _onehot(deps.ee_dependency_path(doc, e1, e2), DEP_EVENT_PATH)
+            + _onehot(tm.cluster, TEMP_SIGNAL_TIMEX)    # tempSignalClusText
+            + _onehot(tm.cluster, TEMP_SIGNAL_EVENT)
+            + _onehot(tm.cluster, MARKER_POSITION)      # tempSignalPos
+            + _signal_deps(tm)                          # tempSignalDep1Dep2
+            + _onehot(cm.cluster, CAUS_SIGNAL)          # causSignalClusText
+            + _onehot(cm.position, MARKER_POSITION)     # causSignalPos
+            + _signal_deps(cm)                          # causSignalDep1Dep2
+            + (wn,) + _onehot(tlink_type, TLINK_TYPES)
+            + (_label_value(label, CAUS_LABELS),))
+    return _ee_matrix(doc, pairs, strings, _CAUSAL_COLUMNS)
 
 
 def to_matrix(rows: list) -> np.ndarray:

@@ -334,7 +334,16 @@ def get_temporal_signal(doc: DocState, e1: Mention, e2: Mention,
 
 def get_temporal_signal_per_entity(doc: DocState, ent: Mention,
                                    lexicons) -> Marker:
-    """getTemporalSignalPerEntity (1233-1289)."""
+    """getTemporalSignalPerEntity (1233-1289). Memoized per entity."""
+    key = ("temporal_signal_entity", ent.mid)
+    m = doc.memo.get(key)
+    if m is None:
+        m = doc.memo[key] = _temporal_signal_per_entity(doc, ent, lexicons)
+    return m
+
+
+def _temporal_signal_per_entity(doc: DocState, ent: Mention,
+                                lexicons) -> Marker:
     signal_list = (lexicons.temporal_timex if ent.is_timex
                    else lexicons.temporal_event)
     sig_keys = lexicons.sorted_signal_keys("timex" if ent.is_timex else "event")
@@ -381,7 +390,18 @@ def get_temporal_signal_per_entity(doc: DocState, ent: Mention,
 def get_causal_signal(doc: DocState, e1: Mention, e2: Mention,
                       lexicons) -> Marker:
     """getCausalSignal (1372-1508): regex lexicon, HashMap key order,
-    running-offset collision bumping, TreeMap argmin."""
+    running-offset collision bumping, TreeMap argmin. Memoized per
+    ordered pair: the causal classifier gate and the causal features ask
+    for the same pair unless the features reorder it."""
+    key = ("causal_signal", e1.mid, e2.mid)
+    m = doc.memo.get(key)
+    if m is None:
+        m = doc.memo[key] = _causal_signal(doc, e1, e2, lexicons)
+    return m
+
+
+def _causal_signal(doc: DocState, e1: Mention, e2: Mention,
+                   lexicons) -> Marker:
     signal_list = lexicons.causal_cluster
     patterns = lexicons.compiled_causal_patterns()
     keys = java_hashmap_order(list(signal_list))

@@ -19,6 +19,7 @@ Replicated quirks:
   (CauseRelPro.java:61-95) and emitted in HashMap order of the "e1,e2" keys;
 * the causal classifier gate evaluates getCausalSignal on the *unordered*
   pair (CauseRelPro.java:218-222) while features use the ordered pair;
+  the gate runs first, so feature rows are built only for gated pairs;
 * causal classifier predictions equal to NONE are dropped
   (CauseRelPro.java:392).
 """
@@ -207,9 +208,7 @@ def temporal_triples(doc: DocState, lexicons: Lexicons | None = None,
         dep = ee_dependency_path(doc, e1, e2)
         rel = event_event_rule(doc, e1, e2, dep)
         if rel == "O" and anchor_maps is not None:
-            rel = event_event_anchor_rule(
-                e1.mid, e2.mid, *anchor_maps,
-                {k: v for k, v in tt.items()})
+            rel = event_event_anchor_rule(e1.mid, e2.mid, *anchor_maps, tt)
             if rel in ("DURING", "DURING_INV"):
                 rel = "SIMULTANEOUS"
             if rel != "O":
@@ -228,16 +227,15 @@ def temporal_triples(doc: DocState, lexicons: Lexicons | None = None,
     # unused by the shipped pipeline.
     for group, name, ptype, build in (
             (dct_clf, "dct", "ed",
-             lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
+             lambda g: features.et_vector(doc, g, False)),
             (et_clf, "et", "et",
-             lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
+             lambda g: features.et_vector(doc, g, False)),
             (ee_clf, "ee", "ee",
-             lambda e1, e2, lb: features.ee_vector(doc, e1, e2, lb, lx))):
+             lambda g: features.ee_vector(doc, g, lx))):
         if not group:
             continue
-        X = features.to_matrix([build(e1, e2, lb)[:-1]
-                                for e1, e2, lb in group])
-        preds = shipped_model(name).predict_strings(X, TEMP_LABELS)
+        preds = shipped_model(name).predict_strings(build(group)[:, :-1],
+                                                    TEMP_LABELS)
         for (e1, e2, _), rel in zip(group, preds):
             out.append(Triple(e1.mid, e2.mid, rel, name + "-clf", ptype))
     return out
@@ -314,7 +312,7 @@ def causal_triples(doc: DocState, tlinks_map: dict | None = None,
     lx = lexicons or load_lexicons()
     tlinks_map = tlinks_map or {}
     out: list[Triple] = []
-    clf_rows, clf_pairs = [], []
+    clf = []
 
     for pair, gold in causal_candidate_pairs(doc, lx):
         src, tgt = pair.split(",")
@@ -332,6 +330,12 @@ def causal_triples(doc: DocState, tlinks_map: dict | None = None,
             out.append(Triple(o1.mid, o2.mid, rel, "causal-rule", "causal"))
             continue
 
+        # classifier gate (F6): causal-signal dep path of the unordered
+        # pair, checked before any feature is built
+        gate = get_causal_signal(doc, e1, e2, lx)
+        if (gate.dep1 or "O") + "|" + (gate.dep2 or "O") == "O|O":
+            continue
+
         # tlink-type feature (J4): looked up on the *unordered* pair
         tlink_type = "O"
         if not tlinks_map:
@@ -341,18 +345,12 @@ def causal_triples(doc: DocState, tlinks_map: dict | None = None,
                 tlink_type = inverse_relation(doc.tlink_types[tgt + "," + src])
         else:
             tlink_type = tlinks_map.get(src + "," + tgt, "O")
+        clf.append((o1, o2, olabel, tlink_type))
 
-        row = features.causal_vector(doc, o1, o2, olabel, lx, tlink_type)
-        # classifier gate (F6): causal-signal dep path of the unordered pair
-        gate = get_causal_signal(doc, e1, e2, lx)
-        if (gate.dep1 or "O") + "|" + (gate.dep2 or "O") != "O|O":
-            clf_rows.append(row[:-1])
-            clf_pairs.append((o1, o2))
-
-    if clf_rows:
-        X = features.to_matrix(clf_rows)
+    if clf:
+        X = features.causal_vector(doc, clf, lx)[:, :-1]
         preds = shipped_model("causal").predict_strings(X, CAUS_LABELS)
-        for (o1, o2), rel in zip(clf_pairs, preds):
+        for (o1, o2, _, _), rel in zip(clf, preds):
             if rel != "NONE":
                 out.append(Triple(o1.mid, o2.mid, rel, "causal-clf", "causal"))
     return out
@@ -375,9 +373,8 @@ def ee_clf_probabilities(doc: DocState, lexicons: Lexicons | None = None):
     if not pairs:
         return []
     model = shipped_model("ee")
-    X = features.to_matrix(
-        [features.ee_vector(doc, doc.entities[s], doc.entities[t],
-                            "NONE", lx)[:-1] for s, t in pairs])
+    X = features.ee_vector(doc, [(doc.entities[s], doc.entities[t], "NONE")
+                                 for s, t in pairs], lx)[:, :-1]
     dec = model.predict_values(X)
     prob = model.predict_probabilities(X, force=True)
     names = [TEMP_LABELS[v - 1] for v in model.labels]

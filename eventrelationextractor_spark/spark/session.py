@@ -2,7 +2,8 @@
 
 Scale posture (SURVEY.md §4.3): AQE on (runtime re-planning + skew-join
 splitting), Arrow enabled for every pandas UDF boundary, shuffle
-partitions sized for the local harness but overridable for clusters.
+partitions sized to the usable cores of the host but overridable for
+clusters (arguments, or the SPARK_GRAFT_* environment variables).
 """
 
 from __future__ import annotations
@@ -14,11 +15,14 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
                   shuffle_partitions: int | None = None, **extra):
     from pyspark.sql import SparkSession
 
+    # defaults follow the cores this process may run on (its affinity
+    # mask, which a container's CPU set narrows), not the machine size
+    usable = str(len(os.sched_getaffinity(0)))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", usable)
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", usable))
 
     builder = (SparkSession.builder
                .master(master)

@@ -643,15 +643,16 @@ def export_training_features(pages: DataFrame,
                 dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
                 groups = (
                     ("dct", dct_pairs,
-                     lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
+                     lambda ps: features.et_vector(doc, ps, False)),
                     ("et", et_pairs,
-                     lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False)),
+                     lambda ps: features.et_vector(doc, ps, False)),
                     ("ee", ee_pairs,
-                     lambda e1, e2, lb: features.ee_vector(doc, e1, e2, lb, lx)),
+                     lambda ps: features.ee_vector(doc, ps, lx)),
                 )
                 for gname, pairs, build in groups:
-                    for e1, e2, lb in pairs:
-                        vec = build(e1, e2, lb)
+                    if not pairs:
+                        continue
+                    for (e1, e2, _), vec in zip(pairs, build(pairs)):
                         rows["url"].append(url)
                         rows["group"].append(gname)
                         rows["src"].append(e1.mid)

@@ -80,6 +80,34 @@ def test_causal_predictions_wsj():
     assert mine == set(golden_rows("wsj_1014_causal_predictions.tsv"))
 
 
+def test_causal_features_built_only_for_gated_pairs(monkeypatch):
+    """Gate first: causal feature rows are built only for the candidates
+    that pass the F6 signal gate - exactly the rows the causal model
+    scores (29 of the 172 rule-undecided wsj_1014 candidates)."""
+    import numpy as np
+
+    from eventrelationextractor_spark.core.liblinear import LinearModel
+
+    doc = _load_doc("wsj_1014_causal28")
+    built, scored = [], []
+    vector, predict = features.causal_vector, LinearModel.predict_strings
+
+    def counted_vector(*args, **kwargs):
+        out = vector(*args, **kwargs)
+        built.append(np.atleast_2d(out).shape[0])
+        return out
+
+    def counted_predict(self, X, label_names):
+        scored.append(len(X))
+        return predict(self, X, label_names)
+
+    monkeypatch.setattr(features, "causal_vector", counted_vector)
+    monkeypatch.setattr(LinearModel, "predict_strings", counted_predict)
+    causal_triples(doc)
+    assert sum(scored) == 29
+    assert sum(built) == sum(scored)
+
+
 @pytest.mark.parametrize("doc_name,prefix", [
     ("sample_temporal", "sample"),
     ("bbc_20130322_721", "bbc_20130322_721"),
@@ -90,11 +118,11 @@ def test_feature_vectors_and_dep_paths_bitexact(doc_name, prefix):
     lx = load_lexicons()
     dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
     groups = {
-        "dct": (dct_pairs, lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False),
+        "dct": (dct_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)], False)[0],
                 lambda e1, e2: et_dependency_path(doc, e1, e2)),
-        "et": (et_pairs, lambda e1, e2, lb: features.et_vector(doc, e1, e2, lb, False),
+        "et": (et_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)], False)[0],
                lambda e1, e2: et_dependency_path(doc, e1, e2)),
-        "ee": (ee_pairs, lambda e1, e2, lb: features.ee_vector(doc, e1, e2, lb, lx),
+        "ee": (ee_pairs, lambda e1, e2, lb: features.ee_vector(doc, [(e1, e2, lb)], lx)[0],
                lambda e1, e2: ee_dependency_path(doc, e1, e2)),
     }
     for tag, (pairs, build, dep_fn) in groups.items():
@@ -130,7 +158,7 @@ def test_causal_vectors_bitexact():
             tl = doc.tlink_types[src + "," + tgt]
         elif tgt + "," + src in doc.tlink_types:
             tl = inverse_relation(doc.tlink_types[tgt + "," + src])
-        row = features.causal_vector(doc, o1, o2, ol, lx, tl)
+        row = features.causal_vector(doc, [(o1, o2, ol, tl)], lx)[0]
         g = get_causal_signal(doc, e1, e2, lx)
         if (g.dep1 or "O") + "|" + (g.dep2 or "O") != "O|O":
             mine[(o1.mid, o2.mid)] = row
@@ -204,8 +232,8 @@ def test_ee_probability_oracle_constants():
     names = [TEMP_LABELS[v - 1] for v in model.labels]
     for d in (0, 1, 2, 3, 4, 5):  # two full periods
         doc = parse_page(synth_page(d)["text"], f"s{d}")
-        X = features.to_matrix([features.ee_vector(
-            doc, doc.entities["e8"], doc.entities["e9"], "NONE", lx)[:-1]])
+        X = features.ee_vector(
+            doc, [(doc.entities["e8"], doc.entities["e9"], "NONE")], lx)[:, :-1]
         dec = model.predict_values(X)[0]
         for j, name in enumerate(names):
             assert consts[(d % 3, name)] == dec[j], (d, name)

@@ -30,14 +30,10 @@ def _training_lines():
         doc = parse_page(page["text"], name)
         d, e, ee = _candidate_groups(doc)
         for g, pairs, build in (
-                ("dct", d, lambda a, b, l: features.et_vector(doc, a, b, l,
-                                                              False)),
-                ("et", e, lambda a, b, l: features.et_vector(doc, a, b, l,
-                                                             False)),
-                ("ee", ee, lambda a, b, l: features.ee_vector(doc, a, b, l,
-                                                              lx))):
-            for e1, e2, lb in pairs:
-                v = build(e1, e2, lb)
+                ("dct", d, lambda ps: features.et_vector(doc, ps, False)),
+                ("et", e, lambda ps: features.et_vector(doc, ps, False)),
+                ("ee", ee, lambda ps: features.ee_vector(doc, ps, lx))):
+            for v in build(pairs):
                 if int(v[-1]) != 0:       # F4: NONE rows are not trained on
                     out[g].append(features.to_libsvm(v))
     return out

@@ -12,7 +12,9 @@ from eventrelationextractor_spark.core.javacompat import java_hashmap_order
 from eventrelationextractor_spark.core.pipeline import (causal_triples,
                                                         temporal_triples,
                                                         timex_timex_rule_links)
-from eventrelationextractor_spark.core.timegraph import filter_consistent
+from eventrelationextractor_spark.core.timegraph import (_CONSTRAINTS,
+                                                         PointGraph,
+                                                         filter_consistent)
 from eventrelationextractor_spark.core.timexrule import (inverse_relation,
                                                          timex_timex_relation)
 
@@ -82,6 +84,82 @@ def test_timegraph_kept_set_is_consistent(rels):
     assert len(kept) + len(violated) == len(rels)
     kept2, violated2 = filter_consistent(kept)
     assert kept2 == kept and violated2 == []
+
+
+def _closure(relations, ents) -> tuple:
+    """Brute-force point algebra over every endpoint of ``ents``:
+    ({point: index}, order) with order[i][j] 0 = unknown, 1 = <=, 2 = <,
+    closed by Floyd-Warshall."""
+    pts = {(k, x): i for i, (k, x) in
+           enumerate((k, x) for x in sorted(ents) for k in "se")}
+    n = len(pts)
+    order = [[1 if i == j else 0 for j in range(n)] for i in range(n)]
+    for x in ents:
+        order[pts[("s", x)]][pts[("e", x)]] = 2
+    for src, tgt, rel in relations:
+        for kind, (p1, i1), (p2, i2) in _CONSTRAINTS[rel]:
+            a, b = pts[(p1, (src, tgt)[i1])], pts[(p2, (src, tgt)[i2])]
+            order[a][b] = max(order[a][b], 2 if kind == "<" else 1)
+            if kind == "=":
+                order[b][a] = max(order[b][a], 1)
+    for k in range(n):
+        for i in range(n):
+            if order[i][k]:
+                for j in range(n):
+                    if order[k][j]:
+                        order[i][j] = max(order[i][j], order[i][k],
+                                          order[k][j])
+    return pts, order
+
+
+def _filter_oracle(relations) -> tuple:
+    """filter_consistent by definition: a relation is kept iff the closure
+    of the relations accepted before it plus itself puts no point before
+    itself."""
+    accepted, kept, violated = [], [], []
+    for r in relations:
+        if r[2] not in _CONSTRAINTS:
+            kept.append(r)
+            continue
+        _, order = _closure(accepted + [r], {x for q in accepted + [r]
+                                             for x in q[:2]})
+        if all(order[i][i] < 2 for i in range(len(order))):
+            accepted.append(r)
+            kept.append(r)
+        else:
+            violated.append(r)
+    return kept, violated
+
+
+_ANY_REL = st.sampled_from(sorted(_CONSTRAINTS) + ["CLINK"])
+# 2-6 entities per list: few entities make relations collide often
+_RELATION_LISTS = st.integers(2, 6).flatmap(lambda n: st.lists(st.tuples(
+    st.sampled_from("abcdef"[:n]), st.sampled_from("abcdef"[:n]), _ANY_REL),
+    max_size=25))
+
+
+@given(rels=_RELATION_LISTS)
+@settings(max_examples=500, deadline=None)
+def test_timegraph_filter_equals_closure_oracle(rels):
+    """The incremental mask closure keeps and drops exactly what a
+    from-scratch closure of the accepted set does, for every label
+    (unknown labels pass through) and self-relations included; and the
+    graph it ends with orders every endpoint as that closure does (so a
+    rejected relation leaves nothing behind)."""
+    kept, violated = _filter_oracle(rels)
+    assert filter_consistent(rels) == (kept, violated)
+    known = [r for r in rels if r[2] in _CONSTRAINTS]
+    g = PointGraph()
+    for r in known:
+        g.add_relation(*r)
+    pts, order = _closure([r for r in kept if r[2] in _CONSTRAINTS],
+                          {x for r in known for x in r[:2]})
+    for p, i in pts.items():
+        for q, j in pts.items():
+            want = ("=" if order[i][j] and order[j][i] else
+                    "<" if order[i][j] == 2 else
+                    ">" if order[j][i] == 2 else "UNKNOWN")
+            assert g.point_rel(p, q) == want, (p, q)
 
 
 @given(n=st.integers(min_value=0, max_value=30), cap=st.integers(1, 10))

@@ -93,13 +93,13 @@ def test_flagged_ee_vector_changes_only_wnsim_slot(db, request):
     doc = parse_page(page["text"], "bbc")
     _, _, ee = _candidate_groups(doc)
     e1, e2, lb = ee[0]
-    base = features.ee_vector(doc, e1, e2, lb, lx)
+    base = features.ee_vector(doc, [(e1, e2, lb)], lx)[0].tolist()
     features.set_wordnet(db)
     try:
-        flagged = features.ee_vector(doc, e1, e2, lb, lx)
+        flagged = features.ee_vector(doc, [(e1, e2, lb)], lx)[0].tolist()
     finally:
         features.set_wordnet(None)
-    again = features.ee_vector(doc, e1, e2, lb, lx)
+    again = features.ee_vector(doc, [(e1, e2, lb)], lx)[0].tolist()
     assert again == base                       # flag off -> exact parity
     assert len(flagged) == len(base)
     diffs = [i for i, (a, b) in enumerate(zip(base, flagged)) if a != b]
