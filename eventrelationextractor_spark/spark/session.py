@@ -3,7 +3,8 @@
 Scale posture (SURVEY.md §4.3): AQE on (runtime re-planning + skew-join
 splitting), Arrow enabled for every pandas UDF boundary, shuffle
 partitions sized to the usable cores of the host but overridable for
-clusters (arguments, or the SPARK_GRAFT_* environment variables).
+clusters (arguments, the SPARK_GRAFT_{CPUS,MASTER,SHUFFLE} environment
+variables, or any conf key through ``**extra``, applied last).
 """
 
 from __future__ import annotations
@@ -34,9 +35,8 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
                # 1g). Only effective if the JVM isn't already up -
                # i.e. for fresh processes, which is how bench/tests/
                # jobs run. A cluster deployment sizes executors
-               # explicitly and overrides via SPARK_GRAFT_DRIVER_MEM.
-               .config("spark.driver.memory",
-                       os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+               # explicitly and passes spark.driver.memory via **extra.
+               .config("spark.driver.memory", "12g")
                .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
                .config("spark.sql.session.timeZone", "UTC")
                .config("spark.sql.adaptive.enabled", "true")
@@ -49,8 +49,7 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
                # with the 128MB default a whole small corpus lands in 2-3
                # tasks and caps parallelism (tune per deployment)
                .config("spark.sql.files.maxPartitionBytes",
-                       os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                                      str(8 * 1024 * 1024)))
+                       str(8 * 1024 * 1024))
                .config("spark.sql.files.openCostInBytes", str(512 * 1024))
                .config("spark.serializer",
                        "org.apache.spark.serializer.KryoSerializer")

@@ -11,35 +11,17 @@ order) fails HERE instead of only in the driver's environment.
 Runs at sf0.001 (hash equality is within-process, same data on both
 sides, so the smallest corpus suffices to catch config sensitivity)."""
 
-import hashlib
 import os
 
 import pytest
+
+from tools.check_correctness import value_hash
 
 SF_DIR = "/root/testdata/sf0.001"
 
 HOSTILE = [("spark.sql.ansi.enabled", "true"),
            ("spark.sql.session.timeZone", "America/New_York"),
            ("spark.sql.shuffle.partitions", "7")]
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        return repr(round(v, 6))
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    return repr(v)
-
-
-def _value_hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x01".join(_norm_cell(r[i]) for i in order)
-                   for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR),
@@ -56,8 +38,8 @@ def test_driver_window_is_session_config_insensitive(spark):
         out = {}
         for name in window:
             df = qs[name](spark, SF_DIR)
-            out[name] = _value_hash(df.columns,
-                                    [tuple(r) for r in df.collect()])
+            out[name] = value_hash(df.columns,
+                                   [tuple(r) for r in df.collect()])
         return out
 
     base = run_all()
