@@ -1,21 +1,33 @@
 """KG layers beyond the reference (north-star additions, SURVEY.md §7.1
 step 6): entity linking against a broadcast alias dictionary and
-canonicalization via distributed connected components.
+canonicalization into connected components.
 
 * ``link_mentions``: mentions ⋈ alias dict on the lowercase lemma-joined
   surface. The dictionary is small by construction (<= millions of rows at
   worst) -> explicit ``F.broadcast``; the join is map-side, no shuffle of
   the mention table.
-* ``connected_components``: iterative min-label propagation over
-  bidirectional edges with ``localCheckpoint`` every iteration (lineage
-  truncation) and AQE handling skew. Convergence is O(diameter) rounds;
-  KG canonicalization graphs are stars around alias nodes plus short
-  within-document chains, so 2-4 rounds in practice. Each round is one
-  shuffle on the vertex id. (For adversarial long-chain graphs the
-  large-star/small-star variant bounds rounds at O(log n); the propagation
-  loop is the right trade for this graph shape.)
 * ``canonical_edges``: builds the edge list from extraction outputs:
-  coreference (G3), rule IDENTITY/SIMULTANEOUS pairs, and alias matches.
+  same-document IDENTITY/SIMULTANEOUS pairs, and alias matches.
+* ``canonicalize``: connected components of that edge list in a fixed
+  number of Spark jobs, whatever the graph's diameter. Every edge is
+  doc-local except the mention -> alias edges, so the rows are
+  repartitioned by url and one union-find pass per partition solves the
+  doc-local components; what is left is the merge of alias classes, whose
+  size is bounded by the alias dictionary: links aggregated per partition,
+  one union-find on the driver, and a broadcast join of the class labels
+  back.
+* ``connected_components``: the general path (``cc_incremental``'s inner
+  solve, ``ops/*``): min-label propagation with pointer jumping over
+  bidirectional edges, seeded with each vertex's closed-neighbourhood
+  minimum and with one ``localCheckpoint`` per round (lineage truncation).
+  Each round shuffles on the vertex id and costs a fixed set of Spark
+  jobs; a graph whose seed is already final (stars around their minimum,
+  pairs) stops after one verifying round, a long chain takes more.
+* ``cc_incremental``: refreshes labels with a batch of new edges by
+  solving only the delta graph contracted through the old labels.
+
+Every labelling function gives a vertex the smallest vertex id (string order
+for string ids) of its component.
 """
 
 from __future__ import annotations
@@ -51,23 +63,32 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
             .unionByName(edges.select(F.col(dst).alias("a"),
                                       F.col(src).alias("b"))))
     both = both.localCheckpoint()
-    labels = (both.select(F.col("a").alias("vertex")).distinct()
-              .withColumn("component", F.col("vertex"))
-              .localCheckpoint())
+    # seed: the closed-neighbourhood minimum, i.e. the first hop without
+    # a round - a star around its smallest vertex is final already. Not
+    # checkpointed: it is one aggregation over the checkpointed edges,
+    # which round 1's plan reuses through one Exchange
+    labels = (both.groupBy(F.col("a").alias("vertex"))
+              .agg(F.min(F.least("a", "b")).alias("component")))
+
+    none = F.lit(None).cast(labels.schema["component"].dataType)
 
     for it in range(max_iterations):
         if stats is not None:
             stats["rounds"] = it + 1
-        # 1-hop: pull the neighbour's current component.
+        # 1-hop: pull the neighbour's current component; the vertex's own
+        # row carries its old label through the aggregation as ``old``
         neighbor = (both.join(labels, both.b == labels.vertex)
                     .select(F.col("a").alias("vertex"),
-                            F.col("component")))
-        hop = (labels.unionByName(neighbor)
+                            F.col("component"), none.alias("old")))
+        hop = (labels.withColumn("old", F.col("component"))
+               .unionByName(neighbor)
                .groupBy("vertex")
-               .agg(F.min("component").alias("component")))
+               .agg(F.min("component").alias("component"),
+                    F.max("old").alias("old")))
         # pointer jump: component(v) <- component(component(v)); component
-        # ids are themselves vertex ids, so this doubles resolved chain
-        # depth and bounds convergence at O(log diameter) rounds. ``hop``
+        # ids are themselves vertex ids, so a chain whose ids grow along it
+        # resolves in O(log length) rounds (other id orders can still take
+        # O(diameter) rounds, up to ``max_iterations``). ``hop``
         # is deliberately NOT checkpointed: its aggregation feeds both
         # sides of the self-join through the SAME Exchange, which Spark's
         # ReuseExchange dedupes - one execution, no extra materialization.
@@ -75,20 +96,18 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
         # manager state that ballooned driver-side per-action overhead
         # ~4x/round in late rounds - 25s -> 9s total on a 5k chain,
         # timeout -> 70s on a 1M-edge chain+hub graph after removing it.)
-        jump = (hop.alias("l")
-                .join(hop.alias("r"),
-                      F.col("l.component") == F.col("r.vertex"), "left")
-                .select(F.col("l.vertex").alias("vertex"),
-                        F.least(F.col("l.component"),
-                                F.coalesce(F.col("r.component"),
-                                           F.col("l.component")))
-                        .alias("component")))
-        # ONE checkpoint per round (lineage truncation point); the old
-        # component rides along so the convergence check is a scan of
-        # the checkpoint, not a fresh join.
-        new_labels = (jump
-                      .join(labels.withColumnRenamed("component", "old"),
-                            "vertex")
+        # ONE checkpoint per round (lineage truncation point); ``old``
+        # rides along so the convergence check is a scan of it.
+        new_labels = (hop.alias("l")
+                      .join(hop.alias("r"),
+                            F.col("l.component") == F.col("r.vertex"),
+                            "left")
+                      .select(F.col("l.vertex").alias("vertex"),
+                              F.least(F.col("l.component"),
+                                      F.coalesce(F.col("r.component"),
+                                                 F.col("l.component")))
+                              .alias("component"),
+                              F.col("l.old").alias("old"))
                       .localCheckpoint())
         changed = (new_labels
                    .filter(F.col("component") != F.col("old"))
@@ -99,32 +118,152 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
     return labels
 
 
-def canonical_edges(linked_mentions: DataFrame,
-                    triples: DataFrame) -> DataFrame:
-    """Edge list for canonicalization:
-    * mention -> alias canonical id (cross-document identity),
-    * same-document SIMULTANEOUS/IDENTITY triple endpoints.
-    Vertex ids are globally scoped as '<url>#<mention_id>'; alias nodes as
-    'alias:<canonical_id>' (lexicographically smallest, so they become the
-    component representatives)."""
-    scoped = F.concat_ws("#", "url", "mention_id")
+def _keyed_edges(linked_mentions: DataFrame,
+                 triples: DataFrame) -> DataFrame:
+    """(url, src, dst, is_alias): the canonical edges with the url that
+    scopes their doc-local end(s); ``is_alias`` marks dst as an alias
+    node. Vertex ids are '<url>#<mention_id>' and 'alias:<canonical_id>'."""
     alias_edges = (linked_mentions
                    .filter(F.col("canonical_id").isNotNull())
-                   .select(scoped.alias("src"),
+                   .select("url",
+                           F.concat_ws("#", "url", "mention_id").alias("src"),
                            F.concat(F.lit("alias:"),
-                                    F.col("canonical_id")).alias("dst")))
+                                    F.col("canonical_id")).alias("dst"),
+                           F.lit(True).alias("is_alias")))
     sim_edges = (triples
                  .filter(F.col("pred").isin("SIMULTANEOUS", "IDENTITY"))
-                 .select(F.concat_ws("#", "url", "subj").alias("src"),
-                         F.concat_ws("#", "url", "obj").alias("dst")))
+                 .select("url",
+                         F.concat_ws("#", "url", "subj").alias("src"),
+                         F.concat_ws("#", "url", "obj").alias("dst"),
+                         F.lit(False).alias("is_alias")))
     return alias_edges.unionByName(sim_edges)
 
 
-def canonicalize(linked_mentions: DataFrame, triples: DataFrame,
-                 max_iterations: int = 25) -> DataFrame:
-    """(vertex, component): canonical cluster id per mention node."""
-    return connected_components(canonical_edges(linked_mentions, triples),
-                                max_iterations)
+def canonical_edges(linked_mentions: DataFrame,
+                    triples: DataFrame) -> DataFrame:
+    """Edge list for canonicalization:
+    * mention -> alias canonical id (the only cross-document edges),
+    * same-document SIMULTANEOUS/IDENTITY triple endpoints.
+    Vertex ids are globally scoped as '<url>#<mention_id>'; alias nodes as
+    'alias:<canonical_id>'. Mention ids contain no '#', so two documents
+    never share a non-alias vertex."""
+    return _keyed_edges(linked_mentions, triples).select("src", "dst")
+
+
+def _find(parent: dict, x):
+    """Union-find root with path halving. Roots are their set's minimum
+    (``_union`` hangs the larger root under the smaller)."""
+    while parent[x] != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
+
+
+def _union(parent: dict, a, b) -> None:
+    parent.setdefault(a, a)
+    parent.setdefault(b, b)
+    ra, rb = _find(parent, a), _find(parent, b)
+    if ra != rb:
+        parent[max(ra, rb)] = min(ra, rb)
+
+
+_LOCAL_SCHEMA = "vertex string, local string, alias string, is_alias boolean"
+
+
+def _doc_local_components(batches):
+    """mapInArrow over one url-partition of (src, dst, is_alias) edges.
+    Rows out: per doc-local vertex (vertex, local min of its doc-local
+    component, min alias attached to that component or null, False); per
+    (alias, anchor = min alias of a component it is attached to): (alias,
+    smallest local min of such components, anchor, True) - the alias-class
+    links, aggregated within the partition."""
+    import pyarrow as pa
+
+    parent: dict = {}
+    attached = []
+    for batch in batches:
+        cols = batch.to_pydict()
+        for s, d, is_alias in zip(cols["src"], cols["dst"], cols["is_alias"]):
+            if is_alias:
+                parent.setdefault(s, s)
+                attached.append((s, d))
+            else:
+                _union(parent, s, d)
+    aliases: dict = {}
+    for s, d in attached:
+        aliases.setdefault(_find(parent, s), set()).add(d)
+    anchor = {root: min(group) for root, group in aliases.items()}
+    out = {"vertex": [], "local": [], "alias": [], "is_alias": []}
+    for v in parent:
+        root = _find(parent, v)
+        out["vertex"].append(v)
+        out["local"].append(root)
+        out["alias"].append(anchor.get(root))
+        out["is_alias"].append(False)
+    links: dict = {}
+    for root, group in aliases.items():
+        for a in group:
+            key = (a, anchor[root])
+            links[key] = min(root, links.get(key, root))
+    for (a, anc), local in links.items():
+        out["vertex"].append(a)
+        out["local"].append(local)
+        out["alias"].append(anc)
+        out["is_alias"].append(True)
+    yield pa.RecordBatch.from_pydict(out, schema=pa.schema(
+        [("vertex", pa.string()), ("local", pa.string()),
+         ("alias", pa.string()), ("is_alias", pa.bool_())]))
+
+
+def _alias_class_labels(links) -> dict:
+    """{alias node: component} from (vertex=alias, local, alias=anchor)
+    link rows: a union-find over alias nodes, where each class's label is
+    the min of its aliases and of the local mins attached to it."""
+    parent: dict = {}
+    local_min: dict = {}
+    for a, local, anc in links:
+        _union(parent, a, anc)
+        local_min[anc] = min(local, local_min.get(anc, local))
+    label = {a: a for a in parent if _find(parent, a) == a}
+    for anc, local in local_min.items():
+        root = _find(parent, anc)
+        label[root] = min(label[root], local)
+    return {a: label[_find(parent, a)] for a in parent}
+
+
+def canonicalize(linked_mentions: DataFrame,
+                 triples: DataFrame) -> DataFrame:
+    """(vertex, component): canonical cluster id per vertex of
+    :func:`canonical_edges`, equal to :func:`connected_components` over
+    it, in a fixed number of Spark jobs and one Python pass.
+
+    The url repartition puts every doc-local edge of a document in one
+    partition (a union of two inputs would otherwise split a url's rows),
+    so the per-partition union-find is exact for doc-local components.
+    Alias nodes are the only shared vertices. Their classes are merged on
+    the driver, from link rows bounded by the alias dictionary times the
+    partition count, and the class labels are broadcast-joined back."""
+    import pandas as pd
+
+    local = (_keyed_edges(linked_mentions, triples)
+             .repartition("url")
+             .select("src", "dst", "is_alias")
+             .mapInArrow(_doc_local_components, _LOCAL_SCHEMA)
+             .localCheckpoint())
+    links = local.filter("is_alias").select("vertex", "local", "alias")
+    # from pandas, so the frame is Arrow data on the JVM side: a list
+    # would be a Python RDD, one more Python stage per use
+    classes = local.sparkSession.createDataFrame(
+        pd.DataFrame(list(_alias_class_labels(links.collect()).items()),
+                     columns=["alias", "component"]),
+        "alias string, component string")
+    mentions = (local.filter(~F.col("is_alias"))
+                .join(F.broadcast(classes), "alias", "left")
+                .select("vertex",
+                        F.coalesce("component", "local").alias("component")))
+    return (mentions
+            .unionByName(classes.withColumnRenamed("alias", "vertex"))
+            .localCheckpoint())
 
 
 def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
@@ -161,20 +300,18 @@ def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
     sub = connected_components(contracted, stats=stats) \
         .withColumnRenamed("vertex", "old_component") \
         .withColumnRenamed("component", "new_component")
-    # old vertices: rewrite their label through the contracted solution
-    updated = (labels.join(sub, labels.component == sub.old_component,
-                           "left")
-               .select("vertex",
-                       F.coalesce("new_component", "component")
-                       .alias("component")))
-    # vertices born in the delta: their contracted id is themselves
-    known = labels.select(F.col("vertex").alias("v"))
-    fresh = (e.select(F.col("s").alias("v"))
-             .unionByName(e.select(F.col("d").alias("v")))
-             .distinct()
-             .join(known, "v", "left_anti")
-             .join(sub, F.col("v") == sub.old_component, "left")
-             .select(F.col("v").alias("vertex"),
-                     F.coalesce("new_component", F.col("v"))
-                     .alias("component")))
-    return updated.unionByName(fresh)
+    # every vertex's contracted id: an old vertex's label never exceeds
+    # the vertex itself, so the min over its label row and its own id
+    # (if it is a delta endpoint) is the old label; a vertex born in the
+    # delta has only its own id
+    prior = (labels.select("vertex", "component")
+             .unionByName(e.select(F.col("s").alias("vertex"),
+                                   F.col("s").alias("component")))
+             .unionByName(e.select(F.col("d").alias("vertex"),
+                                   F.col("d").alias("component")))
+             .groupBy("vertex")
+             .agg(F.min("component").alias("component")))
+    return (prior.join(sub, prior.component == sub.old_component, "left")
+            .select("vertex",
+                    F.coalesce("new_component", "component")
+                    .alias("component")))

@@ -581,6 +581,10 @@ def extract_kg_rows(pages: DataFrame, mode: str = "temporal",
                 try:
                     doc = parse_page(text, url)
                 except Exception:
+                    # the same meta row extract_triples emits, so every
+                    # page is accounted for; canonicalization skips it
+                    emit(url, "triple", subj="_doc", pred="PARSE_ERROR",
+                         obj="_doc")
                     continue
                 for mid, m in doc.entities.items():
                     lemma = (token_attr(doc, m, "lemma")

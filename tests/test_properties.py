@@ -211,3 +211,55 @@ def test_pair_slice_partitions_exactly():
             assert set(merged) <= set(full)
         else:
             assert merged == full
+
+
+def _union_find_labels(edges) -> dict:
+    """Driver-side reference: vertex -> smallest vertex of its component."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+_VERTEX = st.sampled_from(["a", "b", "c", "aa", "B", "0", "v1", "v10", "v2",
+                           "é", "z#1", "alias:a"])
+_EDGE_LISTS = st.lists(st.tuples(_VERTEX, _VERTEX), max_size=12)
+
+
+@st.composite
+def _graphs(draw):
+    """Random edges (self-loops and duplicates allowed) plus a chain
+    through a random ordering of some vertices."""
+    edges = draw(_EDGE_LISTS)
+    chain = draw(st.lists(_VERTEX, unique=True, max_size=8))
+    return edges + list(zip(chain, chain[1:])) + draw(
+        st.lists(st.sampled_from(edges), max_size=3) if edges else st.just([]))
+
+
+@given(base=_graphs().filter(bool), delta=_graphs())
+@settings(max_examples=25, deadline=None)
+def test_connected_components_equal_union_find(spark, base, delta):
+    """connected_components, and cc_incremental over its labels, label
+    every vertex with the smallest vertex of its component."""
+    from eventrelationextractor_spark.spark import kg
+
+    def frame(edges):
+        return spark.createDataFrame(edges, "src string, dst string")
+
+    labels = kg.connected_components(frame(base))
+    assert {r.vertex: r.component for r in labels.collect()} \
+        == _union_find_labels(base)
+    got = kg.cc_incremental(labels, frame(delta)).collect()
+    assert len(got) == len({r.vertex for r in got})
+    assert {r.vertex: r.component for r in got} \
+        == _union_find_labels(base + delta)

@@ -340,6 +340,21 @@ def test_parse_failure_emits_meta_row(spark):
     assert len(bad) == 1 and bad[0].pred == "PARSE_ERROR" \
         and bad[0].pair_type == "meta"
     assert sum(1 for r in rows if r.url == "u-good") == 14
+    kg_rows = stages.extract_kg_rows(pages, "temporal")
+    got = kg_rows.collect()
+    assert [(r.row_kind, r.subj, r.pred, r.obj) for r in got
+            if r.url == "u-bad"] == [("triple", "_doc", "PARSE_ERROR", "_doc")]
+    assert sum(1 for r in got
+               if r.url == "u-good" and r.row_kind == "triple") == 14
+    # canonicalization skips the meta row: no vertex of the bad page
+    linked = kg.link_mentions(
+        kg_rows.filter(F.col("row_kind") == "mention"),
+        spark.createDataFrame(
+            [("say", "EVENT", "EVT_SAY")],
+            "alias string, kind string, canonical_id string"))
+    trips = kg_rows.filter(F.col("row_kind") == "triple")
+    assert not [r for r in kg.canonicalize(linked, trips).collect()
+                if r.vertex.startswith("u-bad")]
 
 
 def test_streaming_triple_extraction_matches_batch(spark, tmp_path, fixture_pages):
@@ -983,6 +998,80 @@ def test_streaming_interval_enrich_evicts_beyond_watermark(spark, tmp_path):
            for r in spark.sql("select * from ie_evict").collect()}
     assert (7, 1, 101) not in got          # evicted: partner came too late
     assert (-9, -1, -100) in got           # same-horizon match emitted
+
+
+def _kg_inputs(spark, linked_rows, triple_rows):
+    linked = spark.createDataFrame(
+        linked_rows, "url string, mention_id string, canonical_id string")
+    trips = spark.createDataFrame(
+        triple_rows, "url string, subj string, pred string, obj string")
+    return linked, trips
+
+
+def test_canonicalize_equals_connected_components(spark):
+    """The doc-local/alias-class path labels every vertex exactly like
+    CC over the canonical edges: urls sorting before 'alias:' (so an
+    alias is not always its component's minimum), two aliases merged
+    through a doc-local chain of 6, IDENTITY edges, unlinked mentions,
+    an ignored non-identity predicate, and inputs shuffled so that one
+    url's rows start in different partitions."""
+    linked, trips = _kg_inputs(
+        spark,
+        [("AAA/chain", "e0", "X"), ("AAA/chain", "e6", "Y"),
+         ("AAA/chain", "e9", None),
+         ("0doc", "e2", "Y"), ("0doc", "e3", None),
+         ("https://c", "e1", "X"), ("https://c", "e2", "Z"),
+         ("https://d", "e1", "Z"), ("https://d", "e4", None),
+         ("https://e", "e1", "W")],
+        [("AAA/chain", f"e{i}", "SIMULTANEOUS", f"e{i + 1}")
+         for i in range(6)]
+        + [("AAA/chain", "e9", "BEFORE", "e0"),
+           ("0doc", "e3", "IDENTITY", "e5"),
+           ("https://c", "e2", "SIMULTANEOUS", "e1"),
+           ("https://d", "e4", "SIMULTANEOUS", "e7"),
+           ("https://e", "e2", "IDENTITY", "e1")])
+    linked, trips = linked.repartition(3), trips.repartition(4)
+    spread = trips.filter(F.col("url") == "AAA/chain") \
+        .select(F.spark_partition_id()).distinct().count()
+    assert spread > 1
+    got = {r.vertex: r.component
+           for r in kg.canonicalize(linked, trips).collect()}
+    want = {r.vertex: r.component for r in kg.connected_components(
+        kg.canonical_edges(linked, trips)).collect()}
+    assert got == want
+    # X, Y and Z merge through the chain and https://c; 0doc is smallest
+    assert {got[v] for v in ("alias:X", "alias:Y", "alias:Z", "AAA/chain#e3",
+                             "https://d#e1")} == {"0doc#e2"}
+    assert got["0doc#e5"] == "0doc#e3"
+    assert got["https://d#e7"] == "https://d#e4"
+    assert got["alias:W"] == "alias:W" and got["https://e#e2"] == "alias:W"
+    assert "AAA/chain#e9" not in got
+
+
+def test_canonicalize_job_count_independent_of_chain_length(spark):
+    """canonicalize runs a fixed plan: a within-document chain of 40
+    launches as many Spark jobs as one of 2, and is labelled exactly.
+    The chain joins the aliases X (at e0) and Y (at its far end)."""
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for length in (2, 40):
+            linked, trips = _kg_inputs(
+                spark, [("AAA/chain", "e0", "X"),
+                        ("AAA/chain", f"e{length}", "Y"),
+                        ("https://b", "e1", "Y")],
+                [("AAA/chain", f"e{i}", "SIMULTANEOUS", f"e{i + 1}")
+                 for i in range(length)])
+            group = f"canonicalize-chain-{length}"
+            sc.setJobGroup(group, group)
+            labels = kg.canonicalize(linked, trips)
+            jobs[length] = len(sc.statusTracker().getJobIdsForGroup(group))
+            got = {r.vertex: r.component for r in labels.collect()}
+            assert len(got) == length + 4
+            assert set(got.values()) == {"AAA/chain#e0"}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[2] == jobs[40] > 0
 
 
 def test_cc_incremental_equals_full_recompute(spark):
