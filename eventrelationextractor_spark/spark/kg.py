@@ -55,7 +55,9 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
                          stats: dict | None = None) -> DataFrame:
     """edges(src, dst) -> (vertex, component) with component = min vertex
     id (string order) in the component. ``stats`` (optional dict) gets
-    ``rounds`` = iterations run until convergence."""
+    ``rounds`` = iterations run until convergence. Raises RuntimeError
+    when ``max_iterations`` rounds do not converge: the labels would be
+    wrong."""
     # checkpoint the edge list FIRST: vertices/labels are derived from it,
     # so deriving them pre-checkpoint would re-execute the (expensive)
     # upstream extraction once more per derived frame
@@ -114,8 +116,9 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
                    .limit(1).count())
         labels = new_labels.drop("old")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(f"connected_components did not converge in "
+                       f"{max_iterations} rounds")
 
 
 def _keyed_edges(linked_mentions: DataFrame,

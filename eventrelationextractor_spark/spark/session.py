@@ -11,6 +11,48 @@ from __future__ import annotations
 
 import os
 
+# the package's Python worker module and the directory it is imported from
+# (inside the --py-files zip too: zipimport accepts 'erex.zip/<pkg>/_worker')
+WORKER_MODULE = "pyspark_erex_worker"
+WORKER_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "_worker")
+
+
+def worker_confs(master: str, confs: dict | None = None) -> dict:
+    """``confs`` plus what runs the package's worker module in every Python
+    worker of a ``local*`` master, whose workers share the driver's paths:
+    the module name (unless ``confs`` names one), and WORKER_DIR put in
+    front of spark.executorEnv.PYTHONPATH. A caller's own PYTHONPATH there
+    is kept, not replaced: the workers may need it to find the package. A
+    cluster that ships the package passes these two confs itself."""
+    confs = dict(confs or {})
+    if master.startswith("local"):
+        confs.setdefault("spark.python.worker.module", WORKER_MODULE)
+        confs["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (WORKER_DIR, confs.get("spark.executorEnv.PYTHONPATH"))
+            if p)
+    return confs
+
+
+def _host_memory_bytes() -> int:
+    """Physical memory, narrowed by this process's cgroup limit if any
+    (v2 memory.max, or v1 memory.limit_in_bytes)."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path, encoding="ascii") as f:
+                limits.append(int(f.read().strip()))
+        except (OSError, ValueError):      # absent, or "max"
+            pass
+    return min(limits)
+
+
+def driver_memory(host_bytes: int) -> str:
+    """spark.driver.memory for a host with ``host_bytes`` of memory: half
+    of it, capped at 12g."""
+    return f"{min(host_bytes // 2 // 2**20, 12 * 1024)}m"
+
 
 def build_session(master: str | None = None, app_name: str = "erex-spark",
                   shuffle_partitions: int | None = None, **extra):
@@ -29,14 +71,17 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
                .master(master)
                .appName(app_name)
                # local mode shares ONE JVM heap across all executor
-               # threads; Spark's 1g default starves 32 concurrent task
-               # buffers on this 128 GiB box (reproduced: heavy dedup
-               # tiers OOM at sf0.1 and TaskResultLost at sf1.0 under
-               # 1g). Only effective if the JVM isn't already up -
-               # i.e. for fresh processes, which is how bench/tests/
-               # jobs run. A cluster deployment sizes executors
-               # explicitly and passes spark.driver.memory via **extra.
-               .config("spark.driver.memory", "12g")
+               # threads, and Spark's 1g default starves the task buffers
+               # of a many-core host (heavy dedup tiers OOMed at sf0.1 and
+               # lost task results at sf1.0 under 1g on local[32]). Half
+               # the memory this process may use (cgroup limit or RAM),
+               # capped at 12g, leaves the rest to the Python workers.
+               # Only effective if the JVM isn't already up - i.e. for
+               # fresh processes, which is how bench/tests/jobs run. A
+               # cluster deployment sizes executors explicitly and passes
+               # spark.driver.memory via **extra.
+               .config("spark.driver.memory",
+                       driver_memory(_host_memory_bytes()))
                .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
                .config("spark.sql.session.timeZone", "UTC")
                .config("spark.sql.adaptive.enabled", "true")
@@ -53,7 +98,6 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
                .config("spark.sql.files.openCostInBytes", str(512 * 1024))
                .config("spark.serializer",
                        "org.apache.spark.serializer.KryoSerializer")
-               .config("spark.ui.enabled", "false"))
-    for k, v in extra.items():
-        builder = builder.config(k, v)
+               .config("spark.ui.enabled", "false")
+               .config(map=worker_confs(master, extra)))
     return builder.getOrCreate()

@@ -26,8 +26,11 @@ def spark():
     import tempfile
 
     from pyspark.sql import SparkSession
+
+    from eventrelationextractor_spark.spark.session import worker_confs
+    master = os.environ.get("SPARK_GRAFT_MASTER", "local[4]")
     spark = (SparkSession.builder
-             .master(os.environ.get("SPARK_GRAFT_MASTER", "local[4]"))
+             .master(master)
              .appName("erex-tests")
              .config("spark.sql.warehouse.dir",
                      tempfile.mkdtemp(prefix="erex-warehouse-"))
@@ -36,6 +39,7 @@ def spark():
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.ui.enabled", "false")
              .config("spark.driver.memory", "4g")
+             .config(map=worker_confs(master))
              .getOrCreate())
     yield spark
     spark.stop()

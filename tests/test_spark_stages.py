@@ -1,7 +1,11 @@
 """Spark-layer tests: extraction stages, KG layers, ops, lineage/resume,
 plan hygiene (column pruning), streaming."""
 
+import json
 import os
+import subprocess
+import sys
+import textwrap
 import time
 
 import pytest
@@ -68,6 +72,88 @@ def test_connected_components_two_components(spark):
     labels = {r.vertex: r.component
               for r in kg.connected_components(edges).collect()}
     assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+_CC_SLOW_PATH = (
+    # a 44-vertex path from its minimum 0doc#e10 through the aliases Y and
+    # X, then 40 SIMULTANEOUS-chained mentions AAA#e49 ... AAA#e10 whose
+    # ids decrease with distance from the minimum: pointer jumping cannot
+    # shortcut it, so min-label propagation needs 43 rounds
+    [("0doc", "e10", "Y"), ("zz", "e10", "Y"), ("zz", "e10", "X"),
+     ("AAA", "e49", "X")],
+    [("AAA", f"e{i}", "SIMULTANEOUS", f"e{i + 1}") for i in range(10, 49)])
+
+
+def test_connected_components_raises_or_labels_exactly(spark):
+    """A graph that needs more than ``max_iterations`` rounds must not get
+    unconverged labels: connected_components raises, or its labels equal
+    a driver union-find's (and canonicalize's, which has a fixed plan)."""
+    linked, trips = _kg_inputs(spark, *_CC_SLOW_PATH)
+    edges = kg.canonical_edges(linked, trips)
+    parent = {}
+    for r in edges.collect():
+        kg._union(parent, r.src, r.dst)
+    want = {v: kg._find(parent, v) for v in parent}
+    assert len(want) == 44 and set(want.values()) == {"0doc#e10"}
+    assert {r.vertex: r.component
+            for r in kg.canonicalize(linked, trips).collect()} == want
+    try:
+        got = {r.vertex: r.component
+               for r in kg.connected_components(edges).collect()}
+    except RuntimeError as e:
+        assert "did not converge" in str(e)
+    else:
+        assert got == want
+
+
+@pytest.mark.parametrize("daemon", ["true", "false"])
+def test_build_session_worker_keeps_zip_directories(tmp_path, daemon):
+    """Python tasks of a build_session session run the package's worker
+    module, forked by pyspark's daemon or (use.daemon=false) started on
+    their own: inside a task, importlib.invalidate_caches() leaves every
+    zip importer's cached archive directory in place instead of
+    re-reading it. The caller's own spark.executorEnv.PYTHONPATH (as
+    perfbench passes one) stays on the workers' path next to the
+    module's."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import json, sys
+        sys.path.insert(0, {root!r})
+        from eventrelationextractor_spark.spark.session import build_session
+
+        def probe(_):
+            import importlib, sys, zipimport
+            archives = {{imp.archive for imp in
+                        list(sys.path_importer_cache.values())
+                        if isinstance(imp, zipimport.zipimporter)}}
+            before = {{a: zipimport._zip_directory_cache[a]
+                      for a in archives}}
+            importlib.invalidate_caches()
+            yield {{"kept": {{a: zipimport._zip_directory_cache.get(a) is d
+                             for a, d in before.items()}},
+                   "path": sys.path}}
+
+        spark = build_session(
+            master="local[1]", shuffle_partitions=1,
+            **{{"spark.driver.memory": "1g",
+               "spark.ui.showConsoleProgress": "false",
+               "spark.python.use.daemon": {daemon!r},
+               "spark.executorEnv.PYTHONPATH": {str(tmp_path)!r}}})
+        print(json.dumps(
+            spark.sparkContext.parallelize([0], 1).mapPartitions(probe)
+            .collect()[0]))
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items()
+           if k != "PYTHONPATH" and not k.startswith("SPARK_GRAFT_")}
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    task = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert task["kept"] and all(task["kept"].values()), task["kept"]
+    worker_dir = os.path.join(root, "eventrelationextractor_spark", "_worker")
+    assert worker_dir in task["path"] and str(tmp_path) in task["path"]
 
 
 def test_entity_linking_left_join_keeps_unlinked(spark, fixture_pages):

@@ -160,7 +160,8 @@ def main() -> int:
                    "embeddings / 1,000,000 events; driver testdata is "
                    "read-only and capped at sf0.1)",
         "command": "python tools/sf1_gate.py   (SF1_DIR=/tmp/sf1.0, "
-                   "local[32], 12g driver heap via build_session)",
+                   "local[32], build_session's driver heap: half "
+                   "the host's memory, at most 12g)",
         "n_queries": len(results),
         "n_ok": sum(1 for v in results.values()
                     if v["status"] in ("ok", "rows_only")),
