@@ -3,9 +3,15 @@
 Execution design (SURVEY.md §1.4, §4):
 
 * The corpus is **embarrassingly parallel by document** - one page row IS
-  one document, so extraction is a pure ``mapInPandas`` over the pages
+  one document, so extraction is a pure ``mapInArrow`` over the pages
   scan: zero shuffles, linear scaling with executors. No groupBy is needed
   because no cross-document state exists until canonicalization.
+* Every per-page extractor runs through one kernel, ``_map_pages``: it
+  reads the Arrow batches, parses each page once, applies the one error
+  policy (a page that fails to parse yields exactly one error row, with
+  ``PARSE_ERROR`` in the stage's label-like column, never vanishes and
+  never fails the job) and frames the output columns. An extractor only
+  supplies its schema, its per-page row emitter and its error row.
 * All Python work is Arrow-batched; the per-document core
   (eventrelationextractor_spark.core) is pure Python/numpy and is loaded
   once per executor (lexicons and liblinear weights are module-level
@@ -14,7 +20,7 @@ Execution design (SURVEY.md §1.4, §4):
   (binary) at the parquet/Iceberg scan - verified via
   ``explain_scan_pruning`` in tests.
 * Giant pages: the timex-timex sieve is O(n_timex^2) per document; pages
-  whose timex count exceeds ``max_timex_pairs_per_doc`` are truncated with
+  whose timex count exceeds ``max_timexes_per_doc`` are truncated with
   a lineage warning rather than stalling a task (skew guard, SURVEY.md
   §7.1 step 8).
 """
@@ -97,11 +103,12 @@ def _repartition_for_cpu(df: DataFrame) -> DataFrame:
 
 def _page_source(pages: DataFrame):
     """(df, batch-transform) for a page source that is either a real pages
-    table (has a ``text`` column) or a bare ``doc_id`` frame.
+    table (has a ``text`` column) or a bare ``doc_id`` frame; the
+    transform turns the df's Arrow batches into (url, text) batches.
 
     For a doc_id frame the synthetic page text is generated *inside the
     same UDF* as the downstream extraction (stage fusion, SURVEY.md §4.2):
-    chaining two mapInPandas stages makes every task hold TWO python
+    chaining two Python map stages makes every task hold TWO python
     workers (the JVM pipes one runner into the next), doubling the worker
     pool and paying an extra Arrow round-trip of the full page text."""
     if "text" in pages.columns:
@@ -112,13 +119,57 @@ def _page_source(pages: DataFrame):
         pages.select(F.col("doc_id").cast("long").alias("id")))
 
     def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            pg = [synth_page(int(d)) for d in pdf["id"]]
-            yield pd.DataFrame({"url": [p["url"] for p in pg],
-                                "text": [p["text"] for p in pg]})
+        import pyarrow as pa
+        for batch in batches:
+            pg = [synth_page(d) for d in batch.column("id").to_pylist()]
+            yield pa.RecordBatch.from_pydict(
+                {"url": [p["url"] for p in pg],
+                 "text": [p["text"] for p in pg]})
 
     return ids, gen
+
+
+def _map_pages(src: DataFrame, gen_pages, schema: StructType, make_emit,
+               error_rows) -> DataFrame:
+    """The per-page extraction kernel: one ``mapInArrow`` over ``src``.
+
+    ``gen_pages`` turns the input Arrow batches into batches whose
+    columns are (url, text, *extra). ``make_emit()`` runs once per task
+    inside the UDF (imports, lexicons) and returns ``emit(url, doc,
+    *extra)``, which yields row tuples in ``schema`` order. A page that
+    fails to parse yields ``error_rows(url, *extra)`` instead - one row
+    per page, so every page is accounted for and downstream lineage sees
+    its parse failures."""
+
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        arrow_schema = to_arrow_schema(schema)
+        emit = make_emit()
+        for batch in gen_pages(batches):
+            rows = []
+            for url, text, *extra in zip(*batch.to_pydict().values()):
+                try:
+                    doc = parse_page(text, url)
+                except Exception:
+                    rows.extend(error_rows(url, *extra))
+                    continue
+                rows.extend(emit(url, doc, *extra))
+            columns = zip(*rows) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=field.type)
+                 for col, field in zip(columns, arrow_schema)],
+                schema=arrow_schema)
+
+    return src.mapInArrow(run, schema)
+
+
+_TRIPLE_ERROR = ("_doc", "PARSE_ERROR", "_doc", "parse-error", "meta")
+
+
+def _triple_rows(url: str, trips) -> Iterator:
+    return ((url, t.source, t.rel, t.target, t.stage, t.pair_type)
+            for t in trips)
 
 
 def extract_triples(pages: DataFrame, mode: str = "both",
@@ -146,67 +197,40 @@ def extract_triples(pages: DataFrame, mode: str = "both",
 
     ``pages`` may be a bare doc_id frame: the synthetic page is then
     generated in the same UDF (see _page_source)."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        # heavy imports inside the UDF so the driver plan stays light
-        import pandas as pd
-
+    def make_emit():
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import causal_triples, temporal_triples
         from ..core.timegraph import filter_consistent
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            out = {"url": [], "subj": [], "pred": [], "obj": [],
-                   "stage": [], "pair_type": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    # malformed page: emit a meta row instead of vanishing
-                    # silently - the lineage pred_histogram then reports
-                    # parse failures per bucket
-                    out["url"].append(url)
-                    out["subj"].append("_doc")
-                    out["pred"].append("PARSE_ERROR")
-                    out["obj"].append("_doc")
-                    out["stage"].append("parse-error")
-                    out["pair_type"].append("meta")
-                    continue
-                trips = []
-                temporal = None
-                if mode in ("temporal", "both"):
-                    temporal = temporal_triples(
-                        doc, lx, max_timexes=max_timexes_per_doc)
-                    if consistent_only:
-                        ordered = sorted((t.source, t.target, t.rel)
-                                         for t in temporal)
-                        kept, _ = filter_consistent(ordered)
-                        keep = set(kept)
-                        temporal = [t for t in temporal
-                                    if (t.source, t.target, t.rel) in keep]
-                    trips += temporal
-                if mode in ("causal", "both"):
-                    tlinks_map = None
-                    if causal_tlinks_from_temporal and temporal is not None:
-                        tlinks_map = {t.source + "," + t.target: t.rel
-                                      for t in temporal}
-                    trips += causal_triples(doc, tlinks_map=tlinks_map,
-                                            lexicons=lx)
-                if doc.memo.get("tt_truncated"):
-                    from ..core.pipeline import Triple
-                    trips.append(Triple("_doc", "_doc", "TRUNCATED",
-                                        "tt-truncated", "meta"))
-                for t in trips:
-                    out["url"].append(url)
-                    out["subj"].append(t.source)
-                    out["pred"].append(t.rel)
-                    out["obj"].append(t.target)
-                    out["stage"].append(t.stage)
-                    out["pair_type"].append(t.pair_type)
-            yield pd.DataFrame(out)
 
-    return cols.mapInPandas(run, schema=TRIPLE_SCHEMA)
+        def emit(url, doc):
+            temporal = None
+            if mode in ("temporal", "both"):
+                temporal = temporal_triples(
+                    doc, lx, max_timexes=max_timexes_per_doc)
+                if consistent_only:
+                    ordered = sorted((t.source, t.target, t.rel)
+                                     for t in temporal)
+                    kept, _ = filter_consistent(ordered)
+                    keep = set(kept)
+                    temporal = [t for t in temporal
+                                if (t.source, t.target, t.rel) in keep]
+                yield from _triple_rows(url, temporal)
+            if mode in ("causal", "both"):
+                tlinks_map = None
+                if causal_tlinks_from_temporal and temporal is not None:
+                    tlinks_map = {t.source + "," + t.target: t.rel
+                                  for t in temporal}
+                yield from _triple_rows(url, causal_triples(
+                    doc, tlinks_map=tlinks_map, lexicons=lx))
+            if doc.memo.get("tt_truncated"):
+                yield (url, "_doc", "TRUNCATED", "_doc", "tt-truncated",
+                       "meta")
+        return emit
+
+    return _map_pages(*_page_source(pages), TRIPLE_SCHEMA, make_emit,
+                      lambda url: [(url, *_TRIPLE_ERROR)])
 
 
 def extract_triples_salted(pages: DataFrame, mode: str = "both",
@@ -218,18 +242,19 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
     ``max_timexes_per_doc`` truncation cap).
 
     One page = one task unit, so a single pathological page (the
-    timex-timex sieve is O(n_timex^2)) stalls its task while 31 cores sit
-    idle. Pages >= ``giant_page_bytes`` are exploded into ``salt`` copies,
-    hash-repartitioned on (url, salt) so the copies land on different
-    tasks, and each copy computes exactly the pair_slice (s, salt) of the
-    tt pair space (copy 0 also runs the linear candidate sieves). Normal
-    pages take the usual shuffle-free path; the union is exactly
-    extract_triples' output - asserted in tests.
+    timex-timex sieve is O(n_timex^2)) stalls its task while the other
+    cores sit idle. Pages >= ``giant_page_bytes`` are exploded into
+    ``salt`` copies, hash-repartitioned on (url, salt) so the copies land
+    on different tasks, and each copy computes exactly the pair_slice
+    (s, salt) of the tt pair space (copy 0 also runs the linear candidate
+    sieves and carries the page's one error row). Normal pages take the
+    usual shuffle-free path; the union is exactly extract_triples' output
+    - asserted in tests. A page without text counts as 0 bytes.
 
     Requires a real pages input (text column): the giant/normal split
     predicate needs the text length at plan time."""
     cols = pages.select("url", "text")
-    is_giant = F.length("text") >= giant_page_bytes
+    is_giant = F.coalesce(F.length("text"), F.lit(0)) >= giant_page_bytes
     normal = extract_triples(cols.filter(~is_giant), mode=mode,
                              max_timexes_per_doc=max_timexes_per_doc)
     giant = (cols.filter(is_giant)
@@ -237,80 +262,46 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
                          F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
              .repartition("url", "salt"))
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import causal_triples, temporal_triples
         lx = load_lexicons()
-        for pdf in batches:
-            out = {"url": [], "subj": [], "pred": [], "obj": [],
-                   "stage": [], "pair_type": []}
-            for url, text, s in zip(pdf["url"], pdf["text"], pdf["salt"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    if int(s) == 0:  # one meta row per page, not per copy
-                        out["url"].append(url)
-                        out["subj"].append("_doc")
-                        out["pred"].append("PARSE_ERROR")
-                        out["obj"].append("_doc")
-                        out["stage"].append("parse-error")
-                        out["pair_type"].append("meta")
-                    continue
-                trips = []
-                if mode in ("temporal", "both"):
-                    trips += temporal_triples(
-                        doc, lx, max_timexes=max_timexes_per_doc,
-                        pair_slice=(int(s), salt))
-                if int(s) == 0 and mode in ("causal", "both"):
-                    trips += causal_triples(doc, lexicons=lx)
-                for t in trips:
-                    out["url"].append(url)
-                    out["subj"].append(t.source)
-                    out["pred"].append(t.rel)
-                    out["obj"].append(t.target)
-                    out["stage"].append(t.stage)
-                    out["pair_type"].append(t.pair_type)
-            yield pd.DataFrame(out)
 
-    return normal.unionByName(giant.mapInPandas(run, schema=TRIPLE_SCHEMA))
+        def emit(url, doc, s):
+            if mode in ("temporal", "both"):
+                yield from _triple_rows(url, temporal_triples(
+                    doc, lx, max_timexes=max_timexes_per_doc,
+                    pair_slice=(s, salt)))
+            if s == 0 and mode in ("causal", "both"):
+                yield from _triple_rows(url, causal_triples(doc, lexicons=lx))
+        return emit
+
+    return normal.unionByName(_map_pages(
+        giant, lambda batches: batches, TRIPLE_SCHEMA, make_emit,
+        lambda url, s: [(url, *_TRIPLE_ERROR)] if s == 0 else []))
 
 
 def extract_mentions(pages: DataFrame) -> DataFrame:
     """pages -> mention table (for entity linking / canonicalization)."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core.deps import token_attr
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in MENTION_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for mid, m in doc.entities.items():
-                    rows["url"].append(url)
-                    rows["mention_id"].append(mid)
-                    rows["kind"].append(m.kind)
-                    rows["sent_id"].append(m.sent_id)
-                    rows["ent_idx"].append(m.idx)
-                    if m.start_tok != "O" and m.start_tok in doc.tokens:
-                        rows["surface"].append(token_attr(doc, m, "token"))
-                        rows["lemma"].append(token_attr(doc, m, "lemma"))
-                    else:
-                        rows["surface"].append(None)
-                        rows["lemma"].append(None)
-                    rows["ev_class"].append(m.ev_class)
-                    rows["tmx_type"].append(m.tmx_type)
-                    rows["tmx_value"].append(m.tmx_value)
-                    rows["is_dct"].append("TRUE" if m.is_dct else "FALSE")
-            yield pd.DataFrame(rows)
 
-    return cols.mapInPandas(run, schema=MENTION_SCHEMA)
+        def emit(url, doc):
+            for mid, m in doc.entities.items():
+                surface = lemma = None
+                if m.start_tok != "O" and m.start_tok in doc.tokens:
+                    surface = token_attr(doc, m, "token")
+                    lemma = token_attr(doc, m, "lemma")
+                yield (url, mid, m.kind, m.sent_id, m.idx, surface, lemma,
+                       m.ev_class, m.tmx_type, m.tmx_value,
+                       "TRUE" if m.is_dct else "FALSE")
+        return emit
+
+    # null lemma: the error row never links to an alias
+    return _map_pages(*_page_source(pages), MENTION_SCHEMA, make_emit,
+                      lambda url: [(url, "_doc", "PARSE_ERROR", None, -1,
+                                    None, None, None, None, None, "FALSE")])
 
 
 TOKEN_SCHEMA = StructType([
@@ -348,31 +339,20 @@ def extract_candidates(pages: DataFrame) -> DataFrame:
     dropped (F2), split into E-DCT / E-T / E-E streams (F1, F3), canonical
     pair ordering applied (R7: EE doc-order swap + invert, ET event
     first). This is exactly the frame the sieve cascade consumes."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core.pipeline import _candidate_groups
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in CANDIDATE_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
-                for ptype, group in (("ed", dct_pairs), ("et", et_pairs),
-                                     ("ee", ee_pairs)):
-                    for e1, e2, label in group:
-                        rows["url"].append(url)
-                        rows["source_id"].append(e1.mid)
-                        rows["target_id"].append(e2.mid)
-                        rows["pair_type"].append(ptype)
-                        rows["gold_rel"].append(label)
-            yield pd.DataFrame(rows)
 
-    return cols.mapInPandas(run, schema=CANDIDATE_SCHEMA)
+        def emit(url, doc):
+            for ptype, group in zip(("ed", "et", "ee"),
+                                    _candidate_groups(doc)):
+                for e1, e2, label in group:
+                    yield (url, e1.mid, e2.mid, ptype, label)
+        return emit
+
+    return _map_pages(*_page_source(pages), CANDIDATE_SCHEMA, make_emit,
+                      lambda url: [(url, "_doc", "_doc", "meta",
+                                    "PARSE_ERROR")])
 
 
 PROB_SCHEMA = StructType([
@@ -390,31 +370,21 @@ def extract_ee_probabilities(pages: DataFrame) -> DataFrame:
     probabilities for the classifier-bound EE pairs (see
     core.pipeline.ee_clf_probabilities). Pure map stage like the other
     extractors - one row per (pair, model class)."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import ee_clf_probabilities
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in PROB_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for s, t, name, dec, prob in ee_clf_probabilities(doc, lx):
-                    rows["url"].append(url)
-                    rows["source_id"].append(s)
-                    rows["target_id"].append(t)
-                    rows["label"].append(name)
-                    rows["dec"].append(dec)
-                    rows["prob"].append(prob)
-            yield pd.DataFrame(rows)
 
-    return cols.mapInPandas(run, schema=PROB_SCHEMA)
+        def emit(url, doc):
+            for s, t, name, dec, prob in ee_clf_probabilities(doc, lx):
+                yield (url, s, t, name, dec, prob)
+        return emit
+
+    nan = float("nan")
+    return _map_pages(*_page_source(pages), PROB_SCHEMA, make_emit,
+                      lambda url: [(url, "_doc", "_doc", "PARSE_ERROR",
+                                    nan, nan)])
 
 
 def extract_tokens(pages: DataFrame) -> DataFrame:
@@ -424,40 +394,22 @@ def extract_tokens(pages: DataFrame) -> DataFrame:
     statistics, token-level exports) get the columnar form without
     re-parsing; deps keep the reference's cell encoding so the table
     round-trips to TXP."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in TOKEN_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                for tid in doc.token_arr:
-                    t = doc.tokens[tid]
-                    rows["url"].append(url)
-                    rows["tok_idx"].append(t.idx)
-                    rows["tok_id"].append(t.tid)
-                    rows["sent_id"].append(t.sent_id)
-                    rows["text"].append(t.text)
-                    rows["lemma"].append(t.lemma)
-                    rows["pos"].append(t.pos)
-                    rows["main_pos"].append(t.main_pos)
-                    rows["chunk"].append(t.chunk)
-                    rows["tense"].append(t.tense)
-                    rows["aspect"].append(t.aspect)
-                    rows["pol"].append(t.pol)
-                    rows["main_verb"].append("mainVb" if t.main_verb else "O")
-                    rows["deps"].append(
-                        "||".join(f"{k}:{t.deps[k]}" for k in t.dep_order)
+    def make_emit():
+        def emit(url, doc):
+            for tid in doc.token_arr:
+                t = doc.tokens[tid]
+                deps = ("||".join(f"{k}:{t.deps[k]}" for k in t.dep_order)
                         if t.deps else "O")
-                    rows["ev_id"].append(t.ev_id)
-                    rows["tmx_id"].append(t.tmx_id)
-            yield pd.DataFrame(rows)
+                yield (url, t.idx, t.tid, t.sent_id, t.text, t.lemma, t.pos,
+                       t.main_pos, t.chunk, t.tense, t.aspect, t.pol,
+                       "mainVb" if t.main_verb else "O", deps, t.ev_id,
+                       t.tmx_id)
+        return emit
 
-    return cols.mapInPandas(run, schema=TOKEN_SCHEMA)
+    return _map_pages(*_page_source(pages), TOKEN_SCHEMA, make_emit,
+                      lambda url: [(url, -1, "_doc", "_doc", "PARSE_ERROR")
+                                   + (None,) * 11])
 
 
 def extracted_text(pages: DataFrame) -> DataFrame:
@@ -465,36 +417,31 @@ def extracted_text(pages: DataFrame) -> DataFrame:
 
     Detokenization reproduces the reference's escaping rules
     (TempEval3TaskABC.java:284-292): PTB bracket escapes back to literal
-    brackets, double-backtick/quote pairs back to '"'."""
-    cols, gen_pages = _page_source(pages)
+    brackets, double-backtick/quote pairs back to '"'. A page that fails
+    to parse gets empty text and ``PARSE_ERROR`` in place of the hash."""
     schema = StructType([StructField("url", StringType(), False),
                          StructField("extracted_text", StringType(), False),
                          StructField("sha256", StringType(), False)])
 
-    def run(batches: Iterator) -> Iterator:
+    def make_emit():
         import hashlib
 
-        import pandas as pd
-        for pdf in gen_pages(batches):
-            out = {"url": [], "extracted_text": [], "sha256": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                doc = parse_page(text, url)
-                words = []
-                for tid in doc.token_arr:
-                    w = doc.tokens[tid].text
-                    w = (w.replace("-LRB-", "(").replace("-RRB-", ")")
-                          .replace("-LCB-", "{").replace("-RCB-", "}")
-                          .replace("-LSB-", "[").replace("-RSB-", "]")
-                          .replace("``", '"').replace("''", '"'))
-                    words.append(w)
-                extracted = " ".join(words)
-                out["url"].append(url)
-                out["extracted_text"].append(extracted)
-                out["sha256"].append(
-                    hashlib.sha256(extracted.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(out)
+        def emit(url, doc):
+            words = []
+            for tid in doc.token_arr:
+                w = doc.tokens[tid].text
+                w = (w.replace("-LRB-", "(").replace("-RRB-", ")")
+                      .replace("-LCB-", "{").replace("-RCB-", "}")
+                      .replace("-LSB-", "[").replace("-RSB-", "]")
+                      .replace("``", '"').replace("''", '"'))
+                words.append(w)
+            extracted = " ".join(words)
+            yield (url, extracted,
+                   hashlib.sha256(extracted.encode("utf-8")).hexdigest())
+        return emit
 
-    return cols.mapInPandas(run, schema=schema)
+    return _map_pages(*_page_source(pages), schema, make_emit,
+                      lambda url: [(url, "", "PARSE_ERROR")])
 
 
 def synth_pages_df(spark, n_docs: int, partitions: int | None = None) -> DataFrame:
@@ -530,7 +477,7 @@ def pages_from_doc_ids(doc_ids: DataFrame) -> DataFrame:
         StructField("url", StringType(), False),
         StructField("text", StringType(), False),
     ])
-    return ids.mapInPandas(lambda b: gen(b), schema=schema)
+    return ids.mapInArrow(gen, schema)
 
 
 KG_ROW_SCHEMA = StructType([
@@ -554,56 +501,34 @@ def extract_kg_rows(pages: DataFrame, mode: str = "temporal",
     per run, TempRelPro.java:133,181,229 - exactly the waste we avoid).
     Downstream splits by ``row_kind`` after a localCheckpoint, so the
     corpus is scanned and parsed exactly once."""
-    cols, gen_pages = _page_source(pages)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core.deps import token_attr
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import causal_triples, temporal_triples
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in KG_ROW_SCHEMA.fields}
 
-            def emit(url, row_kind, mention_id=None, kind=None, lemma=None,
-                     subj=None, pred=None, obj=None):
-                rows["url"].append(url)
-                rows["row_kind"].append(row_kind)
-                rows["mention_id"].append(mention_id)
-                rows["kind"].append(kind)
-                rows["lemma"].append(lemma)
-                rows["subj"].append(subj)
-                rows["pred"].append(pred)
-                rows["obj"].append(obj)
+        def emit(url, doc):
+            for mid, m in doc.entities.items():
+                lemma = (token_attr(doc, m, "lemma")
+                         if m.start_tok != "O" and m.start_tok in doc.tokens
+                         else None)
+                yield (url, "mention", mid, m.kind, lemma, None, None, None)
+            trips = []
+            if mode in ("temporal", "both"):
+                trips += temporal_triples(doc, lx,
+                                          max_timexes=max_timexes_per_doc)
+            if mode in ("causal", "both"):
+                trips += causal_triples(doc, lexicons=lx)
+            for t in trips:
+                yield (url, "triple", None, None, None, t.source, t.rel,
+                       t.target)
+        return emit
 
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    # the same meta row extract_triples emits, so every
-                    # page is accounted for; canonicalization skips it
-                    emit(url, "triple", subj="_doc", pred="PARSE_ERROR",
-                         obj="_doc")
-                    continue
-                for mid, m in doc.entities.items():
-                    lemma = (token_attr(doc, m, "lemma")
-                             if m.start_tok != "O" and m.start_tok in doc.tokens
-                             else None)
-                    emit(url, "mention", mention_id=mid, kind=m.kind,
-                         lemma=lemma)
-                trips = []
-                if mode in ("temporal", "both"):
-                    trips += temporal_triples(doc, lx,
-                                              max_timexes=max_timexes_per_doc)
-                if mode in ("causal", "both"):
-                    trips += causal_triples(doc, lexicons=lx)
-                for t in trips:
-                    emit(url, "triple", subj=t.source, pred=t.rel,
-                         obj=t.target)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(run, schema=KG_ROW_SCHEMA)
+    # the same meta row extract_triples emits; canonicalization skips it
+    return _map_pages(*_page_source(pages), KG_ROW_SCHEMA, make_emit,
+                      lambda url: [(url, "triple", None, None, None, "_doc",
+                                    "PARSE_ERROR", "_doc")])
 
 
 FEATURE_EXPORT_SCHEMA = StructType([
@@ -627,45 +552,35 @@ def export_training_features(pages: DataFrame,
     ``labeled_only`` is the F4 train-label filter (the reference trains
     only on gold-labeled pairs - the label column's 0/NONE rows are test
     candidates, never training rows): applied as a DataFrame filter so
-    Catalyst can combine it with downstream predicates."""
-    cols, gen_pages = _page_source(pages)
+    Catalyst can combine it with downstream predicates. A page that fails
+    to parse yields one label-0 ``meta`` row, which the filter drops."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def make_emit():
         from ..core import features
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import _candidate_groups
         lx = load_lexicons()
-        for pdf in gen_pages(batches):
-            rows = {k.name: [] for k in FEATURE_EXPORT_SCHEMA.fields}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                try:
-                    doc = parse_page(text, url)
-                except Exception:
-                    continue
-                dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
-                groups = (
-                    ("dct", dct_pairs,
-                     lambda ps: features.et_vector(doc, ps, False)),
-                    ("et", et_pairs,
-                     lambda ps: features.et_vector(doc, ps, False)),
-                    ("ee", ee_pairs,
-                     lambda ps: features.ee_vector(doc, ps, lx)),
-                )
-                for gname, pairs, build in groups:
-                    if not pairs:
-                        continue
-                    for (e1, e2, _), vec in zip(pairs, build(pairs)):
-                        rows["url"].append(url)
-                        rows["group"].append(gname)
-                        rows["src"].append(e1.mid)
-                        rows["tgt"].append(e2.mid)
-                        rows["label"].append(int(vec[-1]))
-                        rows["libsvm"].append(features.to_libsvm(vec))
-            yield pd.DataFrame(rows)
 
-    out = cols.mapInPandas(run, schema=FEATURE_EXPORT_SCHEMA)
+        def emit(url, doc):
+            dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
+            groups = (
+                ("dct", dct_pairs,
+                 lambda ps: features.et_vector(doc, ps, False)),
+                ("et", et_pairs,
+                 lambda ps: features.et_vector(doc, ps, False)),
+                ("ee", ee_pairs,
+                 lambda ps: features.ee_vector(doc, ps, lx)),
+            )
+            for gname, pairs, build in groups:
+                if not pairs:
+                    continue
+                for (e1, e2, _), vec in zip(pairs, build(pairs)):
+                    yield (url, gname, e1.mid, e2.mid, int(vec[-1]),
+                           features.to_libsvm(vec))
+        return emit
+
+    out = _map_pages(*_page_source(pages), FEATURE_EXPORT_SCHEMA, make_emit,
+                     lambda url: [(url, "meta", "_doc", "_doc", 0, "")])
     if labeled_only:
         out = out.filter(F.col("label") != 0)   # F4
     return out

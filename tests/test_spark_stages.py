@@ -2,11 +2,14 @@
 plan hygiene (column pruning), streaming."""
 
 import json
+import math
 import os
+import re
 import subprocess
 import sys
 import textwrap
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,11 +52,40 @@ def test_html_column_pruned_from_scan(spark, tmp_path, fixture_pages):
     assert any("url:string" in s and "text:string" in s for s in schemas)
 
 
+# per-page extractor -> (run on a pages frame, its error row after url)
+PER_PAGE_EXTRACTORS = {
+    "extract_triples": (lambda p: stages.extract_triples(p, "both"),
+                        ("_doc", "PARSE_ERROR", "_doc", "parse-error",
+                         "meta")),
+    "extract_kg_rows": (lambda p: stages.extract_kg_rows(p, "both"),
+                        ("triple", None, None, None, "_doc", "PARSE_ERROR",
+                         "_doc")),
+    "extract_mentions": (stages.extract_mentions,
+                         ("_doc", "PARSE_ERROR", None, -1, None, None, None,
+                          None, None, "FALSE")),
+    "extract_candidates": (stages.extract_candidates,
+                           ("_doc", "_doc", "meta", "PARSE_ERROR")),
+    "extract_ee_probabilities": (stages.extract_ee_probabilities,
+                                 ("_doc", "_doc", "PARSE_ERROR", "nan",
+                                  "nan")),
+    "extract_tokens": (stages.extract_tokens,
+                       (-1, "_doc", "_doc", "PARSE_ERROR") + (None,) * 11),
+    "export_training_features": (stages.export_training_features,
+                                 ("meta", "_doc", "_doc", 0, "")),
+    "extracted_text": (stages.extracted_text, ("", "PARSE_ERROR")),
+}
+
+
 def test_extraction_is_shuffle_free(spark, fixture_pages):
-    plan = stages.extract_triples(fixture_pages, "both") \
-        ._jdf.queryExecution().toString()
-    physical = plan.split("== Physical Plan ==")[-1]
-    assert "Exchange" not in physical  # pure map stage: no shuffle
+    """Each per-page extractor is one Python map over the scan, without a
+    shuffle: a second chained Python stage would make every task hold two
+    Python workers."""
+    for name, (run, _) in PER_PAGE_EXTRACTORS.items():
+        physical = run(fixture_pages)._jdf.queryExecution().toString() \
+            .split("== Physical Plan ==")[-1]
+        assert "Exchange" not in physical, name   # pure map stage
+        assert len(re.findall(r"MapIn(?:Arrow|Pandas)|EvalPython",
+                              physical)) == 1, (name, physical)
 
 
 def test_connected_components_long_chain(spark):
@@ -415,32 +447,50 @@ def test_salted_extraction_matches_plain(spark, fixture_pages):
     assert "hashpartitioning" in physical and "salt" in physical
 
 
-def test_parse_failure_emits_meta_row(spark):
-    """A malformed page must surface as a PARSE_ERROR meta row (feeding
-    the lineage pred_histogram), not vanish silently."""
-    good = fx.fixture_pages(("sample_temporal",))[0]
-    pages = spark.createDataFrame(
-        [("u-bad", None), ("u-good", good["text"])], "url string, text string")
-    rows = stages.extract_triples(pages, "temporal").collect()
-    bad = [r for r in rows if r.url == "u-bad"]
-    assert len(bad) == 1 and bad[0].pred == "PARSE_ERROR" \
-        and bad[0].pair_type == "meta"
-    assert sum(1 for r in rows if r.url == "u-good") == 14
+def _nan_as_text(row) -> tuple:
+    return tuple("nan" if isinstance(v, float) and math.isnan(v) else v
+                 for v in row)
+
+
+def test_parse_failure_emits_meta_row(spark, fixture_pages):
+    """A page that fails to parse yields exactly one error row in every
+    per-page extractor (feeding the lineage pred_histogram), not zero
+    rows and not a failed job, and leaves the other pages' rows as they
+    are without it. The salted run makes every page giant, the bad one
+    included, so its error row comes from one copy out of four."""
+    good = fixture_pages.select("url", "text")
+    pages = good.unionByName(spark.createDataFrame(
+        [("u-bad", None)], "url string, text string"))
+    runs = dict(PER_PAGE_EXTRACTORS)
+    runs["extract_triples_salted"] = (
+        lambda p: stages.extract_triples_salted(p, "both", salt=4,
+                                                giant_page_bytes=0),
+        PER_PAGE_EXTRACTORS["extract_triples"][1])
+    for name, (run, want) in runs.items():
+        rows = run(pages).collect()
+        assert [_nan_as_text(r)[1:] for r in rows if r.url == "u-bad"] \
+            == [want], name
+        rest = Counter(tuple(r) for r in rows if r.url != "u-bad")
+        assert rest and rest == Counter(
+            tuple(r) for r in run(good).collect()), name
+
+    # consumers skip the error rows: canonicalization makes no vertex of
+    # the bad page, whether the mentions and triples come from one pass
+    # or two, and the F4 filter keeps it away from training
+    alias = spark.createDataFrame(
+        [("say", "EVENT", "EVT_SAY")],
+        "alias string, kind string, canonical_id string")
     kg_rows = stages.extract_kg_rows(pages, "temporal")
-    got = kg_rows.collect()
-    assert [(r.row_kind, r.subj, r.pred, r.obj) for r in got
-            if r.url == "u-bad"] == [("triple", "_doc", "PARSE_ERROR", "_doc")]
-    assert sum(1 for r in got
-               if r.url == "u-good" and r.row_kind == "triple") == 14
-    # canonicalization skips the meta row: no vertex of the bad page
-    linked = kg.link_mentions(
-        kg_rows.filter(F.col("row_kind") == "mention"),
-        spark.createDataFrame(
-            [("say", "EVENT", "EVT_SAY")],
-            "alias string, kind string, canonical_id string"))
-    trips = kg_rows.filter(F.col("row_kind") == "triple")
-    assert not [r for r in kg.canonicalize(linked, trips).collect()
-                if r.vertex.startswith("u-bad")]
+    for mentions, trips in (
+            (kg_rows.filter(F.col("row_kind") == "mention"),
+             kg_rows.filter(F.col("row_kind") == "triple")),
+            (stages.extract_mentions(pages),
+             stages.extract_triples(pages, "temporal"))):
+        labels = kg.canonicalize(kg.link_mentions(mentions, alias), trips)
+        assert not [r for r in labels.collect()
+                    if r.vertex.startswith("u-bad")]
+    feats = stages.export_training_features(pages, labeled_only=True)
+    assert feats.filter(F.col("url") == "u-bad").count() == 0
 
 
 def test_streaming_triple_extraction_matches_batch(spark, tmp_path, fixture_pages):

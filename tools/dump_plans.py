@@ -54,7 +54,7 @@ def main() -> None:
 
     p = add("kg_temporal_triples (flagship extraction)",
             qs["kg_temporal_triples"](spark, sf),
-            "One fused ArrowEvalPython/MapInPandas stage over the doc_id "
+            "One fused MapInArrow stage over the doc_id "
             "scan; the only Exchange is the explicit CPU-repartition of "
             "the tiny id column (absent at production scan widths). No "
             "shuffle touches page text or triples.")
