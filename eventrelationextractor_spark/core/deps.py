@@ -16,7 +16,7 @@ solely where the Java would recurse forever.
 
 from __future__ import annotations
 
-from .docmodel import DocState, Mention, Token
+from .docmodel import DocState, Mention
 from .javacompat import java_hashmap_order
 
 MODAL_VERBS = ("will", "can", "may", "shall", "should")
@@ -307,24 +307,6 @@ def pair_order(doc: DocState, e1: Mention, e2: Mention) -> str:
     if e1.idx > e2.idx:
         return "AFTER"
     return "O"
-
-
-def entity_distance(doc: DocState, e1: Mention, e2: Mention) -> int:
-    """getEntityDistance (363-378)."""
-    for e in (e1, e2):
-        if e.is_timex and (e.is_dct or e.is_empty):
-            return -1
-    if doc.sentences[e1.sent_id].sid == doc.sentences[e2.sent_id].sid:
-        return abs(e1.idx - e2.idx) - 1
-    return -1
-
-
-def sentence_distance(doc: DocState, e1: Mention, e2: Mention) -> int:
-    """getSentenceDistance (396-406)."""
-    for e in (e1, e2):
-        if e.is_timex and (e.is_dct or e.is_empty):
-            return -1
-    return abs(doc.sentences[e1.sent_id].idx - doc.sentences[e2.sent_id].idx)
 
 
 def _gov_substitute(doc: DocState, e: Mention, tok_id: str) -> str:

@@ -402,9 +402,3 @@ def to_libsvm(vec) -> str:
         if v > 0:
             parts.append(f"{i + 1}:{_java_double(v)}")
     return parts[0] + " " + " ".join(parts[1:]) if len(parts) > 1 else parts[0]
-
-
-def to_csv_row(vec) -> str:
-    """Dense CSV export (printCSVVectors-shaped; numeric formatting is
-    ours - the reference joins its raw feature strings)."""
-    return ",".join(_java_double(v) for v in vec)

@@ -202,16 +202,3 @@ def train(lines, C: float = 1.0, eps: float = 0.01, bias: float = 1.0):
     w = np.array(w_cols, dtype=np.float64).T       # (n, nr_w)
     return LinearModel("L2R_L2LOSS_SVC_DUAL", nr_class, label_order,
                        nr_feature, bias, w)
-
-
-def save_model(model, path: str) -> None:
-    """Model.save text format (liblinear %.16g serialization)."""
-    with open(path, "w") as f:
-        f.write(f"solver_type {model.solver}\n")
-        f.write(f"nr_class {model.nr_class}\n")
-        f.write("label " + " ".join(str(v) for v in model.labels) + "\n")
-        f.write(f"nr_feature {model.nr_feature}\n")
-        f.write(f"bias {model.bias:.15f}\n")
-        f.write("w\n")
-        for row in model.w:
-            f.write(" ".join(f"{v:.16g}" for v in row) + " \n")

@@ -25,8 +25,6 @@ Replicated quirks (all cited to the Java):
 
 from __future__ import annotations
 
-import re
-
 from .deps import (first_dependency_path, is_mate_passive_verb,
                    is_same_sentence, mate_coord_verb, mate_head_verb,
                    mate_object_from_verb, mate_subject_from_verb,
@@ -674,26 +672,3 @@ def get_temporal_connective(doc: DocState, e1: Mention, e2: Mention) -> Marker:
 
 def get_causal_connective(doc: DocState, e1: Mention, e2: Mention) -> Marker:
     return _get_connective(doc, e1, e2, "Contingency", with_inside=False)
-
-
-def get_temporal_marker_feature(doc: DocState, e1: Mention, e2: Mention,
-                                lexicons, pair_type: str = "ee") -> Marker:
-    """getTemporalMarkerFeature (1786-1802): connective first, signal
-    fallback; ET pairs with DCT/empty/cross-sentence get the empty marker."""
-    if pair_type == "et":
-        if (e2.is_timex and (e2.is_dct or e2.is_empty)) \
-                or not is_same_sentence(doc, e1, e2):
-            return _NO_MARKER
-    m = get_temporal_connective(doc, e1, e2)
-    if m.text == "O":
-        m = get_temporal_signal(doc, e1, e2, lexicons)
-    return m
-
-
-def get_causal_marker_feature(doc: DocState, e1: Mention, e2: Mention,
-                              lexicons) -> Marker:
-    """getCausalMarkerFeature (1804-1811): signal, then verb."""
-    m = get_causal_signal(doc, e1, e2, lexicons)
-    if m.text == "O":
-        m = get_causal_verb(doc, e1, e2, lexicons)
-    return m

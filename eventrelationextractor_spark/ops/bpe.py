@@ -144,7 +144,7 @@ def encode_bpe(df: DataFrame, merges: list, id_col: str = "doc_id",
     bare id - never ride wide columns (the md5 digest) through a
     corpus-scale explode+shuffle: the digest half is pure map-side and
     rejoins on the doc-count-sized result (in-session A/B: 9.0s vs 1.4s
-    at sf0.1, 6.5x, BENCH/BASELINE.md)."""
+    at sf0.1, 6.5x)."""
     toks = encode_tokens(df, merges, id_col, text_col)
     from pyspark.sql import Window
     vocab = subword_vocab(df, merges, text_col)

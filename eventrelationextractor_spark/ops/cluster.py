@@ -10,7 +10,7 @@ Scale shape (Lloyd's algorithm, the classic Spark formulation):
   Arrow ``mapInPandas`` stage computing ``argmin ||v - c||`` per batch
   via a BLAS matmul. Zero shuffle, constant plan size at any k - the
   same branch structure as ops/simsearch.py's IVF assignment, which won
-  its in-session A/B at every cell count (BENCH/BASELINE.md).
+  its in-session A/B at every cell count.
 * **The update is one partial-aggregated shuffle per iteration.**
   posexplode to (cell, pos, val) then groupBy(cell, pos).avg: partial
   aggregation reduces map output to k*dim rows per task before the

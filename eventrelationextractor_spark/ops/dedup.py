@@ -366,7 +366,7 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.9,
     plane dot products in ONE Arrow matmul stage
     (simsearch.banded_signatures_arrow - the round-2 formulation paid 32
     separate aggregate(zip_with(...)) expression passes, measured ~3x
-    slower; A/B table in BENCH/BASELINE.md). ``signatures='expr'`` keeps
+    slower in an A/B). ``signatures='expr'`` keeps
     the pure-codegen expression path (useful where Python workers are
     unavailable)."""
     from .simsearch import _dot, banded_signatures_arrow, hyperplane_signature
@@ -388,9 +388,9 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.9,
     # norms precomputed ONCE per vector, not per pair: the verify join
     # fans each vector out to many candidate pairs (bucket collisions are
     # chance-driven), so recomputing |v| per pair tripled the per-pair
-    # dot-product work - measured 3.5s -> 2.2s at sf0.1 (A/B table in
-    # BENCH/BASELINE.md). Bit-identical: |v| is a deterministic function
-    # of the vector, same value wherever it's computed.
+    # dot-product work - measured 3.5s -> 2.2s at sf0.1 in an A/B.
+    # Bit-identical: |v| is a deterministic function of the vector, same
+    # value wherever it's computed.
     withn = (emb.select(F.col(id_col).alias("id"), vec.alias("v"))
              .withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v")))))
     va = withn.select(F.col("id").alias("a"), F.col("v").alias("av"),

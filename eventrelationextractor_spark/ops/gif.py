@@ -225,10 +225,6 @@ def decode_gif_frames(payload: bytes, max_frames: int | None = None):
     return out
 
 
-def gif_frame_count(payload: bytes) -> int:
-    return len(parse_gif(payload)[4])
-
-
 # ---------------------------------------------------------------- encoder
 
 def _lzw_encode_literal(min_code_size: int, indices: np.ndarray) -> bytes:

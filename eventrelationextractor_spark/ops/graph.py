@@ -1410,7 +1410,7 @@ def boruvka_mst(edges: DataFrame, nodes: DataFrame | None = None,
             # set instead of the full e0. Costs one extra checkpoint
             # per round — a loss at toy scale where fixed overhead
             # dominates, a win once the edge set dwarfs the rounds
-            # (A/B'd per the house rule; see BENCH/BASELINE.md)
+            # (A/B'd per the house rule)
             e0 = (live.select("eid", "u", "v", "w")
                   .localCheckpoint(eager=False))
     if stats is not None:

@@ -22,7 +22,7 @@ Scale shape (per iteration, the classic broadcast-GLM formulation):
 * The model is ``n_buckets + 1`` doubles — broadcast, never sharded.
   Margins come from ONE broadcast hash join (features × weights) and a
   per-doc partial-agged sum; no literal expression tree, so plan size
-  is constant in ``n_buckets`` (the IVF lesson, BENCH/BASELINE.md).
+  is constant in ``n_buckets`` (the IVF lesson).
 * The gradient is a partial-agged groupBy collapsing map output to
   ``<= n_buckets`` rows per task before the exchange; the only collect
   per iteration is those ``n_buckets`` rows plus a 1-row bias aggregate

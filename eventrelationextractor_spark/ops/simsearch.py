@@ -35,7 +35,7 @@ def _with_cosine(pairs: DataFrame) -> DataFrame:
     fans out to many pairs, so norms are computed once per vector at the
     select that builds the side, not per pair (bit-identical - a norm is
     a deterministic function of the vector - and it cuts the per-pair
-    aggregate-lambda work 3x; A/B in BENCH/BASELINE.md).
+    aggregate-lambda work 3x in an A/B).
 
     Degenerate-vector guard: a zero-norm vector makes the divisor 0,
     which THROWS under ANSI mode (Spark 4 default) and yields NULL/NaN
@@ -99,7 +99,7 @@ def ivf_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
     numpy centroid matrix into one mapInPandas stage (argsort of V @ C.T
     per Arrow batch) - constant plan size at any n_cells, and measured
     FASTER than the literal path even at n_cells=16 (1.08s vs 3.04s
-    in-session medians, BENCH/BASELINE.md round-3 A/B: the literal
+    in-session medians of a round-3 A/B: the literal
     expression tree pays n_cells interpreted aggregate lambdas per row).
     'literal' embeds the centroids as literal array expressions in pure
     codegen - kept for Python-worker-free deployments; its expression

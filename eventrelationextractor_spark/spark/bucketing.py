@@ -24,10 +24,6 @@ def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16,
        .saveAsTable(table))
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_join(spark: SparkSession, left_table: str, right_table: str,
                    key: str = "url", how: str = "inner") -> DataFrame:
     """Join two co-bucketed tables on the bucket key - shuffle-free.

@@ -102,7 +102,7 @@ def awareness_scores(gold: DataFrame, pred: DataFrame,
     ``crc32(url) % n_buckets``, NOT the raw url: documents are tiny
     groups (tens of relations), and per-group Arrow/pandas overhead
     dominates scoring cost at millions of single-doc groups (measured
-    ~2.5x the whole query at sf0.1 - BENCH/BASELINE.md round-3 notes).
+    ~2.5x the whole query at sf0.1 in round 3).
     Each bucket group loops its documents with a pandas groupby; results
     are identical for any n_buckets, which only tunes group size
     (n_buckets >> cores keeps all executors busy; state per task stays

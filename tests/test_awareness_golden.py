@@ -19,6 +19,7 @@ ALL 12 cases bit-for-bit, and on randomized relation streams scored by
 the actual 2to3'd tool in-process (fuzz test below)."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -120,8 +121,8 @@ def test_awareness_sanity_properties():
 
 
 def test_spark_awareness_matches_core(spark):
-    """The cogroup/applyInPandas distributed scorer equals the core
-    scorer per document (fixture system-vs-gold + synthetic docs)."""
+    """The tag-union-split applyInPandas scorer equals the core scorer
+    per document (fixture system-vs-gold + synthetic docs)."""
     from eventrelationextractor_spark.spark.evaluate import awareness_scores
     rows_g, rows_s, want = [], [], {}
     for case, (gold, system) in sorted(_cases().items()):
@@ -131,11 +132,18 @@ def test_spark_awareness_matches_core(spark):
         rows_g += [(case, x, y, r) for x, y, r in gold]
         rows_s += [(case, x, y, r) for x, y, r in system]
     schema = "url string, src string, tgt string, rel string"
+    scores = awareness_scores(spark.createDataFrame(rows_g, schema),
+                              spark.createDataFrame(rows_s, schema))
+    # tag-union-split: one grouped pandas stage behind one hash Exchange
+    # (a cogroup would shuffle each side). Read before the collect, which
+    # adds AQE's final plan to the string.
+    physical = scores._jdf.queryExecution().toString() \
+        .split("== Physical Plan ==")[-1]
+    assert physical.count("FlatMapGroupsInPandas") == 1, physical
+    assert len(re.findall(r"Exchange", physical)) == 1, physical
     got = {r.url: (round(r.precision, 9), round(r.recall, 9),
                    round(r.f1, 9))
-           for r in awareness_scores(
-               spark.createDataFrame(rows_g, schema),
-               spark.createDataFrame(rows_s, schema)).collect()}
+           for r in scores.collect()}
     assert got == want
 
 

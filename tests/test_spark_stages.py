@@ -193,6 +193,11 @@ def test_entity_linking_left_join_keeps_unlinked(spark, fixture_pages):
     alias = spark.createDataFrame([("say", "EVENT", "EVT_SAY")],
                                   "alias string, kind string, canonical_id string")
     linked = kg.link_mentions(mentions, alias)
+    physical = linked._jdf.queryExecution().toString() \
+        .split("== Physical Plan ==")[-1]
+    # the alias dictionary is broadcast: the mention table never shuffles
+    assert "BroadcastHashJoin" in physical, physical
+    assert "SortMergeJoin" not in physical, physical
     assert linked.count() == mentions.count()
     hits = linked.filter(F.col("canonical_id").isNotNull())
     assert hits.count() > 0
