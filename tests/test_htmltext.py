@@ -80,6 +80,8 @@ def test_boilerplate_entities_pre_semantics(spark):
         # comments stripped; article preferred over body
         (4, b"<body>outside<article><!-- c -->inside</article></body>"),
         (5, None),
+        # Latin-1 byte: malformed UTF-8 becomes U+FFFD, never a failed job
+        (6, b"<p>caf\xe9 au lait</p>"),
     ]
     df = spark.createDataFrame(rows, "id long, html binary")
     got = {r.id: r.t for r in
@@ -89,24 +91,40 @@ def test_boilerplate_entities_pre_semantics(spark):
     assert got[3] == "no tags at all"
     assert got[4] == "inside"
     assert got[5] is None
+    assert got[6] == "caf\ufffd au lait"
 
 
 def test_plan_is_pure_codegen(spark):
-    df = spark.createDataFrame([(b"<p>x</p>",)], "html binary")
+    """No shuffle, no Python, and each regex of the pass evaluated once
+    per page: 6 regexp_replace and 3 regexp_extract (one per container
+    tag). Folding the steps into one nested Column copies the tree per
+    container tag (165 and 52 nodes). Only ``out_col`` is added."""
+    df = spark.createDataFrame([(b"<p>x</p>", 1, "old")],
+                               "html binary, id long, t string")
     out = htmltext.html_to_text(df, out_col="t")
-    plan = out._jdf.queryExecution().toString() \
-        .split("== Physical Plan ==")[-1]
+    qe = out._jdf.queryExecution()
+    plan = qe.toString().split("== Physical Plan ==")[-1]
     assert "Exchange" not in plan
     assert "Python" not in plan and "MapInPandas" not in plan
+    optimized = qe.optimizedPlan().toString()
+    assert optimized.count("regexp_replace(") <= 6
+    assert optimized.count("regexp_extract(") <= 3
+    assert out.columns == ["html", "id", "t"]
+    assert htmltext.html_to_text(df, out_col="u").columns == \
+        ["html", "id", "t", "u"]
 
 
 def test_extraction_from_html_matches_text_column(spark):
     """The flagship path: dropping the text column and re-deriving it
     from html must produce the identical triple set (fixture corpus,
-    golden-anchored by test_extract_triples_matches_reference_golden)."""
+    golden-anchored by test_extract_triples_matches_reference_golden).
+    One more page carries a Latin-1 byte in its boilerplate: it must not
+    fail the html pass, and its url must yield the same triples."""
     from eventrelationextractor_spark.spark import stages
-    pages = spark.createDataFrame(
-        fx.fixture_pages(fx.TEMPORAL_FIXTURES), PAGES_SCHEMA)
+    rows = fx.fixture_pages(fx.TEMPORAL_FIXTURES)
+    rows.append(dict(rows[0], url=rows[0]["url"] + "-latin1",
+                     html=rows[0]["html"].replace(b">home<", b">caf\xe9<")))
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     via_text = {tuple(r) for r in
                 stages.extract_triples(pages, mode="both").collect()}
     via_html = {tuple(r) for r in stages.extract_triples(
@@ -118,7 +136,6 @@ def test_extraction_from_html_matches_text_column(spark):
 
 
 def test_extract_links_resolution_rules(spark):
-    from eventrelationextractor_spark.ops import htmltext
     html = ('<html><body>'
             '<a href="/about" class="x">About</a>'
             '<a href="https://other.example.com/p">Ext</a>'
@@ -140,7 +157,6 @@ def test_extract_links_resolution_rules(spark):
 
 
 def test_extract_links_null_and_linkless_html(spark):
-    from eventrelationextractor_spark.ops import htmltext
     df = spark.createDataFrame(
         [("https://e.org/1", b"<html><body>no links</body></html>"),
          ("https://e.org/2", None)],
@@ -149,10 +165,8 @@ def test_extract_links_null_and_linkless_html(spark):
 
 
 def test_extract_links_is_pure_codegen(spark):
-    from eventrelationextractor_spark.ops import htmltext
     df = spark.createDataFrame([("u", b"<a href=\"/x\">y</a>")],
                                "url string, html binary")
-    plan = df._jdf.queryExecution().toString()
     plan = htmltext.extract_links(df)._jdf.queryExecution().toString() \
         .split("== Physical Plan ==")[-1]
     assert "Exchange" not in plan and "BatchEvalPython" not in plan
@@ -162,7 +176,6 @@ def test_extract_links_is_pure_codegen(spark):
 
 
 def test_extract_metadata_fields_and_nulls(spark):
-    from eventrelationextractor_spark.ops import htmltext
     html = ('<html lang="de"><head><title>My Page</title>'
             '<meta name="description" content="a summary here">'
             '<link rel="canonical" href="https://e.org/canon">'
@@ -182,7 +195,6 @@ def test_extract_metadata_fields_and_nulls(spark):
 
 
 def test_extract_metadata_first_match_wins(spark):
-    from eventrelationextractor_spark.ops import htmltext
     html = b'<title>First</title><title>Second</title>'
     df = spark.createDataFrame([("u", html)], "url string, html binary")
     assert htmltext.extract_metadata(df).collect()[0].title == "First"

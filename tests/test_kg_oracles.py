@@ -1,11 +1,12 @@
 """Value-hash gate of the KG job contract: every ``kg_*`` query of
-``__spark_entry__`` (the 16 pipeline stages) has an ``oracle_sql()`` twin
-and must equal it on DuckDB by row count, sorted column names and value
-hash - once under the default test session and once under a hostile
-session configuration (ANSI on, a shifted session timezone, an odd
-shuffle-partition count), so a query that leans on session defaults
-(TZ-rendered timestamps, non-ANSI division, partition-count-sensitive
-float merge order) fails here.
+``__spark_entry__`` (the 16 pipeline stages), plus ``html_text_extract``
+(the html pass must return each page's text byte-exactly), has an
+``oracle_sql()`` twin and must equal it on DuckDB by row count, sorted
+column names and value hash - once under the default test session and
+once under a hostile session configuration (ANSI on, a shifted session
+timezone, an odd shuffle-partition count), so a query that leans on
+session defaults (TZ-rendered timestamps, non-ANSI division,
+partition-count-sensitive float merge order) fails here.
 
 Runs at sf0.001: the oracles are closed-form in doc_id (or read committed
 per-document fixtures), so the smallest corpus exercises every path.
@@ -29,8 +30,9 @@ def _summary(cols, rows):
     return len(rows), sorted(cols), value_hash(cols, rows)
 
 
-def _kg(registry):
-    return {n: v for n, v in registry.items() if n.startswith("kg_")}
+def _gated(registry):
+    return {n: v for n, v in registry.items()
+            if n.startswith("kg_") or n == "html_text_extract"}
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +46,7 @@ def oracle_results():
             con.execute(f"CREATE VIEW {f[:-len('.parquet')]} AS SELECT * "
                         f"FROM read_parquet('{os.path.join(SF_DIR, f)}')")
     out = {}
-    for name, sql in _kg(entry.oracle_sql()).items():
+    for name, sql in _gated(entry.oracle_sql()).items():
         cur = con.execute(sql)
         out[name] = _summary([d[0] for d in cur.description],
                              cur.fetchall())
@@ -64,7 +66,7 @@ def test_kg_queries_equal_oracles(spark, oracle_results, session):
         spark.conf.set(k, v)
     try:
         got = {}
-        for name, fn in _kg(entry.queries()).items():
+        for name, fn in _gated(entry.queries()).items():
             df = fn(spark, SF_DIR)
             got[name] = _summary(df.columns,
                                  [tuple(r) for r in df.collect()])
@@ -75,7 +77,7 @@ def test_kg_queries_equal_oracles(spark, oracle_results, session):
             else:
                 spark.conf.set(k, old[k])
 
-    assert set(got) == set(oracle_results) and len(got) == 16, sorted(got)
+    assert set(got) == set(oracle_results) and len(got) == 17, sorted(got)
     mismatched = {n: (got[n], oracle_results[n]) for n in got
                   if got[n] != oracle_results[n]}
     assert not mismatched, mismatched
