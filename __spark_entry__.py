@@ -947,13 +947,12 @@ def _q_mixture_apportion(spark, sf_dir):
 def _q_kg_cc_incremental(spark, sf_dir):
     """Incremental connected components (spark/kg.py::cc_incremental):
     canonical-cluster labels refreshed from a delta edge batch by
-    contract-and-solve - the inner CC runs on the CONTRACTED delta
-    graph only, never the base (the graph analogue of ivm_refresh).
-    The oracle computes a full recursive-closure CC over base UNION
-    delta, so the hash gate asserts refresh == recompute. Graph capped
-    at doc_id < 300 to keep the closure oracle quadratic-safe at any
-    SF; the Spark operator itself is the scale-proven pointer-jumping
-    CC underneath."""
+    contract-and-solve - the delta, contracted through the old labels,
+    is solved by one union-find on the driver, never the base (the
+    graph analogue of ivm_refresh). The oracle computes a full
+    recursive-closure CC over base UNION delta, so the hash gate
+    asserts refresh == recompute. Graph capped at doc_id < 300 to keep
+    the closure oracle quadratic-safe at any SF."""
     docs = _docs(spark, sf_dir).select("doc_id")         .filter(F.col("doc_id") < 300)
     n = docs.count()
     linked = docs.filter(F.col("doc_id") % 17 != 0)

@@ -16,15 +16,17 @@ canonicalization into connected components.
   size is bounded by the alias dictionary: links aggregated per partition,
   one union-find on the driver, and a broadcast join of the class labels
   back.
-* ``connected_components``: the general path (``cc_incremental``'s inner
-  solve, ``ops/*``): min-label propagation with pointer jumping over
-  bidirectional edges, seeded with each vertex's closed-neighbourhood
-  minimum and with one ``localCheckpoint`` per round (lineage truncation).
-  Each round shuffles on the vertex id and costs a fixed set of Spark
-  jobs; a graph whose seed is already final (stars around their minimum,
-  pairs) stops after one verifying round, a long chain takes more.
-* ``cc_incremental``: refreshes labels with a batch of new edges by
-  solving only the delta graph contracted through the old labels.
+* ``connected_components``: the general path (``ops/*``): min-label
+  propagation with pointer jumping over bidirectional edges, seeded with
+  each vertex's closed-neighbourhood minimum and with one
+  ``localCheckpoint`` per round (lineage truncation). Each round shuffles
+  on the vertex id and costs a fixed set of Spark jobs; a graph whose seed
+  is already final (stars around their minimum, pairs) stops after one
+  verifying round, a long chain takes more.
+* ``cc_incremental``: refreshes labels with a batch of new edges in a
+  fixed number of Spark jobs: the delta is contracted through the old
+  labels, solved by one union-find on the driver, and the changed labels
+  are broadcast-joined back.
 
 Every labelling function gives a vertex the smallest vertex id (string order
 for string ids) of its component.
@@ -170,6 +172,17 @@ def _union(parent: dict, a, b) -> None:
         parent[max(ra, rb)] = min(ra, rb)
 
 
+def _arrow_frame(spark, columns: dict, schema: str) -> DataFrame:
+    """A driver-side table ({column name: values}, names as in the DDL
+    ``schema``) as a DataFrame of Arrow data. It plans as a
+    LocalTableScan, and an empty one folds away in the optimizer. A list,
+    or a pandas frame once it is empty, would be a Python RDD: one more
+    Python stage per use."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 _LOCAL_SCHEMA = "vertex string, local string, alias string, is_alias boolean"
 
 
@@ -246,20 +259,17 @@ def canonicalize(linked_mentions: DataFrame,
     Alias nodes are the only shared vertices. Their classes are merged on
     the driver, from link rows bounded by the alias dictionary times the
     partition count, and the class labels are broadcast-joined back."""
-    import pandas as pd
-
     local = (_keyed_edges(linked_mentions, triples)
              .repartition("url")
              .select("src", "dst", "is_alias")
              .mapInArrow(_doc_local_components, _LOCAL_SCHEMA)
              .localCheckpoint())
     links = local.filter("is_alias").select("vertex", "local", "alias")
-    # from pandas, so the frame is Arrow data on the JVM side: a list
-    # would be a Python RDD, one more Python stage per use
-    classes = local.sparkSession.createDataFrame(
-        pd.DataFrame(list(_alias_class_labels(links.collect()).items()),
-                     columns=["alias", "component"]),
-        "alias string, component string")
+    labelled = _alias_class_labels(links.collect())
+    classes = _arrow_frame(local.sparkSession,
+                           {"alias": list(labelled),
+                            "component": list(labelled.values())},
+                           "alias string, component string")
     mentions = (local.filter(~F.col("is_alias"))
                 .join(F.broadcast(classes), "alias", "left")
                 .select("vertex",
@@ -279,15 +289,26 @@ def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
     pipeline needs at 100 TB, where the mention graph grows by a crawl
     batch a day and the base has 10^11 edges.
 
-    Contract-and-solve: map each delta endpoint through its old label
-    (unknown vertices keep themselves), run :func:`connected_components`
-    on the CONTRACTED delta graph - whose size is bounded by the delta,
-    never the base - then compose: every old label is rewritten through
-    the contracted solution. Exactness: an old component's label IS its
-    min member, so min over merged label-vertices equals min over the
-    merged membership - the composed labels are bit-identical to a full
-    CC over base UNION delta (the driver oracle asserts exactly that
-    equivalence, via an independent recursive-closure formulation).
+    Contract-and-solve in a fixed number of Spark jobs, whatever the
+    size or diameter of the delta:
+
+    * contract: two left joins map each delta endpoint through its old
+      label; an endpoint with no label is born in the delta and stands
+      for itself. The (s, s_c, d, d_c) rows are collected: the driver
+      holds one row per delta edge, a bound of the same kind as
+      :func:`canonicalize`'s alias merge, never a row of the base.
+    * solve: one union-find pass over the contracted edges; its roots
+      are their set's minimum.
+    * compose: every old label whose root changed is rewritten through a
+      broadcast (old -> new) frame, and the born vertices are added with
+      their roots.
+
+    Exactness: an old component's label IS its min member, so the min
+    over merged label-vertices equals the min over the merged membership
+    - the labels equal a full CC over base UNION delta (the driver oracle
+    asserts exactly that equivalence, via an independent recursive-
+    closure formulation). ``stats`` (optional dict) gets ``rounds`` = 1,
+    the one solve pass.
 
     Insert-only, like every self-maintainable aggregate: deleting an
     edge can split a component, which needs a base re-scan by nature.
@@ -297,24 +318,30 @@ def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
                        F.col("component").alias("s_c"))
     ld = labels.select(F.col("vertex").alias("d"),
                        F.col("component").alias("d_c"))
-    contracted = (e.join(ls, "s", "left").join(ld, "d", "left")
-                  .select(F.coalesce("s_c", F.col("s")).alias("src"),
-                          F.coalesce("d_c", F.col("d")).alias("dst")))
-    sub = connected_components(contracted, stats=stats) \
-        .withColumnRenamed("vertex", "old_component") \
-        .withColumnRenamed("component", "new_component")
-    # every vertex's contracted id: an old vertex's label never exceeds
-    # the vertex itself, so the min over its label row and its own id
-    # (if it is a delta endpoint) is the old label; a vertex born in the
-    # delta has only its own id
-    prior = (labels.select("vertex", "component")
-             .unionByName(e.select(F.col("s").alias("vertex"),
-                                   F.col("s").alias("component")))
-             .unionByName(e.select(F.col("d").alias("vertex"),
-                                   F.col("d").alias("component")))
-             .groupBy("vertex")
-             .agg(F.min("component").alias("component")))
-    return (prior.join(sub, prior.component == sub.old_component, "left")
+    parent: dict = {}
+    born = set()
+    for s, s_c, d, d_c in (e.join(ls, "s", "left").join(ld, "d", "left")
+                           .select("s", "s_c", "d", "d_c").collect()):
+        if s_c is None:
+            born.add(s)
+        if d_c is None:
+            born.add(d)
+        _union(parent, s if s_c is None else s_c, d if d_c is None else d_c)
+    if stats is not None:
+        stats["rounds"] = 1
+    root = {v: _find(parent, v) for v in parent}
+    moved = {v: r for v, r in root.items() if r != v and v not in born}
+    vtype, ctype = (labels.schema[c].dataType.simpleString()
+                    for c in ("vertex", "component"))
+    spark = labels.sparkSession
+    remap = _arrow_frame(spark, {"old": list(moved),
+                                 "new": list(moved.values())},
+                         f"old {ctype}, new {ctype}")
+    born_rows = _arrow_frame(spark, {"vertex": list(born),
+                                     "component": [root[v] for v in born]},
+                             f"vertex {vtype}, component {ctype}")
+    return (labels.join(F.broadcast(remap),
+                        F.col("component") == F.col("old"), "left")
             .select("vertex",
-                    F.coalesce("new_component", "component")
-                    .alias("component")))
+                    F.coalesce("new", "component").alias("component"))
+            .unionByName(born_rows))

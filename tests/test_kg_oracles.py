@@ -10,14 +10,14 @@ partition-count-sensitive float merge order) fails here.
 
 Runs at sf0.001: the oracles are closed-form in doc_id (or read committed
 per-document fixtures), so the smallest corpus exercises every path.
-The value hash is the one ``tools/check_correctness.py`` applies to the
-whole registry."""
+The value hash (``tools/value_hash.py``) is the one
+``tools/check_correctness.py`` applies to the whole registry."""
 
 import os
 
 import pytest
 
-from tools.check_correctness import value_hash
+from tools.value_hash import value_hash
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1263,6 +1263,104 @@ def test_cc_incremental_delta_only_cost(spark):
     assert stats["rounds"] <= 3   # 3-vertex contracted graph
 
 
+def _arrow_df(spark, rows, schema):
+    """Test input as Arrow data (a LocalTableScan), so that any Python RDD
+    in a plan or stage comes from the code under test."""
+    import pyarrow as pa
+
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(
+        pa.table({n: [r[i] for r in rows] for i, n in enumerate(names)}),
+        schema)
+
+
+def _stage_graphs(sc, group):
+    """The RDD operation graph (dot text) of every stage the job group
+    ran."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    return [dot(jsc.statusStore().operationGraphForStage(s))
+            for j in sc.statusTracker().getJobIdsForGroup(group)
+            for s in sc.statusTracker().getJobInfo(j).stageIds]
+
+
+def test_canonicalize_without_alias_links_runs_no_python_rdd(spark):
+    """With no alias links the class-label frame is empty: it must be
+    Arrow data, not a Python RDD stage (an empty pandas frame is one),
+    and the labels still equal connected_components."""
+    sc = spark.sparkContext
+    linked = _arrow_df(spark, [("https://a", "e1", None),
+                               ("https://b", "e2", None)],
+                       "url string, mention_id string, canonical_id string")
+    trips = _arrow_df(spark, [("https://a", "e1", "SIMULTANEOUS", "e2"),
+                              ("https://a", "e2", "IDENTITY", "e3"),
+                              ("https://b", "e2", "SIMULTANEOUS", "e0")],
+                      "url string, subj string, pred string, obj string")
+    group = "canonicalize-no-alias"
+    try:
+        sc.setJobGroup(group, group)
+        labels = kg.canonicalize(linked, trips)
+        got = {r.vertex: r.component for r in labels.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    graphs = _stage_graphs(sc, group)
+    assert graphs and not [g for g in graphs if "PythonRDD" in g]
+    want = {r.vertex: r.component for r in kg.connected_components(
+        kg.canonical_edges(linked, trips)).collect()}
+    assert got == want
+    assert got["https://a#e3"] == "https://a#e1"
+    assert got["https://b#e2"] == "https://b#e0"
+
+
+def test_cc_incremental_job_count_independent_of_delta_size(spark):
+    """The refresh runs a fixed plan: a delta chain of 40 edges launches
+    as many Spark jobs as one of 2, and is labelled exactly. The chain
+    runs through new vertices from component c1 to component b1."""
+    sc = spark.sparkContext
+    base = spark.createDataFrame([("b1", "b2"), ("c1", "c2")],
+                                 "src string, dst string")
+    labels = kg.connected_components(base)
+    jobs = {}
+    try:
+        for length in (2, 40):
+            path = ["c2"] + [f"n{i:02d}" for i in range(length - 1)] + ["b2"]
+            delta = spark.createDataFrame(list(zip(path, path[1:])),
+                                          "src string, dst string")
+            group = f"cc-incremental-chain-{length}"
+            sc.setJobGroup(group, group)
+            got = {r.vertex: r.component
+                   for r in kg.cc_incremental(labels, delta).collect()}
+            jobs[length] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert len(got) == length + 3
+            assert set(got.values()) == {"b1"}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[2] == jobs[40] > 0
+
+
+def test_cc_incremental_plans_no_python_stage(spark):
+    """The refreshed labels plan as Arrow scans and JVM operators only:
+    for a delta that merges two components, for one that merges none
+    (an empty old -> new map, new vertices only) and for an empty delta,
+    which returns the labels unchanged."""
+    labels = _arrow_df(spark, [("a", "a"), ("b", "a"), ("c", "c")],
+                       "vertex string, component string")
+    old = {"a": "a", "b": "a", "c": "c"}
+    for edges, want in (
+            ([("c", "b"), ("d", "c")], {"a": "a", "b": "a", "c": "a",
+                                         "d": "a"}),
+            ([("b", "a"), ("y", "x")], {**old, "x": "x", "y": "x"}),
+            ([], old)):
+        delta = _arrow_df(spark, edges, "src string, dst string")
+        out = kg.cc_incremental(labels, delta)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "Python" not in plan, plan
+        rows = out.collect()
+        assert len(rows) == len(want)
+        assert {r.vertex: r.component for r in rows} == want
+
+
 def test_streaming_cusum_matches_batch(spark, tmp_path):
     """The CUSUM closed form is incremental (two integers of state), so
     the streaming detector must agree with the batch windows EXACTLY -

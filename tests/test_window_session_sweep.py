@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from tools.check_correctness import value_hash
+from tools.value_hash import value_hash
 
 SF_DIR = "/root/testdata/sf0.001"
 

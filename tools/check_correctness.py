@@ -10,33 +10,16 @@ Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01)
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools.value_hash import value_hash  # noqa: E402
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        return repr(round(v, 6))
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    return repr(v)
-
-
-def value_hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x01".join(_norm_cell(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 def main() -> int:
