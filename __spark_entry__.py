@@ -2,8 +2,9 @@
 
 ``entry(spark)`` runs the flagship staged KG-construction job on a mixed
 corpus (reference fixtures + deterministic synthetic web pages) and returns
-the triples DataFrame. ``queries()`` exposes each implemented operator from
-SURVEY.md §2 as (spark, sf_dir) -> DataFrame, and ``oracle_sql()`` gives a
+the triples DataFrame. ``queries()`` exposes the pipeline stages (``kg_*``,
+``html_text_extract``), the TPC-H suite and the operators that a test or tool
+runs, each as (spark, sf_dir) -> DataFrame, and ``oracle_sql()`` gives a
 DuckDB-runnable ANSI-SQL twin for the value-hash correctness gate.
 
 The synthetic corpus (eventrelationextractor_spark.datagen) is a pure
@@ -26,11 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from eventrelationextractor_spark import fixtures as fx  # noqa: E402
 from eventrelationextractor_spark.ops import bm25, cluster, packing, pq  # noqa: E402
 from eventrelationextractor_spark.ops import dedup, events, multimodal  # noqa: E402
-from eventrelationextractor_spark.ops import bloom, bpe, graph, iforest, linededup  # noqa: E402
-from eventrelationextractor_spark.ops import hmm, htmltext, mixing, pii  # noqa: E402
+from eventrelationextractor_spark.ops import bpe, graph, iforest  # noqa: E402
+from eventrelationextractor_spark.ops import htmltext  # noqa: E402
 from eventrelationextractor_spark.ops import maintenance, mining, quality  # noqa: E402
 from eventrelationextractor_spark.ops import linkage  # noqa: E402
-from eventrelationextractor_spark.ops import simsearch, sketches, spell, textstats, urls  # noqa: E402
+from eventrelationextractor_spark.ops import simsearch, sketches, spell, textstats  # noqa: E402
 from eventrelationextractor_spark.spark import kg, stages  # noqa: E402
 
 # broadcast-able entity-linking dictionary: synthetic-corpus event lemmas
@@ -176,79 +177,11 @@ def _augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(dups).unionByName(exact)
 
 
-def _q_doc_fingerprints(spark, sf_dir):
-    return textstats.fingerprint(_docs(spark, sf_dir)) \
-        .select("doc_id", "fingerprint")
-
-
-def _q_dedup_exact(spark, sf_dir):
-    return dedup.exact_duplicates(_augmented_docs(spark, sf_dir))
-
-
 def _q_dedup_minhash(spark, sf_dir):
     return dedup.jaccard_pairs(_augmented_docs(spark, sf_dir), threshold=0.5)
 
 
-def _q_dedup_simhash(spark, sf_dir):
-    return dedup.simhash(_docs(spark, sf_dir))
-
-
-def _q_lang_id(spark, sf_dir):
-    return textstats.lang_id(_docs(spark, sf_dir)) \
-        .select("doc_id", "predicted_lang")
-
-
-def _q_quality(spark, sf_dir):
-    return textstats.quality_score(_docs(spark, sf_dir)) \
-        .select("doc_id", "n_chars", "n_tokens", "n_punct", "n_stopwords",
-                "quality")
-
-
-def _q_token_counts(spark, sf_dir):
-    return textstats.token_count(_docs(spark, sf_dir)) \
-        .select("doc_id", "ws_tokens", "subword_tokens", "bpeish_tokens")
-
-
-def _q_ann_topk(spark, sf_dir):
-    return simsearch.brute_force_topk(_emb(spark, sf_dir))
-
-
-def _q_ann_lsh_topk(spark, sf_dir):
-    return simsearch.hyperplane_lsh_topk(_emb(spark, sf_dir))
-
-
-def _q_ann_ivf_topk(spark, sf_dir):
-    return simsearch.ivf_topk(_emb(spark, sf_dir))
-
-
-def _q_ann_ivf_topk_c256(spark, sf_dir):
-    """IVF at a realistic cell count (256 > the literal-codegen
-    threshold): exercises the broadcast-numpy mapInPandas assignment
-    branch (constant plan size at any n_cells) against the same SQL
-    oracle scheme. Zero pre-probe shuffle in this branch too
-    (tests/test_scale_shapes.py::test_ivf_assignment_is_map_side)."""
-    return simsearch.ivf_topk(_emb(spark, sf_dir), n_cells=256)
-
-
 BM25_QUERY_TERMS = ["hash", "join", "spark", "window", "stream"]
-
-
-def _q_bm25_search(spark, sf_dir):
-    """Lexical top-k over the documents table (ops/bm25.py): broadcast
-    query-term semi-join before any shuffle, scalar corpus stats as a
-    broadcast single-row dimension."""
-    return bm25.bm25_topk(_docs(spark, sf_dir), BM25_QUERY_TERMS, k=25)
-
-
-def _q_rm3_expansion(spark, sf_dir):
-    """RM3 pseudo-relevance feedback (ops/bm25.py::rm3_expand): BM25
-    top-10 as pseudo-relevant, relevance model interpolated 0.6/0.4
-    with the uniform query model, top-15 expansion terms. The feedback
-    stage touches only the 10 survivors' tokens (broadcast top-k join),
-    so expansion cost is corpus-size-independent. Oracle replays the
-    whole chain as CTEs over the same 6dp-rounded scores."""
-    return bm25.rm3_expand(_docs(spark, sf_dir), BM25_QUERY_TERMS,
-                           fb_docs=10, fb_terms=15, orig_weight=0.6)
 
 
 def _q_optimal_segmentation(spark, sf_dir):
@@ -264,106 +197,11 @@ def _q_optimal_segmentation(spark, sf_dir):
     return bpe.optimal_segment(subset, vocab, max_len=4)
 
 
-def _q_rm3_search(spark, sf_dir):
-    """The full RM3 retrieval loop: expansion
-    (ops/bm25.py::rm3_expand) feeding the weighted second pass
-    (ops/bm25.py::bm25_topk_weighted). Both passes share the broadcast-
-    query-dim shape; the 15 expansion weights are 6dp-rounded before
-    pass 2 on BOTH engines, so the chained oracle stays exact."""
-    docs = _docs(spark, sf_dir)
-    expq = bm25.rm3_expand(docs, BM25_QUERY_TERMS, fb_docs=10,
-                           fb_terms=15, orig_weight=0.6)         .select("term", "weight")
-    return bm25.bm25_topk_weighted(docs, expq, k=25)
-
-
-def _q_hybrid_search_rrf(spark, sf_dir):
-    """Hybrid retrieval (ops/bm25.py::rrf_fuse): reciprocal-rank fusion
-    of the lexical BM25 top-50 and the dense cosine top-50 for one
-    query (document 0's embedding), top-25 fused. RRF contributions
-    are exact integers (1e9 div (60+rank)) so the fused ordering is
-    merge-order-proof; the oracle composes the standalone BM25 and ANN
-    oracle fragments and replays the integer fusion."""
-    sparse = bm25.bm25_topk(_docs(spark, sf_dir), BM25_QUERY_TERMS, k=50)
-    dense = (simsearch.brute_force_topk(_emb(spark, sf_dir),
-                                        n_queries=1, k=50)
-             .select(F.col("neighbor_id").alias("doc_id"), "rank"))
-    return bm25.rrf_fuse([sparse.select("doc_id", "rank"), dense],
-                         k_rrf=60, topk=25)
-
-
-def _q_contrastive_mining(spark, sf_dir):
-    """Contrastive training-pair mining (ops/mining.py): per anchor
-    (doc_id < 20) the embedding top-1 positive and the hardest lexical
-    negative (max shared 3-shingles among candidates with anchor
-    cosine < 0.5). Oracle composes the ANN cosine fragment with the
-    shingle CTE fragment and replays both argmax windows."""
-    return mining.contrastive_pairs(
-        _docs(spark, sf_dir), _emb(spark, sf_dir),
-        n_anchors=20, shingle_k=3, sem_threshold=0.5)
-
-
-def _q_mmr_diversify(spark, sf_dir):
-    """Diversity-aware selection (ops/simsearch.py::mmr_rerank):
-    greedy maximal-marginal-relevance over the dense top-50 for one
-    query - the step after retrieval that stops near-duplicate hits
-    crowding the budget. rel = the 6dp-rounded retrieval cosine;
-    pairwise candidate cosines 6dp-rounded; objective = the identical
-    IEEE expression on those rounded doubles both engines (the oracle
-    pins lam AND 1-lam as DOUBLE arithmetic - DuckDB would otherwise
-    evaluate 1-0.7 in exact DECIMAL, which is NOT the IEEE
-    0.30000000000000004 the Python side uses). Oracle unrolls all ten
-    greedy steps as chained CTEs (the GD-iterations / Lloyd-replay
-    pattern)."""
-    emb = _emb(spark, sf_dir)
-    top = simsearch.brute_force_topk(emb, n_queries=1, k=50)
-    vecs = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"))
-    cand = (top.select(F.col("neighbor_id").alias("doc_id"),
-                       F.col("cosine").alias("rel"))
-            .join(vecs, "doc_id"))
-    return simsearch.mmr_rerank(cand, k=10, lam=0.7)
-
-
-def _q_corpus_curation(spark, sf_dir):
-    """END-TO-END curation chain - the actual product of a training-data
-    pipeline, showing the operators COMPOSE: augmented corpus (known
-    exact dups) -> quality_score -> repetition_stats (per-row codegen,
-    carried through with keep=) -> exact-dedup keep flag (window min
-    over the fingerprint: ONE shuffle, no groupBy+join round trip) ->
-    threshold filter -> assign_split. Everything before the dedup
-    window is narrow; the window is the chain's only wide stage."""
-    from pyspark.sql import Window
-    d = _augmented_docs(spark, sf_dir)
-    q = textstats.quality_score(d)               # adds cols, keeps text
-    qr = textstats.repetition_stats(q, keep=("text", "n_tokens",
-                                             "quality"))
-    keyed = qr.withColumn(
-        "fp", F.md5(dedup.normalized_text(F.col("text"))))
-    w = Window.partitionBy("fp")
-    kept = (keyed
-            .withColumn("is_kept",
-                        F.col("doc_id") == F.min("doc_id").over(w))
-            .filter(F.col("is_kept")
-                    & (F.col("quality") >= 0.25)
-                    & (F.col("dup_word_frac") <= 0.65)))
-    out = textstats.assign_split(
-        kept, {"train": 0.8, "val": 0.1, "test": 0.1})
-    return out.select("doc_id", "split", "quality", "dup_word_frac",
-                      "n_tokens")
-
-
 def _q_sequence_packing(spark, sf_dir):
     """GPT-style concatenate-and-chop layout (ops/packing.py): per-group
     window cumsum over token counts only - parallel across groups,
     append-stable, no global ORDER BY."""
     return packing.pack_sequences(_docs(spark, sf_dir))
-
-
-def _q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary head (ops/bm25.py::top_terms): partial-agg term
-    counts + distributed TakeOrdered top-k."""
-    return bm25.top_terms(_docs(spark, sf_dir), k=50)
 
 
 def _q_embedding_kmeans(spark, sf_dir):
@@ -373,55 +211,6 @@ def _q_embedding_kmeans(spark, sf_dir):
     deterministic iterations in SQL."""
     _, assigned = cluster.kmeans_fit(_emb(spark, sf_dir), k=8, n_iter=2)
     return assigned
-
-
-def _aug_emb(spark, sf_dir):
-    """embeddings plus near-duplicate copies (id + 1000000, first component
-    shifted by +0.05; vectors are unit-norm so this keeps cosine ~0.999) -
-    a known positive set for the embedding near-dup detector, mirroring
-    _augmented_docs. Copies whose shift flips an LSH plane are genuine
-    recall misses (the documented LSH trade-off), identically in the SQL
-    oracle."""
-    e = _emb(spark, sf_dir)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pert = F.concat(F.array(F.element_at(v, 1) + F.lit(0.05)),
-                    F.slice(v, 2, 63))
-    dup = e.select((F.col("vec_id") + 1000000).alias("vec_id"),
-                   pert.alias("embedding"))
-    return e.select("vec_id", v.alias("embedding")).unionByName(dup)
-
-
-def _q_dedup_embedding(spark, sf_dir):
-    return dedup.embedding_neardup(_aug_emb(spark, sf_dir), threshold=0.99)
-
-
-def _q_events_windowed(spark, sf_dir):
-    df = events.windowed_counts(_events(spark, sf_dir))
-    return df.withColumn(
-        "window_start", F.date_format("window_start", "yyyy-MM-dd HH:mm:ss"))
-
-
-def _q_hll_user_windows(spark, sf_dir):
-    """Per-10-minute-window distinct-user estimates - the batch twin of
-    ops/sketches.py::streaming_windowed_hll (whose register stream +
-    hll_estimate_from_registers is equivalence-tested against exactly
-    this shape). md5-derived registers -> the oracle reproduces
-    estimate and checksum bit-for-bit."""
-    from eventrelationextractor_spark.ops import sketches
-    ev = _events(spark, sf_dir)
-    win = F.window(F.col("ts"), "10 minutes")
-    d = ev.withColumn(
-        "window_start",
-        F.date_format(win.start.cast("timestamp"),
-                      "yyyy-MM-dd HH:mm:ss"))
-    return sketches.hll_estimate(d, "user_id", ["window_start"])
-
-
-def _q_events_sessions(spark, sf_dir):
-    df = events.sessionize(_events(spark, sf_dir))
-    return df.withColumn(
-        "session_start",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
 
 
 def _linked_mentions(spark, sf_dir):
@@ -468,52 +257,6 @@ def _q_consistent_triples(spark, sf_dir):
             .select("doc_id", "subj", "pred", "obj"))
 
 
-def _multilingual_docs(spark, sf_dir):
-    """Deterministic multilingual slice over the documents table: doc d
-    gets language TRIGRAM_LANGS[d % 12], text = that language's seed
-    sentence (d//12)%2 with its words rotated by (d//24)%n_words - a
-    pure function of doc_id, so the oracle is a closed-form CASE. Built
-    declaratively: the ~400 distinct variants form a broadcast dimension
-    joined on the three key columns (no Python in the per-row path)."""
-    variants = []
-    langs = textstats.TRIGRAM_LANGS
-    for li, lang in enumerate(langs):
-        for si, sent in enumerate(textstats.LANG_SEEDS[lang]):
-            words = sent.split()
-            for rot in range(len(words)):
-                variants.append((li, si, rot,
-                                 " ".join(words[rot:] + words[:rot])))
-    vdf = spark.createDataFrame(
-        variants, "li int, si int, rot int, text string")
-    d = _docs(spark, sf_dir).select("doc_id")
-    keyed = d.select(
-        "doc_id",
-        (F.col("doc_id") % 12).cast("int").alias("li"),
-        ((F.col("doc_id") / 12).cast("long") % 2).cast("int").alias("si"))
-    # rot depends on the sentence's word count -> resolve in two steps:
-    # join the per-(li,si) word counts (24 rows, broadcast) first
-    wc = spark.createDataFrame(
-        [(li, si, len(textstats.LANG_SEEDS[langs[li]][si].split()))
-         for li in range(len(langs)) for si in range(2)],
-        "li int, si int, n_words int")
-    keyed = keyed.join(F.broadcast(wc), ["li", "si"]).withColumn(
-        "rot", ((F.col("doc_id") / 24).cast("long")
-                % F.col("n_words")).cast("int"))
-    return keyed.join(F.broadcast(vdf), ["li", "si", "rot"]) \
-        .select("doc_id", "text")
-
-
-def _q_dedup_simhash_pairs(spark, sf_dir):
-    return dedup.simhash_neardup(_augmented_docs(spark, sf_dir))
-
-
-def _q_dedup_keep(spark, sf_dir):
-    """Batch twin of the streaming ingest dedup (streaming_exact_dedup,
-    equivalence-tested in tests/test_spark_stages.py): the kept document
-    per fingerprint group."""
-    return dedup.exact_dedup_keep(_augmented_docs(spark, sf_dir))
-
-
 def _q_dedup_resolution(spark, sf_dir):
     """Fuzzy-dedup end to end over the augmented corpus (known near-dup
     + exact-dup structure): pairs -> transitive clusters -> keep
@@ -523,11 +266,6 @@ def _q_dedup_resolution(spark, sf_dir):
     iterative pointer jumping)."""
     return dedup.dedup_resolution(_augmented_docs(spark, sf_dir),
                                   threshold=0.5)
-
-
-def _q_lang_id_trigram(spark, sf_dir):
-    return textstats.lang_id_trigram(_multilingual_docs(spark, sf_dir)) \
-        .select("doc_id", "predicted_lang")
 
 
 def _q_ee_probabilities(spark, sf_dir):
@@ -570,111 +308,6 @@ def _q_eval_metrics(spark, sf_dir):
     return evaluate.evaluate_pairs(gold, pred)
 
 
-def _web_urls(spark, sf_dir):
-    """Deterministic multi-domain url slice over documents: doc d ->
-    host HOSTS[d % 5], url https://host/a/b../p<d> with path depth
-    1 + d % 3 - a pure function of doc_id, mirrored in the SQL oracle."""
-    hosts = F.array(*[F.lit(h) for h in (
-        "news.example.com", "blog.example.org", "www.sample.net",
-        "docs.mirror.example.com", "shop.example.co")])
-    host = F.element_at(hosts, (F.col("doc_id") % 5 + 1).cast("int"))
-    depth = (F.col("doc_id") % 3).cast("int")
-    # NB sequence(1, 0) is DESCENDING in Spark - guard the zero case
-    mid = F.expr("IF(doc_id % 3 = 0, '', concat_ws('', "
-                 "transform(sequence(1, doc_id % 3), "
-                 "i -> concat('d', i, '/'))))")
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(F.lit("https://"), host, F.lit("/"), mid,
-                 F.lit("p"), F.col("doc_id")).alias("url"),
-        "text")
-
-
-def _q_split_assignment(spark, sf_dir):
-    """Deterministic 80/10/10 train/val/test assignment over documents
-    (textstats.assign_split); the oracle replays the md5 fate ranges."""
-    out = textstats.assign_split(
-        _docs(spark, sf_dir), {"train": 0.8, "val": 0.1, "test": 0.1})
-    return out.select("doc_id", "split")
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Data-mixing over the multilingual slice: per-language retention
-    rates, deterministic md5 fate per doc."""
-    docs = _multilingual_docs(spark, sf_dir)
-    labeled = docs.join(
-        textstats.lang_id_trigram(docs).select("doc_id", "predicted_lang"),
-        "doc_id")
-    rates = {"en": 1.0, "de": 0.5, "fr": 0.25, "ja": 0.1}
-    samp = textstats.stratified_sample(labeled, rates, "predicted_lang")
-    return samp.select("doc_id", F.col("predicted_lang").alias("lang"))
-
-
-def _q_spoof_hosts(spark, sf_dir):
-    """IDN homograph detection (ops/urls.py::spoof_clusters): the
-    doc_id % 7 slice re-registers its host with Cyrillic
-    \u0435/\u043e lookalikes; confusable skeletons collide the
-    variants back onto the Latin host (TR39-style, translate()-exact
-    on both engines). Staged chars use explicit escapes - the nfc
-    lesson: visually-identical literals get silently normalized by
-    edit tooling."""
-    d = urls.parse_urls(_web_urls(spark, sf_dir)).select("doc_id", "host")
-    staged = d.select(
-        F.when(F.expr("doc_id % 7 = 0"),
-               F.translate("host", "eo", "\u0435\u043e"))
-        .otherwise(F.col("host")).alias("host"))
-    return urls.spoof_clusters(staged)
-
-
-def _q_url_parse(spark, sf_dir):
-    return urls.parse_urls(_web_urls(spark, sf_dir)) \
-        .select("doc_id", "host", "domain", "tld", "path_depth")
-
-
-def _q_domain_stats(spark, sf_dir):
-    return urls.domain_stats(_web_urls(spark, sf_dir))
-
-
-def _q_frontier_schedule(spark, sf_dir):
-    """Crawl-frontier politeness scheduling
-    (ops/urls.py::frontier_schedule): per-host fetch slots 5s apart,
-    priority DESC then url. The per-host window IS the semantic -
-    politeness serializes within a host, hosts proceed in parallel."""
-    w = _web_urls(spark, sf_dir).select(
-        "url", (F.col("doc_id") % 7).alias("prio"))
-    return urls.frontier_schedule(w, priority_col="prio", delay_sec=5)
-
-
-def _q_robots_gate(spark, sf_dir):
-    """Robots-exclusion gate (ops/urls.py::robots_filter) over the
-    deterministic multi-host url slice: four hosts carry synthetic
-    robots.txt files (path-prefix blocks, an empty Disallow, a
-    block-everything), one host has no robots row (allowed). The rule
-    table is host-cardinality -> broadcast dimension join; the
-    frontier side never explodes."""
-    frontier = _web_urls(spark, sf_dir).select("url")
-    robots = spark.createDataFrame(
-        [("news.example.com",
-          "User-agent: *\nDisallow: /d1/\nDisallow: /admin\n"),
-         ("blog.example.org", "User-agent: *\nDisallow:\n"),
-         ("www.sample.net", "User-agent: *\nDisallow: /p\n"),
-         ("shop.example.co", "User-agent: *\nDisallow: /\n")],
-        "host string, robots_txt string")
-    return urls.robots_filter(frontier, robots)
-
-
-def _q_mixing_plan(spark, sf_dir):
-    """Token-budget mixing plan (ops/mixing.py::mixing_plan): per-source
-    tempered weights and epoch repeat factors for a 1M-token budget over
-    the 4-chars-per-token estimate. The whole computation is
-    stratum-table-sized after one partial-agged groupBy."""
-    d = _docs(spark, sf_dir).select(
-        "source",
-        F.ceil(F.length("text") / 4.0).cast("long").alias("toks"))
-    return mixing.mixing_plan(d, "source", "toks",
-                              target_tokens=1_000_000, alpha=0.5)
-
-
 def _q_awareness(spark, sf_dir):
     """TempEval-3 temporal-awareness scores per document (the reference's
     own published metric; core.awareness is golden-anchored against the
@@ -705,80 +338,6 @@ def _q_awareness(spark, sf_dir):
                     "sys_total", "gold_total"))
 
 
-def _q_lm_quality(spark, sf_dir):
-    """Self-scored unigram-LM perplexity over documents (CCNet-tier
-    quality signal); oracle recomputes counts/ln/avg independently."""
-    return textstats.unigram_logprob(_docs(spark, sf_dir))
-
-
-def _q_lm_bigram(spark, sf_dir):
-    """Self-scored interpolated Kneser-Ney bigram perplexity (the
-    KenLM/CCNet-tier context-sensitive quality filter); oracle replays
-    the discounted-interpolation formula over independently recomputed
-    bigram/context/continuation counts."""
-    return textstats.bigram_logprob(_docs(spark, sf_dir))
-
-
-def _q_bloom_prefilter(spark, sf_dir):
-    """Cross-snapshot dedup prefilter: a bloom bitmap built over the
-    content fingerprints of the 'previous snapshot' (doc_id % 3 == 0)
-    tags every probe doc maybe_member map-side - zero probe-side
-    shuffle. The oracle replays the md5 bit draws, so membership
-    (including any false positive) matches EXACTLY."""
-    docs = _docs(spark, sf_dir).withColumn(
-        "fp", F.md5(dedup.normalized_text(F.col("text"))))
-    ref = docs.filter(F.col("doc_id") % 3 == 0).select("fp")
-    return (bloom.bloom_prefilter(docs, ref, key_col="fp",
-                                  m_bits=1 << 16, k=4)
-            .select("doc_id", "maybe_member"))
-
-
-def _q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition quality signals over documents (the
-    standard webtext filter family); pure per-row codegen, no shuffle."""
-    return textstats.repetition_stats(_docs(spark, sf_dir))
-
-
-def _q_pii_redaction(spark, sf_dir):
-    """PII regex tier: deterministic synthetic PII (email always, IPv4
-    for even docs, phone for doc_id % 3 == 0 - a pure function of
-    doc_id, mirrored in the oracle) appended to each document, then
-    counted and redacted; output = counts + sha256 of the redacted text
-    so any missed or over-eager redaction breaks the value hash."""
-    did = F.col("doc_id")
-    extra = F.concat(
-        F.lit(" contact user"), did.cast("string"), F.lit("@example.com"),
-        F.when(did % 2 == 0,
-               F.concat(F.lit(" from 10.0."), (did % 256).cast("string"),
-                        F.lit(".7"))).otherwise(F.lit("")),
-        F.when(did % 3 == 0, F.lit(" call 555-123-4567"))
-        .otherwise(F.lit("")))
-    withpii = _docs(spark, sf_dir).select(
-        "doc_id", F.concat(F.col("text"), extra).alias("text"))
-    red = pii.redact_pii(withpii)
-    return red.select("doc_id", "n_emails", "n_ips", "n_phones",
-                      F.sha2(F.col("redacted"), 256).alias("sha"))
-
-
-def _q_decontamination(spark, sf_dir):
-    """Benchmark decontamination gate: the 'benchmark set' is a
-    deterministic slice of the corpus itself (every 50th document's
-    first 20 normalized words - a pure function, mirrored in the SQL
-    oracle), so every doc_id % 50 == 0 document MUST flag as
-    contaminated, plus whatever chance 5-gram collisions the word-salad
-    corpus produces - the oracle computes the identical set either
-    way."""
-    from eventrelationextractor_spark.ops import decontam
-    from eventrelationextractor_spark.ops.dedup import normalized_text
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.concat_ws(" ", F.slice(
-            F.split(normalized_text(F.col("text")), " "), 1, 20))
-        .alias("text"))
-    return decontam.ngram_contamination(docs, bench, n=5)
-
-
 def _q_html_text_extract(spark, sf_dir):
     """html->text extraction gate: wrap each document's text in the
     deterministic Common-Crawl-style wrapper (wrap_html_expr, the codegen
@@ -799,19 +358,6 @@ def _q_html_text_extract(spark, sf_dir):
         "doc_id",
         F.length("etext").cast("long").alias("n_chars"),
         F.sha2(F.col("etext"), 256).alias("sha"))
-
-
-def _q_media_features(spark, sf_dir):
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("media_id"), F.lit("image").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.lit(None).cast("long").alias("width"),
-        F.lit(None).cast("long").alias("height"))
-    feats = multimodal.extract_features(media, dim=8, fake=True)
-    return feats.select(
-        "media_id", "n_bytes",
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("f0"),
-        F.round(F.element_at("feature", 2).cast("double"), 6).alias("f1"))
 
 
 def _media_pngs(doc_ids_df: DataFrame) -> DataFrame:
@@ -887,24 +433,6 @@ def _q_audio_frame_stats(spark, sf_dir):
     return multimodal.audio_frame_stats(_media_wavs(ids))
 
 
-def _q_media_decode(spark, sf_dir):
-    """REAL image decode under the value-hash gate: PNG payloads are
-    genuinely decoded (ops/codecs.py filter inverses) and featurized;
-    the oracle recomputes every feature from the closed-form pixel
-    pattern - any decode bug (filter inverse, channel order, dims)
-    breaks the hash. Both sides cast through float32 (REAL) so the
-    comparison is exact, not tolerance-based."""
-    media = _media_pngs(_docs(spark, sf_dir).select("doc_id"))
-    feats = multimodal.extract_features(media, dim=8, fake=False)
-    cols = [F.round(F.element_at("feature", i + 1).cast("double"), 6)
-            .alias(f"f{i}") for i in range(8)]
-    return feats.select("media_id", *cols)
-
-
-# ---------------------------------------------------------------- session-3
-# link graph, line-level dedup, data mixing, BPE
-
-
 def _link_edges(spark, sf_dir):
     """Deterministic synthetic hyperlink graph over the document ids:
     page d links to (d*7+1) % N and (d*13+3) % N, except every 17th page
@@ -921,27 +449,6 @@ def _link_edges(spark, sf_dir):
                            ((F.col("doc_id") * 13 + 3) % n).alias("dst"))))
     nodes = docs.select(F.col("doc_id").alias("node"))
     return e, nodes
-
-
-def _q_link_modularity(spark, sf_dir):
-    """Newman modularity per community (ops/graph.py::modularity) of a
-    deterministic id-block partition over the synthetic link graph.
-    The per-community contribution is the exact integer numerator
-    4*m*e_c - d_c^2 over 4m^2 - no float ever enters an aggregation
-    (integer-cents discipline for a graph metric)."""
-    e, nodes = _link_edges(spark, sf_dir)
-    labels = nodes.select("node", F.expr("node div 64").alias("label"))
-    return graph.modularity(e, labels)
-
-
-def _q_mixture_apportion(spark, sf_dir):
-    """Largest-remainder apportionment
-    (ops/mixing.py::apportion_counts): exactly 1000 sample slots split
-    across sources proportionally to their total chars - float shares
-    times a budget never sum to the budget; Hamilton's method does,
-    in pure integer arithmetic (div/mod + remainder rank)."""
-    return mixing.apportion_counts(_docs(spark, sf_dir), "source",
-                                   "n_chars", total=1000)
 
 
 def _q_kg_cc_incremental(spark, sf_dir):
@@ -967,42 +474,10 @@ def _q_kg_cc_incremental(spark, sf_dir):
     return kg.cc_incremental(labels, delta)
 
 
-def _q_link_pagerank(spark, sf_dir):
-    """PageRank over the synthetic link graph (ops/graph.py): 5 power
-    iterations, uniform teleport + dangling redistribution; each
-    iteration is exactly two shuffles (ranks x edges on src, groupBy
-    dst) with one localCheckpoint. The oracle unrolls the identical
-    iterations as chained CTEs; float drift between engines is addition
-    order only (~1e-15), far under the gate's 1e-6 rounding."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.pagerank(e, n_iter=5, damping=0.85, nodes=nodes)
-
-
-def _q_link_triangles(spark, sf_dir):
-    """Per-node triangle counts (ops/graph.py::triangle_counts,
-    degree-ordered node-iterator: every edge oriented low-(deg,node) ->
-    high, so wedge fan-out is sqrt(m)-bounded even at hub nodes). Graph
-    = the pagerank noise edges plus an injected 3-clique per 10th doc
-    so triangles provably exist. The oracle brute-forces the same
-    simple undirected graph with a<b<c self-joins - orientation only
-    changes the WORK shape, never the counts."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.count()
-    e, nodes = _link_edges(spark, sf_dir)
-    d = F.col("doc_id")
-    cl = docs.filter(d % 10 == 0)
-    clique = (cl.select(d.alias("src"), ((d + 1) % n).alias("dst"))
-              .unionByName(cl.select(((d + 1) % n).alias("src"),
-                                     ((d + 2) % n).alias("dst")))
-              .unionByName(cl.select(d.alias("src"),
-                                     ((d + 2) % n).alias("dst"))))
-    return graph.triangle_counts(e.unionByName(clique), nodes=nodes)
-
-
 def _q_link_clustering(spark, sf_dir):
     """Local clustering coefficients in exact integer ppm (ops/
-    graph.py::clustering_coefficients) over the same clique-augmented
-    link graph as link_triangles — the injected 3-cliques surface as
+    graph.py::clustering_coefficients) over the clique-augmented
+    link graph — the injected 3-cliques surface as
     high-cc nodes. Integer div keeps the gate exact; the oracle
     extends the brute-force triangle count with a degree join and the
     identical ppm formula."""
@@ -1075,559 +550,6 @@ def _q_link_assortativity(spark, sf_dir):
     return graph.degree_assortativity(e.unionByName(clique))
 
 
-def _q_link_hyperball(spark, sf_dir):
-    """HyperBall 3-hop ball-size estimation (ops/graph.py::hyperball)
-    over the link graph: per-node 16-register HLL, registers init from
-    md5(node), max-merged along edges for 3 rounds (register max =
-    sketch union, so the sketch holds exactly the <=3-hop ball). All
-    state exact integers; the estimate is the only float (4dp), and
-    register_checksum pins full state under the hash gate. The oracle
-    replays identical rounds as chained CTEs."""
-    e, _nodes = _link_edges(spark, sf_dir)
-    return graph.hyperball(e, rounds=3, m_b=4)
-
-
-def _q_zorder_layout(spark, sf_dir):
-    """Z-order layout envelope telemetry (ops/layout.py): morton-key
-    file assignment over two doc_id-derived dimensions and the
-    per-file min/max envelopes parquet-footer/Iceberg-manifest pruning
-    consults. Exact-percentile boundary branch (oracled); approx=True
-    is the corpus-scale branch. The key itself is pure codegen bit
-    arithmetic."""
-    from eventrelationextractor_spark.ops import layout
-    pts = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 64).alias("x"),
-        ((F.col("doc_id") * 7 + 3) % 64).alias("y"))
-    return layout.zorder_layout_stats(pts, "x", "y", n_files=8, bits=6)
-
-
-def _q_link_communities(spark, sf_dir):
-    """Label-propagation communities (ops/graph.py::label_propagation,
-    Raghavan et al. 2007, deterministic synchronous variant with
-    self-vote and min-label ties) over the link graph. 3 fixed
-    iterations; votes are aggregations (max-struct argmax), never a
-    per-node window. The oracle unrolls the identical iterations as
-    chained CTEs with QUALIFY argmax."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.label_propagation(e, n_iter=3, nodes=nodes)
-
-
-def _q_anchor_rollup(spark, sf_dir):
-    """Inlink anchor-text aggregation (ops/graph.py::anchor_rollup):
-    per target page the inlink count, distinct sources, and top-3
-    anchor terms. Anchors are a pure function of (src, dst) - 'topicK
-    pageD' plus a src-dependent verb - mirrored in the oracle's
-    unnest + QUALIFY twin."""
-    e, _ = _link_edges(spark, sf_dir)
-    s, d = F.col("src"), F.col("dst")
-    links = e.select(
-        "src", "dst",
-        F.concat(F.lit("topic"), (d % 7).cast("string"),
-                 F.lit(" page"), d.cast("string"), F.lit(" "),
-                 F.element_at(F.array(F.lit("click"), F.lit("read"),
-                                      F.lit("link")),
-                              (s % 3 + 1).cast("int"))).alias("anchor"))
-    return graph.anchor_rollup(links, k=3)
-
-
-def _q_ccnet_buckets(spark, sf_dir):
-    """CCNet head/middle/tail quality tiers per language
-    (ops/textstats.py::ccnet_buckets over unigram_logprob perplexity):
-    the exact ntile branch is oracled; the percentile_approx branch is
-    the 100-TB path (same schema, threshold semantics)."""
-    d = _docs(spark, sf_dir)
-    ppl = textstats.unigram_logprob(d).filter(F.col("n_tokens") > 0) \
-        .select("doc_id", "ppl")
-    scored = d.select("doc_id", "lang").join(ppl, "doc_id")
-    return textstats.ccnet_buckets(scored)
-
-
-def _q_nfc_normalize(spark, sf_dir):
-    """Unicode NFC normalization + mojibake telemetry
-    (ops/textstats.py::nfc_normalize, Arrow mapInPandas - Spark SQL has
-    no NFC expression). The synthetic corpus is ASCII, so the query
-    appends a deterministic suffix keyed on doc_id % 3 to exercise all
-    three paths: decomposed e+U+0301 (normalizes, shrinks), precomposed
-    U+00E9 (already NFC, unchanged), and pure ASCII (fast path). The
-    oracle is DuckDB's built-in nfc_normalize over the same construction
-    - both engines count codepoints, so the twin is exact."""
-    d = _docs(spark, sf_dir)
-    suffix = (F.when(F.col("doc_id") % 3 == 0, F.lit(" cafe\u0301"))
-              .when(F.col("doc_id") % 3 == 1, F.lit(" caf\u00e9"))
-              .otherwise(F.lit("")))
-    staged = d.select("doc_id",
-                      F.concat(F.col("text"), suffix).alias("text"))
-    return textstats.nfc_normalize(staged)
-
-
-def _line_docs(spark, sf_dir):
-    """Deterministic 5-line page bodies over doc ids: a per-host header
-    (boilerplate shared by N/5 docs), a global cookie banner, two unique
-    content lines, and a snippet shared by exactly two docs (the
-    boilerplate-threshold boundary). Mirrored in the SQL oracles."""
-    d = F.col("doc_id")
-    lines = [
-        F.concat(F.lit("header navigation menu site"),
-                 (d % 5).cast("string")),
-        F.lit("cookie consent notice applies to this site"),
-        F.concat(F.lit("content "), d.cast("string"), F.lit(" alpha "),
-                 (d * 31 % 97).cast("string")),
-        F.concat(F.lit("shared snippet "),
-                 F.floor(d / 2).cast("long").cast("string")),
-        F.concat(F.lit("content "), d.cast("string"), F.lit(" beta "),
-                 (d * 17 % 89).cast("string")),
-    ]
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.concat_ws("\n", *lines).alias("text"))
-
-
-def _q_line_boilerplate(spark, sf_dir):
-    """C4-style boilerplate removal (ops/linededup.py): drop every line
-    present in > 2 distinct docs (kills the host header and the cookie
-    banner, keeps the 2-doc shared snippet), reassemble in line order."""
-    out = linededup.drop_boilerplate_lines(
-        _line_docs(spark, sf_dir), max_doc_freq=2)
-    return out.select("doc_id", "text",
-                      F.col("n_lines_kept").cast("long")
-                      .alias("n_lines_kept"))
-
-
-def _q_line_dedup_first(spark, sf_dir):
-    """Global exact line dedup, first occurrence wins (window min-struct
-    over the line key - ONE wide stage), then in-order reassembly."""
-    out = linededup.dedup_lines_keep_first(_line_docs(spark, sf_dir))
-    return out.select("doc_id", "text",
-                      F.col("n_lines_kept").cast("long")
-                      .alias("n_lines_kept"))
-
-
-def _q_mixture_rates(spark, sf_dir):
-    """Temperature-scaled mixture weights per registrable domain
-    (ops/mixing.py, alpha=0.5): the domain counts are skewed by
-    construction (example.com carries 2/5 of the corpus), so the
-    tempered rates visibly flatten the mix. Stratum-level only - one
-    shuffle + a broadcast scalar."""
-    parsed = urls.parse_urls(_web_urls(spark, sf_dir))
-    r = mixing.temperature_mixture_rates(parsed, "domain", alpha=0.5,
-                                         target_frac=0.5)
-    return r.select("domain", "n_docs", F.round("weight", 9).alias("weight"),
-                    F.round("rate", 9).alias("rate"))
-
-
-def _q_mixture_sample(spark, sf_dir):
-    """The sampled mix itself: md5-fate filter under the data-derived
-    tempered rates (broadcast join + codegen predicate, no shuffle
-    beyond the tiny rate table's)."""
-    parsed = urls.parse_urls(_web_urls(spark, sf_dir))
-    r = mixing.temperature_mixture_rates(parsed, "domain", alpha=0.5,
-                                         target_frac=0.5)
-    return mixing.apply_mixture(parsed, r, "domain") \
-        .select("doc_id", "domain")
-
-
-def _q_bpe_merges(spark, sf_dir):
-    """Distributed BPE merge learning (ops/bpe.py): 8 merges over the
-    corpus word-frequency table; each step is one pair-count shuffle and
-    a LIMIT-1 collect (the algorithm's inherent driver decision). The
-    oracle replays the unrolled iterations; replace() left-to-right
-    semantics line up exactly thanks to the wrapper encoding."""
-    merges = bpe.learn_bpe(_docs(spark, sf_dir), n_merges=8)
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_freq bigint")
-
-
-def _q_bpe_vocab(spark, sf_dir):
-    """Subword vocabulary after applying the learned merges: map-side
-    literal-replace chain + one groupBy."""
-    merges = bpe.learn_bpe(_docs(spark, sf_dir), n_merges=8)
-    return bpe.subword_vocab(_docs(spark, sf_dir), merges)
-
-
-def _q_events_asof(spark, sf_dir):
-    """Backward as-of join (ops/events.py::asof_join): attribute each
-    click to the latest preceding view of the same user - one
-    union+window shuffle, no range-join pair blowup. Oracle = DuckDB's
-    native ASOF LEFT JOIN, an independent formulation of the same
-    point-in-time semantics."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click") \
-        .select("event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view") \
-        .select("user_id", "ts", F.col("event_id").alias("view_id"),
-                F.col("value").alias("view_value"))
-    j = events.asof_join(clicks, views, on="user_id", ts_col="ts",
-                         right_cols=["view_id", "view_value"],
-                         prefix="prior_")
-    return j.select(
-        "event_id", "user_id", F.col("prior_view_id"),
-        F.round("prior_view_value", 4).alias("prior_view_value"),
-        (F.unix_micros(F.col("ts").cast("timestamp"))
-         - F.unix_micros(F.col("prior_ts").cast("timestamp")))
-        .alias("gap_us"))
-
-
-def _q_events_asof_forward(spark, sf_dir):
-    """Forward as-of join: each click matched to the EARLIEST
-    subsequent error of the same user (time-to-failure attribution) -
-    the same single-shuffle union+window plan scanned descending.
-    Oracle = DuckDB ASOF LEFT JOIN with the <= bound."""
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click") \
-        .select("event_id", "user_id", "ts")
-    errors = ev.filter(F.col("event_type") == "error") \
-        .select("user_id", "ts", F.col("event_id").alias("error_id"))
-    j = events.asof_join(clicks, errors, on="user_id", ts_col="ts",
-                         right_cols=["error_id"], prefix="next_",
-                         direction="forward")
-    return j.select(
-        "event_id", "user_id", F.col("next_error_id"),
-        (F.unix_micros(F.col("next_ts").cast("timestamp"))
-         - F.unix_micros(F.col("ts").cast("timestamp")))
-        .alias("gap_us"))
-
-
-def _q_hll_vocab(spark, sf_dir):
-    """Per-language vocabulary-size estimate via deterministic
-    HyperLogLog (ops/sketches.py): md5-derived registers, so the oracle
-    reproduces registers and estimate exactly; register_checksum pins
-    the full sketch state as an integer."""
-    docs = _docs(spark, sf_dir)
-    tok = (docs.select("lang", F.explode(F.split(
-        dedup.normalized_text(F.col("text")), " ")).alias("w"))
-        .filter(F.col("w") != ""))
-    return sketches.hll_estimate(tok, "w", ["lang"])
-
-
-def _q_kmv_overlap(spark, sf_dir):
-    """Snapshot-overlap estimate via KMV bottom-k sketches over content
-    fingerprints: snapshot A = doc_id % 3 == 0, B = doc_id % 2 == 0
-    (every 6th doc shared). One row: intersection-in-bottom-k, union
-    estimate, Jaccard estimate - all md5-deterministic."""
-    docs = _docs(spark, sf_dir).withColumn(
-        "fp", F.md5(dedup.normalized_text(F.col("text"))))
-    a = docs.filter(F.col("doc_id") % 3 == 0).select("fp")
-    b = docs.filter(F.col("doc_id") % 2 == 0).select("fp")
-    return sketches.kmv_overlap(a, b, "fp", k=64)
-
-
-def _q_bpe_encode(spark, sf_dir):
-    """Corpus tokenization under the learned BPE (ops/bpe.py
-    encode_bpe): map-side merge application over whole documents, token
-    stream pinned per doc by an md5 digest + ranked-vocab id checksum.
-    The oracle replays the merge learning AND the document encode."""
-    docs = _docs(spark, sf_dir)
-    merges = bpe.learn_bpe(docs, n_merges=8)
-    return bpe.encode_bpe(docs, merges)
-
-
-def _q_exactsubstr_dedup(spark, sf_dir):
-    """End-to-end ExactSubstr dedup (Lee et al.): dup_spans detection
-    composed with remove_spans removal over the augmented corpus ->
-    (doc_id, clean_md5, n_removed_words, n_kept_words). Both halves
-    within-row after their aggregations; the oracle recomputes spans
-    AND the cut independently (NOT EXISTS anti-semi over covered
-    positions vs the operator's within-row filter)."""
-    aug = _augmented_docs(spark, sf_dir)
-    spans = dedup.dup_spans(aug, n=5, min_words=8)
-    out = dedup.remove_spans(aug, spans)
-    return out.select("doc_id",
-                      F.md5(F.col("text_clean")).alias("clean_md5"),
-                      "n_removed_words", "n_kept_words")
-
-
-def _q_frontier_expansion(spark, sf_dir):
-    """End-to-end frontier growth: staged html -> extract_links ->
-    anti-join against the known page set -> (url, n_refs) of newly
-    discovered targets with referrer counts as priority
-    (ops/urls.py::expand_frontier). The crawl loop's discovery step,
-    composed from the shipped link extractor."""
-    links = _q_html_links(spark, sf_dir)
-    known = _docs(spark, sf_dir).select(
-        F.concat(F.lit("https://crawl.example.org/doc/"),
-                 F.col("doc_id").cast("string")).alias("url"))
-    return urls.expand_frontier(links, known)
-
-
-def _q_cdc_apply(spark, sf_dir):
-    """CDC apply / MERGE (ops/dedup.py::apply_cdc): a synthetic change
-    log over the corpus - initial upserts, an update wave (%3), a
-    delete wave (%7), a re-insert wave (%21) - collapsed to the latest
-    live snapshot. Latest-wins is one partial-agged max(struct)
-    AGGREGATION, never a window over the log; the oracle uses the
-    independent row_number formulation."""
-    d = _docs(spark, sf_dir)
-    i = F.col("doc_id")
-
-    def ev(df, seq, op, payload):
-        return df.select(i.alias("doc_id"), F.lit(seq).alias("seq"),
-                         F.lit(op).alias("op"), payload.alias("payload"))
-
-    log = (ev(d, 1, "u", F.md5("text"))
-           .unionByName(ev(d.filter(i % 3 == 0), 2, "u",
-                           F.md5(F.concat(F.col("text"), F.lit("v2")))))
-           .unionByName(ev(d.filter(i % 7 == 0), 3, "d",
-                           F.lit(None).cast("string")))
-           .unionByName(ev(d.filter(i % 21 == 0), 4, "u",
-                           F.lit("restored"))))
-    return dedup.apply_cdc(log)
-
-
-def _q_sample_k_per_source(spark, sf_dir):
-    """Exact-k deterministic per-stratum sample
-    (ops/textstats.py::sample_k_per_stratum): 5 docs per source by md5
-    fate - the fixed-size companion of rate-based stratified_sample.
-    WindowGroupLimit caps the per-stratum sort (plan-asserted in
-    tests)."""
-    return textstats.sample_k_per_stratum(_docs(spark, sf_dir),
-                                          "source", k=5)
-
-
-def _q_html_metadata(spark, sf_dir):
-    """Page-metadata head extraction (ops/htmltext.py::
-    extract_metadata): title / meta description / canonical link /
-    html lang as first-match codegen regexes, absent fields NULL.
-    Staged html varies field presence on doc_id so every NULL path is
-    exercised; the oracle replays construction and patterns (both
-    engines return '' on no match -> nullif)."""
-    d = _docs(spark, sf_dir)
-    i = F.col("doc_id")
-    html = F.concat(
-        F.lit("<html"),
-        F.when(i % 2 == 0, F.lit(' lang="en"')).otherwise(F.lit("")),
-        F.lit("><head><title>Doc "), i.cast("string"),
-        F.lit("</title>"),
-        F.when(i % 3 == 0, F.concat(
-            F.lit('<meta name="description" content="summary '),
-            i.cast("string"), F.lit('">'))).otherwise(F.lit("")),
-        F.when(i % 5 == 0, F.concat(
-            F.lit('<link rel="canonical" href="https://example.org/c/'),
-            (i / F.lit(5)).cast("long").cast("string"), F.lit('">')))
-        .otherwise(F.lit("")),
-        F.lit("</head><body>x</body></html>"))
-    staged = d.select(
-        F.concat(F.lit("https://example.org/m/"),
-                 i.cast("string")).alias("url"),
-        html.alias("html"))
-    return htmltext.extract_metadata(staged)
-
-
-_CRAWL_PLAN_ROBOTS = [
-    ("crawl.example.org", "User-agent: *\nDisallow: /doc/1\n"),
-    ("partner0.example.net", "User-agent: *\nDisallow: /\n")]
-
-
-def _q_crawl_plan(spark, sf_dir):
-    """The crawl loop end-to-end (the frontier-side composition
-    showcase, like corpus_curation on the text side): html ->
-    extract_links -> expand_frontier (discovery, anti-join vs known) ->
-    robots_filter (exclusion gate, broadcast host rules) ->
-    frontier_schedule (politeness slots, priority = referrer count).
-    Every stage is the shipped operator; the oracle composes the same
-    three twins."""
-    disc = _q_frontier_expansion(spark, sf_dir)
-    robots = spark.createDataFrame(_CRAWL_PLAN_ROBOTS,
-                                   "host string, robots_txt string")
-    gated = urls.robots_filter(disc, robots)
-    allowed = gated.filter(F.col("allowed")).select("url") \
-        .join(disc, "url")
-    return urls.frontier_schedule(allowed, priority_col="n_refs",
-                                  delay_sec=5)
-
-
-def _q_ql_search(spark, sf_dir):
-    """Dirichlet query-likelihood retrieval (ops/bm25.py::
-    query_likelihood_topk) for {table, scan, merge}, mu=1000, top-20:
-    the language-modeling scorer beside bm25_search/rm3_search —
-    absent query terms contribute smoothed mass (tf=0 rows), which
-    BM25 structurally cannot, so the two rankings genuinely differ."""
-    return bm25.query_likelihood_topk(_docs(spark, sf_dir),
-                                      ["table", "scan", "merge"],
-                                      k=20, mu=1000)
-
-
-def _q_source_divergence(spark, sf_dir):
-    """Per-source Jensen-Shannon divergence from the corpus unigram
-    distribution (ops/textstats.py::source_js_divergence) — the
-    mixture-drift telemetry. Group-support-sized sums via the
-    absent-term ln 2 closed form; corpus term table merge-hinted
-    (vocabulary-scale build side)."""
-    return textstats.source_js_divergence(_docs(spark, sf_dir))
-
-
-def _q_crawl_waterfill(spark, sf_dir):
-    """Max-min-fair crawl-budget split (ops/urls.py::waterfill_budget):
-    caps = sum(1 + doc_id%13) per source (diverse integers at every
-    SF), budget = 3 * n_docs (below the cap sum, so the level
-    genuinely binds). Closed-form water level from one sorted window
-    + a 1-row (K, prefix_K) broadcast; sum(quota) == budget exactly."""
-    d = _docs(spark, sf_dir)
-    caps = (d.groupBy(F.col("source").alias("host"))
-            .agg(F.sum(F.col("doc_id") % 13 + 1).cast("long")
-                 .alias("cap")))
-    budget = d.count() * 3
-    return urls.waterfill_budget(caps, budget)
-
-
-def _q_dup_spans(spark, sf_dir):
-    """Duplicated-span telemetry (ops/dedup.py::dup_spans, ExactSubstr
-    semantics: any second occurrence corpus-wide). Over the augmented
-    corpus every original/copy text is one maximal span; the oracle is
-    the INDEPENDENT gaps-and-islands formulation (row_number islands)
-    against the operator's window-free per-doc fold."""
-    return dedup.dup_spans(_augmented_docs(spark, sf_dir),
-                           n=5, min_words=8)
-
-
-def _q_lsh_band_hits(spark, sf_dir):
-    """First-arrival LSH near-dup hit stream, batch twin
-    (ops/dedup.py::lsh_band_hits): per (band, bucket) the min-id owner;
-    every other member emits (doc, band, first_doc). The oracled anchor
-    for streaming_lsh_neardup, whose applyInPandasWithState output is
-    equivalence-tested against this exact function across triggers.
-    Band keys computed entirely within-row (rowwise_band_keys)."""
-    return dedup.lsh_band_hits(_augmented_docs(spark, sf_dir))
-
-
-def _q_html_links(spark, sf_dir):
-    """Crawl-graph edge extraction from html
-    (ops/htmltext.py::extract_links, pure codegen regex over the SAME
-    pattern for href and anchor groups). Staged html carries
-    doc_id-derived root-relative, absolute, relative and fragment
-    links - fragment dropped, the rest resolved against the source
-    host; the oracle replays construction, pattern and resolution."""
-    d = _docs(spark, sf_dir)
-    i = F.col("doc_id")
-    url = F.concat(F.lit("https://crawl.example.org/doc/"),
-                   i.cast("string"))
-    html = F.concat(
-        F.lit('<html><body><nav><a href="/">home</a></nav><p>'),
-        F.lit('<a href="/doc/'), ((i * 7 + 1) % 997).cast("string"),
-        F.lit('">next doc</a> <a href="https://partner'),
-        (i % 5).cast("string"),
-        F.lit('.example.net/page">partner site</a> '),
-        F.when(i % 3 == 0, F.lit('<a href="#cite">cite</a>'))
-        .otherwise(F.lit("")),
-        F.lit('<a href="rel/'), (i % 7).cast("string"),
-        F.lit('">related</a></p></body></html>'))
-    staged = d.select(url.alias("url"), html.alias("html"))
-    return htmltext.extract_links(staged)
-
-
-def _q_tokenizer_fertility(spark, sf_dir):
-    """Tokenizer fertility per language (tokens-per-word under the
-    learned BPE): THE tokenizer-budget dashboard - languages whose
-    fertility runs high are under-served by the merge table and pay
-    more sequence length per word. Pure composition of shipped
-    operators: bpe.learn_bpe + encode_tokens (map-side merge
-    application) + one partial-agged rollup; the oracle replays merge
-    learning, document encode, and the rollup."""
-    docs = _docs(spark, sf_dir)
-    merges = bpe.learn_bpe(docs, n_merges=8)
-    enc = bpe.encode_tokens(docs, merges) \
-        .select("doc_id", F.size("tokens").alias("n_tokens"))
-    words = docs.select(
-        "doc_id", "lang",
-        F.size(textstats._word_array(F.col("text"))).alias("n_words"))
-    return (words.join(enc, "doc_id")
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_words").alias("n_words"),
-                 F.sum("n_tokens").alias("n_tokens"),
-                 F.round(F.sum("n_tokens") / F.sum("n_words"), 6)
-                 .alias("fertility")))
-
-
-def _aliased_urls(spark, sf_dir):
-    """Deterministic URL-alias slice: doc d -> a syntactic variant
-    (scheme/host case, :443 default port, trailing slash, tracking
-    params, unsorted params, fragment) of page p{d//3}, so every ~3
-    docs alias one canonical URL. Pure function of doc_id, mirrored in
-    the SQL oracle."""
-    d = F.col("doc_id")
-    scheme = F.when(d % 2 == 0, F.lit("https")).otherwise(F.lit("HTTPS"))
-    host = F.when(d % 4 < 2, F.lit("news.example.com")) \
-        .otherwise(F.lit("News.Example.COM"))
-    port = F.when(d % 4 == 2, F.lit(":443")).otherwise(F.lit(""))
-    path = F.concat(F.lit("/a/p"), (d / 3).cast("long").cast("string"),
-                    F.when(d % 5 == 0, F.lit("/")).otherwise(F.lit("")))
-    query = F.when(d % 3 == 0, F.lit("?utm_source=x&b=2&a=1")) \
-        .when(d % 3 == 1, F.lit("?a=1&b=2")).otherwise(F.lit(""))
-    frag = F.when(d % 7 == 0, F.lit("#frag")).otherwise(F.lit(""))
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(scheme, F.lit("://"), host, port, path, query, frag)
-        .alias("url"))
-
-
-def _q_url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization + canonical-URL dedup
-    (ops/urls.py::canonicalize_urls/canonical_dedup): codegen-only
-    normalization riding the scan, one Exchange for the keep decision.
-    The alias slice guarantees real dup groups at every SF."""
-    return urls.canonical_dedup(_aliased_urls(spark, sf_dir))
-
-
-def _q_snapshot_diff(spark, sf_dir):
-    """Crawl-over-crawl delta (ops/dedup.py::snapshot_diff): new
-    snapshot = old minus every 7th doc, every 5th doc's text updated,
-    every 11th doc re-added under a new id - so all four statuses
-    appear at every SF. One full-outer join, no window."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    def fp(frame):
-        return frame.select(
-            "doc_id",
-            F.md5(dedup.normalized_text(F.col("text"))).alias("fingerprint"))
-    base = (d.filter(F.col("doc_id") % 7 != 0)
-            .select("doc_id",
-                    F.when(F.col("doc_id") % 5 == 0,
-                           F.concat(F.col("text"), F.lit(" updated")))
-                    .otherwise(F.col("text")).alias("text")))
-    added = d.filter(F.col("doc_id") % 11 == 0) \
-        .select((F.col("doc_id") + 3000000).alias("doc_id"), "text")
-    return dedup.snapshot_diff(fp(d), fp(base.unionByName(added)))
-
-
-def _q_domain_topk(spark, sf_dir):
-    """Top-3 docs per domain by length (ops/textstats.py::grouped_topk):
-    the WindowGroupLimit shape - the exchange carries O(k*groups), not
-    the corpus. Oracle = QUALIFY row_number."""
-    d = urls.parse_urls(_web_urls(spark, sf_dir)) \
-        .withColumn("n_chars", F.length("text").cast("long"))
-    return textstats.grouped_topk(d, "domain", "n_chars", k=3) \
-        .select("domain", "rank", "doc_id", "n_chars")
-
-
-def _q_winnowing(spark, sf_dir):
-    """Winnowing fingerprint sets (ops/dedup.py::winnowing_fingerprints,
-    k=8 window=4) rolled up per doc: n_fingerprints + an md5 digest of
-    the sorted set, keeping the result doc-cardinality while still
-    pinning every fingerprint value under the hash gate."""
-    fps = dedup.winnowing_fingerprints(_docs(spark, sf_dir))
-    return (fps.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_fingerprints"),
-                 F.md5(F.concat_ws(",", F.sort_array(
-                     F.collect_list("fingerprint")))).alias("set_md5")))
-
-
-def _q_doc_chunking(spark, sf_dir):
-    """Overlapping word-window chunking (ops/packing.py::
-    chunk_documents, chunk 40 / stride 30): map-side sequence+slice+
-    posexplode, zero shuffle. Oracle replays the identical start
-    bound and slicing."""
-    return packing.chunk_documents(_docs(spark, sf_dir),
-                                   chunk_size=40, stride=30)
-
-
-def _q_dsir(spark, sf_dir):
-    """DSIR importance weighting + Gumbel top-k selection
-    (ops/mixing.py::dsir_weights): target = every 10th doc (a pure
-    doc_id function, SF-independent); hashed-bigram models broadcast
-    back at fixed n_buckets size; exact-percentile cut (oracled
-    branch)."""
-    return mixing.dsir_weights(_docs(spark, sf_dir),
-                               target=F.col("doc_id") % 10 == 0)
-
-
 def _q_tfidf_cosine_pairs(spark, sf_dir):
     """Exact sparse TF-IDF shingle-cosine similarity join
     (ops/dedup.py::tfidf_cosine_pairs, Bayardo/Vernica inverted-index
@@ -1640,51 +562,6 @@ def _q_tfidf_cosine_pairs(spark, sf_dir):
     -> 71k; a real heavy-tailed vocabulary is far less dense)."""
     return dedup.tfidf_cosine_pairs(_augmented_docs(spark, sf_dir),
                                     n=3, threshold=0.5, max_df=10)
-
-
-def _q_cms_wordcounts(spark, sf_dir):
-    """Count-Min heavy-hitter estimation (ops/sketches.py): build a
-    4x512 sketch over every corpus word occurrence (one partial-agged
-    groupBy collapsing to <=2048 cells), then point-query the fixed
-    language-marker word list WITHOUT rescanning the corpus — the
-    dashboard read path. md5-derived hashes make every cell and
-    estimate engine-replayable; estimates are exact unless a cell
-    collides (and never under)."""
-    from eventrelationextractor_spark.ops import sketches
-    d = _docs(spark, sf_dir)
-    tok = d.select(F.explode(
-        textstats._word_array(F.col("text"))).alias("w"))
-    sk = sketches.cms_sketch(tok, "w", depth=4, width=512)
-    keys = spark.createDataFrame([(k,) for k in _CMS_KEYS], "key string")
-    return sketches.cms_lookup(sk, keys, "key", depth=4, width=512)
-
-
-# probe list shared by _q_cms_wordcounts and its oracle
-_CMS_KEYS = sorted({w for ws in textstats.LANG_MARKERS.values()
-                    for w in ws})
-
-
-# multilingual suffixes shared by _q_script_profile and its oracle —
-# one definition, zero transcription drift between engines
-_SCRIPT_SUFFIXES = {0: " привет мир", 1: " مرحبا 42",
-                    2: " 世界和平", 3: " γειά σου"}
-
-
-def _q_script_profile(spark, sf_dir):
-    """Unicode script-mix telemetry (ops/textstats.py::script_profile,
-    pure codegen regexp_count per block). The corpus is ASCII, so a
-    deterministic multilingual suffix keyed on doc_id % 5 exercises
-    Cyrillic / Arabic / CJK / Greek counts and the `other` bucket; the
-    oracle shares the block ranges verbatim (both sides render them
-    from textstats.SCRIPT_BLOCKS)."""
-    d = _docs(spark, sf_dir)
-    suffix = F.lit("")
-    for k, s in _SCRIPT_SUFFIXES.items():
-        suffix = F.when(F.col("doc_id") % 5 == k, F.lit(s)) \
-            .otherwise(suffix)
-    staged = d.select("doc_id",
-                      F.concat(F.col("text"), suffix).alias("text"))
-    return textstats.script_profile(staged)
 
 
 def _q_quality_classifier(spark, sf_dir):
@@ -1710,61 +587,6 @@ def _q_quality_classifier(spark, sf_dir):
     return quality.score_quality_fixedpoint(d, w, b)
 
 
-def _q_semdedup(spark, sf_dir):
-    """SemDeDup semantic pruning (ops/cluster.py::semdedup) over the
-    augmented embeddings, whose +1000000 perturbed copies (cosine
-    ~0.999 to their originals) are the known prune set. Cluster-local
-    pair space; oracle replays the kmeans iterations AND the
-    within-cluster prune rule in SQL.
-
-    k scales with the corpus (max(8, n/500)) per SemDeDup's own
-    contract - a FIXED k makes the within-cluster pair space O(n^2/k)
-    and quadratic in corpus growth (observed: the k=8 formulation
-    timed out at sf1.0's 100k vectors = 625M pairs); adaptive k keeps
-    mean cluster size, and therefore pairs-per-vector, constant. The
-    oracle computes the identical k from the same count."""
-    emb = _aug_emb(spark, sf_dir)
-    k = max(8, emb.count() // 500)
-    return cluster.semdedup(emb, k=k, n_iter=2, threshold=0.99)
-
-
-def _q_ngram_dup_stats(spark, sf_dir):
-    """Substring-level dup telemetry (ops/dedup.py::ngram_dup_stats,
-    Lee et al. arXiv:2107.06499) over the augmented corpus, whose exact
-    copies and one-token-appended near-dups give a known dup_fraction
-    structure. TF-IDF document-frequency plan shape: map-side distinct
-    5-grams -> partial-agg df count -> join back -> per-doc agg."""
-    return dedup.ngram_dup_stats(_augmented_docs(spark, sf_dir), n=5)
-
-
-def _q_pmi_collocations(spark, sf_dir):
-    """Top-50 bigram collocations by PMI (ops/textstats.py::
-    pmi_collocations): two partial-agg counts + vocabulary-scale joins +
-    TakeOrdered top-k; PMI rounded before ranking for engine-stable
-    cuts."""
-    return textstats.pmi_collocations(_docs(spark, sf_dir),
-                                      min_count=5, k=50)
-
-
-def _q_length_percentiles(spark, sf_dir):
-    """Per-language exact length percentiles + count/mean
-    (ops/textstats.py::length_percentiles). The approx=True branch is
-    the bounded-memory 100-TB path (GK sketch); the oracle gates the
-    exact branch via DuckDB quantile_cont (same linear interpolation)."""
-    return textstats.length_percentiles(_docs(spark, sf_dir))
-
-
-def _q_source_lang_rollup(spark, sf_dir):
-    """OLAP cube over (source, lang): doc count, char sum, mean quality
-    proxy at every grouping-set level in ONE pass (Spark cube = expand +
-    single partial-agged groupBy, not 4 scans). Oracle = GROUP BY CUBE."""
-    d = _docs(spark, sf_dir)
-    return (d.cube("source", "lang")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_chars").alias("sum_chars"),
-                 F.round(F.avg("n_chars"), 4).alias("mean_chars")))
-
-
 def _q_events_interval_join(spark, sf_dir):
     """Bucketed range join (ops/events.py::interval_join_bucketed):
     attribute every event to each 30-minute purchase window of the same
@@ -1786,29 +608,6 @@ def _q_events_interval_join(spark, sf_dir):
                  F.min("event_id").alias("first_event_id")))
 
 
-def _q_dedup_levenshtein(spark, sf_dir):
-    """Edit-distance-verified near-dup pairs
-    (ops/dedup.py::levenshtein_pairs): MinHash-LSH candidates verified
-    with Spark's THRESHOLDED levenshtein (banded DP, early exit) on the
-    normalized texts. Known positives at every SF: the augmented exact
-    copies (dist 0) and the ' extra'-suffixed near-dups (dist 6). The
-    oracle runs DuckDB's exact levenshtein over the identical candidate
-    set."""
-    return dedup.levenshtein_pairs(_augmented_docs(spark, sf_dir),
-                                   max_dist=16)
-
-
-def _q_shingle_containment(spark, sf_dir):
-    """Asymmetric shingle containment (ops/dedup.py::containment_pairs,
-    Broder 1997): quote/subset detection over LSH candidates. The
-    ' extra'-suffixed near-dups contain their originals at exactly 1.0
-    (every original shingle survives the suffix append) while Jaccard
-    sits below 1 - the direction-splitting positive the symmetric
-    measures cannot represent."""
-    return dedup.containment_pairs(_augmented_docs(spark, sf_dir),
-                                   threshold=0.8)
-
-
 def _q_prefix_filter_pairs(spark, sf_dir):
     """EXACT all-pairs Jaccard join (ops/dedup.py::prefix_filter_pairs,
     AllPairs prefix filtering): recall-1 near-dup tier next to the
@@ -1817,107 +616,6 @@ def _q_prefix_filter_pairs(spark, sf_dir):
     df-rank prefixes, the size gate, and exact verification."""
     return dedup.prefix_filter_pairs(_augmented_docs(spark, sf_dir),
                                      t_ppm=800_000)
-
-
-def _q_novelty_scores(spark, sf_dir):
-    """Incremental-ingest novelty (ops/dedup.py::novelty_scores): ppm
-    of each incoming doc's shingles unseen in the reference corpus.
-    Incoming = the augmented corpus (exact copies score 0, ' extra'
-    near-dups score the 2-3 new suffix shingles, base docs score 0
-    against themselves); integer div keeps the gate exact."""
-    return dedup.novelty_scores(_augmented_docs(spark, sf_dir),
-                                _docs(spark, sf_dir))
-
-
-def _q_embedding_quantize(spark, sf_dir):
-    """Int8 scalar quantization + reconstruction SSE
-    (ops/simsearch.py::quantize_int8): per-vector scale 127/max|x|,
-    floor(x*scale + 0.5) codes - pure per-row codegen, the 4x
-    bandwidth/storage lever for every ANN join at 100 TB. All math in
-    IEEE double with array-ordered folds, so the oracle hashes
-    identically (codes exactly, amax/sse under the 6dp gate)."""
-    return simsearch.quantize_int8(_emb(spark, sf_dir))
-
-
-def _q_host_cocitation(spark, sf_dir):
-    """Co-citation counts over the link graph
-    (ops/graph.py::cocitation): pairs of pages cited by the same source,
-    out-degree-capped BEFORE pair formation (the capped_bucket_pairs
-    gate shape). The oracle is an independent self-join-on-source
-    formulation of the same capped multiset."""
-    e, _ = _link_edges(spark, sf_dir)
-    return graph.cocitation(e)
-
-
-def _q_link_hits(spark, sf_dir):
-    """HITS hubs/authorities (ops/graph.py::hits, Kleinberg 1999): 3
-    alternating L1-normalized iterations over the pagerank link graph;
-    each half-iteration is one join + one partial-agged groupBy, the
-    whole loop one lazy plan. The oracle unrolls the identical
-    iterations as chained CTEs (float drift = addition order only,
-    ~1e-15 vs the 1e-6 gate)."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.hits(e, n_iter=3, nodes=nodes)
-
-
-def _q_domain_reputation(spark, sf_dir):
-    """FineWeb-style host-reputation gate
-    (ops/urls.py::host_reputation): per-host mean quality (one
-    partial-agged groupBy) joined back, keep docs whose host clears the
-    bar OR whose own score does (the rescue clause). Staged over the
-    deterministic multi-host url slice + the quality_scores operator -
-    a pure composition of shipped operators, like corpus_curation.
-    The per-doc score carries a deterministic host-correlated skew
-    (factor (6 + doc_id%5)/10, i.e. per-host factors 0.6..1.0 - doc_id%5
-    IS the host) so host reputations genuinely differ at every SF and
-    the gate's two clauses both bite; the oracle replays the skew."""
-    w = _web_urls(spark, sf_dir)
-    scored = textstats.quality_score(w)
-    score = F.round(F.col("quality")
-                    * ((F.lit(6) + F.col("doc_id") % 5) / 10.0), 6)
-    scored = scored.select("doc_id", "url", score.alias("score"))
-    kept = urls.host_reputation(scored, score_col="score",
-                                host_threshold=0.3, doc_threshold=0.5)
-    return kept.select("doc_id", "host", "score",
-                       "host_docs", "host_quality")
-
-
-def _q_embedding_jl(spark, sf_dir):
-    """Johnson-Lindenstrauss Rademacher projection
-    (ops/simsearch.py::jl_project): 64 -> 16 dims against driver-known
-    md5-parity sign planes (the IVF literal-centroid pattern: zero
-    broadcast state, zero shuffle). Posed exploded to (vec_id, dim,
-    value) scalars so the gate's per-cell 6dp float rounding applies;
-    the oracle replays the identical sign literals."""
-    r = simsearch.jl_project(_emb(spark, sf_dir), k=16, dim=64)
-    return r.select("vec_id",
-                    F.posexplode("reduced").alias("dim", "value")) \
-        .select("vec_id", F.col("dim").cast("long").alias("dim"), "value")
-
-
-def _q_url_spam(spark, sf_dir):
-    """Lexical URL spam features (ops/urls.py::url_spam_features,
-    Ntoulas/Castillo feature family) over the multi-host url slice
-    augmented with deterministic spam-shaped variants: every 7th doc
-    gets a digit+hyphen subdomain prefix, every 4th a tracking query
-    string - so every feature column and the score's least-1 saturation
-    are exercised at all SFs. The oracle replays staging and every
-    expression."""
-    w = _web_urls(spark, sf_dir)
-    i = F.col("doc_id")
-    spam_host = F.concat(F.lit("promo"), (i % 100).cast("string"),
-                         F.lit("-w1n."))
-    qs = F.when(i % 4 == 0,
-                F.lit("?utm_source=feed&utm_medium=rss&id=1")) \
-        .when(i % 4 == 1, F.lit("?ref=home")).otherwise(F.lit(""))
-    url = F.concat(F.lit("https://"),
-                   F.when(i % 7 == 0, spam_host).otherwise(F.lit("")),
-                   F.regexp_extract("url", r"^https://(.*)$", 1), qs)
-    staged = w.select("doc_id", url.alias("url"))
-    return urls.url_spam_features(staged).select(
-        "doc_id", "url", "host", "url_len", "host_digits",
-        "host_digit_ratio", "host_hyphens", "n_subdomains", "n_params",
-        "n_tracking", "spam_score")
 
 
 def _q_ann_ivfpq(spark, sf_dir):
@@ -1929,29 +627,6 @@ def _q_ann_ivfpq(spark, sf_dir):
     code assignment, probe selection, and the ADC sum - ranked on the
     6dp-rounded distance both sides (the bm25 lesson)."""
     return pq.ivfpq_topk(_emb(spark, sf_dir), n_queries=10, k=5)
-
-
-def _q_ann_ivfpq_recall(spark, sf_dir):
-    """Recall@k acceptance telemetry for the IVF-PQ index
-    (ops/pq.py::ivfpq_recall): approximate top-5 vs the exact
-    squared-L2 top-5, per query. The number that says whether the 16x
-    compression + nprobe pruning still return the right neighbors;
-    the oracle replays BOTH sides."""
-    return pq.ivfpq_recall(_emb(spark, sf_dir), n_queries=10, k=5)
-
-
-def _q_events_anomalies(spark, sf_dir):
-    """Tumbling-window volume anomalies (ops/events.py::
-    window_anomalies): per (event_type, hour) count z-scored against
-    the type's own per-window moments; |z| >= 3 flags. A deterministic
-    burst (one synthetic click row per event_id%5==0, all at one fixed
-    hour) is injected so the flag provably fires at every SF; the
-    oracle replays the burst and both aggregations."""
-    ev = _events(spark, sf_dir).select("ts", "event_type")
-    burst = _events(spark, sf_dir).filter(F.col("event_id") % 5 == 0) \
-        .select(F.lit("2024-01-02 00:15:00").cast("timestamp").alias("ts"),
-                F.lit("click").alias("event_type"))
-    return events.window_anomalies(ev.unionByName(burst), minutes=60)
 
 
 def _q_calibration_bins(spark, sf_dir):
@@ -2097,65 +772,6 @@ def _q_events_linfit(spark, sf_dir):
     return events.linfit(_daily_counts(spark, sf_dir), "key", "o", "x")
 
 
-def _q_theil_sen(spark, sf_dir):
-    """Theil-Sen robust slope per event_type over the shared daily-
-    count staging (ops/events.py::theil_sen): lower weighted median
-    of 6dp-rounded pairwise slopes — the outlier-immune companion to
-    events_linfit/trend_mann_kendall on identical inputs."""
-    return events.theil_sen(_daily_counts(spark, sf_dir), "key", "o",
-                            "x")
-
-
-def _q_kendall_tau(spark, sf_dir):
-    """Kendall tau-b between the n_chars ranking and the distinct-term
-    ranking per doc_id%16 stratum, over the doc_id%5 sample (ops/
-    quality.py::kendall_tau). Keyed on an id stratum, NOT source —
-    the sf1.0 corpus has per-doc-unique sources, which would
-    degenerate every group to n=1. Exact integer pair classification
-    from one keyed equi-join; single sqrt per key at the 6dp gate."""
-    t = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", (F.col("doc_id") % 16).alias("grp"), "n_chars",
-        F.size(F.array_distinct(F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda w: w != ""))).cast("long").alias("nt"))
-    return quality.kendall_tau(t, "grp", "n_chars", "nt")
-
-
-def _q_flesch_readability(spark, sf_dir):
-    """Flesch reading ease (ops/textstats.py::flesch_readability) over
-    docs with staged sentence boundaries (every ' row ' becomes
-    '. row ' — literal regexp_replace, global on BOTH engines).
-    Sentences via the shared SENTENCE_PATTERN, syllables = [aeiouy]+
-    runs with a 1/word floor; two integer divisions at 6dp."""
-    d = _docs(spark, sf_dir).withColumn(
-        "text", F.regexp_replace("text", " row ", ". row "))
-    return textstats.flesch_readability(d)
-
-
-def _q_events_breakpoint(spark, sf_dir):
-    """Step-change localization (ops/events.py::step_breakpoint) over
-    the daily-count series with a staged +25 level shift from epoch
-    day 19743 (2024-01-21) — the detector must place the break at the
-    staged boundary. One cumulative window evaluates every split via
-    prefix-sum SSE decomposition; argmin on the 6dp grid, earlier
-    split wins ties."""
-    d = _daily_counts(spark, sf_dir).selectExpr(
-        "key", "o",
-        "x + CASE WHEN o >= 19743 THEN 25 ELSE 0 END AS x")
-    return events.step_breakpoint(d, "key", "o", "x")
-
-
-def _q_extractive_summary(spark, sf_dir):
-    """Top-2 IDF-weighted sentences per doc (ops/bm25.py::
-    extractive_topk) over the staged sentence boundaries (' row ' ->
-    '. row '). Mean smoothed IDF over distinct terms, ranked on the
-    6dp grid with sent_idx tie-break; WindowGroupLimit keeps k rows
-    per doc before the final exchange."""
-    d = _docs(spark, sf_dir).withColumn(
-        "text", F.regexp_replace("text", " row ", ". row "))
-    return bm25.extractive_topk(d, k=2)
-
-
 def _q_psi_drift(spark, sf_dir):
     """Population Stability Index cells (ops/quality.py::psi_buckets)
     between the doc_id%3=0 slice (staged +25-char shift, the ks_drift
@@ -2167,92 +783,6 @@ def _q_psi_drift(spark, sf_dir):
         " AS bucket",
         "doc_id % 3 = 0 AS flag")
     return quality.psi_buckets(d, "bucket", "flag", smooth_ppm=100)
-
-
-def _q_holt_forecast(spark, sf_dir):
-    """Holt double-exponential smoothing (ops/events.py::holt_smooth)
-    over the daily-count series per event_type - level/trend/one-step
-    forecast in exact integer micro-units with FLOOR division on both
-    engines (the oracle's recursive CTE emulates floor div as
-    (a - ((a%m+m)%m))/m because SQL div truncates toward zero and
-    trend terms go negative on downswings)."""
-    return events.holt_smooth(_daily_counts(spark, sf_dir),
-                              "key", "o", "x",
-                              alpha_ppm=300_000, beta_ppm=100_000)
-
-
-def _q_events_attribution(spark, sf_dir):
-    """Multi-touch attribution (ops/events.py::attribution): view/
-    click touches within 2h before each purchase, first/last/linear
-    weights in exact integer ppm (linear remainder to the last touch
-    so each conversion sums to exactly 1e6). The pairing is the
-    bucketed interval equi-join; the oracle is the naive range join
-    (same pairs, no loop on the Spark side)."""
-    return events.attribution(_events(spark, sf_dir),
-                              conv_type="purchase",
-                              touch_types=("view", "click"),
-                              horizon_minutes=120)
-
-
-def _q_zone_map_prune(spark, sf_dir):
-    """Zone-map data-skipping audit (ops/maintenance.py::
-    zone_map_prune) of the SAME n_chars range predicate over two
-    competing file layouts: insertion order (doc_id div 64 - every
-    file spans the value range, nothing prunes) vs value-clustered
-    (n_chars div 50 - almost everything prunes). The survivor counts
-    are the layout lesson made hash-gateable."""
-    d = _docs(spark, sf_dir).selectExpr("doc_id", "n_chars")
-    staged = d.selectExpr("'seq' AS layout", "doc_id div 64 AS file_id",
-                          "n_chars") \
-        .unionByName(d.selectExpr("'bylen' AS layout",
-                                  "n_chars div 50 AS file_id",
-                                  "n_chars"))
-    return maintenance.zone_map_prune(staged, "layout", "file_id",
-                                      "n_chars", lo=150, hi=200)
-
-
-def _q_url_templates(spark, sf_dir):
-    """URL path templating rollup (ops/urls.py::url_templates) over a
-    staged mix of product pages (/product/{n}/view), session-id pages
-    (/session/{h}/cart - md5 hex collapses to {h}), and a static page:
-    the crawl cartographer that turns a million vanity URLs into a
-    page-type inventory. n_urls >> n_distinct_tails flags duplicate
-    content behind vanity ids."""
-    i = F.col("doc_id")
-    host = F.concat(F.lit("site"), (i % 3).cast("string"),
-                    F.lit(".example.com"))
-    path = (F.when(i % 3 == 0,
-                   F.concat(F.lit("/product/"), i.cast("string"),
-                            F.lit("/view")))
-            .when(i % 3 == 1,
-                  F.concat(F.lit("/session/"),
-                           F.md5(i.cast("string")), F.lit("/cart")))
-            .otherwise(F.lit("/about/team")))
-    d = _docs(spark, sf_dir).select(
-        F.concat(F.lit("https://"), host, path).alias("url"))
-    return urls.url_templates(d, min_count=2)
-
-
-def _q_als_rank1(spark, sf_dir):
-    """Rank-1 ALS (ops/mining.py::als_rank1, 3 iterations) over
-    implicit (user, event_type) interaction counts: both factors in
-    1e-3 integer fixed point, every cross-partition sum exact integer
-    (the integer-cents discipline applied to matrix factorization).
-    The oracle replays u/v updates as chained integer-div CTEs."""
-    r = (_events(spark, sf_dir)
-         .groupBy("user_id", "event_type")
-         .agg(F.count(F.lit(1)).cast("long").alias("r")))
-    return mining.als_rank1(r, "user_id", "event_type", "r", n_iter=3)
-
-
-def _q_textrank_keywords(spark, sf_dir):
-    """TextRank keyword scores (ops/bm25.py::textrank_keywords):
-    weighted PageRank over the corpus term co-occurrence graph
-    (window 2, 5 iterations). The oracle unrolls the same iterations
-    as chained CTEs over the identical co-occurrence edge CTE; ranks
-    compare at the 6dp gate (the pagerank oracle contract)."""
-    return bm25.textrank_keywords(_docs(spark, sf_dir), window=2,
-                                  n_iter=5)
 
 
 def _q_phrase_search(spark, sf_dir):
@@ -2419,7 +949,7 @@ def _q_events_gini(spark, sf_dir):
 def _q_events_cusum(spark, sf_dir):
     """CUSUM volume-shift alarms (ops/events.py::cusum_alarms) over
     per-(event_type, minute) counts with per-type integer-floor mean
-    targets; the same deterministic click burst as events_anomalies is
+    targets; a deterministic click burst is
     injected so the alarm provably fires at every SF. The clipped
     recursion rides the prefix-sum/running-min closed form - two
     stacked windows, zero iteration, exact integers end to end."""
@@ -2450,39 +980,6 @@ def _q_session_transitions(spark, sf_dir):
     return events.session_transitions(_events(spark, sf_dir))
 
 
-def _q_link_ppr(spark, sf_dir):
-    """Personalized PageRank from a seed set (ops/graph.py::
-    personalized_pagerank, Haveliwala 2002): teleport + dangling mass
-    return to the seeds (every 50th page - the TrustRank shape) over
-    the standard link graph; 5 iterations, one lazy plan. Oracle =
-    chained CTEs with the seed-indicator teleport vector."""
-    e, nodes = _link_edges(spark, sf_dir)
-    seeds = _docs(spark, sf_dir).filter(F.col("doc_id") % 50 == 0) \
-        .select(F.col("doc_id").alias("node"))
-    return graph.personalized_pagerank(e, seeds, n_iter=5, nodes=nodes)
-
-
-def _q_sentence_stats(spark, sf_dir):
-    """Per-doc sentence-shape telemetry (ops/textstats.py::
-    sentence_stats over sentence_split): the inputs of C4's min-
-    sentence / terminal-punctuation filters and Gopher's short-
-    sentence bound. Splitter pattern lives in the Java-regex ∩ RE2
-    subset (no lookbehind); the oracle replays split, trim, word
-    counts and both ratios."""
-    return textstats.sentence_stats(_docs(spark, sf_dir))
-
-
-def _q_link_seed_distances(spark, sf_dir):
-    """BFS hop distance from the seed set (ops/graph.py::
-    seed_distances): crawl-depth / trust-distance over the link graph,
-    4 hops, frontier-proportional per-hop cost (equi-join + anti-join
-    per hop, one lazy plan). Oracle = recursive CTE with min(d)."""
-    e, _ = _link_edges(spark, sf_dir)
-    seeds = _docs(spark, sf_dir).filter(F.col("doc_id") % 50 == 0) \
-        .select(F.col("doc_id").alias("node"))
-    return graph.seed_distances(e, seeds, max_hops=4)
-
-
 def _q_link_shortest_paths(spark, sf_dir):
     """Weighted shortest paths within a 4-hop budget (ops/graph.py::
     weighted_seed_distances): delta-frontier Bellman-Ford over the
@@ -2496,33 +993,6 @@ def _q_link_shortest_paths(spark, sf_dir):
         "w", ((F.col("src") * 3 + F.col("dst") * 5) % 9 + 1))
     seeds = nodes.filter(F.col("node") % 97 == 0)
     return graph.weighted_seed_distances(we, seeds, max_hops=4)
-
-
-def _q_link_walks(spark, sf_dir):
-    """Deterministic random walks (ops/graph.py::random_walks,
-    DeepWalk sampling): one 4-step walk per node, transition =
-    md5(salt:start:t) indexed into the sorted adjacency list - a pure
-    function of (salt, start, t), replayed step-for-step by the
-    oracle's chained CTEs. Dangling pages (every 17th) stop early."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.random_walks(e, nodes=nodes, walk_len=4)
-
-
-def _q_bm25_ndcg(spark, sf_dir):
-    """nDCG@25 of the BM25 run (ops/bm25.py::ndcg_at_k) against
-    deterministic graded judgments: rel(doc) = number of DISTINCT query
-    terms the doc contains (0..5) - a pure function of the text both
-    engines recompute. The retrieval-quality acceptance metric for any
-    index/parameter change; the oracle replays the BM25 run, the
-    judgments, and both discounted sums."""
-    docs = _docs(spark, sf_dir)
-    res = bm25.bm25_topk(docs, BM25_QUERY_TERMS, k=25)
-    qt = spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS],
-                               "term string")
-    rel = (bm25.tokenize(docs).select("doc_id", "term").distinct()
-           .join(F.broadcast(qt), "term")
-           .groupBy("doc_id").agg(F.count(F.lit(1)).alias("rel")))
-    return bm25.ndcg_at_k(res, rel, k=25)
 
 
 def _q_bm25_map_mrr(spark, sf_dir):
@@ -2542,52 +1012,6 @@ def _q_bm25_map_mrr(spark, sf_dir):
     return bm25.map_mrr_at_k(res, rel, k=25)
 
 
-BADWORDS = ["slow", "big", "error"]  # stand-in blocklist, present in corpus
-
-
-def _q_badwords_filter(spark, sf_dir):
-    """C4-style blocklist gate (ops/textstats.py::badwords_stats):
-    exact-token blocklist counts + ratio + keep flag, the cleanup tier
-    every public webtext pipeline runs. Matching is token-exact over
-    the normalized word array (never substring - the Scunthorpe
-    false-positive); the list is a constant-folded literal IN set, so
-    the whole stage is one narrow codegen pass."""
-    return textstats.badwords_stats(_docs(spark, sf_dir), BADWORDS,
-                                    max_ratio=0.02)
-
-
-def _q_crawl_schedule_delays(spark, sf_dir):
-    """Per-host Crawl-delay politeness (ops/urls.py::crawl_delays +
-    frontier_schedule(delays=...)): robots.txt declares each host's own
-    pacing (2s/10s/1s; one host omits the directive, one host has no
-    robots at all - both fall back to the 5s default), and the
-    scheduler's fetch offsets honor it. The composition a real fetcher
-    runs; the oracle replays parse, fallback, window and offsets."""
-    frontier = _web_urls(spark, sf_dir).select("url")
-    robots = spark.createDataFrame(
-        [("news.example.com",
-          "User-agent: *\nCrawl-delay: 2\nDisallow: /admin\n"),
-         ("blog.example.org", "User-agent: *\ncrawl-Delay: 10\n"),
-         ("www.sample.net", "User-agent: *\nDisallow: /p\n"),
-         ("shop.example.co", "Crawl-delay: 1\nUser-agent: *\n")],
-        "host string, robots_txt string")
-    delays = urls.crawl_delays(robots, default_sec=5)
-    return urls.frontier_schedule(frontier, delay_sec=5, delays=delays)
-
-
-def _q_weighted_sample(spark, sf_dir):
-    """Exact-k weighted per-stratum sampling (ops/textstats.py::
-    weighted_sample_k, Efraimidis-Spirakis A-ES): k docs per source
-    preferring high quality - key = u^(1/w) from the md5 fate,
-    identical IEEE expression both engines. Weight = the quality
-    score (+epsilon so zero-quality rows stay sampleable-but-unlikely
-    ... excluded: weight must be positive, so staged as quality+0.01)."""
-    d = textstats.quality_score(_docs(spark, sf_dir))
-    d = d.select("doc_id", "source",
-                 F.round(F.col("quality") + 0.01, 6).alias("wt"))
-    return textstats.weighted_sample_k(d, "wt", "source", k=20)
-
-
 def _q_events_funnel(spark, sf_dir):
     """Ordered funnel (ops/events.py::funnel): per user the earliest
     view -> click -> purchase completion chain, each step strictly
@@ -2595,26 +1019,6 @@ def _q_events_funnel(spark, sf_dir):
     user-keyed join per later step, filters pruned before the shuffle;
     the oracle is the identical chained-min formulation."""
     return events.funnel(_events(spark, sf_dir))
-
-
-def _q_link_adamic_adar(spark, sf_dir):
-    """Adamic-Adar missing-link scores (ops/graph.py::adamic_adar) over
-    the undirected link graph: common neighbors weighted by
-    1/ln(degree), degree-capped before pair formation (the cocitation
-    gate). The KG-completion ranking feature; the oracle is the
-    independent self-join-on-neighbor formulation."""
-    e, _ = _link_edges(spark, sf_dir)
-    return graph.adamic_adar(e)
-
-
-def _q_char_entropy(spark, sf_dir):
-    """Character-entropy quality telemetry (ops/textstats.py::
-    char_entropy): bits/char of the normalized text via two partial-
-    agged aggregations (-sum(p log2 p) = log2(N) - sum(n log2 n)/N).
-    The cheap both-tails anomaly gate (binary junk high, repeated-char
-    spam ~0); oracle replays the identical plan with
-    regexp_extract_all('.') character rows."""
-    return textstats.char_entropy(_docs(spark, sf_dir))
 
 
 def _cents(col):
@@ -2767,14 +1171,6 @@ def _q_tpch_part_margin(spark, sf_dir):
                     "n_lines"))
 
 
-def _q_events_retention(spark, sf_dir):
-    """Weekly cohort retention (ops/events.py::cohort_retention): users
-    bucketed by first-activity week, counted per return week. Three
-    partial-agged aggregations, no window; the oracle replays the
-    identical bucket arithmetic."""
-    return events.cohort_retention(_events(spark, sf_dir), days=7)
-
-
 def _q_tpch_order_priority(spark, sf_dir):
     """TPC-H Q4-shape order-priority check: orders in one quarter with
     AT LEAST ONE late line (shipped > 60 days after order date),
@@ -2794,208 +1190,6 @@ def _q_tpch_order_priority(spark, sf_dir):
            + F.expr("INTERVAL 60 DAYS")), "left_semi")
     return (late.groupBy("o_orderpriority")
             .agg(F.count(F.lit(1)).alias("n_orders")))
-
-
-def _q_link_kcore(spark, sf_dir):
-    """Bounded 3-core peeling (ops/graph.py::kcore_peel, 8 synchronous
-    rounds in one lazy plan): link-farm / citation-ring density mining;
-    dropped_round orders nodes by how early they peel. The oracle
-    unrolls the identical rounds as chained CTEs."""
-    e, _ = _link_edges(spark, sf_dir)
-    return graph.kcore_peel(e, k=3, rounds=8)
-
-
-def _q_neardup_recall(spark, sf_dir):
-    """LSH near-dup acceptance telemetry (ops/dedup.py::neardup_recall):
-    recall/precision of the banded-MinHash pipeline vs EXACT all-pairs
-    Jaccard ground truth on a deterministic slice (base doc_id % 17 ==
-    0 of the augmented corpus, so each kept base doc keeps its known
-    duplicates). The ivfpq_recall counterpart for dedup; the oracle
-    replays BOTH pipelines on the same slice."""
-    aug = _augmented_docs(spark, sf_dir).filter(
-        (F.col("doc_id") % 1000000) % 17 == 0)
-    return dedup.neardup_recall(aug, threshold=0.5)
-
-
-def _q_ann_multiprobe(spark, sf_dir):
-    """Multi-probe LSH top-k (ops/simsearch.py::
-    hyperplane_multiprobe_topk, Lv et al. 2007): the query probes its
-    bucket + all 8 one-bit-flip neighbors - many-tables recall at
-    one-table cost; expansion rides the broadcast query side only. The
-    oracle replays signatures and the probe union."""
-    return simsearch.hyperplane_multiprobe_topk(_emb(spark, sf_dir))
-
-
-def _q_hll_shard_merge(spark, sf_dir):
-    """HLL mergeability as an oracled query (ops/sketches.py::
-    hll_registers): register tables built independently per shard
-    (doc_id parity) then merged by groupBy(bucket).max MUST equal the
-    registers of the whole corpus - max is associative/commutative, so
-    sketch union across shards/days/restarts is exact, not approximate.
-    The output carries both register sets and the equality flag; the
-    oracle recomputes all three sides."""
-    from eventrelationextractor_spark.ops import sketches
-    d = _docs(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(
-        F.split(dedup.normalized_text(F.col("text")), " ")).alias("w"))         .filter(F.col("w") != "")
-    a = sketches.hll_registers(tok.filter(F.col("doc_id") % 2 == 0), "w")
-    b = sketches.hll_registers(tok.filter(F.col("doc_id") % 2 == 1), "w")
-    merged = a.unionByName(b).groupBy("bucket").agg(
-        F.max("rho").alias("rho_merged"))
-    full = sketches.hll_registers(tok, "w")         .select("bucket", F.col("rho").alias("rho_full"))
-    return (merged.join(full, "bucket", "full")
-            .select("bucket",
-                    F.coalesce("rho_merged", F.lit(-1)).alias("rho_merged"),
-                    F.coalesce("rho_full", F.lit(-1)).alias("rho_full"),
-                    (F.coalesce("rho_merged", F.lit(-1))
-                     == F.coalesce("rho_full", F.lit(-1))).alias("equal")))
-
-
-def _q_host_lang_profile(spark, sf_dir):
-    """Per-host language routing profile (ops/urls.py::host_profile
-    over the REAL trigram lang-id): hosts staged as doc_id % 7, so each
-    host sees a deterministic mix of the 12 staged languages; dominant
-    label = count-desc/label-asc argmax as a min-of-struct AGGREGATION
-    (the LPA vote pattern - no per-host window). The oracle composes
-    the closed-form trigram twin with an independent QUALIFY argmax."""
-    d = _multilingual_docs(spark, sf_dir)
-    lp = textstats.lang_id_trigram(d).select("doc_id", "predicted_lang")
-    hosts = _docs(spark, sf_dir).select(
-        "doc_id", F.concat(F.lit("h"), (F.col("doc_id") % 7).cast("string"),
-                           F.lit(".example.org")).alias("host"))
-    return urls.host_profile(lp.join(hosts, "doc_id"))
-
-
-def _q_hashed_vectors(spark, sf_dir):
-    """Feature-hashed document vectors (ops/textstats.py::
-    hashed_doc_vectors, Weinberger et al. 2009): sign-alternating
-    md5 bucket shares, sparse (id, dim_idx, value) rows - the
-    vocabulary-free text->vector bridge into the embedding operators.
-    Oracle replays hash, sign, counts and normalization."""
-    return textstats.hashed_doc_vectors(_docs(spark, sf_dir), dim=64)
-
-
-def _q_events_props(spark, sf_dir):
-    """Semi-structured JSON extraction over the events.props column
-    (the last driver-provided surface): get_json_object pulls the 'k'
-    field JVM-side (no UDF, rides the scan), rolled up to a bucket
-    histogram with per-bucket value stats - the ubiquitous
-    properties-blob pattern of every event pipeline. Oracle =
-    DuckDB's json_extract twin."""
-    ev = _events(spark, sf_dir)
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (ev.select(k.alias("k"), "value")
-            .groupBy((F.col("k") % 10).alias("k_bucket"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.min("k").alias("min_k"), F.max("k").alias("max_k"),
-                 F.round(F.sum("value"), 4).alias("sum_value")))
-
-
-def _q_table_profile(spark, sf_dir):
-    """One-pass data-quality profile of the documents table
-    (ops/textstats.py::profile_table): per column the null count,
-    exact distinct count and min/max - the trust-but-verify onboarding
-    pass. One aggregation job, stack()-unpivoted; the oracle is the
-    per-column UNION twin."""
-    return textstats.profile_table(_docs(spark, sf_dir))
-
-
-def _q_profile_drift(spark, sf_dir):
-    """Snapshot-to-snapshot profile drift
-    (ops/textstats.py::profile_drift over two profile_table passes):
-    the new snapshot drops `source`, adds `len_bucket`, and nulls lang
-    on the doc_id % 7 slice - exercising removed/added/kept statuses,
-    the null-rate-jump flag and -1 sentinels. All rates are integer ppm
-    (div), never float ratios."""
-    docs = _docs(spark, sf_dir)
-    old = docs.select("doc_id", "lang", "source")
-    new = docs.select(
-        "doc_id",
-        F.when(F.expr("doc_id % 7 = 0"),
-               F.lit(None).cast("string")).otherwise(F.col("lang"))
-        .alias("lang"),
-        F.expr("cast(n_chars as bigint) div 200").alias("len_bucket"))
-    return textstats.profile_drift(textstats.profile_table(old),
-                                   textstats.profile_table(new))
-
-
-def _q_web_curation(spark, sf_dir):
-    """Session-6 composition showcase (the crawl-side corpus_curation):
-    multi-host staging -> quality_score -> badwords gate -> sentence
-    gate -> host-reputation gate (with rescue) -> deterministic
-    training_order over the survivors. Five shipped operators, joined
-    on the doc key; the oracle composes each stage's standalone SQL
-    fragment exactly as the Spark chain composes the operators."""
-    w = _web_urls(spark, sf_dir)
-    q = textstats.quality_score(w).select("doc_id", "url", "quality")
-    b = textstats.badwords_stats(w, BADWORDS, max_ratio=0.09)         .select("doc_id", F.col("keep").alias("bad_ok"))
-    s = textstats.sentence_stats(w).select(
-        "doc_id", (F.col("mean_sent_words") <= 75).alias("sent_ok"))
-    gated = (q.join(b, "doc_id").join(s, "doc_id")
-             .filter(F.col("bad_ok") & F.col("sent_ok")))
-    kept = urls.host_reputation(gated, score_col="quality",
-                                host_threshold=0.3, doc_threshold=0.5)         .select("doc_id", "host", "quality")
-    ordered = mixing.training_order(kept, n_shards=4)
-    return (kept.join(ordered, "doc_id")
-            .select("doc_id", "host", "quality", "shard", "pos"))
-
-
-def _q_graph_stats(spark, sf_dir):
-    """Structural link-graph telemetry (ops/graph.py::graph_stats):
-    node/edge counts, reciprocity (the link-farm health number),
-    out-degree profile - one distinct pass + one reversed-key
-    equi-join + one degree aggregation. Oracle is the verbatim twin."""
-    e, _ = _link_edges(spark, sf_dir)
-    return graph.graph_stats(e)
-
-
-def _q_winnowing_pairs(spark, sf_dir):
-    """MOSS pair report (ops/dedup.py::winnowing_pairs): docs ranked by
-    shared winnowing fingerprints with the containment-style overlap
-    score, pair space = graph_compose.doc_pair_counts over
-    (fingerprint -> doc) edges (boilerplate fingerprints capped before
-    any pair forms). Run over the augmented corpus so known dup pairs
-    are the positives; the oracle replays fingerprints, cap, counts
-    and score."""
-    return dedup.winnowing_pairs(_augmented_docs(spark, sf_dir),
-                                 k=16, window=8, min_shared=20,
-                                 max_fingerprint_df=20)
-
-
-def _q_embedding_class_stats(spark, sf_dir):
-    """Per-class embedding QA (ops/cluster.py::class_stats) over the
-    embeddings.label column (the last unused driver column): class
-    size, centroid norm, within-class cohesion (mean cosine to the own
-    centroid). The Lloyd-update per-dim aggregation reassembled per
-    label + one broadcast join back; the oracle rebuilds centroids
-    with the list(m ORDER BY pos) pattern and list_dot_product."""
-    return cluster.class_stats(_emb(spark, sf_dir))
-
-
-def _q_sitemap_seeds(spark, sf_dir):
-    """Sitemap declarations parsed from per-host robots.txt
-    (ops/urls.py::sitemap_seeds) - the third robots directive next to
-    Disallow and Crawl-delay; one host declares two sitemaps, one
-    declares none (emits nothing). The robots fixture scales with the
-    corpus via a doc-derived suffix so the query is SF-sensitive."""
-    hosts = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 50).alias("hid")).distinct()
-    robots = hosts.select(
-        F.concat(F.lit("h"), F.col("hid").cast("string"),
-                 F.lit(".example.org")).alias("host"),
-        F.concat(
-            F.lit("User-agent: *\nDisallow: /tmp\n"),
-            F.when(F.col("hid") % 3 == 0,
-                   F.concat(F.lit("Sitemap: https://h"),
-                            F.col("hid").cast("string"),
-                            F.lit(".example.org/sitemap.xml\n")))
-            .otherwise(F.lit("")),
-            F.when(F.col("hid") % 6 == 0,
-                   F.concat(F.lit("Sitemap: https://h"),
-                            F.col("hid").cast("string"),
-                            F.lit(".example.org/news-sitemap.xml\n")))
-            .otherwise(F.lit(""))).alias("robots_txt"))
-    return urls.sitemap_seeds(robots)
 
 
 def _q_tpch_returned_items(spark, sf_dir):
@@ -3026,16 +1220,6 @@ def _q_tpch_returned_items(spark, sf_dir):
                     "c_mktsegment",
                     (F.col("rev_c2") / 10000.0).alias("lost_revenue"),
                     "n_lines", F.col("rnk").cast("long").alias("rnk")))
-
-
-def _q_training_order(spark, sf_dir):
-    """Deterministic global training shuffle
-    (ops/mixing.py::training_order): md5-fate shard + in-shard rank ->
-    (doc_id, shard, pos), reproducible across engines/reruns and
-    resumable by (shard, pos). One Exchange on shard + the in-shard
-    sort the shard writer performs anyway; the oracle is the
-    row_number twin over the identical hash."""
-    return mixing.training_order(_docs(spark, sf_dir), n_shards=8)
 
 
 def _q_tpch_volume_shipping(spark, sf_dir):
@@ -3513,41 +1697,6 @@ def _q_tpch_waiting_suppliers(spark, sf_dir):
                     F.col("rnk").cast("long").alias("rnk")))
 
 
-def _q_compaction_plan(spark, sf_dir):
-    """Small-file compaction planning (ops/maintenance.py): a
-    deterministic file manifest synthesized from the documents table
-    (partition = doc_id mod 8, size from n_chars) bin-packed to 256KB
-    merge groups - per-partition window cumsum, append-stable."""
-    d = _docs(spark, sf_dir)
-    files = d.select(
-        (F.col("doc_id") % 8).cast("long").alias("partition"),
-        F.format_string("part-%08d.parquet", F.col("doc_id")).alias("path"),
-        (F.col("n_chars") * 997 + 4096).cast("long").alias("size_bytes"))
-    return maintenance.compaction_plan(files, target_bytes=256 * 1024)
-
-
-def _q_skew_profile(spark, sf_dir):
-    """Key-skew profiling (ops/maintenance.py) over events.user_id: the
-    top-20 heaviest keys, their row share, and the salt fan-out a
-    200-partition shuffle on this key needs."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return maintenance.skew_profile(ev, "user_id", n_partitions=200,
-                                    top_k=20)
-
-
-def _q_kanon_suppress(spark, sf_dir):
-    """k-anonymity suppression (ops/maintenance.py): quasi-identifier =
-    (lang, source, n_chars div 200); groups smaller than k=5 are marked
-    suppressed before any per-group stats could be released."""
-    d = _docs(spark, sf_dir).withColumn(
-        "len_bucket", F.expr("cast(n_chars as bigint) div 200"))
-    out = maintenance.kanon_suppress(
-        d.select("doc_id", "lang", "source", "len_bucket"),
-        ["lang", "source", "len_bucket"], k=5)
-    return out.select("doc_id", "lang", "source", "len_bucket",
-                      "group_n", "is_suppressed")
-
-
 def _q_events_stream_enrich(spark, sf_dir):
     """view->click attribution within 30 min
     (ops/events.py::interval_enrich). The SAME expression is Spark's
@@ -3572,20 +1721,6 @@ def _q_events_stream_enrich(spark, sf_dir):
         F.col("l_ts").cast("timestamp_ntz").alias("l_ts"),
         "r_id", "r_type",
         F.col("r_ts").cast("timestamp_ntz").alias("r_ts"))
-
-
-def _q_ldiversity_suppress(spark, sf_dir):
-    """l-diversity gate (ops/maintenance.py::ldiversity_suppress):
-    same quasi-identifier as kanon_suppress, sensitive attribute =
-    lang; groups whose members all share one lang are homogeneity
-    leaks even when k-anonymous."""
-    d = _docs(spark, sf_dir).withColumn(
-        "len_bucket", F.expr("cast(n_chars as bigint) div 200"))
-    out = maintenance.ldiversity_suppress(
-        d.select("doc_id", "lang", "source", "len_bucket"),
-        ["source", "len_bucket"], "lang", l=2)
-    return out.select("doc_id", "lang", "source", "len_bucket",
-                      "group_n", "sensitive_n", "is_suppressed")
 
 
 def _q_ivm_refresh(spark, sf_dir):
@@ -3618,76 +1753,6 @@ def _q_ivm_refresh(spark, sf_dir):
     return maintenance.ivm_refresh(snap, drol)
 
 
-def _q_cdx_fetchlist(spark, sf_dir):
-    """Common-Crawl CDX index selection (spark/cdx.py): deterministic
-    CDX(J) lines staged from doc_ids (two captures for every third url,
-    404s, non-html mimes, shared digests across adjacent docs, plus
-    corrupt lines for doc_id%13==0 that must route to the bad frame,
-    not crash or leak into the fetch list) -> parse -> latest-capture
-    per urlkey -> status/mime gate -> digest-level canonical marking.
-    The whole WHICH-bytes-to-fetch decision a 100-TB crawl read makes
-    before opening any WARC."""
-    from eventrelationextractor_spark.spark import cdx as cdxmod
-    d = _docs(spark, sf_dir).select("doc_id")
-    js = ('{"url": "https://example.org/doc/%08d", "status": "%s",'
-          ' "mime": "%s", "digest": "%s", "length": "%d",'
-          ' "filename": "crawl-%d.warc.gz", "offset": "%d"}')
-    status = F.when(F.col("doc_id") % 7 == 0, "404").otherwise("200")
-    mime = F.when(F.col("doc_id") % 11 == 0,
-                  "application/pdf").otherwise("text/html")
-    digest = F.md5(F.expr("cast(doc_id div 2 as string)"))
-    length = (1000 + F.col("doc_id") % 5000).cast("long")
-
-    def capture(ts, cap_idx):
-        return F.format_string(
-            "org,example)/doc/%08d " + ts + " " + js,
-            F.col("doc_id"), F.col("doc_id"), status, mime, digest,
-            length, (F.col("doc_id") % 100).cast("long"),
-            (F.col("doc_id") * 1000 + cap_idx).cast("long"))
-
-    lines = (d.select(capture("20240101000000", 1).alias("line"))
-             .unionByName(d.filter(F.col("doc_id") % 3 == 0)
-                          .select(capture("20240201000000", 2)
-                                  .alias("line")))
-             .unionByName(d.filter(F.col("doc_id") % 13 == 0)
-                          .select(F.format_string(
-                              "corrupt-entry-%d not_a_timestamp {bad",
-                              F.col("doc_id")).alias("line"))))
-    good, _bad = cdxmod.parse_cdx(lines)
-    return cdxmod.select_captures(good)
-
-
-ROBOTS_FULL = [
-    # specific erexbot group + a star group that must be IGNORED for us
-    ("news.example.com",
-     "User-agent: erexbot\nDisallow: /d1/\nAllow: /d1/d2/\n"
-     "\nUser-agent: *\nDisallow: /\n"),
-    # star-only: allow/disallow tie on /d1 (tie -> allow) + a deeper block
-    ("blog.example.org",
-     "User-agent: *\nDisallow: /d1\nAllow: /d1\nDisallow: /d1/d2/\n"
-     "Crawl-delay: 4\nDisallow:\n"),
-    # consecutive-UA group header naming us second
-    ("www.sample.net",
-     "User-agent: googlebot\nUser-agent: erexbot\nDisallow: /p\n"),
-    # names neither us nor * -> no governing group -> everything allowed
-    ("shop.example.co", "User-agent: other\nDisallow: /\n"),
-]
-
-
-def _q_robots_gate_full(spark, sf_dir):
-    """RFC 9309 group-aware robots verdicts (ops/urls.py::
-    robots_gate_full): per-user-agent group selection (exact token,
-    else *; consecutive UA lines head one group), Allow/Disallow
-    longest-match precedence with allow winning ties, empty rule values
-    ignored, hosts without robots (or without a governing group)
-    allowed. Staged robots exercise every branch; the frontier is the
-    deterministic multi-domain url slice."""
-    frontier = _web_urls(spark, sf_dir).select("url")
-    robots = spark.createDataFrame(ROBOTS_FULL,
-                                   "host string, robots_txt string")
-    return urls.robots_gate_full(frontier, robots, agent="erexbot")
-
-
 def _q_hdr_quantiles(spark, sf_dir):
     """Mergeable log-linear quantile sketch (ops/sketches.py::hdr_*,
     HdrHistogram/DDSketch family): per-source shard sketches -> count
@@ -3711,48 +1776,6 @@ def _q_hdr_group_quantiles(spark, sf_dir):
     sk = sketches.hdr_buckets(_docs(spark, sf_dir), "n_chars",
                               group_cols=("source",))
     return sketches.hdr_group_quantiles(sk, ("source",))
-
-
-def _q_winsorize_lengths(spark, sf_dir):
-    """Sketch-driven winsorization (ops/sketches.py::winsorize_by_hdr):
-    n_chars clipped at the HDR-estimated p1/p99 - two passes, one
-    map-side clip against two broadcast integer thresholds; no sort,
-    no percentile_approx, engine-exact boundaries."""
-    return sketches.winsorize_by_hdr(_docs(spark, sf_dir), "n_chars",
-                                     "doc_id", lo=(1, 100),
-                                     hi=(99, 100))
-
-
-def _q_scd2_history(spark, sf_dir):
-    """Slowly-changing-dimension type-2 build
-    (ops/events.py::scd2_history): per-user event_type version history
-    with [valid_from, valid_to) validity. One Exchange on user_id, two
-    windows over one sort. Time base is integer microseconds via
-    ntz_epoch_us (TZ-proof field extraction; the former ltz cast was
-    session-zone-interpreted on the NTZ parquet ts) vs epoch_us."""
-    h = events.scd2_history(_events(spark, sf_dir))
-    us = lambda c: events.ntz_epoch_us(c)  # noqa: E731
-    return h.select("user_id", "attr_value",
-                    us("valid_from").alias("valid_from_us"),
-                    us("valid_to").alias("valid_to_us"),
-                    "version", "is_current")
-
-
-def _q_allen_relations(spark, sf_dir):
-    """Allen interval algebra (ops/events.py::allen_relations): the 13
-    exhaustive interval relations between per-(user, event_type)
-    activity spans - the full-resolution algebra CATENA's TLINK
-    vocabulary coarsens (CandidateLinks.java). Intervals are integer
-    microseconds; the classifier is a chained CASE evaluated in the
-    same fixed order on both engines (point intervals make guards
-    overlap, so order IS the semantics)."""
-    ev = _events(spark, sf_dir)
-    us = events.ntz_epoch_us("ts")
-    iv = (ev.groupBy("user_id", "event_type")
-          .agg(F.min(us).alias("start_ts"), F.max(us).alias("end_ts")))
-    return events.allen_relations(
-        iv, key_col="user_id", id_col="event_type",
-        start_col="start_ts", end_col="end_ts")
 
 
 # --- record linkage: shared derivation strings (valid Spark SQL AND
@@ -3815,21 +1838,6 @@ def _q_record_linkage(spark, sf_dir):
                                 possible_threshold=0)
 
 
-# ------------------------------------------------------------ session-5
-# image perceptual-hash dedup tier
-
-
-def _q_media_phash(spark, sf_dir):
-    """Image dHash fingerprints from a REAL PNG decode (ops/
-    multimodal.py::perceptual_hash): channel-sum gray, nearest-neighbor
-    9x8 grid, left<right gradient bits packed into four 16-bit bands -
-    every step integer, so the oracle replays the hash from the
-    closed-form pixel pattern of _media_pngs. Any decode or sampling
-    bug flips bits and breaks the value hash."""
-    media = _media_pngs(_docs(spark, sf_dir).select("doc_id"))
-    return multimodal.perceptual_hash(media)
-
-
 def _q_dedup_bcubed(spark, sf_dir):
     """B-cubed precision/recall/F1 (ops/cluster.py::bcubed) of the
     end-to-end fuzzy dedup (dedup_resolution's transitive clusters)
@@ -3876,7 +1884,7 @@ def _q_isotonic_calibration(spark, sf_dir):
 def _q_rake_keyphrases(spark, sf_dir):
     """RAKE keyphrases (ops/mining.py::rake_keyphrases): top-3
     stopword-delimited phrases per document by integer micro-score -
-    the model-free multi-word companion to textrank_keywords. The
+    model-free and multi-word. The
     oracle replays tokenization, the stopword-run segmentation
     (cumulative-stopword window), freq/degree, and the floor-scaled
     scoring."""
@@ -3907,28 +1915,6 @@ def _q_link_rings(spark, sf_dir):
     return graph.bounded_rings(e, k=3)
 
 
-def _q_kanon_generalize(spark, sf_dir):
-    """Full-domain k-anonymity generalization (ops/maintenance.py::
-    kanon_generalize): the zipc quasi-identifier walks the ladder
-    exact -> div 10 -> div 100 -> constant and the release lands at
-    the minimal level where every group reaches k=5 - the constructive
-    companion to kanon_suppress/l-diversity/t-closeness. The oracle
-    replays every level's counts and the argmin level choice."""
-    base = _docs(spark, sf_dir).select(
-        (F.lit(10000) + (F.col("doc_id") * 37) % 900).alias("zipc"))
-    return maintenance.kanon_generalize(
-        base, ["zipc", "zipc div 10", "zipc div 100", "0"], k=5)
-
-
-def _q_embedding_kcenter(spark, sf_dir):
-    """Farthest-first k-center selection trace (ops/cluster.py::
-    kcenter_select) over the embeddings table: 6 maximally spread
-    vectors, ranked-float discipline (6dp-rounded squared L2 + id
-    tie-break). The oracle replays the greedy chain as chained CTEs -
-    same argmax, same full-precision least() accumulation."""
-    return cluster.kcenter_select(_emb(spark, sf_dir), k=6)
-
-
 def _q_media_phash_pairs(spark, sf_dir):
     """Image near-duplicate pairs: the multimodal member of the dedup
     tier family (ops/multimodal.py::perceptual_hash_pairs). 4x16-bit
@@ -3937,119 +1923,6 @@ def _q_media_phash_pairs(spark, sf_dir):
     the text tiers, over genuinely decoded pixels."""
     media = _media_pngs(_docs(spark, sf_dir).select("doc_id"))
     return multimodal.perceptual_hash_pairs(media)
-
-
-def _q_frequent_triples(spark, sf_dir):
-    """A-priori size-3 frequent itemsets (ops/mining.py::
-    frequent_triples) over the same (user, day) event-type baskets as
-    frequent_pairs. Downward closure applied at both levels before any
-    triple materializes; the oracle counts triples directly (pruning
-    is performance-only - count monotonicity guarantees identical
-    output)."""
-    ev = _events(spark, sf_dir).selectExpr(
-        "concat(cast(user_id as string), '|', cast(to_date(ts) as string))"
-        " AS basket",
-        "event_type AS item")
-    return mining.frequent_triples(ev, "basket", "item", min_support=2)
-
-
-def _q_dp_noisy_counts(spark, sf_dir):
-    """Differentially-private per-source doc counts (ops/maintenance.
-    py::dp_noisy_counts, Laplace mechanism, eps=0.5): deterministic
-    md5-seeded inverse-CDF noise so both engines draw the identical
-    Laplace sample; noisy_n rides the 6dp-rounded float discipline."""
-    return maintenance.dp_noisy_counts(_docs(spark, sf_dir), "source",
-                                       epsilon=0.5)
-
-
-def _q_constraint_audit(spark, sf_dir):
-    """Data-quality expectation suite (ops/maintenance.py::
-    expectation_counts + fk_orphans): five single-scan row constraints
-    on lineitem (one partial-agg pass, stack() unpivot), two
-    referential-integrity anti-joins (lineitem->orders,
-    orders->customer) and a key-uniqueness audit on orders - the
-    pre-publish audit a lakehouse table runs after every batch load.
-    All counts exact integers."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    od = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    cu = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    suite = maintenance.expectation_counts(li, {
-        "li_quantity_range": "NOT (l_quantity >= 1 AND l_quantity <= 50)",
-        "li_discount_range": "NOT (l_discount >= 0 AND l_discount <= 0.25)",
-        "li_price_positive": "NOT (l_extendedprice > 0)",
-        "li_shipdate_not_null": "l_shipdate IS NULL",
-        "li_returnflag_domain": "l_returnflag NOT IN ('A', 'N', 'R')",
-    })
-    fk1 = maintenance.fk_orphans(li, "l_orderkey", od, "o_orderkey",
-                                 "li_order_fk")
-    fk2 = maintenance.fk_orphans(od, "o_custkey", cu, "c_custkey",
-                                 "ord_cust_fk")
-    uniq = od.agg(
-        F.count(F.lit(1)).cast("long").alias("checked"),
-        F.countDistinct("o_orderkey").cast("long").alias("nd")) \
-        .select(F.lit("ord_key_unique").alias("check_name"), "checked",
-                (F.col("checked") - F.col("nd")).cast("long")
-                .alias("violations"),
-                F.expr("(1000000 * (checked - nd)) div checked")
-                .alias("violation_ppm"))
-    return suite.unionByName(fk1).unionByName(fk2).unionByName(uniq)
-
-
-def _q_stopword_discovery(spark, sf_dir):
-    """Corpus-adaptive stopword discovery (ops/bm25.py::
-    stopword_profile): top-40 document-frequency terms with exact
-    integer df_ppm and 6dp cross-source entropy (floats enter only
-    through ln of exact integers). TakeOrderedAndProject top-k, never
-    a vocabulary-wide sort."""
-    return bm25.stopword_profile(_docs(spark, sf_dir), k=40,
-                                 threshold_ppm=500000)
-
-
-def _q_bm25f_search(spark, sf_dir):
-    """Fielded BM25F retrieval (ops/bm25.py::bm25f_topk, Zaragoza et
-    al. 2004 simple BM25F) over (body, anchor) with anchor weight 2.5:
-    per-field length-normalized tfs combine BEFORE one shared
-    saturation - the web-search formulation where anchor text is the
-    high-weight off-page signal. The anchor field is a pure function
-    of doc_id (topic tag + page name + verb), mirrored in the SQL
-    twin; scores 6dp + id tie-break."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "text",
-        F.concat(F.lit("topic"), (F.col("doc_id") % 7).cast("string"),
-                 F.lit(" page"), F.col("doc_id").cast("string"),
-                 F.lit(" "),
-                 F.element_at(F.array(F.lit("click"), F.lit("read"),
-                                      F.lit("link")),
-                              (F.col("doc_id") % 3 + 1).cast("int")))
-        .alias("anchor"))
-    return bm25.bm25f_topk(d, ["merge", "topic3", "click"],
-                           [("text", 1.0, 0.75), ("anchor", 2.5, 0.5)],
-                           k=15)
-
-
-def _q_mutual_nn_pairs(spark, sf_dir):
-    """Reciprocal-nearest-neighbor pairs (ops/simsearch.py::
-    mutual_nn_pairs) over the embeddings table: hyperplane-LSH bucket
-    candidates (hot buckets capped), per-vector argmax AGGREGATION on
-    the 6dp-rounded cosine with id tie-break, one self-equi-join for
-    mutuality. The strict-precision member of the embedding dedup
-    family."""
-    return simsearch.mutual_nn_pairs(_emb(spark, sf_dir), n_planes=8,
-                                     cap=1000)
-
-
-def _q_join_size_estimate(spark, sf_dir):
-    """Correlated-sampling join-cardinality estimation (ops/
-    maintenance.py::sampled_join_estimate, rate 1/8) for orders ><
-    lineitem on orderkey - the optimizer-statistics op that prices a
-    join before running it. Same md5 gate on both sides (coordinated
-    sampling: unbiased for equi-join size); the exact pass runs here
-    only because the toy gate can afford the audit."""
-    od = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    return maintenance.sampled_join_estimate(od, "o_orderkey",
-                                             li, "l_orderkey",
-                                             rate_denom=8)
 
 
 def _q_bucketed_batching(spark, sf_dir):
@@ -4180,87 +2053,10 @@ def _q_gazetteer_spans(spark, sf_dir):
                                   GAZETTEER_PHRASES)
 
 
-def _q_split_leakage(spark, sf_dir):
-    """Train/test contamination audit (ops/maintenance.py::
-    split_leakage) over the augmented corpus (planted exact-dup sets):
-    closed-form pair counts per split pair - C(n,2) within, n*m across
-    - from the per-fingerprint split histogram; NO pair
-    materialization, two partial-agg shuffles total."""
-    return maintenance.split_leakage(
-        _augmented_docs(spark, sf_dir),
-        {"train": 0.8, "val": 0.1, "test": 0.1})
-
-
-def _q_katz_centrality(spark, sf_dir):
-    """Katz centrality (ops/graph.py::katz_centrality): 3 exact-integer
-    ppm iterations of 1e6 + (in-neighbor sum) div 8 over the synthetic
-    link graph - PageRank's loop geometry without out-degree division
-    or dangling mass. Oracle unrolls identical chained CTEs."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.katz_centrality(e, nodes=nodes, n_iter=3, atten_den=8)
-
-
-PRUNE_WORKLOAD = [(1, 0, 7, 0, 63), (2, 0, 63, 0, 7), (3, 10, 20, 10, 20),
-                  (4, 32, 63, 32, 63), (5, 5, 5, 0, 63)]
-
-
-def _q_layout_prune_ab(spark, sf_dir):
-    """Layout A/B pricing (ops/layout.py::layout_prune_ab): zone-map
-    prune rate of natural ingest order vs a Z-order rewrite for a
-    5-rectangle workload - the decision table consulted BEFORE paying
-    for an OPTIMIZE. Envelope builds are the only corpus-sized work;
-    pricing is (n_files x workload) rows."""
-    from eventrelationextractor_spark.ops import layout
-    pts = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 64).alias("x"),
-        ((F.col("doc_id") * 7 + 3) % 64).alias("y"),
-        F.col("doc_id"))
-    return layout.layout_prune_ab(pts, "x", "y", "doc_id",
-                                  PRUNE_WORKLOAD, n_files=8, bits=6)
-
-
-def _q_cluster_labels(spark, sf_dir):
-    """c-TF-IDF cluster labeling (ops/bm25.py::class_tfidf_labels,
-    BERTopic's labeler) over the lang strata: per class top-5 terms by
-    tf_class * ln(n_classes/df_classes). One corpus-sized partial agg;
-    everything after runs at class-vocabulary scale."""
-    return bm25.class_tfidf_labels(_docs(spark, sf_dir), "lang", k=5)
-
-
-def _q_landmark_distances(spark, sf_dir):
-    """ALT landmark distance bounds (ops/graph.py::landmark_bounds,
-    Goldberg-Harrelson) over the symmetrized link graph: one
-    seed-tagged BFS, then each query pair answered by two keyed joins
-    against the landmark-distance table - graph touched once."""
-    e, _ = _link_edges(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    n = docs.count()
-    landmarks = docs.filter(F.col("doc_id") % 50 == 0) \
-        .select(F.col("doc_id").alias("node"))
-    pairs = docs.filter(F.col("doc_id") % 13 == 0).select(
-        F.col("doc_id").alias("u"),
-        ((F.col("doc_id") * 31 + 7) % n).alias("v"))
-    return graph.landmark_bounds(e, landmarks, pairs, max_hops=4)
-
-
-def _q_burrows_delta(spark, sf_dir):
-    """Burrows's Delta stylometric distances (ops/textstats.py::
-    burrows_delta) over a doc_id%20 stratum - 190 pair rows,
-    everything after one corpus partial agg at statistic scale. Keyed
-    on an id stratum, NOT source (the kendall_tau lesson): the sf1.0
-    corpus has per-doc-unique sources, which turns the source-pair
-    join into n_docs^2 - reproduced as a 20+GB shuffle-spill blowup
-    before this pin. The operator's contract is a statistic-scale
-    group column. The corpus-forensics sibling of spoof_hosts."""
-    d = _docs(spark, sf_dir).withColumn(
-        "src20", F.concat(F.lit("s"), (F.col("doc_id") % 20)))
-    return textstats.burrows_delta(d, "src20", n_words=30)
-
-
 def _q_llr_collocations(spark, sf_dir):
     """Dunning log-likelihood collocations (ops/textstats.py::
-    llr_collocations): the significance-test counterpart of
-    pmi_collocations - same two partial-agg counts + vocabulary-scale
+    llr_collocations): the significance-test form of collocation
+    scoring - two partial-agg counts + vocabulary-scale
     joins, LLR = fixed 4-term 2x2 contingency expression over exact
     integer counts, 6dp-rounded before the top-50 cut."""
     return textstats.llr_collocations(_docs(spark, sf_dir),
@@ -4277,9 +2073,8 @@ def _q_mattr_diversity(spark, sf_dir):
 
 def _q_spearman_rho(spark, sf_dir):
     """Spearman rank correlation (ops/quality.py::spearman_rho) on the
-    same strata/measures as kendall_tau - the O(n log n) rank-space
-    twin of tau's O(n^2) pair join, so the two queries document the
-    toy-vs-scale trade explicitly. Tie-averaged ranks kept exact via
+    O(n log n) rank space instead of Kendall tau's O(n^2) pair
+    join. Tie-averaged ranks kept exact via
     rank_asc + n + 1 - rank_desc; integer moments, one sqrt per key."""
     t = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0).select(
         "doc_id", (F.col("doc_id") % 16).alias("grp"), "n_chars",
@@ -4306,7 +2101,7 @@ def _q_equidepth_hist(spark, sf_dir):
     """Equi-depth histogram of n_chars (ops/maintenance.py::
     equidepth_histogram): 8 CBO-style buckets with count/min/max/ndv.
     Exact ntile branch under the gate; the percentile_approx branch is
-    the same-schema 100-TB path (length_percentiles contract)."""
+    the same-schema 100-TB path."""
     return maintenance.equidepth_histogram(_docs(spark, sf_dir),
                                            "n_chars", n_buckets=8)
 
@@ -4373,7 +2168,7 @@ def _q_boruvka_mst(spark, sf_dir):
     oracle replays Kruskal under the identical (w, eid) order in a
     single-row recursive CTE carrying the label list - same unique
     forest. sf1.0 note: the oracle's list recursion is O(V*E)
-    (verification-only wall, the winnowing_pairs contract); Spark does
+    (a verification-only wall); Spark does
     the same graph in log-rounds of joins."""
     ks = (_docs(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
           .select(F.expr("doc_id div 10").alias("k")))
@@ -4396,8 +2191,7 @@ def _q_media_sobel(spark, sf_dir):
     (_media_pngs): gray = (r+g+b) div 3, mag2 = Gx^2+Gy^2, no sqrt -
     so actual decoded pixels sit under the value hash with zero float
     tolerance. The oracle re-derives every interior gradient from the
-    closed pixel form (the media_decode_stats contract, one step
-    deeper: a 3x3 stencil, not just channel means)."""
+    closed pixel form (a 3x3 stencil, not just channel means)."""
     return multimodal.sobel_stats(
         _media_pngs(_docs(spark, sf_dir).select("doc_id")))
 
@@ -4438,18 +2232,6 @@ def _q_skipgram_ppmi(spark, sf_dir):
                                    min_count=5, k=50)
 
 
-def _q_link_coloring(spark, sf_dir):
-    """Jones-Plassmann priority coloring (ops/graph.py::
-    priority_coloring) of the synthetic link graph: round r colors the
-    md5-priority local maxima among still-uncolored nodes - each round
-    an independent set, remaining frame shrinks every round. color(v)
-    = longest strictly priority-increasing path out of v, which the
-    oracle computes as a DEDUPLICATING recursive CTE over the
-    low->high DAG (rows bounded V x max_color, no path enumeration)."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.priority_coloring(e, nodes)
-
-
 def _q_fd_violations(spark, sf_dir):
     """Functional-dependency audit (ops/maintenance.py::
     fd_violations): g3 repair distance for three candidate FDs over
@@ -4471,35 +2253,6 @@ def _q_matryoshka_eval(spark, sf_dir):
     return simsearch.matryoshka_agreement(_emb(spark, sf_dir),
                                           dims=(8, 16, 32, 64),
                                           n_queries=10)
-
-
-def _q_bootstrap_ci(spark, sf_dir):
-    """Poisson-bootstrap mean CI (ops/quality.py::poisson_bootstrap_ci)
-    over document lengths: the one-pass mergeable bootstrap (per-row
-    Poisson(1) weights from md5 u32 vs precomputed integer CDF
-    thresholds - both engines draw identical weights), 200 replicates,
-    fixed order statistics 5/100/196."""
-    return quality.poisson_bootstrap_ci(_docs(spark, sf_dir),
-                                        "doc_id", "n_chars",
-                                        n_boot=200, seed="bs")
-
-
-def _q_cuped_ab(spark, sf_dir):
-    """CUPED-adjusted A/B readout (ops/quality.py::cuped_ab): per-user
-    pre/post cent sums (even/odd event ids - correlated through user
-    activity, so theta bites), arm = user parity; pooled theta,
-    adjusted means and the two-sample z, all from one pass of exact
-    integer moments."""
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_id",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"))
-    pu = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_id") % 2 == 0, F.col("cents"))
-              .otherwise(0)).cast("long").alias("x"),
-        F.sum(F.when(F.col("event_id") % 2 == 1, F.col("cents"))
-              .otherwise(0)).cast("long").alias("y"))
-    d = pu.select((F.col("user_id") % 2).alias("arm"), "y", "x")
-    return quality.cuped_ab(d, "arm", "y", "x")
 
 
 def _q_texttiling(spark, sf_dir):
@@ -4537,149 +2290,6 @@ def _q_isolation_forest(spark, sf_dir):
                                     k=20)
 
 
-def _q_temporal_reach(spark, sf_dir):
-    """Time-respecting earliest-arrival reachability (ops/graph.py::
-    temporal_reachability) over the link graph with deterministic edge
-    times (31src+17dst mod 100), seeds = node%50==0 at t=0: paths must
-    move forward in time. Bounded 8-hop label-correcting relaxation -
-    one keyed frontier join + min-merge per round."""
-    e, nodes = _link_edges(spark, sf_dir)
-    te = e.withColumn(
-        "t", ((F.col("src") * 31 + F.col("dst") * 17) % 100))
-    seeds = nodes.filter(F.col("node") % 50 == 0)
-    return graph.temporal_reachability(te, seeds, max_hops=8)
-
-
-def _q_impute_median(spark, sf_dir):
-    """Group-median NULL imputation (ops/maintenance.py::
-    impute_group_median): doc_id%13 rows nulled, repaired by per-lang
-    exact lower median with a global-median fallback - windows over
-    the (group, value)-collapsed grain only."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "lang",
-        F.when(F.col("doc_id") % 13 == 0, F.lit(None))
-        .otherwise(F.col("n_chars")).cast("long").alias("val"))
-    return maintenance.impute_group_median(d, "lang", "val")
-
-
-def _q_fd_repair(spark, sf_dir):
-    """Majority-vote near-FD repair (ops/maintenance.py::fd_repair):
-    tag = pure function of doc_id%50 except a doc_id%53 corruption
-    stripe; repair rewrites each key's minority values to the
-    majority (count desc, value asc - as a partial-aggregable
-    min-struct, no window)."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", (F.col("doc_id") % 50).alias("k0"),
-        F.when(F.col("doc_id") % 53 == 0, F.lit("zz"))
-        .otherwise(F.concat(F.lit("v"), ((F.col("doc_id") % 50) % 7)
-                            .cast("string"))).alias("tag"))
-    return maintenance.fd_repair(d, "k0", "tag")
-
-
-def _q_event_seq_pairs(spark, sf_dir):
-    """Gap-bounded sequential patterns (ops/mining.py::
-    sequential_pairs): 'A then B within 3 steps' over (user, day)
-    sessions, support = distinct sessions - the ordered complement of
-    frequent_pairs and the noisy-funnel complement of
-    session_transitions. Contexts via equi-join probe keys, never a
-    range join."""
-    from pyspark.sql import Window as W
-    ev = _events(spark, sf_dir).select(
-        F.concat_ws("|", F.col("user_id"), F.to_date("ts")).alias("s"),
-        "event_id", "event_type")
-    pos = F.row_number().over(
-        W.partitionBy("s").orderBy("event_id")).cast("long")
-    t = ev.withColumn("pos", pos)
-    return mining.sequential_pairs(t, "s", "pos", "event_type",
-                                   max_gap=3, min_support=2, k=30)
-
-
-def _q_soundex_blocking(spark, sf_dir):
-    """Soundex phonetic blocking keys (Spark's built-in F.soundex)
-    over the top-200 alpha-only corpus terms - the classic
-    record-linkage blocking function beside the md5/fingerprint
-    blockers. The oracle re-implements American Soundex from scratch
-    in SQL (h/w transparency, first-letter participation in the
-    collapse, vowel separators - each semantics pinned by a probe
-    word in its construction), so the builtin is verified
-    term-for-term, not trusted."""
-    toks = _docs(spark, sf_dir).select(
-        F.explode(F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: t != "")).alias("term"))
-    dic = (toks.filter(F.col("term").rlike("^[a-z]+$"))
-           .groupBy("term").agg(F.count(F.lit(1)).alias("cnt")))
-    top = dic.orderBy(F.col("cnt").desc(), "term").limit(200)
-    return top.select("term", F.col("cnt").cast("long").alias("cnt"),
-                      F.soundex("term").alias("sdx"))
-
-
-def _stage_cat(spark, sf_dir):
-    """Deterministic CAT XML corpus, a pure function of doc_id (the
-    cdx_fetchlist staging convention): 5-6 tokens over 2 sentences, one
-    EVENT (class cycles by %3), one TIMEX3 whose anchor is MULTI-token
-    for even ids, a C-SIGNAL every 5th doc, a TLINK (relType cycles)
-    and a CLINK every 4th doc — every spark/cat.py branch exercised,
-    and the oracle can emit the expected parse in closed form."""
-    d = _docs(spark, sf_dir).select("doc_id")
-    n = (F.lit(5) + F.col("doc_id") % 2).cast("int")
-    tok = F.array_join(F.transform(F.sequence(F.lit(1), n), lambda i:
-        F.format_string(
-            '<token t_id="%d" sentence="%d" number="%d">tok%dx%d</token>',
-            i, F.when(i <= 3, 1).otherwise(2),
-            F.when(i <= 3, i).otherwise(i - 3),
-            F.col("doc_id"), i)), "")
-    cls = F.when(F.col("doc_id") % 3 == 0, "OCCURRENCE").otherwise("STATE")
-    tmx_anch = F.when(
-        F.col("doc_id") % 2 == 0,
-        F.lit('<token_anchor t_id="3"/><token_anchor t_id="4"/>')) \
-        .otherwise(F.lit('<token_anchor t_id="3"/>'))
-    sig = F.when(F.col("doc_id") % 5 == 0,
-                 F.lit('<C-SIGNAL m_id="3">'
-                       '<token_anchor t_id="1"/></C-SIGNAL>')) \
-        .otherwise(F.lit(""))
-    rel = F.element_at(F.array(F.lit("BEFORE"), F.lit("AFTER"),
-                               F.lit("INCLUDES")),
-                       (F.col("doc_id") % 3 + 1).cast("int"))
-    clink = F.when(F.col("doc_id") % 4 == 0,
-                   F.lit('<CLINK r_id="5"><source m_id="1"/>'
-                         '<target m_id="2"/></CLINK>')).otherwise(F.lit(""))
-    xml = F.concat(
-        F.format_string('<Document doc_name="d%d.xml">', F.col("doc_id")),
-        tok,
-        F.lit('<Markables><EVENT m_id="1" class="'), cls,
-        F.lit('"><token_anchor t_id="2"/></EVENT>'
-              '<TIMEX3 m_id="2" type="DATE" value="2024-01-0'),
-        (F.col("doc_id") % 9 + 1).cast("string"),
-        F.lit('">'), tmx_anch, F.lit("</TIMEX3>"), sig,
-        F.lit('</Markables><Relations><TLINK r_id="4" relType="'), rel,
-        F.lit('"><source m_id="1"/><target m_id="2"/></TLINK>'), clink,
-        F.lit("</Relations></Document>"))
-    return d.select("doc_id", xml.alias("xml"))
-
-
-def _q_cat_columns(spark, sf_dir):
-    """CAT XML -> column files (spark/cat.py::cat_to_columns, the
-    convertCATToColumns.py:1-75 surface — its `converter` backend is
-    absent from the reference, so semantics follow the public
-    Causal-TimeBank CAT format): typed from_xml parse, anchor explode,
-    smallest-m_id overlap pinning. Oracle = the staging's closed form."""
-    from eventrelationextractor_spark.spark import cat as catmod
-    return catmod.cat_to_columns(_stage_cat(spark, sf_dir))
-
-
-def _q_cat_roundtrip(spark, sf_dir):
-    """CAT -> TimeML -> CAT -> columns (convertCATToTimeML +
-    convertTimeMLToCAT round trip): the hash gate asserts the full
-    re-parse equals the closed-form expectation with the two documented
-    lossy axes applied (sentences collapse to 1 with running numbers;
-    C-SIGNAL has no TimeML inline form)."""
-    from eventrelationextractor_spark.spark import cat as catmod
-    staged = _stage_cat(spark, sf_dir)
-    back = catmod.timeml_to_cat(catmod.cat_to_timeml(staged))
-    return catmod.cat_to_columns(back)
-
-
 def _linkage_blocked_terms(spark, sf_dir):
     """Shared record-linkage staging: top-100 alpha dictionary terms
     UNION their deterministic single-deletion mangles (the symspell
@@ -4712,33 +2322,6 @@ def _q_jw_linkage(spark, sf_dir):
     return linkage.blocked_jw_pairs(t, "sdx", "term", threshold=0.85)
 
 
-def _q_dl_linkage(spark, sf_dir):
-    """Blocked typo linkage on TRUE (unrestricted) Damerau-Levenshtein
-    (ops/linkage.py::blocked_dl_pairs) over the same soundex-blocked
-    staging as jw_linkage: dl <= 2 on block-collided pairs only.
-    DuckDB's damerau_levenshtein builtin implements the SAME
-    Lowrance-Wagner metric (probed in-session on the DL('CA','ABC')=2
-    discriminator, where the restricted OSA variant says 3), so the
-    oracle calls the builtin and the kernel is verified term-for-term
-    by a pair-product parity test. Pure-BIGINT distance surface -
-    zero float slack under the hash gate."""
-    t = _linkage_blocked_terms(spark, sf_dir)
-    return linkage.blocked_dl_pairs(t, "sdx", "term", max_dist=2)
-
-
-def _q_hamming_topk(spark, sf_dir):
-    """Binary-quantized ANN (ops/simsearch.py::{sign_words,
-    hamming_topk}): each 64-dim float vector packs into two 32-bit
-    sign words, then exact Hamming top-5 for the first 10 query ids.
-    Distances are pure BIGINT bit_count(xor(...)) so ranking is
-    bit-exact on any engine (ties break on neighbor id) - the 1-bit
-    first-pass sketch a re-ranking stage refines at 100 TB. Oracle
-    packs the identical words via a list fold and ranks with the same
-    (hamming, cid) order."""
-    return simsearch.hamming_topk(_emb(spark, sf_dir),
-                                  n_queries=10, k=5)
-
-
 def _q_knn_shapley(spark, sf_dir):
     """Exact KNN-Shapley data valuation (ops/simsearch.py::
     knn_shapley, Jia et al. VLDB 2019): test = first 10 vectors,
@@ -4749,18 +2332,6 @@ def _q_knn_shapley(spark, sf_dir):
     tie-break. Oracle replays the identical window formulation."""
     return simsearch.knn_shapley(_emb(spark, sf_dir),
                                  n_test=10, k_nn=5, topn=10)
-
-
-def _q_hash_ring(spark, sf_dir):
-    """Consistent-hash ring with vnodes + minimal-movement audit
-    (ops/maintenance.py::hash_ring_assign): 8 nodes x 16 vnodes over
-    the documents keys, node 3 dropped for the second assignment.
-    The defining ring property - ONLY the dropped node's keys move -
-    is an output invariant (n_moved_away == n_keys for node 3, zero
-    elsewhere), making the hash gate a property check too."""
-    return maintenance.hash_ring_assign(_docs(spark, sf_dir), "doc_id",
-                                        n_nodes=8, n_vnodes=16,
-                                        drop_node=3)
 
 
 def _q_reuse_distance(spark, sf_dir):
@@ -4835,75 +2406,6 @@ def _ranker_runs(spark, sf_dir):
     return ra, rb, tf
 
 
-def _q_rbo_rankers(spark, sf_dir):
-    """Truncated rank-biased overlap at p=0.9 (ops/bm25.py::
-    rbo_truncated, Webber 2010) between the tf and density rankers'
-    top-10 lists — the offline how-different-are-they complement of
-    interleave_eval's which-is-better. rbo_e10 is an exact lockstep
-    BIGINT (weights 9^(d-1)*10^(10-d); no float exists anywhere)."""
-    ra, rb, _ = _ranker_runs(spark, sf_dir)
-    return bm25.rbo_truncated(ra, rb, depth=10)
-
-
-def _q_rich_club(spark, sf_dir):
-    """Rich-club profile (ops/graph.py::rich_club) of the synthetic
-    link graph: per distinct degree k, the induced subgraph of
-    deg > k nodes as (n_nodes, n_edges, phi_ppm). Both counts are
-    suffix sums over the degree / edge-min-degree histograms — no
-    per-k pass; the window runs over the statistic-scale histogram
-    only."""
-    e, nodes = _link_edges(spark, sf_dir)
-    return graph.rich_club(e)
-
-
-def _q_bleu_eval(spark, sf_dir):
-    """Corpus-level BLEU sufficient statistics (ops/textstats.py::
-    bleu_stats) over the rouge staging (system = first 2/3 of each
-    document's characters vs the full text as reference): one row per
-    n in 1..4 with clipped matches, modified precision ppm, and the
-    brevity-penalty length totals — all exact BIGINT; the float
-    geometric mean is a caller-side derivation by design."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.col("text").alias("ref"),
-        F.expr("substring(text, 1, (length(text) * 2) div 3)")
-        .alias("sys"))
-    return textstats.bleu_stats(d, "ref", "sys", max_n=4)
-
-
-def _q_pps_sample(spark, sf_dir):
-    """Madow systematic PPS sampling (ops/mixing.py::systematic_pps):
-    100 grid draws proportional to n_chars with the deterministic
-    midpoint start — exact-integer weighted corpus subsampling whose
-    global cumsum uses the bucket-offset scheme, never a
-    single-partition window. Oracle = the plain window-cumsum
-    formulation (single-node DuckDB can afford it), proving the
-    distributed cumsum exact."""
-    d = _docs(spark, sf_dir)
-    return mixing.systematic_pps(d, "n_chars", n_samples=100)
-
-
-def _q_attack_robustness(spark, sf_dir):
-    """Hub-removal robustness curve (ops/graph.py::attack_robustness,
-    Albert-Jeong-Barabasi): the doc_id % 20 stratum graph (the
-    greedy_matching/boruvka sizing rule — the oracle's transitive
-    closure is quadratic in component size BY NATURE) with 5 injected
-    hubs (j % 4 == 0 -> j % 5), shattered at k in {0, 1, 8}. Sizes
-    only are compared, so the engines' different component-label
-    orders (string-min vs numeric-min) cannot matter."""
-    js = (_docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-          .select(F.expr("doc_id div 20").alias("j")))
-    m = js.count()
-    e = (js.select(F.col("j").alias("src"),
-                   ((F.col("j") * 7 + 1) % m).alias("dst"))
-         .unionByName(js.select(F.col("j").alias("src"),
-                                ((F.col("j") * 13 + 3) % m)
-                                .alias("dst")))
-         .unionByName(js.filter(F.col("j") % 4 == 0)
-                      .select(F.col("j").alias("src"),
-                              (F.col("j") % 5).alias("dst"))))
-    return graph.attack_robustness(e, ks=(0, 1, 8))
-
-
 def _q_haar_signature(spark, sf_dir):
     """Haar activity signature (ops/events.py::haar_coefficients):
     15 unnormalized wavelet coefficients per user over the 16-slot
@@ -4911,197 +2413,6 @@ def _q_haar_signature(spark, sf_dir):
     NTZ datediff rule), closed-form slice sums, zero recursion, all
     BIGINT."""
     return events.haar_coefficients(_events(spark, sf_dir))
-
-
-def _q_wilson_rank(spark, sf_dir):
-    """Wilson lower-bound ranking (ops/quality.py::wilson_rank) of
-    purchase rates per props.k cohort — the
-    how-not-to-sort-by-average fix. The bound is a fixed IEEE
-    arithmetic tree (only + * / sqrt, no libm transcendental), so
-    floor(1e6*L) is bit-exact cross-engine; naive_ppm rides along to
-    show the ranking difference."""
-    d = _events(spark, sf_dir).select(
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        .alias("succ"))
-    return quality.wilson_rank(d, "k", "succ")
-
-
-def _q_bitemporal(spark, sf_dir):
-    """Bitemporal as-of reconstruction (ops/maintenance.py::
-    bitemporal_asof): a correction log staged from events (validity
-    axis = abstract integers decoupled from wall time; tx axis =
-    event_id mod 1000 so late transactions REWRITE earlier validity
-    versions; every 7th op a delete), reconstructed as-known-at
-    tx=700, effective-at validity=25. The oracle resolves
-    latest-tx-wins with an independent row_number formulation
-    mirroring the struct-max order."""
-    ev = _events(spark, sf_dir)
-    log = ev.select(
-        F.col("user_id").alias("id"),
-        (F.col("event_id") % 50).alias("valid_from"),
-        ((F.col("event_id") % 50) + 1 + F.col("user_id") % 10)
-        .alias("valid_to"),
-        (F.col("event_id") % 1000).alias("tx_time"),
-        F.when(F.col("event_id") % 7 == 0, "D").otherwise("U")
-        .alias("op"),
-        F.get_json_object("props", "$.k").cast("long").alias("value"))
-    return maintenance.bitemporal_asof(log, as_of_tx=700, valid_at=25)
-
-
-def _q_vacuum_plan(spark, sf_dir):
-    """Snapshot-aware vacuum planning (ops/maintenance.py::
-    vacuum_plan): files = the documents (created_day = doc_id % 60),
-    10 snapshots of which 6..9 are live, manifests reference file f
-    from snapshot s iff f % 5 != 0 and (f + s) % 4 == 0 (so every
-    f % 5 == 0 file is an orphan and the rest split live/expired),
-    retention horizon day 30. One left_anti + one semi join — the
-    Iceberg expire_snapshots + orphan-cleanup decision."""
-    files = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % 60).alias("created_day"),
-        F.col("n_chars").cast("long").alias("size_bytes"))
-    snaps = spark.range(10).select(F.col("id").alias("snapshot_id"))
-    manifests = (files.select("file_id")
-                 .crossJoin(F.broadcast(snaps))
-                 .filter((F.col("file_id") % 5 != 0)
-                         & ((F.col("file_id") + F.col("snapshot_id"))
-                            % 4 == 0)))
-    live = snaps.filter(F.col("snapshot_id") >= 6)
-    return maintenance.vacuum_plan(files, manifests, live,
-                                   retain_min_day=30)
-
-
-def _q_bowtie_census(spark, sf_dir):
-    """Broder bow-tie census (ops/graph.py::bowtie_census) of the
-    doc_id % 20 stratum DIRECTED graph (the WCC closure oracle is
-    quadratic in weak-component size — the attack_robustness sizing
-    rule): dangling every-17th nodes plus j -> j % 5 hub edges for
-    j % 4 == 0, j >= 5 (j >= 5 keeps the min pivot off a self-loop,
-    whose SCC would be trivially itself). Class membership is
-    label-order-independent (only equality with the core's weak
-    label is tested), so engine label conventions can't matter."""
-    js = (_docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-          .select(F.expr("doc_id div 20").alias("j")))
-    m = js.count()
-    live = js.filter(F.col("j") % 17 != 0)
-    e = (live.select(F.col("j").alias("src"),
-                     ((F.col("j") * 7 + 1) % m).alias("dst"))
-         .unionByName(live.select(F.col("j").alias("src"),
-                                  ((F.col("j") * 13 + 3) % m)
-                                  .alias("dst")))
-         .unionByName(js.filter((F.col("j") % 4 == 0)
-                                & (F.col("j") >= 5))
-                      .select(F.col("j").alias("src"),
-                              (F.col("j") % 5).alias("dst"))))
-    return graph.bowtie_census(e, max_hops=8)
-
-
-def _q_shapley_r2(spark, sf_dir):
-    """Exact Shapley/LMG R^2 decomposition (ops/quality.py::
-    shapley_r2) for the ols_value_model regression (event cents on
-    TZ-proof hour + epoch-day-mod-7): which calendar feature carries
-    the fit, with shared variance split by the two-order Shapley
-    average (phi1 + phi2 == r2_full by construction). BIGINT moments,
-    identical DOUBLE finale both engines."""
-    d = _events(spark, sf_dir).selectExpr(
-        "cast(floor(value * 100) as bigint) as cents",
-        "cast(hour(ts) as bigint) as hr",
-        "cast(datediff(cast(ts as date), DATE'1970-01-01') % 7"
-        " as bigint) as d7")
-    return quality.shapley_r2(d, "cents", "hr", "d7")
-
-
-def _q_partition_pruning(spark, sf_dir):
-    """Hive-style partitioned write + pruned read (the csv_roundtrip
-    staging discipline): documents written partitioned by
-    bucket = doc_id % 8, read back filtered to buckets {2, 5} — the
-    scan must touch 2 of 8 directories (PartitionFilters plan-
-    asserted in tests/test_r5s6_ops.py). The oracle never touches
-    the files: it recomputes the projection from the parquet view,
-    so a lossy partition write/discovery shows up as a hash
-    mismatch."""
-    path = os.path.join("/tmp", "erex_part_"
-                        + os.path.basename(os.path.normpath(sf_dir)))
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "n_chars", "lang",
-        (F.col("doc_id") % 8).alias("bucket"))
-    d.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    back = spark.read.parquet(path)
-    return (back.filter(F.col("bucket").isin(2, 5))
-            .select("doc_id", F.col("n_chars").cast("long")
-                    .alias("n_chars"), "lang",
-                    F.col("bucket").cast("long").alias("bucket")))
-
-
-def _q_bh_fdr(spark, sf_dir):
-    """Benjamini-Hochberg step-up FDR (ops/quality.py::bh_fdr) at
-    q = 1/20 over staged ppm p-values: every 20th doc is a planted
-    signal (p = doc_id % 50), the rest pseudo-uniform via the Knuth
-    multiplicative hash (doc_id * 2654435761 % 1e6, < 2^63). The
-    bounded-ppm-domain histogram turns the step-up rank condition
-    into a statistic-scale cumulative count — no global sort."""
-    d = _docs(spark, sf_dir).select(
-        F.when(F.col("doc_id") % 20 == 0, F.col("doc_id") % 50)
-        .otherwise((F.col("doc_id") * 2654435761) % 1000000)
-        .cast("long").alias("p_ppm"))
-    return quality.bh_fdr(d, q_num=1, q_den=20)
-
-
-def _q_huffman_dict(spark, sf_dir):
-    """Huffman dictionary code lengths (ops/maintenance.py::
-    huffman_dictionary) over the corpus word vocabulary: the
-    entropy-coded storage floor beside encoding_advisor's fixed-width
-    estimate. The merge sequence is totally ordered by
-    (freq, min-term), so the oracle's recursive list-state CTE
-    replays it merge for merge."""
-    return maintenance.huffman_dictionary(_docs(spark, sf_dir),
-                                          top_n=64)
-
-
-def _q_oov_curve(spark, sf_dir):
-    """Tokenizer vocabulary-coverage curve (ops/bm25.py::oov_curve)
-    over word 3-gram units (the closed ~31-word corpus vocabulary
-    makes the unigram curve degenerate; 3-grams give a 16k-unit
-    Zipf-ish vocabulary): oov_ppm at k in {500, 2000, 8000, 32000}
-    (the last exceeding the vocab, pinning the zero-OOV clamp).
-    Global frequency rank via the bucket-offset scheme."""
-    return bm25.oov_curve(_docs(spark, sf_dir),
-                          ks=(500, 2000, 8000, 32000), ngram=3)
-
-
-def _q_mann_whitney(spark, sf_dir):
-    """Mann-Whitney rank-sum test (ops/quality.py::mann_whitney_u):
-    parity arms over the doc_id%5 length sample - the heavy-tail-robust
-    companion to cuped_ab's mean z. Doubled tie-averaged ranks keep
-    2*U1 exact integer; tie correction from exact t^3-t sums; one
-    fixed-DAG z at 6dp."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") % 2).alias("arm"), "n_chars")
-    return quality.mann_whitney_u(d, "arm", "n_chars")
-
-
-def _q_greedy_matching(spark, sf_dir):
-    """Maximal matching by parallel local-max rounds (ops/graph.py::
-    greedy_matching) over the boruvka stratum graph (doc_id%10 - the
-    oracle's sequential replay is O(E*V) list work, so the query keeps
-    the oracle wall at the Kruskal-replay scale; the full link graph
-    at sf1.0 put the replay into the hours - the Spark side itself is
-    round-logarithmic at any size): equals sequential greedy under the
-    md5(eid) priority order, replayed in a single-row recursive CTE
-    carrying the matched-vertex list."""
-    ks = (_docs(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
-          .select(F.expr("doc_id div 10").alias("k")))
-    m = ks.count()
-    gen = ks.select("k", F.explode(F.array(
-        (F.col("k") * 7 + 1) % m, (F.col("k") * 13 + 3) % m,
-        (F.col("k") + 1) % m)).alias("g"))
-    und = (gen.select(F.least("k", "g").alias("u"),
-                      F.greatest("k", "g").alias("v"))
-           .filter(F.col("u") != F.col("v")).distinct()
-           .select((F.col("u") * m + F.col("v")).alias("eid"),
-                   "u", "v"))
-    return graph.greedy_matching(und)
 
 
 # ----------------------------------------------------------- diag probes
@@ -5322,559 +2633,6 @@ SELECT CAST(floor(exp(1.0) * 1e15) AS BIGINT)  AS exp1,
 """
 
 
-def _q_events_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard for time-to-first-purchase
-    (ops/events.py::nelson_aalen): the INTEGER-PURE survival curve —
-    per-time increment (1e6*d) div n_risk, cumulative window sum, no
-    exp/ln anywhere (contrast kaplan_meier's float survival)."""
-    return events.nelson_aalen(_events(spark, sf_dir))
-
-
-def _q_events_logrank(spark, sf_dir):
-    """Two-sample log-rank test between user_id%2 arms
-    (ops/events.py::logrank_test): O/E/V accumulate as lockstep
-    integer micro-units (documented div sequence bounds intermediates
-    ~1e16 where the exact fraction would overflow); z is one float
-    expression over exact integers, no merge-order exposure."""
-    return events.logrank_test(_events(spark, sf_dir))
-
-
-def _q_sorted_neighborhood(spark, sf_dir):
-    """Sorted-neighborhood blocking (ops/linkage.py::
-    sorted_neighborhood): pairs within a w=8 sliding window of the
-    global (lang|text-prefix, doc_id) sort order. Distributed as
-    bucket-offset global ranks + a BANDED equi-self-join (no
-    single-partition window, no range join); the oracle is the
-    textbook one-sorted-list formulation."""
-    d = _docs(spark, sf_dir)
-    key = F.concat_ws(
-        "|", F.col("lang"),
-        F.substring(F.regexp_replace(F.lower(F.col("text")),
-                                     "[^a-z0-9 ]", ""), 1, 16))
-    return linkage.sorted_neighborhood(d, "doc_id", key, window=8,
-                                       bucket_prefix=3)
-
-
-def _q_conformal_intervals(spark, sf_dir):
-    """Split-conformal prediction intervals per lang
-    (ops/quality.py::conformal_intervals): calibration = even doc_ids,
-    group-median predictor, q_hat = exact ceil((n+1)*0.9)-th absolute
-    residual, test-side coverage in integer ppm — Vovk's
-    finite-sample marginal-coverage construction, integer-pure."""
-    return quality.conformal_intervals(
-        _docs(spark, sf_dir), "lang", "n_chars",
-        F.expr("doc_id % 2 = 0"), alpha_pct=10)
-
-
-def _q_ppjoin_pairs(spark, sf_dir):
-    """PPJoin positional-filter similarity join (ops/dedup.py::
-    ppjoin_pairs, Xiao WWW'08): prefix filtering + the per-pair
-    overlap upper bound from first-shared-prefix-token positions,
-    recall-1 at Jaccard >= 0.8 over the augmented near-dup corpus.
-    The oracle is the INDEPENDENT quadratic shingle self-join (exact
-    Jaccard, no filtering), so the gate cross-checks two algorithms."""
-    return dedup.ppjoin_pairs(_augmented_docs(spark, sf_dir),
-                              t_ppm=800_000)
-
-
-def _q_perm_fdr(spark, sf_dir):
-    """Permutation test + Benjamini-Hochberg FDR, fully integer
-    (ops/quality.py::perm_fdr): which top-30 tokens differ between
-    even/odd doc sides beyond chance at FDR 0.05; 64 md5-seeded
-    sign-flip permutations give RATIONAL p-values, so BH's step-up is
-    an exact integer comparison on both engines."""
-    d = _docs(spark, sf_dir)
-    toks = (d.select("doc_id",
-                     F.explode(F.filter(
-                         F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                         lambda t: t != "")).alias("token"))
-            .groupBy("doc_id", "token")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    return quality.perm_fdr(toks, F.expr("doc_id % 2 = 0"),
-                            top_m=30, n_perm=64)
-
-
-def _q_ipf_raking(spark, sf_dir):
-    """Iterative proportional fitting (ops/mixing.py::ipf_raking):
-    rake the (event_type, dow) contingency table to uniform margins
-    (tot div n_rows / tot div n_cols), 3 lockstep rounds in integer
-    micro-units via Spark DECIMAL(38,0) div == DuckDB HUGEINT // —
-    the survey-weighting primitive for training-data mixing. Day
-    buckets via datediff (TZ-proof, the NTZ lesson)."""
-    ev = _events(spark, sf_dir)
-    dow = (F.expr("datediff(cast(ts as date), DATE'1970-01-01') % 7")
-           .cast("long").alias("dow"))
-    cells = (ev.select("event_type", dow)
-             .groupBy("event_type", "dow")
-             .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    t = cells.agg(F.sum("cnt").alias("tot"),
-                  F.countDistinct("event_type").alias("nr"),
-                  F.countDistinct("dow").alias("nc"))
-    rt = (cells.select("event_type").distinct().crossJoin(t)
-          .select("event_type", F.expr("tot div nr").alias("target")))
-    ct = (cells.select("dow").distinct().crossJoin(t)
-          .select("dow", F.expr("tot div nc").alias("target")))
-    return mixing.ipf_raking(cells, "event_type", "dow", rt, ct,
-                             n_iter=3)
-
-
-def _q_user_event_topk(spark, sf_dir):
-    """Exact per-user top-4 event types (ops/events.py::
-    user_event_topk): one partial-agged groupBy + a partitioned rank
-    window. Batch twin of the streaming space-saving sketch
-    (ops/events.py::streaming_topk) — equivalence pytest-pinned in
-    the exactness regime, overestimate bound pinned under eviction."""
-    return events.user_event_topk(_events(spark, sf_dir), k=4)
-
-
-def _q_ipw_ate(spark, sf_dir):
-    """Inverse-propensity-weighted ATE with exact stratum propensities
-    (ops/quality.py::ipw_ate): effect of the doc_id-parity 'arm' on
-    n_chars, stratified by source; positivity violations flagged
-    used=0 and excluded, ate_micro in lockstep integer micro-units."""
-    return quality.ipw_ate(_docs(spark, sf_dir), "source",
-                           F.expr("doc_id % 2 = 1"), "n_chars")
-
-
-def _q_did_estimate(spark, sf_dir):
-    """Difference-in-differences (ops/quality.py::did_estimate) on a
-    2x2 of user parity x pre/post the data-derived midpoint day
-    (datediff day buckets — TZ-proof); money in integer cents, cell
-    means and DiD as exact micro-unit integers."""
-    ev = _events(spark, sf_dir)
-    d = ev.select(
-        (F.col("user_id") % 2 == 1).alias("treat"),
-        F.expr("datediff(cast(ts as date), DATE'1970-01-01')")
-        .cast("long").alias("day"),
-        F.expr("cast(floor(value * 100 + 0.5) as bigint)").alias("cents"))
-    piv = d.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("pivot"))
-    d = d.crossJoin(F.broadcast(piv))
-    return quality.did_estimate(d, "treat",
-                                F.col("day") >= F.col("pivot"), "cents")
-
-
-def _q_eb_shrinkage(spark, sf_dir):
-    """Empirical-Bayes beta-binomial shrinkage (ops/quality.py::
-    eb_shrinkage) of per-source English rates toward the corpus mean:
-    moment-matched prior strength, every step a lockstep integer div."""
-    per = (_docs(spark, sf_dir).groupBy("source")
-           .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum((F.col("lang") == "en").cast("long"))
-                .cast("long").alias("k")))
-    return quality.eb_shrinkage(per, "source", "k", "n")
-
-
-def _q_quantile_normalize(spark, sf_dir):
-    """Cross-group quantile normalization (ops/textstats.py::
-    quantile_normalize): per-lang n_chars mapped to the pooled
-    distribution at the same nearest-rank quantile — integer midpoint
-    rank arithmetic, bucket-offset global ranks (no single-partition
-    window), one equi-join lookup."""
-    return textstats.quantile_normalize(_docs(spark, sf_dir), "lang",
-                                        "n_chars", "doc_id")
-
-
-def _q_butterfly_count(spark, sf_dir):
-    """Bipartite butterfly census (ops/graph.py::butterfly_count) of
-    the doc-token incidence graph: 4-cycle density = templated /
-    near-dup structure signal. Token degree capped at 20 BEFORE pair
-    formation (capped_bucket_pairs contract); all counts exact
-    integers via x*(x-1) div 2."""
-    d = _docs(spark, sf_dir)
-    dt = (d.select("doc_id",
-                   F.explode(F.array_distinct(F.filter(
-                       F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                       lambda t: t != ""))).alias("token")))
-    return graph.butterfly_count(dt, "doc_id", "token", df_cap=20)
-
-
-def _q_suffix_array(spark, sf_dir):
-    """Distributed suffix array + BWT by prefix doubling
-    (ops/suffix.py::suffix_array) over a BOUNDED probe stratum
-    (doc_id < 2000, %40 — ~13 docs at sf0.01, 50 at sf1.0, so the
-    direct-sort oracle stays cheap at every SF). Integer char-code
-    ranks, range-repartition global ranking per round (no RDD, no
-    single-partition window); the oracle is the INDEPENDENT direct
-    ORDER BY substr(s, pos) suffix sort — two algorithms
-    cross-checked bit-exactly."""
-    from eventrelationextractor_spark.ops import suffix as sfx
-    d = (_docs(spark, sf_dir)
-         .filter((F.col("doc_id") < 2000) & (F.col("doc_id") % 40 == 0))
-         .select("doc_id",
-                 F.trim(F.regexp_replace(F.regexp_replace(
-                     F.lower(F.col("text")), "[^a-z0-9 ]", ""),
-                     " +", " ")).alias("text")))
-    return sfx.suffix_array(d)
-
-
-def _q_orc_roundtrip(spark, sf_dir):
-    """ORC source/sink roundtrip: stage documents to ORC (Spark's
-    built-in columnar alternative to parquet), read back with a
-    predicate that reaches the ORC reader as a pushed filter
-    (plan-asserted in tests/test_scale_shapes) — the hash gate proves
-    the roundtrip is value-exact."""
-    path = os.path.join("/tmp", "erex_orc_"
-                        + os.path.basename(os.path.normpath(sf_dir)))
-    _docs(spark, sf_dir).write.mode("overwrite").orc(path)
-    return (spark.read.orc(path).filter(F.col("lang") == "en")
-            .select("doc_id", "text", "lang", "source", "n_chars"))
-
-
-def _q_pca_projection(spark, sf_dir):
-    """Fixed-point power-iteration PCA (ops/cluster.py::pca_power):
-    top principal-component projection of the 64-d embeddings with
-    zero float arithmetic after the initial quantize — integer Gram
-    via Arrow-batch numpy, driver-side integer power iteration,
-    integer projection. The oracle replays quantize/means/Gram/8
-    matvec-rescale rounds/sign fix as chained CTEs; every division
-    is trunc-toward-zero on both engines."""
-    return cluster.pca_power(_emb(spark, sf_dir))
-
-
-_HMM_TRANS = [[0, 4, 9], [3, 0, 5], [8, 2, 0]]
-_HMM_EMIT = [[1, 5, 9, 2], [7, 0, 3, 6], [4, 8, 1, 0]]
-_HMM_START = [0, 2, 5]
-
-
-def _q_hmm_viterbi(spark, sf_dir):
-    """Integer min-plus Viterbi decode (ops/hmm.py::viterbi_decode):
-    3 hidden states over 4 token-length classes, the whole
-    per-document DP as ONE JVM-side aggregate fold (no UDF, no
-    shuffle). The oracle replays the identical recurrence as a
-    DuckDB recursive CTE generated from the SAME model tables, so
-    costs, argmin tie-breaks (lowest state), and the full decoded
-    path string are bit-exact."""
-    return hmm.viterbi_decode(_docs(spark, sf_dir), "text",
-                              _HMM_TRANS, _HMM_EMIT, _HMM_START)
-
-
-def _q_csv_roundtrip(spark, sf_dir):
-    """CSV source/sink roundtrip with adversarial quoting: a staged
-    column embeds the separator, double quotes, and a literal
-    newline, so the writer must quote-escape (RFC 4180 doubled-quote
-    style, escape='\"') and the reader must multiLine-parse. The
-    oracle never touches the CSV — it recomputes the projection from
-    the parquet view, so any lossy write/parse shows up as a value
-    mismatch in the hash gate."""
-    path = os.path.join("/tmp", "erex_csv_"
-                        + os.path.basename(os.path.normpath(sf_dir)))
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "text", "lang", "source", "n_chars",
-        F.concat(F.lit('v,"q" '), F.col("lang"),
-                 F.lit("\nx")).alias("tricky"))
-    (d.write.mode("overwrite").option("header", True)
-     .option("escape", '"').csv(path))
-    return (spark.read.schema(d.schema).option("header", True)
-            .option("multiLine", True).option("escape", '"')
-            .csv(path))
-
-
-def _q_link_betweenness(spark, sf_dir):
-    """Hop-bounded EXACT betweenness + stress centrality
-    (ops/graph.py::apsp_centrality) over a bounded ring+chord stratum
-    graph (doc_id % 40 == 0, < 4800 -> 13 nodes at sf0.01, 120 at
-    sf0.1+; dense index i = doc_id div 40, edges i~i+1 and i~3i+1
-    mod m): the bridge/bottleneck detectors PageRank and degree miss.
-    stress is an exact BIGINT; betweenness sums per-TERM
-    (1e6*s1*s2) div s_st integer divisions — never a float sum. The
-    oracle replays the level-synchronous sigma-BFS as 8 chained CTE
-    hops (the operator's hop bound) + the same sigma-decomposition
-    3-way join."""
-    docs = _docs(spark, sf_dir).filter(
-        (F.col("doc_id") % 40 == 0) & (F.col("doc_id") < 4800))
-    nodes = docs.select(
-        F.expr("doc_id div 40").cast("long").alias("node"))
-    m = nodes.count()
-    e = (nodes.select(F.col("node").alias("src"),
-                      ((F.col("node") + 1) % m).alias("dst"))
-         .unionByName(nodes.select(
-             F.col("node").alias("src"),
-             ((F.col("node") * 3 + 1) % m).alias("dst"))))
-    return graph.apsp_centrality(e, nodes, max_hops=8)
-
-
-def _q_dbscan_clusters(spark, sf_dir):
-    """Distributed 2-D DBSCAN by exact grid-cell blocking
-    (ops/cluster.py::dbscan_grid, MR-DBSCAN shape): 3 planted integer
-    point clouds (centers c*1000/c*700 + md5-derived jitter in
-    [0,120)) plus pushed-out noise points (doc_id % 23), eps=80,
-    min_pts=3. Candidates only ever form inside a 3x3 cell
-    neighborhood; distances are exact squared integers; cluster label
-    = min pid per core-core component (pointer-jump CC), border takes
-    min core-neighbor label, noise -1. Oracle = brute-force eps-pairs
-    + recursive-CTE closure over the core graph (independent
-    formulation, no grid)."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % 40 == 0)
-
-    def _h(a, b):
-        return F.conv(F.substring(F.md5(F.concat(
-            F.lit("db:"), F.col("doc_id").cast("string"))), a, b),
-            16, 10).cast("long")
-
-    pts = docs.select(
-        F.col("doc_id").alias("pid"),
-        (F.lit(10000) + (F.col("doc_id") % 3) * 1000 + _h(1, 6) % 120
-         + F.when(F.col("doc_id") % 23 == 0, F.lit(500))
-         .otherwise(F.lit(0))).cast("long").alias("x"),
-        (F.lit(10000) + (F.col("doc_id") % 3) * 700
-         + _h(7, 6) % 120).cast("long").alias("y"))
-    return cluster.dbscan_grid(pts, eps=80, min_pts=3)
-
-
-def _q_stable_assignment(spark, sf_dir):
-    """Capacitated Gale-Shapley deferred acceptance
-    (ops/linkage.py::stable_matching): proposers = doc_id % 20 == 0
-    stratum, 10 shards with capacity ceil(n/10), BOTH sides ranking
-    by md5-derived total orders. 12 synchronous rounds are part of
-    the operator contract (McVitie-Wilson: outcome is proposal-order
-    independent, so the synchronous schedule converges to the
-    sequential stable matching; the unit test asserts convergence +
-    zero blocking pairs). Oracle = 12 chained-CTE round replays."""
-    props = (_docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-             .select(F.col("doc_id").alias("p")))
-    return linkage.stable_matching(props, n_shards=10, rounds=12)
-
-
-_STUMP_CANDIDATES = [(0, 150), (0, 280), (0, 400),
-                     (1, 300), (1, 700), (2, 48)]
-
-
-def _q_boosted_stumps(spark, sf_dir):
-    """Weight-doubling boosted decision stumps
-    (ops/quality.py::boosted_stumps): 3 rounds over 3 integer
-    features (n_chars, doc_id%1000, length%97) against the label
-    n_chars > 280 and a fixed 6-stump candidate grid — the
-    nonlinear-threshold sibling of quality_classifier's linear LR.
-    Training is float-free (integer weights double on error, votes
-    are ±1), so the per-example (y, score, w) surface is bit-exact
-    on any engine; the oracle replays the 3 argmin-pick rounds as
-    chained MATERIALIZED CTEs."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        (F.col("n_chars") > 280).alias("lbl"),
-        F.col("n_chars").cast("long").alias("c0"),
-        (F.col("doc_id") % 1000).cast("long").alias("c1"),
-        (F.length("text") % 97).cast("long").alias("c2"))
-    return quality.boosted_stumps(d, ["c0", "c1", "c2"], "lbl",
-                                  _STUMP_CANDIDATES, n_rounds=3)
-
-
-def _q_rouge_scores(spark, sf_dir):
-    """ROUGE-2 with clipped counts (ops/textstats.py::rouge_scores):
-    system summary = the first 2/3 of each document's characters
-    (ASCII corpus, so character slicing is engine-identical), scored
-    against the full text as reference. The small shared vocabulary
-    makes repeated bigrams common, so the clipped min(count) path is
-    genuinely exercised; all ratios are ppm integer div."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.col("text").alias("ref"),
-        F.expr("substring(text, 1, (length(text) * 2) div 3)")
-        .alias("sys"))
-    return textstats.rouge_scores(d, "ref", "sys", n=2)
-
-
-def _q_redirect_resolution(spark, sf_dir):
-    """Redirect-chain resolution by pointer doubling (ops/graph.py::
-    resolve_redirects) over a deterministic functional graph on
-    doc_id: chains of length <= 19 inside each block of 100 (d%100 <
-    19 -> d+1) plus a planted 3-cycle per block of 500 (490->491->
-    492->490). Chains resolve with exact hop counts in log rounds;
-    cycle members emit (NULL, NULL, true). The oracle walks the same
-    edges with a hop-capped recursive CTE."""
-    e = _docs(spark, sf_dir).selectExpr(
-        "doc_id AS src",
-        "CASE WHEN doc_id % 500 IN (490, 491) THEN doc_id + 1 "
-        "WHEN doc_id % 500 = 492 THEN doc_id - 2 "
-        "WHEN doc_id % 100 < 19 THEN doc_id + 1 END AS dst"
-    ).filter("dst IS NOT NULL")
-    return graph.resolve_redirects(e)
-
-
-def _q_media_otsu(spark, sf_dir):
-    """Integer Otsu binarization threshold over REAL PNG decode
-    (ops/multimodal.py::otsu_stats) on the closed-form pixel corpus:
-    per image the 256-bin gray histogram feeds the exact-rational
-    between-class-variance scan (num < 2^53 so the DOUBLE ranking is
-    IEEE-identical cross-engine; ties -> lowest t) and the emitted
-    surface is integers only. The oracle rebuilds the histogram from
-    the closed pixel form and replays the same cumulative argmax."""
-    return multimodal.otsu_stats(
-        _media_pngs(_docs(spark, sf_dir).select("doc_id")))
-
-
-def _q_dhondt_allocation(spark, sf_dir):
-    """D'Hondt divisor-method apportionment (ops/mixing.py::
-    dhondt_allocation) of 21 sampling seats across doc_id%20 strata
-    by document count — the highest-averages sibling of
-    mixture_apportion's Hamilton method, ranked entirely by integer
-    cross-multiplication (no float quotient ever exists). Keyed on
-    doc_id % 20, NOT raw source: source is per-doc-unique at sf1.0
-    (the burrows_delta re-key lesson), and the op's O((S*total)^2)
-    candidate comparison needs bounded strata."""
-    return mixing.dhondt_allocation(
-        _docs(spark, sf_dir).selectExpr(
-            "concat('s', doc_id % 20) AS stratum", "1 AS one"),
-        "stratum", "one", total=21)
-
-
-def _q_anova_f(spark, sf_dir):
-    """One-way ANOVA of n_chars across doc_id%5 strata (ops/quality
-    .py::anova_f): BIGINT moments and integer-defined scaled sums of
-    squares (overflow-free floor(a*1e6/b) split), with only the final
-    F ratio in exact-scalar DOUBLE, emitted as floor ppm. Keyed on
-    doc_id % 5 rather than lang because lang collapses to ONE group
-    at sf1.0 (degenerate F; the same cross-SF-cardinality audit that
-    re-keyed dhondt off raw source)."""
-    d = _docs(spark, sf_dir).selectExpr(
-        "concat('g', doc_id % 5) AS grp", "n_chars")
-    return quality.anova_f(d, "grp", "n_chars")
-
-
-def _q_markov_attribution(spark, sf_dir):
-    """Markov removal-effect attribution (ops/events.py::
-    markov_attribution): per-user journeys truncated at first
-    purchase, exact-ppm transition matrix, 30 rounds of the BIGINT
-    fixed-point absorption recurrence, removal effects and shares in
-    ppm. The oracle unrolls the identical 30 rounds as chained CTEs
-    from the same transition counts — bit-exact by construction."""
-    return events.markov_attribution(_events(spark, sf_dir))
-
-
-def _q_geohash_rollup(spark, sf_dir):
-    """Geohash rollup (ops/layout.py::geohash_key): 5-char geohash of
-    md5-free deterministic milli-degree coordinates derived from
-    doc_id, rolled up by 3-char prefix (cell ~ 156x156 km). The
-    encode is the closed-form integer binary subdivision (validated
-    against the textbook refinement loop on 80k random coordinates),
-    so the oracle recomputes it with // and >> verbatim."""
-    from eventrelationextractor_spark.ops import layout
-    d = _docs(spark, sf_dir).selectExpr(
-        "doc_id",
-        "((doc_id * 7919) % 180000) - 90000 AS lat_md",
-        "((doc_id * 104729) % 360000) - 180000 AS lon_md")
-    g = layout.geohash_key(d, "lat_md", "lon_md", chars=5)
-    return (g.groupBy(F.expr("substr(gh, 1, 3)").alias("prefix"))
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.countDistinct("gh").cast("long").alias("n_cells"),
-                 F.min("doc_id").alias("min_doc"),
-                 F.max("doc_id").alias("max_doc")))
-
-
-def _q_ols_value_model(spark, sf_dir):
-    """Two-feature closed-form OLS (ops/quality.py::ols2): event
-    value in cents regressed on wall-clock hour (calendar-field
-    extraction on the NTZ ts — TZ-proof) and epoch-day mod 7. Exact
-    BIGINT moments from one partial-agg pass; betas via an
-    exact-scalar DOUBLE Cramer solve in floor-ppm."""
-    d = _events(spark, sf_dir).selectExpr(
-        "cast(floor(value * 100) as bigint) as cents",
-        "cast(hour(ts) as bigint) as hr",
-        "cast(datediff(cast(ts as date), DATE'1970-01-01') % 7"
-        " as bigint) as d7")
-    return quality.ols2(d, "cents", "hr", "d7")
-
-
-def _q_dtw_user_series(spark, sf_dir):
-    """Banded DTW between consecutive users' activity traces
-    (ops/events.py::dtw_banded): per user the first 16 event values
-    in cents-mod-1000 ordered by (ts, event_id) — calendar-free
-    comparisons, TZ-proof — paired (u, u+1) for even u, Sakoe-Chiba
-    band 4. The oracle walks the identical BIGINT min-plus DP by
-    anti-diagonals in one recursive CTE (fuzz-validated vs the op on
-    150 random cases)."""
-    from pyspark.sql import Window
-    e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = (e.select(F.col("user_id").alias("id"),
-                  F.expr("cast(floor(value * 100) as bigint) % 1000")
-                  .alias("v"),
-                  F.row_number().over(w).alias("p"))
-         .filter("p <= 16")
-         .groupBy("id")
-         .agg(F.expr("transform(sort_array(collect_list(struct(p, v)))"
-                     ", x -> x.v)").alias("seq"),
-              F.count("*").alias("n"))
-         .filter("n = 16").select("id", "seq"))
-    pairs = (s.selectExpr("id as id1", "id + 1 as id2")
-             .filter("id1 % 2 = 0"))
-    return events.dtw_banded(s, pairs, band=4)
-
-
-def _q_interval_coverage(spark, sf_dir):
-    """Sweep-line interval-union coverage per user (ops/events.py::
-    interval_union_len): intervals [s, s + dur] in epoch seconds with
-    s from the TZ-proof ntz_epoch_us and dur = cents % 600 + 30 —
-    overlap-corrected total active time, island count, one window
-    pass, all BIGINT."""
-    e = _events(spark, sf_dir)
-    d = (e.select("user_id", events.ntz_epoch_us("ts").alias("us"),
-                  F.expr("cast(floor(value * 100) as bigint) % 600"
-                         " + 30").alias("dur"))
-         .selectExpr("user_id", "us div 1000000 as s", "dur")
-         .selectExpr("user_id", "s", "s + dur as e"))
-    return events.interval_union_len(d, "user_id", "s", "e")
-
-
-TRIGRAM_LITERAL = "merge batch"
-
-
-def _q_trigram_search(spark, sf_dir):
-    """Trigram-posting substring search (ops/textstats.py::
-    trigram_search) for a two-word literal over the corpus: the Code
-    Search index shape — AND of trigram postings proposes candidates
-    map-side-filtered before any shuffle, then the verify join
-    separates true matches from the index's false positives (both
-    materialized: verified true/false rows)."""
-    return textstats.trigram_search(_docs(spark, sf_dir),
-                                    TRIGRAM_LITERAL)
-
-
-def _q_media_equalize(spark, sf_dir):
-    """Integer histogram-equalization stats over REAL PNG decode
-    (ops/multimodal.py::equalize_stats) on the closed-form pixel
-    corpus: exact map(v) = ((cdf - cdf_min) * 255) div (n - cdf_min),
-    remapped-luma sum and below-midpoint count per image. The oracle
-    rebuilds the luma histogram from the closed pixel form and
-    applies the identical integer remap over occupied bins."""
-    return multimodal.equalize_stats(
-        _media_pngs(_docs(spark, sf_dir).select("doc_id")))
-
-
-ETLD_HOSTS = [
-    "news.example.com", "media.example.co.uk", "a.b.example.co.uk",
-    "x.github.io", "weird.unknowntld", "example.com", "co.uk",
-    "deep.sub.shop.example.com.au", "only",
-]
-
-
-def _q_etld1_rollup(spark, sf_dir):
-    """PSL registrable-domain rollup (ops/urls.py::etld1): hosts
-    staged over a suffix-shape-exercising array (1/2/3-label rules,
-    private github.io, a host that IS a suffix -> NULL registrable,
-    an unmatched TLD falling back to the '*' rule), longest-match
-    against the broadcast rules table, doc counts per (suffix,
-    registrable)."""
-    hosts = F.array(*[F.lit(h) for h in ETLD_HOSTS])
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.element_at(hosts, (F.col("doc_id") % len(ETLD_HOSTS) + 1)
-                     .cast("int")).alias("host"))
-    reg = urls.etld1(d)
-    return (d.join(reg, "host")
-            .groupBy("suffix", "registrable")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.countDistinct("host").cast("long").alias("n_hosts")))
-
-
-def _q_cdc_chunking(spark, sf_dir):
-    """Content-defined chunking dedup telemetry (ops/dedup.py::
-    cdc_chunk_stats): rolling md5-gram cut points over the corpus
-    text, chunk-level storage dedup ratio in one summary row. The
-    oracle replays the identical cut condition and chunking with a
-    range/LEAD formulation instead of the array lambda."""
-    return dedup.cdc_chunk_stats(_docs(spark, sf_dir))
-
-
 def _q_rfm_segments(spark, sf_dir):
     """RFM segmentation census (ops/events.py::rfm_segments): per-user
     recency/frequency/monetary quintiles via the bucket-offset exact
@@ -5904,9 +2662,8 @@ def _q_wordpiece(spark, sf_dir):
     wordpiece_census): position-flavored units (plain at word start,
     ##gram continuations) from a frequency-derived top-160 vocabulary
     plus the full both-flavor alphabet, then greedy longest-match-
-    first encoding — the BERT-family counterpart to bpe_encode's
-    merge-list and optimal_segmentation's minimal-piece DP (greedy
-    vs optimal is the point of keeping all three). Words are staged
+    first encoding — the greedy counterpart to
+    optimal_segmentation's minimal-piece DP. Words are staged
     as token || doc_id%97 to open the closed ~31-word corpus
     vocabulary to ~3k distinct words. The oracle replays the greedy
     match as a recursive list-state CTE over the same vocab."""
@@ -5927,154 +2684,11 @@ def _q_lz_complexity(spark, sf_dir):
     """LZ76 phrase complexity (ops/textstats.py::lz_complexity) over
     60-char doc prefixes: greedy shortest-novel-phrase parse, phrase
     count + ratio_ppm per doc — the codec-free gzip-ratio quality
-    proxy beside repetition_stats and char_entropy. Oracle = one
+    proxy. Oracle = one
     phrase per recursive-CTE iteration with a list_filter/strpos
     scan, bit-identical parse by construction."""
     return textstats.lz_complexity(_docs(spark, sf_dir),
                                    prefix_len=60)
-
-
-def _q_kruskal_wallis(spark, sf_dir):
-    """Kruskal-Wallis H (ops/quality.py::kruskal_wallis) over the
-    doc_id%5 length stratum with 3 synthetic arms (doc_id div 5 mod
-    3) — the k-sample rank companion to mann_whitney and the
-    nonparametric twin of anova_f. Doubled tie-averaged ranks keep
-    every moment BIGINT; the float finale is a g-sorted IEEE left
-    fold + one fixed DAG, mirrored term for term in the oracle."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0).select(
-        ((F.col("doc_id") / 5).cast("long") % 3).alias("g"),
-        F.col("n_chars").alias("x"))
-    return quality.kruskal_wallis(d, "g", "x")
-
-
-def _q_interval_scheduling(spark, sf_dir):
-    """Greedy earliest-end-first interval scheduling (ops/events.py::
-    interval_scheduling) over the user_id%10 stratum: each event is
-    an interval [ts, ts + (event_id%7+1) minutes); per-user maximum
-    non-overlapping admission count. TZ-proof integer start seconds
-    (ntz_epoch_us div 1e6 == DuckDB epoch_us // 1e6); the oracle
-    replays the cursor as a recursive CTE over each user's
-    (end, start, id)-sorted interval list — the stratum keeps the
-    sequential-replay oracle off the greedy_matching wall."""
-    d = (_events(spark, sf_dir)
-         .filter(F.col("user_id") % 10 == 0)
-         .withColumn("us", events.ntz_epoch_us("ts"))
-         .select("user_id", "event_id",
-                 F.expr("us div 1000000").alias("start_s"),
-                 ((F.col("event_id") % 7 + 1) * 60).alias("dur_s")))
-    return events.interval_scheduling(d)
-
-
-def _q_geo_nearest_hub(spark, sf_dir):
-    """Planar nearest-hub assignment (ops/simsearch.py::
-    planar_nearest_hub): staged millidegree point grid vs 32 staged
-    hubs, broadcast cross join + min(struct(d2, hub)) argmin, hub-
-    bounded census with integer mean/min squared distance — geo
-    partitioning / the 2-D IVF coarse assign, integer-pure."""
-    pts = _docs(spark, sf_dir).select(
-        "doc_id",
-        ((F.col("doc_id") * 7919) % 360000 - 180000).alias("x"),
-        ((F.col("doc_id") * 104729) % 180000 - 90000).alias("y"))
-    hubs = spark.range(32).select(
-        F.col("id").alias("hub"),
-        ((F.col("id") * 11003) % 360000 - 180000).alias("hx"),
-        ((F.col("id") * 7507) % 180000 - 90000).alias("hy"))
-    return simsearch.planar_nearest_hub(pts, hubs)
-
-
-def _q_ransac_fit(spark, sf_dir):
-    """Deterministic RANSAC line fit (ops/quality.py::ransac_line)
-    over a staged y = 3x - 40 grid with ppm-scale noise and a +2000
-    outlier spike on every 17th doc: md5-argmin candidate pairs,
-    cross-multiplied integer inlier test, consensus refit via exact
-    BIGINT moments. The robust complement to ols2/theil_sen — the
-    refit slope must land on 3.0 despite ~6% gross outliers."""
-    pts = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("pid"),
-        (F.col("doc_id") % 1000).alias("x"),
-        (3 * (F.col("doc_id") % 1000) - 40
-         + (F.col("doc_id") * 2654435761) % 9 - 4
-         + F.when(F.col("doc_id") % 17 == 0, 2000).otherwise(0))
-        .alias("y"))
-    return quality.ransac_line(pts)
-
-
-def _q_knapsack_mix(spark, sf_dir):
-    """Exact 0/1 knapsack doc selection (ops/mixing.py::
-    knapsack_select) per doc_id%20 shard: weight = n_chars%37+5,
-    value = (doc_id*31)%50+10, budget 200 — optimal selection under
-    a token budget, beside mixture_sample's proportional draws and
-    sequence_packing's greedy fill. The dp fold is item-order-
-    invariant, so no order contract is needed; the oracle steps a
-    recursive CTE whose state is only the 201-slot dp list, joined
-    to an indexed item table."""
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 20).alias("shard"),
-        (F.col("n_chars") % 37 + 5).alias("w"),
-        ((F.col("doc_id") * 31) % 50 + 10).alias("v"))
-    return mixing.knapsack_select(d, "shard", "w", "v", capacity=200)
-
-
-def _q_ewma_smooth(spark, sf_dir):
-    """Integer EWMA deviation filter (ops/events.py::ewma_anomalies)
-    over per-user cent streams: s += (x-s) div 4 (sign-explicit
-    trunc — Python floors, Spark div / DuckDB // truncate), anomaly
-    when |x - s_prev| > 2000. The geometric-recency sibling of
-    events_anomalies' prequential Welford z and events_cusum. The
-    oracle steps the identical recurrence per user with O(1) state
-    joined to a row_number-indexed event table."""
-    d = _events(spark, sf_dir).select(
-        "user_id", "event_id", "ts",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    return events.ewma_anomalies(d)
-
-
-def _q_smith_waterman(spark, sf_dir):
-    """Smith-Waterman local alignment (ops/linkage.py::
-    local_alignment_pairs) between 40-char prefixes of neighbor docs
-    (doc_id%10 stratum): +2/-1/-1 integer scores, best local region
-    strength — the LOCAL counterpart of dedup_levenshtein/dl_linkage
-    global distances. Oracle = anti-diagonal recursion (the banded-
-    DTW pattern); the 0-floor makes boundary cells free."""
-    t = _docs(spark, sf_dir).select(
-        "doc_id", F.substring("text", 1, 40).alias("t"))
-    a = t.filter(F.col("doc_id") % 10 == 0) \
-        .select(F.col("doc_id").alias("pid"), F.col("t").alias("a"))
-    b = t.select((F.col("doc_id") - 1).alias("pid"),
-                 F.col("t").alias("b"))
-    pairs = a.join(b, "pid")
-    return linkage.local_alignment_pairs(pairs)
-
-
-def _q_stupid_backoff(spark, sf_dir):
-    """Stupid-backoff trigram scoring (ops/textstats.py::
-    stupid_backoff_score): train counts on the full corpus, score a
-    perturbed eval stream (doc_id%10 docs, every 7th token given a
-    'zz' suffix) so all four branches fire — exact trigram hit,
-    bigram backoff, unigram backoff, unseen-word zero. Pure
-    fixed-point ppm (0.4x = 2x div 5 per level); the trigram/bigram
-    lookup joins are hint('merge')-pinned (n-gram dims are corpus-
-    scale by construction — the ngram_dup_stats lesson). Spark's
-    transform index is 0-based, DuckDB's lambda index 1-based — the
-    oracle offsets accordingly."""
-    train = _docs(spark, sf_dir)
-    ev = train.filter(F.col("doc_id") % 10 == 0).select(
-        "doc_id",
-        F.expr("array_join(transform(split(text, ' '), (w, i) -> "
-               "CASE WHEN i % 7 = 0 THEN concat(w, 'zz') "
-               "ELSE w END), ' ')").alias("text"))
-    return textstats.stupid_backoff_score(train, ev)
-
-
-def _q_maxdiff_hist(spark, sf_dir):
-    """MaxDiff(V,F) histogram (ops/maintenance.py::maxdiff_histogram)
-    over n_chars: boundaries at the 7 largest adjacent frequency
-    jumps — the cliff-isolating optimizer-statistics histogram beside
-    equidepth_hist's equal-mass cuts. Integer-exact; the only
-    windows run over the bucket table (statistic scale)."""
-    return maintenance.maxdiff_histogram(_docs(spark, sf_dir),
-                                         "n_chars",
-                                         bucket_width=8, k=8)
 
 
 def _q_shapley_attribution(spark, sf_dir):
@@ -6082,8 +2696,7 @@ def _q_shapley_attribution(spark, sf_dir):
     shapley_attribution): channels staged as event_id%4, conversion
     as user_id%3==0; credit = the k!-scaled Shapley value over the
     coalition table built from per-user channel bitmasks — the
-    axiomatically-fair complement of markov_attribution's removal
-    effect. Efficiency axiom (sum phi = k!(v(full)-v(empty)))
+    axiomatically-fair attribution. Efficiency axiom (sum phi = k!(v(full)-v(empty)))
     pytest-pinned."""
     d = _events(spark, sf_dir).select(
         "user_id",
@@ -6093,140 +2706,11 @@ def _q_shapley_attribution(spark, sf_dir):
     return events.shapley_attribution(d)
 
 
-def _q_ohlc_bars(spark, sf_dir):
-    """Daily OHLC bars (ops/events.py::ohlc_bars) over the
-    user_id%10 stratum's cent streams: open/close via min/max of a
-    (epoch_us, id, value) struct — argmin/argmax as pure
-    aggregation, no window, no first()/last() order dependence;
-    TZ-proof epoch. Daily bars + the stratum keep the GATE's
-    collect/hash surface bounded (hourly bars over the full sf1
-    stream are near event-scale — a compare-harness wall, not an
-    operator wall)."""
-    d = (_events(spark, sf_dir)
-         .filter(F.col("user_id") % 10 == 0)
-         .select("user_id", "event_id", "ts",
-                 F.floor(F.col("value") * 100).cast("long")
-                 .alias("cents")))
-    return events.ohlc_bars(d, bar_seconds=86400)
-
-
-def _q_spatial_grid_join(spark, sf_dir):
-    """Grid-bucketed point-in-rectangle join (ops/simsearch.py::
-    grid_spatial_join): 32 staged rectangles vs the doc point grid,
-    rect replicated to overlapped cells, points to exactly one cell,
-    pure equi-join on (cx, cy) + exact containment filter — the 2-D
-    sibling of events_interval_join's no-BNLJ discipline. The oracle
-    states the semantics directly as a containment cross join (tiny
-    rect side), so any grid/replication bug shows as a hash miss."""
-    pts = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("pid"),
-        ((F.col("doc_id") * 7919) % 100000).alias("x"),
-        ((F.col("doc_id") * 104729) % 100000).alias("y"))
-    rects = spark.range(32).select(
-        F.col("id").alias("rect"),
-        ((F.col("id") * 13007) % 90000).alias("x0"),
-        ((F.col("id") * 17021) % 90000).alias("y0"),
-        (((F.col("id") * 13007) % 90000)
-         + (F.col("id") % 5 + 1) * 2500).alias("x1"),
-        (((F.col("id") * 17021) % 90000)
-         + (F.col("id") % 7 + 1) * 2000).alias("y1"))
-    return simsearch.grid_spatial_join(pts, rects)
-
-
-def _q_lis_streaks(spark, sf_dir):
-    """Longest strictly-increasing subsequence per user (ops/
-    events.py::lis_per_user) over cent streams — patience sorting as
-    an order-robust growth-streak statistic. The oracle carries the
-    tails list through a recursive CTE; insertion point =
-    len(list_filter(tails, t < x)) on both engines."""
-    d = _events(spark, sf_dir).select(
-        "user_id", "event_id", "ts",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"))
-    return events.lis_per_user(d)
-
-
-def _q_pass_at_k(spark, sf_dir):
-    """pass@k code-eval estimator (ops/quality.py::pass_at_k) over
-    25 synthetic problems (doc_id%25) with ~30% staged success: the
-    HumanEval metric via the fixed-point product ladder — no
-    binomial ever materializes, so n in the thousands is BIGINT-safe
-    on both engines; the per-step trunc IS the contract."""
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 25).alias("p"),
-        ((F.col("doc_id") * 2654435761) % 10 < 3).cast("long")
-        .alias("ok"))
-    return quality.pass_at_k(d, "p", "ok", k=10)
-
-
-def _q_merkle_roots(spark, sf_dir):
-    """Per-doc Merkle roots (ops/maintenance.py::merkle_roots): an
-    8-leaf md5 hash tree over fixed 8-char text slices — the
-    chunk-localizing integrity fingerprint beside snapshot_diff /
-    cdc_chunking. Pure codegen; the oracle is the same nested
-    expression in DuckDB."""
-    return maintenance.merkle_roots(_docs(spark, sf_dir))
-
-
-def _q_rice_coding(spark, sf_dir):
-    """Optimal Rice parameter per posting list (ops/bm25.py::
-    rice_parameter): d-gap Rice lengths at k in [0,8), argmin via
-    min(struct(bits,k)) — the entropy-coding companion to
-    posting_bytes and huffman_dict."""
-    return bm25.rice_parameter(_docs(spark, sf_dir))
-
-
-def _q_term_burstiness(spark, sf_dir):
-    """Per-term Fano factor (ops/textstats.py::term_burstiness) over
-    50-doc buckets: variance-to-mean burstiness (Church & Gale) in
-    pure integer ppm — absent buckets enter through the global
-    bucket count, never a dense term x bucket explode."""
-    return textstats.term_burstiness(_docs(spark, sf_dir))
-
-
-def _q_csv_sniff(spark, sf_dir):
-    """CSV dialect sniffing (ops/maintenance.py::csv_sniff) over
-    staged 6-field ';'-joined lines with a ','-noise stratum
-    (doc_id%7): the consistency heuristic as exact integers —
-    ';' wins on zero variance, ',' is rejected by its noisy
-    variance, unseen candidates by the sum_cnt>0 gate."""
-    d = _docs(spark, sf_dir).select(F.concat(
-        F.expr("array_join(slice(split(text, ' '), 1, 6), ';')"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit(",x"))
-        .otherwise(F.lit(""))).alias("line"))
-    return maintenance.csv_sniff(d)
-
-
-def _q_emd_drift(spark, sf_dir):
-    """1-D Wasserstein drift (ops/quality.py::emd_drift) of each
-    doc_id%4 stratum's length distribution vs the pooled rest, with
-    a +40-char planted shift on stratum 0 — the how-far-did-mass-
-    move companion to ks_drift (sup gap) and psi_drift (bin
-    log-ratios). Cross-multiplied integer CDFs, one div at the
-    end."""
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 4).alias("g"),
-        (F.col("n_chars")
-         + F.when(F.col("doc_id") % 4 == 0, 40).otherwise(0))
-        .alias("v"))
-    return quality.emd_drift(d, "g", "v")
-
-
-def _q_learned_index(spark, sf_dir):
-    """Learned-index error audit (ops/maintenance.py::
-    learned_index_audit): rank ~ a + b*doc_id per doc_id%8 shard —
-    the RMI-leaf feasibility number beside zone maps. Exact integer
-    OLS moments, ppm slope/intercept, trunc-div prediction."""
-    return maintenance.learned_index_audit(
-        _docs(spark, sf_dir).select("doc_id",
-                                    (F.col("doc_id") % 8).alias("s")),
-        "doc_id", "s")
-
-
 def _q_qte(spark, sf_dir):
     """Quantile treatment effects (ops/quality.py::
     quantile_treatment_effect) at the quartiles: parity arms over
     doc length with a +25-char planted treatment shift on the odd
-    arm — the distributional A/B readout beside cuped_ab/ipw_ate.
+    arm — a distributional A/B readout.
     Exact nearest-rank quantiles from value-histogram cumsums."""
     d = _docs(spark, sf_dir).select(
         (F.col("doc_id") % 2).alias("arm"),
@@ -6234,122 +2718,6 @@ def _q_qte(spark, sf_dir):
          + F.when(F.col("doc_id") % 2 == 1, 25).otherwise(0))
         .alias("v"))
     return quality.quantile_treatment_effect(d, "arm", "v")
-
-
-def _q_token_simpson(spark, sf_dir):
-    """Gini-Simpson token diversity (ops/textstats.py::
-    simpson_diversity) per doc_id%20 shard — the concentration
-    complement to char_entropy/mattr; n(n-1) unbiased form keeps
-    everything BIGINT."""
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 20).alias("g"), "text")
-    return textstats.simpson_diversity(d, "g")
-
-
-def _q_luhn_audit(spark, sf_dir):
-    """Luhn mod-10 audit (ops/pii.py::luhn_audit) over staged
-    12-digit account-like numbers: checksum-validity census — the
-    check-digit sibling of the module's regex-shape validators.
-    Pure codegen aggregate() fold, right-aligned parity."""
-    d = _docs(spark, sf_dir).select(
-        F.lpad(((F.col("doc_id") * 2654435761) % 1000000000000)
-               .cast("string"), 12, "0").alias("num"))
-    return pii.luhn_audit(d)
-
-
-def _q_cliffs_delta(spark, sf_dir):
-    """Cliff's delta effect size (from ops/quality.py::
-    mann_whitney_u's exact doubled U): delta = 2U1/(n1 n2) - 1 in
-    trunc-div ppm — the magnitude companion to mann_whitney's
-    significance z, over the same parity arms."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") % 2).alias("arm"), "n_chars")
-    mw = quality.mann_whitney_u(d, "arm", "n_chars")
-    return mw.select(
-        "n1", "n2", "u1_x2",
-        F.expr("((u1_x2 - n1 * n2) * 1000000) div (n1 * n2)")
-        .alias("delta_ppm"))
-
-
-def _q_ip_cidr_rollup(spark, sf_dir):
-    """IPv4 CIDR rollup (ops/urls.py::cidr_rollup) of staged client
-    IPs at /8, /16, /24 + grand total via native ROLLUP grouping
-    sets (NULL marks a rolled level on both engines)."""
-    d = _docs(spark, sf_dir).select(
-        ((F.col("doc_id") * 2654435761) % 4294967296).alias("ip32"))
-    return urls.cidr_rollup(d)
-
-
-def _q_pk_discovery(spark, sf_dir):
-    """Primary-key candidate discovery (ops/urls.py::pk_discovery)
-    over events: exact distinct counts for four candidate combos —
-    timestamps rendered as ntz_epoch_us integers, never engine-
-    formatted casts (the TZ/format-parity discipline)."""
-    ep = events.ntz_epoch_us(F.col("ts"))
-    d = _events(spark, sf_dir)
-    combos = [
-        ("event_id", F.col("event_id").cast("string")),
-        ("user_id:ts", F.concat_ws(":", F.col("user_id"),
-                                   ep.cast("string"))),
-        ("user_id:event_type", F.concat_ws(":", F.col("user_id"),
-                                           F.col("event_type"))),
-        ("ts", ep.cast("string")),
-    ]
-    return urls.pk_discovery(d, combos)
-
-
-def _q_max_concurrency(spark, sf_dir):
-    """Max interval overlap per user (ops/events.py::
-    max_concurrency): +1/-1 boundary sweep with half-open [s, s+d)
-    semantics (ends sort before starts via delta order), earliest
-    peak instant via max(struct(run, -t)) — the capacity question
-    beside interval_scheduling and interval_coverage."""
-    d = (_events(spark, sf_dir)
-         .withColumn("us", events.ntz_epoch_us("ts"))
-         .select("user_id",
-                 F.expr("us div 1000000").alias("start_s"),
-                 ((F.col("event_id") % 7 + 1) * 60).alias("dur_s")))
-    return events.max_concurrency(d)
-
-
-def _q_longest_streak(spark, sf_dir):
-    """Longest same-type run per user (ops/events.py::
-    longest_streak): gaps-and-islands via the row_number difference,
-    winner by max(struct(len, type)) — all windows user-
-    partitioned."""
-    return events.longest_streak(_events(spark, sf_dir))
-
-
-def _q_weighted_intervals(spark, sf_dir):
-    """Weighted interval scheduling (ops/events.py::
-    weighted_interval_scheduling) over the user_id%10 stratum with
-    w = event_id%10+1: the exact DP optimum the unweighted greedy
-    cannot give. Predecessor indexes are relational (correlated
-    end<=start count); the oracle carries the dp list through a
-    join-stepped recursive CTE (the knapsack state pattern)."""
-    d = (_events(spark, sf_dir)
-         .filter(F.col("user_id") % 10 == 0)
-         .withColumn("us", events.ntz_epoch_us("ts"))
-         .select("user_id", "event_id",
-                 F.expr("us div 1000000").alias("start_s"),
-                 ((F.col("event_id") % 7 + 1) * 60).alias("dur_s"),
-                 (F.col("event_id") % 10 + 1).alias("w")))
-    return events.weighted_interval_scheduling(d)
-
-
-def _q_set_cover(spark, sf_dir):
-    """Greedy set cover (ops/mixing.py::greedy_set_cover) over the
-    doc_id%20 stratum with doc_id%13-suffixed terms (opens the
-    closed corpus vocabulary to ~400 terms so 8 rounds stay
-    informative): coverage-based data selection, 1-1/e greedy.
-    The oracle replays the rounds with doc term-lists as recursive
-    list state and the same (gain desc, doc asc) argmax."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0) \
-        .select("doc_id", F.expr(
-            "array_join(transform(split(text, ' '), "
-            "t -> concat(t, cast(doc_id % 13 as string))), ' ')")
-            .alias("text"))
-    return mixing.greedy_set_cover(d, k=8)
 
 
 def _q_json_schema_infer(spark, sf_dir):
@@ -6402,11 +2770,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jw_linkage": _q_jw_linkage,
         "knn_shapley": _q_knn_shapley,
         "interleave_eval": _q_interleave_eval,
-        # session-7 rotation: one risky rep per NEW family takes the
-        # slot of a row that was already driver-green in r04
-        # (rm3_expansion / corpus_curation / training_order /
-        # html_text_extract / dup_spans move below the window, still
-        # locally + sf1 gated)
         "wordpiece_census": _q_wordpiece,
         "optimal_segmentation": _q_optimal_segmentation,
         "json_schema_infer": _q_json_schema_infer,
@@ -6434,133 +2797,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "haar_signature": _q_haar_signature,
         # --- end of the 50-query driver window ---
         "symspell_correct": _q_symspell_correct,
-        "bootstrap_ci": _q_bootstrap_ci,
-        "events_asof": _q_events_asof,
-        "hybrid_search_rrf": _q_hybrid_search_rrf,
-        "mmr_diversify": _q_mmr_diversify,
         "kg_fixture_temporal": _q_fixture_temporal,
         "gazetteer_spans": _q_gazetteer_spans,
-        "dedup_exact": _q_dedup_exact,
-        "holt_forecast": _q_holt_forecast,
         "naive_bayes": _q_naive_bayes,
-        "embedding_jl": _q_embedding_jl,
-        "dedup_embedding_cosine": _q_dedup_embedding,
-        "nfc_normalize": _q_nfc_normalize,
-        "script_profile": _q_script_profile,
         "tpch_returned_items": _q_tpch_returned_items,
         "tpch_waiting_suppliers": _q_tpch_waiting_suppliers,
         "tpch_top_supplier": _q_tpch_top_supplier,
-        "contrastive_mining": _q_contrastive_mining,
-        "cat_columns": _q_cat_columns,
-        "cat_roundtrip": _q_cat_roundtrip,
-        "token_counts": _q_token_counts,
         "kg_entity_linking": _q_entity_linking,
         "kg_ee_probabilities": _q_ee_probabilities,
-        "lm_bigram": _q_lm_bigram,
         "tpch_idle_customers": _q_tpch_idle_customers,
-        "compaction_plan": _q_compaction_plan,
-        "skew_profile": _q_skew_profile,
-        "kanon_suppress": _q_kanon_suppress,
-        "cdx_fetchlist": _q_cdx_fetchlist,
-        "robots_gate_full": _q_robots_gate_full,
-        "link_pagerank": _q_link_pagerank,
-        "link_ppr": _q_link_ppr,
-        "link_communities": _q_link_communities,
-        "link_walks": _q_link_walks,
-        "crawl_schedule_delays": _q_crawl_schedule_delays,
-        "media_decode_stats": _q_media_decode,
         "kg_temporal_salted": _q_kg_temporal_salted,
         "kg_doc_stats": _q_doc_stats,
         "kg_candidates": _q_candidates,
         "kg_pred_histogram": _q_pred_histogram,
         "kg_fixture_causal": _q_fixture_causal,
-        "doc_fingerprints": _q_doc_fingerprints,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_keep": _q_dedup_keep,
-        "decontamination": _q_decontamination,
-        "lang_id": _q_lang_id,
-        "quality_scores": _q_quality,
-        "repetition_stats": _q_repetition_stats,
-        "lm_quality": _q_lm_quality,
-        "bloom_prefilter": _q_bloom_prefilter,
-        "pii_redaction": _q_pii_redaction,
-        "ann_topk": _q_ann_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "ann_ivf_topk_c256": _q_ann_ivf_topk_c256,
-        "events_windowed": _q_events_windowed,
-        "events_sessions": _q_events_sessions,
-        "media_features": _q_media_features,
-        "url_parse": _q_url_parse,
-        "domain_stats": _q_domain_stats,
-        "lang_id_trigram": _q_lang_id_trigram,
-        "stratified_sample": _q_stratified_sample,
-        "split_assignment": _q_split_assignment,
-        "bm25_search": _q_bm25_search,
-        "vocab_topk": _q_vocab_topk,
-        "link_triangles": _q_link_triangles,
-        "anchor_text_rollup": _q_anchor_rollup,
-        "ccnet_buckets": _q_ccnet_buckets,
-        "cms_wordcounts": _q_cms_wordcounts,
-        "zorder_layout": _q_zorder_layout,
-        "tokenizer_fertility": _q_tokenizer_fertility,
-        "html_metadata": _q_html_metadata,
-        "sample_k_per_source": _q_sample_k_per_source,
-        "cdc_apply": _q_cdc_apply,
-        "hll_user_windows": _q_hll_user_windows,
-        "lsh_band_hits": _q_lsh_band_hits,
-        "exactsubstr_dedup": _q_exactsubstr_dedup,
-        "frontier_expansion": _q_frontier_expansion,
-        "crawl_plan": _q_crawl_plan,
-        "frontier_schedule": _q_frontier_schedule,
-        "robots_gate": _q_robots_gate,
-        "mixing_plan": _q_mixing_plan,
-        "line_boilerplate": _q_line_boilerplate,
-        "line_dedup_first": _q_line_dedup_first,
-        "mixture_rates": _q_mixture_rates,
-        "mixture_sample": _q_mixture_sample,
-        "bpe_merges": _q_bpe_merges,
-        "bpe_vocab": _q_bpe_vocab,
-        "bpe_encode": _q_bpe_encode,
-        "hll_vocab": _q_hll_vocab,
-        "kmv_overlap": _q_kmv_overlap,
-        "events_asof_forward": _q_events_asof_forward,
-        "dsir_selection": _q_dsir,
-        "url_canonical_dedup": _q_url_canonical_dedup,
-        "snapshot_diff": _q_snapshot_diff,
-        "doc_chunking": _q_doc_chunking,
-        "winnowing_fingerprints": _q_winnowing,
-        "domain_topk_docs": _q_domain_topk,
-        "ngram_dup_stats": _q_ngram_dup_stats,
-        "pmi_collocations": _q_pmi_collocations,
-        "length_percentiles": _q_length_percentiles,
-        "source_lang_rollup": _q_source_lang_rollup,
-        "embedding_quantize": _q_embedding_quantize,
-        "host_cocitation": _q_host_cocitation,
-        "link_hits": _q_link_hits,
-        "domain_reputation": _q_domain_reputation,
-        "url_spam_features": _q_url_spam,
-        "events_anomalies": _q_events_anomalies,
-        "sentence_stats": _q_sentence_stats,
-        "link_seed_distances": _q_link_seed_distances,
-        "bm25_ndcg": _q_bm25_ndcg,
-        "badwords_filter": _q_badwords_filter,
-        "weighted_sample_k": _q_weighted_sample,
-        "link_adamic_adar": _q_link_adamic_adar,
-        "char_entropy": _q_char_entropy,
         "tpch_shipping_priority": _q_tpch_shipping,
         "tpch_local_volume": _q_tpch_local_volume,
         "tpch_order_priority": _q_tpch_order_priority,
-        "link_kcore": _q_link_kcore,
-        "neardup_recall": _q_neardup_recall,
-        "host_lang_profile": _q_host_lang_profile,
-        "hashed_doc_vectors": _q_hashed_vectors,
-        "events_props_extract": _q_events_props,
-        "table_profile": _q_table_profile,
-        "web_curation": _q_web_curation,
-        "graph_stats": _q_graph_stats,
-        "embedding_class_stats": _q_embedding_class_stats,
-        "sitemap_seeds": _q_sitemap_seeds,
         "tpch_revenue_delta": _q_tpch_revenue_delta,
         "tpch_min_cost_supplier": _q_tpch_min_cost_supplier,
         "tpch_market_share": _q_tpch_market_share,
@@ -6573,18 +2826,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_excess_suppliers": _q_tpch_excess_suppliers,
         "tpch_promo_revenue": _q_tpch_promo_revenue,
         "tpch_large_orders": _q_tpch_large_orders,
-        "scd2_history": _q_scd2_history,
-        "allen_relations": _q_allen_relations,
-        "hll_shard_merge": _q_hll_shard_merge,
         "hdr_group_quantiles": _q_hdr_group_quantiles,
-        "ldiversity_suppress": _q_ldiversity_suppress,
-        "profile_drift": _q_profile_drift,
         "kg_cc_incremental": _q_kg_cc_incremental,
-        "link_modularity": _q_link_modularity,
-        "mixture_apportion": _q_mixture_apportion,
-        "rm3_search": _q_rm3_search,
-        "winsorize_lengths": _q_winsorize_lengths,
-        "spoof_hosts": _q_spoof_hosts,
         "record_linkage": _q_record_linkage,
         "bm25_map_mrr": _q_bm25_map_mrr,
         "events_cusum": _q_events_cusum,
@@ -6596,9 +2839,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "calibration_bins": _q_calibration_bins,
         "roc_auc": _q_roc_auc,
         "frequent_pairs": _q_frequent_pairs,
-        "dedup_simhash_pairs": _q_dedup_simhash_pairs,
-        "shingle_containment": _q_shingle_containment,
-        "ann_ivfpq_recall": _q_ann_ivfpq_recall,
         "pr_curve": _q_pr_curve,
         "ks_drift": _q_ks_drift,
         "chi2_independence": _q_chi2_independence,
@@ -6611,12 +2851,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_linfit": _q_events_linfit,
         "psi_drift": _q_psi_drift,
         "phrase_search": _q_phrase_search,
-        "link_hyperball": _q_link_hyperball,
-        "events_attribution": _q_events_attribution,
-        "textrank_keywords": _q_textrank_keywords,
-        "zone_map_prune": _q_zone_map_prune,
-        "als_rank1": _q_als_rank1,
-        "url_templates": _q_url_templates,
         "vocab_growth": _q_vocab_growth,
         "hilbert_layout": _q_hilbert_layout,
         "proximity_minspan": _q_proximity_minspan,
@@ -6626,49 +2860,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zipf_fit": _q_zipf_fit,
         "weighted_median": _q_weighted_median,
         "link_clustering": _q_link_clustering,
-        "theil_sen": _q_theil_sen,
-        "kendall_tau": _q_kendall_tau,
-        "flesch_readability": _q_flesch_readability,
-        "novelty_scores": _q_novelty_scores,
-        "extractive_summary": _q_extractive_summary,
-        "events_breakpoint": _q_events_breakpoint,
-        "crawl_waterfill": _q_crawl_waterfill,
-        "source_divergence": _q_source_divergence,
-        "ql_search": _q_ql_search,
-        "dedup_levenshtein": _q_dedup_levenshtein,
         "token_label_mi": _q_token_label_mi,
-        "events_retention": _q_events_retention,
         "tpch_volume_shipping": _q_tpch_volume_shipping,
-        # --- session 5
-        "media_phash": _q_media_phash,
         "media_phash_pairs": _q_media_phash_pairs,
         "dedup_bcubed": _q_dedup_bcubed,
         "isotonic_calibration": _q_isotonic_calibration,
         "rake_keyphrases": _q_rake_keyphrases,
         "dedup_multitier": _q_dedup_multitier,
         "link_rings": _q_link_rings,
-        "kanon_generalize": _q_kanon_generalize,
-        "embedding_kcenter": _q_embedding_kcenter,
-        # --- session 6
-        "frequent_triples": _q_frequent_triples,
-        "dp_noisy_counts": _q_dp_noisy_counts,
-        "constraint_audit": _q_constraint_audit,
-        "join_size_estimate": _q_join_size_estimate,
-        "stopword_discovery": _q_stopword_discovery,
-        "bm25f_search": _q_bm25f_search,
-        "mutual_nn_pairs": _q_mutual_nn_pairs,
         "bucketed_batching": _q_bucketed_batching,
         "posting_bytes": _q_posting_bytes,
         "query_completion": _q_query_completion,
         "ams_f2": _q_ams_f2,
         "harmonic_centrality": _q_harmonic_centrality,
         "decision_stump": _q_decision_stump,
-        "split_leakage": _q_split_leakage,
-        "katz_centrality": _q_katz_centrality,
-        "layout_prune_ab": _q_layout_prune_ab,
-        "cluster_labels": _q_cluster_labels,
-        "landmark_distances": _q_landmark_distances,
-        "burrows_delta": _q_burrows_delta,
         "llr_collocations": _q_llr_collocations,
         "mattr_diversity": _q_mattr_diversity,
         "spearman_rho": _q_spearman_rho,
@@ -6680,112 +2885,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "woe_iv": _q_woe_iv,
         "target_encode": _q_target_encode,
         "skipgram_ppmi": _q_skipgram_ppmi,
-        "link_coloring": _q_link_coloring,
-        "winnowing_pairs": _q_winnowing_pairs,
-        "semdedup_prune": _q_semdedup,
         "fd_violations": _q_fd_violations,
         "matryoshka_eval": _q_matryoshka_eval,
-        "cuped_ab": _q_cuped_ab,
-        "temporal_reach": _q_temporal_reach,
-        "impute_median": _q_impute_median,
-        "fd_repair": _q_fd_repair,
-        "event_seq_pairs": _q_event_seq_pairs,
-        "soundex_blocking": _q_soundex_blocking,
-        "mann_whitney": _q_mann_whitney,
-        "greedy_matching": _q_greedy_matching,
-        "ann_lsh_multiprobe": _q_ann_multiprobe,
-        "html_links": _q_html_links,
         "tpch_part_margin": _q_tpch_part_margin,
         "scc_pivot": _q_scc_pivot,
         "ltr_features": _q_ltr_features,
         "trending_terms": _q_trending_terms,
-        "events_nelson_aalen": _q_events_nelson_aalen,
-        "events_logrank": _q_events_logrank,
-        "sorted_neighborhood": _q_sorted_neighborhood,
-        "conformal_intervals": _q_conformal_intervals,
-        "ppjoin_pairs": _q_ppjoin_pairs,
-        "perm_fdr": _q_perm_fdr,
-        "ipf_raking": _q_ipf_raking,
-        "user_event_topk": _q_user_event_topk,
-        "ipw_ate": _q_ipw_ate,
-        "did_estimate": _q_did_estimate,
-        "eb_shrinkage": _q_eb_shrinkage,
-        "quantile_normalize": _q_quantile_normalize,
-        "orc_roundtrip": _q_orc_roundtrip,
-        "suffix_array": _q_suffix_array,
-        "butterfly_count": _q_butterfly_count,
-        "link_betweenness": _q_link_betweenness,
-        "dbscan_clusters": _q_dbscan_clusters,
-        "stable_assignment": _q_stable_assignment,
-        "boosted_stumps": _q_boosted_stumps,
-        "rouge_scores": _q_rouge_scores,
-        "csv_roundtrip": _q_csv_roundtrip,
-        "hmm_viterbi": _q_hmm_viterbi,
-        "pca_projection": _q_pca_projection,
-        "redirect_resolution": _q_redirect_resolution,
-        "media_otsu": _q_media_otsu,
-        "dhondt_allocation": _q_dhondt_allocation,
-        "anova_f": _q_anova_f,
-        "markov_attribution": _q_markov_attribution,
-        "geohash_rollup": _q_geohash_rollup,
-        "ols_value_model": _q_ols_value_model,
-        "dtw_user_series": _q_dtw_user_series,
-        "interval_coverage": _q_interval_coverage,
-        "trigram_search": _q_trigram_search,
-        "media_equalize": _q_media_equalize,
-        "etld1_rollup": _q_etld1_rollup,
-        "cdc_chunking": _q_cdc_chunking,
-        "dl_linkage": _q_dl_linkage,
-        "ann_hamming": _q_hamming_topk,
-        "hash_ring": _q_hash_ring,
-        "rbo_rankers": _q_rbo_rankers,
-        "rich_club": _q_rich_club,
-        "bleu_eval": _q_bleu_eval,
-        "pps_sample": _q_pps_sample,
-        "attack_robustness": _q_attack_robustness,
-        "wilson_rank": _q_wilson_rank,
-        "bitemporal_asof": _q_bitemporal,
-        "vacuum_plan": _q_vacuum_plan,
-        "oov_curve": _q_oov_curve,
-        "bowtie_census": _q_bowtie_census,
-        "bh_fdr": _q_bh_fdr,
-        "huffman_dict": _q_huffman_dict,
-        "shapley_r2": _q_shapley_r2,
-        "partition_pruning": _q_partition_pruning,
-        "rm3_expansion": _q_rm3_expansion,
-        "corpus_curation": _q_corpus_curation,
-        "training_order": _q_training_order,
         "html_text_extract": _q_html_text_extract,
-        "dup_spans": _q_dup_spans,
-        "kruskal_wallis": _q_kruskal_wallis,
-        "interval_scheduling": _q_interval_scheduling,
-        "geo_nearest_hub": _q_geo_nearest_hub,
-        "ransac_fit": _q_ransac_fit,
-        "knapsack_mix": _q_knapsack_mix,
-        "ewma_smooth": _q_ewma_smooth,
-        "smith_waterman": _q_smith_waterman,
-        "stupid_backoff": _q_stupid_backoff,
-        "maxdiff_hist": _q_maxdiff_hist,
-        "ohlc_bars": _q_ohlc_bars,
-        "spatial_grid_join": _q_spatial_grid_join,
-        "lis_streaks": _q_lis_streaks,
-        "pass_at_k": _q_pass_at_k,
-        "merkle_roots": _q_merkle_roots,
-        "rice_coding": _q_rice_coding,
-        "term_burstiness": _q_term_burstiness,
-        "csv_sniff": _q_csv_sniff,
-        "emd_drift": _q_emd_drift,
-        "learned_index": _q_learned_index,
         "qte": _q_qte,
-        "token_simpson": _q_token_simpson,
-        "luhn_audit": _q_luhn_audit,
-        "cliffs_delta": _q_cliffs_delta,
-        "ip_cidr_rollup": _q_ip_cidr_rollup,
-        "pk_discovery": _q_pk_discovery,
-        "max_concurrency": _q_max_concurrency,
-        "longest_streak": _q_longest_streak,
-        "weighted_intervals": _q_weighted_intervals,
-        "set_cover": _q_set_cover,
     }
 
 
@@ -6848,7 +2955,6 @@ SELECT d AS doc_id, src AS subj, rel AS pred, tgt AS obj FROM allrows
 """
 
 
-
 _CANDIDATES_ORACLE = """
 SELECT doc_id, m.source_id, m.target_id, m.pair_type, 'NONE' AS gold_rel
 FROM documents, (VALUES
@@ -6906,14 +3012,6 @@ _AUG = ("aug AS (SELECT doc_id, text FROM documents UNION ALL "
         "UNION ALL SELECT doc_id + 2000000, text FROM documents "
         "WHERE doc_id % 10 = 0)")
 
-_FP_ORACLE = f"SELECT doc_id, md5({_NORM}) AS fingerprint FROM documents"
-
-_DEDUP_EXACT_ORACLE = f"""
-WITH {_AUG},
-keyed AS (SELECT doc_id, md5({_NORM}) AS fingerprint FROM aug)
-SELECT fingerprint, min(doc_id) AS canonical_id, count(*) AS n_dups
-FROM keyed GROUP BY fingerprint HAVING count(*) > 1
-"""
 
 _MINHASH_ORACLE = f"""
 WITH {_AUG},
@@ -6979,24 +3077,6 @@ SELECT a2.doc_id, coalesce(c.c, a2.doc_id) AS canonical_id,
 FROM aug2 a2 LEFT JOIN canon c ON c.v = a2.doc_id
 """
 
-_SIMHASH_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM norm),
-hx AS (SELECT doc_id, substr(md5(w), 1, 4) AS h FROM tok),
-hv AS (SELECT doc_id,
-       (strpos('0123456789abcdef', substr(h,1,1)) - 1) * 4096
-     + (strpos('0123456789abcdef', substr(h,2,1)) - 1) * 256
-     + (strpos('0123456789abcdef', substr(h,3,1)) - 1) * 16
-     + (strpos('0123456789abcdef', substr(h,4,1)) - 1) AS v FROM hx),
-bits AS (SELECT doc_id, b,
-         CASE WHEN (v // (1 << b)) % 2 = 1 THEN 1 ELSE -1 END AS vote
-         FROM hv, LATERAL unnest(generate_series(0, 15)) AS g(b)),
-agg AS (SELECT doc_id, b, sum(vote) AS s FROM bits GROUP BY doc_id, b)
-SELECT doc_id,
-       CAST(sum(CASE WHEN s > 0 THEN (1 << b) ELSE 0 END) AS BIGINT) AS simhash
-FROM agg GROUP BY doc_id
-"""
-
 
 _SIMHASH_PAIRS_ORACLE = f"""
 WITH {_AUG},
@@ -7029,489 +3109,6 @@ ham AS (SELECT c.a, c.b,
         FROM cand c JOIN sig sa ON sa.doc_id = c.a
                     JOIN sig sb ON sb.doc_id = c.b)
 SELECT a, b, hamming FROM ham WHERE hamming <= 3
-"""
-
-
-_WEB_URLS = """
-SELECT doc_id,
-  'https://' || host || '/' || mid || 'p' || doc_id AS url, text
-FROM (
-  SELECT doc_id, text,
-    CASE doc_id % 5 WHEN 0 THEN 'news.example.com'
-      WHEN 1 THEN 'blog.example.org' WHEN 2 THEN 'www.sample.net'
-      WHEN 3 THEN 'docs.mirror.example.com' ELSE 'shop.example.co' END
-      AS host,
-    CASE doc_id % 3 WHEN 0 THEN '' WHEN 1 THEN 'd1/' ELSE 'd1/d2/' END
-      AS mid
-  FROM documents)
-"""
-
-_URL_PARSE_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-p AS (SELECT doc_id,
-      regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
-      regexp_replace(url, '^[a-z]+://(?:[^/]+)', '') AS path
-      FROM w)
-SELECT doc_id, host,
-  regexp_extract(host, '([^.]+\\.[^.]+)$', 1) AS domain,
-  regexp_extract(host, '\\.([^.]+)$', 1) AS tld,
-  CAST(len(string_split(regexp_replace(path, '^/+|/+$', '', 'g'), '/'))
-       AS BIGINT) AS path_depth
-FROM p
-"""
-
-_DOMAIN_STATS_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-p AS (SELECT doc_id, text,
-      regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host,
-      regexp_replace(url, '^[a-z]+://(?:[^/]+)', '') AS path
-      FROM w),
-q AS (SELECT doc_id, text, host,
-      regexp_extract(host, '([^.]+\\.[^.]+)$', 1) AS domain,
-      len(string_split(regexp_replace(path, '^/+|/+$', '', 'g'), '/'))
-        AS path_depth FROM p)
-SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
-  CAST(max(path_depth) AS BIGINT) AS max_path_depth,
-  CAST(sum(length(text)) AS BIGINT) AS total_chars
-FROM q GROUP BY domain
-"""
-
-
-def _stratified_oracle() -> str:
-    langs = textstats.TRIGRAM_LANGS
-    case = " ".join(f"WHEN {i} THEN '{lang}'" for i, lang in enumerate(langs))
-    return f"""
-WITH labeled AS (
-  SELECT doc_id, CASE doc_id % 12 {case} END AS lang FROM documents),
-hashed AS (
-  SELECT doc_id, lang,
-    CAST(('0x' || substr(md5('mix1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-         ::UBIGINT % 10000 AS BIGINT) AS h
-  FROM labeled),
-rated AS (
-  SELECT doc_id, lang, h,
-    CASE lang WHEN 'en' THEN 10000 WHEN 'de' THEN 5000
-              WHEN 'fr' THEN 2500 WHEN 'ja' THEN 1000 ELSE 0 END AS thr
-  FROM hashed)
-SELECT doc_id, lang FROM rated WHERE h < thr
-"""
-
-
-def _lang_trigram_oracle() -> str:
-    """The multilingual slice is generated FROM language l(d) =
-    TRIGRAM_LANGS[d % 12] seed text, and the trigram classifier must
-    recover exactly that language - so the oracle is the closed-form
-    ground truth, and the gate verifies end-to-end that the classifier
-    is 100% correct on the slice (checked exhaustively over all
-    generation variants in tests/test_textstats_ops.py)."""
-    case = " ".join(f"WHEN {i} THEN '{lang}'"
-                    for i, lang in enumerate(textstats.TRIGRAM_LANGS))
-    return (f"SELECT doc_id, CASE doc_id % 12 {case} END AS predicted_lang "
-            f"FROM documents")
-
-
-def _lang_score_sql(words) -> str:
-    return " + ".join(f"(len(string_split(t, ' {w} ')) - 1)" for w in words)
-
-
-def _lang_oracle() -> str:
-    scores = ",\n  ".join(
-        f"{_lang_score_sql(ws)} AS score_{lang}"
-        for lang, ws in sorted(textstats.LANG_MARKERS.items()))
-    langs = sorted(textstats.LANG_MARKERS)
-    g = "greatest(" + ", ".join("score_" + lang for lang in langs) + ")"
-    case = f"CASE WHEN {g} <= 0 THEN 'und' "
-    case += " ".join(f"WHEN score_{lang} = {g} THEN '{lang}'" for lang in langs)
-    case += " END"
-    return f"""
-WITH s AS (SELECT doc_id, ' ' || lower(text) || ' ' AS t FROM documents),
-sc AS (SELECT doc_id, {scores} FROM s)
-SELECT doc_id, {case} AS predicted_lang FROM sc
-"""
-
-
-_QUALITY_ORACLE = """
-WITH base AS (
-  SELECT doc_id,
-    CAST(length(text) AS BIGINT) AS n_chars,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-    CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))
-         AS BIGINT) AS n_punct,
-    CAST((len(string_split(' ' || lower(text) || ' ', ' the ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' and ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' of ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' is ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' a ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' to ')) - 1)
-         AS BIGINT) AS n_stopwords
-  FROM documents)
-SELECT doc_id, n_chars, n_tokens, n_punct, n_stopwords,
-  round(CASE WHEN n_tokens <= 0 THEN 0.0 ELSE
-    least(1.0, n_stopwords * 6.0 / n_tokens)
-    * (1.0 - least(1.0, n_punct * 4.0 / n_chars)) END, 6) AS quality
-FROM base
-"""
-
-_DECONTAM_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-grams0 AS (SELECT doc_id, md5(array_to_string(w[i:i+4], ' ')) AS gh
-           FROM words, LATERAL unnest(generate_series(1, len(w) - 4))
-           AS g(i) WHERE len(w) >= 5),
-grams AS (SELECT DISTINCT doc_id, gh FROM grams0),
-bwords AS (SELECT w[1:20] AS bw FROM words WHERE doc_id % 50 = 0),
-bgrams AS (SELECT DISTINCT md5(array_to_string(bw[i:i+4], ' ')) AS gh
-           FROM bwords, LATERAL unnest(generate_series(1, len(bw) - 4))
-           AS g(i) WHERE len(bw) >= 5),
-tot AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
-hits AS (SELECT doc_id, count(*) AS n_hits FROM grams
-         JOIN bgrams USING (gh) GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(coalesce(t.n_grams, 0) AS BIGINT) AS n_grams,
-  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-  coalesce(h.n_hits, 0) > 0 AS contaminated
-FROM documents d
-LEFT JOIN tot t ON t.doc_id = d.doc_id
-LEFT JOIN hits h ON h.doc_id = d.doc_id
-"""
-
-_REPETITION_ORACLE = """
-WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-           FROM documents),
-counts AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2),
-per AS (SELECT doc_id, sum(c) AS n, count(*) AS nd, max(c) AS topw,
-               sum(len(w) * c) AS chars
-        FROM counts GROUP BY doc_id),
-sp AS (SELECT doc_id, string_split(text, ' ') AS sp FROM documents),
-big0 AS (SELECT doc_id,
-         list_transform(range(1, len(sp)), i -> sp[i] || ' ' || sp[i+1])
-         AS bl FROM sp WHERE len(sp) >= 2),
-bg AS (SELECT doc_id, unnest(bl) AS b FROM big0),
-bc AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
-bper AS (SELECT doc_id, max(c) AS topb, sum(c) AS nb FROM bc
-         GROUP BY doc_id)
-SELECT p.doc_id, CAST(p.n AS BIGINT) AS n_words,
-  round(1.0 - p.nd / p.n, 6) AS dup_word_frac,
-  round(p.topw / p.n, 6) AS top_word_frac,
-  round(coalesce(b.topb / b.nb, 0.0), 6) AS top_bigram_frac,
-  round(p.chars / p.n, 6) AS mean_word_len
-FROM per p LEFT JOIN bper b USING (doc_id)
-"""
-
-_LM_QUALITY_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok0 AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM norm),
-tok AS (SELECT doc_id, w FROM tok0 WHERE w <> ''),
-counts AS (SELECT w, count(*) AS wn FROM tok GROUP BY w),
-tot AS (SELECT sum(wn) AS tot FROM counts),
-vocab AS (SELECT w, ln(wn / tot) AS lp FROM counts, tot),
-per AS (SELECT doc_id, count(*) AS n_tokens, avg(lp) AS mean_lp
-        FROM tok JOIN vocab USING (w) GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-  round(p.mean_lp, 6) AS mean_logprob,
-  round(exp(-p.mean_lp), 4) AS ppl
-FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
-"""
-
-_LM_BIGRAM_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-ws AS (SELECT doc_id, list_filter(string_split(t, ' '), x -> x <> '') AS w
-       FROM norm),
-bg AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-       FROM ws, LATERAL unnest(generate_series(1, len(w) - 1)) AS g(i)
-       WHERE len(w) >= 2),
-bgc AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
-ctx AS (SELECT w1, sum(c12) AS c1, count(*) AS nfol FROM bgc GROUP BY w1),
-cont AS (SELECT w2, count(*) AS nctx FROM bgc GROUP BY w2),
-tot AS (SELECT count(*) AS nbt FROM bgc),
-sc AS (SELECT bg.doc_id,
-         greatest(c12 - 0.75, 0.0) / c1
-         + 0.75 * nfol / c1 * (nctx / nbt) AS p
-       FROM bg JOIN bgc USING (w1, w2) JOIN ctx USING (w1)
-       JOIN cont USING (w2), tot),
-per AS (SELECT doc_id, count(*) AS n_bigrams, avg(ln(p)) AS mean_lp
-        FROM sc GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-  round(p.mean_lp, 6) AS mean_logprob, round(exp(-p.mean_lp), 4) AS ppl
-FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
-"""
-
-_BLOOM_ORACLE = f"""
-WITH keyed AS (SELECT doc_id, md5({_NORM}) AS fp FROM documents),
-occ AS (SELECT DISTINCT
-    CAST(('0x' || substr(md5('bf' || i || ':' || fp), 1, 8))::UBIGINT
-         % 65536 AS BIGINT) AS pos
-  FROM keyed, (VALUES (0),(1),(2),(3)) t(i) WHERE doc_id % 3 = 0),
-pp AS (SELECT doc_id,
-    CAST(('0x' || substr(md5('bf' || i || ':' || fp), 1, 8))::UBIGINT
-         % 65536 AS BIGINT) AS pos
-  FROM keyed, (VALUES (0),(1),(2),(3)) t(i))
-SELECT pp.doc_id, count(o.pos) = 4 AS maybe_member
-FROM pp LEFT JOIN occ o ON pp.pos = o.pos GROUP BY pp.doc_id
-"""
-
-_HLL_ALPHA = 0.7213 / (1.0 + 1.079 / 512)
-
-_HLL_ORACLE = f"""
-WITH norm AS (SELECT lang, {_NORM} AS t FROM documents),
-tok0 AS (SELECT lang, unnest(string_split(t, ' ')) AS w FROM norm),
-tok AS (SELECT lang, w FROM tok0 WHERE w <> ''),
-hx AS (SELECT lang,
-  CAST(('0x' || substr(md5(w), 1, 15))::UBIGINT AS BIGINT) AS h FROM tok),
-reg AS (SELECT lang, h % 512 AS bucket,
-  CASE WHEN (h >> 9) = 0 THEN 52 ELSE 52 - length(bin(h >> 9)) END AS r
-  FROM hx),
-mx AS (SELECT lang, bucket, max(r) AS rho FROM reg GROUP BY 1, 2),
-ag AS (SELECT lang, sum(power(2.0, -rho)) AS z, count(*) AS nonzero,
-  sum(rho) AS register_checksum FROM mx GROUP BY lang)
-SELECT lang,
-  round(CASE WHEN ({_HLL_ALPHA!r}::DOUBLE * 512 * 512 / (z + (512 - nonzero)))
-                  <= 1280.0 AND (512 - nonzero) > 0
-        THEN 512 * ln(512.0 / (512 - nonzero))
-        ELSE {_HLL_ALPHA!r}::DOUBLE * 512 * 512 / (z + (512 - nonzero)) END, 4)
-    AS est_distinct,
-  CAST(register_checksum AS BIGINT) AS register_checksum
-FROM ag
-"""
-
-_HLL_WINDOWS_ORACLE = f"""
-WITH hx AS (SELECT
-  strftime(make_timestamp(CAST(floor(epoch(ts) / 600) * 600 AS BIGINT)
-                          * 1000000), '%Y-%m-%d %H:%M:%S') AS window_start,
-  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::UBIGINT
-       AS BIGINT) AS h
-  FROM events),
-reg AS (SELECT window_start, h % 512 AS bucket,
-  CASE WHEN (h >> 9) = 0 THEN 52 ELSE 52 - length(bin(h >> 9)) END AS r
-  FROM hx),
-mx AS (SELECT window_start, bucket, max(r) AS rho FROM reg GROUP BY 1, 2),
-ag AS (SELECT window_start, sum(power(2.0, -rho)) AS z,
-  count(*) AS nonzero, sum(rho) AS register_checksum
-  FROM mx GROUP BY window_start)
-SELECT window_start,
-  round(CASE WHEN ({_HLL_ALPHA!r}::DOUBLE * 512 * 512 / (z + (512 - nonzero)))
-                  <= 1280.0 AND (512 - nonzero) > 0
-        THEN 512 * ln(512.0 / (512 - nonzero))
-        ELSE {_HLL_ALPHA!r}::DOUBLE * 512 * 512 / (z + (512 - nonzero)) END, 4)
-    AS est_distinct,
-  CAST(register_checksum AS BIGINT) AS register_checksum
-FROM ag
-"""
-
-_KMV_ORACLE = f"""
-WITH keyed AS (SELECT doc_id, md5({_NORM}) AS fp FROM documents),
-ha AS (SELECT DISTINCT
-  CAST(('0x' || substr(md5(fp), 1, 15))::UBIGINT AS BIGINT) AS h
-  FROM keyed WHERE doc_id % 3 = 0),
-ma AS (SELECT h FROM ha ORDER BY h LIMIT 64),
-hb AS (SELECT DISTINCT
-  CAST(('0x' || substr(md5(fp), 1, 15))::UBIGINT AS BIGINT) AS h
-  FROM keyed WHERE doc_id % 2 = 0),
-mb AS (SELECT h FROM hb ORDER BY h LIMIT 64),
-un AS (SELECT DISTINCT h FROM
-  (SELECT h FROM ma UNION ALL SELECT h FROM mb)),
-uk AS (SELECT h FROM un ORDER BY h LIMIT 64),
-ib AS (SELECT count(*) AS ki FROM uk
-       WHERE h IN (SELECT h FROM ma) AND h IN (SELECT h FROM mb)),
-st AS (SELECT count(*) AS ku, max(h) AS hk FROM uk)
-SELECT CAST(ki AS BIGINT) AS bottomk_intersection,
-  CAST(ku AS BIGINT) AS bottomk_size,
-  round(CASE WHEN ku < 64 THEN CAST(ku AS DOUBLE)
-        ELSE 63.0 * 1152921504606846976.0 / hk END, 4) AS est_union,
-  round(CAST(ki AS DOUBLE) / ku, 6) AS est_jaccard
-FROM st, ib
-"""
-
-_ASOF_ORACLE = """
-WITH clicks AS (SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'click'),
-views AS (SELECT user_id, ts AS vts, event_id AS view_id,
-                 value AS view_value
-          FROM events WHERE event_type = 'view')
-SELECT c.event_id, c.user_id, v.view_id AS prior_view_id,
-  round(v.view_value, 4) AS prior_view_value,
-  datediff('microsecond', v.vts, c.ts) AS gap_us
-FROM clicks c ASOF LEFT JOIN views v
-  ON c.user_id = v.user_id AND v.vts <= c.ts
-"""
-
-_ASOF_FWD_ORACLE = """
-WITH clicks AS (SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'click'),
-errors AS (SELECT user_id, ts AS ets, event_id AS error_id
-           FROM events WHERE event_type = 'error')
-SELECT c.event_id, c.user_id, e.error_id AS next_error_id,
-  datediff('microsecond', c.ts, e.ets) AS gap_us
-FROM clicks c ASOF LEFT JOIN errors e
-  ON c.user_id = e.user_id AND e.ets >= c.ts
-"""
-
-_PII_EMAIL = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-_PII_IP = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-_PII_PHONE = "\\b\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b"
-
-_PII_ORACLE = f"""
-WITH w AS (SELECT doc_id,
-  text || ' contact user' || doc_id || '@example.com'
-    || CASE WHEN doc_id % 2 = 0
-            THEN ' from 10.0.' || (doc_id % 256) || '.7' ELSE '' END
-    || CASE WHEN doc_id % 3 = 0 THEN ' call 555-123-4567' ELSE '' END
-  AS t FROM documents)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '{_PII_EMAIL}')) AS BIGINT) AS n_emails,
-  CAST(len(regexp_extract_all(t, '{_PII_IP}')) AS BIGINT) AS n_ips,
-  CAST(len(regexp_extract_all(t, '{_PII_PHONE}')) AS BIGINT) AS n_phones,
-  sha256(regexp_replace(regexp_replace(regexp_replace(t,
-    '{_PII_EMAIL}', '<EMAIL>', 'g'),
-    '{_PII_IP}', '<IP>', 'g'),
-    '{_PII_PHONE}', '<PHONE>', 'g')) AS sha
-FROM w
-"""
-
-_TOKEN_ORACLE = r"""
-SELECT doc_id,
-  CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0b\f\r]+')) AS BIGINT) AS ws_tokens,
-  CAST(ceil(length(text) / 4.0) AS BIGINT) AS subword_tokens,
-  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]'))
-       AS BIGINT) AS bpeish_tokens
-FROM documents
-"""
-
-_ANN_ORACLE = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-pairs AS (SELECT q.qid, e.vec_id AS cid,
-  list_dot_product(q.qv, e.v)
-    / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v)))
-  AS cosine
-  FROM q, e WHERE e.vec_id <> q.qid),
-ranked AS (SELECT qid, cid, cosine,
-           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid)
-           AS rank FROM pairs)
-SELECT qid AS query_id, CAST(rank AS BIGINT) AS rank, cid AS neighbor_id,
-       round(cosine, 6) AS cosine
-FROM ranked WHERE rank <= 5
-"""
-
-_ANN_LSH_ORACLE = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (SELECT unnest(range(0, 8)) AS p),
-dots AS (
-  SELECT e.vec_id, pl.p,
-    list_sum(list_transform(range(1, 65),
-      i -> e.v[i] * (CASE WHEN strpos('02468ace',
-                          substr(md5(pl.p || ':' || (i-1)), 1, 1)) > 0
-                     THEN 1.0 ELSE -1.0 END))) AS dot
-  FROM e, planes pl),
-sig AS (SELECT vec_id,
-        CAST(sum(CASE WHEN dot > 0 THEN (1 << p) ELSE 0 END) AS BIGINT)
-        AS signature FROM dots GROUP BY vec_id),
-es AS (SELECT e.vec_id, e.v, s.signature FROM e JOIN sig s USING (vec_id)),
-q AS (SELECT vec_id AS qid, v AS qv, signature AS qsig FROM es
-      WHERE vec_id < 10),
-pairs AS (SELECT q.qid, es.vec_id AS cid,
-  list_dot_product(q.qv, es.v)
-    / (sqrt(list_dot_product(q.qv, q.qv))
-       * sqrt(list_dot_product(es.v, es.v))) AS cosine
-  FROM q JOIN es ON es.signature = q.qsig AND es.vec_id <> q.qid),
-ranked AS (SELECT qid, cid, cosine,
-           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid)
-           AS rank FROM pairs)
-SELECT qid AS query_id, CAST(rank AS BIGINT) AS rank, cid AS neighbor_id,
-       round(cosine, 6) AS cosine
-FROM ranked WHERE rank <= 5
-"""
-
-
-def _ivf_oracle(n_cells: int = 16, nprobe: int = 2) -> str:
-    return _ANN_IVF_ORACLE_TMPL.format(hi=100 + n_cells, nprobe=nprobe)
-
-
-_ANN_IVF_ORACLE_TMPL = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents AS (SELECT vec_id - 100 AS cell, v AS centv FROM e
-          WHERE vec_id >= 100 AND vec_id < {hi}),
-scored AS (SELECT e.vec_id AS vid, e.v AS v, c.cell,
-  list_dot_product(e.v, c.centv)
-    / (sqrt(list_dot_product(e.v, e.v))
-       * sqrt(list_dot_product(c.centv, c.centv))) AS cos_c
-  FROM e, cents c),
-ranked AS (SELECT vid, v, cell, cos_c,
-           row_number() OVER (PARTITION BY vid ORDER BY cos_c DESC, cell)
-           AS crank FROM scored),
-base AS (SELECT vid AS cid, v AS cv, cell FROM ranked WHERE crank = 1),
-q AS (SELECT vid AS qid, v AS qv, cell FROM ranked
-      WHERE vid < 10 AND crank <= {nprobe}),
-pairs AS (SELECT q.qid, b.cid,
-  list_dot_product(q.qv, b.cv)
-    / (sqrt(list_dot_product(q.qv, q.qv))
-       * sqrt(list_dot_product(b.cv, b.cv))) AS cosine
-  FROM q JOIN base b ON b.cell = q.cell AND b.cid <> q.qid),
-rk AS (SELECT qid, cid, cosine,
-       row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid)
-       AS rank FROM pairs)
-SELECT qid AS query_id, CAST(rank AS BIGINT) AS rank, cid AS neighbor_id,
-       round(cosine, 6) AS cosine
-FROM rk WHERE rank <= 5
-"""
-
-_EMB_NEARDUP_ORACLE = """
-WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-e AS (SELECT vec_id, v FROM e0
-      UNION ALL
-      SELECT vec_id + 1000000, list_concat([v[1] + 0.05], v[2:64]) FROM e0),
-planes AS (SELECT unnest(range(0, 32)) AS p),
-dots AS (
-  SELECT e.vec_id, pl.p,
-    list_sum(list_transform(range(1, 65),
-      i -> e.v[i] * (CASE WHEN strpos('02468ace',
-                          substr(md5(pl.p || ':' || (i-1)), 1, 1)) > 0
-                     THEN 1.0 ELSE -1.0 END))) AS dot
-  FROM e, planes pl),
-sig AS (SELECT vec_id, p // 8 AS band,
-        CAST(sum(CASE WHEN dot > 0 THEN (1 << (p % 8)) ELSE 0 END) AS BIGINT)
-        AS bucket FROM dots GROUP BY vec_id, p // 8),
-sizes AS (SELECT band, bucket, count(*) AS bn FROM sig GROUP BY 1, 2),
-capped AS (SELECT s.vec_id, s.band, s.bucket FROM sig s
-           JOIN sizes z ON z.band = s.band AND z.bucket = s.bucket
-           WHERE z.bn BETWEEN 2 AND 100),
-cand AS (SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-         FROM capped l JOIN capped r
-         ON l.band = r.band AND l.bucket = r.bucket
-            AND l.vec_id < r.vec_id),
-pairs AS (SELECT c.a, c.b,
-  list_dot_product(la.v, rb.v)
-    / (sqrt(list_dot_product(la.v, la.v))
-       * sqrt(list_dot_product(rb.v, rb.v))) AS cosine
-  FROM cand c JOIN e la ON la.vec_id = c.a JOIN e rb ON rb.vec_id = c.b)
-SELECT a, b, round(cosine, 6) AS cosine FROM pairs WHERE cosine >= 0.99
-"""
-
-_EVENTS_WINDOW_ORACLE = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2
-"""
-
-_SESSIONS_ORACLE = """
-WITH lagd AS (
-  SELECT user_id, ts, event_id,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR CAST(floor(epoch(ts)) AS BIGINT)
-              - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-         THEN 1 ELSE 0 END AS new_session
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-numbered AS (
-  SELECT user_id, ts,
-    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM lagd)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM numbered GROUP BY user_id, session_id
 """
 
 
@@ -7647,103 +3244,10 @@ FROM m
 """
 
 
-_MEDIA_ORACLE = """
-WITH h AS (SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           md5(text) AS hx FROM documents)
-SELECT media_id, n_bytes,
-  round(((strpos('0123456789abcdef', substr(hx,1,1)) - 1) * 16
-       + (strpos('0123456789abcdef', substr(hx,2,1)) - 1)) / 256.0, 6) AS f0,
-  round(((strpos('0123456789abcdef', substr(hx,3,1)) - 1) * 16
-       + (strpos('0123456789abcdef', substr(hx,4,1)) - 1)) / 256.0, 6) AS f1
-FROM h
-"""
-
-
 def _values_oracle(rows) -> str:
     vals = ",\n".join("('%s','%s','%s','%s')" % r for r in rows)
     return ("SELECT url, subj, pred, obj FROM (VALUES\n" + vals
             + "\n) AS t(url, subj, pred, obj)")
-
-
-_BM25_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.term
-  FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''
-),
-dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-qt AS (SELECT * FROM (VALUES ('hash'),('join'),('spark'),('window'),('stream')) q(term)),
-tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-dfs AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfs.df + 0.5) / (dfs.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfs USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s
-  GROUP BY tf.doc_id)
-SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
-       doc_id, score
-FROM scored
-QUALIFY rank <= 25
-"""
-
-
-def _curation_oracle() -> str:
-    """SQL twin of the end-to-end chain: each stage reuses the same
-    fragment its standalone oracle uses (quality expression, word-count
-    CTE, _NORM fingerprint, split-hash CASE), composed exactly as the
-    Spark chain composes the operators."""
-    return f"""
-WITH {_AUG},
-base AS (
-  SELECT doc_id, text,
-    CAST(length(text) AS BIGINT) AS n_chars,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-    CAST(length(text) - length(regexp_replace(text, '[\\\\.,;:!\\\\?]', '', 'g'))
-         AS BIGINT) AS n_punct,
-    CAST((len(string_split(' ' || lower(text) || ' ', ' the ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' and ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' of ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' is ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' a ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' to ')) - 1)
-         AS BIGINT) AS n_stopwords
-  FROM aug),
-qual AS (
-  SELECT doc_id, n_tokens,
-    round(CASE WHEN n_tokens <= 0 THEN 0.0 ELSE
-      least(1.0, n_stopwords * 6.0 / n_tokens)
-      * (1.0 - least(1.0, n_punct * 4.0 / n_chars)) END, 6) AS quality
-  FROM base),
-wrd AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM aug),
-counts AS (SELECT doc_id, w, count(*) AS c FROM wrd GROUP BY 1, 2),
-dup AS (SELECT doc_id, round(1.0 - count(*) / sum(c), 6) AS dup_word_frac
-        FROM counts GROUP BY doc_id),
-fp AS (SELECT doc_id, md5({_NORM}) AS fp FROM aug),
-kept AS (SELECT doc_id FROM (
-           SELECT doc_id, doc_id = min(doc_id) OVER (PARTITION BY fp) AS k
-           FROM fp) WHERE k),
-cur AS (
-  SELECT q.doc_id, q.n_tokens, q.quality, d.dup_word_frac
-  FROM qual q JOIN dup d USING (doc_id) JOIN kept USING (doc_id)
-  WHERE q.quality >= 0.25 AND d.dup_word_frac <= 0.65),
-h AS (
-  SELECT cur.*,
-    CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-         ::UBIGINT % 10000 AS BIGINT) AS h
-  FROM cur)
-SELECT doc_id,
-  CASE WHEN h < 1000 THEN 'test' WHEN h < 9000 THEN 'train'
-       ELSE 'val' END AS split,
-  quality, dup_word_frac, n_tokens
-FROM h
-"""
 
 
 _PACKING_ORACLE = r"""
@@ -7761,48 +3265,6 @@ SELECT doc_id, grp, n_tokens, start_offset,
        start_offset // 512 AS seq_first,
        (start_offset + n_tokens - 1) // 512 AS seq_last
 FROM c
-"""
-
-_VOCAB_ORACLE = """
-WITH toks AS (
-  SELECT t.term
-  FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''
-),
-counts AS (SELECT term, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY term)
-SELECT CAST(row_number() OVER (ORDER BY n DESC, term) AS BIGINT) AS rank,
-       term, n
-FROM counts
-QUALIFY rank <= 50
-"""
-
-_MEDIA_DECODE_ORACLE = """
-WITH dims AS (
-  SELECT doc_id, 8 + (doc_id % 5) * 4 AS h, 8 + ((doc_id // 5) % 5) * 4 AS w
-  FROM documents),
-px AS (
-  SELECT d.doc_id, d.h, d.w, c.c,
-         CAST((x.x * 3 + y.y * 7 + c.c * 11 + d.doc_id) % 256 AS DOUBLE) AS v
-  FROM dims d, range(24) y(y), range(24) x(x), range(3) c(c)
-  WHERE y.y < d.h AND x.x < d.w),
-st AS (
-  SELECT doc_id, any_value(h) AS h, any_value(w) AS w,
-         avg(v) AS m, sqrt(avg(v * v) - avg(v) * avg(v)) AS sd,
-         avg(CASE WHEN c = 0 THEN v END) AS m0,
-         avg(CASE WHEN c = 1 THEN v END) AS m1,
-         avg(CASE WHEN c = 2 THEN v END) AS m2
-  FROM px GROUP BY doc_id)
-SELECT doc_id AS media_id,
-  round(CAST(CAST(h / 4096.0 AS REAL) AS DOUBLE), 6) AS f0,
-  round(CAST(CAST(w / 4096.0 AS REAL) AS DOUBLE), 6) AS f1,
-  round(CAST(CAST(0.75 AS REAL) AS DOUBLE), 6) AS f2,
-  round(CAST(CAST(m / 255.0 AS REAL) AS DOUBLE), 6) AS f3,
-  round(CAST(CAST(sd / 255.0 AS REAL) AS DOUBLE), 6) AS f4,
-  round(CAST(CAST(m0 / 255.0 AS REAL) AS DOUBLE), 6) AS f5,
-  round(CAST(CAST(m1 / 255.0 AS REAL) AS DOUBLE), 6) AS f6,
-  round(CAST(CAST(m2 / 255.0 AS REAL) AS DOUBLE), 6) AS f7
-FROM st
 """
 
 
@@ -7837,320 +3299,10 @@ FROM ev e
     return "".join(parts)
 
 
-def _semdedup_oracle(k: int = 8, n_iter: int = 2, dim: int = 64,
-                     threshold: float = 0.99) -> str:
-    """Replays semdedup end to end: the augmented-embedding table, the
-    identical deterministic Lloyd iterations (_kmeans_oracle's CTE
-    chain), the final assignment, and the within-cluster keep-earliest
-    prune rule (cosine rounded to 6 BEFORE thresholding, like the
-    Spark side)."""
-    parts = [f"""
-WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-ev AS (SELECT vec_id, v FROM e0
-       UNION ALL
-       SELECT vec_id + 1000000, list_concat([v[1] + 0.05], v[2:{dim}])
-       FROM e0),
-kk AS (SELECT greatest({k}, count(*) // 500) AS k FROM ev),
-c0 AS (SELECT vec_id AS cell, v AS cv FROM ev
-       WHERE vec_id < (SELECT k FROM kk))"""]
-    for i in range(n_iter):
-        parts.append(f""",
-a{i + 1} AS (SELECT e.vec_id, e.v,
-        (SELECT c.cell FROM c{i} c
-         ORDER BY list_distance(e.v, c.cv), c.cell LIMIT 1) AS cell
-       FROM ev e),
-u{i + 1} AS (SELECT cell, list(m ORDER BY pos) AS cv FROM (
-         SELECT a.cell, t.pos, avg(a.v[t.pos + 1]) AS m
-         FROM a{i + 1} a, range({dim}) t(pos) GROUP BY a.cell, t.pos)
-       GROUP BY cell),
-c{i + 1} AS (SELECT p.cell, COALESCE(u.cv, p.cv) AS cv
-       FROM c{i} p LEFT JOIN u{i + 1} u ON p.cell = u.cell)""")
-    parts.append(f""",
-asg AS (SELECT e.vec_id, e.v,
-        (SELECT c.cell FROM c{n_iter} c
-         ORDER BY list_distance(e.v, c.cv), c.cell LIMIT 1) AS cluster
-        FROM ev e),
-nn AS (SELECT vec_id, v, cluster, sqrt(list_dot_product(v, v)) AS nv
-       FROM asg),
-hits AS (SELECT y.vec_id AS vec_id,
-           round(list_dot_product(x.v, y.v) / (x.nv * y.nv), 6) AS cos
-         FROM nn x JOIN nn y
-           ON x.cluster = y.cluster AND x.vec_id < y.vec_id),
-pr AS (SELECT vec_id, max(cos) AS max_sim_lower FROM hits
-       WHERE cos >= {threshold} GROUP BY vec_id)
-SELECT nn.vec_id, CAST(nn.cluster AS BIGINT) AS cluster,
-  pr.max_sim_lower IS NULL AS is_kept, pr.max_sim_lower
-FROM nn LEFT JOIN pr ON nn.vec_id = pr.vec_id
-""")
-    return "".join(parts)
-
-
-# ------------------------------------------------------- session-3 oracles
-
-_CDC_APPLY_ORACLE = """
-WITH log AS (
-  SELECT doc_id, 1 AS seq, 'u' AS op, md5(text) AS payload FROM documents
-  UNION ALL
-  SELECT doc_id, 2, 'u', md5(text || 'v2') FROM documents
-  WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id, 3, 'd', NULL FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id, 4, 'u', 'restored' FROM documents WHERE doc_id % 21 = 0),
-latest AS (
-  SELECT doc_id, seq, op, payload FROM log
-  QUALIFY row_number() OVER (
-    PARTITION BY doc_id
-    ORDER BY seq DESC, CASE WHEN op = 'd' THEN 0 ELSE 1 END DESC) = 1)
-SELECT doc_id, CAST(seq AS BIGINT) AS seq, payload
-FROM latest WHERE op <> 'd'
-"""
-
-
-_SAMPLE_K_ORACLE = """
-SELECT doc_id, source, sample_rank FROM (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY md5('samp1:' || CAST(doc_id AS VARCHAR))
-                                     ASC, doc_id ASC) AS sample_rank
-  FROM documents)
-WHERE sample_rank <= 5
-"""
-
-
-def _html_metadata_oracle() -> str:
-    fields = ",\n  ".join(
-        f"nullif(regexp_extract(html, '{pat}', 1), '') AS {name}"
-        for name, pat in htmltext.META_PATTERNS.items())
-    return f"""
-WITH staged AS (SELECT
-  'https://example.org/m/' || CAST(doc_id AS VARCHAR) AS url,
-  '<html' || CASE WHEN doc_id % 2 = 0 THEN ' lang="en"' ELSE '' END
-  || '><head><title>Doc ' || CAST(doc_id AS VARCHAR) || '</title>'
-  || CASE WHEN doc_id % 3 = 0 THEN
-       '<meta name="description" content="summary '
-       || CAST(doc_id AS VARCHAR) || '">' ELSE '' END
-  || CASE WHEN doc_id % 5 = 0 THEN
-       '<link rel="canonical" href="https://example.org/c/'
-       || CAST(doc_id // 5 AS VARCHAR) || '">' ELSE '' END
-  || '</head><body>x</body></html>' AS html
-  FROM documents)
-SELECT url,
-  {fields}
-FROM staged
-"""
-
-
-def _crawl_plan_oracle() -> str:
-    robots_rows = " UNION ALL ".join(
-        "SELECT '{}' AS host, '{}' AS robots_txt".format(
-            h, t.replace("\n", "' || chr(10) || '"))
-        for h, t in _CRAWL_PLAN_ROBOTS)
-    return f"""
-WITH disc AS ({_frontier_expansion_oracle()}),
-robots AS ({robots_rows}),
-rules AS (SELECT lower(host) AS host,
-  list_filter(regexp_extract_all(robots_txt,
-              '(?m)^Disallow:\\s*(\\S*)\\s*$', 1), p -> p <> '') AS dis
-  FROM robots),
-fr AS (SELECT url, n_refs,
-  lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)) AS host,
-  CASE WHEN regexp_replace(url, '^[a-zA-Z]+://[^/]*', '') = '' THEN '/'
-       ELSE regexp_replace(url, '^[a-zA-Z]+://[^/]*', '') END AS path
-  FROM disc),
-al AS (SELECT fr.url, fr.host, fr.n_refs
-       FROM fr LEFT JOIN rules r ON r.host = fr.host
-       WHERE r.dis IS NULL
-          OR len(list_filter(r.dis, p -> starts_with(fr.path, p))) = 0),
-sched AS (SELECT url, host,
-  row_number() OVER (PARTITION BY host
-                     ORDER BY n_refs DESC, url ASC) AS slot
-  FROM al)
-SELECT url, host, slot, (slot - 1) * 5 AS fetch_offset_sec FROM sched
-"""
-
-
-def _exactsubstr_oracle() -> str:
-    return f"""
-WITH spans AS ({_DUP_SPANS_ORACLE}),
-{_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-w AS (SELECT doc_id, i - 1 AS pos, ws[CAST(i AS BIGINT)] AS w
-      FROM words, LATERAL unnest(generate_series(1, len(ws))) AS r(i)),
-kept AS (SELECT w.doc_id, w.pos, w.w FROM w
-         WHERE NOT EXISTS (SELECT 1 FROM spans a
-                           WHERE a.doc_id = w.doc_id
-                             AND w.pos BETWEEN a.start_word
-                                 AND a.end_word)),
-agg AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS clean,
-               count(*) AS n_kept FROM kept GROUP BY doc_id),
-tot AS (SELECT doc_id, len(ws) AS n FROM words)
-SELECT t.doc_id, md5(coalesce(a.clean, '')) AS clean_md5,
-       CAST(t.n - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed_words,
-       CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept_words
-FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
-"""
-
-
-def _frontier_expansion_oracle() -> str:
-    return f"""
-WITH links AS ({_HTML_LINKS_ORACLE}),
-known AS (SELECT DISTINCT
-  'https://crawl.example.org/doc/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents),
-agg AS (SELECT resolved_url AS url, count(*) AS n_refs
-        FROM links GROUP BY 1)
-SELECT a.url, a.n_refs FROM agg a
-LEFT JOIN known k ON k.url = a.url WHERE k.url IS NULL
-"""
-
-
-_DUP_SPANS_ORACLE = f"""
-WITH {_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-g AS (SELECT doc_id, i - 1 AS pos,
-      ws[CAST(i AS BIGINT)] || ' ' || ws[CAST(i + 1 AS BIGINT)] || ' '
-      || ws[CAST(i + 2 AS BIGINT)] || ' ' || ws[CAST(i + 3 AS BIGINT)]
-      || ' ' || ws[CAST(i + 4 AS BIGINT)] AS gram
-  FROM words, LATERAL unnest(generate_series(1, len(ws) - 4)) AS r(i)
-  WHERE len(ws) >= 5),
-occ AS (SELECT gram, count(*) AS n FROM g GROUP BY 1),
-dp AS (SELECT doc_id, pos FROM g JOIN occ USING (gram) WHERE n >= 2),
-isl AS (SELECT doc_id, pos,
-        pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        FROM dp),
-sp AS (SELECT doc_id, min(pos) AS s, max(pos) AS e
-       FROM isl GROUP BY doc_id, grp)
-SELECT doc_id, CAST(s AS BIGINT) AS start_word,
-       CAST(e + 4 AS BIGINT) AS end_word,
-       CAST(e - s + 5 AS BIGINT) AS span_words
-FROM sp WHERE e - s + 5 >= 8
-"""
-
-
-_FRONTIER_ORACLE_TMPL = """
-WITH w AS ({web}),
-s AS (SELECT url, doc_id % 7 AS prio,
-      lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)) AS host
-      FROM w),
-r AS (SELECT url, host,
-      row_number() OVER (PARTITION BY host
-                         ORDER BY prio DESC, url ASC) AS slot
-      FROM s)
-SELECT url, host, slot, (slot - 1) * 5 AS fetch_offset_sec FROM r
-"""
-
-
-_ROBOTS_ORACLE_TMPL = r"""
-WITH w AS ({web}),
-robots AS (
-  SELECT 'news.example.com' AS host,
-         'User-agent: *' || chr(10) || 'Disallow: /d1/' || chr(10)
-         || 'Disallow: /admin' || chr(10) AS robots_txt
-  UNION ALL SELECT 'blog.example.org',
-         'User-agent: *' || chr(10) || 'Disallow:' || chr(10)
-  UNION ALL SELECT 'www.sample.net',
-         'User-agent: *' || chr(10) || 'Disallow: /p' || chr(10)
-  UNION ALL SELECT 'shop.example.co',
-         'User-agent: *' || chr(10) || 'Disallow: /' || chr(10)),
-rules AS (SELECT lower(host) AS host,
-  list_filter(regexp_extract_all(robots_txt,
-              '(?m)^Disallow:\s*(\S*)\s*$', 1), p -> p <> '') AS dis
-  FROM robots),
-fr AS (SELECT url,
-  lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)) AS host,
-  CASE WHEN regexp_replace(url, '^[a-zA-Z]+://[^/]*', '') = '' THEN '/'
-       ELSE regexp_replace(url, '^[a-zA-Z]+://[^/]*', '') END AS path
-  FROM w)
-SELECT fr.url, fr.host, fr.path,
-  CASE WHEN r.dis IS NULL THEN TRUE
-       ELSE len(list_filter(r.dis, p -> starts_with(fr.path, p))) = 0
-  END AS allowed
-FROM fr LEFT JOIN rules r ON r.host = fr.host
-"""
-
-
-_MIXPLAN_ORACLE = """
-WITH t AS (SELECT source,
-           CAST(ceil(length(text) / 4.0) AS BIGINT) AS toks
-           FROM documents),
-c AS (SELECT source, count(*) AS n_docs, sum(toks) AS n_tokens
-      FROM t GROUP BY 1),
-z AS (SELECT sum(pow(n_tokens, 0.5)) AS z FROM c)
-SELECT source, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens,
-  round(pow(n_tokens, 0.5) / z, 6) AS weight,
-  round(1000000.0 * pow(n_tokens, 0.5) / z, 2) AS target_tokens,
-  round(1000000.0 * pow(n_tokens, 0.5) / z / n_tokens, 6)
-    AS repeat_factor
-FROM c CROSS JOIN z
-"""
-
-
-_LSH_HITS_ORACLE = f"""
-WITH {_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-sig AS (SELECT doc_id,
-        min(md5('0:' || shingle)) AS mh0, min(md5('1:' || shingle)) AS mh1,
-        min(md5('2:' || shingle)) AS mh2, min(md5('3:' || shingle)) AS mh3,
-        min(md5('4:' || shingle)) AS mh4, min(md5('5:' || shingle)) AS mh5,
-        min(md5('6:' || shingle)) AS mh6, min(md5('7:' || shingle)) AS mh7
-        FROM sh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, 0 AS band, md5(mh0 || '|' || mh1) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(mh2 || '|' || mh3) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(mh4 || '|' || mh5) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(mh6 || '|' || mh7) FROM sig),
-owners AS (SELECT band, bucket, min(doc_id) AS first_doc
-           FROM bands GROUP BY 1, 2)
-SELECT b.doc_id, CAST(b.band AS BIGINT) AS band, o.first_doc
-FROM bands b JOIN owners o ON o.band = b.band AND o.bucket = b.bucket
-WHERE b.doc_id <> o.first_doc
-"""
-
-
-_HTML_LINKS_ORACLE = r"""
-WITH staged AS (SELECT
-  'https://crawl.example.org/doc/' || CAST(doc_id AS VARCHAR) AS src_url,
-  '<html><body><nav><a href="/">home</a></nav><p>'
-  || '<a href="/doc/' || CAST((doc_id * 7 + 1) % 997 AS VARCHAR)
-  || '">next doc</a> <a href="https://partner'
-  || CAST(doc_id % 5 AS VARCHAR) || '.example.net/page">partner site</a> '
-  || CASE WHEN doc_id % 3 = 0 THEN '<a href="#cite">cite</a>' ELSE '' END
-  || '<a href="rel/' || CAST(doc_id % 7 AS VARCHAR)
-  || '">related</a></p></body></html>' AS html
-  FROM documents),
-ex AS (SELECT src_url,
-  regexp_extract(src_url, '^[a-zA-Z]+://[^/?#]+', 0) AS base,
-  regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>',
-                     1) AS hrefs,
-  regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>',
-                     2) AS anchors
-  FROM staged),
-flat AS (SELECT src_url, base, hrefs[CAST(i AS BIGINT)] AS href,
-                anchors[CAST(i AS BIGINT)] AS anchor
-  FROM ex, LATERAL unnest(generate_series(1, len(hrefs))) AS r(i))
-SELECT src_url, href,
-  CASE WHEN regexp_matches(href, '^https?://') THEN href
-       WHEN href LIKE '/%' THEN base || href
-       ELSE base || '/' || href END AS resolved_url,
-  anchor
-FROM flat WHERE href NOT LIKE '#%'
-"""
-
-
 def _q_hilbert_layout(spark, sf_dir):
     """Hilbert-curve layout envelope telemetry
     (ops/layout.py::hilbert_layout_stats): same per-file min/max
-    envelope report as zorder_layout over doc_id-derived dimensions,
+    envelope report as a z-order layout over doc_id-derived dimensions,
     but on the Hilbert index - consecutive keys are always grid
     neighbors (property-tested: bijection + unit-step adjacency), so
     no file ever spans a Z-jump. The unrolled rotate-and-flip walk is
@@ -8200,56 +3352,6 @@ FROM filed GROUP BY file""")
     return "".join(parts)
 
 
-def _zorder_oracle(n_files: int = 8, bits: int = 6) -> str:
-    """Morton interleave + quantile file assignment mirroring
-    ops/layout.py::zorder_layout_stats expression-for-expression."""
-    morton = " + ".join(
-        f"(((x >> {i}) & 1) << {2 * i}) + (((y >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits))
-    qs = ", ".join(repr(i / n_files) for i in range(1, n_files))
-    return f"""
-WITH pts AS (SELECT doc_id % 64 AS x, (doc_id * 7 + 3) % 64 AS y
-             FROM documents),
-keyed AS (SELECT x, y, {morton} AS zkey FROM pts),
-bounds AS (SELECT quantile_cont(zkey, [{qs}]) AS bs FROM keyed),
-filed AS (SELECT x, y,
-          1 + len(list_filter(bs, b -> b < zkey)) AS file
-          FROM keyed CROSS JOIN bounds)
-SELECT file, count(*) AS n_rows,
-       min(x) AS min_x, max(x) AS max_x,
-       min(y) AS min_y, max(y) AS max_y
-FROM filed GROUP BY file
-"""
-
-
-def _lpa_oracle(n_iter: int = 3) -> str:
-    """Unrolled label-propagation iterations mirroring
-    ops/graph.py::label_propagation: symmetrized multigraph votes + one
-    self-vote per node, most-frequent label with min-label ties."""
-    parts = ["""WITH nodes AS (SELECT doc_id AS node FROM documents),
-e0 AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents) AS dst
-  FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-l0 AS (SELECT node, node AS label FROM nodes)"""]
-    for i in range(n_iter):
-        p, c = f"l{i}", f"l{i + 1}"
-        parts.append(f""",
-v{i} AS (SELECT v, label, count(*) AS c FROM (
-    SELECT s.dst AS v, l.label FROM sym s JOIN {p} l ON l.node = s.src
-    UNION ALL SELECT node AS v, label FROM {p}) GROUP BY v, label),
-b{i} AS (SELECT v, label FROM v{i}
-         QUALIFY row_number() OVER (PARTITION BY v
-                                    ORDER BY c DESC, label ASC) = 1),
-{c} AS (SELECT n.node, coalesce(b.label, n.node) AS label
-        FROM nodes n LEFT JOIN b{i} b ON b.v = n.node)""")
-    parts.append(f"\nSELECT node, label FROM l{n_iter}")
-    return "".join(parts)
-
-
 def _label_spread_oracle(n_iter: int = 3) -> str:
     """Unrolled seeded label-propagation rounds mirroring
     ops/graph.py::seeded_label_propagation: clamped seeds, labeled-
@@ -8285,61 +3387,6 @@ l{i + 1} AS (SELECT base.node,
 SELECT base.node, l.label, base.is_seed
 FROM base JOIN l{n_iter} l ON l.node = base.node""")
     return "".join(parts)
-
-
-def _pagerank_oracle(n_iter: int = 5) -> str:
-    """Unrolled PageRank power iterations as chained CTEs, mirroring
-    ops/graph.py::pagerank expression-for-expression (rank * (1/deg),
-    teleport (1-0.85)/n, damping 0.85, uniform dangling mass)."""
-    parts = ["""WITH nodes AS (SELECT doc_id AS node FROM documents),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS cnt FROM nodes),
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents) AS dst
-  FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-deg AS (SELECT src, count(*) AS dg FROM e GROUP BY src),
-ce AS (SELECT e.src, e.dst, 1.0/dg AS inv_deg
-       FROM e JOIN deg ON e.src = deg.src),
-r0 AS (SELECT node, 1.0/cnt AS pr FROM nodes CROSS JOIN nn)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-c{i} AS (SELECT ce.dst AS node, sum(r.pr * ce.inv_deg) AS m
-  FROM r{i-1} r JOIN ce ON r.node = ce.src GROUP BY ce.dst),
-d{i} AS (SELECT 1.0 - coalesce(sum(m), 0.0) AS dm FROM c{i}),
-r{i} AS (SELECT nodes.node,
-  (1-0.85)/cnt + 0.85*(coalesce(c.m, 0.0) + d.dm/cnt) AS pr
-  FROM nodes CROSS JOIN nn CROSS JOIN d{i} d
-  LEFT JOIN c{i} c ON nodes.node = c.node)""")
-    parts.append(f"\nSELECT node, pr AS rank FROM r{n_iter}")
-    return "".join(parts)
-
-
-_TRIANGLES_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id+1) % n FROM documents, nn WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT (doc_id+1) % n, (doc_id+2) % n FROM documents, nn
-  WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id, (doc_id+2) % n FROM documents, nn WHERE doc_id % 10 = 0),
-e AS (SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-      FROM e0 WHERE s <> d),
-tri AS (SELECT x.a AS u, x.b AS v1, y.b AS v2
-        FROM e x JOIN e y ON x.a = y.a AND x.b < y.b
-        JOIN e z ON z.a = x.b AND z.b = y.b),
-corners AS (SELECT unnest([u, v1, v2]) AS node FROM tri),
-cnt AS (SELECT node, count(*) AS c FROM corners GROUP BY node)
-SELECT d.doc_id AS node, CAST(coalesce(cnt.c, 0) AS BIGINT) AS n_triangles
-FROM documents d LEFT JOIN cnt ON cnt.node = d.doc_id
-"""
 
 
 _LINK_CLUSTERING_ORACLE = """
@@ -8378,259 +3425,6 @@ LEFT JOIN cnt ON cnt.node = d.doc_id
 LEFT JOIN deg g ON g.node = d.doc_id
 """
 
-_CCNET_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok0 AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM norm),
-tok AS (SELECT doc_id, w FROM tok0 WHERE w <> ''),
-counts AS (SELECT w, count(*) AS wn FROM tok GROUP BY w),
-tot AS (SELECT sum(wn) AS tot FROM counts),
-vocab AS (SELECT w, ln(wn / tot) AS lp FROM counts, tot),
-per AS (SELECT doc_id, avg(lp) AS mean_lp FROM tok JOIN vocab USING (w)
-        GROUP BY doc_id),
-scored AS (SELECT d.doc_id, d.lang, round(exp(-p.mean_lp), 4) AS ppl
-           FROM documents d JOIN per p ON p.doc_id = d.doc_id)
-SELECT doc_id, lang, ppl,
-  CASE ntile(3) OVER (PARTITION BY lang ORDER BY ppl, doc_id)
-    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-FROM scored
-"""
-
-
-_NFC_ORACLE = """
-WITH staged AS (
-  SELECT doc_id,
-         text || CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769)
-                      WHEN doc_id % 3 = 1 THEN ' caf' || chr(233)
-                      ELSE '' END AS text
-  FROM documents)
-SELECT doc_id, nfc_normalize(text) AS text_nfc,
-       nfc_normalize(text) <> text AS changed,
-       length(text) AS n_cp_before,
-       length(nfc_normalize(text)) AS n_cp_after
-FROM staged
-"""
-
-
-_ANCHOR_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % n AS dst FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-l AS (SELECT src, dst,
-  'topic' || CAST(dst % 7 AS VARCHAR) || ' page' || CAST(dst AS VARCHAR)
-  || ' ' || CASE src % 3 WHEN 0 THEN 'click' WHEN 1 THEN 'read'
-            ELSE 'link' END AS anchor
-  FROM e),
-t AS (SELECT dst, unnest(string_split(lower(anchor), ' ')) AS term FROM l),
-tc AS (SELECT dst, term, count(*) AS c FROM t WHERE term <> ''
-       GROUP BY dst, term),
-tk AS (SELECT dst, term, c,
-       row_number() OVER (PARTITION BY dst ORDER BY c DESC, term) AS rnk
-       FROM tc QUALIFY rnk <= 3),
-terms AS (SELECT dst, string_agg(term, ' ' ORDER BY rnk) AS top_terms
-          FROM tk GROUP BY dst),
-st AS (SELECT dst, CAST(count(*) AS BIGINT) AS n_inlinks,
-       CAST(count(DISTINCT src) AS BIGINT) AS n_srcs FROM l GROUP BY dst)
-SELECT st.dst, st.n_inlinks, st.n_srcs, terms.top_terms
-FROM st JOIN terms USING (dst)
-"""
-
-
-_LINE_DOCS = """
-SELECT doc_id, k AS pos,
-  CASE k
-    WHEN 0 THEN 'header navigation menu site' || CAST(doc_id % 5 AS VARCHAR)
-    WHEN 1 THEN 'cookie consent notice applies to this site'
-    WHEN 2 THEN 'content ' || CAST(doc_id AS VARCHAR) || ' alpha '
-                || CAST(doc_id*31 % 97 AS VARCHAR)
-    WHEN 3 THEN 'shared snippet ' || CAST(doc_id // 2 AS VARCHAR)
-    ELSE 'content ' || CAST(doc_id AS VARCHAR) || ' beta '
-         || CAST(doc_id*17 % 89 AS VARCHAR)
-  END AS line
-FROM documents, (VALUES (0),(1),(2),(3),(4)) t(k)
-"""
-
-_LINE_REASSEMBLE = """
-agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
-        CAST(count(*) AS BIGINT) AS n_lines_kept FROM kept GROUP BY doc_id)
-SELECT d.doc_id, coalesce(a.text, '') AS text,
-       coalesce(a.n_lines_kept, 0) AS n_lines_kept
-FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
-
-_LINE_BOILERPLATE_ORACLE = f"""
-WITH lines AS ({_LINE_DOCS}),
-freq AS (SELECT line, count(DISTINCT doc_id) AS ndocs
-         FROM lines GROUP BY line),
-kept AS (SELECT l.doc_id, l.pos, l.line FROM lines l
-         JOIN freq f ON l.line = f.line WHERE f.ndocs <= 2),
-{_LINE_REASSEMBLE}
-"""
-
-_LINE_DEDUP_FIRST_ORACLE = f"""
-WITH lines AS ({_LINE_DOCS}),
-rn AS (SELECT doc_id, pos, line,
-       row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-       FROM lines),
-kept AS (SELECT doc_id, pos, line FROM rn WHERE rn = 1),
-{_LINE_REASSEMBLE}
-"""
-
-_MIX_DOMAINS = f"""
-SELECT doc_id,
-  regexp_extract(regexp_extract(url, '^[a-z]+://([^/]+)', 1),
-                 '([^.]+\\.[^.]+)$', 1) AS domain
-FROM ({_WEB_URLS})
-"""
-
-_MIXTURE_RATES_ORACLE = f"""
-WITH q AS ({_MIX_DOMAINS}),
-c AS (SELECT domain, CAST(count(*) AS BIGINT) AS n_docs FROM q GROUP BY domain),
-t AS (SELECT sum(n_docs) AS n_total, sum(pow(n_docs, 0.5)) AS z FROM c)
-SELECT domain, n_docs,
-  round(pow(n_docs, 0.5) / z, 9) AS weight,
-  round(least(1.0, 0.5 * n_total * pow(n_docs, 0.5) / z / n_docs), 9) AS rate
-FROM c CROSS JOIN t
-"""
-
-_MIXTURE_SAMPLE_ORACLE = f"""
-WITH q AS ({_MIX_DOMAINS}),
-c AS (SELECT domain, count(*) AS n_docs FROM q GROUP BY domain),
-t AS (SELECT sum(n_docs) AS n_total, sum(pow(n_docs, 0.5)) AS z FROM c),
-r AS (SELECT domain,
-      least(1.0, 0.5 * n_total * pow(n_docs, 0.5) / z / n_docs) AS rate
-      FROM c CROSS JOIN t),
-h AS (SELECT doc_id, domain,
-      CAST(('0x' || substr(md5('mix1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-           ::UBIGINT % 10000 AS BIGINT) AS hh
-      FROM q)
-SELECT h.doc_id, h.domain FROM h JOIN r ON h.domain = r.domain
-WHERE hh < rate * 10000.0
-"""
-
-
-def _bpe_oracle(n_merges: int = 8, what: str = "merges") -> str:
-    """Unrolled BPE iterations (ops/bpe.py twin): the wrapper encoding
-    makes replace() exact in both engines; tie-break (f DESC, l, r)."""
-    parts = [r"""WITH toks AS (
-  SELECT t.term FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''),
-w0 AS (SELECT term AS w, count(*) AS freq FROM toks GROUP BY term),
-s0 AS (SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS sym, freq FROM w0)"""]
-    for i in range(1, n_merges + 1):
-        parts.append(f""",
-p{i} AS (SELECT la[x] AS l, la[x+1] AS r, sum(freq) AS f
-  FROM (SELECT string_split(trim(sym, '<>'), '><') AS la, freq FROM s{i-1}),
-       unnest(generate_series(1, len(la)-1)) AS u(x)
-  GROUP BY la[x], la[x+1]),
-b{i} AS (SELECT l, r, f FROM p{i} ORDER BY f DESC, l, r LIMIT 1),
-s{i} AS (SELECT replace(sym, '<'||l||'><'||r||'>', '<'||l||r||'>') AS sym,
-         freq FROM s{i-1} CROSS JOIN b{i})""")
-    if what == "merges":
-        sel = " UNION ALL ".join(
-            f"SELECT CAST({i} AS INT) AS rank, l AS lhs, r AS rhs, "
-            f"CAST(f AS BIGINT) AS pair_freq FROM b{i}"
-            for i in range(1, n_merges + 1))
-        parts.append("\n" + sel)
-    elif what == "encode":
-        parts.append(f""",
-norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-d0 AS (SELECT doc_id, regexp_replace(t, '([^ ])', '<\\1>', 'g') AS sym
-       FROM norm)""")
-        for i in range(1, n_merges + 1):
-            parts.append(f""",
-d{i} AS (SELECT doc_id,
-  replace(sym, '<'||l||'><'||r||'>', '<'||l||r||'>') AS sym
-  FROM d{i-1} CROSS JOIN b{i})""")
-        parts.append(f""",
-tok AS (SELECT doc_id,
-  list_filter(flatten(list_transform(string_split(sym, ' '),
-    s -> string_split(trim(s, '<>'), '><'))), x -> x <> '') AS toks
-  FROM d{n_merges}),
-vocab AS (SELECT token, sum(freq) AS freq FROM (
-  SELECT unnest(string_split(trim(sym, '<>'), '><')) AS token, freq
-  FROM s{n_merges}) GROUP BY token),
-ranked AS (SELECT token,
-  row_number() OVER (ORDER BY freq DESC, token) AS tid FROM vocab),
-ex AS (SELECT doc_id, unnest(toks) AS token FROM tok),
-ids AS (SELECT ex.doc_id, sum(r.tid) AS idsum
-        FROM ex JOIN ranked r USING (token) GROUP BY ex.doc_id)
-SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-  md5(array_to_string(t.toks, ' ')) AS stream_md5,
-  CAST(coalesce(i.idsum, 0) AS BIGINT) AS id_checksum
-FROM tok t LEFT JOIN ids i ON i.doc_id = t.doc_id""")
-    elif what == "fertility":
-        parts.append(f""",
-norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-d0 AS (SELECT doc_id, regexp_replace(t, '([^ ])', '<\\1>', 'g') AS sym
-       FROM norm)""")
-        for i in range(1, n_merges + 1):
-            parts.append(f""",
-d{i} AS (SELECT doc_id,
-  replace(sym, '<'||l||'><'||r||'>', '<'||l||r||'>') AS sym
-  FROM d{i-1} CROSS JOIN b{i})""")
-        parts.append(f""",
-tok AS (SELECT doc_id,
-  list_filter(flatten(list_transform(string_split(sym, ' '),
-    s -> string_split(trim(s, '<>'), '><'))), x -> x <> '') AS toks
-  FROM d{n_merges}),
-wc AS (SELECT doc_id,
-  len(list_filter(string_split(t, ' '), w -> w <> '')) AS n_words
-  FROM norm)
-SELECT d.lang, count(*) AS n_docs,
-  CAST(sum(wc.n_words) AS BIGINT) AS n_words,
-  CAST(sum(len(t.toks)) AS BIGINT) AS n_tokens,
-  round(sum(len(t.toks)) / sum(wc.n_words), 6) AS fertility
-FROM tok t JOIN wc USING (doc_id) JOIN documents d USING (doc_id)
-GROUP BY d.lang""")
-    else:
-        parts.append(f"""
-SELECT token, CAST(sum(freq) AS BIGINT) AS freq FROM (
-  SELECT unnest(string_split(trim(sym, '<>'), '><')) AS token, freq
-  FROM s{n_merges})
-GROUP BY token""")
-    return "".join(parts)
-
-
-_DSIR_ORACLE = f"""
-WITH norm AS (SELECT doc_id, doc_id % 10 = 0 AS is_target, {_NORM} AS t
-              FROM documents),
-words AS (SELECT doc_id, is_target,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-grams AS (SELECT doc_id, is_target,
-    CAST(('0x' || substr(md5(ws[CAST(i AS BIGINT)] || ' '
-                             || ws[CAST(i + 1 AS BIGINT)]), 1, 8))::UBIGINT
-         % 1024 AS BIGINT) AS bucket
-  FROM words, LATERAL unnest(generate_series(1, len(ws) - 1)) AS r(i)
-  WHERE len(ws) >= 2),
-qc AS (SELECT bucket, count(*) AS cq FROM grams GROUP BY bucket),
-tc AS (SELECT bucket, count(*) AS ct FROM grams WHERE is_target
-       GROUP BY bucket),
-m0 AS (SELECT qc.bucket, coalesce(tc.ct, 0) AS ct, qc.cq
-       FROM qc LEFT JOIN tc ON qc.bucket = tc.bucket),
-tots AS (SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cq) AS BIGINT) AS tq
-         FROM m0),
-model AS (SELECT bucket,
-    ln(CAST(ct + 1 AS DOUBLE) / (tt + 1024))
-      - ln(CAST(cq + 1 AS DOUBLE) / (tq + 1024)) AS llr
-  FROM m0 CROSS JOIN tots),
-scored AS (SELECT g.doc_id, count(*) AS n_bigrams,
-             round(sum(m.llr), 6) AS log_weight
-  FROM grams g JOIN model m ON g.bucket = m.bucket GROUP BY g.doc_id),
-noised AS (SELECT doc_id, n_bigrams, log_weight,
-    round(log_weight + (-ln(-ln(
-      (CAST(('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 8))
-            ::UBIGINT AS DOUBLE) + 0.5) / 4294967296.0))), 6) AS score
-  FROM scored),
-thr AS (SELECT round(quantile_cont(score, 0.8), 6) AS thr FROM noised)
-SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, log_weight, score,
-  score > thr AS selected
-FROM noised CROSS JOIN thr
-"""
 
 _TFIDF_COS_ORACLE = f"""
 WITH {_AUG},
@@ -8658,56 +3452,6 @@ dots AS (SELECT c.doc_a, c.doc_b, round(sum(ia.u * ib.u), 6) AS cosine
   JOIN idx ib ON ib.doc = c.doc_b AND ib.term = ia.term
   GROUP BY 1, 2)
 SELECT doc_a, doc_b, cosine FROM dots WHERE cosine >= 0.5
-"""
-
-
-def _cms_oracle() -> str:
-    keys = ", ".join(f"'{k}'" for k in _CMS_KEYS)
-    return f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok AS (SELECT w FROM norm,
-        LATERAL unnest(list_filter(string_split(t, ' '), x -> x <> ''))
-        AS r(w)),
-cells AS (SELECT j,
-    CAST(('0x' || substr(md5('cms' || CAST(j AS VARCHAR) || ':' || w),
-          1, 8))::UBIGINT % 512 AS BIGINT) AS col,
-    count(*) AS cnt
-  FROM tok, LATERAL unnest(generate_series(0, 3)) AS d(j)
-  GROUP BY 1, 2),
-probes AS (SELECT key, j,
-    CAST(('0x' || substr(md5('cms' || CAST(j AS VARCHAR) || ':' || key),
-          1, 8))::UBIGINT % 512 AS BIGINT) AS col
-  FROM (SELECT unnest([{keys}]) AS key),
-       LATERAL unnest(generate_series(0, 3)) AS d(j))
-SELECT p.key, min(coalesce(c.cnt, 0)) AS est
-FROM probes p LEFT JOIN cells c ON c.j = p.j AND c.col = p.col
-GROUP BY p.key
-"""
-
-
-def _script_oracle() -> str:
-    names = [n for n, _ in textstats.SCRIPT_BLOCKS]
-    counts = ",\n  ".join(
-        f"len(regexp_extract_all(text, '[{rng}]')) AS {name}"
-        for name, rng in textstats.SCRIPT_BLOCKS)
-    suffix_case = " ".join(
-        f"WHEN doc_id % 5 = {k} THEN '{s}'"
-        for k, s in _SCRIPT_SUFFIXES.items())
-    g = "greatest(" + ", ".join(names) + ")"
-    main = " ".join(f"WHEN {n} = {g} THEN '{n}'" for n in names)
-    known = " + ".join(names)
-    return f"""
-WITH staged AS (
-  SELECT doc_id, text || CASE {suffix_case} ELSE '' END AS text
-  FROM documents),
-c AS (SELECT doc_id,
-  len(regexp_extract_all(text, '\\S')) AS n_nonspace,
-  {counts}
-  FROM staged)
-SELECT doc_id, n_nonspace, {", ".join(names)},
-  n_nonspace - ({known}) AS other,
-  CASE WHEN {g} <= 0 THEN 'none' {main} END AS main_script
-FROM c
 """
 
 
@@ -8769,172 +3513,6 @@ CROSS JOIN b2
 """
 
 
-_URLCANON_ORACLE = r"""
-WITH u AS (SELECT doc_id,
-  (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'HTTPS' END) || '://'
-  || (CASE WHEN doc_id % 4 < 2 THEN 'news.example.com'
-           ELSE 'News.Example.COM' END)
-  || (CASE WHEN doc_id % 4 = 2 THEN ':443' ELSE '' END)
-  || '/a/p' || CAST(doc_id // 3 AS VARCHAR)
-  || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)
-  || (CASE WHEN doc_id % 3 = 0 THEN '?utm_source=x&b=2&a=1'
-           WHEN doc_id % 3 = 1 THEN '?a=1&b=2' ELSE '' END)
-  || (CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END) AS url
-  FROM documents),
-pq AS (SELECT doc_id,
-  lower(regexp_extract(url, '^([a-zA-Z]+)://', 1)) AS scheme,
-  regexp_replace(lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)),
-                 ':(80|443)$', '') AS host,
-  regexp_extract(regexp_replace(url, '^[a-zA-Z]+://[^/?#]+', ''),
-                 '^([^?#]*)', 1) AS path0,
-  regexp_extract(regexp_replace(url, '^[a-zA-Z]+://[^/?#]+', ''),
-                 '\?([^#]*)', 1) AS query
-  FROM u),
-canon AS (SELECT doc_id, scheme || '://' || host
-  || (CASE WHEN path0 = '' THEN '/'
-      ELSE regexp_replace(path0, '(.)/$', '\1') END)
-  || (CASE WHEN kept = '' THEN '' ELSE '?' || kept END) AS canonical_url
-  FROM (SELECT *, coalesce(array_to_string(list_sort(list_filter(
-          string_split(query, '&'),
-          p -> p <> '' AND NOT list_contains(
-            ['utm_source','utm_medium','utm_campaign','utm_term',
-             'utm_content','gclid','fbclid','msclkid','ref'],
-            string_split(p, '=')[1]))), '&'), '') AS kept
-        FROM pq))
-SELECT doc_id, canonical_url,
-  doc_id = min(doc_id) OVER (PARTITION BY canonical_url) AS is_kept
-FROM canon
-"""
-
-_DOMAIN_TOPK_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-p AS (SELECT doc_id,
-      regexp_extract(regexp_extract(url, '^[a-z]+://([^/]+)', 1),
-                     '([^.]+\\.[^.]+)$', 1) AS domain,
-      CAST(length(text) AS BIGINT) AS n_chars
-      FROM w)
-SELECT domain, CAST(row_number() OVER
-    (PARTITION BY domain ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rank,
-  doc_id, n_chars
-FROM p
-QUALIFY rank <= 3
-"""
-
-_WINNOW_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-g AS (SELECT doc_id,
-      list_transform(generate_series(1, length(t) - 7),
-                     i -> md5(substr(t, CAST(i AS BIGINT), 8))) AS g
-      FROM norm WHERE length(t) >= 11),
-fps AS (SELECT DISTINCT doc_id, f FROM (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(g) - 3),
-    j -> list_aggregate(g[CAST(j AS BIGINT):CAST(j + 3 AS BIGINT)], 'min')))
-    AS f
-  FROM g))
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fingerprints,
-  md5(array_to_string(list_sort(list(f)), ',')) AS set_md5
-FROM fps GROUP BY doc_id
-"""
-
-_CHUNK_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-words AS (SELECT doc_id,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-starts AS (SELECT doc_id, ws,
-    unnest(generate_series(1, greatest(1, least(len(ws),
-                                               len(ws) - 40 + 30)), 30))
-      AS s
-  FROM words WHERE len(ws) >= 1)
-SELECT doc_id,
-  CAST((s - 1) // 30 AS BIGINT) AS chunk_id,
-  array_to_string(ws[CAST(s AS BIGINT):CAST(s + 39 AS BIGINT)], ' ')
-    AS chunk_text,
-  CAST(len(ws[CAST(s AS BIGINT):CAST(s + 39 AS BIGINT)]) AS BIGINT)
-    AS n_chunk_tokens
-FROM starts
-"""
-
-_SNAPDIFF_ORACLE = f"""
-WITH oldt AS (SELECT doc_id, md5({_NORM}) AS fp FROM documents),
-base AS (SELECT doc_id,
-  CASE WHEN doc_id % 5 = 0 THEN text || ' updated' ELSE text END AS text
-  FROM documents WHERE doc_id % 7 <> 0),
-newdocs AS (SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 11 = 0),
-newt AS (SELECT doc_id, md5({_NORM}) AS fp FROM newdocs)
-SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-  o.fp AS old_fp, n.fp AS new_fp,
-  CASE WHEN o.fp IS NULL THEN 'added'
-       WHEN n.fp IS NULL THEN 'removed'
-       WHEN o.fp <> n.fp THEN 'changed' ELSE 'unchanged' END AS status
-FROM oldt o FULL OUTER JOIN newt n ON o.doc_id = n.doc_id
-"""
-
-_NGRAM_DUP_ORACLE = f"""
-WITH {_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-grams AS (SELECT DISTINCT doc_id,
-            array_to_string(ws[CAST(i AS BIGINT):CAST(i + 4 AS BIGINT)], ' ')
-            AS ngram
-          FROM words,
-            LATERAL unnest(generate_series(1, len(ws) - 4)) AS r(i)
-          WHERE len(ws) >= 5),
-dfreq AS (SELECT ngram, count(*) AS ngram_df FROM grams GROUP BY ngram)
-SELECT g.doc_id,
-  CAST(count(*) AS BIGINT) AS n_ngrams,
-  CAST(sum(CASE WHEN d.ngram_df > 1 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_dup_ngrams,
-  round(CAST(sum(CASE WHEN d.ngram_df > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS dup_fraction
-FROM grams g JOIN dfreq d USING (ngram)
-GROUP BY g.doc_id
-"""
-
-_PMI_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-words AS (SELECT doc_id,
-          list_filter(string_split(t, ' '), w -> w <> '') AS ws FROM norm),
-uni AS (SELECT w, count(*) AS c_w
-        FROM (SELECT unnest(ws) AS w FROM words) GROUP BY w),
-tot AS (SELECT CAST(sum(c_w) AS BIGINT) AS n_total FROM uni),
-bg0 AS (SELECT ws[CAST(i AS BIGINT)] AS w1, ws[CAST(i + 1 AS BIGINT)] AS w2
-        FROM words,
-          LATERAL unnest(generate_series(1, len(ws) - 1)) AS r(i)
-        WHERE len(ws) >= 2),
-bg AS (SELECT w1, w2, count(*) AS c_xy FROM bg0 GROUP BY w1, w2
-       HAVING count(*) >= 5),
-btot AS (SELECT CAST(sum(c_xy) AS BIGINT) AS b_total FROM bg)
-SELECT w1, w2, CAST(c_xy AS BIGINT) AS c_xy,
-  CAST(u1.c_w AS BIGINT) AS c_x, CAST(u2.c_w AS BIGINT) AS c_y,
-  round(ln((CAST(c_xy AS DOUBLE) / b_total)
-           / ((CAST(u1.c_w AS DOUBLE) / n_total)
-              * (CAST(u2.c_w AS DOUBLE) / n_total))), 6) AS pmi
-FROM bg JOIN uni u1 ON bg.w1 = u1.w JOIN uni u2 ON bg.w2 = u2.w, tot, btot
-ORDER BY pmi DESC, w1, w2 LIMIT 50
-"""
-
-_PCT_ORACLE = """
-SELECT lang,
-  CAST(count(*) AS BIGINT) AS n_docs,
-  round(avg(n_chars), 4) AS mean_val,
-  round(quantile_cont(n_chars, 0.25), 4) AS p25,
-  round(quantile_cont(n_chars, 0.5), 4) AS p50,
-  round(quantile_cont(n_chars, 0.9), 4) AS p90,
-  round(quantile_cont(n_chars, 0.99), 4) AS p99
-FROM documents GROUP BY lang
-"""
-
-_ROLLUP_ORACLE = """
-SELECT source, lang,
-  CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-  round(avg(n_chars), 4) AS mean_chars
-FROM documents GROUP BY CUBE (source, lang)
-"""
-
 _INTERVAL_ORACLE = """
 WITH iv AS (SELECT event_id AS interval_id, user_id, ts AS start_ts,
                    ts + INTERVAL 30 MINUTE AS end_ts
@@ -8948,62 +3526,6 @@ FROM iv JOIN events e ON e.user_id = iv.user_id
 GROUP BY iv.interval_id
 """
 
-
-# shared MinHash-LSH candidate CTE chain over the augmented corpus
-# (mirrors shingles -> minhash_signatures -> lsh_candidate_pairs with the
-# same cap=100; the verify tail differs per oracle)
-_LSH_CAND_CTES = f"""{_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-sig AS (SELECT doc_id,
-        min(md5('0:' || shingle)) AS mh0, min(md5('1:' || shingle)) AS mh1,
-        min(md5('2:' || shingle)) AS mh2, min(md5('3:' || shingle)) AS mh3,
-        min(md5('4:' || shingle)) AS mh4, min(md5('5:' || shingle)) AS mh5,
-        min(md5('6:' || shingle)) AS mh6, min(md5('7:' || shingle)) AS mh7
-        FROM sh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, 0 AS band, md5(mh0 || '|' || mh1) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(mh2 || '|' || mh3) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(mh4 || '|' || mh5) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(mh6 || '|' || mh7) FROM sig),
-csizes AS (SELECT band, bucket, count(*) AS bn FROM bands GROUP BY 1, 2),
-capped AS (SELECT b.doc_id, b.band, b.bucket FROM bands b
-           JOIN csizes s ON s.band = b.band AND s.bucket = b.bucket
-           WHERE s.bn <= 100),
-cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-         FROM capped l JOIN capped r
-         ON l.bucket = r.bucket AND l.band = r.band AND l.doc_id < r.doc_id)"""
-
-_LEVENSHTEIN_ORACLE = f"""
-WITH {_LSH_CAND_CTES}
-SELECT c.a, c.b, CAST(levenshtein(na.t, nb.t) AS BIGINT) AS edit_dist
-FROM cand c
-JOIN norm na ON na.doc_id = c.a
-JOIN norm nb ON nb.doc_id = c.b
-WHERE levenshtein(na.t, nb.t) <= 16
-"""
-
-_CONTAINMENT_ORACLE = f"""
-WITH {_LSH_CAND_CTES},
-inter AS (SELECT c.a, c.b, count(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.a
-          JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-          GROUP BY c.a, c.b),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
-SELECT i.a, i.b,
-       round(i.n_inter / na.n, 6) AS containment_ab,
-       round(i.n_inter / nb.n, 6) AS containment_ba
-FROM inter i
-JOIN sizes na ON na.doc_id = i.a
-JOIN sizes nb ON nb.doc_id = i.b
-WHERE round(i.n_inter / na.n, 6) >= 0.8
-   OR round(i.n_inter / nb.n, 6) >= 0.8
-"""
 
 _PREFIX_FILTER_ORACLE = f"""
 WITH {_AUG},
@@ -9038,214 +3560,6 @@ SELECT a, b, CAST(n_inter AS BIGINT) AS n_inter,
        round(n_inter / (na + nb - n_inter), 6) AS jaccard
 FROM inter
 WHERE 1000000 * n_inter >= 800000 * (na + nb - n_inter)
-"""
-
-_NOVELTY_ORACLE = f"""
-WITH {_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-rnorm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-rwords AS (SELECT doc_id, string_split(t, ' ') AS w FROM rnorm),
-rsh0 AS (SELECT w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-         FROM rwords, LATERAL unnest(generate_series(1, len(w) - 2))
-             AS g(i)
-         WHERE len(w) >= 3),
-ref AS (SELECT DISTINCT shingle FROM rsh0),
-per AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-               CAST(sum(CASE WHEN r.shingle IS NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_novel
-        FROM sh s LEFT JOIN ref r ON r.shingle = s.shingle
-        GROUP BY s.doc_id)
-SELECT a.doc_id,
-       coalesce(p.n_shingles, 0) AS n_shingles,
-       coalesce(p.n_novel, 0) AS n_novel,
-       CASE WHEN coalesce(p.n_shingles, 0) > 0
-            THEN CAST((1000000 * p.n_novel) // p.n_shingles AS BIGINT)
-       END AS novelty_ppm
-FROM aug a LEFT JOIN per p ON p.doc_id = a.doc_id
-"""
-
-_QUANTIZE_ORACLE = """
-WITH e AS (SELECT vec_id,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-m AS (SELECT vec_id, v,
-      list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
-s AS (SELECT vec_id, v, amax,
-      CASE WHEN amax > 0 THEN 127.0 / amax ELSE 0.0 END AS scale FROM m)
-SELECT vec_id,
-  CAST(len(v) AS BIGINT) AS n_dims,
-  round(amax, 6) AS amax,
-  list_transform(v, x -> CAST(floor(x * scale + 0.5) AS INTEGER)) AS codes,
-  round(CASE WHEN scale > 0 THEN
-    list_sum(list_transform(v,
-      x -> (x - floor(x * scale + 0.5) / scale)
-           * (x - floor(x * scale + 0.5) / scale)))
-    ELSE 0.0 END, 6) AS sse
-FROM s
-"""
-
-_COCITATION_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-e AS (SELECT DISTINCT s, d FROM e0),
-deg AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND 100)
-SELECT l.d AS a, r.d AS b, count(*) AS n_common
-FROM e l
-JOIN e r ON l.s = r.s AND l.d < r.d
-JOIN deg ON deg.s = l.s
-GROUP BY l.d, r.d
-"""
-
-
-def _hits_oracle(n_iter: int = 3) -> str:
-    """Unrolled HITS iterations as chained CTEs, mirroring
-    ops/graph.py::hits expression-for-expression (hub0 = 1.0, authority
-    = L1-normalized in-edge hub sum, hub = L1-normalized out-edge sum of
-    the NEW authority)."""
-    parts = ["""WITH nodes AS (SELECT doc_id AS node FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents)
-    AS dst FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-h0 AS (SELECT node, 1.0 AS hub FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-ar{i} AS (SELECT e.dst AS node, sum(h.hub) AS m
-  FROM h{i-1} h JOIN e ON h.node = e.src GROUP BY e.dst),
-at{i} AS (SELECT coalesce(sum(m), 0.0) AS t FROM ar{i}),
-a{i} AS (SELECT nodes.node,
-  CASE WHEN t > 0 THEN coalesce(m, 0.0) / t ELSE 0.0 END AS authority
-  FROM nodes CROSS JOIN at{i} LEFT JOIN ar{i} r ON nodes.node = r.node),
-hr{i} AS (SELECT e.src AS node, sum(a.authority) AS m
-  FROM a{i} a JOIN e ON a.node = e.dst GROUP BY e.src),
-ht{i} AS (SELECT coalesce(sum(m), 0.0) AS t FROM hr{i}),
-h{i} AS (SELECT nodes.node,
-  CASE WHEN t > 0 THEN coalesce(m, 0.0) / t ELSE 0.0 END AS hub
-  FROM nodes CROSS JOIN ht{i} LEFT JOIN hr{i} r ON nodes.node = r.node)""")
-    parts.append(f"""
-SELECT h.node, h.hub, a.authority
-FROM h{n_iter} h JOIN a{n_iter} a ON h.node = a.node""")
-    return "".join(parts)
-
-
-_DOMAIN_REP_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-base AS (
-  SELECT doc_id, url,
-    CAST(length(text) AS BIGINT) AS n_chars,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-    CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))
-         AS BIGINT) AS n_punct,
-    CAST((len(string_split(' ' || lower(text) || ' ', ' the ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' and ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' of ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' is ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' a ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' to ')) - 1)
-         AS BIGINT) AS n_stopwords
-  FROM w),
-q AS (SELECT doc_id, url,
-  round(round(CASE WHEN n_tokens <= 0 THEN 0.0 ELSE
-    least(1.0, n_stopwords * 6.0 / n_tokens)
-    * (1.0 - least(1.0, n_punct * 4.0 / n_chars)) END, 6)
-    * ((6 + doc_id % 5) / 10.0), 6) AS score
-  FROM base),
-h AS (SELECT doc_id, score,
-      lower(regexp_extract(url, '^[a-z]+://([^/]+)', 1)) AS host FROM q),
-st AS (SELECT host, count(*) AS host_docs,
-       round(avg(score), 6) AS host_quality FROM h GROUP BY host)
-SELECT h.doc_id, h.host, h.score, st.host_docs, st.host_quality
-FROM h JOIN st USING (host)
-WHERE st.host_quality >= 0.3 OR h.score >= 0.5
-"""
-
-
-def _jl_oracle(k: int = 16, dim: int = 64, seed_offset: int = 1000) -> str:
-    """Replays jl_project's driver-known Rademacher sign planes as SQL
-    literals (same _plane md5-parity construction feeding both engines),
-    exploded to per-dimension scalars for the gate's float rounding."""
-    from eventrelationextractor_spark.ops.simsearch import _plane
-    root = float(k) ** 0.5
-    exprs = []
-    for j in range(k):
-        arr = ("[" + ",".join("1.0" if x > 0 else "-1.0"
-                              for x in _plane(seed_offset + j, dim))
-               + "]::DOUBLE[]")
-        # list_dot_product, not a per-index lambda fold: indexing the
-        # 64-literal array inside the lambda re-materializes it per
-        # element (O(dim^2) per expr - measured 45 s/expr over 50k rows
-        # vs 0.05 s for the dot product); summation-order drift vs the
-        # Spark fold is ~1e-15, absorbed by the 6dp rounding
-        exprs.append(f"round(list_dot_product(v, {arr}) / {root!r}, 6)")
-    cols = ",\n  ".join(exprs)
-    return f"""WITH e AS (SELECT vec_id,
-  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-r AS (SELECT vec_id, [{cols}] AS red FROM e)
-SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, red[i] AS value
-FROM r, LATERAL unnest(generate_series(1, len(red))) AS g(i)"""
-
-
-_URLSPAM_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-st AS (SELECT doc_id,
-  'https://' ||
-  CASE WHEN doc_id % 7 = 0
-       THEN 'promo' || (doc_id % 100) || '-w1n.' ELSE '' END ||
-  regexp_extract(url, '^https://(.*)$', 1) ||
-  CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&utm_medium=rss&id=1'
-       WHEN doc_id % 4 = 1 THEN '?ref=home' ELSE '' END AS url
-  FROM w),
-f AS (SELECT doc_id, url,
-  lower(regexp_extract(url, '^[a-z]+://([^/]+)', 1)) AS host,
-  regexp_extract(url, '\\?([^#]*)', 1) AS query
-  FROM st),
-g AS (SELECT doc_id, url, host, query,
-  CAST(length(url) AS BIGINT) AS url_len,
-  CAST(length(host) - length(regexp_replace(host, '[0-9]', '', 'g'))
-       AS BIGINT) AS host_digits,
-  CAST(length(host) - length(regexp_replace(host, '-', '', 'g'))
-       AS BIGINT) AS host_hyphens,
-  CAST(len(string_split(host, '.')) - 2 AS BIGINT) AS n_subdomains,
-  CAST(CASE WHEN query = '' THEN 0
-       ELSE len(string_split(query, '&')) END AS BIGINT) AS n_params,
-  CAST(len(list_filter(string_split(query, '&'),
-    p -> list_contains(['utm_source','utm_medium','utm_campaign',
-                        'utm_term','utm_content','gclid','fbclid',
-                        'msclkid','ref'],
-                       string_split(p, '=')[1]))) AS BIGINT) AS n_tracking
-  FROM f)
-SELECT doc_id, url, host, url_len, host_digits,
-  round(host_digits / length(host), 6) AS host_digit_ratio,
-  host_hyphens, n_subdomains, n_params, n_tracking,
-  round(least(1.0, host_digits/8.0 + host_hyphens/6.0
-              + greatest(n_subdomains - 2, 0)/4.0 + n_tracking/4.0
-              + url_len/400.0), 6) AS spam_score
-FROM g
-"""
-
-
-_TRAINING_ORDER_ORACLE = """
-WITH h AS (SELECT doc_id,
-           md5('shuf1:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
-s AS (SELECT doc_id, h,
-      CAST(('0x' || substr(h, 1, 8))::UBIGINT % 8 AS BIGINT) AS shard
-      FROM h)
-SELECT doc_id, shard,
-  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-       AS BIGINT) AS pos
-FROM s
 """
 
 
@@ -9323,153 +3637,6 @@ QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id)
         <= {k}"""
 
 
-def _ivfpq_recall_oracle(n_queries: int = 10, k: int = 5, **kw) -> str:
-    """Recall@k of the replayed IVF-PQ index vs the exact squared-L2
-    top-k (both ranked on the 6dp-rounded distance, id tie-break -
-    mirroring ops/pq.py::ivfpq_recall)."""
-    return _ivfpq_cand_sql(n_queries=n_queries, **kw) + f""",
-apx AS (SELECT qid, vec_id FROM cand
-  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id)
-          <= {k}),
-ex AS (SELECT q.qid, e.vec_id,
-       round(pow(list_distance(q.v, e.v), 2), 6) AS d
-       FROM q CROSS JOIN ev e WHERE e.vec_id <> q.qid),
-ext AS (SELECT qid, vec_id FROM ex
-  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) <= {k}),
-hits AS (SELECT ext.qid, count(*) AS n FROM ext
-  JOIN apx ON apx.qid = ext.qid AND apx.vec_id = ext.vec_id
-  GROUP BY ext.qid)
-SELECT q.qid AS query_id, CAST(coalesce(n, 0) AS BIGINT) AS n_hits,
-  round(coalesce(n, 0) / {float(k)!r}, 6) AS recall
-FROM q LEFT JOIN hits ON hits.qid = q.qid"""
-
-
-_ANOMALY_ORACLE = """
-WITH ev AS (
-  SELECT ts, event_type FROM events
-  UNION ALL
-  SELECT TIMESTAMP '2024-01-02 00:15:00', 'click' FROM events
-  WHERE event_id % 5 = 0),
-wc AS (SELECT event_type,
-       CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start,
-       count(*) AS n
-       FROM ev GROUP BY 1, 2),
-mom AS (SELECT event_type, avg(n) AS mu,
-        avg(n*n) - avg(n)*avg(n) AS var FROM wc GROUP BY 1),
-sc AS (SELECT wc.event_type, wc.win_start, wc.n, mu, var,
-       CASE WHEN var > 0 THEN (n - mu) / sqrt(var) ELSE 0.0 END AS z
-       FROM wc JOIN mom USING (event_type))
-SELECT event_type, win_start, n,
-  round(mu, 6) AS mean_n,
-  round(CASE WHEN var > 0 THEN sqrt(var) ELSE 0.0 END, 6) AS std_n,
-  round(z, 6) AS z,
-  abs(z) >= 3.0 AS anomaly
-FROM sc
-"""
-
-
-def _ppr_oracle(n_iter: int = 5) -> str:
-    """Unrolled personalized-PageRank iterations (seed teleport vector,
-    dangling mass to seeds, r0 = teleport distribution), mirroring
-    ops/graph.py::personalized_pagerank expression-for-expression."""
-    parts = ["""WITH nodes AS (SELECT doc_id AS node FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents)
-    AS dst FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-deg AS (SELECT src, count(*) AS dg FROM e GROUP BY src),
-ce AS (SELECT e.src, e.dst, 1.0/dg AS inv_deg
-       FROM e JOIN deg ON e.src = deg.src),
-sv AS (SELECT node,
-       CASE WHEN node % 50 = 0 THEN
-         1.0 / (SELECT count(*) FROM nodes WHERE node % 50 = 0)
-       ELSE 0.0 END AS s FROM nodes),
-r0 AS (SELECT node, s AS pr FROM sv)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-c{i} AS (SELECT ce.dst AS node, sum(r.pr * ce.inv_deg) AS m
-  FROM r{i-1} r JOIN ce ON r.node = ce.src GROUP BY ce.dst),
-d{i} AS (SELECT 1.0 - coalesce(sum(m), 0.0) AS dm FROM c{i}),
-r{i} AS (SELECT sv.node,
-  (1.0 - 0.85) * sv.s + 0.85 * (coalesce(c.m, 0.0) + d.dm * sv.s) AS pr
-  FROM sv CROSS JOIN d{i} d LEFT JOIN c{i} c ON sv.node = c.node)""")
-    parts.append(f"\nSELECT node, pr AS rank FROM r{n_iter}")
-    return "".join(parts)
-
-
-_SENTENCE_ORACLE = """
-WITH s0 AS (SELECT doc_id,
-  list_filter(list_transform(
-    regexp_extract_all(text, '[^.!?]+[.!?]?'), x -> trim(x)),
-    x -> x <> '') AS ss
-  FROM documents),
-sx AS (SELECT doc_id, u.s FROM s0, LATERAL unnest(ss) AS u(s)),
-w AS (SELECT doc_id, s,
-      len(list_filter(string_split(s, ' '), x -> x <> '')) AS w,
-      regexp_matches(s, '[.!?]$') AS term
-      FROM sx),
-per AS (SELECT doc_id, count(*) AS n_sentences,
-        round(avg(w), 6) AS mean_sent_words,
-        max(length(s)) AS max_sent_chars,
-        sum(CASE WHEN w < 4 THEN 1 ELSE 0 END) AS n_short,
-        round(avg(CASE WHEN term THEN 1.0 ELSE 0.0 END), 6)
-          AS terminal_ratio
-        FROM w GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(coalesce(n_sentences, 0) AS BIGINT) AS n_sentences,
-  mean_sent_words,
-  CAST(coalesce(max_sent_chars, 0) AS BIGINT) AS max_sent_chars,
-  CAST(coalesce(n_short, 0) AS BIGINT) AS n_short,
-  terminal_ratio
-FROM documents d LEFT JOIN per USING (doc_id)
-"""
-
-_SEED_DIST_ORACLE = """
-WITH RECURSIVE
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents)
-    AS dst FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-seeds AS (SELECT doc_id AS node FROM documents WHERE doc_id % 50 = 0),
-r(node, d) AS (
-  SELECT node, 0 FROM seeds
-  UNION ALL
-  SELECT e.dst, r.d + 1 FROM r JOIN e ON e.src = r.node WHERE r.d < 4)
-SELECT node, CAST(min(d) AS BIGINT) AS dist FROM r GROUP BY node
-"""
-
-
-def _walks_oracle(walk_len: int = 4, salt: str = "walk1",
-                  cap: int = 100) -> str:
-    """Replays random_walks step-for-step: sorted capped adjacency,
-    md5(salt:start:t) % degree neighbor pick per chained CTE."""
-    parts = [f"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % (SELECT count(*) FROM documents)
-    AS d FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-adj AS (SELECT s, (list(d ORDER BY d))[1:{cap}] AS ns
-        FROM (SELECT DISTINCT s, d FROM e0) GROUP BY s),
-w0 AS (SELECT node AS start, node FROM nodes)"""]
-    for t in range(1, walk_len + 1):
-        parts.append(f""",
-w{t} AS (SELECT w.start,
-  adj.ns[CAST(('0x' || substr(md5('{salt}:' || CAST(w.start AS VARCHAR)
-    || ':{t}'), 1, 8))::UBIGINT % len(adj.ns) AS BIGINT) + 1] AS node
-  FROM w{t-1} w JOIN adj ON adj.s = w.node)""")
-    selects = ["SELECT start, CAST(0 AS BIGINT) AS step, node FROM w0"]
-    selects += [f"SELECT start, CAST({t} AS BIGINT), node FROM w{t}"
-                for t in range(1, walk_len + 1)]
-    parts.append("\n" + "\nUNION ALL\n".join(selects))
-    return "".join(parts)
-
-
 # BM25 run + judgments CTE block shared by the ndcg and map/mrr
 # oracles - one definition so the two metrics can never grade
 # different runs.
@@ -9499,21 +3666,6 @@ topk AS (SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rnk,
 rel AS (SELECT doc_id, count(DISTINCT term) AS rel
         FROM toks JOIN qt USING (term) GROUP BY doc_id)"""
 
-_BM25_NDCG_ORACLE = f"""
-WITH {_BM25_RUN_CTES},
-dcg AS (SELECT coalesce(sum((pow(2.0, CAST(coalesce(rel, 0) AS DOUBLE)) - 1.0)
-        / log2(rnk + 1.0)), 0.0) AS dcg
-        FROM topk LEFT JOIN rel USING (doc_id)),
-ideal AS (SELECT rel,
-          row_number() OVER (ORDER BY rel DESC, doc_id) AS irnk
-          FROM rel WHERE rel > 0 QUALIFY irnk <= 25),
-idcg AS (SELECT coalesce(sum((pow(2.0, CAST(rel AS DOUBLE)) - 1.0)
-         / log2(irnk + 1.0)), 0.0) AS idcg FROM ideal)
-SELECT CAST(25 AS BIGINT) AS k, round(dcg, 6) AS dcg,
-  round(idcg, 6) AS idcg,
-  round(CASE WHEN idcg > 0 THEN dcg / idcg ELSE 0.0 END, 6) AS ndcg
-FROM dcg CROSS JOIN idcg
-"""
 
 # lcm(1..25): every AP term (hits_so_far / rank) scaled by this is an
 # exact integer - the sum can't drift with aggregation merge order.
@@ -9545,87 +3697,6 @@ FROM aggd CROSS JOIN rtot
 """
 
 
-_BADWORDS_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-ws AS (SELECT doc_id,
-       list_filter(string_split(t, ' '), x -> x <> '') AS w FROM norm),
-c AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-      CAST(len(list_filter(w,
-        x -> list_contains(['slow', 'big', 'error'], x))) AS BIGINT)
-        AS n_bad
-      FROM ws)
-SELECT doc_id, n_tokens, n_bad,
-  CASE WHEN n_tokens > 0 THEN round(n_bad / n_tokens, 6)
-       ELSE 0.0 END AS bad_ratio,
-  CASE WHEN n_tokens > 0 THEN round(n_bad / n_tokens, 6) <= 0.02
-       ELSE TRUE END AS keep
-FROM c
-"""
-
-
-_CRAWL_DELAYS_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-robots AS (SELECT * FROM (VALUES
-  ('news.example.com', 'User-agent: *' || chr(10) || 'Crawl-delay: 2'
-     || chr(10) || 'Disallow: /admin' || chr(10)),
-  ('blog.example.org', 'User-agent: *' || chr(10) || 'crawl-Delay: 10'
-     || chr(10)),
-  ('www.sample.net', 'User-agent: *' || chr(10) || 'Disallow: /p'
-     || chr(10)),
-  ('shop.example.co', 'Crawl-delay: 1' || chr(10) || 'User-agent: *'
-     || chr(10))) r(host, robots_txt)),
-delays AS (SELECT lower(host) AS host,
-  CAST(CASE WHEN regexp_extract(robots_txt,
-         '(?mi)^crawl-delay:\\s*([0-9]+)\\s*$', 1) = '' THEN 5
-       ELSE CAST(regexp_extract(robots_txt,
-         '(?mi)^crawl-delay:\\s*([0-9]+)\\s*$', 1) AS BIGINT) END
-       AS BIGINT) AS crawl_delay
-  FROM robots),
-fr AS (SELECT url, lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1))
-       AS host FROM w),
-slotted AS (SELECT url, host,
-  CAST(row_number() OVER (PARTITION BY host ORDER BY url) AS BIGINT)
-  AS slot FROM fr)
-SELECT s.url, s.host, s.slot,
-  CAST((s.slot - 1) * coalesce(d.crawl_delay, 5) AS BIGINT)
-  AS fetch_offset_sec
-FROM slotted s LEFT JOIN delays d ON d.host = s.host
-"""
-
-
-_WSAMPLE_ORACLE = """
-WITH base AS (
-  SELECT doc_id, source,
-    CAST(length(text) AS BIGINT) AS n_chars,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-    CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))
-         AS BIGINT) AS n_punct,
-    CAST((len(string_split(' ' || lower(text) || ' ', ' the ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' and ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' of ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' is ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' a ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' to ')) - 1)
-         AS BIGINT) AS n_stopwords
-  FROM documents),
-q AS (SELECT doc_id, source,
-  round(round(CASE WHEN n_tokens <= 0 THEN 0.0 ELSE
-    least(1.0, n_stopwords * 6.0 / n_tokens)
-    * (1.0 - least(1.0, n_punct * 4.0 / n_chars)) END, 6) + 0.01, 6)
-    AS wt
-  FROM base),
-keyed AS (SELECT doc_id, source, wt,
-  pow((('0x' || substr(md5('wsamp1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-       ::UBIGINT % 1000000 + 1) / 1000000.0, 1.0 / wt) AS k
-  FROM q WHERE wt > 0)
-SELECT doc_id, source, wt AS weight,
-  CAST(row_number() OVER (PARTITION BY source ORDER BY k DESC, doc_id)
-       AS BIGINT) AS sample_rank
-FROM keyed
-QUALIFY row_number() OVER (PARTITION BY source ORDER BY k DESC, doc_id)
-        <= 20
-"""
-
 _FUNNEL_ORACLE = """
 WITH f1 AS (SELECT user_id,
   min(CASE WHEN event_type = 'view' THEN ts END) AS t1
@@ -9644,42 +3715,6 @@ SELECT f1.user_id, f1.t1, f2.t2, f3.t3,
             WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage
 FROM f1 LEFT JOIN f2 ON f2.user_id = f1.user_id
 LEFT JOIN f3 ON f3.user_id = f1.user_id
-"""
-
-
-_ADAMIC_ADAR_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-sym AS (SELECT DISTINCT s, d FROM (
-  SELECT s, d FROM e0 UNION ALL SELECT d, s FROM e0) WHERE s <> d),
-deg AS (SELECT s AS z, count(*) AS dg FROM sym GROUP BY s
-        HAVING count(*) BETWEEN 2 AND 100),
-p AS (SELECT l.d AS a, r.d AS b, deg.dg
-      FROM sym l JOIN sym r ON l.s = r.s AND l.d < r.d
-      JOIN deg ON deg.z = l.s)
-SELECT a, b, count(*) AS n_common,
-  round(sum(1.0 / ln(CAST(dg AS DOUBLE))), 6) AS aa_score
-FROM p GROUP BY a, b
-"""
-
-
-_CHAR_ENTROPY_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-chars AS (SELECT doc_id, u.c
-          FROM norm, LATERAL unnest(regexp_extract_all(t, '.')) AS u(c)),
-cc AS (SELECT doc_id, c, count(*) AS n FROM chars GROUP BY doc_id, c),
-per AS (SELECT doc_id, sum(n) AS total, count(*) AS n_distinct,
-        sum(n * log2(n)) AS nlogn FROM cc GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(coalesce(total, 0) AS BIGINT) AS n_chars,
-  CAST(coalesce(n_distinct, 0) AS BIGINT) AS n_distinct,
-  round(log2(total) - nlogn / total, 6) AS entropy
-FROM documents d LEFT JOIN per USING (doc_id)
 """
 
 
@@ -9772,18 +3807,6 @@ GROUP BY 1, 2
 """
 
 
-_RETENTION_ORACLE = """
-WITH b AS (SELECT user_id AS u,
-  CAST(floor(epoch(ts) / 604800) * 604800 AS BIGINT) AS p FROM events),
-firsts AS (SELECT u, min(p) AS cohort_start FROM b GROUP BY u),
-active AS (SELECT DISTINCT u, p FROM b)
-SELECT f.cohort_start,
-  CAST((a.p - f.cohort_start) / 604800 AS BIGINT) AS period_offset,
-  count(*) AS n_users
-FROM active a JOIN firsts f ON f.u = a.u
-GROUP BY 1, 2
-"""
-
 _TPCH_Q4_ORACLE = """
 SELECT o_orderpriority, count(*) AS n_orders
 FROM orders o
@@ -9793,371 +3816,6 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
               WHERE l.l_orderkey = o.o_orderkey
                 AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority
-"""
-
-
-def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
-    """Unrolled synchronous k-core peeling rounds, mirroring
-    ops/graph.py::kcore_peel (strong = live-degree >= k, weak = alive
-    ANTI strong - catching degree-0 nodes, live edges semi-filtered on
-    both ends)."""
-    parts = [f"""WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-l0 AS MATERIALIZED (SELECT DISTINCT s, d FROM (
-  SELECT s, d FROM e0 UNION ALL SELECT d, s FROM e0) WHERE s <> d),
-a0 AS MATERIALIZED (SELECT DISTINCT s AS node FROM l0)"""]
-    # MATERIALIZED: DuckDB inlines plain CTEs per reference, and each
-    # round references the previous one three times - unpinned, the
-    # expansion is 3^rounds scans of the base table (observed as a
-    # too-many-open-files failure at rounds=8)
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-s{r} AS MATERIALIZED (SELECT s AS node FROM l{r-1} GROUP BY s
-         HAVING count(*) >= {k}),
-w{r} AS (SELECT node FROM a{r-1} WHERE node NOT IN
-         (SELECT node FROM s{r})),
-a{r} AS MATERIALIZED (SELECT node FROM s{r}),
-l{r} AS MATERIALIZED (SELECT l.s, l.d FROM l{r-1} l
-  JOIN a{r} x ON x.node = l.s JOIN a{r} y ON y.node = l.d)""")
-    selects = [f"SELECT node, CAST(0 AS BIGINT) AS dropped_round FROM a{rounds}"]
-    selects += [f"SELECT node, CAST({r} AS BIGINT) FROM w{r}"
-                for r in range(1, rounds + 1)]
-    parts.append("\n" + "\nUNION ALL\n".join(selects))
-    return "".join(parts)
-
-
-def _neardup_recall_oracle(threshold: float = 0.5) -> str:
-    """Replays BOTH near-dup pipelines on the sampled slice: the LSH
-    chain (shingles -> minhash -> capped bands -> verify) and the exact
-    all-pairs shingle-join ground truth, then the hit counts."""
-    return f"""
-WITH {_AUG},
-sl AS (SELECT doc_id, text FROM aug WHERE (doc_id % 1000000) % 17 = 0),
-norm AS (SELECT doc_id, {_NORM} AS t FROM sl),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS MATERIALIZED (SELECT DISTINCT doc_id, shingle FROM sh0),
-sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM sh
-                       GROUP BY doc_id),
-sig AS (SELECT doc_id,
-        min(md5('0:' || shingle)) AS mh0, min(md5('1:' || shingle)) AS mh1,
-        min(md5('2:' || shingle)) AS mh2, min(md5('3:' || shingle)) AS mh3,
-        min(md5('4:' || shingle)) AS mh4, min(md5('5:' || shingle)) AS mh5,
-        min(md5('6:' || shingle)) AS mh6, min(md5('7:' || shingle)) AS mh7
-        FROM sh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, 0 AS band, md5(mh0 || '|' || mh1) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(mh2 || '|' || mh3) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(mh4 || '|' || mh5) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(mh6 || '|' || mh7) FROM sig),
-csizes AS (SELECT band, bucket, count(*) AS bn FROM bands GROUP BY 1, 2),
-capped AS (SELECT b.doc_id, b.band, b.bucket FROM bands b
-           JOIN csizes s ON s.band = b.band AND s.bucket = b.bucket
-           WHERE s.bn <= 100),
-cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-         FROM capped l JOIN capped r
-         ON l.bucket = r.bucket AND l.band = r.band
-            AND l.doc_id < r.doc_id),
-ainter AS (SELECT c.a, c.b, count(*) AS n_inter
-           FROM cand c
-           JOIN sh sa ON sa.doc_id = c.a
-           JOIN sh sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-           GROUP BY c.a, c.b),
-approx AS MATERIALIZED (SELECT i.a, i.b FROM ainter i
-  JOIN sizes na ON na.doc_id = i.a
-  JOIN sizes nb ON nb.doc_id = i.b
-  WHERE round(i.n_inter / (na.n + nb.n - i.n_inter), 6) >= {threshold!r}),
-einter AS (SELECT sa.doc_id AS a, sb.doc_id AS b, count(*) AS n_inter
-           FROM sh sa JOIN sh sb
-           ON sa.shingle = sb.shingle AND sa.doc_id < sb.doc_id
-           GROUP BY 1, 2),
-exact AS MATERIALIZED (SELECT i.a, i.b FROM einter i
-  JOIN sizes na ON na.doc_id = i.a
-  JOIN sizes nb ON nb.doc_id = i.b
-  WHERE round(i.n_inter / (na.n + nb.n - i.n_inter), 6) >= {threshold!r}),
-hits AS (SELECT count(*) AS n FROM exact e
-         JOIN approx a ON a.a = e.a AND a.b = e.b),
-ne AS (SELECT count(*) AS n FROM exact),
-na2 AS (SELECT count(*) AS n FROM approx)
-SELECT ne.n AS n_exact, na2.n AS n_approx, hits.n AS n_hits,
-  round(CASE WHEN ne.n > 0 THEN hits.n / CAST(ne.n AS DOUBLE)
-        ELSE 1.0 END, 6) AS recall,
-  round(CASE WHEN na2.n > 0 THEN hits.n / CAST(na2.n AS DOUBLE)
-        ELSE 1.0 END, 6) AS precision
-FROM ne CROSS JOIN na2 CROSS JOIN hits"""
-
-
-_ANN_MULTIPROBE_ORACLE = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (SELECT unnest(range(0, 8)) AS p),
-dots AS (
-  SELECT e.vec_id, pl.p,
-    list_sum(list_transform(range(1, 65),
-      i -> e.v[i] * (CASE WHEN strpos('02468ace',
-                          substr(md5(pl.p || ':' || (i-1)), 1, 1)) > 0
-                     THEN 1.0 ELSE -1.0 END))) AS dot
-  FROM e, planes pl),
-sig AS (SELECT vec_id,
-        CAST(sum(CASE WHEN dot > 0 THEN (1 << p) ELSE 0 END) AS BIGINT)
-        AS signature FROM dots GROUP BY vec_id),
-es AS (SELECT e.vec_id, e.v, s.signature FROM e JOIN sig s USING (vec_id)),
-q AS (SELECT vec_id AS qid, v AS qv, signature AS qsig FROM es
-      WHERE vec_id < 10),
-probes AS (
-  SELECT qid, qv, qsig AS psig FROM q
-  UNION ALL
-  SELECT qid, qv, xor(qsig, CAST((1 << f) AS BIGINT))
-  FROM q, (SELECT unnest(range(0, 8)) AS f)),
-pairs AS (SELECT p.qid, es.vec_id AS cid,
-  list_dot_product(p.qv, es.v)
-    / (sqrt(list_dot_product(p.qv, p.qv))
-       * sqrt(list_dot_product(es.v, es.v))) AS cosine
-  FROM probes p JOIN es ON es.signature = p.psig AND es.vec_id <> p.qid),
-ranked AS (SELECT qid, cid, cosine,
-           row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, cid)
-           AS rank FROM pairs)
-SELECT qid AS query_id, CAST(rank AS BIGINT) AS rank, cid AS neighbor_id,
-       round(cosine, 6) AS cosine
-FROM ranked WHERE rank <= 5
-"""
-
-
-_HLL_MERGE_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok0 AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM norm),
-tok AS (SELECT doc_id, w FROM tok0 WHERE w <> ''),
-hx AS (SELECT doc_id,
-  CAST(('0x' || substr(md5(w), 1, 15))::UBIGINT AS BIGINT) AS h FROM tok),
-reg AS (SELECT doc_id, h % 512 AS bucket,
-  CASE WHEN (h >> 9) = 0 THEN 52 ELSE 52 - length(bin(h >> 9)) END AS r
-  FROM hx),
-a AS (SELECT bucket, max(r) AS rho FROM reg WHERE doc_id % 2 = 0
-      GROUP BY bucket),
-b AS (SELECT bucket, max(r) AS rho FROM reg WHERE doc_id % 2 = 1
-      GROUP BY bucket),
-merged AS (SELECT bucket, max(rho) AS rho_merged FROM
-           (SELECT * FROM a UNION ALL SELECT * FROM b) GROUP BY bucket),
-fullr AS (SELECT bucket, max(r) AS rho_full FROM reg GROUP BY bucket)
-SELECT coalesce(m.bucket, f.bucket) AS bucket,
-  coalesce(m.rho_merged, -1) AS rho_merged,
-  coalesce(f.rho_full, -1) AS rho_full,
-  coalesce(m.rho_merged, -1) = coalesce(f.rho_full, -1) AS equal
-FROM merged m FULL OUTER JOIN fullr f ON f.bucket = m.bucket
-"""
-
-
-def _host_lang_profile_oracle() -> str:
-    return f"""
-WITH lp AS ({_lang_trigram_oracle()}),
-h AS (SELECT doc_id, 'h' || (doc_id % 7) || '.example.org' AS host
-      FROM documents),
-c AS (SELECT h.host, lp.predicted_lang, count(*) AS c
-      FROM lp JOIN h ON h.doc_id = lp.doc_id GROUP BY 1, 2),
-t AS (SELECT host, sum(c) AS n_docs, count(*) AS n_labels FROM c
-      GROUP BY host),
-d AS (SELECT host, predicted_lang, c,
-      row_number() OVER (PARTITION BY host
-                         ORDER BY c DESC, predicted_lang) AS rn FROM c)
-SELECT t.host, t.n_docs, t.n_labels,
-  d.predicted_lang AS dominant_label,
-  round(d.c / CAST(t.n_docs AS DOUBLE), 6) AS dominant_frac
-FROM t JOIN d ON d.host = t.host AND d.rn = 1
-"""
-
-
-_HASHED_VEC_ORACLE = f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS t FROM documents),
-tok0 AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM norm),
-tok AS (SELECT doc_id, w FROM tok0 WHERE w <> ''),
-b AS (SELECT doc_id,
-  CAST(('0x' || substr(md5(w), 1, 8))::UBIGINT % 64 AS BIGINT) AS dim_idx,
-  CASE WHEN ('0x' || substr(md5(w), 9, 1))::UBIGINT % 2 = 0
-       THEN 1 ELSE -1 END AS s
-  FROM tok),
-c AS (SELECT doc_id, dim_idx, sum(s) AS c FROM b GROUP BY 1, 2),
-t AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id)
-SELECT c.doc_id, c.dim_idx, round(c.c / CAST(t.n AS DOUBLE), 6) AS value
-FROM c JOIN t ON t.doc_id = c.doc_id
-WHERE c.c <> 0
-"""
-
-
-_PROPS_ORACLE = """
-WITH k AS (SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-           value FROM events)
-SELECT k % 10 AS k_bucket, count(*) AS n_events,
-  min(k) AS min_k, max(k) AS max_k,
-  round(sum(value), 4) AS sum_value
-FROM k GROUP BY 1
-"""
-
-
-def _table_profile_oracle(cols=("doc_id", "text", "lang",
-                                 "source", "n_chars")) -> str:
-    parts = []
-    for c in cols:
-        parts.append(f"""SELECT '{c}' AS column,
-  count(*) AS n_rows,
-  count(*) - count({c}) AS n_nulls,
-  count(DISTINCT {c}) AS n_distinct,
-  CAST(min({c}) AS VARCHAR) AS min_value,
-  CAST(max({c}) AS VARCHAR) AS max_value
-FROM documents""")
-    return "\nUNION ALL\n".join(parts)
-
-
-_WEB_CURATION_ORACLE = f"""
-WITH w AS ({_WEB_URLS}),
-base AS (
-  SELECT doc_id, url, text,
-    CAST(length(text) AS BIGINT) AS n_chars,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-    CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))
-         AS BIGINT) AS n_punct,
-    CAST((len(string_split(' ' || lower(text) || ' ', ' the ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' and ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' of ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' is ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' a ')) - 1)
-       + (len(string_split(' ' || lower(text) || ' ', ' to ')) - 1)
-         AS BIGINT) AS n_stopwords
-  FROM w),
-q AS (SELECT doc_id, url,
-  round(CASE WHEN n_tokens <= 0 THEN 0.0 ELSE
-    least(1.0, n_stopwords * 6.0 / n_tokens)
-    * (1.0 - least(1.0, n_punct * 4.0 / n_chars)) END, 6) AS quality
-  FROM base),
-nw AS (SELECT doc_id, {_NORM} AS t FROM w),
-bw AS (SELECT doc_id,
-  list_filter(string_split(t, ' '), x -> x <> '') AS ws FROM nw),
-bgate AS (SELECT doc_id,
-  CASE WHEN len(ws) > 0 THEN
-    round(len(list_filter(ws,
-      x -> list_contains(['slow', 'big', 'error'], x)))
-      / CAST(len(ws) AS DOUBLE), 6) <= 0.09
-  ELSE TRUE END AS bad_ok FROM bw),
-s0 AS (SELECT doc_id,
-  list_filter(list_transform(
-      regexp_extract_all(text, '[^.!?]+[.!?]?'), x -> trim(x)),
-      x -> x <> '') AS ss FROM w),
-sx AS (SELECT doc_id, u.s FROM s0, LATERAL unnest(ss) AS u(s)),
-sg AS (SELECT doc_id,
-  round(avg(len(list_filter(string_split(s, ' '), x -> x <> ''))), 6)
-    <= 75 AS sent_ok
-  FROM sx GROUP BY doc_id),
-gated AS (SELECT q.doc_id, q.url, q.quality FROM q
-  JOIN bgate USING (doc_id) JOIN sg USING (doc_id)
-  WHERE bgate.bad_ok AND sg.sent_ok),
-h AS (SELECT doc_id, quality,
-      lower(regexp_extract(url, '^[a-z]+://([^/]+)', 1)) AS host
-      FROM gated),
-st AS (SELECT host, round(avg(quality), 6) AS hq FROM h GROUP BY host),
-kept AS (SELECT h.doc_id, h.host, h.quality FROM h
-  JOIN st USING (host) WHERE st.hq >= 0.3 OR h.quality >= 0.5),
-ord0 AS (SELECT doc_id, host, quality,
-  md5('shuf1:' || CAST(doc_id AS VARCHAR)) AS hh FROM kept),
-ord1 AS (SELECT doc_id, host, quality, hh,
-  CAST(('0x' || substr(hh, 1, 8))::UBIGINT % 4 AS BIGINT) AS shard
-  FROM ord0)
-SELECT doc_id, host, quality, shard,
-  CAST(row_number() OVER (PARTITION BY shard ORDER BY hh, doc_id)
-       AS BIGINT) AS pos
-FROM ord1
-"""
-
-
-_GRAPH_STATS_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-e AS (SELECT DISTINCT s, d FROM e0 WHERE s <> d),
-nodes AS (SELECT count(*) AS n_nodes FROM
-  (SELECT s AS x FROM e UNION SELECT d FROM e)),
-m AS (SELECT count(*) AS n_edges FROM e),
-recip AS (SELECT count(*) AS n_reciprocal FROM e a
-          JOIN e b ON b.s = a.d AND b.d = a.s),
-deg AS (SELECT max(dg) AS max_out_degree,
-        round(avg(dg), 6) AS avg_out_degree FROM
-        (SELECT s, count(*) AS dg FROM e GROUP BY s))
-SELECT n_nodes, n_edges, n_reciprocal,
-  round(n_reciprocal / CAST(n_edges AS DOUBLE), 6) AS reciprocity,
-  max_out_degree, avg_out_degree
-FROM nodes CROSS JOIN m CROSS JOIN recip CROSS JOIN deg
-"""
-
-
-_WINNOW_PAIRS_ORACLE = f"""
-WITH {_AUG},
-norm AS (SELECT doc_id, {_NORM} AS t FROM aug),
-ok AS (SELECT doc_id, t FROM norm WHERE length(t) >= 23),
-grams AS (SELECT doc_id,
-  list_transform(generate_series(1, length(t) - 15),
-                 i -> md5(substr(t, CAST(i AS INT), 16))) AS g FROM ok),
-fp0 AS (SELECT doc_id, u.f FROM (
-  SELECT doc_id, list_distinct(list_transform(
-    generate_series(1, len(g) - 7),
-    j -> list_min(g[j:j+7]))) AS fs FROM grams),
-  LATERAL unnest(fs) AS u(f)),
-fp AS MATERIALIZED (SELECT DISTINCT doc_id, f FROM fp0),
-sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM fp
-                       GROUP BY doc_id),
-deg AS (SELECT f FROM fp GROUP BY f HAVING count(*) BETWEEN 2 AND 20),
-p AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_common
-      FROM fp l JOIN fp r ON l.f = r.f AND l.doc_id < r.doc_id
-      JOIN deg ON deg.f = l.f
-      GROUP BY 1, 2)
-SELECT p.a, p.b, p.n_common AS n_shared,
-  round(p.n_common / CAST(least(na.n, nb.n) AS DOUBLE), 6) AS overlap
-FROM p JOIN sizes na ON na.doc_id = p.a
-JOIN sizes nb ON nb.doc_id = p.b
-WHERE p.n_common >= 20
-"""
-
-
-_CLASS_STATS_ORACLE = """
-WITH ev AS (SELECT label AS lbl,
-  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-cent AS (SELECT lbl, list(m ORDER BY pos) AS c FROM (
-  SELECT e.lbl, t.pos, avg(e.v[t.pos + 1]) AS m
-  FROM ev e, range(64) t(pos) GROUP BY e.lbl, t.pos) GROUP BY lbl),
-scored AS (SELECT e.lbl,
-  CASE WHEN sqrt(list_dot_product(c.c, c.c)) > 0 THEN
-    list_dot_product(e.v, c.c)
-      / (sqrt(list_dot_product(e.v, e.v))
-         * sqrt(list_dot_product(c.c, c.c)))
-  ELSE 0.0 END AS cos
-  FROM ev e JOIN cent c ON c.lbl = e.lbl)
-SELECT s.lbl AS label, count(*) AS n,
-  round(sqrt(list_dot_product(c.c, c.c)), 6) AS centroid_norm,
-  round(avg(s.cos), 6) AS mean_cos
-FROM scored s JOIN cent c ON c.lbl = s.lbl
-GROUP BY s.lbl, c.c
-"""
-
-
-_SITEMAP_ORACLE = """
-WITH hosts AS (SELECT DISTINCT doc_id % 50 AS hid FROM documents),
-robots AS (SELECT 'h' || hid || '.example.org' AS host,
-  'User-agent: *' || chr(10) || 'Disallow: /tmp' || chr(10) ||
-  CASE WHEN hid % 3 = 0 THEN 'Sitemap: https://h' || hid
-    || '.example.org/sitemap.xml' || chr(10) ELSE '' END ||
-  CASE WHEN hid % 6 = 0 THEN 'Sitemap: https://h' || hid
-    || '.example.org/news-sitemap.xml' || chr(10) ELSE '' END
-  AS robots_txt FROM hosts)
-SELECT lower(host) AS host, u.s AS sitemap_url
-FROM robots, LATERAL unnest(regexp_extract_all(robots_txt,
-  '(?m)^Sitemap:\\s*(\\S+)\\s*$', 1)) AS u(s)
 """
 
 
@@ -10454,298 +4112,6 @@ SELECT s_name, numwait, rnk FROM (
   FROM counts) WHERE rnk <= 20
 """
 
-_HYBRID_RRF_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.term
-  FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''),
-dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks
-       GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
-          FROM dl),
-qt AS (SELECT * FROM (VALUES ('hash'),('join'),('spark'),('window'),
-                             ('stream')) q(term)),
-tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-dfs AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfs.df + 0.5) / (dfs.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfs USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s
-  GROUP BY tf.doc_id),
-sparse AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-  FROM scored QUALIFY rank <= 50),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 1),
-pairs AS (SELECT q.qid, e.vec_id AS cid,
-  list_dot_product(q.qv, e.v)
-    / (sqrt(list_dot_product(q.qv, q.qv))
-       * sqrt(list_dot_product(e.v, e.v))) AS cosine
-  FROM q, e WHERE e.vec_id <> q.qid),
-dense AS (
-  SELECT cid AS doc_id,
-         row_number() OVER (ORDER BY cosine DESC, cid) AS rank
-  FROM pairs QUALIFY rank <= 50),
-u AS (SELECT doc_id, rank FROM sparse
-      UNION ALL SELECT doc_id, rank FROM dense),
-fused AS (
-  SELECT doc_id, sum(1000000000 // (60 + rank)) AS s_ppb,
-         CAST(count(*) AS BIGINT) AS n_lists
-  FROM u GROUP BY 1)
-SELECT CAST(row_number() OVER (ORDER BY s_ppb DESC, doc_id) AS BIGINT)
-         AS rank,
-       doc_id, s_ppb / 1000000000.0 AS rrf_score, n_lists
-FROM fused QUALIFY rank <= 25
-"""
-
-_CONTRASTIVE_ORACLE = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 20),
-cpairs AS (SELECT q.qid, e.vec_id AS cid,
-  round(list_dot_product(q.qv, e.v)
-    / (sqrt(list_dot_product(q.qv, q.qv))
-       * sqrt(list_dot_product(e.v, e.v))), 6) AS cos6
-  FROM q, e WHERE e.vec_id <> q.qid),
-pos AS (SELECT qid AS anchor_id, cid AS positive_id, cos6 AS pos_cosine
-        FROM cpairs
-        QUALIFY row_number() OVER (PARTITION BY qid
-                                   ORDER BY cos6 DESC, cid) = 1),
-norm AS (SELECT doc_id, {{_NORM}} AS t FROM documents),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-shared AS (SELECT a.doc_id AS a, b.doc_id AS b,
-                  CAST(count(*) AS BIGINT) AS n_shared
-           FROM sh a JOIN sh b USING (shingle)
-           WHERE a.doc_id < 20 AND a.doc_id <> b.doc_id GROUP BY 1, 2),
-negc AS (SELECT s.a, s.b, s.n_shared, p.cos6
-         FROM shared s JOIN cpairs p ON p.qid = s.a AND p.cid = s.b
-         WHERE p.cos6 < 0.5),
-neg AS (SELECT a AS anchor_id, b AS negative_id, n_shared,
-               cos6 AS neg_cosine
-        FROM negc
-        QUALIFY row_number() OVER (PARTITION BY a
-                                   ORDER BY n_shared DESC, b) = 1)
-SELECT p.anchor_id, p.positive_id, p.pos_cosine,
-       n.negative_id, n.n_shared, n.neg_cosine
-FROM pos p LEFT JOIN neg n USING (anchor_id)
-""".replace("{_NORM}", _NORM)
-
-
-def _mmr_oracle(k: int = 10, n_cand: int = 50) -> str:
-    """Unrolled greedy-MMR twin: candidate list + pairwise sims once,
-    then one (objective, argmax, accumulate) CTE triple per step - the
-    same replay pattern as the GD iterations / Lloyd rounds. lam and
-    (1 - lam) are DOUBLE arithmetic (consts CTE): DuckDB would parse
-    0.7 as DECIMAL and make 1-0.7 an exact 0.3, while the Python side
-    computes IEEE 1.0-0.7 = 0.30000000000000004."""
-    steps = []
-    for i in range(2, k + 1):
-        steps.append(f"""
-obj{i} AS MATERIALIZED (
-  SELECT c.id, lam * c.rel - (1 - lam) *
-         (SELECT max(s.s) FROM sims s
-          WHERE s.a = c.id AND s.b IN (SELECT id FROM acc{i - 1})) AS o
-  FROM cand c, consts WHERE c.id NOT IN (SELECT id FROM acc{i - 1})),
-picked{i} AS MATERIALIZED (
-  SELECT id, {i} AS step, floor(o * 1000000 + 0.5) / 1000000.0 AS obj
-  FROM obj{i} ORDER BY o DESC, id LIMIT 1),
-acc{i} AS MATERIALIZED (
-  SELECT id FROM acc{i - 1} UNION ALL SELECT id FROM picked{i})""")
-    union = "\nUNION ALL ".join(
-        f"SELECT * FROM picked{i}" for i in range(1, k + 1))
-    return f"""
-WITH consts AS (SELECT CAST(0.7 AS DOUBLE) AS lam),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 1),
-pairs AS (SELECT e.vec_id AS cid, e.v,
-  list_dot_product(q.qv, e.v)
-    / (sqrt(list_dot_product(q.qv, q.qv))
-       * sqrt(list_dot_product(e.v, e.v))) AS cosine
-  FROM q, e WHERE e.vec_id <> q.qid),
-cand AS MATERIALIZED (
-         SELECT cid AS id, round(cosine, 6) AS rel, v FROM pairs
-         QUALIFY row_number() OVER (ORDER BY cosine DESC, cid)
-                 <= {n_cand}),
-sims AS MATERIALIZED (SELECT a.id AS a, b.id AS b,
-         floor(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b.v, b.v)))
-               * 1000000 + 0.5) / 1000000.0 AS s
-         FROM cand a JOIN cand b ON a.id <> b.id),
-picked1 AS MATERIALIZED (SELECT id, 1 AS step, rel AS obj
-            FROM cand ORDER BY rel DESC, id LIMIT 1),
-acc1 AS MATERIALIZED (SELECT id FROM picked1),{",".join(steps)}
-SELECT CAST(step AS BIGINT) AS step, id AS doc_id, obj AS mmr_score
-FROM ({union})
-"""
-
-
-_COMPACTION_ORACLE = """
-WITH files AS (
-  SELECT CAST(doc_id % 8 AS BIGINT) AS partition,
-         printf('part-%08d.parquet', doc_id) AS path,
-         CAST(n_chars * 997 + 4096 AS BIGINT) AS size_bytes
-  FROM documents),
-c AS (
-  SELECT partition, path, size_bytes,
-         CAST(sum(size_bytes) OVER (PARTITION BY partition ORDER BY path)
-              - size_bytes AS BIGINT) AS bin_offset
-  FROM files)
-SELECT partition, path, size_bytes, bin_offset,
-       bin_offset // 262144 AS bin
-FROM c
-"""
-
-_SKEW_ORACLE = """
-WITH counts AS (
-  SELECT CAST(user_id AS VARCHAR) AS key,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1),
-t AS (SELECT sum(n) AS total FROM counts),
-ranked AS (
-  SELECT key, n, total,
-         row_number() OVER (ORDER BY n DESC, key) AS rnk
-  FROM counts, t)
-SELECT key, n, round(n * 1.0 / total, 6) AS share,
-       CAST(ceil(n * 200.0 / total) AS BIGINT) AS salt_factor
-FROM ranked WHERE rnk <= 20
-"""
-
-_KANON_ORACLE = """
-WITH d AS (
-  SELECT doc_id, lang, source,
-         CAST(n_chars AS BIGINT) // 200 AS len_bucket
-  FROM documents)
-SELECT doc_id, lang, source, len_bucket,
-       CAST(count(*) OVER (PARTITION BY lang, source, len_bucket)
-            AS BIGINT) AS group_n,
-       count(*) OVER (PARTITION BY lang, source, len_bucket) < 5
-         AS is_suppressed
-FROM d
-"""
-
-
-_CDX_ORACLE = """
-WITH caps AS (
-  SELECT doc_id, CAST(20240101000000 AS BIGINT) AS capture_ts,
-         CAST(doc_id * 1000 + 1 AS BIGINT) AS "offset" FROM documents
-  UNION ALL
-  SELECT doc_id, 20240201000000, doc_id * 1000 + 2
-  FROM documents WHERE doc_id % 3 = 0),
-r AS (
-  SELECT printf('org,example)/doc/%08d', doc_id) AS urlkey, capture_ts,
-         printf('https://example.org/doc/%08d', doc_id) AS url,
-         CASE WHEN doc_id % 7 = 0 THEN '404' ELSE '200' END AS status,
-         CASE WHEN doc_id % 11 = 0 THEN 'application/pdf'
-              ELSE 'text/html' END AS mime,
-         md5(CAST(doc_id // 2 AS VARCHAR)) AS digest,
-         CAST(1000 + doc_id % 5000 AS BIGINT) AS length,
-         printf('crawl-%d.warc.gz', doc_id % 100) AS filename,
-         "offset"
-  FROM caps),
-latest AS (
-  SELECT *, row_number() OVER (PARTITION BY urlkey
-              ORDER BY capture_ts DESC, "offset" DESC) AS rn
-  FROM r WHERE status = '200' AND mime = 'text/html'),
-kept AS (SELECT urlkey, capture_ts, url, status, mime, digest, length,
-                filename, "offset" FROM latest WHERE rn = 1)
-SELECT *, urlkey = min(urlkey) OVER (PARTITION BY digest)
-         AS is_canonical
-FROM kept
-"""
-
-
-_ROBOTS_FULL_ORACLE = r"""
-WITH robots(host, robots_txt) AS (VALUES
-  ('news.example.com',
-   'User-agent: erexbot' || chr(10) || 'Disallow: /d1/' || chr(10) ||
-   'Allow: /d1/d2/' || chr(10) || chr(10) || 'User-agent: *' || chr(10) ||
-   'Disallow: /' || chr(10)),
-  ('blog.example.org',
-   'User-agent: *' || chr(10) || 'Disallow: /d1' || chr(10) ||
-   'Allow: /d1' || chr(10) || 'Disallow: /d1/d2/' || chr(10) ||
-   'Crawl-delay: 4' || chr(10) || 'Disallow:' || chr(10)),
-  ('www.sample.net',
-   'User-agent: googlebot' || chr(10) || 'User-agent: erexbot' ||
-   chr(10) || 'Disallow: /p' || chr(10)),
-  ('shop.example.co',
-   'User-agent: other' || chr(10) || 'Disallow: /' || chr(10))),
-splits AS (
-  SELECT host, string_split(robots_txt, chr(10)) AS parts FROM robots),
-lines AS (
-  -- no WITH ORDINALITY in this DuckDB: bounded range + length guard
-  SELECT host, r.pos, parts[r.pos] AS line
-  FROM splits, range(1, 16) r(pos) WHERE r.pos <= len(parts)),
-tagged AS (
-  SELECT host, pos,
-    lower(regexp_extract(line,
-      '(?i)^\s*user-agent:\s*(\S+)\s*$', 1)) AS ua,
-    lower(regexp_extract(line,
-      '(?i)^\s*(allow|disallow):\s*(\S*)\s*$', 1)) AS rtype,
-    regexp_extract(line,
-      '(?i)^\s*(allow|disallow):\s*(\S*)\s*$', 2) AS rpath
-  FROM lines),
-marked AS (
-  SELECT *, (ua <> '') AND NOT coalesce(
-      lag(ua <> '') OVER (PARTITION BY host ORDER BY pos), FALSE)
-      AS starts_group
-  FROM tagged),
-grouped AS (
-  SELECT *, sum(CASE WHEN starts_group THEN 1 ELSE 0 END)
-      OVER (PARTITION BY host ORDER BY pos) AS grp
-  FROM marked),
-gflags AS (
-  SELECT host, grp,
-         max(CASE WHEN ua = 'erexbot' THEN 1 ELSE 0 END) AS has_agent,
-         max(CASE WHEN ua = '*' THEN 1 ELSE 0 END) AS has_star
-  FROM grouped WHERE ua <> '' GROUP BY 1, 2),
-hflags AS (SELECT host, max(has_agent) AS host_has_agent
-           FROM gflags GROUP BY 1),
-rules AS (
-  SELECT g.host, g.rpath AS rule_path, g.rtype = 'allow' AS is_allow,
-         CAST(length(g.rpath) AS BIGINT) AS plen
-  FROM grouped g JOIN gflags USING (host, grp) JOIN hflags USING (host)
-  WHERE g.rtype <> '' AND g.rpath <> ''
-    AND ((host_has_agent = 1 AND has_agent = 1)
-         OR (host_has_agent = 0 AND has_star = 1))),
-fr AS (
-  SELECT 'https://' ||
-    (['news.example.com','blog.example.org','www.sample.net',
-      'docs.mirror.example.com','shop.example.co'])[doc_id % 5 + 1]
-    || '/' ||
-    CASE WHEN doc_id % 3 = 0 THEN ''
-         WHEN doc_id % 3 = 1 THEN 'd1/'
-         ELSE 'd1/d2/' END || 'p' || doc_id AS url
-  FROM documents),
-parsed AS (
-  SELECT url,
-    lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#]+)', 1)) AS host,
-    CASE WHEN regexp_replace(url, '^[a-zA-Z]+://[^/]*', '') = ''
-         THEN '/' ELSE regexp_replace(url, '^[a-zA-Z]+://[^/]*', '')
-    END AS path
-  FROM fr),
-verdicts AS (
-  SELECT p.url, p.host, p.path, r.is_allow, r.plen,
-         row_number() OVER (PARTITION BY p.url
-             ORDER BY r.plen DESC, r.is_allow DESC) AS rn,
-         count(r.rule_path) OVER (PARTITION BY p.url) AS n_match
-  FROM parsed p LEFT JOIN rules r
-    ON p.host = r.host AND starts_with(p.path, r.rule_path))
-SELECT url, host, path,
-       CASE WHEN n_match = 0 THEN TRUE ELSE is_allow END AS allowed
-FROM verdicts WHERE rn = 1
-"""
-
 
 _GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "tests", "golden")
@@ -10819,48 +4185,6 @@ SELECT event_type, day, count(*) AS n, sum(cents) AS sum_m,
 FROM ev GROUP BY 1, 2
 """
 
-_MODULARITY_ORACLE = """
-WITH params AS (SELECT count(*) AS n FROM documents),
-linked AS (SELECT doc_id AS s FROM documents WHERE doc_id % 17 <> 0),
-e AS (
-  SELECT s AS a, (s * 7 + 1) % n AS b FROM linked, params
-  UNION ALL
-  SELECT s, (s * 13 + 3) % n FROM linked, params),
-sym AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-deg AS (SELECT a, count(*) AS deg FROM sym GROUP BY a),
-per_c AS (
-  SELECT a // 64 AS label, count(*) AS n_nodes, sum(deg) AS d_tot
-  FROM deg GROUP BY 1),
-ein AS (
-  SELECT a // 64 AS label, count(*) AS e_in
-  FROM e WHERE a // 64 = b // 64 GROUP BY 1),
-mm AS (SELECT count(*) AS m FROM e)
-SELECT label, n_nodes, d_tot, coalesce(e_in, 0) AS e_in, mm.m AS m,
-       4 * mm.m * coalesce(e_in, 0) - d_tot * d_tot AS q_num
-FROM per_c LEFT JOIN ein USING (label) CROSS JOIN mm
-"""
-
-_APPORTION_ORACLE = """
-WITH w AS (
-  SELECT source AS stratum, sum(n_chars) AS weight
-  FROM documents GROUP BY 1),
-t AS (SELECT sum(weight) AS wsum FROM w),
-q AS (
-  SELECT stratum, weight,
-         (weight * 1000) // wsum AS base,
-         (weight * 1000) % wsum AS rem
-  FROM w, t),
-l AS (SELECT 1000 - sum(base) AS leftover FROM q),
-r AS (
-  SELECT stratum, weight, base, rem,
-         row_number() OVER (ORDER BY rem DESC, stratum) AS rnk
-  FROM q)
-SELECT stratum, weight, base,
-       CAST(CASE WHEN rnk <= l.leftover THEN 1 ELSE 0 END AS BIGINT)
-         AS extra,
-       base + CASE WHEN rnk <= l.leftover THEN 1 ELSE 0 END AS alloc
-FROM r, l
-"""
 
 _CC_INC_ORACLE = """
 WITH RECURSIVE
@@ -10881,59 +4205,6 @@ canon AS (SELECT src AS vertex, least(src, min(dst)) AS component
 SELECT vertex, component FROM canon
 """
 
-_DRIFT_ORACLE = """
-WITH o AS (
-  SELECT 'doc_id' AS col, count(*) AS o_rows,
-         count(*) - count(doc_id) AS o_nulls,
-         count(DISTINCT doc_id) AS o_distinct FROM documents
-  UNION ALL
-  SELECT 'lang', count(*), count(*) - count(lang),
-         count(DISTINCT lang) FROM documents
-  UNION ALL
-  SELECT 'source', count(*), count(*) - count(source),
-         count(DISTINCT source) FROM documents),
-nd AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang,
-         n_chars // 200 AS len_bucket
-  FROM documents),
-n AS (
-  SELECT 'doc_id' AS col, count(*) AS n_rows,
-         count(*) - count(doc_id) AS n_nulls,
-         count(DISTINCT doc_id) AS n_distinct FROM nd
-  UNION ALL
-  SELECT 'lang', count(*), count(*) - count(lang),
-         count(DISTINCT lang) FROM nd
-  UNION ALL
-  SELECT 'len_bucket', count(*), count(*) - count(len_bucket),
-         count(DISTINCT len_bucket) FROM nd),
-j AS (
-  SELECT coalesce(o.col, n.col) AS col, o_rows, o_nulls, o_distinct,
-         n_rows, n_nulls, n_distinct
-  FROM o FULL OUTER JOIN n ON o.col = n.col),
-ppm AS (
-  SELECT *,
-    CASE WHEN o_rows IS NULL THEN NULL
-         WHEN o_rows > 0 THEN (o_nulls * 1000000) // o_rows
-         ELSE 0 END AS o_ppm,
-    CASE WHEN n_rows IS NULL THEN NULL
-         WHEN n_rows > 0 THEN (n_nulls * 1000000) // n_rows
-         ELSE 0 END AS n_ppm
-  FROM j)
-SELECT col AS "column",
-  CASE WHEN o_rows IS NULL THEN 'added'
-       WHEN n_rows IS NULL THEN 'removed'
-       ELSE 'kept' END AS status,
-  coalesce(o_ppm, -1) AS old_null_ppm,
-  coalesce(n_ppm, -1) AS new_null_ppm,
-  coalesce(o_distinct, -1) AS old_distinct,
-  coalesce(n_distinct, -1) AS new_distinct,
-  coalesce(n_ppm, 0) - coalesce(o_ppm, 0) > 10000 AS null_rate_jump,
-  (o_rows IS NOT NULL AND n_rows IS NOT NULL
-   AND n_distinct * 1000000 < o_distinct * 500000
-   AND n_rows > 0) AS distinct_collapse
-FROM ppm
-"""
 
 _OPTSEG_ORACLE = """
 WITH RECURSIVE lens(L) AS (VALUES (2), (3), (4)),
@@ -10975,107 +4246,6 @@ SELECT doc_id, n AS n_chars, d0 AS n_pieces,
 FROM dp WHERE pos = n
 """
 
-_RM3_SEARCH_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.term
-  FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''
-),
-dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-qt AS (SELECT * FROM (VALUES ('hash'),('join'),('spark'),('window'),('stream')) q(term)),
-tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-dfs AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfs.df + 0.5) / (dfs.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfs USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s
-  GROUP BY tf.doc_id),
-top AS (
-  SELECT doc_id, score FROM scored
-  QUALIFY row_number() OVER (ORDER BY score DESC, doc_id) <= 10),
-total AS (SELECT sum(score) AS total FROM top),
-fb AS (SELECT t.doc_id, t.term, top.score FROM toks t JOIN top USING (doc_id)),
-fdl AS (SELECT doc_id, score, count(*) AS dl FROM fb GROUP BY 1, 2),
-ftf AS (SELECT doc_id, term, count(*) AS tf FROM fb GROUP BY 1, 2),
-prel AS (
-  SELECT term, sum((ftf.tf / fdl.dl) * (fdl.score / total.total)) AS p_rel
-  FROM ftf JOIN fdl USING (doc_id) CROSS JOIN total GROUP BY term),
-qm AS (SELECT term, 1.0 / 5 AS p_q FROM qt),
-merged AS (
-  SELECT coalesce(prel.term, qm.term) AS term,
-         0.6 * coalesce(p_q, 0) + 0.4 * coalesce(p_rel, 0) AS w
-  FROM prel FULL OUTER JOIN qm ON prel.term = qm.term),
-ranked AS (SELECT term, round(w, 6) AS weight FROM merged),
-expq AS (
-  SELECT term, weight FROM ranked
-  QUALIFY row_number() OVER (ORDER BY weight DESC, term) <= 15),
-tf2 AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        FROM toks JOIN expq USING (term) GROUP BY 1, 2),
-dfs2 AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf2 GROUP BY term),
-scored2 AS (
-  SELECT tf2.doc_id,
-         round(sum(expq.weight
-               * ln(1 + (s.n_docs - dfs2.df + 0.5) / (dfs2.df + 0.5))
-               * tf2.tf * (1.2 + 1.0)
-               / (tf2.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-           AS score
-  FROM tf2 JOIN expq USING (term) JOIN dfs2 USING (term)
-  JOIN dl USING (doc_id) CROSS JOIN stats s
-  GROUP BY tf2.doc_id)
-SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-         AS rank, doc_id, score
-FROM scored2
-QUALIFY rank <= 25
-"""
-
-_RM3_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.term
-  FROM documents,
-       unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE t.term <> ''
-),
-dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-qt AS (SELECT * FROM (VALUES ('hash'),('join'),('spark'),('window'),('stream')) q(term)),
-tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-dfs AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfs.df + 0.5) / (dfs.df + 0.5))
-               * tf.tf * (1.2 + 1.0)
-               / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfs USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s
-  GROUP BY tf.doc_id),
-top AS (
-  SELECT doc_id, score FROM scored
-  QUALIFY row_number() OVER (ORDER BY score DESC, doc_id) <= 10),
-total AS (SELECT sum(score) AS total FROM top),
-fb AS (SELECT t.doc_id, t.term, top.score FROM toks t JOIN top USING (doc_id)),
-fdl AS (SELECT doc_id, score, count(*) AS dl FROM fb GROUP BY 1, 2),
-ftf AS (SELECT doc_id, term, count(*) AS tf FROM fb GROUP BY 1, 2),
-prel AS (
-  SELECT term, sum((ftf.tf / fdl.dl) * (fdl.score / total.total)) AS p_rel
-  FROM ftf JOIN fdl USING (doc_id) CROSS JOIN total GROUP BY term),
-qm AS (SELECT term, 1.0 / 5 AS p_q FROM qt),
-merged AS (
-  SELECT coalesce(prel.term, qm.term) AS term,
-         0.6 * coalesce(p_q, 0) + 0.4 * coalesce(p_rel, 0) AS w
-  FROM prel FULL OUTER JOIN qm ON prel.term = qm.term),
-ranked AS (SELECT term, round(w, 6) AS weight FROM merged)
-SELECT CAST(row_number() OVER (ORDER BY weight DESC, term) AS BIGINT) AS rank,
-       term, weight
-FROM ranked
-QUALIFY rank <= 15
-"""
 
 _ENRICH_ORACLE = """
 WITH l AS (
@@ -11089,18 +4259,6 @@ FROM l JOIN r ON l.user_id = r.user_id
 WHERE r_ts >= l_ts AND r_ts <= l_ts + INTERVAL 30 MINUTE
 """
 
-_LDIV_ORACLE = """
-WITH d AS (
-  SELECT doc_id, lang, source, n_chars // 200 AS len_bucket
-  FROM documents),
-g AS (
-  SELECT source, len_bucket, count(*) AS group_n,
-         count(DISTINCT lang) AS sensitive_n
-  FROM d GROUP BY 1, 2)
-SELECT doc_id, lang, d.source, d.len_bucket, group_n, sensitive_n,
-       sensitive_n < 2 AS is_suppressed
-FROM d JOIN g ON d.source = g.source AND d.len_bucket = g.len_bucket
-"""
 
 _HDR_GROUP_ORACLE = """
 WITH vals AS (
@@ -11420,261 +4578,6 @@ daily AS (
          CAST(count(*) AS BIGINT) AS x
   FROM events GROUP BY 1, 2)"""
 
-_QL_SEARCH_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, u.term
-  FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS u(term)),
-qt AS (SELECT * FROM (VALUES ('table'), ('scan'), ('merge'))
-       AS t(term)),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-cstat AS (SELECT count(*) AS clen FROM toks),
-ctf AS (SELECT term, count(*) AS ctf FROM toks JOIN qt USING (term)
-        GROUP BY term),
-tf AS (SELECT doc_id, term, count(*) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-cands AS (SELECT DISTINCT doc_id FROM tf),
-grid AS (SELECT c.doc_id, x.term, x.ctf FROM cands c, ctf x),
-scored AS (SELECT g.doc_id,
-                  round(sum(ln((coalesce(t.tf, 0)
-                                + 1000.0 * g.ctf / cs.clen)
-                               / (d.dl + 1000.0))), 6) AS score
-           FROM grid g
-           LEFT JOIN tf t ON t.doc_id = g.doc_id AND t.term = g.term
-           JOIN dl d ON d.doc_id = g.doc_id
-           CROSS JOIN cstat cs
-           GROUP BY g.doc_id),
-ranked AS (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id)
-               AS rank
-           FROM scored)
-SELECT CAST(rank AS BIGINT) AS rank, doc_id, score
-FROM ranked WHERE rank <= 20
-"""
-
-_SOURCE_JSD_ORACLE = """
-WITH toks AS (
-  SELECT source AS g, u.term
-  FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS u(term)),
-gt AS (SELECT g, term, count(*) AS c FROM toks GROUP BY g, term),
-gn AS (SELECT g, sum(c) AS gn FROM gt GROUP BY g),
-ct AS (SELECT term, count(*) AS cc FROM toks GROUP BY term),
-cn AS (SELECT count(*) AS cn FROM toks),
-j AS (SELECT gt.g, gt.c, gn.gn, ct.cc, cn.cn
-      FROM gt JOIN ct USING (term) JOIN gn USING (g) CROSS JOIN cn),
-per AS (SELECT g, CAST(count(*) AS BIGINT) AS n_terms,
-               sum((c / CAST(gn AS DOUBLE))
-                   * ln((c / CAST(gn AS DOUBLE))
-                        / ((c / CAST(gn AS DOUBLE)
-                            + cc / CAST(cn AS DOUBLE)) / 2))
-                   + (cc / CAST(cn AS DOUBLE))
-                   * ln((cc / CAST(cn AS DOUBLE))
-                        / ((c / CAST(gn AS DOUBLE)
-                            + cc / CAST(cn AS DOUBLE)) / 2)))
-                   AS core,
-               sum(cc / CAST(cn AS DOUBLE)) AS overlap_q
-        FROM j GROUP BY g)
-SELECT g AS source, n_terms, round(overlap_q, 6) AS overlap_q,
-       round(0.5 * core
-             + 0.5 * 0.6931471805599453 * (1.0 - overlap_q), 6) AS jsd
-FROM per
-"""
-
-_WATERFILL_ORACLE = """
-WITH caps AS (SELECT source AS host,
-                     CAST(sum(doc_id % 13 + 1) AS BIGINT) AS cap
-              FROM documents GROUP BY source),
-bb AS (SELECT 3 * count(*) AS b FROM documents),
-s AS (SELECT host, cap,
-             CAST(row_number() OVER (ORDER BY cap, host) AS BIGINT) AS r,
-             sum(cap) OVER (ORDER BY cap, host
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS pre,
-             count(*) OVER () AS n
-      FROM caps),
-kk AS (SELECT coalesce(max(CASE WHEN cap * (n - r + 1)
-                                     <= (SELECT b FROM bb)
-                                        - (pre - cap)
-                                THEN r END), 0) AS k,
-              coalesce(max(CASE WHEN cap * (n - r + 1)
-                                     <= (SELECT b FROM bb)
-                                        - (pre - cap)
-                                THEN pre END), 0) AS prek
-       FROM s)
-SELECT s.host, s.cap,
-       CAST(CASE WHEN s.r <= kk.k THEN s.cap
-            ELSE ((SELECT b FROM bb) - kk.prek) // (s.n - kk.k)
-                 + CASE WHEN s.r > s.n - (((SELECT b FROM bb) - kk.prek)
-                                          % (s.n - kk.k))
-                        THEN 1 ELSE 0 END
-            END AS BIGINT) AS quota
-FROM s, kk
-"""
-
-_BREAKPOINT_ORACLE = f"""
-WITH {_DAILY_CTE},
-st AS (SELECT key, o,
-              CAST(x + CASE WHEN o >= 19743 THEN 25 ELSE 0 END
-                   AS DOUBLE) AS y
-       FROM daily),
-pre AS (SELECT key, o, y,
-               count(y) OVER w AS nl, sum(y) OVER w AS sl,
-               sum(y * y) OVER w AS s2l,
-               count(y) OVER t AS n, sum(y) OVER t AS stt,
-               sum(y * y) OVER t AS s2t
-        FROM st
-        WINDOW w AS (PARTITION BY key ORDER BY o
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-               t AS (PARTITION BY key)),
-cand AS (SELECT key, o, n,
-                round(s2l - sl * sl / nl
-                      + (s2t - s2l) - (stt - sl) * (stt - sl) / (n - nl),
-                      6) AS cost,
-                round(sl / nl, 6) AS mean_left,
-                round((stt - sl) / (n - nl), 6) AS mean_right
-         FROM pre WHERE nl < n),
-ranked AS (SELECT *, row_number() OVER (PARTITION BY key
-               ORDER BY cost, o) AS r
-           FROM cand)
-SELECT key, CAST(n AS BIGINT) AS n, o AS break_after, cost,
-       mean_left, mean_right
-FROM ranked WHERE r = 1
-"""
-
-_THEIL_SEN_ORACLE = f"""
-WITH {_DAILY_CTE},
-pairs AS (SELECT a.key AS k,
-                 round((b.x - a.x) / CAST(b.o - a.o AS DOUBLE), 6)
-                     AS slope6
-          FROM daily a JOIN daily b
-          ON a.key = b.key AND a.o < b.o),
-vals AS (SELECT k, slope6, CAST(count(*) AS BIGINT) AS w
-         FROM pairs GROUP BY k, slope6),
-c AS (SELECT k, slope6, w,
-             sum(w) OVER (PARTITION BY k ORDER BY slope6
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS cum,
-             sum(w) OVER (PARTITION BY k) AS tot
-      FROM vals)
-SELECT k AS key, CAST(min(tot) AS BIGINT) AS n_pairs,
-       min(slope6) AS slope
-FROM c WHERE 2 * cum >= tot GROUP BY k
-"""
-
-_KENDALL_TAU_ORACLE = """
-WITH t AS (SELECT doc_id, doc_id % 16 AS grp, n_chars,
-                  CAST(len(list_distinct(list_filter(
-                      regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                      w -> w <> ''))) AS BIGINT) AS nt
-           FROM documents WHERE doc_id % 5 = 0),
-p AS (SELECT a.grp AS k,
-             sign(b.n_chars - a.n_chars) AS sx,
-             sign(b.nt - a.nt) AS sy
-      FROM t a JOIN t b
-      ON a.grp = b.grp AND a.doc_id < b.doc_id),
-agg AS (SELECT k, CAST(count(*) AS BIGINT) AS n0,
-               CAST(sum(CASE WHEN sx * sy > 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS concordant,
-               CAST(sum(CASE WHEN sx * sy < 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS discordant,
-               CAST(sum(CASE WHEN sx = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS ties_x,
-               CAST(sum(CASE WHEN sy = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS ties_y
-        FROM p GROUP BY k),
-counts AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
-           FROM t GROUP BY grp)
-SELECT c.grp, c.n,
-       coalesce(a.concordant, 0) AS concordant,
-       coalesce(a.discordant, 0) AS discordant,
-       coalesce(a.ties_x, 0) AS ties_x,
-       coalesce(a.ties_y, 0) AS ties_y,
-       CASE WHEN (a.n0 - a.ties_x) * (a.n0 - a.ties_y) > 0
-            THEN round((a.concordant - a.discordant)
-                 / sqrt(CAST((a.n0 - a.ties_x) * (a.n0 - a.ties_y)
-                             AS DOUBLE)), 6) END AS tau
-FROM counts c LEFT JOIN agg a ON a.k = c.grp
-"""
-
-_EXTRACTIVE_ORACLE = """
-WITH staged AS (SELECT doc_id,
-                       regexp_replace(text, ' row ', '. row ', 'g')
-                           AS text
-                FROM documents),
-dterms AS (SELECT DISTINCT doc_id, u.term
-           FROM staged, LATERAL unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-               x -> x <> '')) AS u(term)),
-dfc AS (SELECT term, count(*) AS df FROM dterms GROUP BY term),
-nn AS (SELECT count(*) AS n_docs FROM staged),
-idf AS (SELECT term, ln((1.0 + n_docs) / (1.0 + df)) AS idf
-        FROM dfc, nn),
-s0 AS (SELECT doc_id,
-              list_filter(list_transform(
-                  regexp_extract_all(text, '[^.!?]+[.!?]?'),
-                  x -> trim(x)), x -> x <> '') AS ss
-       FROM staged),
-sents AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS sent_idx,
-                 ss[CAST(i AS BIGINT)] AS sentence
-          FROM s0, LATERAL unnest(generate_series(1, len(ss))) r(i)),
-st AS (SELECT DISTINCT doc_id, sent_idx, u.term
-       FROM sents, LATERAL unnest(list_filter(
-           regexp_split_to_array(lower(sentence), '[^a-z0-9]+'),
-           x -> x <> '')) AS u(term)),
-scored AS (SELECT doc_id, sent_idx,
-                  round(sum(i.idf) / count(*), 6) AS score
-           FROM st JOIN idf i USING (term)
-           GROUP BY doc_id, sent_idx),
-ranked AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, sent_idx) AS rank
-           FROM scored)
-SELECT r.doc_id, r.sent_idx, CAST(r.rank AS BIGINT) AS rank, r.score,
-       s.sentence
-FROM ranked r JOIN sents s
-ON s.doc_id = r.doc_id AND s.sent_idx = r.sent_idx
-WHERE r.rank <= 2
-"""
-
-_FLESCH_ORACLE = """
-WITH staged AS (SELECT doc_id,
-                       regexp_replace(text, ' row ', '. row ', 'g')
-                           AS text
-                FROM documents),
-toks AS (SELECT doc_id, u.w
-         FROM staged, LATERAL unnest(list_filter(
-             regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-             x -> x <> '')) AS u(w)),
-per_w AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-                 CAST(sum(greatest(1,
-                     len(regexp_extract_all(w, '[aeiouy]+'))))
-                     AS BIGINT) AS n_syllables
-          FROM toks GROUP BY doc_id),
-s0 AS (SELECT doc_id,
-              list_filter(list_transform(
-                  regexp_extract_all(text, '[^.!?]+[.!?]?'),
-                  x -> trim(x)), x -> x <> '') AS ss
-       FROM staged),
-sents AS (SELECT doc_id, CAST(len(ss) AS BIGINT) AS n_sentences
-          FROM s0 WHERE len(ss) > 0),
-base AS (SELECT d.doc_id,
-                coalesce(w.n_words, 0) AS n_words,
-                coalesce(s.n_sentences, 0) AS n_sentences,
-                coalesce(w.n_syllables, 0) AS n_syllables
-         FROM documents d
-         LEFT JOIN per_w w ON w.doc_id = d.doc_id
-         LEFT JOIN sents s ON s.doc_id = d.doc_id)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       CASE WHEN n_sentences > 0 AND n_words > 0
-            THEN round(206.835
-                 - 1.015 * n_words / CAST(n_sentences AS DOUBLE)
-                 - 84.6 * n_syllables / CAST(n_words AS DOUBLE), 6)
-       END AS flesch
-FROM base
-"""
 
 _MANN_KENDALL_ORACLE = f"""
 WITH {_DAILY_CTE},
@@ -12193,235 +5096,6 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
 FROM starts GROUP BY doc_id
 """
 
-def _holt_oracle(alpha_ppm: int = 300_000,
-                 beta_ppm: int = 100_000) -> str:
-    """Recursive-CTE replay of holt_smooth: floor division emulated as
-    (a - ((a % m + m) % m)) // m (exact — the subtraction makes the
-    numerator divisible), because SQL's div/% truncate toward zero
-    while the operator's contract is floor."""
-    a, b, m = alpha_ppm, beta_ppm, 1_000_000
-
-    def fdiv(expr):
-        return (f"(({expr}) - ((({expr}) % {m} + {m}) % {m})) // {m}")
-
-    l2 = fdiv(f"{a} * nxt.x * {m} + {m - a} * (r.level_u + r.trend_u)")
-    t2 = fdiv(f"{b} * (({l2}) - r.level_u) + {m - b} * r.trend_u")
-    return f"""
-WITH RECURSIVE {_DAILY_CTE},
-ord AS (SELECT key, o, x,
-               row_number() OVER (PARTITION BY key ORDER BY o) AS rn
-        FROM daily),
-rec AS (
-  SELECT o1.key, o1.o, o1.x, o1.rn,
-         CAST(o1.x * {m} AS BIGINT) AS level_u,
-         CAST(coalesce((o2.x - o1.x) * {m}, 0) AS BIGINT) AS trend_u,
-         CAST(NULL AS BIGINT) AS forecast_u
-  FROM ord o1 LEFT JOIN ord o2 ON o2.key = o1.key AND o2.rn = 2
-  WHERE o1.rn = 1
-  UNION ALL
-  SELECT nxt.key, nxt.o, nxt.x, nxt.rn,
-         CAST({l2} AS BIGINT) AS level_u,
-         CAST({t2} AS BIGINT) AS trend_u,
-         CAST(r.level_u + r.trend_u AS BIGINT) AS forecast_u
-  FROM rec r JOIN ord nxt ON nxt.key = r.key AND nxt.rn = r.rn + 1)
-SELECT key, o, x, level_u, trend_u, forecast_u FROM rec
-"""
-
-
-_HOLT_ORACLE = _holt_oracle()
-
-def _hyperball_oracle(rounds: int = 3) -> str:
-    """Chained-CTE replay of _q_link_hyperball: same md5 register
-    construction (m = 16, width = 56), same per-round union + max."""
-    sql = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-sym AS MATERIALIZED (SELECT DISTINCT s, d FROM (
-  SELECT s, d FROM e0 UNION ALL SELECT d, s FROM e0) WHERE s <> d),
-hx AS (SELECT node,
-  CAST(('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 15))::UBIGINT
-       AS BIGINT) AS h
-  FROM (SELECT DISTINCT s AS node FROM sym)),
-r0 AS MATERIALIZED (SELECT node, h % 16 AS bucket,
-  CAST(CASE WHEN (h >> 4) = 0 THEN 57
-       ELSE 57 - length(bin(h >> 4)) END AS BIGINT) AS rho
-  FROM hx)"""
-    for k in range(1, rounds + 1):
-        sql += f""",
-r{k} AS MATERIALIZED (
-  SELECT node, bucket, CAST(max(rho) AS BIGINT) AS rho FROM (
-    SELECT node, bucket, rho FROM r{k - 1}
-    UNION ALL
-    SELECT sym.d AS node, p.bucket, p.rho
-    FROM sym JOIN r{k - 1} p ON p.node = sym.s)
-  GROUP BY 1, 2)"""
-    return sql + f""",
-ag AS (SELECT node, sum(power(2.0, -rho)) AS z, count(*) AS nonzero,
-              CAST(sum(rho) AS BIGINT) AS register_checksum
-       FROM r{rounds} GROUP BY 1)
-SELECT node,
-  round(CASE WHEN (0.673 * 256 / (z + (16 - nonzero))) <= 40.0
-                  AND (16 - nonzero) > 0
-        THEN 16 * ln(16.0 / (16 - nonzero))
-        ELSE 0.673 * 256 / (z + (16 - nonzero)) END, 4) AS est_ball,
-  register_checksum
-FROM ag
-"""
-
-
-_HYPERBALL_ORACLE = _hyperball_oracle()
-
-_ATTRIBUTION_ORACLE = """
-WITH convs AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-               FROM events WHERE event_type = 'purchase'),
-touches AS (SELECT user_id, ts, event_id AS touch_id,
-                   event_type AS touch_type
-            FROM events WHERE event_type IN ('view', 'click')),
-paired AS (SELECT c.conv_id, c.conv_ts, t.touch_id, t.touch_type,
-                  t.ts AS touch_ts
-           FROM convs c JOIN touches t ON t.user_id = c.user_id
-            AND t.ts >= c.conv_ts - INTERVAL 120 MINUTE
-            AND t.ts < c.conv_ts),
-ranked AS (SELECT *,
-                  row_number() OVER (PARTITION BY conv_id
-                    ORDER BY touch_ts, touch_id) AS rk,
-                  CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-                    AS n_touches
-           FROM paired)
-SELECT conv_id, conv_ts, touch_id, touch_type, touch_ts, n_touches,
-  CAST(CASE WHEN rk = 1 THEN 1000000 ELSE 0 END AS BIGINT) AS first_ppm,
-  CAST(CASE WHEN rk = n_touches THEN 1000000 ELSE 0 END AS BIGINT)
-    AS last_ppm,
-  CAST(1000000 // n_touches
-       + CASE WHEN rk = n_touches THEN 1000000 % n_touches ELSE 0 END
-       AS BIGINT) AS linear_ppm
-FROM ranked
-"""
-
-def _textrank_oracle(window: int = 2, n_iter: int = 5,
-                     d: float = 0.85) -> str:
-    """Unrolled TextRank iterations as chained CTEs over the identical
-    co-occurrence edge construction (the _pagerank_oracle pattern)."""
-    sql = f"""
-WITH words AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
-  FROM documents),
-idx AS MATERIALIZED (SELECT doc_id, ws[CAST(i AS BIGINT)] AS term,
-               CAST(i - 1 AS BIGINT) AS pos
-        FROM words, LATERAL unnest(generate_series(1, len(ws))) r(i)),
-raw AS (SELECT a.term AS u, b.term AS v
-        FROM idx a JOIN idx b ON a.doc_id = b.doc_id
-         AND b.pos - a.pos BETWEEN 1 AND {window}
-         AND a.term <> b.term),
-e AS MATERIALIZED (SELECT u, v, CAST(count(*) AS BIGINT) AS w FROM (
-  SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw) GROUP BY 1, 2),
-terms AS MATERIALIZED (SELECT DISTINCT term FROM idx),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS cnt FROM terms),
-strength AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS w_out
-                          FROM e GROUP BY 1),
-ce AS MATERIALIZED (SELECT e.u, e.v, w / CAST(w_out AS DOUBLE) AS share
-                    FROM e JOIN strength USING (u)),
-r0 AS (SELECT term AS v, 1.0 / cnt AS pr FROM terms CROSS JOIN nn)"""
-    for k in range(1, n_iter + 1):
-        sql += f""",
-r{k} AS MATERIALIZED (
-  SELECT t.term AS v,
-         (1.0 - {d}) / cnt + {d} * coalesce(infl.s, 0.0) AS pr
-  FROM terms t CROSS JOIN nn
-  LEFT JOIN (SELECT ce.v, sum(ce.share * p.pr) AS s
-             FROM ce JOIN r{k - 1} p ON p.v = ce.u
-             GROUP BY ce.v) infl ON infl.v = t.term)"""
-    return sql + f"""
-SELECT r.v AS term, CAST(coalesce(s.w_out, 0) AS BIGINT) AS w_out,
-       round(r.pr, 6) AS "rank"
-FROM r{n_iter} r LEFT JOIN strength s ON s.u = r.v
-"""
-
-
-_TEXTRANK_ORACLE = _textrank_oracle()
-
-_ZONE_MAP_ORACLE = """
-WITH staged AS (
-  SELECT 'seq' AS layout, doc_id // 64 AS file_id, n_chars AS v
-  FROM documents
-  UNION ALL
-  SELECT 'bylen', n_chars // 50, n_chars FROM documents),
-zones AS (SELECT layout, CAST(file_id AS BIGINT) AS file_id,
-                 CAST(count(*) AS BIGINT) AS n_rows,
-                 CAST(min(v) AS BIGINT) AS min_v,
-                 CAST(max(v) AS BIGINT) AS max_v
-          FROM staged GROUP BY 1, 2)
-SELECT layout, file_id, n_rows, min_v, max_v,
-       (min_v < 200 AND max_v >= 150) AS survives
-FROM zones
-"""
-
-def _als_oracle(n_iter: int = 3) -> str:
-    """Chained-CTE replay of als_rank1: u_k from v_{k-1}, v_k from
-    u_k, all integer-div updates; output joins u_n x v_n."""
-    sql = """
-WITH r AS (SELECT user_id AS u_id, event_type AS item,
-                  CAST(count(*) AS BIGINT) AS r
-           FROM events GROUP BY 1, 2),
-v0 AS (SELECT DISTINCT item, CAST(1000 AS BIGINT) AS v_q FROM r)"""
-    for k in range(1, n_iter + 1):
-        sql += f""",
-u{k} AS MATERIALIZED (
-  SELECT u_id, CAST((1000000 * sum(r * v_q)) // sum(v_q * v_q)
-               AS BIGINT) AS u_q
-  FROM r JOIN v{k - 1} USING (item) GROUP BY u_id),
-v{k} AS MATERIALIZED (
-  SELECT item, CAST((1000000 * sum(r * u_q)) // sum(u_q * u_q)
-               AS BIGINT) AS v_q
-  FROM r JOIN u{k} USING (u_id) GROUP BY item)"""
-    return sql + f"""
-SELECT u_id AS user_id, item AS event_type, r, u_q, v_q,
-       CAST((u_q * v_q) // 1000 AS BIGINT) AS pred_milli
-FROM r JOIN u{n_iter} USING (u_id) JOIN v{n_iter} USING (item)
-"""
-
-
-_ALS_ORACLE = _als_oracle()
-
-_URL_TEMPLATES_ORACLE = """
-WITH u AS (
-  SELECT 'https://site' || CAST(doc_id % 3 AS VARCHAR) || '.example.com'
-         || CASE WHEN doc_id % 3 = 0
-                 THEN '/product/' || CAST(doc_id AS VARCHAR) || '/view'
-                 WHEN doc_id % 3 = 1
-                 THEN '/session/' || md5(CAST(doc_id AS VARCHAR))
-                      || '/cart'
-                 ELSE '/about/team' END AS url
-  FROM documents),
-parts AS (
-  SELECT regexp_extract(url, '^[a-z]+://([^/?#]+)', 1) AS host,
-         list_filter(string_split(
-           regexp_extract(url, '^[a-z]+://[^/]+(/[^?#]*)?', 1), '/'),
-           s -> s <> '') AS segs
-  FROM u),
-staged AS (
-  SELECT host,
-         '/' || coalesce(array_to_string(list_transform(segs, s ->
-           CASE WHEN regexp_matches(s, '^[0-9]+$') THEN '{n}'
-                WHEN length(s) >= 16 AND regexp_matches(s, '^[0-9a-f]+$')
-                THEN '{h}'
-                ELSE s END), '/'), '') AS template,
-         coalesce(array_to_string(list_filter(segs, s ->
-           regexp_matches(s, '^[0-9]+$')
-           OR (length(s) >= 16 AND regexp_matches(s, '^[0-9a-f]+$'))),
-           chr(1)), '') AS tail
-  FROM parts)
-SELECT host, template, CAST(count(*) AS BIGINT) AS n_urls,
-       CAST(count(DISTINCT tail) AS BIGINT) AS n_distinct_tails
-FROM staged GROUP BY 1, 2 HAVING count(*) >= 2
-"""
 
 _KAPPA_ORACLE = """
 WITH lab AS (
@@ -12526,117 +5200,6 @@ SELECT src, dst, n,
 FROM c
 """
 
-_SPOOF_ORACLE = """
-WITH u AS (
-  SELECT doc_id,
-         CASE (doc_id % 5)
-           WHEN 0 THEN 'news.example.com'
-           WHEN 1 THEN 'blog.example.org'
-           WHEN 2 THEN 'www.sample.net'
-           WHEN 3 THEN 'docs.mirror.example.com'
-           ELSE 'shop.example.co' END AS host
-  FROM documents),
-staged AS (
-  SELECT CASE WHEN doc_id % 7 = 0
-              THEN translate(host, 'eo', chr(1077) || chr(1086))
-              ELSE host END AS host
-  FROM u),
-hosts AS (SELECT DISTINCT host FROM staged),
-sk AS (
-  SELECT host,
-         translate(lower(host), chr(48) || chr(49) || chr(1072) || chr(1077) || chr(1086) || chr(1088) || chr(1089) || chr(1109) || chr(1110) || chr(1112) || chr(1091) || chr(1093) || chr(959) || chr(945) || chr(949) || chr(953) || chr(957), 'olaeopcsijyxoaein')
-           AS skeleton
-  FROM hosts),
-g AS (SELECT skeleton, count(DISTINCT host) AS n_variants
-      FROM sk GROUP BY 1)
-SELECT host, sk.skeleton, n_variants, n_variants > 1 AS is_spoof_cluster
-FROM sk JOIN g USING (skeleton)
-"""
-
-_WINSORIZE_ORACLE = """
-WITH vals AS (
-  SELECT n_chars AS v FROM documents WHERE n_chars >= 1),
-b AS (
-  SELECT
-    CASE WHEN length(CAST(v AS VARCHAR)) <= 2 THEN v
-         ELSE CAST(substr(CAST(v AS VARCHAR), 1, 2) AS BIGINT)
-              * CAST('1' || repeat('0', length(CAST(v AS VARCHAR)) - 2)
-                     AS BIGINT) END AS bucket_lo,
-    CASE WHEN length(CAST(v AS VARCHAR)) <= 2 THEN v
-         ELSE CAST(substr(CAST(v AS VARCHAR), 1, 2) AS BIGINT)
-              * CAST('1' || repeat('0', length(CAST(v AS VARCHAR)) - 2)
-                     AS BIGINT)
-              + CAST('1' || repeat('0', length(CAST(v AS VARCHAR)) - 2)
-                     AS BIGINT) - 1 END AS bucket_hi
-  FROM vals),
-sk AS (
-  SELECT bucket_lo, bucket_hi, count(*) AS cnt FROM b GROUP BY 1, 2),
-cum AS (
-  SELECT bucket_lo, bucket_hi,
-         sum(cnt) OVER (ORDER BY bucket_lo) AS cum,
-         sum(cnt) OVER () AS n_total
-  FROM sk),
-spec(q_label, num, den) AS (VALUES ('1/100', 1, 100), ('99/100', 99, 100)),
-hits AS (
-  SELECT q_label, bucket_lo, bucket_hi,
-         row_number() OVER (PARTITION BY q_label ORDER BY bucket_lo) AS rn
-  FROM cum, spec
-  WHERE cum >= (num * n_total + den - 1) // den),
-thr AS (
-  SELECT min(CASE WHEN q_label = '1/100'
-                  THEN (bucket_lo + bucket_hi) // 2 END) AS lo_est,
-         min(CASE WHEN q_label <> '1/100'
-                  THEN (bucket_lo + bucket_hi) // 2 END) AS hi_est
-  FROM hits WHERE rn = 1)
-SELECT doc_id AS id, n_chars AS value,
-       least(greatest(n_chars, lo_est), hi_est) AS clipped,
-       n_chars <> least(greatest(n_chars, lo_est), hi_est) AS was_clipped
-FROM documents, thr
-"""
-
-_SCD2_ORACLE = """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      AS prev
-  FROM events),
-chg AS (
-  SELECT user_id, event_type AS attr_value,
-         epoch_us(ts) AS valid_from_us, event_id
-  FROM ordered WHERE prev IS NULL OR event_type <> prev)
-SELECT user_id, attr_value, valid_from_us,
-  lead(valid_from_us) OVER w AS valid_to_us,
-  row_number() OVER w AS version,
-  (lead(valid_from_us) OVER w IS NULL) AS is_current
-FROM chg
-WINDOW w AS (PARTITION BY user_id ORDER BY valid_from_us, event_id)
-"""
-
-_ALLEN_ORACLE = """
-WITH iv AS (
-  SELECT user_id, event_type,
-         min(epoch_us(ts)) AS s, max(epoch_us(ts)) AS e
-  FROM events GROUP BY 1, 2)
-SELECT a.user_id, a.event_type AS id_a, b.event_type AS id_b,
-  CASE WHEN a.s = b.s AND a.e = b.e THEN 'equals'
-       WHEN a.s = b.s AND a.e < b.e THEN 'starts'
-       WHEN a.s = b.s AND a.e > b.e THEN 'started_by'
-       WHEN a.e = b.e AND a.s > b.s THEN 'finishes'
-       WHEN a.e = b.e AND a.s < b.s THEN 'finished_by'
-       WHEN a.e = b.s THEN 'meets'
-       WHEN a.s = b.e THEN 'met_by'
-       WHEN a.e < b.s THEN 'before'
-       WHEN a.s > b.e THEN 'after'
-       WHEN a.s < b.s AND a.e > b.s AND a.e < b.e THEN 'overlaps'
-       WHEN b.s < a.s AND b.e > a.s AND b.e < a.e THEN 'overlapped_by'
-       WHEN a.s > b.s AND a.e < b.e THEN 'during'
-       ELSE 'contains' END AS relation
-FROM iv a JOIN iv b
-  ON a.user_id = b.user_id AND a.event_type < b.event_type
-"""
-
-
-# ------------------------------------------------------- session-5 oracles
 
 # dHash replayed from the closed-form pixel pattern of _media_pngs:
 # pixel[y,x,c] = (x*3 + y*7 + c*11 + d) % 256, h = 8+(d%5)*4,
@@ -12815,58 +5378,6 @@ SELECT c.node, c.ring_id, CAST(s.ring_size AS BIGINT) AS ring_size
 FROM canon c JOIN sizes s USING (ring_id) WHERE s.ring_size > 1
 """
 
-_KANON_GENERALIZE_ORACLE = """
-WITH base AS (SELECT 10000 + (doc_id * 37) % 900 AS zipc
-              FROM documents),
-per AS (
-  SELECT CAST(zipc AS VARCHAR) AS qi, count(*) AS n, 0 AS level
-  FROM base GROUP BY 1
-  UNION ALL
-  SELECT CAST(zipc // 10 AS VARCHAR), count(*), 1 FROM base GROUP BY 1
-  UNION ALL
-  SELECT CAST(zipc // 100 AS VARCHAR), count(*), 2 FROM base GROUP BY 1
-  UNION ALL
-  SELECT CAST(0 AS VARCHAR), count(*), 3 FROM base),
-mins AS (SELECT level, min(n) AS mn FROM per GROUP BY level),
-chosen AS (SELECT coalesce(min(level) FILTER (WHERE mn >= 5), 3)
-               AS level FROM mins)
-SELECT p.qi, CAST(p.n AS BIGINT) AS n, CAST(p.level AS BIGINT) AS level
-FROM per p JOIN chosen c ON c.level = p.level
-"""
-
-def _kcenter_oracle(k: int = 6) -> str:
-    """Chained-CTE replay of kcenter_select's greedy trace (the kmeans
-    oracle pattern): s1 = min id, then per round the argmax of the
-    6dp-rounded running min-distance, accumulated in full precision."""
-    ctes = ["""e AS (SELECT vec_id AS id,
-      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings)""",
-            "s1 AS (SELECT id, v FROM e ORDER BY id LIMIT 1)",
-            "d1 AS (SELECT e.id, e.v, pow(list_distance(e.v, s1.v), 2)"
-            " AS dm FROM e, s1)"]
-    sel = ["SELECT 1 AS rank, id AS vec_id, 0.0 AS dist6 FROM s1"]
-    excl = "SELECT id FROM s1"
-    for r in range(2, k + 1):
-        prev = f"d{r - 1}"
-        ctes.append(
-            f"p{r} AS (SELECT id, v, round(dm, 6) AS d6 FROM {prev} "
-            f"WHERE id NOT IN ({excl}) "
-            f"ORDER BY round(dm, 6) DESC, id LIMIT 1)")
-        if r < k:
-            ctes.append(
-                f"d{r} AS (SELECT d.id, d.v, least(d.dm, "
-                f"pow(list_distance(d.v, p{r}.v), 2)) AS dm "
-                f"FROM {prev} d, p{r})")
-        sel.append(f"SELECT {r} AS rank, id AS vec_id, d6 AS dist6"
-                   f" FROM p{r}")
-        excl += f" UNION SELECT id FROM p{r}"
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(sel)
-
-
-_MEDIA_PHASH_ORACLE = f"""
-WITH {_PHASH_CTE}
-SELECT media_id, b0, b1, b2, b3 FROM ph
-"""
 
 _MEDIA_PHASH_PAIRS_ORACLE = f"""
 WITH {_PHASH_CTE},
@@ -12889,225 +5400,6 @@ ham AS (SELECT c.a, c.b,
         FROM cand c JOIN ph pa ON pa.media_id = c.a
                     JOIN ph pb ON pb.media_id = c.b)
 SELECT a, b, hamming FROM ham WHERE hamming <= 3
-"""
-
-
-_FREQ_TRIPLES_ORACLE = """
-WITH b AS (
-  SELECT DISTINCT
-         CAST(user_id AS VARCHAR) || '|' ||
-           CAST(CAST(ts AS DATE) AS VARCHAR) AS basket,
-         event_type AS item
-  FROM events WHERE event_type IS NOT NULL),
-nb AS (SELECT CAST(count(DISTINCT basket) AS BIGINT) AS n_baskets FROM b),
-t AS (SELECT x.item AS item_a, y.item AS item_b, z.item AS item_c,
-             CAST(count(*) AS BIGINT) AS n_abc
-      FROM b x JOIN b y ON x.basket = y.basket AND x.item < y.item
-               JOIN b z ON y.basket = z.basket AND y.item < z.item
-      GROUP BY 1, 2, 3 HAVING count(*) >= 2)
-SELECT item_a, item_b, item_c, n_abc,
-       CAST((1000000 * n_abc) // n_baskets AS BIGINT) AS support_ppm
-FROM t CROSS JOIN nb
-"""
-
-_DP_NOISY_ORACLE = """
-WITH g AS (SELECT source AS "group", CAST(count(*) AS BIGINT) AS n
-           FROM documents GROUP BY 1),
-x AS (SELECT "group", n,
-             greatest(CAST(('0x' || substr(md5('dp' || "group"), 1, 13))
-                           ::UBIGINT AS DOUBLE) / 4503599627370496.0,
-                      5e-16) AS v
-      FROM g)
-SELECT "group", n,
-       round(n + (-2.0) * sign(v - 0.5) * ln(1 - 2 * abs(v - 0.5)), 6)
-           AS noisy_n
-FROM x
-"""
-
-_CONSTRAINT_AUDIT_ORACLE = """
-WITH li AS (SELECT CAST(count(*) AS BIGINT) AS checked,
-  CAST(sum(CASE WHEN NOT (l_quantity >= 1 AND l_quantity <= 50)
-                     OR l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      AS v_qty,
-  CAST(sum(CASE WHEN NOT (l_discount >= 0 AND l_discount <= 0.25)
-                     OR l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      AS v_disc,
-  CAST(sum(CASE WHEN NOT (l_extendedprice > 0)
-                     OR l_extendedprice IS NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS v_price,
-  CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      AS v_ship,
-  CAST(sum(CASE WHEN l_returnflag NOT IN ('A', 'N', 'R')
-                     OR l_returnflag IS NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS v_flag
-  FROM lineitem),
-suite AS (
-  SELECT 'li_quantity_range' AS check_name, checked, v_qty AS violations
-  FROM li
-  UNION ALL SELECT 'li_discount_range', checked, v_disc FROM li
-  UNION ALL SELECT 'li_price_positive', checked, v_price FROM li
-  UNION ALL SELECT 'li_shipdate_not_null', checked, v_ship FROM li
-  UNION ALL SELECT 'li_returnflag_domain', checked, v_flag FROM li),
-fk1 AS (SELECT 'li_order_fk' AS check_name,
-               (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS checked,
-               CAST(count(*) AS BIGINT) AS violations
-        FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        WHERE o.o_orderkey IS NULL),
-fk2 AS (SELECT 'ord_cust_fk' AS check_name,
-               (SELECT CAST(count(*) AS BIGINT) FROM orders) AS checked,
-               CAST(count(*) AS BIGINT) AS violations
-        FROM orders d LEFT JOIN customer c ON d.o_custkey = c.c_custkey
-        WHERE c.c_custkey IS NULL),
-uniq AS (SELECT 'ord_key_unique' AS check_name,
-                CAST(count(*) AS BIGINT) AS checked,
-                CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT)
-                    AS violations
-         FROM orders),
-allc AS (SELECT * FROM suite UNION ALL SELECT * FROM fk1
-         UNION ALL SELECT * FROM fk2 UNION ALL SELECT * FROM uniq)
-SELECT check_name, checked, violations,
-       CAST((1000000 * violations) // checked AS BIGINT) AS violation_ppm
-FROM allc
-"""
-
-_STOPWORD_ORACLE = """
-WITH toks AS (
-  SELECT DISTINCT doc_id, source, t.term
-  FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS t(term)),
-nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-       FROM documents),
-ps AS (SELECT term, source, CAST(count(*) AS BIGINT) AS ns
-       FROM toks GROUP BY 1, 2),
-st AS (SELECT term, CAST(sum(ns) AS BIGINT) AS df,
-              sum(ns * ln(ns)) AS snln
-       FROM ps GROUP BY 1),
-top AS (SELECT * FROM st ORDER BY df DESC, term LIMIT 40)
-SELECT CAST(row_number() OVER (ORDER BY df DESC, term) AS BIGINT) AS rank,
-       term, df,
-       CAST((1000000 * df) // n_docs AS BIGINT) AS df_ppm,
-       round(ln(df) - snln / df, 6) AS source_entropy,
-       ((1000000 * df) // n_docs) >= 500000 AS is_stopword
-FROM top CROSS JOIN nd
-"""
-
-_BM25F_ORACLE = """
-WITH d AS (SELECT doc_id, text AS body,
-  'topic' || CAST(doc_id % 7 AS VARCHAR) || ' page'
-          || CAST(doc_id AS VARCHAR) || ' '
-          || (['click', 'read', 'link'])[CAST(doc_id % 3 AS INTEGER) + 1]
-      AS anchor
-  FROM documents),
-qt AS (SELECT * FROM (VALUES ('merge'), ('topic3'), ('click')) q(term)),
-tt AS (
-  SELECT doc_id, 'text' AS field, t.term FROM d,
-    LATERAL unnest(list_filter(regexp_split_to_array(lower(body),
-                                                     '[^a-z0-9]+'),
-                               w -> w <> '')) AS t(term)
-  UNION ALL
-  SELECT doc_id, 'anchor', t.term FROM d,
-    LATERAL unnest(list_filter(regexp_split_to_array(lower(anchor),
-                                                     '[^a-z0-9]+'),
-                               w -> w <> '')) AS t(term)),
-dl AS (
-  SELECT doc_id, 'text' AS field,
-         CAST(len(list_filter(regexp_split_to_array(lower(body),
-                                                    '[^a-z0-9]+'),
-                              w -> w <> '')) AS BIGINT) AS dl
-  FROM d
-  UNION ALL
-  SELECT doc_id, 'anchor',
-         CAST(len(list_filter(regexp_split_to_array(lower(anchor),
-                                                    '[^a-z0-9]+'),
-                              w -> w <> '')) AS BIGINT)
-  FROM d),
-nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM d),
-avgf AS (SELECT field, avg(dl) AS avgdl FROM dl GROUP BY 1),
-tf AS (SELECT doc_id, field, term, CAST(count(*) AS BIGINT) AS tf
-       FROM tt JOIN qt USING (term) GROUP BY 1, 2, 3),
-norm AS (
-  SELECT tf.doc_id, tf.term,
-         sum((CASE WHEN tf.field = 'text' THEN 1.0 ELSE 2.5 END) * tf.tf
-             / (1.0 - (CASE WHEN tf.field = 'text' THEN 0.75
-                            ELSE 0.5 END)
-                + (CASE WHEN tf.field = 'text' THEN 0.75 ELSE 0.5 END)
-                  * dl.dl / avgf.avgdl)) AS tfn
-  FROM tf JOIN dl ON tf.doc_id = dl.doc_id AND tf.field = dl.field
-          JOIN avgf ON avgf.field = tf.field
-  GROUP BY 1, 2),
-dfp AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM norm GROUP BY 1),
-scored AS (
-  SELECT doc_id,
-         round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * tfn / (1.2 + tfn)), 6) AS score
-  FROM norm JOIN dfp USING (term) CROSS JOIN nd
-  GROUP BY doc_id),
-rk AS (SELECT doc_id, score,
-              row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-       FROM scored)
-SELECT CAST(rank AS BIGINT) AS rank, doc_id, score
-FROM rk WHERE rank <= 15
-"""
-
-_MUTUAL_NN_ORACLE = """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-planes AS (SELECT unnest(range(0, 8)) AS p),
-dots AS (
-  SELECT e.vec_id, pl.p,
-    list_sum(list_transform(range(1, 65),
-      i -> e.v[i] * (CASE WHEN strpos('02468ace',
-                          substr(md5(pl.p || ':' || (i-1)), 1, 1)) > 0
-                     THEN 1.0 ELSE -1.0 END))) AS dot
-  FROM e, planes pl),
-sig AS (SELECT vec_id,
-        CAST(sum(CASE WHEN dot > 0 THEN (1 << p) ELSE 0 END) AS BIGINT)
-        AS signature FROM dots GROUP BY vec_id),
-es0 AS (SELECT e.vec_id, e.v, s.signature
-        FROM e JOIN sig s USING (vec_id)),
-keep AS (SELECT signature FROM es0 GROUP BY 1
-         HAVING count(*) <= 1000),
-es AS (SELECT es0.* FROM es0 JOIN keep USING (signature)),
-pairs AS (SELECT a.vec_id AS aid, b.vec_id AS bid,
-  round(CASE WHEN sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b.v, b.v)) > 0
-             THEN list_dot_product(a.v, b.v)
-                  / (sqrt(list_dot_product(a.v, a.v))
-                     * sqrt(list_dot_product(b.v, b.v)))
-             ELSE -1.0 END, 6) AS cos6
-  FROM es a JOIN es b
-  ON a.signature = b.signature AND a.vec_id <> b.vec_id),
-best AS (SELECT aid, bid AS best_id, cos6,
-                row_number() OVER (PARTITION BY aid
-                                   ORDER BY cos6 DESC, bid) AS rn
-         FROM pairs),
-b1 AS (SELECT aid, best_id, cos6 FROM best WHERE rn = 1)
-SELECT x.aid AS id_a, x.best_id AS id_b, x.cos6 AS cosine
-FROM b1 x JOIN b1 y ON y.aid = x.best_id AND y.best_id = x.aid
-WHERE x.aid < x.best_id
-"""
-
-_JOIN_SIZE_EST_ORACLE = """
-WITH lk AS (SELECT o_orderkey AS k FROM orders),
-rk AS (SELECT l_orderkey AS k FROM lineitem),
-ls AS (SELECT k FROM lk
-       WHERE ('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 13))::UBIGINT
-             % 8 = 0),
-rs AS (SELECT k FROM rk
-       WHERE ('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 13))::UBIGINT
-             % 8 = 0),
-s AS (SELECT CAST(count(*) AS BIGINT) AS sampled_pairs
-      FROM ls JOIN rs USING (k)),
-t AS (SELECT CAST(count(*) AS BIGINT) AS true_pairs
-      FROM lk JOIN rk USING (k))
-SELECT sampled_pairs,
-       CAST(sampled_pairs * 8 AS BIGINT) AS est_pairs,
-       true_pairs,
-       CAST((1000000 * abs(sampled_pairs * 8 - true_pairs)) // true_pairs
-            AS BIGINT) AS err_ppm
-FROM s CROSS JOIN t
 """
 
 
@@ -13464,187 +5756,6 @@ FROM rec WHERE kept
 """
 
 
-_SPLIT_LEAK_ORACLE = f"""
-WITH {_AUG},
-keyed AS (SELECT doc_id, md5({_NORM}) AS fingerprint FROM aug),
-fate AS (SELECT fingerprint,
-  CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-       ::UBIGINT % 10000 AS BIGINT) AS h
-  FROM keyed),
-sp AS (SELECT fingerprint,
-         CASE WHEN h < 1000 THEN 'test'
-              WHEN h < 9000 THEN 'train'
-              ELSE 'val' END AS split
-       FROM fate),
-per AS (SELECT fingerprint,
-          CAST(sum((split = 'test')::INT) AS BIGINT) AS n0,
-          CAST(sum((split = 'train')::INT) AS BIGINT) AS n1,
-          CAST(sum((split = 'val')::INT) AS BIGINT) AS n2
-        FROM sp GROUP BY fingerprint)
-SELECT 'test' AS split_a, 'test' AS split_b,
-       CAST(sum((n0 * (n0 - 1)) // 2) AS BIGINT) AS n_pairs,
-       false AS is_leak FROM per
-UNION ALL SELECT 'test', 'train', CAST(sum(n0 * n1) AS BIGINT), true
-FROM per
-UNION ALL SELECT 'test', 'val', CAST(sum(n0 * n2) AS BIGINT), true
-FROM per
-UNION ALL SELECT 'train', 'train',
-       CAST(sum((n1 * (n1 - 1)) // 2) AS BIGINT), false FROM per
-UNION ALL SELECT 'train', 'val', CAST(sum(n1 * n2) AS BIGINT), true
-FROM per
-UNION ALL SELECT 'val', 'val',
-       CAST(sum((n2 * (n2 - 1)) // 2) AS BIGINT), false FROM per
-"""
-
-
-def _katz_oracle(n_iter: int = 3, atten_den: int = 8) -> str:
-    """Unrolled Katz ppm iterations, multiplicity kept (UNION ALL
-    edges), mirroring ops/graph.py::katz_centrality."""
-    parts = ["""WITH nodes AS (SELECT doc_id AS node FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id*7+1) % (SELECT count(*) FROM documents)
-    AS dst FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-k0 AS (SELECT node, CAST(1000000 AS BIGINT) AS katz FROM nodes)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-c{i} AS (SELECT e.dst AS node, CAST(sum(k.katz) AS BIGINT) AS m
-  FROM k{i-1} k JOIN e ON e.src = k.node GROUP BY e.dst),
-k{i} AS (SELECT nodes.node,
-  CAST(1000000 + coalesce(c.m, 0) // {int(atten_den)} AS BIGINT) AS katz
-  FROM nodes LEFT JOIN c{i} c ON nodes.node = c.node)""")
-    parts.append(f"\nSELECT node, katz AS katz_ppm FROM k{n_iter}")
-    return "".join(parts)
-
-
-def _prune_ab_oracle(workload, n_files: int = 8, bits: int = 6) -> str:
-    """Replays layout_prune_ab: both envelope builds (natural =
-    quantile ranges on doc_id, zorder = the shared morton expression),
-    then the rectangle-intersection scan test per workload row."""
-    morton = " + ".join(
-        f"(((x >> {i}) & 1) << {2 * i}) + (((y >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits))
-    qs = ", ".join(repr(i / n_files) for i in range(1, n_files))
-    wl = ", ".join(f"({q}, {a}, {b}, {c}, {d})"
-                   for q, a, b, c, d in workload)
-    return f"""
-WITH pts AS (SELECT doc_id % 64 AS x, (doc_id * 7 + 3) % 64 AS y,
-                    doc_id AS ord FROM documents),
-zk AS (SELECT x, y, {morton} AS zkey FROM pts),
-zb AS (SELECT quantile_cont(zkey, [{qs}]) AS bs FROM zk),
-zf AS (SELECT x, y, 1 + len(list_filter(bs, b -> b < zkey)) AS file
-       FROM zk CROSS JOIN zb),
-ze AS (SELECT 'zorder' AS layout, file,
-         min(x) AS min_x, max(x) AS max_x,
-         min(y) AS min_y, max(y) AS max_y FROM zf GROUP BY file),
-nb AS (SELECT quantile_cont(ord, [{qs}]) AS bs FROM pts),
-nf AS (SELECT x, y, 1 + len(list_filter(bs, b -> b < ord)) AS file
-       FROM pts CROSS JOIN nb),
-ne AS (SELECT 'natural' AS layout, file,
-         min(x) AS min_x, max(x) AS max_x,
-         min(y) AS min_y, max(y) AS max_y FROM nf GROUP BY file),
-env AS (SELECT * FROM ze UNION ALL SELECT * FROM ne),
-wl(qid, x_lo, x_hi, y_lo, y_hi) AS (SELECT * FROM (VALUES {wl}))
-SELECT layout, CAST(qid AS BIGINT) AS qid,
-  CAST(count(*) AS BIGINT) AS files_total,
-  CAST(sum((NOT (max_x < x_lo OR min_x > x_hi OR max_y < y_lo
-                 OR min_y > y_hi))::INT) AS BIGINT) AS files_scanned,
-  CAST((1000000 * (count(*) - sum((NOT (max_x < x_lo OR min_x > x_hi
-        OR max_y < y_lo OR min_y > y_hi))::INT))) // count(*) AS BIGINT)
-    AS prune_ppm
-FROM env CROSS JOIN wl
-GROUP BY layout, qid
-"""
-
-
-_CLUSTER_LABELS_ORACLE = """
-WITH toks AS (SELECT lang AS class, t.term FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS t(term)),
-ct AS (SELECT class, term, CAST(count(*) AS BIGINT) AS tf
-       FROM toks GROUP BY 1, 2),
-dfc AS (SELECT term, CAST(count(*) AS BIGINT) AS df_classes
-        FROM ct GROUP BY 1),
-nc AS (SELECT CAST(count(DISTINCT class) AS DOUBLE) AS n_classes FROM ct),
-sc AS (SELECT class, term, tf, df_classes,
-         round(tf * ln(n_classes / df_classes), 6) AS score
-       FROM ct JOIN dfc USING (term) CROSS JOIN nc),
-rk AS (SELECT class, term, tf, df_classes, score,
-         CAST(row_number() OVER (PARTITION BY class
-                ORDER BY score DESC, term) AS BIGINT) AS rank
-       FROM sc)
-SELECT class, rank, term, tf, df_classes, score FROM rk WHERE rank <= 5
-"""
-
-_LANDMARK_ORACLE = """
-WITH RECURSIVE
-nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS src, (doc_id*7+1) % n AS dst FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-und AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-seeds AS (SELECT doc_id AS node FROM documents WHERE doc_id % 50 = 0),
-r(seed, node, d) AS (
-  SELECT node, node, 0 FROM seeds
-  UNION ALL
-  SELECT r.seed, und.dst, r.d + 1 FROM r JOIN und ON und.src = r.node
-  WHERE r.d < 4),
-md AS (SELECT seed, node, CAST(min(d) AS BIGINT) AS dist
-       FROM r GROUP BY seed, node),
-pairs AS (SELECT doc_id AS u, (doc_id*31+7) % n AS v
-          FROM documents, nn WHERE doc_id % 13 = 0)
-SELECT p.u, p.v, CAST(count(*) AS BIGINT) AS n_landmarks,
-       CAST(max(abs(du.dist - dv.dist)) AS BIGINT) AS lower,
-       CAST(min(du.dist + dv.dist) AS BIGINT) AS upper
-FROM pairs p
-JOIN md du ON du.node = p.u
-JOIN md dv ON dv.node = p.v AND dv.seed = du.seed
-GROUP BY p.u, p.v
-"""
-
-
-_BURROWS_ORACLE = """
-WITH toks AS (SELECT 's' || CAST(doc_id % 20 AS VARCHAR) AS src, t.term
-  FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS t(term)),
-ct AS (SELECT src, term, CAST(count(*) AS BIGINT) AS cnt
-       FROM toks GROUP BY 1, 2),
-totals AS (SELECT src, CAST(sum(cnt) AS BIGINT) AS total
-           FROM ct GROUP BY 1),
-top AS (SELECT term FROM
-        (SELECT term, CAST(sum(cnt) AS BIGINT) AS n FROM ct GROUP BY 1)
-        ORDER BY n DESC, term LIMIT 30),
-grid AS (SELECT totals.src, top.term,
-           CAST((1000000 * coalesce(ct.cnt, 0)) // totals.total
-                AS BIGINT) AS f_ppm
-         FROM totals CROSS JOIN top
-         LEFT JOIN ct ON ct.src = totals.src AND ct.term = top.term),
-stats AS (SELECT term, CAST(count(*) AS BIGINT) AS ns,
-            CAST(sum(f_ppm) AS BIGINT) AS s1,
-            CAST(sum(f_ppm * f_ppm) AS BIGINT) AS s2
-          FROM grid GROUP BY 1),
-z AS (SELECT src, grid.term,
-        CASE WHEN ns * s2 - s1 * s1 = 0 THEN CAST(0 AS BIGINT)
-             ELSE CAST(floor((ns * f_ppm - s1) * 1000000.0
-                    / sqrt(CAST(ns * s2 - s1 * s1 AS DOUBLE)) + 0.5)
-                  AS BIGINT)
-        END AS z_u
-      FROM grid JOIN stats ON grid.term = stats.term)
-SELECT a.src AS src_a, b.src AS src_b,
-       CAST(sum(abs(a.z_u - b.z_u)) // count(*) AS BIGINT) AS delta_uppm
-FROM z a JOIN z b ON a.term = b.term AND a.src < b.src
-GROUP BY 1, 2
-"""
-
-
 _LLR_TERM = ("CASE WHEN {k} > 0 THEN {k} * ln(CAST({k} AS DOUBLE) * b_total"
              " / (CAST({r} AS DOUBLE) * {c})) ELSE 0.0 END")
 
@@ -13697,36 +5808,6 @@ SELECT doc_id, n_tokens, CAST(n_tokens - 19 AS BIGINT) AS n_windows,
 FROM contrib GROUP BY doc_id, n_tokens
 """
 
-
-_CAT_COLS_ORACLE = """
-WITH d AS (SELECT doc_id, 5 + doc_id % 2 AS n FROM documents),
-t AS (SELECT doc_id, u.i
-      FROM d, LATERAL unnest(generate_series(1, d.n)) AS u(i))
-SELECT doc_id, CAST(i AS BIGINT) AS t_id,
-  CAST(CASE WHEN i <= 3 THEN 1 ELSE 2 END AS BIGINT) AS sent_id,
-  CAST(CASE WHEN i <= 3 THEN i ELSE i - 3 END AS BIGINT) AS number,
-  'tok' || CAST(doc_id AS VARCHAR) || 'x' || CAST(i AS VARCHAR) AS token,
-  CASE WHEN i = 2 THEN 'e1' ELSE 'O' END AS ev,
-  CASE WHEN i = 3 OR (i = 4 AND doc_id % 2 = 0) THEN 't2' ELSE 'O' END
-    AS tmx,
-  CASE WHEN i = 1 AND doc_id % 5 = 0 THEN 's3' ELSE 'O' END AS sig
-FROM t
-"""
-
-_CAT_RT_ORACLE = """
-WITH d AS (SELECT doc_id, 5 + doc_id % 2 AS n FROM documents),
-t AS (SELECT doc_id, u.i
-      FROM d, LATERAL unnest(generate_series(1, d.n)) AS u(i))
-SELECT doc_id, CAST(i AS BIGINT) AS t_id,
-  CAST(1 AS BIGINT) AS sent_id,
-  CAST(i AS BIGINT) AS number,
-  'tok' || CAST(doc_id AS VARCHAR) || 'x' || CAST(i AS VARCHAR) AS token,
-  CASE WHEN i = 2 THEN 'e1' ELSE 'O' END AS ev,
-  CASE WHEN i = 3 OR (i = 4 AND doc_id % 2 = 0) THEN 't2' ELSE 'O' END
-    AS tmx,
-  'O' AS sig
-FROM t
-"""
 
 _SPEARMAN_ORACLE = """
 WITH t AS (SELECT doc_id, doc_id % 16 AS grp, n_chars,
@@ -14047,37 +6128,6 @@ ORDER BY ppmi DESC, w_center, w_context LIMIT 50
 """
 
 
-_COLORING_ORACLE = """
-WITH RECURSIVE
-nodes AS (SELECT doc_id AS node FROM documents),
-e0 AS (
-  SELECT doc_id AS src,
-         (doc_id*7+1) % (SELECT count(*) FROM documents) AS dst
-  FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0),
-und AS (SELECT DISTINCT a, b FROM (
-          SELECT src AS a, dst AS b FROM e0
-          UNION ALL SELECT dst, src FROM e0)
-        WHERE a <> b),
-pr AS (SELECT node,
-         md5(CAST(node AS VARCHAR)) || CAST(node AS VARCHAR) AS p
-       FROM nodes),
-dag AS (SELECT DISTINCT
-          CASE WHEN pa.p < pb.p THEN e.a ELSE e.b END AS lo,
-          CASE WHEN pa.p < pb.p THEN e.b ELSE e.a END AS hi
-        FROM und e JOIN pr pa ON pa.node = e.a
-                   JOIN pr pb ON pb.node = e.b),
-reach AS (
-  SELECT node, CAST(0 AS BIGINT) AS r FROM nodes
-  UNION
-  SELECT d.lo, reach.r + 1 FROM reach JOIN dag d ON d.hi = reach.node
-)
-SELECT node, CAST(max(r) AS BIGINT) AS color FROM reach GROUP BY node
-"""
-
-
 def _fd_oracle(fds) -> str:
     """Per-FD g3 blocks, unioned - each block reads only its two
     columns, mirroring fd_violations' independent aggregations."""
@@ -14134,97 +6184,6 @@ ref AS (SELECT query_id, top1_id AS ref_id FROM allt
 SELECT dim, a.query_id, a.top1_id, a.top1_id = ref.ref_id AS agree
 FROM allt a JOIN ref ON a.query_id = ref.query_id
 """)
-
-
-def _bootstrap_oracle(n_boot: int = 200, seed: str = "bs") -> str:
-    from eventrelationextractor_spark.ops.quality import POISSON1_THRESH
-    ladder = "CASE " + " ".join(
-        f"WHEN u32 < {t} THEN {k}"
-        for k, t in enumerate(POISSON1_THRESH)) + " ELSE 9 END"
-    b = int(n_boot)
-    return f"""
-WITH rep AS (SELECT doc_id AS rid, CAST(n_chars AS BIGINT) AS x, r.r
-             FROM documents,
-             LATERAL unnest(generate_series(0, {b - 1})) AS r(r)),
-u AS (SELECT rid, x, r,
-        CAST(('0x' || substr(md5('{seed}:' || CAST(rid AS VARCHAR)
-          || ':' || CAST(r AS VARCHAR)), 1, 8))::UBIGINT AS BIGINT)
-        AS u32
-      FROM rep),
-w AS (SELECT r, x, {ladder} AS w FROM u),
-means AS (SELECT r, CAST(sum(w * x) AS BIGINT) AS swx,
-                 CAST(sum(w) AS BIGINT) AS sw
-          FROM w GROUP BY r),
-m AS (SELECT (1000000 * swx) // sw AS m FROM means WHERE sw > 0),
--- ranks over the SURVIVING replicate count (zero-weight replicates
--- are filtered above), mirroring the Spark side's window count
-ranked AS (SELECT m, row_number() OVER (ORDER BY m) AS rk,
-                  CAST(count(*) OVER () AS BIGINT) AS be FROM m),
-ks AS (SELECT greatest(1, -((-25 * be) // 1000)) AS k_lo,
-              greatest(1, be // 2) AS k_med,
-              be - greatest(1, -((-25 * be) // 1000)) + 1 AS k_hi
-       FROM ranked LIMIT 1),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-            (1000000 * CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT))
-              // count(*) AS mean_ppm
-          FROM documents)
-SELECT n_rows, CAST({b} AS BIGINT) AS n_boot, mean_ppm,
-  (SELECT m FROM ranked, ks WHERE rk = ks.k_lo) AS lo_ppm,
-  (SELECT m FROM ranked, ks WHERE rk = ks.k_med) AS med_ppm,
-  (SELECT m FROM ranked, ks WHERE rk = ks.k_hi) AS hi_ppm
-FROM stats
-"""
-
-
-_CUPED_ORACLE = """
-WITH ev AS (SELECT user_id, event_id,
-   CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-pu AS (SELECT user_id,
-   CAST(sum(CASE WHEN event_id % 2 = 0 THEN cents ELSE 0 END)
-        AS BIGINT) AS x,
-   CAST(sum(CASE WHEN event_id % 2 = 1 THEN cents ELSE 0 END)
-        AS BIGINT) AS y
-   FROM ev GROUP BY 1),
-b AS (SELECT CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS arm, y, x
-      FROM pu),
-per AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x) AS BIGINT) AS sx,
-          CAST(sum(y * y) AS BIGINT) AS syy,
-          CAST(sum(x * x) AS BIGINT) AS sxx,
-          CAST(sum(x * y) AS BIGINT) AS sxy
-        FROM b GROUP BY 1),
-g AS (SELECT CAST(sum(n) AS BIGINT) AS gn,
-        CAST(sum(sy) AS BIGINT) AS gsy, CAST(sum(sx) AS BIGINT) AS gsx,
-        CAST(sum(syy) AS BIGINT) AS gsyy,
-        CAST(sum(sxx) AS BIGINT) AS gsxx,
-        CAST(sum(sxy) AS BIGINT) AS gsxy FROM per),
-j AS (SELECT per.*, g.gsx AS ggsx, g.gn AS ggn,
-        CASE WHEN CAST(gn AS DOUBLE) * CAST(gsxx AS DOUBLE)
-                  - CAST(gsx AS DOUBLE) * CAST(gsx AS DOUBLE) > 0 THEN
-          (CAST(gn AS DOUBLE) * CAST(gsxy AS DOUBLE)
-           - CAST(gsx AS DOUBLE) * CAST(gsy AS DOUBLE))
-          / (CAST(gn AS DOUBLE) * CAST(gsxx AS DOUBLE)
-             - CAST(gsx AS DOUBLE) * CAST(gsx AS DOUBLE))
-          ELSE 0.0 END AS theta
-      FROM per, g),
-k AS (SELECT arm, n, theta,
-        CAST(sy AS DOUBLE) / n - theta * (CAST(sx AS DOUBLE) / n
-          - CAST(ggsx AS DOUBLE) / ggn) AS mean_adj,
-        (CAST(syy AS DOUBLE) - 2 * theta * sxy
-          + theta * theta * sxx) / n
-          - (CAST(sy AS DOUBLE) / n - theta * sx / n)
-          * (CAST(sy AS DOUBLE) / n - theta * sx / n) AS var_adj
-      FROM j),
-a AS (SELECT n AS n_a, mean_adj AS ma, var_adj AS va, theta
-      FROM k WHERE arm = 0),
-c AS (SELECT n AS n_b, mean_adj AS mb, var_adj AS vb
-      FROM k WHERE arm = 1)
-SELECT n_a, n_b, round(ma, 6) AS mean_a_adj, round(mb, 6) AS mean_b_adj,
-  round(theta, 6) AS theta, round(mb - ma, 6) AS delta,
-  round(CASE WHEN va / n_a + vb / n_b > 0 THEN
-          (mb - ma) / sqrt(va / n_a + vb / n_b) ELSE 0.0 END, 6) AS z
-FROM a, c
-"""
 
 
 _TEXTTILE_ORACLE = f"""
@@ -14333,130 +6292,6 @@ SELECT doc_id, sum_depth, rank FROM ranked WHERE rank <= {k}
     return "".join(parts)
 
 
-def _temporal_reach_oracle(max_hops: int = 8) -> str:
-    parts = ["""
-WITH nodes AS (SELECT doc_id AS node FROM documents),
-e AS (SELECT src, dst, (src * 31 + dst * 17) % 100 AS t FROM (
-  SELECT doc_id AS src,
-         (doc_id*7+1) % (SELECT count(*) FROM documents) AS dst
-  FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % (SELECT count(*) FROM documents)
-  FROM documents WHERE doc_id % 17 <> 0)),
-r0 AS (SELECT node, CAST(0 AS BIGINT) AS earliest FROM nodes
-       WHERE node % 50 = 0)"""]
-    for i in range(max_hops):
-        parts.append(f""",
-r{i + 1} AS (SELECT node, CAST(min(earliest) AS BIGINT) AS earliest
-  FROM (SELECT node, earliest FROM r{i}
-        UNION ALL
-        SELECT e.dst, CAST(e.t AS BIGINT) FROM r{i} f JOIN e
-          ON e.src = f.node AND e.t >= f.earliest)
-  GROUP BY node)""")
-    parts.append(f"\nSELECT node, earliest FROM r{max_hops}\n")
-    return "".join(parts)
-
-
-_IMPUTE_ORACLE = """
-WITH d AS (SELECT doc_id, lang,
-    CASE WHEN doc_id % 13 = 0 THEN NULL ELSE n_chars END AS val
-  FROM documents),
-vals AS (SELECT lang, val AS v, count(*) AS c FROM d
-         WHERE val IS NOT NULL GROUP BY 1, 2),
-med AS (SELECT lang, CAST(min(v) AS BIGINT) AS grp_median FROM (
-    SELECT lang, v,
-      sum(c) OVER (PARTITION BY lang ORDER BY v
-                   ROWS UNBOUNDED PRECEDING) AS cum,
-      sum(c) OVER (PARTITION BY lang) AS n
-    FROM vals) WHERE 2 * cum >= n GROUP BY 1),
-g AS (SELECT CAST(min(v) AS BIGINT) AS global_median FROM (
-    SELECT v, sum(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(c) OVER () AS n
-    FROM (SELECT val AS v, count(*) AS c FROM d
-          WHERE val IS NOT NULL GROUP BY 1)) WHERE 2 * cum >= n)
-SELECT doc_id, lang, CAST(val AS BIGINT) AS value,
-  CAST(coalesce(val, grp_median, global_median) AS BIGINT) AS imputed,
-  val IS NULL AS was_imputed
-FROM d LEFT JOIN med USING (lang), g
-"""
-
-_FD_REPAIR_ORACLE = """
-WITH d AS (SELECT doc_id, doc_id % 50 AS k0,
-    CASE WHEN doc_id % 53 = 0 THEN 'zz'
-         ELSE 'v' || CAST((doc_id % 50) % 7 AS VARCHAR) END AS tag
-  FROM documents),
-pair AS (SELECT k0, tag AS v, count(*) AS c FROM d GROUP BY 1, 2),
-best AS (SELECT k0, v AS majority FROM (
-    SELECT k0, v, row_number() OVER (PARTITION BY k0
-      ORDER BY c DESC, v) AS rn FROM pair) WHERE rn = 1)
-SELECT doc_id, CAST(k0 AS BIGINT) AS lhs, tag AS rhs,
-  majority AS rhs_repaired,
-  tag IS DISTINCT FROM majority AS was_repaired
-FROM d JOIN best USING (k0)
-"""
-
-
-_SEQ_PAIRS_ORACLE = """
-WITH t AS (SELECT
-    CAST(user_id AS VARCHAR) || '|' || CAST(CAST(ts AS DATE) AS VARCHAR)
-      AS s,
-    event_type AS it,
-    CAST(row_number() OVER (PARTITION BY
-      CAST(user_id AS VARCHAR) || '|' || CAST(CAST(ts AS DATE)
-        AS VARCHAR)
-      ORDER BY event_id) AS BIGINT) AS p
-  FROM events),
-probes AS (SELECT s, it AS a, p + o AS p2 FROM t,
-           LATERAL unnest([1, 2, 3]) AS q(o)),
-pairs AS (SELECT pr.s, pr.a, tk.it AS b FROM probes pr
-          JOIN t tk ON pr.s = tk.s AND pr.p2 = tk.p),
-agg AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(count(DISTINCT s) AS BIGINT) AS n_sessions
-        FROM pairs GROUP BY 1, 2 HAVING count(DISTINCT s) >= 2),
-tot AS (SELECT CAST(count(DISTINCT s) AS BIGINT) AS t_sessions FROM t)
-SELECT a AS item_a, b AS item_b, n_pairs, n_sessions,
-  (1000000 * n_sessions) // t_sessions AS support_ppm
-FROM agg, tot ORDER BY n_sessions DESC, a, b LIMIT 30
-"""
-
-
-_SOUNDEX_ORACLE = """
-WITH t0 AS (SELECT u.term FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-    '[^a-z0-9]+'), w -> w <> '')) AS u(term)),
-dic AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM t0
-        WHERE regexp_matches(term, '^[a-z]+$') GROUP BY 1),
-toks AS (SELECT term AS w, cnt FROM dic
-         ORDER BY cnt DESC, term LIMIT 200),
-chars AS (SELECT w, i, substr(w, CAST(i AS INT), 1) AS ch
-  FROM toks, LATERAL unnest(generate_series(1, length(w))) r(i)),
-coded AS (SELECT w, i,
-  CASE WHEN ch IN ('b','f','p','v') THEN 1
-       WHEN ch IN ('c','g','j','k','q','s','x','z') THEN 2
-       WHEN ch IN ('d','t') THEN 3
-       WHEN ch = 'l' THEN 4
-       WHEN ch IN ('m','n') THEN 5
-       WHEN ch = 'r' THEN 6
-       WHEN ch IN ('h','w') THEN -1
-       ELSE 0 END AS code
-  FROM chars),
-nohw AS (SELECT * FROM coded WHERE code <> -1 OR i = 1),
-digits AS (SELECT w, i, code,
-   lag(code) OVER (PARTITION BY w ORDER BY i) AS prev
-  FROM nohw),
-emit AS (SELECT w, i, code,
-   row_number() OVER (PARTITION BY w ORDER BY i) AS rn
-  FROM digits
-  WHERE i > 1 AND code > 0 AND (prev IS NULL OR code <> prev)),
-d3 AS (SELECT w, string_agg(CAST(code AS VARCHAR), '' ORDER BY i)
-         AS ds
-       FROM emit WHERE rn <= 3 GROUP BY w)
-SELECT toks.w AS term, toks.cnt,
-  upper(substr(toks.w, 1, 1)) || rpad(coalesce(ds, ''), 3, '0') AS sdx
-FROM toks LEFT JOIN d3 ON d3.w = toks.w
-"""
-
-
 _LINKAGE_PAIRS_CTE = """
 WITH t0 AS (SELECT u.term FROM documents,
   LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
@@ -14507,10 +6342,6 @@ SELECT a, b, round(jaro_winkler_similarity(a, b), 6) AS jw
 FROM pairs WHERE round(jaro_winkler_similarity(a, b), 6) >= 0.85
 """
 
-_DL_LINKAGE_ORACLE = _LINKAGE_PAIRS_CTE + """
-SELECT a, b, CAST(damerau_levenshtein(a, b) AS BIGINT) AS dl
-FROM pairs WHERE damerau_levenshtein(a, b) <= 2
-"""
 
 _KNN_SHAPLEY_ORACLE = """
 WITH t AS (SELECT vec_id AS qid, embedding AS qv, label AS qy
@@ -14551,31 +6382,6 @@ SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank,
 FROM top WHERE rnk <= 10
 """
 
-_HASH_RING_ORACLE = """
-WITH ring AS (
-  SELECT i % 8 AS node,
-    md5('n' || CAST(i % 8 AS VARCHAR) || '#'
-        || CAST(i // 8 AS VARCHAR))
-      || ':' || CAST(i % 8 AS VARCHAR) AS e
-  FROM (SELECT unnest(range(128)) AS i)),
-arr AS (SELECT
-    (SELECT list(e ORDER BY e) FROM ring) AS r1,
-    (SELECT list(e ORDER BY e) FROM ring WHERE node <> 3) AS r2),
-ks AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS k FROM documents),
-a AS (SELECT md5('k' || k) AS kpos, r1, r2 FROM ks, arr),
-owned AS (SELECT
-    CAST(split_part(coalesce(
-      list_min(list_filter(r1, e -> e > kpos)), r1[1]), ':', 2)
-      AS BIGINT) AS node,
-    CAST(split_part(coalesce(
-      list_min(list_filter(r2, e -> e > kpos)), r2[1]), ':', 2)
-      AS BIGINT) AS node2
-  FROM a)
-SELECT node, CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(CASE WHEN node <> node2 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_moved_away
-FROM owned GROUP BY node
-"""
 
 _REUSE_DISTANCE_ORACLE = """
 WITH a AS (SELECT user_id AS u,
@@ -14593,287 +6399,6 @@ d AS (SELECT CASE WHEN prev IS NULL THEN -1
   FROM p)
 SELECT distance, CAST(count(*) AS BIGINT) AS n_accesses
 FROM d GROUP BY distance
-"""
-
-def _bleu_oracle() -> str:
-    """Generated per-n blocks sharing the base tokenization CTE —
-    the same text staging as the rouge oracle with sys = first 2/3
-    characters."""
-    parts = ["""
-WITH base AS (SELECT doc_id AS rid,
-  list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-              w -> w <> '') AS r_toks,
-  list_filter(regexp_split_to_array(lower(
-      substr(text, 1, (length(text) * 2) // 3)), '[^a-z0-9]+'),
-              w -> w <> '') AS s_toks
-  FROM documents),
-lens AS (SELECT CAST(sum(len(r_toks)) AS BIGINT) AS ref_len,
-                CAST(sum(len(s_toks)) AS BIGINT) AS sys_len
-         FROM base)"""]
-    for n in range(1, 5):
-        parts.append(f""",
-rg{n} AS (SELECT rid, u.gm FROM base, LATERAL unnest(
-  list_transform(range(1, len(r_toks) - {n} + 2), i ->
-    array_to_string(list_slice(r_toks, CAST(i AS INT),
-                    CAST(i + {n} - 1 AS INT)), ' '))) AS u(gm)),
-sg{n} AS (SELECT rid, u.gm FROM base, LATERAL unnest(
-  list_transform(range(1, len(s_toks) - {n} + 2), i ->
-    array_to_string(list_slice(s_toks, CAST(i AS INT),
-                    CAST(i + {n} - 1 AS INT)), ' '))) AS u(gm)),
-rc{n} AS (SELECT rid, gm, count(*) AS cr FROM rg{n} GROUP BY 1, 2),
-sc{n} AS (SELECT rid, gm, count(*) AS cs FROM sg{n} GROUP BY 1, 2),
-st{n} AS (SELECT CAST(sum(least(coalesce(cr, 0), cs)) AS BIGINT)
-                   AS match_n,
-                 CAST(sum(cs) AS BIGINT) AS sys_n
-          FROM sc{n} LEFT JOIN rc{n} USING (rid, gm)),
-rn{n} AS (SELECT CAST(sum(CASE WHEN len(r_toks) >= {n}
-                     THEN len(r_toks) - {n} + 1 ELSE 0 END) AS BIGINT)
-                   AS ref_n FROM base)""")
-    sels = []
-    for n in range(1, 5):
-        sels.append(f"""
-SELECT CAST({n} AS BIGINT) AS n, match_n, sys_n, ref_n,
-  CAST(CASE WHEN sys_n > 0 THEN (1000000 * match_n) // sys_n
-       ELSE 0 END AS BIGINT) AS p_ppm, ref_len, sys_len
-FROM st{n}, rn{n}, lens""")
-    return "".join(parts) + " UNION ALL ".join(sels)
-
-
-_SHAPLEY_R2_ORACLE = """
-WITH b AS (SELECT CAST(floor(value * 100) AS BIGINT) AS y,
-                  CAST(extract(hour FROM ts) AS BIGINT) AS x1,
-                  CAST((CAST(ts AS DATE) - DATE '1970-01-01') % 7
-                       AS BIGINT) AS x2
-           FROM events),
-a AS (SELECT count(*) AS n,
-             sum(x1) AS s1, sum(x2) AS s2, sum(y) AS sy,
-             sum(x1 * x1) AS s11, sum(x2 * x2) AS s22,
-             sum(x1 * x2) AS s12, sum(x1 * y) AS s1y,
-             sum(x2 * y) AS s2y, sum(y * y) AS syy2
-      FROM b),
-m AS (SELECT n,
-        CAST(n * s11 - s1 * s1 AS DOUBLE) AS m11,
-        CAST(n * s22 - s2 * s2 AS DOUBLE) AS m22,
-        CAST(n * s12 - s1 * s2 AS DOUBLE) AS m12,
-        CAST(n * s1y - s1 * sy AS DOUBLE) AS v1,
-        CAST(n * s2y - s2 * sy AS DOUBLE) AS v2,
-        CAST(n * syy2 - sy * sy AS DOUBLE) AS syy
-      FROM a),
-r AS (SELECT n,
-        CASE WHEN m11 = 0 OR syy = 0 THEN NULL
-             ELSE v1 * v1 / (m11 * syy) END AS r1,
-        CASE WHEN m22 = 0 OR syy = 0 THEN NULL
-             ELSE v2 * v2 / (m22 * syy) END AS r2,
-        CASE WHEN m11 * m22 - m12 * m12 = 0 OR syy = 0 THEN NULL
-             ELSE (v1 * (m22 * v1 - m12 * v2)
-                   + v2 * (m11 * v2 - m12 * v1))
-                  / ((m11 * m22 - m12 * m12) * syy) END AS rf
-      FROM m)
-SELECT CAST(n AS BIGINT) AS n,
-       CAST(floor(rf * 1000000.0) AS BIGINT) AS r2_full_ppm,
-       CAST(floor(r1 * 1000000.0) AS BIGINT) AS r2_x1_ppm,
-       CAST(floor(r2 * 1000000.0) AS BIGINT) AS r2_x2_ppm,
-       CAST(floor((r1 + (rf - r2)) / 2 * 1000000.0) AS BIGINT)
-         AS phi1_ppm,
-       CAST(floor((r2 + (rf - r1)) / 2 * 1000000.0) AS BIGINT)
-         AS phi2_ppm
-FROM r
-"""
-
-_PARTITION_PRUNING_ORACLE = """
-SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, lang,
-       CAST(doc_id % 8 AS BIGINT) AS bucket
-FROM documents WHERE doc_id % 8 IN (2, 5)
-"""
-
-_BH_FDR_ORACLE = """
-WITH pv AS (SELECT CASE WHEN doc_id % 20 = 0 THEN doc_id % 50
-              ELSE (doc_id * 2654435761) % 1000000 END AS p
-            FROM documents),
-h AS (SELECT p, count(*) AS c FROM pv GROUP BY p),
-tot AS (SELECT sum(c) AS m FROM h),
-cum AS (SELECT p, c, sum(c) OVER (ORDER BY p
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp
-        FROM h),
-ok AS (SELECT p FROM cum, tot WHERE p * 20 * m <= cp * 1000000),
-t AS (SELECT max(p) AS t_ppm FROM ok)
-SELECT CAST(max(tot.m) AS BIGINT) AS m,
-       CAST(max(t.t_ppm) AS BIGINT) AS t_ppm,
-       CAST(sum(CASE WHEN cum.p <= t.t_ppm THEN cum.c ELSE 0 END)
-            AS BIGINT) AS n_rejected
-FROM cum, tot, t
-"""
-
-_HUFFMAN_ORACLE = """
-WITH RECURSIVE
-tf AS (SELECT u.term, count(*) AS freq
-       FROM documents, LATERAL unnest(list_filter(
-         regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-         w -> w <> '')) AS u(term)
-       GROUP BY u.term),
-top AS (SELECT term, freq FROM tf
-        ORDER BY freq DESC, term LIMIT 64),
-init AS (SELECT
-    list({'f': freq, 'mt': term, 'terms': [term]} ORDER BY freq, term)
-      AS nodes,
-    list({'term': term, 'len': CAST(0 AS BIGINT)} ORDER BY term)
-      AS lens
-  FROM top),
-bld AS (
-  SELECT nodes, lens FROM init
-  UNION ALL
-  SELECT
-    list_append(
-      list_slice(s, 3, len(s)),
-      {'f': s[1].f + s[2].f, 'mt': least(s[1].mt, s[2].mt),
-       'terms': s[1].terms || s[2].terms}),
-    list_transform(lens, x -> CASE
-      WHEN list_contains(s[1].terms || s[2].terms, x.term)
-      THEN {'term': x.term, 'len': x.len + 1} ELSE x END)
-  FROM (SELECT list_sort(nodes) AS s, lens FROM bld
-        WHERE len(nodes) > 1)),
-fin AS (SELECT lens FROM bld WHERE len(nodes) = 1),
-nterms AS (SELECT count(*) AS nt FROM top)
-SELECT t.term, CAST(t.freq AS BIGINT) AS freq,
-       CAST(CASE WHEN nterms.nt = 1 THEN 1 ELSE u.x.len END
-            AS BIGINT) AS code_len
-FROM fin, LATERAL unnest(fin.lens) AS u(x)
-JOIN top t ON t.term = u.x.term
-CROSS JOIN nterms
-"""
-
-_BOWTIE_ORACLE = """
-WITH RECURSIVE
-js AS (SELECT doc_id // 20 AS j FROM documents WHERE doc_id % 20 = 0),
-mm AS (SELECT count(*) AS m FROM js),
-e0 AS (SELECT j AS s, (j*7+1) % m AS d FROM js, mm
-       WHERE j % 17 <> 0
-       UNION ALL
-       SELECT j, (j*13+3) % m FROM js, mm WHERE j % 17 <> 0
-       UNION ALL
-       SELECT j, j % 5 FROM js, mm WHERE j % 4 = 0 AND j >= 5),
-ed AS (SELECT DISTINCT s, d FROM e0),
-nodes AS (SELECT DISTINCT v FROM (
-            SELECT s AS v FROM ed UNION ALL SELECT d FROM ed)),
-piv AS (SELECT min(s) AS p FROM ed),
-fw(v, h) AS (
-  SELECT p, 0 FROM piv
-  UNION
-  SELECT e.d, r.h + 1 FROM fw r JOIN ed e ON e.s = r.v
-  WHERE r.h < 8),
-bwr(v, h) AS (
-  SELECT p, 0 FROM piv
-  UNION
-  SELECT e.s, r.h + 1 FROM bwr r JOIN ed e ON e.d = r.v
-  WHERE r.h < 8),
-fset AS (SELECT DISTINCT v FROM fw),
-bset AS (SELECT DISTINCT v FROM bwr),
-u2 AS (SELECT s AS a, d AS b FROM ed UNION SELECT d, s FROM ed),
-reach(src, dst) AS (
-  SELECT a, b FROM u2
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN u2 e ON e.a = r.dst),
-canon AS (SELECT src AS v, least(src, min(dst)) AS c
-          FROM reach GROUP BY src),
-corelbl AS (SELECT c.c AS cc FROM canon c, piv WHERE c.v = piv.p),
-tagged AS (SELECT n.v,
-    CASE WHEN f.v IS NOT NULL AND b.v IS NOT NULL THEN 'SCC'
-         WHEN b.v IS NOT NULL THEN 'IN'
-         WHEN f.v IS NOT NULL THEN 'OUT'
-         WHEN cn.c = (SELECT cc FROM corelbl) THEN 'TENDRIL'
-         ELSE 'DISCONNECTED' END AS cls
-  FROM nodes n
-  LEFT JOIN fset f ON f.v = n.v
-  LEFT JOIN bset b ON b.v = n.v
-  LEFT JOIN canon cn ON cn.v = n.v)
-SELECT cls, CAST(count(*) AS BIGINT) AS n_nodes
-FROM tagged GROUP BY cls
-"""
-
-_VACUUM_ORACLE = """
-WITH files AS (SELECT doc_id AS file_id, doc_id % 60 AS created_day,
-                      CAST(n_chars AS BIGINT) AS size_bytes
-               FROM documents),
-snaps AS (SELECT unnest(range(10)) AS snapshot_id),
-manifests AS (SELECT f.file_id, s.snapshot_id
-              FROM files f, snaps s
-              WHERE f.file_id % 5 <> 0
-                AND (f.file_id + s.snapshot_id) % 4 = 0),
-live_refs AS (SELECT DISTINCT file_id FROM manifests
-              WHERE snapshot_id >= 6),
-any_refs AS (SELECT DISTINCT file_id FROM manifests),
-dead AS (SELECT f.* FROM files f
-         LEFT JOIN live_refs lr ON lr.file_id = f.file_id
-         WHERE lr.file_id IS NULL AND f.created_day < 30)
-SELECT d.file_id, d.created_day, d.size_bytes,
-       CASE WHEN ar.file_id IS NOT NULL THEN 'expired'
-            ELSE 'orphan' END AS reason
-FROM dead d LEFT JOIN any_refs ar ON ar.file_id = d.file_id
-"""
-
-_OOV_CURVE_ORACLE = """
-WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text),
-             '[^a-z0-9]+'), w -> w <> '') AS toks FROM documents),
-g AS (SELECT u.gm AS term FROM t, LATERAL unnest(
-        list_transform(range(1, len(toks) - 1), i ->
-          array_to_string(list_slice(toks, CAST(i AS INT),
-                          CAST(i + 2 AS INT)), ' '))) AS u(gm)),
-tf AS (SELECT term, count(*) AS tf FROM g GROUP BY term),
-rk AS (SELECT tf, row_number() OVER (ORDER BY tf DESC, term) AS rn
-       FROM tf),
-tot AS (SELECT CAST(sum(tf) AS BIGINT) AS total,
-               count(*) AS ndv FROM tf),
-ks AS (SELECT unnest([500, 2000, 8000, 32000]) AS k),
-cov AS (SELECT ks.k, sum(rk.tf) AS covered, count(rk.rn) AS used
-        FROM ks LEFT JOIN rk ON rk.rn <= ks.k GROUP BY ks.k)
-SELECT CAST(k AS BIGINT) AS k,
-       CAST(least(used, ndv) AS BIGINT) AS vocab_used,
-       CAST(coalesce(covered, 0) AS BIGINT) AS covered_tokens,
-       total AS total_tokens,
-       CAST((1000000 * (total - coalesce(covered, 0))) // total
-            AS BIGINT) AS oov_ppm
-FROM cov, tot
-"""
-
-_WILSON_ORACLE = """
-WITH a AS (SELECT
-    CAST(json_extract_string(props, '$.k') AS BIGINT) AS g,
-    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS sc
-  FROM events),
-agg AS (SELECT g, CAST(sum(sc) AS BIGINT) AS s,
-               count(*) AS n FROM a GROUP BY g),
-sc2 AS (SELECT g, s, n, CAST(n AS DOUBLE) AS nn,
-               CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-               1.96 * 1.96 AS zz2 FROM agg),
-w AS (SELECT g, s, n,
-        greatest(CAST(floor(1000000 * ((p + zz2 / (2 * nn)
-          - 1.96 * sqrt(p * (1 - p) / nn + zz2 / (4 * nn * nn)))
-          / (1 + zz2 / nn))) AS BIGINT), 0) AS wilson_ppm
-      FROM sc2)
-SELECT g AS k, s AS successes, CAST(n AS BIGINT) AS trials,
-       CAST((1000000 * s) // n AS BIGINT) AS naive_ppm, wilson_ppm,
-       CAST(row_number() OVER (ORDER BY wilson_ppm DESC, g)
-            AS BIGINT) AS rank
-FROM w
-"""
-
-_BITEMPORAL_ORACLE = """
-WITH log AS (SELECT user_id AS id,
-    event_id % 50 AS valid_from,
-    (event_id % 50) + 1 + user_id % 10 AS valid_to,
-    event_id % 1000 AS tx_time,
-    CASE WHEN event_id % 7 = 0 THEN 'D' ELSE 'U' END AS op,
-    CAST(json_extract_string(props, '$.k') AS BIGINT) AS value
-  FROM events),
-known AS (SELECT * FROM log WHERE tx_time <= 700),
-latest AS (SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY id, valid_from
-      ORDER BY tx_time DESC, op DESC, valid_to DESC, value DESC)
-      AS rn
-    FROM known) WHERE rn = 1)
-SELECT id, valid_from, valid_to, value, tx_time
-FROM latest
-WHERE op = 'U' AND valid_from <= 25 AND valid_to > 25
 """
 
 
@@ -14903,148 +6428,6 @@ cnt AS (SELECT u, {cols} FROM bk GROUP BY u),
 arr AS (SELECT u, {arr} AS x FROM cnt)
 """ + " UNION ALL ".join(sels))
 
-
-_ATTACK_ROBUSTNESS_ORACLE = """
-WITH RECURSIVE
-js AS (SELECT doc_id // 20 AS j FROM documents WHERE doc_id % 20 = 0),
-mm AS (SELECT count(*) AS m FROM js),
-e0 AS (SELECT j AS s, (j*7+1) % m AS d FROM js, mm
-       UNION ALL SELECT j, (j*13+3) % m FROM js, mm
-       UNION ALL SELECT j, j % 5 FROM js, mm WHERE j % 4 = 0),
-und AS (SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        FROM e0 WHERE s <> d),
-deg AS (SELECT node, count(*) AS deg FROM (
-          SELECT a AS node FROM und
-          UNION ALL SELECT b FROM und) GROUP BY node),
-top AS (SELECT node, rn FROM (
-          SELECT node, row_number() OVER (ORDER BY deg DESC, node)
-            AS rn FROM deg) WHERE rn <= 8),
-kk AS (SELECT unnest([0, 1, 8]) AS k),
-kept AS (SELECT kk.k, u.a, u.b FROM kk, und u
-         LEFT JOIN top ta ON ta.node = u.a
-         LEFT JOIN top tb ON tb.node = u.b
-         WHERE (ta.rn IS NULL OR ta.rn > kk.k)
-           AND (tb.rn IS NULL OR tb.rn > kk.k)),
-edges2 AS (SELECT k, a, b FROM kept UNION SELECT k, b, a FROM kept),
-reach(k, src, dst) AS (
-  SELECT k, a, b FROM edges2
-  UNION
-  SELECT r.k, r.src, e.b FROM reach r
-  JOIN edges2 e ON e.k = r.k AND e.a = r.dst),
-canon AS (SELECT k, src AS v, least(src, min(dst)) AS c
-          FROM reach GROUP BY k, src),
-comp AS (SELECT k, c, count(*) AS sz FROM canon GROUP BY k, c),
-stats AS (SELECT k, max(sz) AS largest_cc,
-                 count(*) AS n_components FROM comp GROUP BY k),
-ec AS (SELECT k, count(*) AS n_edges_left FROM kept GROUP BY k)
-SELECT CAST(kk.k AS BIGINT) AS k,
-       CAST((SELECT count(*) FROM top WHERE rn <= kk.k) AS BIGINT)
-         AS n_removed,
-       CAST(coalesce(ec.n_edges_left, 0) AS BIGINT) AS n_edges_left,
-       CAST(coalesce(stats.largest_cc, 0) AS BIGINT) AS largest_cc,
-       CAST(coalesce(stats.n_components, 0) AS BIGINT)
-         AS n_components
-FROM kk LEFT JOIN stats ON stats.k = kk.k
-LEFT JOIN ec ON ec.k = kk.k
-"""
-
-_PPS_SAMPLE_ORACLE = """
-WITH d AS (SELECT doc_id AS id, CAST(n_chars AS BIGINT) AS w
-           FROM documents WHERE n_chars > 0),
-c AS (SELECT id, w, sum(w) OVER (ORDER BY id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c_hi
-      FROM d),
-t AS (SELECT sum(w) AS wtot FROM d),
-p AS (SELECT id, w,
-        ((c_hi * 100 + wtot - wtot // 2) // wtot - 1)
-      - (((c_hi - w) * 100 + wtot - wtot // 2) // wtot - 1)
-        AS n_copies
-      FROM c, t)
-SELECT id AS doc_id, w AS weight, CAST(n_copies AS BIGINT) AS n_copies
-FROM p WHERE n_copies > 0
-"""
-
-_RBO_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, u.term
-  FROM documents,
-  LATERAL unnest(list_filter(regexp_split_to_array(lower(text),
-                                                   '[^a-z0-9]+'),
-                             w -> w <> '')) AS u(term)),
-qt AS (SELECT * FROM (VALUES ('hash'), ('join'), ('spark'),
-                             ('window'), ('stream')) AS t(term)),
-tf AS (SELECT doc_id, term, count(*) AS tf
-       FROM toks JOIN qt USING (term) GROUP BY doc_id, term),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-ra AS (SELECT * FROM (
-         SELECT term AS qid, doc_id,
-           row_number() OVER (PARTITION BY term
-                              ORDER BY tf DESC, doc_id) AS rnk
-         FROM tf) WHERE rnk <= 10),
-rb AS (SELECT * FROM (
-         SELECT t.term AS qid, t.doc_id,
-           row_number() OVER (PARTITION BY t.term
-                              ORDER BY (1000000 * t.tf) // d.dl DESC,
-                                       t.doc_id) AS rnk
-         FROM tf t JOIN dl d USING (doc_id)) WHERE rnk <= 10),
-j AS (SELECT ra.qid, greatest(ra.rnk, rb.rnk) AS m
-      FROM ra JOIN rb ON rb.qid = ra.qid AND rb.doc_id = ra.doc_id
-      WHERE greatest(ra.rnk, rb.rnk) <= 10),
-qs AS (SELECT DISTINCT qid FROM ra),
-dd AS (SELECT qid, gs.d FROM qs,
-       LATERAL unnest(generate_series(1, 10)) AS gs(d)),
-ov AS (SELECT dd.qid, dd.d,
-         sum(CASE WHEN j.m <= dd.d THEN 1 ELSE 0 END) AS ov
-       FROM dd LEFT JOIN j ON j.qid = dd.qid
-       GROUP BY dd.qid, dd.d),
-c AS (SELECT qid, d, ov,
-        (ov * ([1000000000, 900000000, 810000000, 729000000,
-                656100000, 590490000, 531441000, 478296900,
-                430467210, 387420489])[CAST(d AS INT)]) // d AS c
-      FROM ov)
-SELECT qid,
-       CAST(max(CASE WHEN d = 10 THEN ov END) AS BIGINT)
-         AS overlap_at_depth,
-       CAST(sum(c) AS BIGINT) AS rbo_e10
-FROM c GROUP BY qid
-"""
-
-_RICH_CLUB_ORACLE = """
-WITH nn AS (SELECT count(*) AS n FROM documents),
-e0 AS (
-  SELECT doc_id AS s, (doc_id*7+1) % n AS d FROM documents, nn
-  WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id, (doc_id*13+3) % n FROM documents, nn
-  WHERE doc_id % 17 <> 0),
-und AS (SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        FROM e0 WHERE s <> d),
-deg AS (SELECT node, count(*) AS deg FROM (
-          SELECT a AS node FROM und
-          UNION ALL SELECT b FROM und) GROUP BY node),
-dh AS (SELECT deg AS k, count(*) AS nk FROM deg GROUP BY 1),
-em AS (SELECT least(x.deg, y.deg) AS k
-       FROM und JOIN deg x ON x.node = und.a
-       JOIN deg y ON y.node = und.b),
-eh AS (SELECT k, count(*) AS ek FROM em GROUP BY 1),
-hist AS (SELECT coalesce(dh.k, eh.k) AS k,
-                coalesce(nk, 0) AS nk, coalesce(ek, 0) AS ek
-         FROM dh FULL JOIN eh ON dh.k = eh.k),
-prof AS (SELECT k,
-    coalesce(sum(nk) OVER (ORDER BY k DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS n_nodes,
-    coalesce(sum(ek) OVER (ORDER BY k DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS n_edges
-  FROM hist)
-SELECT CAST(k AS BIGINT) AS k, CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_edges AS BIGINT) AS n_edges,
-       CASE WHEN n_nodes >= 2 THEN CAST(
-         (2000000 * n_edges) // (n_nodes * (n_nodes - 1)) AS BIGINT)
-       END AS phi_ppm
-FROM prof
-"""
 
 _WL_COLORS_ORACLE = """
 WITH nn AS (SELECT count(*) AS n FROM documents),
@@ -15161,1132 +6544,6 @@ SELECT qid, CAST(ca AS BIGINT) AS credit_a,
 FROM cred
 """
 
-_HAMMING_TOPK_ORACLE = """
-WITH w AS (
-  SELECT vec_id,
-    CAST(list_sum(list_transform(range(32), i ->
-      CASE WHEN embedding[CAST(i + 1 AS INT)] > 0
-           THEN (1::BIGINT << CAST(i AS INT)) ELSE 0::BIGINT END))
-      AS BIGINT) AS w0,
-    CAST(list_sum(list_transform(range(32), i ->
-      CASE WHEN embedding[CAST(i + 33 AS INT)] > 0
-           THEN (1::BIGINT << CAST(i AS INT)) ELSE 0::BIGINT END))
-      AS BIGINT) AS w1
-  FROM embeddings),
-p AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cid,
-    CAST(bit_count(xor(q.w0, c.w0)) + bit_count(xor(q.w1, c.w1))
-      AS BIGINT) AS hamming
-  FROM w q JOIN w c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < 10),
-r AS (SELECT query_id, cid, hamming,
-    row_number() OVER (PARTITION BY query_id
-                       ORDER BY hamming, cid) AS rnk
-  FROM p)
-SELECT query_id, CAST(rnk AS BIGINT) AS rank, cid AS neighbor_id,
-       hamming
-FROM r WHERE rnk <= 5
-"""
-
-
-_MW_Z = ("CASE WHEN n1 > 0 AND n2 > 0 AND n1 + n2 > 1 AND "
-         "(CAST(n1 AS DOUBLE) * n2 / 3.0) * ((n1 + n2 + 1) "
-         " - CAST(tt AS DOUBLE) / ((n1 + n2) * (n1 + n2 - 1))) > 0 "
-         "THEN (CAST(sr2 - n1 * (n1 + 1) AS DOUBLE) - "
-         "CAST(n1 AS DOUBLE) * n2) "
-         "/ sqrt((CAST(n1 AS DOUBLE) * n2 / 3.0) * ((n1 + n2 + 1) "
-         " - CAST(tt AS DOUBLE) / ((n1 + n2) * (n1 + n2 - 1)))) "
-         "ELSE 0.0 END")
-
-_MANN_WHITNEY_ORACLE = f"""
-WITH b AS (SELECT CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS arm,
-                  CAST(n_chars AS BIGINT) AS x
-           FROM documents WHERE doc_id % 5 = 0),
-ranked AS (SELECT arm,
-    CAST(rank() OVER (ORDER BY x ASC) + count(*) OVER ()
-         + 1 - rank() OVER (ORDER BY x DESC) AS BIGINT) AS r2
-  FROM b),
-ties AS (SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tt FROM (
-   SELECT count(*) AS t FROM b GROUP BY x)),
-agg AS (SELECT
-    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-    CAST(sum(CASE WHEN arm = 1 THEN r2 ELSE 0 END) AS BIGINT) AS sr2
-  FROM ranked)
-SELECT n1, n2, CAST(sr2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
-  round({_MW_Z}, 6) AS z
-FROM agg, ties
-"""
-
-
-_MATCHING_ORACLE = """
-WITH RECURSIVE
-p AS (SELECT count(*) AS m FROM documents WHERE doc_id % 10 = 0),
-ks AS (SELECT doc_id // 10 AS k FROM documents WHERE doc_id % 10 = 0),
-gen AS (SELECT k, t.g FROM ks, p,
-        LATERAL unnest([(k*7+1) % m, (k*13+3) % m, (k+1) % m]) AS t(g)),
-und AS (SELECT DISTINCT least(k, g) AS u, greatest(k, g) AS v
-        FROM gen WHERE k <> g),
-g2 AS (SELECT u * m + v AS eid, u, v FROM und, p),
-es AS (SELECT row_number() OVER (ORDER BY
-         md5(CAST(eid AS VARCHAR)) || CAST(eid AS VARCHAR) DESC)
-         AS i, eid, u, v
-       FROM g2),
-cnt AS (SELECT count(*) AS ne FROM es),
-kr AS (
-  SELECT CAST(0 AS BIGINT) AS i, CAST([] AS BIGINT[]) AS mv,
-         CAST([] AS BIGINT[]) AS took
-  FROM (VALUES (1)) t(x)
-  UNION ALL
-  SELECT kr.i + 1,
-    CASE WHEN NOT list_contains(kr.mv, e.u)
-              AND NOT list_contains(kr.mv, e.v)
-         THEN list_append(list_append(kr.mv, e.u), e.v)
-         ELSE kr.mv END,
-    CASE WHEN NOT list_contains(kr.mv, e.u)
-              AND NOT list_contains(kr.mv, e.v)
-         THEN list_append(kr.took, e.eid) ELSE kr.took END
-  FROM kr JOIN es e ON e.i = kr.i + 1
-),
-fin AS (SELECT took FROM kr, cnt WHERE kr.i = cnt.ne),
-ou AS (SELECT unnest(took) AS eid FROM fin)
-SELECT g2.eid, CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v
-FROM g2 JOIN ou USING (eid)
-"""
-
-_SURVIVAL_SUBJECTS_SQL = """
-subj AS (
-  SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_evt
-  FROM events GROUP BY user_id),
-s2 AS (SELECT user_id,
-              CAST((epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0))
-                   // 60000000 AS BIGINT) AS duration_min,
-              CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS observed
-       FROM subj)
-"""
-
-_NELSON_AALEN_ORACLE = f"""
-WITH {_SURVIVAL_SUBJECTS_SQL},
-times AS (SELECT duration_min, CAST(sum(observed) AS BIGINT) AS d,
-                 CAST(count(*) AS BIGINT) AS c
-          FROM s2 GROUP BY duration_min),
-ar AS (SELECT *, CAST(sum(c) OVER (ORDER BY duration_min DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS n_risk
-       FROM times),
-na AS (SELECT * FROM ar WHERE d > 0)
-SELECT duration_min, n_risk, d AS n_events,
-       CAST(sum((1000000 * d) // n_risk)
-            OVER (ORDER BY duration_min
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cumhaz_ppm
-FROM na
-"""
-
-_LOGRANK_ORACLE = f"""
-WITH {_SURVIVAL_SUBJECTS_SQL},
-s3 AS (SELECT duration_min, observed,
-              CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS arm
-       FROM s2),
-cell AS (SELECT duration_min, arm, CAST(sum(observed) AS BIGINT) AS da,
-                CAST(count(*) AS BIGINT) AS ca
-         FROM s3 GROUP BY duration_min, arm),
-per_t AS (SELECT duration_min,
-    CAST(sum(CASE WHEN arm = 1 THEN da ELSE 0 END) AS BIGINT) AS d1,
-    CAST(sum(da) AS BIGINT) AS d,
-    CAST(sum(CASE WHEN arm = 1 THEN ca ELSE 0 END) AS BIGINT) AS c1,
-    CAST(sum(ca) AS BIGINT) AS c
-  FROM cell GROUP BY duration_min),
-risk AS (SELECT *,
-    CAST(sum(c1) OVER wd AS BIGINT) AS n1,
-    CAST(sum(c) OVER wd AS BIGINT) AS n
-  FROM per_t
-  WINDOW wd AS (ORDER BY duration_min DESC
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-lt AS (SELECT *, (1000000 * d * n1) // n AS a
-       FROM risk WHERE d > 0),
-lt2 AS (SELECT *, (a * (n - n1)) // n AS b FROM lt),
-lt3 AS (SELECT *, CASE WHEN n > 1 THEN (b * (n - d)) // (n - 1)
-                       ELSE 0 END AS v
-        FROM lt2),
-agg AS (SELECT CAST(count(*) AS BIGINT) AS n_times,
-               CAST(sum(d1) AS BIGINT) AS o1,
-               CAST(sum(a) AS BIGINT) AS e1_micro,
-               CAST(sum(v) AS BIGINT) AS v_micro
-        FROM lt3)
-SELECT n_times, o1, e1_micro, v_micro,
-       CASE WHEN v_micro > 0
-            THEN round((o1 - e1_micro / 1e6) / sqrt(v_micro / 1e6), 6)
-       END AS z
-FROM agg
-"""
-
-_SORTED_NEIGHBORHOOD_ORACLE = """
-WITH keyed AS (
-  SELECT doc_id,
-         lang || '|' || substr(regexp_replace(lower(text),
-                               '[^a-z0-9 ]', '', 'g'), 1, 16) AS k
-  FROM documents),
-r AS (SELECT doc_id, row_number() OVER (ORDER BY k, doc_id) AS r
-      FROM keyed)
-SELECT ra.doc_id AS a, rb.doc_id AS b, CAST(rb.r - ra.r AS BIGINT) AS gap
-FROM r ra JOIN r rb ON rb.r > ra.r AND rb.r <= ra.r + 7
-"""
-
-_CONFORMAL_ORACLE = """
-WITH cal AS (SELECT lang AS g, CAST(n_chars AS BIGINT) AS x
-             FROM documents WHERE doc_id % 2 = 0),
-n AS (SELECT g, CAST(count(*) AS BIGINT) AS n_cal FROM cal GROUP BY g),
-vals AS (SELECT g, x, count(*) AS c FROM cal GROUP BY g, x),
-cum AS (SELECT g, x, sum(c) OVER (PARTITION BY g ORDER BY x
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        FROM vals),
-med AS (SELECT c.g, n.n_cal, CAST(min(x) AS BIGINT) AS pred
-        FROM cum c JOIN n ON n.g = c.g
-        WHERE 2 * cum >= n_cal + 1 GROUP BY c.g, n.n_cal),
-res AS (SELECT cal.g, abs(x - pred) AS res
-        FROM cal JOIN med ON med.g = cal.g),
-rr AS (SELECT g, res,
-              row_number() OVER (PARTITION BY g ORDER BY res) AS rn
-       FROM res),
-q AS (SELECT rr.g, CAST(res AS BIGINT) AS q_hat
-      FROM rr JOIN med ON med.g = rr.g
-      WHERE rn = least(n_cal, ((n_cal + 1) * 90 + 99) // 100)),
-test AS (SELECT lang AS g, CAST(n_chars AS BIGINT) AS x
-         FROM documents WHERE doc_id % 2 <> 0),
-per AS (SELECT med.g, med.n_cal, med.pred, q.q_hat,
-               CAST(count(*) AS BIGINT) AS n_test,
-               CAST(sum(CASE WHEN abs(x - pred) <= q_hat
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_covered
-        FROM test JOIN med ON med.g = test.g JOIN q ON q.g = test.g
-        GROUP BY med.g, med.n_cal, med.pred, q.q_hat)
-SELECT g AS lang, n_cal, pred, q_hat, n_test, n_covered,
-       (1000000 * n_covered) // n_test AS coverage_ppm
-FROM per
-"""
-
-# independent quadratic exact-Jaccard join (no prefix/positional
-# filtering) — cross-checks the PPJoin algorithm, not a replay of it
-_PPJOIN_ORACLE = """
-WITH aug AS (SELECT doc_id, text FROM documents
-             UNION ALL SELECT doc_id + 1000000, text || ' extra'
-                       FROM documents
-             UNION ALL SELECT doc_id + 2000000, text FROM documents
-                       WHERE doc_id % 10 = 0),
-norm AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-             '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS t FROM aug),
-words AS (SELECT doc_id, string_split(t, ' ') AS w FROM norm),
-sh0 AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-        FROM words, LATERAL unnest(generate_series(1, len(w) - 2)) AS g(i)
-        WHERE len(w) >= 3),
-sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-          FROM sh GROUP BY doc_id),
-inter AS (SELECT sa.doc_id AS a, sb.doc_id AS b,
-                 CAST(count(*) AS BIGINT) AS n_inter
-          FROM sh sa JOIN sh sb
-            ON sa.shingle = sb.shingle AND sa.doc_id < sb.doc_id
-          GROUP BY sa.doc_id, sb.doc_id)
-SELECT a, b, n_inter,
-       CAST(za.n + zb.n - n_inter AS BIGINT) AS n_union,
-       round(n_inter / (za.n + zb.n - n_inter), 6) AS jaccard
-FROM inter JOIN sizes za ON za.doc_id = a JOIN sizes zb ON zb.doc_id = b
-WHERE 1000000 * n_inter >= 800000 * (za.n + zb.n - n_inter)
-"""
-
-_PERM_FDR_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, t.tok AS token
-  FROM (SELECT doc_id,
-               string_split(regexp_replace(lower(text), '[^a-z0-9]+',
-                            ' ', 'g'), ' ') AS ws
-        FROM documents) s, LATERAL unnest(ws) AS t(tok)
-  WHERE t.tok <> ''),
-dtc AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS cnt
-        FROM toks GROUP BY doc_id, token),
-top AS (SELECT token FROM (
-          SELECT token, sum(cnt) AS tot FROM dtc GROUP BY token
-          ORDER BY tot DESC, token LIMIT 30)),
-dt AS (SELECT d.doc_id, d.token, d.cnt,
-              CASE WHEN d.doc_id % 2 = 0 THEN 1 ELSE 0 END AS s
-       FROM dtc d JOIN top USING (token)),
-obs AS (SELECT token, CAST(abs(sum(cnt * (1 - 2 * s))) AS BIGINT)
-               AS t_obs
-        FROM dt GROUP BY token),
-perms AS (SELECT dt.*, bb.b FROM dt,
-          (SELECT unnest(generate_series(0, 63)) AS b) bb),
-nullt AS (SELECT token, b,
-    CAST(abs(sum(cnt * (1 - 2 * ((s + CAST(
-        ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                        || CAST(b AS VARCHAR)), 1, 1))::UBIGINT % 2
-        AS INT)) % 2)))) AS BIGINT) AS t_b
-  FROM perms GROUP BY token, b),
-cge AS (SELECT o.token, o.t_obs,
-               CAST(sum(CASE WHEN n.t_b >= o.t_obs THEN 1 ELSE 0 END)
-                    AS BIGINT) AS perm_ge
-        FROM nullt n JOIN obs o USING (token)
-        GROUP BY o.token, o.t_obs),
-rk AS (SELECT *, CAST(row_number() OVER (ORDER BY perm_ge, token)
-                      AS BIGINT) AS rank,
-              count(*) OVER () AS m
-       FROM cge),
-fl AS (SELECT *, CASE WHEN 20 * m * (1 + perm_ge) <= rank * 65
-                      THEN rank ELSE 0 END AS okr
-       FROM rk),
-km AS (SELECT coalesce(max(okr), 0) AS kmax FROM fl)
-SELECT token, t_obs, perm_ge, rank,
-       CAST(CASE WHEN rank <= kmax THEN 1 ELSE 0 END AS BIGINT)
-           AS rejected
-FROM fl, km
-"""
-
-_IPF_STEP_ROW = ("CASE WHEN sum({w}) OVER (PARTITION BY event_type) > 0"
-                 " THEN (CAST({w} AS HUGEINT) * rt * 1000000)"
-                 " // sum({w}) OVER (PARTITION BY event_type)"
-                 " ELSE 0 END")
-_IPF_STEP_COL = ("CASE WHEN sum({w}) OVER (PARTITION BY dow) > 0"
-                 " THEN (CAST({w} AS HUGEINT) * ctg * 1000000)"
-                 " // sum({w}) OVER (PARTITION BY dow)"
-                 " ELSE 0 END")
-
-_IPF_ORACLE = f"""
-WITH cells AS (
-  SELECT event_type,
-         CAST(CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) % 7
-              AS BIGINT) AS dow,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, 2),
-t AS (SELECT CAST(sum(cnt) AS BIGINT) AS tot,
-             CAST(count(DISTINCT event_type) AS BIGINT) AS nr,
-             CAST(count(DISTINCT dow) AS BIGINT) AS nc
-      FROM cells),
-rts AS (SELECT event_type, tot // nr AS rt
-        FROM (SELECT DISTINCT event_type FROM cells) r, t),
-cts AS (SELECT dow, tot // nc AS ctg
-        FROM (SELECT DISTINCT dow FROM cells) c, t),
-w0 AS (SELECT c.event_type, c.dow, c.cnt AS n_obs,
-              CAST(c.cnt AS HUGEINT) * 1000000 AS w, rts.rt, cts.ctg
-       FROM cells c JOIN rts USING (event_type) JOIN cts USING (dow)),
-r1 AS (SELECT *, {_IPF_STEP_ROW.format(w='w')} AS wa FROM w0),
-c1 AS (SELECT *, {_IPF_STEP_COL.format(w='wa')} AS wb FROM r1),
-r2 AS (SELECT *, {_IPF_STEP_ROW.format(w='wb')} AS wc FROM c1),
-c2 AS (SELECT *, {_IPF_STEP_COL.format(w='wc')} AS wd FROM r2),
-r3 AS (SELECT *, {_IPF_STEP_ROW.format(w='wd')} AS we FROM c2),
-c3 AS (SELECT *, {_IPF_STEP_COL.format(w='we')} AS wf FROM r3)
-SELECT event_type, dow, n_obs, CAST(wf AS BIGINT) AS w_micro
-FROM c3
-"""
-
-_IPW_ATE_ORACLE = """
-WITH per AS (SELECT source AS stratum, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        AS n1,
-    CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END)
-         AS BIGINT) AS sy1,
-    CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 0 ELSE n_chars END)
-         AS BIGINT) AS sy0
-  FROM documents GROUP BY source),
-u AS (SELECT *, CASE WHEN n1 > 0 AND n1 < n THEN 1 ELSE 0 END AS used
-      FROM per),
-tt AS (SELECT *,
-    CASE WHEN used = 1 THEN (1000000 * sy1 * n) // n1 ELSE 0 END
-        AS t1_micro,
-    CASE WHEN used = 1 THEN (1000000 * sy0 * n) // (n - n1) ELSE 0 END
-        AS t0_micro
-  FROM u),
-ag AS (SELECT CAST(sum(CASE WHEN used = 1 THEN n ELSE 0 END) AS BIGINT)
-              AS nu,
-              CAST(sum(t1_micro - t0_micro) AS BIGINT) AS df
-       FROM tt)
-SELECT stratum, n, n1, sy1, sy0,
-       CAST(t1_micro AS BIGINT) AS t1_micro,
-       CAST(t0_micro AS BIGINT) AS t0_micro,
-       CAST(used AS BIGINT) AS used,
-       CAST(CASE WHEN nu > 0 THEN df // nu ELSE 0 END AS BIGINT)
-           AS ate_micro
-FROM tt, ag
-"""
-
-_DID_ORACLE = """
-WITH d AS (SELECT CAST(user_id % 2 AS INT) AS tr,
-    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events),
-piv AS (SELECT (min(day) + max(day) + 1) // 2 AS pv FROM d),
-c AS (SELECT tr, CASE WHEN day >= pv THEN 1 ELSE 0 END AS po,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(cents) AS BIGINT) AS sy
-      FROM d, piv GROUP BY tr, 2),
-m AS (SELECT *, (1000000 * sy) // n AS mm FROM c),
-p AS (SELECT
-  CAST(sum(CASE WHEN tr=0 AND po=0 THEN n ELSE 0 END) AS BIGINT) AS n_00,
-  CAST(sum(CASE WHEN tr=0 AND po=1 THEN n ELSE 0 END) AS BIGINT) AS n_01,
-  CAST(sum(CASE WHEN tr=1 AND po=0 THEN n ELSE 0 END) AS BIGINT) AS n_10,
-  CAST(sum(CASE WHEN tr=1 AND po=1 THEN n ELSE 0 END) AS BIGINT) AS n_11,
-  CAST(sum(CASE WHEN tr=0 AND po=0 THEN mm ELSE 0 END) AS BIGINT)
-      AS m00_micro,
-  CAST(sum(CASE WHEN tr=0 AND po=1 THEN mm ELSE 0 END) AS BIGINT)
-      AS m01_micro,
-  CAST(sum(CASE WHEN tr=1 AND po=0 THEN mm ELSE 0 END) AS BIGINT)
-      AS m10_micro,
-  CAST(sum(CASE WHEN tr=1 AND po=1 THEN mm ELSE 0 END) AS BIGINT)
-      AS m11_micro
-  FROM m)
-SELECT *, CAST(m11_micro - m10_micro - (m01_micro - m00_micro)
-               AS BIGINT) AS did_micro
-FROM p
-"""
-
-_EB_SHRINKAGE_ORACLE = """
-WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS k
-  FROM documents GROUP BY source),
-b AS (SELECT *, (1000000 * k) // n AS r_ppm,
-             sum(k) OVER () AS sk, sum(n) OVER () AS sn
-      FROM per),
-b2 AS (SELECT *, (1000000 * sk) // sn AS m_ppm FROM b),
-b3 AS (SELECT *, sum((r_ppm - m_ppm) * (r_ppm - m_ppm)) OVER ()
-                 // count(*) OVER () AS var_pp2
-       FROM b2),
-b4 AS (SELECT *, least(greatest((m_ppm * (1000000 - m_ppm))
-                 // greatest(var_pp2, 1), 1), 1000000) AS strength
-       FROM b3)
-SELECT source, n, k, CAST(r_ppm AS BIGINT) AS raw_ppm,
-       CAST(strength AS BIGINT) AS strength,
-       CAST((1000000 * k + strength * m_ppm) // (n + strength)
-            AS BIGINT) AS shrunk_ppm
-FROM b4
-"""
-
-_QN_ORACLE = """
-WITH base AS (SELECT doc_id, lang AS g, CAST(n_chars AS BIGINT) AS x
-              FROM documents),
-grp AS (SELECT *, CAST(row_number() OVER (PARTITION BY g
-                       ORDER BY x, doc_id) AS BIGINT) AS r,
-               CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n_g
-        FROM base),
-pool AS (SELECT x AS px, CAST(row_number() OVER (ORDER BY x, doc_id)
-                              AS BIGINT) AS pr
-         FROM base),
-np AS (SELECT CAST(count(*) AS BIGINT) AS n_pool FROM base)
-SELECT g.doc_id, g.g AS lang, g.x AS n_chars, p.px AS qn_value
-FROM grp g CROSS JOIN np
-JOIN pool p
-  ON p.pr = ((2 * g.r - 1) * np.n_pool + g.n_g) // (2 * g.n_g)
-"""
-
-_BUTTERFLY_ORACLE = """
-WITH toks AS (
-  SELECT DISTINCT doc_id, t.tok AS token
-  FROM (SELECT doc_id,
-               string_split(regexp_replace(lower(text), '[^a-z0-9]+',
-                            ' ', 'g'), ' ') AS ws
-        FROM documents) s, LATERAL unnest(ws) AS t(tok)
-  WHERE t.tok <> ''),
-deg AS (SELECT token, CAST(count(*) AS BIGINT) AS dfc
-        FROM toks GROUP BY token),
-used AS (SELECT toks.doc_id, toks.token, deg.dfc
-         FROM toks JOIN deg USING (token)
-         WHERE dfc <= 20 AND dfc >= 2),
-pairs AS (SELECT la.doc_id AS a, lb.doc_id AS b,
-                 CAST(count(*) AS BIGINT) AS c
-          FROM used la JOIN used lb
-            ON la.token = lb.token AND la.doc_id < lb.doc_id
-          GROUP BY la.doc_id, lb.doc_id),
-ws AS (SELECT CAST(count(*) AS BIGINT) AS n_rights,
-              CAST(coalesce(sum((dfc * (dfc - 1)) // 2), 0) AS BIGINT)
-                  AS n_wedges
-       FROM (SELECT DISTINCT token, dfc FROM used)),
-ps AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-              CAST(coalesce(sum((c * (c - 1)) // 2), 0) AS BIGINT)
-                  AS n_butterflies
-       FROM pairs)
-SELECT * FROM ws, ps
-"""
-
-# independent direct suffix SORT (not a prefix-doubling replay):
-# ASCII-only text makes byte-wise string order == integer-code order
-_SUFFIX_ARRAY_ORACLE = """
-WITH sel AS (SELECT doc_id,
-    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '',
-         'g'), ' +', ' ', 'g')) || '!' AS t
-  FROM documents WHERE doc_id < 2000 AND doc_id % 40 = 0),
-s AS (SELECT string_agg(t, '' ORDER BY doc_id) AS s FROM sel),
-idx AS (SELECT s.s AS str, i
-        FROM s, LATERAL unnest(generate_series(1, length(s.s))) AS g(i))
-SELECT CAST(row_number() OVER (ORDER BY substr(str, i)) - 1 AS BIGINT)
-           AS r,
-       CAST(i - 1 AS BIGINT) AS pos,
-       CAST(ascii(substr(str, CASE WHEN i = 1 THEN length(str)
-                                   ELSE i - 1 END, 1)) AS BIGINT)
-           AS bwt_code
-FROM idx
-"""
-
-_ORC_ROUNDTRIP_ORACLE = """
-SELECT doc_id, text, lang, source, n_chars
-FROM documents WHERE lang = 'en'
-"""
-
-def _betweenness_oracle(hops: int = 8) -> str:
-    """Chained-CTE replay of the level-synchronous sigma-BFS (one CTE
-    pair per hop = the operator's fixed hop bound) + the same exact
-    sigma-decomposition join apsp_centrality runs."""
-    blocks = ["""nn AS MATERIALIZED (SELECT CAST(doc_id // 40 AS BIGINT) AS i
-      FROM documents WHERE doc_id % 40 = 0 AND doc_id < 4800),
-mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM nn),
-e0 AS (SELECT i AS s, (i + 1) % m AS d2 FROM nn, mm
-       UNION SELECT i, (3 * i + 1) % m FROM nn, mm),
-ed AS MATERIALIZED (SELECT s, d2 FROM e0 WHERE s <> d2
-       UNION SELECT d2, s FROM e0 WHERE s <> d2),
-t0 AS MATERIALIZED (SELECT i AS src, i AS v, CAST(0 AS BIGINT) AS d,
-              CAST(1 AS BIGINT) AS sigma FROM nn)"""]
-    prev_t, prev_f = "t0", "t0"
-    for h in range(1, hops + 1):
-        blocks.append(f"""f{h} AS MATERIALIZED (
-  SELECT l.src, e.d2 AS v, CAST({h} AS BIGINT) AS d,
-         CAST(sum(l.sigma) AS BIGINT) AS sigma
-  FROM {prev_f} l JOIN ed e ON l.v = e.s
-  WHERE NOT EXISTS (SELECT 1 FROM {prev_t} p
-                    WHERE p.src = l.src AND p.v = e.d2)
-  GROUP BY l.src, e.d2)""")
-        blocks.append(f"t{h} AS MATERIALIZED (SELECT * FROM {prev_t} "
-                      f"UNION ALL SELECT * FROM f{h})")
-        prev_t, prev_f = f"t{h}", f"f{h}"
-    blocks.append(f"""mid AS (
-  SELECT a.v AS node,
-         CAST(sum(a.sigma * b.sigma) AS BIGINT) AS stress,
-         CAST(sum((1000000 * a.sigma * b.sigma) // ds.sigma)
-              AS BIGINT) AS bc_micro
-  FROM {prev_t} a JOIN {prev_t} b ON a.v = b.src
-  JOIN {prev_t} ds ON ds.src = a.src AND ds.v = b.v
-  WHERE a.d + b.d = ds.d AND a.v <> a.src AND a.v <> b.v
-    AND a.src < b.v
-  GROUP BY a.v)""")
-    return ("WITH " + ",\n".join(blocks) + """
-SELECT nn.i AS node,
-       CAST(coalesce(mid.stress, 0) AS BIGINT) AS stress,
-       CAST(coalesce(mid.bc_micro, 0) AS BIGINT) AS bc_micro
-FROM nn LEFT JOIN mid ON nn.i = mid.node""")
-
-
-_DBSCAN_ORACLE = """
-WITH RECURSIVE pts AS (
-  SELECT doc_id AS pid,
-         CAST(10000 + (doc_id % 3) * 1000
-           + CAST(('0x' || substr(md5('db:' || CAST(doc_id AS VARCHAR)),
-                   1, 6))::UBIGINT AS BIGINT) % 120
-           + CASE WHEN doc_id % 23 = 0 THEN 500 ELSE 0 END
-           AS BIGINT) AS x,
-         CAST(10000 + (doc_id % 3) * 700
-           + CAST(('0x' || substr(md5('db:' || CAST(doc_id AS VARCHAR)),
-                   7, 6))::UBIGINT AS BIGINT) % 120 AS BIGINT) AS y
-  FROM documents WHERE doc_id % 40 = 0),
-prs AS (SELECT a.pid AS pa, b.pid AS pb
-        FROM pts a JOIN pts b ON a.pid <> b.pid
-         AND abs(a.x - b.x) <= 80 AND abs(a.y - b.y) <= 80
-         AND (a.x - b.x) * (a.x - b.x)
-           + (a.y - b.y) * (a.y - b.y) <= 6400),
-cnt AS (SELECT pa AS pid, CAST(count(*) + 1 AS BIGINT) AS n
-        FROM prs GROUP BY pa),
-core AS (SELECT p.pid, coalesce(c.n, 1) >= 3 AS is_core
-         FROM pts p LEFT JOIN cnt c ON p.pid = c.pid),
-cid AS (SELECT pid FROM core WHERE is_core),
-ce AS (SELECT pa, pb FROM prs
-       WHERE pa IN (SELECT pid FROM cid)
-         AND pb IN (SELECT pid FROM cid)),
-reach AS (SELECT pid AS a, pid AS b FROM cid
-          UNION
-          SELECT r.a, e.pb FROM reach r JOIN ce e ON r.b = e.pa),
-lbl AS (SELECT a AS pid, CAST(min(b) AS BIGINT) AS label
-        FROM reach GROUP BY a),
-bl AS (SELECT p.pa AS pid, CAST(min(l.label) AS BIGINT) AS blabel
-       FROM prs p JOIN lbl l ON p.pb = l.pid GROUP BY p.pa)
-SELECT c.pid, c.is_core,
-       CAST(coalesce(l.label, b.blabel, -1) AS BIGINT) AS label
-FROM core c LEFT JOIN lbl l ON c.pid = l.pid
-LEFT JOIN bl b ON c.pid = b.pid
-"""
-
-
-def _stable_matching_oracle(rounds: int = 12) -> str:
-    """Chained-CTE replay of the round-synchronous deferred-acceptance
-    rounds (same md5 preference keys, same cursor-advance rule)."""
-    blocks = ["""pp AS (SELECT doc_id AS p FROM documents
-      WHERE doc_id % 20 = 0),
-npc AS (SELECT CAST((count(*) + 9) // 10 AS BIGINT) AS cap FROM pp),
-sh AS (SELECT CAST(g.s AS BIGINT) AS s
-       FROM generate_series(0, 9) AS g(s)),
-pref AS MATERIALIZED (SELECT p, s,
-           CAST(row_number() OVER (PARTITION BY p ORDER BY
-             md5('p:' || CAST(p AS VARCHAR) || ':'
-                 || CAST(s AS VARCHAR)), s) - 1 AS BIGINT) AS rnk
-         FROM pp CROSS JOIN sh),
-held0 AS (SELECT CAST(NULL AS BIGINT) AS s, CAST(NULL AS BIGINT) AS p
-          WHERE 1 = 0),
-cur0 AS (SELECT p, CAST(0 AS BIGINT) AS cur FROM pp)"""]
-    for k in range(1, rounds + 1):
-        j = k - 1
-        blocks.append(f"""free{k} AS MATERIALIZED (
-  SELECT c.p, c.cur FROM cur{j} c
-  WHERE c.cur < 10 AND NOT EXISTS
-    (SELECT 1 FROM held{j} h WHERE h.p = c.p)),
-props{k} AS MATERIALIZED (SELECT pr.s, f.p FROM free{k} f
-             JOIN pref pr ON pr.p = f.p AND pr.rnk = f.cur),
-pool{k} AS (SELECT s, p FROM held{j}
-            UNION ALL SELECT s, p FROM props{k}),
-held{k} AS MATERIALIZED (SELECT s, p FROM (
-  SELECT s, p, row_number() OVER (PARTITION BY s ORDER BY
-    md5('s:' || CAST(s AS VARCHAR) || ':'
-        || CAST(p AS VARCHAR)), p) AS rn
-  FROM pool{k}) t, npc WHERE t.rn <= npc.cap),
-cur{k} AS MATERIALIZED (SELECT c.p, c.cur + CASE WHEN EXISTS
-             (SELECT 1 FROM props{k} x WHERE x.p = c.p)
-           THEN 1 ELSE 0 END AS cur FROM cur{j} c)""")
-    return ("WITH " + ",\n".join(blocks) + f"""
-SELECT pp.p, CAST(coalesce(h.s, -1) AS BIGINT) AS shard,
-       CAST(c.cur AS BIGINT) AS n_proposals
-FROM pp LEFT JOIN held{rounds} h ON pp.p = h.p
-JOIN cur{rounds} c ON pp.p = c.p""")
-
-
-def _boosted_stumps_oracle(rounds: int = 3) -> str:
-    """Chained-CTE replay of the weight-doubling boost rounds: each
-    round re-scores every candidate stump against the current integer
-    weights, picks the (err, cid) argmin with the same o-orientation
-    tie rule, and applies the doubling update — all integer, so the
-    match is bit-exact, not tolerance-based."""
-    cand_rows = ", ".join(
-        f"({i}, {f}, {t})"
-        for i, (f, t) in enumerate(_STUMP_CANDIDATES))
-    fv = ("CASE c.feat WHEN 0 THEN s.f0 WHEN 1 THEN s.f1"
-          " ELSE s.f2 END")
-    pv = ("CASE p.feat WHEN 0 THEN s.f0 WHEN 1 THEN s.f1"
-          " ELSE s.f2 END")
-    blocks = [f"""cand(cid, feat, thr) AS (VALUES {cand_rows}),
-s0 AS MATERIALIZED (
-  SELECT doc_id AS xid,
-    CAST(CASE WHEN n_chars > 280 THEN 1 ELSE -1 END AS BIGINT) AS y,
-    CAST(n_chars AS BIGINT) AS f0,
-    CAST(doc_id % 1000 AS BIGINT) AS f1,
-    CAST(length(text) % 97 AS BIGINT) AS f2,
-    CAST(1 AS BIGINT) AS w, CAST(0 AS BIGINT) AS score
-  FROM documents)"""]
-    for k in range(1, rounds + 1):
-        j = k - 1
-        blocks.append(f"""e{k} AS (
-  SELECT c.cid, c.feat, c.thr,
-    SUM(CASE WHEN {fv} <= c.thr AND s.y = -1 THEN s.w ELSE 0 END)
-      + SUM(CASE WHEN {fv} > c.thr AND s.y = 1 THEN s.w ELSE 0 END)
-      AS err_a,
-    SUM(CASE WHEN {fv} <= c.thr AND s.y = 1 THEN s.w ELSE 0 END)
-      + SUM(CASE WHEN {fv} > c.thr AND s.y = -1 THEN s.w ELSE 0 END)
-      AS err_b
-  FROM s{j} s CROSS JOIN cand c
-  GROUP BY c.cid, c.feat, c.thr),
-p{k} AS MATERIALIZED (
-  SELECT feat, thr,
-    CASE WHEN err_a <= err_b THEN 0 ELSE 1 END AS o
-  FROM e{k} ORDER BY LEAST(err_a, err_b), cid LIMIT 1),
-s{k} AS MATERIALIZED (
-  SELECT xid, y, f0, f1, f2,
-    CAST(CASE WHEN pred <> y THEN w * 2 ELSE w END AS BIGINT) AS w,
-    CAST(score + pred AS BIGINT) AS score
-  FROM (SELECT s.*,
-          CASE WHEN (({pv}) <= p.thr) = (p.o = 0)
-               THEN 1 ELSE -1 END AS pred
-        FROM s{j} s CROSS JOIN p{k} p) t)""")
-    return ("WITH " + ",\n".join(blocks)
-            + f"\nSELECT xid AS doc_id, y, score, w FROM s{rounds}")
-
-
-_ROUGE2_ORACLE = """
-WITH d AS MATERIALIZED (
-  SELECT doc_id AS rid,
-    list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                t -> t <> '') AS rt,
-    list_filter(regexp_split_to_array(lower(
-        substr(text, 1, (length(text) * 2) // 3)), '[^a-z0-9]+'),
-                t -> t <> '') AS st
-  FROM documents),
-g AS MATERIALIZED (
-  SELECT rid,
-    CASE WHEN len(rt) < 2 THEN rt[1:0] ELSE
-      list_transform(range(1, len(rt)), i -> rt[i] || ' ' || rt[i+1])
-    END AS rg,
-    CASE WHEN len(st) < 2 THEN st[1:0] ELSE
-      list_transform(range(1, len(st)), i -> st[i] || ' ' || st[i+1])
-    END AS sg
-  FROM d),
-rc AS (SELECT rid, u.g AS gram, CAST(count(*) AS BIGINT) AS cr
-       FROM g, LATERAL unnest(rg) AS u(g) GROUP BY rid, u.g),
-sc AS (SELECT rid, u.g AS gram, CAST(count(*) AS BIGINT) AS cs
-       FROM g, LATERAL unnest(sg) AS u(g) GROUP BY rid, u.g),
-m AS (SELECT rc.rid, CAST(SUM(LEAST(cr, cs)) AS BIGINT) AS match_n
-      FROM rc JOIN sc ON rc.rid = sc.rid AND rc.gram = sc.gram
-      GROUP BY rc.rid),
-tot AS (SELECT rid, CAST(len(rg) AS BIGINT) AS ref_n,
-               CAST(len(sg) AS BIGINT) AS sys_n FROM g)
-SELECT t.rid AS doc_id,
-  CAST(COALESCE(m.match_n, 0) AS BIGINT) AS match_n,
-  t.ref_n, t.sys_n,
-  CAST(CASE WHEN t.sys_n > 0
-       THEN (1000000 * COALESCE(m.match_n, 0)) // t.sys_n
-       ELSE 0 END AS BIGINT) AS p_ppm,
-  CAST(CASE WHEN t.ref_n > 0
-       THEN (1000000 * COALESCE(m.match_n, 0)) // t.ref_n
-       ELSE 0 END AS BIGINT) AS r_ppm,
-  CAST(CASE WHEN t.ref_n + t.sys_n > 0
-       THEN (2000000 * COALESCE(m.match_n, 0)) // (t.ref_n + t.sys_n)
-       ELSE 0 END AS BIGINT) AS f_ppm
-FROM tot t LEFT JOIN m ON t.rid = m.rid
-"""
-
-
-_USER_TOPK_ORACLE = """
-WITH c AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS cnt
-           FROM events GROUP BY user_id, event_type),
-r AS (SELECT *, CAST(row_number() OVER (PARTITION BY user_id
-              ORDER BY cnt DESC, event_type) AS BIGINT) AS rnk
-      FROM c)
-SELECT user_id, event_type, cnt, rnk FROM r WHERE rnk <= 4
-"""
-
-
-_REDIRECT_ORACLE = """
-WITH RECURSIVE e AS (
-  SELECT doc_id AS x,
-    CASE WHEN doc_id % 500 IN (490, 491) THEN doc_id + 1
-         WHEN doc_id % 500 = 492 THEN doc_id - 2
-         WHEN doc_id % 100 < 19 THEN doc_id + 1 END AS y
-  FROM documents
-  WHERE doc_id % 500 IN (490, 491, 492) OR doc_id % 100 < 19
-),
-walk(src, cur, hops) AS (
-  SELECT x, y, CAST(1 AS BIGINT) FROM e
-  UNION ALL
-  SELECT w.src, e2.y, w.hops + 1
-  FROM walk w JOIN e e2 ON w.cur = e2.x
-  WHERE w.hops < 64
-),
-term AS (
-  SELECT w.src, w.cur AS final, w.hops
-  FROM walk w LEFT JOIN e t ON w.cur = t.x
-  WHERE t.x IS NULL
-)
-SELECT s.x AS src, t.final, t.hops, t.src IS NULL AS is_cycle
-FROM e s LEFT JOIN term t ON s.x = t.src
-"""
-
-
-def _otsu_oracle() -> str:
-    """Rebuilds otsu_stats from _media_pngs' closed pixel form: the
-    gray histogram comes straight off the (doc, y, x) grid, cumulative
-    sums run over OCCUPIED bins only (an unoccupied threshold shares
-    its predecessor's (cn, cs) and therefore its score, so the
-    lowest-t argmax always lands on an occupied bin — same first-hit
-    numpy argmax picks), and the DOUBLE score is exact-scalar IEEE on
-    both engines (num < 2^53)."""
-    base = "(x * 3 + y * 7 + doc_id)"
-    gray = (f"(({base}) % 256 + ({base} + 11) % 256"
-            f" + ({base} + 22) % 256) // 3")
-    return f"""
-WITH dims AS (SELECT doc_id, 8 + (doc_id % 5) * 4 AS h,
-                     8 + ((doc_id // 5) % 5) * 4 AS w
-              FROM documents),
-px AS (SELECT doc_id, {gray} AS gray
-       FROM dims, range(24) yy(y), range(24) xx(x)
-       WHERE y < h AND x < w),
-hist AS (SELECT doc_id, gray, CAST(count(*) AS BIGINT) AS c
-         FROM px GROUP BY 1, 2),
-cum AS (SELECT doc_id, gray AS t,
-          CAST(sum(c) OVER win AS BIGINT) AS cn,
-          CAST(sum(gray * c) OVER win AS BIGINT) AS cs,
-          CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n,
-          CAST(sum(gray * c) OVER (PARTITION BY doc_id) AS BIGINT) AS s
-        FROM hist
-        WINDOW win AS (PARTITION BY doc_id ORDER BY gray)),
-scored AS (SELECT doc_id, t, cn, cs,
-             CAST((cs * n - cn * s) * (cs * n - cn * s) AS DOUBLE)
-               / CAST(cn * (n - cn) AS DOUBLE) AS sc
-           FROM cum WHERE cn < n),
-pick AS (SELECT doc_id, t, cn, cs,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY sc DESC, t) AS rn
-         FROM scored)
-SELECT doc_id AS media_id, CAST(t AS BIGINT) AS otsu_t,
-       cn AS n_below, cs AS sum_below
-FROM pick WHERE rn = 1
-"""
-
-
-_DHONDT_ORACLE = """
-WITH w AS (SELECT 's' || CAST(doc_id % 20 AS VARCHAR) AS stratum,
-             CAST(count(*) AS BIGINT) AS weight
-           FROM documents GROUP BY 1),
-cand AS (SELECT stratum, weight, k FROM w, range(1, 22) ks(k)),
-nb AS (SELECT c.stratum, c.weight, c.k,
-         (SELECT count(*) FROM cand o
-          WHERE o.weight * c.k > c.weight * o.k
-             OR (o.weight * c.k = c.weight * o.k
-                 AND (o.weight > c.weight
-                      OR (o.weight = c.weight
-                          AND o.stratum < c.stratum)))) AS nbet
-       FROM cand c)
-SELECT stratum, max(weight) AS weight,
-       CAST(sum(CASE WHEN nbet < 21 THEN 1 ELSE 0 END) AS BIGINT)
-         AS seats
-FROM nb GROUP BY 1
-"""
-
-
-_ANOVA_ORACLE = """
-WITH b AS (SELECT 'g' || CAST(doc_id % 5 AS VARCHAR) AS lang,
-             n_chars FROM documents),
-g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_g,
-             CAST(sum(n_chars) AS BIGINT) AS t_g,
-             CAST(sum(n_chars * n_chars) AS BIGINT) AS q_g
-           FROM b GROUP BY 1),
-tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n_rows,
-          CAST(count(*) AS BIGINT) AS n_groups,
-          CAST(sum(t_g) AS BIGINT) AS t_total,
-          CAST(sum(q_g) AS BIGINT) AS q_total,
-          CAST(sum(((t_g * t_g) // n_g) * 1000000
-               + (((t_g * t_g) % n_g) * 1000000) // n_g) AS BIGINT)
-            AS between_raw
-        FROM g),
-ss AS (SELECT n_rows, n_groups, t_total, q_total,
-         between_raw - (((t_total * t_total) // n_rows) * 1000000
-           + (((t_total * t_total) % n_rows) * 1000000) // n_rows)
-           AS ssb_scaled,
-         q_total * 1000000 - between_raw AS ssw_scaled
-       FROM tot)
-SELECT n_rows, n_groups, t_total, q_total, ssb_scaled, ssw_scaled,
-  CASE WHEN ssw_scaled = 0 OR n_groups <= 1 OR n_rows <= n_groups
-       THEN CAST(NULL AS BIGINT)
-       ELSE CAST(floor((CAST(ssb_scaled AS DOUBLE) / (n_groups - 1))
-            / (CAST(ssw_scaled AS DOUBLE) / (n_rows - n_groups))
-            * 1000000.0) AS BIGINT) END AS f_ppm
-FROM ss
-"""
-
-
-def _markov_oracle(n_iters: int = 30) -> str:
-    """Replays markov_attribution's fixed-point absorption recurrence
-    as ONE recursive CTE carrying list state (a[si] per removal row),
-    NOT as chained per-iteration CTEs: a 30-deep chained-CTE join
-    tree sent DuckDB's optimizer super-linear (6 iterations = 24 s at
-    sf0.01 — measured, the session's oracle-wall lesson), while the
-    list-carrying recursion runs the same 30 rounds in ~4 s. The
-    transition matrix comes from the same journey/window/truncation
-    logic, probabilities the same trunc-div ppm, and each round
-    a'(s) = pconv[s] + (sum_t P[s][t]*a[t], t != removed) // 1e6 with
-    a(removed) pinned 0; removal index 0 is the full (no-removal)
-    run. States are indexed by ORDER BY s — any fixed order works
-    because the recurrence is index-symmetric."""
-    return f"""
-WITH RECURSIVE ord AS (
-  SELECT user_id AS u, event_type AS t,
-    row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS p
-  FROM events),
-convp AS (SELECT u, min(p) AS cp FROM ord
-          WHERE t = 'purchase' GROUP BY u),
-j AS (SELECT o.u, o.t, o.p FROM ord o LEFT JOIN convp c ON o.u = c.u
-      WHERE c.cp IS NULL OR o.p <= c.cp),
-st AS (SELECT u, t, p,
-         coalesce(lag(t) OVER (PARTITION BY u ORDER BY p),
-                  'START') AS prev,
-         max(p) OVER (PARTITION BY u) AS lp
-       FROM j),
-edges AS (
-  SELECT prev AS src, t AS dst FROM st
-  UNION ALL
-  SELECT t AS src, 'NULL' AS dst FROM st
-  WHERE p = lp AND t <> 'purchase'),
-trans AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS c
-          FROM edges GROUP BY 1, 2),
-tt AS (SELECT src, CAST(sum(c) AS BIGINT) AS n FROM trans GROUP BY 1),
-pp AS (SELECT t.src, t.dst,
-         CAST((t.c * 1000000) // x.n AS BIGINT) AS p
-       FROM trans t JOIN tt x ON t.src = x.src),
-sset AS (SELECT DISTINCT s FROM (SELECT src AS s FROM pp
-         UNION ALL SELECT dst AS s FROM pp) q
-         WHERE s NOT IN ('purchase', 'NULL')),
-idx AS (SELECT s, CAST(row_number() OVER (ORDER BY s) AS BIGINT) AS si
-        FROM sset),
-dense AS (SELECT i.si AS si, jx.si AS ti, coalesce(max(pp.p), 0) AS p
-          FROM idx i CROSS JOIN idx jx
-          LEFT JOIN pp ON pp.src = i.s AND pp.dst = jx.s
-          GROUP BY 1, 2),
-prow AS (SELECT si, list(p ORDER BY ti) AS pr FROM dense GROUP BY si),
-pmat AS (SELECT list(pr ORDER BY si) AS P FROM prow),
-pcv AS (SELECT list(coalesce(c.p, 0) ORDER BY i.si) AS pc
-        FROM idx i LEFT JOIN pp c
-          ON c.src = i.s AND c.dst = 'purchase'),
-removals AS (SELECT CAST(0 AS BIGINT) AS r
-             UNION ALL SELECT si FROM idx WHERE s <> 'START'),
-rec AS (
-  SELECT 0 AS k, r,
-    list_transform(range(1, len(pc) + 1),
-                   x -> CAST(0 AS BIGINT)) AS a, P, pc
-  FROM removals, pmat, pcv
-  UNION ALL
-  SELECT k + 1, r,
-    list_transform(range(1, len(a) + 1), si ->
-      CAST(CASE WHEN si = r THEN 0
-           ELSE pc[si] + list_sum(
-             list_transform(range(1, len(a) + 1), ti ->
-               CASE WHEN ti = r THEN CAST(0 AS BIGINT)
-                    ELSE P[si][ti] * a[ti] END)) // 1000000
-      END AS BIGINT)), P, pc
-  FROM rec WHERE k < {int(n_iters)}),
-stix AS (SELECT si AS s0 FROM idx WHERE s = 'START'),
-fin AS (SELECT r, a[s0] AS a FROM rec, stix
-        WHERE k = {int(n_iters)}),
-base AS (SELECT a AS pf FROM fin WHERE r = 0),
-remo AS (SELECT i.s AS channel, b.pf, f.a AS prem,
-           greatest(b.pf - f.a, 0) AS rm
-         FROM fin f JOIN idx i ON i.si = f.r, base b
-         WHERE f.r <> 0),
-tot AS (SELECT CAST(sum(rm) AS BIGINT) AS tr FROM remo)
-SELECT r.channel, r.pf AS p_full_ppm, r.prem AS p_removed_ppm,
-  r.rm AS removal_ppm,
-  CASE WHEN t.tr > 0 THEN CAST((r.rm * 1000000) // t.tr AS BIGINT)
-  END AS share_ppm
-FROM remo r, tot t
-"""
-
-
-def _geohash_oracle() -> str:
-    from eventrelationextractor_spark.ops import layout as _layout
-    gh = _layout.geohash_sql(
-        "((doc_id * 7919) % 180000) - 90000",
-        "((doc_id * 104729) % 360000) - 180000", chars=5)
-    return f"""
-WITH g AS (SELECT doc_id, {gh} AS gh FROM documents)
-SELECT substr(gh, 1, 3) AS prefix,
-  CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(count(DISTINCT gh) AS BIGINT) AS n_cells,
-  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-FROM g GROUP BY 1
-"""
-
-
-_OLS_ORACLE = """
-WITH d AS (SELECT CAST(floor(value * 100) AS BIGINT) AS y,
-             CAST(hour(ts) AS BIGINT) AS x1,
-             CAST(date_diff('day', DATE '1970-01-01',
-                            CAST(ts AS DATE)) % 7 AS BIGINT) AS x2
-           FROM events),
-a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
-        CAST(sum(y) AS BIGINT) AS sy,
-        CAST(sum(x1 * x1) AS BIGINT) AS s11,
-        CAST(sum(x2 * x2) AS BIGINT) AS s22,
-        CAST(sum(x1 * x2) AS BIGINT) AS s12,
-        CAST(sum(x1 * y) AS BIGINT) AS s1y,
-        CAST(sum(x2 * y) AS BIGINT) AS s2y
-      FROM d),
-m AS (SELECT n,
-        n * s11 - s1 * s1 AS m11, n * s22 - s2 * s2 AS m22,
-        n * s12 - s1 * s2 AS m12,
-        n * s1y - s1 * sy AS v1, n * s2y - s2 * sy AS v2
-      FROM a),
-dd AS (SELECT m.*, CAST(m11 AS DOUBLE) * CAST(m22 AS DOUBLE)
-         - CAST(m12 AS DOUBLE) * CAST(m12 AS DOUBLE) AS det FROM m)
-SELECT n, m11, m22, m12, v1, v2,
-  CASE WHEN det = 0.0 THEN CAST(NULL AS BIGINT) ELSE
-    CAST(floor((CAST(m22 AS DOUBLE) * CAST(v1 AS DOUBLE)
-      - CAST(m12 AS DOUBLE) * CAST(v2 AS DOUBLE)) / det
-      * 1000000.0) AS BIGINT) END AS b1_ppm,
-  CASE WHEN det = 0.0 THEN CAST(NULL AS BIGINT) ELSE
-    CAST(floor((CAST(m11 AS DOUBLE) * CAST(v2 AS DOUBLE)
-      - CAST(m12 AS DOUBLE) * CAST(v1 AS DOUBLE)) / det
-      * 1000000.0) AS BIGINT) END AS b2_ppm
-FROM dd
-"""
-
-
-_DTW_ORACLE = """
-WITH RECURSIVE
-base AS (SELECT user_id AS id,
-           CAST(floor(value * 100) AS BIGINT) % 1000 AS v,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS p
-         FROM events),
-seqs AS (SELECT id, list(v ORDER BY p) AS seq FROM base WHERE p <= 16
-         GROUP BY id HAVING count(*) = 16),
-pr AS (SELECT s1.id AS id1, s2.id AS id2, s1.seq AS a, s2.seq AS b
-       FROM seqs s1 JOIN seqs s2 ON s2.id = s1.id + 1
-       WHERE s1.id % 2 = 0),
-dp AS (
-  SELECT 0 AS k, id1, id2, a, b,
-    CAST(NULL AS BIGINT[]) AS prev2,
-    list_transform(range(0, len(b)), j ->
-      CASE WHEN j = 0 THEN CAST(abs(a[1] - b[1]) AS BIGINT)
-           ELSE CAST(1099511627776 AS BIGINT) END) AS prev
-  FROM pr
-  UNION ALL
-  SELECT k + 1, id1, id2, a, b, prev,
-    list_transform(range(0, len(b)), j ->
-      CASE WHEN (k + 1 - j) < 0 OR (k + 1 - j) >= len(a)
-             OR abs((k + 1 - j) - j) > 4
-           THEN CAST(1099511627776 AS BIGINT)
-           ELSE CAST(abs(a[k + 2 - j] - b[j + 1]) AS BIGINT)
-             + least(
-                 CASE WHEN j <= k THEN prev[j + 1]
-                      ELSE CAST(1099511627776 AS BIGINT) END,
-                 CASE WHEN j >= 1 THEN prev[j]
-                      ELSE CAST(1099511627776 AS BIGINT) END,
-                 CASE WHEN j >= 1 AND k >= 1 THEN prev2[j]
-                      ELSE CAST(1099511627776 AS BIGINT) END)
-      END)
-  FROM dp WHERE k < len(a) + len(b) - 2)
-SELECT id1, id2, CAST(len(a) AS BIGINT) AS n1,
-  CAST(len(b) AS BIGINT) AS n2,
-  CASE WHEN prev[len(b)] >= 1099511627776 THEN NULL
-       ELSE prev[len(b)] END AS dtw
-FROM dp WHERE k = len(a) + len(b) - 2
-"""
-
-
-_INTERVAL_COVERAGE_ORACLE = """
-WITH iv AS (SELECT user_id,
-              epoch_us(ts) // 1000000 AS s,
-              epoch_us(ts) // 1000000
-                + (CAST(floor(value * 100) AS BIGINT) % 600 + 30) AS e
-            FROM events),
-x AS (SELECT user_id, s, e,
-        max(e) OVER (PARTITION BY user_id ORDER BY s, e
-                     ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND 1 PRECEDING) AS pm
-      FROM iv)
-SELECT user_id AS key, CAST(count(*) AS BIGINT) AS n_intervals,
-  CAST(sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_islands,
-  CAST(sum(greatest(0, e - greatest(s, coalesce(pm, s))))
-       AS BIGINT) AS union_len
-FROM x GROUP BY 1
-"""
-
-
-def _trigram_oracle(literal: str) -> str:
-    """Candidate set as AND-of-substring-containment per query
-    trigram — equivalent to the posting intersection (a trigram is
-    in the posting for doc d iff it occurs in d's text) without the
-    explode, which is exactly why it is a trustworthy independent
-    oracle for the index path."""
-    grams = sorted({literal[i:i + 3] for i in range(len(literal) - 2)})
-    conds = " AND ".join(
-        f"position('{g}' IN text) > 0" for g in grams)
-    return f"""
-SELECT doc_id, position('{literal}' IN text) > 0 AS verified
-FROM documents WHERE {conds}
-"""
-
-
-def _equalize_oracle() -> str:
-    base = "(x * 3 + y * 7 + doc_id)"
-    gray = (f"(({base}) % 256 + ({base} + 11) % 256"
-            f" + ({base} + 22) % 256) // 3")
-    return f"""
-WITH dims AS (SELECT doc_id, 8 + (doc_id % 5) * 4 AS h,
-                     8 + ((doc_id // 5) % 5) * 4 AS w
-              FROM documents),
-px AS (SELECT doc_id, {gray} AS gray
-       FROM dims, range(24) yy(y), range(24) xx(x)
-       WHERE y < h AND x < w),
-hist AS (SELECT doc_id, gray, CAST(count(*) AS BIGINT) AS c
-         FROM px GROUP BY 1, 2),
-cum AS (SELECT doc_id, gray, c,
-          CAST(sum(c) OVER (PARTITION BY doc_id
-                            ORDER BY gray) AS BIGINT) AS cn,
-          CAST(sum(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n
-        FROM hist),
-cm AS (SELECT doc_id, min(cn) AS cdf_min, max(n) AS n
-       FROM cum GROUP BY 1)
-SELECT c0.doc_id AS media_id, m.n AS n_px, m.cdf_min,
-  CAST(sum(c0.c * (((c0.cn - m.cdf_min) * 255)
-       // (m.n - m.cdf_min))) AS BIGINT) AS sum_eq,
-  CAST(sum(CASE WHEN ((c0.cn - m.cdf_min) * 255)
-                     // (m.n - m.cdf_min) < 128
-           THEN c0.c ELSE 0 END) AS BIGINT) AS n_below128
-FROM cum c0 JOIN cm m ON c0.doc_id = m.doc_id
-GROUP BY 1, 2, 3
-"""
-
-
-def _etld1_oracle() -> str:
-    vals = ", ".join(f"('{r}', {r.count('.') + 1})"
-                     for r in sorted(set(urls.PSL_SUBSET)))
-    arr = "[" + ", ".join(f"'{h}'" for h in ETLD_HOSTS) + "]"
-    return f"""
-WITH hosts AS (
-  SELECT doc_id,
-    ({arr})[CAST(doc_id % {len(ETLD_HOSTS)} AS INT) + 1] AS host
-  FROM documents),
-hu AS (SELECT DISTINCT host FROM hosts),
-lab AS (SELECT host, string_split(host, '.') AS ls,
-          len(string_split(host, '.')) AS n FROM hu),
-rules(suffix, slabels) AS (VALUES {vals}),
-cand AS (SELECT l.host, l.ls, l.n, rj.j
-         FROM lab l,
-           LATERAL unnest(range(1, least(l.n, 4) + 1)) AS rj(j)),
-mt AS (SELECT c.host, max(c.j) AS j
-       FROM cand c JOIN rules r
-         ON array_to_string(c.ls[c.n - c.j + 1 :], '.') = r.suffix
-       GROUP BY 1),
-fin AS (SELECT l.host, coalesce(m.j, 1) AS j, l.ls, l.n
-        FROM lab l LEFT JOIN mt m ON l.host = m.host),
-reg AS (SELECT host,
-          array_to_string(ls[n - j + 1 :], '.') AS suffix,
-          CASE WHEN n >= j + 1
-               THEN array_to_string(ls[n - j :], '.') END
-            AS registrable
-        FROM fin)
-SELECT r.suffix, r.registrable, CAST(count(*) AS BIGINT) AS n_docs,
-  CAST(count(DISTINCT h.host) AS BIGINT) AS n_hosts
-FROM hosts h JOIN reg r ON h.host = r.host
-GROUP BY 1, 2
-"""
-
-
-_CDC_ORACLE = """
-WITH pos AS (
-  SELECT d.doc_id, CAST(rp.p AS BIGINT) AS p
-  FROM documents d,
-       LATERAL unnest(range(2, greatest(length(d.text) - 6, 2)))
-         AS rp(p)
-  WHERE CAST(('0x' || substr(md5(substr(d.text, CAST(rp.p AS INT),
-        8)), 1, 8)) AS BIGINT) % 64 = 0),
-cuts AS (
-  SELECT doc_id, p FROM pos
-  UNION ALL SELECT doc_id, CAST(1 AS BIGINT) FROM documents
-  UNION ALL SELECT doc_id, CAST(length(text) + 1 AS BIGINT)
-    FROM documents),
-ch0 AS (
-  SELECT doc_id, p,
-    lead(p) OVER (PARTITION BY doc_id ORDER BY p) AS np
-  FROM cuts),
-ch AS (
-  SELECT c0.doc_id,
-    substr(d.text, CAST(c0.p AS INT), CAST(c0.np - c0.p AS INT))
-      AS chunk
-  FROM ch0 c0 JOIN documents d ON c0.doc_id = d.doc_id
-  WHERE c0.np IS NOT NULL AND c0.np > c0.p),
-per AS (SELECT md5(chunk) AS h, CAST(count(*) AS BIGINT) AS c,
-          CAST(min(length(chunk)) AS BIGINT) AS l
-        FROM ch GROUP BY 1)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
-  CAST(sum(c) AS BIGINT) AS n_chunks,
-  CAST(count(*) AS BIGINT) AS n_unique,
-  CAST(sum(c * l) AS BIGINT) AS total_bytes,
-  CAST(sum(l) AS BIGINT) AS unique_bytes
-FROM per
-"""
-
 
 def oracle_sql() -> dict[str, str]:
     fixture_temporal = []
@@ -16321,36 +6578,8 @@ def oracle_sql() -> dict[str, str]:
             "sha256(text) AS sha FROM documents"),
         "kg_entity_linking": _linking_oracle(),
         "kg_canonical_components": _CANONICAL_ORACLE,
-        # kg_consistent_triples: omitted - incremental point-algebra closure
-        # is not SQL-expressible; rows-only check + unit tests.
-        "doc_fingerprints": _FP_ORACLE,
-        "dedup_exact": _DEDUP_EXACT_ORACLE,
         "dedup_minhash_jaccard": _MINHASH_ORACLE,
-        "dedup_simhash": _SIMHASH_ORACLE,
-        "dedup_simhash_pairs": _SIMHASH_PAIRS_ORACLE,
-        "dedup_keep": f"""
-WITH {_AUG},
-keyed AS (SELECT doc_id, md5({_NORM}) AS fingerprint FROM aug)
-SELECT min(doc_id) AS doc_id, fingerprint FROM keyed GROUP BY fingerprint
-""",
         "dedup_resolution": _DEDUP_RESOLUTION_ORACLE,
-        "decontamination": _DECONTAM_ORACLE,
-        "lang_id": _lang_oracle(),
-        "quality_scores": _QUALITY_ORACLE,
-        "repetition_stats": _REPETITION_ORACLE,
-        "lm_quality": _LM_QUALITY_ORACLE,
-        "lm_bigram": _LM_BIGRAM_ORACLE,
-        "bloom_prefilter": _BLOOM_ORACLE,
-        "pii_redaction": _PII_ORACLE,
-        "token_counts": _TOKEN_ORACLE,
-        "ann_topk": _ANN_ORACLE,
-        "ann_lsh_topk": _ANN_LSH_ORACLE,
-        "ann_ivf_topk": _ivf_oracle(),
-        "ann_ivf_topk_c256": _ivf_oracle(n_cells=256),
-        "dedup_embedding_cosine": _EMB_NEARDUP_ORACLE,
-        "events_windowed": _EVENTS_WINDOW_ORACLE,
-        "events_sessions": _SESSIONS_ORACLE,
-        "media_features": _MEDIA_ORACLE,
         "kg_eval_metrics": _EVAL_ORACLE,
         "kg_consistent_triples": _CONSISTENT_ORACLE,
         "kg_awareness": _AWARENESS_ORACLE,
@@ -16358,22 +6587,12 @@ SELECT min(doc_id) AS doc_id, fingerprint FROM keyed GROUP BY fingerprint
         "tpch_promo_revenue": _Q14_ORACLE,
         "tpch_top_supplier": _Q15_ORACLE,
         "tpch_large_orders": _Q18_ORACLE,
-        "scd2_history": _SCD2_ORACLE,
-        "allen_relations": _ALLEN_ORACLE,
         "hdr_quantiles": _HDR_ORACLE,
         "hdr_group_quantiles": _HDR_GROUP_ORACLE,
         "ivm_refresh": _IVM_ORACLE,
-        "ldiversity_suppress": _LDIV_ORACLE,
         "events_stream_enrich": _ENRICH_ORACLE,
-        "rm3_expansion": _RM3_ORACLE,
         "optimal_segmentation": _OPTSEG_ORACLE,
-        "profile_drift": _DRIFT_ORACLE,
         "kg_cc_incremental": _CC_INC_ORACLE,
-        "link_modularity": _MODULARITY_ORACLE,
-        "mixture_apportion": _APPORTION_ORACLE,
-        "rm3_search": _RM3_SEARCH_ORACLE,
-        "winsorize_lengths": _WINSORIZE_ORACLE,
-        "spoof_hosts": _SPOOF_ORACLE,
         "record_linkage": _LINKAGE_ORACLE,
         "bm25_map_mrr": _BM25_MAP_ORACLE,
         "events_cusum": _CUSUM_ORACLE,
@@ -16399,133 +6618,22 @@ SELECT min(doc_id) AS doc_id, fingerprint FROM keyed GROUP BY fingerprint
         "events_linfit": _LINFIT_ORACLE,
         "psi_drift": _PSI_ORACLE,
         "phrase_search": _PHRASE_ORACLE,
-        "holt_forecast": _HOLT_ORACLE,
-        "link_hyperball": _HYPERBALL_ORACLE,
-        "events_attribution": _ATTRIBUTION_ORACLE,
-        "textrank_keywords": _TEXTRANK_ORACLE,
-        "zone_map_prune": _ZONE_MAP_ORACLE,
-        "als_rank1": _ALS_ORACLE,
-        "url_templates": _URL_TEMPLATES_ORACLE,
         "vocab_growth": _VOCAB_GROWTH_ORACLE,
         "hilbert_layout": _hilbert_oracle(),
         "tpch_idle_customers": _Q22_ORACLE,
-        "compaction_plan": _COMPACTION_ORACLE,
-        "skew_profile": _SKEW_ORACLE,
-        "kanon_suppress": _KANON_ORACLE,
-        "cdx_fetchlist": _CDX_ORACLE,
-        "robots_gate_full": _ROBOTS_FULL_ORACLE,
-        "url_parse": _URL_PARSE_ORACLE,
-        "domain_stats": _DOMAIN_STATS_ORACLE,
-        "stratified_sample": _stratified_oracle(),
-        "split_assignment": """
-WITH hashed AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 8))
-         ::UBIGINT % 10000 AS BIGINT) AS h
-  FROM documents)
-SELECT doc_id,
-  CASE WHEN h < 1000 THEN 'test' WHEN h < 9000 THEN 'train'
-       WHEN h < 10000 THEN 'val' END AS split
-FROM hashed
-""",
         "kg_ee_probabilities": _EE_PROB_ORACLE,
-        "lang_id_trigram": _lang_trigram_oracle(),
-        "bm25_search": _BM25_ORACLE,
         "embedding_kmeans": _kmeans_oracle(),
-        "media_decode_stats": _MEDIA_DECODE_ORACLE,
         "sequence_packing": _PACKING_ORACLE,
-        "vocab_topk": _VOCAB_ORACLE,
-        "corpus_curation": _curation_oracle(),
-        "link_pagerank": _pagerank_oracle(),
-        "link_triangles": _TRIANGLES_ORACLE,
-        "anchor_text_rollup": _ANCHOR_ORACLE,
-        "ccnet_buckets": _CCNET_ORACLE,
-        "nfc_normalize": _NFC_ORACLE,
-        "script_profile": _script_oracle(),
-        "cms_wordcounts": _cms_oracle(),
         "tfidf_cosine_pairs": _TFIDF_COS_ORACLE,
-        "link_communities": _lpa_oracle(),
-        "zorder_layout": _zorder_oracle(),
-        "tokenizer_fertility": _bpe_oracle(8, "fertility"),
-        "html_links": _HTML_LINKS_ORACLE,
-        "html_metadata": _html_metadata_oracle(),
-        "sample_k_per_source": _SAMPLE_K_ORACLE,
-        "cdc_apply": _CDC_APPLY_ORACLE,
-        "hll_user_windows": _HLL_WINDOWS_ORACLE,
-        "lsh_band_hits": _LSH_HITS_ORACLE,
-        "dup_spans": _DUP_SPANS_ORACLE,
-        "exactsubstr_dedup": _exactsubstr_oracle(),
-        "frontier_expansion": _frontier_expansion_oracle(),
-        "crawl_plan": _crawl_plan_oracle(),
-        "frontier_schedule": _FRONTIER_ORACLE_TMPL.format(web=_WEB_URLS),
-        "robots_gate": _ROBOTS_ORACLE_TMPL.format(web=_WEB_URLS),
-        "mixing_plan": _MIXPLAN_ORACLE,
         "quality_classifier": _QUALITY_CLF_ORACLE,
-        "line_boilerplate": _LINE_BOILERPLATE_ORACLE,
-        "line_dedup_first": _LINE_DEDUP_FIRST_ORACLE,
-        "mixture_rates": _MIXTURE_RATES_ORACLE,
-        "mixture_sample": _MIXTURE_SAMPLE_ORACLE,
-        "bpe_merges": _bpe_oracle(8, "merges"),
-        "bpe_vocab": _bpe_oracle(8, "vocab"),
-        "bpe_encode": _bpe_oracle(8, "encode"),
-        "hll_vocab": _HLL_ORACLE,
-        "kmv_overlap": _KMV_ORACLE,
-        "semdedup_prune": _semdedup_oracle(),
-        "dsir_selection": _DSIR_ORACLE,
-        "url_canonical_dedup": _URLCANON_ORACLE,
-        "snapshot_diff": _SNAPDIFF_ORACLE,
-        "doc_chunking": _CHUNK_ORACLE,
-        "winnowing_fingerprints": _WINNOW_ORACLE,
-        "domain_topk_docs": _DOMAIN_TOPK_ORACLE,
-        "ngram_dup_stats": _NGRAM_DUP_ORACLE,
-        "pmi_collocations": _PMI_ORACLE,
-        "length_percentiles": _PCT_ORACLE,
-        "source_lang_rollup": _ROLLUP_ORACLE,
         "events_interval_join": _INTERVAL_ORACLE,
-        "events_asof": _ASOF_ORACLE,
-        "events_asof_forward": _ASOF_FWD_ORACLE,
-        "dedup_levenshtein": _LEVENSHTEIN_ORACLE,
-        "shingle_containment": _CONTAINMENT_ORACLE,
-        "embedding_quantize": _QUANTIZE_ORACLE,
-        "host_cocitation": _COCITATION_ORACLE,
-        "link_hits": _hits_oracle(),
-        "domain_reputation": _DOMAIN_REP_ORACLE,
-        "embedding_jl": _jl_oracle(),
-        "url_spam_features": _URLSPAM_ORACLE,
-        "training_order": _TRAINING_ORDER_ORACLE,
         "ann_ivfpq": _ivfpq_oracle(),
-        "ann_ivfpq_recall": _ivfpq_recall_oracle(),
-        "events_anomalies": _ANOMALY_ORACLE,
-        "link_ppr": _ppr_oracle(),
-        "sentence_stats": _SENTENCE_ORACLE,
-        "link_seed_distances": _SEED_DIST_ORACLE,
-        "link_walks": _walks_oracle(),
-        "bm25_ndcg": _BM25_NDCG_ORACLE,
-        "badwords_filter": _BADWORDS_ORACLE,
-        "crawl_schedule_delays": _CRAWL_DELAYS_ORACLE,
-        "weighted_sample_k": _WSAMPLE_ORACLE,
         "events_funnel": _FUNNEL_ORACLE,
-        "link_adamic_adar": _ADAMIC_ADAR_ORACLE,
-        "char_entropy": _CHAR_ENTROPY_ORACLE,
         "tpch_pricing_summary": _TPCH_Q1_ORACLE,
         "tpch_shipping_priority": _TPCH_Q3_ORACLE,
         "tpch_local_volume": _TPCH_Q5_ORACLE,
         "tpch_part_margin": _TPCH_Q9_ORACLE,
-        "events_retention": _RETENTION_ORACLE,
         "tpch_order_priority": _TPCH_Q4_ORACLE,
-        "link_kcore": _kcore_oracle(),
-        "neardup_recall": _neardup_recall_oracle(),
-        "ann_lsh_multiprobe": _ANN_MULTIPROBE_ORACLE,
-        "hll_shard_merge": _HLL_MERGE_ORACLE,
-        "host_lang_profile": _host_lang_profile_oracle(),
-        "hashed_doc_vectors": _HASHED_VEC_ORACLE,
-        "events_props_extract": _PROPS_ORACLE,
-        "table_profile": _table_profile_oracle(),
-        "web_curation": _WEB_CURATION_ORACLE,
-        "graph_stats": _GRAPH_STATS_ORACLE,
-        "winnowing_pairs": _WINNOW_PAIRS_ORACLE,
-        "embedding_class_stats": _CLASS_STATS_ORACLE,
-        "sitemap_seeds": _SITEMAP_ORACLE,
         "tpch_returned_items": _TPCH_Q10_ORACLE,
         "tpch_revenue_delta": _TPCH_Q6_ORACLE,
         "tpch_min_cost_supplier": _TPCH_Q2_ORACLE,
@@ -16538,9 +6646,6 @@ FROM hashed
         "tpch_disjunctive_revenue": _TPCH_Q19_ORACLE,
         "tpch_excess_suppliers": _TPCH_Q20_ORACLE,
         "tpch_waiting_suppliers": _TPCH_Q21_ORACLE,
-        "hybrid_search_rrf": _HYBRID_RRF_ORACLE,
-        "mmr_diversify": _mmr_oracle(),
-        "contrastive_mining": _CONTRASTIVE_ORACLE,
         "proximity_minspan": _PROXIMITY_MINSPAN_ORACLE,
         "pareto_docs": _PARETO_DOCS_ORACLE,
         "link_shortest_paths": _LINK_SHORTEST_PATHS_ORACLE,
@@ -16552,27 +6657,9 @@ FROM hashed
         "zipf_fit": _ZIPF_ORACLE,
         "weighted_median": _WEIGHTED_MEDIAN_ORACLE,
         "link_clustering": _LINK_CLUSTERING_ORACLE,
-        "theil_sen": _THEIL_SEN_ORACLE,
-        "kendall_tau": _KENDALL_TAU_ORACLE,
-        "flesch_readability": _FLESCH_ORACLE,
-        "novelty_scores": _NOVELTY_ORACLE,
-        "extractive_summary": _EXTRACTIVE_ORACLE,
-        "events_breakpoint": _BREAKPOINT_ORACLE,
-        "crawl_waterfill": _WATERFILL_ORACLE,
-        "source_divergence": _SOURCE_JSD_ORACLE,
-        "ql_search": _QL_SEARCH_ORACLE,
         "isotonic_calibration": _ISOTONIC_ORACLE,
         "rake_keyphrases": _RAKE_ORACLE,
         "link_rings": _LINK_RINGS_ORACLE,
-        "kanon_generalize": _KANON_GENERALIZE_ORACLE,
-        "embedding_kcenter": _kcenter_oracle(6),
-        "frequent_triples": _FREQ_TRIPLES_ORACLE,
-        "dp_noisy_counts": _DP_NOISY_ORACLE,
-        "constraint_audit": _CONSTRAINT_AUDIT_ORACLE,
-        "join_size_estimate": _JOIN_SIZE_EST_ORACLE,
-        "stopword_discovery": _STOPWORD_ORACLE,
-        "bm25f_search": _BM25F_ORACLE,
-        "mutual_nn_pairs": _MUTUAL_NN_ORACLE,
         "bucketed_batching": _BUCKET_BATCH_ORACLE,
         "posting_bytes": _POSTING_BYTES_ORACLE,
         "query_completion": _COMPLETION_ORACLE,
@@ -16585,12 +6672,6 @@ FROM hashed
         "ltr_features": _LTR_ORACLE,
         "trending_terms": _TRENDING_ORACLE,
         "gazetteer_spans": _gazetteer_oracle(GAZETTEER_PHRASES),
-        "split_leakage": _SPLIT_LEAK_ORACLE,
-        "katz_centrality": _katz_oracle(),
-        "layout_prune_ab": _prune_ab_oracle(PRUNE_WORKLOAD),
-        "cluster_labels": _CLUSTER_LABELS_ORACLE,
-        "landmark_distances": _LANDMARK_ORACLE,
-        "burrows_delta": _BURROWS_ORACLE,
         "llr_collocations": _LLR_ORACLE,
         "mattr_diversity": _MATTR_ORACLE,
         "spearman_rho": _SPEARMAN_ORACLE,
@@ -16605,31 +6686,18 @@ FROM hashed
         "woe_iv": _WOE_ORACLE,
         "target_encode": _TARGET_ENCODE_ORACLE,
         "skipgram_ppmi": _SKIPGRAM_ORACLE,
-        "link_coloring": _COLORING_ORACLE,
         "fd_violations": _fd_oracle([
             ("doc_to_source", "doc_id", "source"),
             ("len_to_lang", "n_chars", "lang"),
             ("source_to_lang", "source", "lang")]),
         "matryoshka_eval": _matryoshka_oracle(),
-        "bootstrap_ci": _bootstrap_oracle(),
-        "cuped_ab": _CUPED_ORACLE,
         "texttiling": _TEXTTILE_ORACLE,
         "isolation_forest": _iforest_oracle(),
-        "temporal_reach": _temporal_reach_oracle(),
-        "impute_median": _IMPUTE_ORACLE,
-        "fd_repair": _FD_REPAIR_ORACLE,
-        "cat_columns": _CAT_COLS_ORACLE,
-        "cat_roundtrip": _CAT_RT_ORACLE,
-        "event_seq_pairs": _SEQ_PAIRS_ORACLE,
-        "soundex_blocking": _SOUNDEX_ORACLE,
         "jw_linkage": _JW_LINKAGE_ORACLE,
-        "mann_whitney": _MANN_WHITNEY_ORACLE,
-        "greedy_matching": _MATCHING_ORACLE,
         "dedup_multitier": _MULTITIER_ORACLE.replace(
             "FROM documents",
             "FROM (SELECT * FROM documents WHERE doc_id % 5 = 0) "
             "documents"),
-        "media_phash": _MEDIA_PHASH_ORACLE,
         "media_phash_pairs": _MEDIA_PHASH_PAIRS_ORACLE,
         # bcubed runs resolution on the doc_id%5 stratum: rewrite every
         # base-table read in the embedded resolution oracle to the
@@ -16639,327 +6707,19 @@ FROM hashed
                 "FROM documents",
                 "FROM (SELECT * FROM documents WHERE doc_id % 5 = 0) "
                 "documents")),
-        "events_nelson_aalen": _NELSON_AALEN_ORACLE,
-        "events_logrank": _LOGRANK_ORACLE,
-        "sorted_neighborhood": _SORTED_NEIGHBORHOOD_ORACLE,
-        "conformal_intervals": _CONFORMAL_ORACLE,
-        "ppjoin_pairs": _PPJOIN_ORACLE,
-        "perm_fdr": _PERM_FDR_ORACLE,
-        "ipf_raking": _IPF_ORACLE,
-        "user_event_topk": _USER_TOPK_ORACLE,
-        "ipw_ate": _IPW_ATE_ORACLE,
-        "did_estimate": _DID_ORACLE,
-        "eb_shrinkage": _EB_SHRINKAGE_ORACLE,
-        "quantile_normalize": _QN_ORACLE,
-        "orc_roundtrip": _ORC_ROUNDTRIP_ORACLE,
-        "suffix_array": _SUFFIX_ARRAY_ORACLE,
-        "butterfly_count": _BUTTERFLY_ORACLE,
-        "link_betweenness": _betweenness_oracle(),
-        "dbscan_clusters": _DBSCAN_ORACLE,
-        "stable_assignment": _stable_matching_oracle(),
-        "boosted_stumps": _boosted_stumps_oracle(),
-        "rouge_scores": _ROUGE2_ORACLE,
-        "csv_roundtrip": """
-SELECT doc_id, text, lang, source, n_chars,
-       'v,"q" ' || lang || chr(10) || 'x' AS tricky
-FROM documents""",
-        "hmm_viterbi": hmm.viterbi_oracle_sql(
-            "documents", "text", _HMM_TRANS, _HMM_EMIT, _HMM_START),
-        "pca_projection": cluster.pca_oracle_sql("embeddings", d=64),
-        "redirect_resolution": _REDIRECT_ORACLE,
-        "media_otsu": _otsu_oracle(),
-        "dhondt_allocation": _DHONDT_ORACLE,
-        "anova_f": _ANOVA_ORACLE,
-        "markov_attribution": _markov_oracle(),
-        "geohash_rollup": _geohash_oracle(),
-        "ols_value_model": _OLS_ORACLE,
-        "dtw_user_series": _DTW_ORACLE,
-        "interval_coverage": _INTERVAL_COVERAGE_ORACLE,
-        "trigram_search": _trigram_oracle(TRIGRAM_LITERAL),
-        "media_equalize": _equalize_oracle(),
-        "etld1_rollup": _etld1_oracle(),
-        "cdc_chunking": _CDC_ORACLE,
-        "dl_linkage": _DL_LINKAGE_ORACLE,
-        "ann_hamming": _HAMMING_TOPK_ORACLE,
         "knn_shapley": _KNN_SHAPLEY_ORACLE,
-        "hash_ring": _HASH_RING_ORACLE,
         "reuse_distance": _REUSE_DISTANCE_ORACLE,
         "wl_colors": _WL_COLORS_ORACLE,
         "interleave_eval": _INTERLEAVE_ORACLE,
-        "rbo_rankers": _RBO_ORACLE,
-        "rich_club": _RICH_CLUB_ORACLE,
-        "bleu_eval": _bleu_oracle(),
-        "pps_sample": _PPS_SAMPLE_ORACLE,
-        "attack_robustness": _ATTACK_ROBUSTNESS_ORACLE,
         "haar_signature": _haar_oracle(),
-        "wilson_rank": _WILSON_ORACLE,
-        "bitemporal_asof": _BITEMPORAL_ORACLE,
-        "vacuum_plan": _VACUUM_ORACLE,
-        "oov_curve": _OOV_CURVE_ORACLE,
-        "bowtie_census": _BOWTIE_ORACLE,
-        "bh_fdr": _BH_FDR_ORACLE,
-        "huffman_dict": _HUFFMAN_ORACLE,
-        "shapley_r2": _SHAPLEY_R2_ORACLE,
-        "partition_pruning": _PARTITION_PRUNING_ORACLE,
         "rfm_segments": _RFM_ORACLE,
         "json_schema_infer": _JSON_INFER_ORACLE,
         "wordpiece_census": _WORDPIECE_ORACLE,
         "lz_complexity": _LZ_ORACLE,
-        "kruskal_wallis": _KRUSKAL_ORACLE,
-        "interval_scheduling": _INTERVAL_SCHED_ORACLE,
-        "geo_nearest_hub": _GEO_HUB_ORACLE,
-        "ransac_fit": _RANSAC_ORACLE,
-        "knapsack_mix": _KNAPSACK_ORACLE,
-        "ewma_smooth": _EWMA_ORACLE,
-        "smith_waterman": _SW_ORACLE,
-        "stupid_backoff": _BACKOFF_ORACLE,
-        "maxdiff_hist": _MAXDIFF_ORACLE,
         "shapley_attribution": _SHAPLEY_ATTR_ORACLE,
-        "ohlc_bars": _OHLC_ORACLE,
-        "spatial_grid_join": _SPATIAL_ORACLE,
-        "lis_streaks": _LIS_ORACLE,
-        "pass_at_k": _passk_oracle(),
-        "merkle_roots": _merkle_oracle(),
-        "rice_coding": _RICE_ORACLE,
-        "term_burstiness": _BURSTINESS_ORACLE,
-        "csv_sniff": _CSV_SNIFF_ORACLE,
-        "emd_drift": _EMD_ORACLE,
-        "learned_index": _LEARNED_IDX_ORACLE,
         "qte": _QTE_ORACLE,
-        "token_simpson": _SIMPSON_ORACLE,
-        "luhn_audit": _LUHN_ORACLE,
-        "cliffs_delta": _CLIFFS_ORACLE,
-        "ip_cidr_rollup": _CIDR_ORACLE,
-        "pk_discovery": _PK_ORACLE,
-        "max_concurrency": _MAXCONC_ORACLE,
-        "longest_streak": _STREAK_ORACLE,
-        "weighted_intervals": _WIS_ORACLE,
-        "set_cover": _SETCOVER_ORACLE,
     }
 
-
-_SETCOVER_ORACLE = """
-WITH RECURSIVE
-tk AS (SELECT DISTINCT doc_id AS d,
-         u.t || CAST(doc_id % 13 AS VARCHAR) AS t
-       FROM documents,
-            LATERAL unnest(string_split(text, ' ')) AS u(t)
-       WHERE doc_id % 20 = 0 AND u.t <> ''),
-dl AS (SELECT list(struct_pack(doc := d, terms := ts)
-                   ORDER BY d) AS docs
-       FROM (SELECT d, list(t ORDER BY t) AS ts
-             FROM tk GROUP BY d) z),
-st(r, covered, total, out_doc, out_gain) AS (
-  SELECT 0, []::VARCHAR[], CAST(0 AS BIGINT),
-         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-  FROM dl
-  UNION ALL
-  SELECT s.r + 1,
-         s.covered || list_filter(
-           list_filter(dl.docs, x -> x.doc = (s.pick).doc)[1].terms,
-           t -> NOT list_contains(s.covered, t)),
-         s.total + (s.pick).g,
-         (s.pick).doc, (s.pick).g
-  FROM (SELECT st.*,
-          list_max(list_transform(dl.docs, x -> struct_pack(
-            g := CAST(len(list_filter(x.terms,
-                   t -> NOT list_contains(st.covered, t)))
-                 AS BIGINT),
-            negd := -x.doc, doc := x.doc))) AS pick
-        FROM st, dl WHERE st.r < 8) s, dl
-  WHERE (s.pick).g > 0)
-SELECT r AS round, out_doc AS picked_doc, out_gain AS gain,
-       total AS covered_total
-FROM st WHERE r >= 1
-"""
-
-
-_WIS_ORACLE = """
-WITH RECURSIVE
-iv0 AS (SELECT user_id AS u, epoch_us(ts) // 1000000 AS s,
-          ((event_id % 7) + 1) * 60 AS d, event_id AS eid,
-          (event_id % 10) + 1 AS w
-        FROM events WHERE user_id % 10 = 0),
-iv AS (SELECT u, s, s + d AS e, w, eid,
-         row_number() OVER (PARTITION BY u
-                            ORDER BY s + d, s, eid) AS i
-       FROM iv0),
-p AS (SELECT a.u, a.i, a.w,
-        (SELECT count(*) FROM iv b
-         WHERE b.u = a.u AND b.i < a.i AND b.e <= a.s) AS pi
-      FROM iv a),
-meta AS (SELECT u, count(*) AS n FROM iv GROUP BY u),
-st(u, i, dp) AS (
-  SELECT u, 0, [CAST(0 AS BIGINT)] FROM meta
-  UNION ALL
-  SELECT s2.u, s2.i + 1,
-    list_append(s2.dp, greatest(s2.dp[s2.i + 1],
-                                s2.w + s2.dp[s2.pi + 1]))
-  FROM (SELECT st.u, st.i, st.dp, p.w, p.pi
-        FROM st JOIN p ON p.u = st.u AND p.i = st.i + 1) s2),
-fin AS (SELECT st.u, st.dp[m.n + 1] AS best FROM st
-        JOIN meta m ON st.u = m.u AND st.i = m.n)
-SELECT f.u AS user_id, CAST(m.n AS BIGINT) AS n_intervals,
-       CAST(f.best AS BIGINT) AS best_value
-FROM fin f JOIN meta m ON f.u = m.u
-"""
-
-
-_MAXCONC_ORACLE = """
-WITH iv AS (SELECT user_id AS u, epoch_us(ts) // 1000000 AS s,
-              ((event_id % 7) + 1) * 60 AS d FROM events),
-b AS (SELECT u, s AS t, 1 AS dd FROM iv
-      UNION ALL SELECT u, s + d, -1 FROM iv),
-r AS (SELECT u, t,
-        sum(dd) OVER (PARTITION BY u ORDER BY t, dd) AS run
-      FROM b),
-n AS (SELECT u, count(*) AS n_intervals FROM iv GROUP BY u),
-mx AS (SELECT u, max(struct_pack(run := run, negt := -t)) AS m
-       FROM r GROUP BY u)
-SELECT n.u AS user_id, CAST(n.n_intervals AS BIGINT) AS n_intervals,
-       CAST((mx.m).run AS BIGINT) AS max_overlap,
-       CAST(-(mx.m).negt AS BIGINT) AS at_s
-FROM n JOIN mx ON mx.u = n.u
-"""
-
-_STREAK_ORACLE = """
-WITH e AS (SELECT user_id AS u, event_type AS ty, ts,
-                  event_id AS eid FROM events),
-i AS (SELECT u, ty,
-        row_number() OVER (PARTITION BY u ORDER BY ts, eid)
-        - row_number() OVER (PARTITION BY u, ty ORDER BY ts, eid)
-          AS isl
-      FROM e),
-runs AS (SELECT u, ty, isl, count(*) AS len
-         FROM i GROUP BY u, ty, isl),
-best AS (SELECT u, sum(len) AS n_events,
-                max(struct_pack(len := len, t := ty)) AS m
-         FROM runs GROUP BY u)
-SELECT u AS user_id, CAST(n_events AS BIGINT) AS n_events,
-       (m).t AS best_type, CAST((m).len AS BIGINT) AS best_len
-FROM best
-"""
-
-
-_CIDR_ORACLE = """
-WITH b AS (SELECT
-    ((doc_id * 2654435761) % 4294967296) // 16777216 % 256 AS o1,
-    ((doc_id * 2654435761) % 4294967296) // 65536 % 256 AS o2,
-    ((doc_id * 2654435761) % 4294967296) // 256 % 256 AS o3
-  FROM documents)
-SELECT o1, o2, o3, count(*) AS n
-FROM b GROUP BY ROLLUP (o1, o2, o3)
-"""
-
-_PK_ORACLE = """
-WITH e AS (SELECT event_id, user_id, event_type,
-                  epoch_us(ts) AS ep FROM events)
-SELECT 'event_id' AS combo, count(*) AS n_rows,
-       count(DISTINCT CAST(event_id AS VARCHAR)) AS n_distinct,
-       count(*) = count(DISTINCT CAST(event_id AS VARCHAR)) AS is_key
-FROM e
-UNION ALL
-SELECT 'user_id:ts', count(*),
-       count(DISTINCT user_id || ':' || CAST(ep AS VARCHAR)),
-       count(*) = count(DISTINCT user_id || ':'
-                        || CAST(ep AS VARCHAR))
-FROM e
-UNION ALL
-SELECT 'user_id:event_type', count(*),
-       count(DISTINCT user_id || ':' || event_type),
-       count(*) = count(DISTINCT user_id || ':' || event_type)
-FROM e
-UNION ALL
-SELECT 'ts', count(*), count(DISTINCT CAST(ep AS VARCHAR)),
-       count(*) = count(DISTINCT CAST(ep AS VARCHAR))
-FROM e
-"""
-
-
-_SIMPSON_ORACLE = """
-WITH tk AS (SELECT doc_id % 20 AS g, u.w
-            FROM documents,
-                 LATERAL unnest(string_split(text, ' ')) AS u(w)
-            WHERE u.w <> ''),
-per AS (SELECT g, w, count(*) AS c FROM tk GROUP BY g, w),
-agg AS (SELECT g, sum(c) AS n_tokens, count(*) AS n_types,
-               sum(c * (c - 1)) AS rep
-        FROM per GROUP BY g)
-SELECT g, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_types AS BIGINT) AS n_types,
-       CAST(CASE WHEN n_tokens > 1 THEN 1000000
-            - (1000000 * rep) // (n_tokens * (n_tokens - 1))
-            ELSE 0 END AS BIGINT) AS simpson_ppm
-FROM agg
-"""
-
-_LUHN_ORACLE = """
-WITH d AS (SELECT lpad(CAST((doc_id * 2654435761) % 1000000000000
-             AS VARCHAR), 12, '0') AS num
-           FROM documents),
-v AS (SELECT num,
-        length(num) > 0 AND regexp_matches(num, '^[0-9]+$')
-        AND list_sum(list_transform(range(1, length(num) + 1),
-          i -> CASE WHEN i % 2 = 1
-               THEN ascii(substring(num, length(num) - i + 1, 1)) - 48
-               ELSE CASE WHEN 2 * (ascii(substring(num,
-                    length(num) - i + 1, 1)) - 48) > 9
-               THEN 2 * (ascii(substring(num, length(num) - i + 1, 1))
-                    - 48) - 9
-               ELSE 2 * (ascii(substring(num, length(num) - i + 1, 1))
-                    - 48) END END)) % 10 = 0 AS is_valid
-      FROM d)
-SELECT is_valid, count(*) AS n, min(num) AS min_num,
-       max(num) AS max_num
-FROM v GROUP BY is_valid
-"""
-
-_CLIFFS_ORACLE = """
-WITH b AS (SELECT CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS arm,
-                  CAST(n_chars AS BIGINT) AS x
-           FROM documents WHERE doc_id % 5 = 0),
-ranked AS (SELECT arm,
-    CAST(rank() OVER (ORDER BY x ASC) + count(*) OVER ()
-         + 1 - rank() OVER (ORDER BY x DESC) AS BIGINT) AS r2
-  FROM b),
-agg AS (SELECT
-    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-    CAST(sum(CASE WHEN arm = 1 THEN r2 ELSE 0 END) AS BIGINT) AS sr2
-  FROM ranked)
-SELECT n1, n2, CAST(sr2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
-  CAST(((sr2 - n1 * (n1 + 1) - n1 * n2) * 1000000) // (n1 * n2)
-       AS BIGINT) AS delta_ppm
-FROM agg
-"""
-
-
-_LEARNED_IDX_ORACLE = """
-WITH b AS (SELECT doc_id % 8 AS g, doc_id AS x,
-             row_number() OVER (PARTITION BY doc_id % 8
-                                ORDER BY doc_id) AS r
-           FROM documents),
-m AS (SELECT g, count(*) AS n, sum(x) AS sx, sum(r) AS sy,
-             sum(x * x) AS sxx, sum(x * r) AS sxy
-      FROM b GROUP BY g),
-m2 AS (SELECT *, n * sxx - sx * sx AS den FROM m),
-m3 AS (SELECT *,
-         CASE WHEN den = 0 THEN 0
-              ELSE CAST(floor(CAST(n * sxy - sx * sy AS DOUBLE)
-                   * 1000000.0 / CAST(den AS DOUBLE)) AS BIGINT) END
-           AS slope_ppm
-       FROM m2),
-m4 AS (SELECT *, (1000000 * sy - slope_ppm * sx) // n AS icept_ppm
-       FROM m3),
-err AS (SELECT b.g,
-          max(abs((m4.slope_ppm * b.x + m4.icept_ppm) // 1000000
-                  - b.r)) AS max_err
-        FROM b JOIN m4 ON m4.g = b.g GROUP BY b.g)
-SELECT m4.g AS shard, CAST(m4.n AS BIGINT) AS n,
-       CAST(m4.slope_ppm AS BIGINT) AS slope_ppm,
-       CAST(err.max_err AS BIGINT) AS max_err
-FROM m4 JOIN err ON err.g = m4.g
-"""
 
 _QTE_ORACLE = """
 WITH b AS (SELECT doc_id % 2 AS arm,
@@ -16984,211 +6744,6 @@ FROM (SELECT * FROM q WHERE arm = 1) t
 JOIN (SELECT * FROM q WHERE arm = 0) c ON c.tau = t.tau
 """
 
-
-_EMD_ORACLE = """
-WITH b AS (SELECT doc_id % 4 AS g,
-             CAST(n_chars + CASE WHEN doc_id % 4 = 0 THEN 40
-                  ELSE 0 END AS BIGINT) // 8 AS b
-           FROM documents),
-per AS (SELECT g, b, count(*) AS c FROM b GROUP BY g, b),
-tot AS (SELECT b, count(*) AS ct FROM b GROUP BY b),
-nt AS (SELECT count(*) AS nt FROM b),
-gs AS (SELECT DISTINCT g FROM per),
-grid AS (SELECT gs.g, t.b, t.ct, coalesce(p.c, 0) AS c
-         FROM gs CROSS JOIN tot t
-         LEFT JOIN per p ON p.g = gs.g AND p.b = t.b),
-cum AS (SELECT g, b, c, ct,
-          sum(c) OVER (PARTITION BY g ORDER BY b) AS cg,
-          sum(ct) OVER (PARTITION BY g ORDER BY b) AS call,
-          coalesce(lead(b) OVER (PARTITION BY g ORDER BY b) - b, 0)
-            AS gapw
-        FROM grid),
-ngs AS (SELECT g, sum(c) AS n_g FROM grid GROUP BY g),
-agg AS (SELECT c.g, ngs.n_g, nt.nt - ngs.n_g AS n_r,
-          sum(abs(c.cg * (nt.nt - ngs.n_g)
-                  - (c.call - c.cg) * ngs.n_g) * c.gapw) AS num
-        FROM cum c, ngs, nt WHERE ngs.g = c.g
-        GROUP BY c.g, ngs.n_g, n_r)
-SELECT g, CAST(n_g AS BIGINT) AS n_g, CAST(n_r AS BIGINT) AS n_r,
-       CAST(CASE WHEN n_g > 0 AND n_r > 0
-            THEN (num * 1000000 * 8) // (n_g * n_r)
-            ELSE 0 END AS BIGINT) AS emd_ppm
-FROM agg
-"""
-
-
-_BURSTINESS_ORACLE = """
-WITH tk AS (SELECT doc_id // 50 AS b, u.term
-            FROM documents,
-                 LATERAL unnest(string_split(text, ' ')) AS u(term)
-            WHERE u.term <> ''),
-per AS (SELECT term, b, count(*) AS x FROM tk GROUP BY term, b),
-nb AS (SELECT count(DISTINCT doc_id // 50) AS n FROM documents),
-agg AS (SELECT term, sum(x) AS sx, sum(x * x) AS sxx
-        FROM per GROUP BY term HAVING sum(x) >= 20)
-SELECT term, CAST(n AS BIGINT) AS n_buckets,
-       CAST(sx AS BIGINT) AS total,
-       CAST(CASE WHEN n > 1 AND sx > 0
-            THEN (1000000 * (n * sxx - sx * sx)) // ((n - 1) * sx)
-            ELSE 0 END AS BIGINT) AS fano_ppm
-FROM agg, nb
-"""
-
-_CSV_SNIFF_ORACLE = """
-WITH l AS (SELECT array_to_string(
-             list_slice(string_split(text, ' '), 1, 6), ';')
-             || CASE WHEN doc_id % 7 = 0 THEN ',x' ELSE '' END
-             AS line
-           FROM documents),
-fan AS (
-  SELECT 0 AS delim_id,
-         length(line) - length(replace(line, ',', '')) AS c FROM l
-  UNION ALL SELECT 1,
-         length(line) - length(replace(line, ';', '')) FROM l
-  UNION ALL SELECT 2,
-         length(line) - length(replace(line, '|', '')) FROM l
-  UNION ALL SELECT 3,
-         length(line) - length(replace(line, chr(9), '')) FROM l),
-agg AS (SELECT delim_id, count(*) AS n_lines, sum(c) AS sum_cnt,
-               count(*) * sum(c * c) - sum(c) * sum(c) AS var_num
-        FROM fan GROUP BY delim_id),
-best AS (SELECT min(CASE WHEN sum_cnt > 0 THEN
-           struct_pack(v := var_num, n := -sum_cnt, d := delim_id)
-           END) AS b FROM agg)
-SELECT CAST(a.delim_id AS BIGINT) AS delim_id,
-       CAST(a.n_lines AS BIGINT) AS n_lines,
-       CAST(a.sum_cnt AS BIGINT) AS sum_cnt,
-       CAST(a.var_num AS BIGINT) AS var_num,
-       a.delim_id = (best.b).d AS is_best
-FROM agg a, best
-"""
-
-
-def _merkle_oracle(n: int = 8, w: int = 8) -> str:
-    level = [f"md5(substring(text, {1 + w * i}, {w}))"
-             for i in range(n)]
-    while len(level) > 1:
-        level = [f"md5(concat({level[i]}, {level[i + 1]}))"
-                 for i in range(0, len(level), 2)]
-    return f"SELECT doc_id, {level[0]} AS merkle_root FROM documents"
-
-
-_RICE_ORACLE = """
-WITH p AS (SELECT DISTINCT u.term, d.doc_id AS d
-           FROM documents d,
-                LATERAL unnest(list_filter(
-                  regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                  x -> x <> '')) AS u(term)),
-g AS (SELECT term,
-        d - coalesce(lag(d) OVER (PARTITION BY term ORDER BY d), -1)
-          AS gap
-      FROM p),
-f AS (SELECT term, gap, k.k FROM g,
-      LATERAL unnest(range(0, 8)) AS k(k)),
-pk AS (SELECT term, k, sum((gap >> k) + 1 + k) AS bits,
-              count(*) AS dfn
-       FROM f GROUP BY term, k),
-agg AS (SELECT term, max(dfn) AS df,
-               min(struct_pack(bits := bits, k := k)) AS m
-        FROM pk GROUP BY term)
-SELECT term, CAST(df AS BIGINT) AS df, CAST((m).k AS BIGINT)
-         AS best_k, CAST((m).bits AS BIGINT) AS bits
-FROM agg
-"""
-
-
-def _passk_oracle(k: int = 10) -> str:
-    expr = "1000000"
-    for i in range(k):
-        expr = f"(({expr}) * greatest(n - c - {i}, 0)) // (n - {i})"
-    return f"""
-WITH g AS (SELECT doc_id % 25 AS g, count(*) AS n,
-             sum(CASE WHEN (doc_id * 2654435761) % 10 < 3
-                      THEN 1 ELSE 0 END) AS c
-           FROM documents GROUP BY 1)
-SELECT g, CAST(n AS BIGINT) AS n, CAST(c AS BIGINT) AS c,
-       (1000000 * CAST(c AS BIGINT)) // n AS pass1_ppm,
-       CAST(CASE WHEN n >= {k} THEN 1000000 - ({expr})
-            ELSE 1000000 * least(c, 1) END AS BIGINT) AS pass{k}_ppm
-FROM g
-"""
-
-
-_LIS_ORACLE = """
-WITH RECURSIVE
-ev AS (SELECT user_id AS u, CAST(floor(value * 100) AS BIGINT) AS x,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-       FROM events),
-meta AS (SELECT u, count(*) AS n FROM ev GROUP BY u),
-st(u, i, tails) AS (
-  SELECT u, 0, []::BIGINT[] FROM meta
-  UNION ALL
-  SELECT s.u, s.i + 1,
-    CASE WHEN s.pos = len(s.tails)
-         THEN list_append(s.tails, s.x)
-         ELSE s.tails[1:s.pos] || [s.x]
-              || s.tails[s.pos + 2:len(s.tails)] END
-  FROM (SELECT st.u, st.i, st.tails, e.x,
-          len(list_filter(st.tails, t -> t < e.x)) AS pos
-        FROM st JOIN ev e ON e.u = st.u AND e.i = st.i + 1) s),
-fin AS (SELECT st.u, len(st.tails) AS lis FROM st
-        JOIN meta m ON st.u = m.u AND st.i = m.n)
-SELECT f.u AS user_id, CAST(m.n AS BIGINT) AS n_events,
-       CAST(f.lis AS BIGINT) AS lis_len
-FROM fin f JOIN meta m ON f.u = m.u
-"""
-
-
-_OHLC_ORACLE = """
-SELECT user_id, bar, n, (o).c AS open_c, high_c, low_c,
-       (cl).c AS close_c, sum_c
-FROM (
-  SELECT u AS user_id, us // 86400000000 AS bar, count(*) AS n,
-         min(struct_pack(us := us, eid := eid, c := c)) AS o,
-         max(struct_pack(us := us, eid := eid, c := c)) AS cl,
-         CAST(max(c) AS BIGINT) AS high_c,
-         CAST(min(c) AS BIGINT) AS low_c,
-         CAST(sum(c) AS BIGINT) AS sum_c
-  FROM (SELECT user_id AS u, epoch_us(ts) AS us, event_id AS eid,
-               CAST(floor(value * 100) AS BIGINT) AS c
-        FROM events WHERE user_id % 10 = 0) e
-  GROUP BY u, us // 86400000000) z
-"""
-
-_SPATIAL_ORACLE = """
-WITH p AS (SELECT doc_id AS pid,
-             (doc_id * 7919) % 100000 AS x,
-             (doc_id * 104729) % 100000 AS y
-           FROM documents),
-r AS (SELECT t.rect,
-        (t.rect * 13007) % 90000 AS x0,
-        (t.rect * 17021) % 90000 AS y0,
-        (t.rect * 13007) % 90000 + (t.rect % 5 + 1) * 2500 AS x1,
-        (t.rect * 17021) % 90000 + (t.rect % 7 + 1) * 2000 AS y1
-      FROM (SELECT unnest(range(0, 32)) AS rect) t)
-SELECT CAST(r.rect AS BIGINT) AS rect, count(*) AS n_points,
-       CAST(sum(p.x) AS BIGINT) AS sum_x
-FROM p, r
-WHERE p.x >= r.x0 AND p.x <= r.x1 AND p.y >= r.y0 AND p.y <= r.y1
-GROUP BY r.rect
-"""
-
-
-_MAXDIFF_ORACLE = """
-WITH b AS (SELECT CAST(n_chars AS BIGINT) // 8 AS b, count(*) AS f
-           FROM documents GROUP BY 1),
-d0 AS (SELECT b, f, lag(f) OVER (ORDER BY b) AS pf FROM b),
-d AS (SELECT b, abs(f - pf) AS d FROM d0 WHERE pf IS NOT NULL),
-bounds AS (SELECT b AS bb FROM d ORDER BY d DESC, b LIMIT 7),
-seg AS (SELECT b.b, b.f,
-          (SELECT count(*) FROM bounds WHERE bb <= b.b) AS seg
-        FROM b)
-SELECT CAST(seg AS BIGINT) AS seg, min(b) AS lo_bucket,
-       max(b) AS hi_bucket, count(*) AS n_buckets,
-       CAST(sum(f) AS BIGINT) AS n_rows
-FROM seg GROUP BY seg
-"""
 
 _SHAPLEY_ATTR_ORACLE = """
 WITH um AS (SELECT user_id AS u,
@@ -17221,267 +6776,6 @@ SELECT CAST(c.ch AS BIGINT) AS channel,
        CAST(t.total_conv AS BIGINT) AS total_conv
 FROM con c JOIN solo s ON s.ch_s = c.ch CROSS JOIN tot t
 GROUP BY c.ch, s.v_solo, t.total_conv
-"""
-
-
-_BACKOFF_ORACLE = """
-WITH
-tk AS (SELECT d, p, w FROM (
-    SELECT doc_id AS d,
-           unnest(list_transform(string_split(text, ' '),
-                  (w, i) -> {'p': i - 1, 'w': w})) AS x
-    FROM documents) z
-  CROSS JOIN LATERAL (SELECT z.x.p AS p, z.x.w AS w) u
-  WHERE w <> ''),
-bg AS (SELECT a.d, a.p, a.w AS w1, b.w AS w2
-       FROM tk a JOIN tk b ON a.d = b.d AND b.p = a.p + 1),
-tg AS (SELECT bg.w1, bg.w2, c.w AS w3
-       FROM bg JOIN tk c ON bg.d = c.d AND c.p = bg.p + 2),
-tri_c AS (SELECT w1, w2, w3, count(*) AS c123 FROM tg
-          GROUP BY w1, w2, w3),
-big_c AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY w1, w2),
-uni_c AS (SELECT w, count(*) AS c1 FROM tk GROUP BY w),
-n_tot AS (SELECT count(*) AS n_tok FROM tk),
-ev AS (SELECT doc_id,
-         array_to_string(list_transform(string_split(text, ' '),
-           (w, i) -> CASE WHEN (i - 1) % 7 = 0 THEN w || 'zz'
-                          ELSE w END), ' ') AS text
-       FROM documents WHERE doc_id % 10 = 0),
-etk AS (SELECT d, p, w FROM (
-    SELECT doc_id AS d,
-           unnest(list_transform(string_split(text, ' '),
-                  (w, i) -> {'p': i - 1, 'w': w})) AS x
-    FROM ev) z
-  CROSS JOIN LATERAL (SELECT z.x.p AS p, z.x.w AS w) u
-  WHERE w <> ''),
-ep AS (SELECT a.d, a.w AS w1, b.w AS w2, c.w AS w3
-       FROM etk a
-       JOIN etk b ON a.d = b.d AND b.p = a.p + 1
-       JOIN etk c ON a.d = c.d AND c.p = a.p + 2),
-sc AS (SELECT ep.d,
-    CASE WHEN t.c123 IS NOT NULL
-         THEN (t.c123 * 1000000) // b12.c12
-         WHEN b23.c23 IS NOT NULL
-         THEN (2 * ((b23.c23 * 1000000) // u2.c2)) // 5
-         WHEN u3.c3 IS NOT NULL
-         THEN (2 * ((2 * ((u3.c3 * 1000000) // n_tot.n_tok)) // 5))
-              // 5
-         ELSE 0 END AS s
-  FROM ep
-  LEFT JOIN tri_c t ON t.w1 = ep.w1 AND t.w2 = ep.w2
-                    AND t.w3 = ep.w3
-  LEFT JOIN big_c b12 ON b12.w1 = ep.w1 AND b12.w2 = ep.w2
-  LEFT JOIN (SELECT w1 AS w2, w2 AS w3, c12 AS c23 FROM big_c) b23
-         ON b23.w2 = ep.w2 AND b23.w3 = ep.w3
-  LEFT JOIN (SELECT w AS w2, c1 AS c2 FROM uni_c) u2
-         ON u2.w2 = ep.w2
-  LEFT JOIN (SELECT w AS w3, c1 AS c3 FROM uni_c) u3
-         ON u3.w3 = ep.w3
-  CROSS JOIN n_tot)
-SELECT d AS doc_id, count(*) AS n_scored,
-       CAST(sum(s) AS BIGINT) AS sum_score_ppm
-FROM sc GROUP BY d
-"""
-
-
-_SW_ORACLE = """
-WITH RECURSIVE
-t AS (SELECT doc_id, substr(text, 1, 40) AS t FROM documents),
-pr AS (SELECT t1.doc_id AS pid, t1.t AS a, t2.t AS b
-       FROM t t1 JOIN t t2 ON t2.doc_id = t1.doc_id + 1
-       WHERE t1.doc_id % 10 = 0),
-dp AS (
-  SELECT 1 AS k, pid, a, b, length(a) AS n, length(b) AS m,
-    list_transform(range(1, length(b) + 1), j -> CAST(0 AS BIGINT))
-      AS prev2,
-    list_transform(range(1, length(b) + 1), j -> CAST(0 AS BIGINT))
-      AS prev,
-    CAST(0 AS BIGINT) AS best
-  FROM pr
-  UNION ALL
-  SELECT k + 1, pid, a, b, n, m, prev, nxt,
-         greatest(best, coalesce(list_max(nxt), 0))
-  FROM (
-    SELECT *, list_transform(range(1, m + 1), j ->
-      CASE WHEN (k + 1) - j < 1 OR (k + 1) - j > n
-           THEN CAST(0 AS BIGINT)
-      ELSE greatest(0,
-        (CASE WHEN j >= 2 THEN prev2[j - 1] ELSE 0 END)
-          + CASE WHEN substr(a, (k + 1) - j, 1) = substr(b, j, 1)
-                 THEN 2 ELSE -1 END,
-        prev[j] - 1,
-        CASE WHEN j >= 2 THEN prev[j - 1] - 1 ELSE -1 END)
-      END) AS nxt
-    FROM dp WHERE k < n + m) s)
-SELECT pid, CAST(n AS BIGINT) AS n1, CAST(m AS BIGINT) AS n2,
-       best AS sw_score
-FROM dp WHERE k = n + m
-"""
-
-
-_KNAPSACK_ORACLE = """
-WITH RECURSIVE
-it0 AS (SELECT doc_id % 20 AS g, n_chars % 37 + 5 AS w,
-               (doc_id * 31) % 50 + 10 AS v,
-               row_number() OVER (PARTITION BY doc_id % 20
-                                  ORDER BY doc_id) AS i
-        FROM documents),
-meta AS (SELECT g, count(*) AS n_items, sum(w) AS sum_weight
-         FROM it0 GROUP BY g),
-dp(g, i, d) AS (
-  SELECT g, 0, list_transform(range(0, 201), c -> CAST(0 AS BIGINT))
-  FROM meta
-  UNION ALL
-  SELECT dp.g, dp.i + 1,
-    CASE WHEN it.w > 200 THEN dp.d ELSE
-      list_transform(range(0, 201), c ->
-        CASE WHEN c >= it.w AND dp.d[c - it.w + 1] + it.v > dp.d[c + 1]
-             THEN dp.d[c - it.w + 1] + it.v ELSE dp.d[c + 1] END)
-    END
-  FROM dp JOIN it0 it ON it.g = dp.g AND it.i = dp.i + 1),
-fin AS (SELECT dp.g, dp.d FROM dp JOIN meta m
-        ON dp.g = m.g AND dp.i = m.n_items)
-SELECT m.g AS shard, CAST(m.n_items AS BIGINT) AS n_items,
-       CAST(m.sum_weight AS BIGINT) AS sum_weight,
-       CAST(f.d[201] AS BIGINT) AS best_value
-FROM fin f JOIN meta m ON f.g = m.g
-"""
-
-_EWMA_ORACLE = """
-WITH RECURSIVE
-ev AS (SELECT user_id AS u, CAST(floor(value * 100) AS BIGINT) AS x,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS i
-       FROM events),
-meta AS (SELECT u, count(*) AS n FROM ev GROUP BY u),
-st(u, i, s, anom) AS (
-  SELECT e.u, 1, e.x, 0 FROM ev e WHERE e.i = 1
-  UNION ALL
-  SELECT st.u, st.i + 1,
-    st.s + ((abs(e.x - st.s) // 4)
-            * CASE WHEN e.x >= st.s THEN 1 ELSE -1 END),
-    st.anom + CASE WHEN abs(e.x - st.s) > 2000 THEN 1 ELSE 0 END
-  FROM st JOIN ev e ON e.u = st.u AND e.i = st.i + 1),
-fin AS (SELECT st.u, st.s, st.anom FROM st JOIN meta m
-        ON st.u = m.u AND st.i = m.n)
-SELECT f.u AS user_id, CAST(m.n AS BIGINT) AS n_events,
-       CAST(f.anom AS BIGINT) AS n_anomalies,
-       CAST(f.s AS BIGINT) AS s_final
-FROM fin f JOIN meta m ON f.u = m.u
-"""
-
-
-_GEO_HUB_ORACLE = """
-WITH p AS (SELECT doc_id,
-             (doc_id * 7919) % 360000 - 180000 AS x,
-             (doc_id * 104729) % 180000 - 90000 AS y
-           FROM documents),
-h AS (SELECT t.hub,
-             (t.hub * 11003) % 360000 - 180000 AS hx,
-             (t.hub * 7507) % 180000 - 90000 AS hy
-      FROM (SELECT unnest(range(0, 32)) AS hub) t),
-d AS (SELECT p.doc_id,
-             (p.x - h.hx) * (p.x - h.hx)
-             + (p.y - h.hy) * (p.y - h.hy) AS d2, h.hub
-      FROM p, h),
-best AS (SELECT doc_id, min(struct_pack(d2 := d2, hub := hub)) AS m
-         FROM d GROUP BY doc_id)
-SELECT CAST(m.hub AS BIGINT) AS hub, count(*) AS n_points,
-       CAST(sum(m.d2) AS BIGINT) // count(*) AS mean_d2,
-       CAST(min(m.d2) AS BIGINT) AS min_d2
-FROM best GROUP BY m.hub
-"""
-
-_RANSAC_ORACLE = """
-WITH p AS (SELECT doc_id AS pid, doc_id % 1000 AS x,
-             3 * (doc_id % 1000) - 40
-             + (doc_id * 2654435761) % 9 - 4
-             + CASE WHEN doc_id % 17 = 0 THEN 2000 ELSE 0 END AS y
-           FROM documents),
-fan AS (SELECT pid, x, y, t.j FROM p,
-        LATERAL unnest(range(0, 16)) AS t(j)),
-cand0 AS (SELECT j,
-    min(struct_pack(h := md5(j || ':a:' || pid), pid := pid,
-                    x := x, y := y)) AS pa,
-    min(struct_pack(h := md5(j || ':b:' || pid), pid := pid,
-                    x := x, y := y)) AS pb
-  FROM fan GROUP BY j),
-cand AS (SELECT j, pa.x AS xa, pa.y AS ya, pb.x AS xb, pb.y AS yb
-         FROM cand0 WHERE pa.x <> pb.x),
-scored AS (SELECT p.x, p.y, c.*,
-             abs((c.yb - c.ya) * (p.x - c.xa)
-                 - (c.xb - c.xa) * (p.y - c.ya)) AS resid
-           FROM p, cand c),
-tall AS (SELECT j, xa, ya, xb, yb,
-           sum(CASE WHEN resid <= 4 * abs(xb - xa)
-                    THEN 1 ELSE 0 END) AS n_inliers,
-           count(*) AS n_points
-         FROM scored GROUP BY j, xa, ya, xb, yb),
-best AS (SELECT * FROM tall
-         ORDER BY n_inliers DESC, j LIMIT 1),
-refit AS (SELECT count(*) AS rn, sum(s.x) AS sx, sum(s.y) AS sy,
-            sum(s.x * s.x) AS sxx, sum(s.x * s.y) AS sxy
-          FROM scored s, best b
-          WHERE s.j = b.j AND s.resid <= 4 * abs(s.xb - s.xa))
-SELECT b.j AS best_j, CAST(b.n_points AS BIGINT) AS n_points,
-  CAST(b.n_inliers AS BIGINT) AS n_inliers,
-  CAST(floor(CAST(b.yb - b.ya AS DOUBLE) / (b.xb - b.xa)
-             * 1000000.0) AS BIGINT) AS slope_cand_ppm,
-  CASE WHEN r.rn * r.sxx - r.sx * r.sx = 0 THEN NULL
-       ELSE CAST(floor(CAST(r.rn * r.sxy - r.sx * r.sy AS DOUBLE)
-                 / CAST(r.rn * r.sxx - r.sx * r.sx AS DOUBLE)
-                 * 1000000.0) AS BIGINT) END AS slope_refit_ppm
-FROM best b, refit r
-"""
-
-
-_KRUSKAL_ORACLE = """
-WITH b AS (SELECT (doc_id // 5) % 3 AS g, n_chars AS x
-           FROM documents WHERE doc_id % 5 = 0),
-r AS (SELECT g,
-        rank() OVER (ORDER BY x ASC) + count(*) OVER () + 1
-          - rank() OVER (ORDER BY x DESC) AS r2
-      FROM b),
-ties AS (SELECT coalesce(sum(t * t * t - t), 0) AS tt
-         FROM (SELECT count(*) AS t FROM b GROUP BY x) z),
-grp AS (SELECT g, count(*) AS ng, sum(r2) AS dr FROM r GROUP BY g),
-agg AS (SELECT count(*) AS k_groups, sum(ng) AS n,
-          (max(CASE WHEN g = 0 THEN CAST(dr AS DOUBLE) * dr / ng END)
-           + max(CASE WHEN g = 1 THEN CAST(dr AS DOUBLE) * dr / ng END))
-           + max(CASE WHEN g = 2 THEN CAST(dr AS DOUBLE) * dr / ng END)
-            AS s
-        FROM grp)
-SELECT CAST(k_groups AS BIGINT) AS k_groups, CAST(n AS BIGINT) AS n,
-       CAST(tt AS BIGINT) AS tt,
-       round(CASE WHEN n > 1 AND CAST(n AS DOUBLE) * n * n - n > tt
-         THEN (3.0 * s / (CAST(n AS DOUBLE) * (n + 1)) - 3.0 * (n + 1))
-            / (1.0 - CAST(tt AS DOUBLE)
-               / (CAST(n AS DOUBLE) * n * n - n))
-         ELSE 0.0 END, 6) AS h
-FROM agg, ties
-"""
-
-_INTERVAL_SCHED_ORACLE = """
-WITH RECURSIVE
-iv AS (SELECT user_id AS u, epoch_us(ts) // 1000000 AS s,
-              ((event_id % 7) + 1) * 60 AS d, event_id AS eid
-       FROM events WHERE user_id % 10 = 0),
-lst AS (SELECT u, count(*) AS n_iv,
-               list({'s': s, 'e': s + d} ORDER BY s + d, s, eid)
-                 AS ivs
-        FROM iv GROUP BY u),
-go(u, n_iv, ivs, i, last_e, taken) AS (
-  SELECT u, n_iv, ivs, 1, CAST(NULL AS BIGINT), 0 FROM lst
-  UNION ALL
-  SELECT u, n_iv, ivs, i + 1,
-    CASE WHEN last_e IS NULL OR ivs[i].s >= last_e
-         THEN ivs[i].e ELSE last_e END,
-    taken + CASE WHEN last_e IS NULL OR ivs[i].s >= last_e
-                 THEN 1 ELSE 0 END
-  FROM go WHERE i <= n_iv)
-SELECT u AS user_id, CAST(n_iv AS BIGINT) AS n_intervals,
-       CAST(taken AS BIGINT) AS n_scheduled
-FROM go WHERE i = n_iv + 1
 """
 
 

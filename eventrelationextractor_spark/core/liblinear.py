@@ -12,8 +12,8 @@ drives it (EventEventRelationClassifier.predict, lines 274-314):
 * the predicted label value v maps to the pipeline's string label via
   ``label_names[v-1]`` (EventEventRelationClassifier.java:307).
 
-Prediction is a single numpy matmul, so at the Spark layer this runs inside
-an Arrow-batched pandas UDF over the broadcast (W, labels) pair.
+Prediction is numpy over a dense feature matrix; at the Spark layer it runs
+inside an Arrow-batched pandas UDF over the broadcast (W, labels) pair.
 """
 
 from __future__ import annotations
@@ -43,10 +43,20 @@ class LinearModel:
         self.w = w                    # (nr_feature [+1 if bias>=0], nr_class)
 
     def predict_values(self, X: np.ndarray) -> np.ndarray:
-        """Decision values, columns in model-label order."""
+        """Decision values, columns in model-label order.
+
+        Each row's ``x[j] * w[j]`` is summed left to right in feature
+        order, one rounded product and one rounded add per term, as
+        liblinear-java does. A BLAS matmul would pick its summation order
+        and FMA use by host CPU, and move the last ulp from host to
+        host. Columns that are zero in every row are skipped; a zero
+        term in one row adds a signed zero, which leaves its sum as is."""
         n = self.nr_feature + (1 if self.bias >= 0 else 0)
-        used = min(X.shape[1], n)
-        return X[:, :used] @ self.w[:used]
+        X = X[:, :min(X.shape[1], n)]
+        acc = np.zeros((X.shape[0], self.w.shape[1]))
+        for j in np.flatnonzero(X.any(axis=0)):
+            acc += X[:, j, None] * self.w[j]
+        return acc
 
     def predict_label_values(self, X: np.ndarray) -> np.ndarray:
         """Numeric label values (ties -> first label column, as liblinear)."""

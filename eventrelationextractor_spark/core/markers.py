@@ -224,21 +224,29 @@ def _pair_signal_marker(doc: DocState, e1: Mention, e2: Mention, signal_list,
     BEFORE/BEGIN positions."""
     m = Marker(text=text, cluster=signal_list.get(text), position=position)
     sig_tids = _signal_tid_arr(doc, text, context, context_start_tid, position)
-    span1 = span_token_ids(doc, e1.start_tok, e1.end_tok)
-    span2 = span_token_ids(doc, e2.start_tok, e2.end_tok)
-    d1 = d2 = "O"
-    if position in ("BETWEEN", "INSIDE"):
-        d1 = signal_dependency_path(doc, e1, span1, sig_tids)
-        d2 = signal_dependency_path(doc, e2, span2, sig_tids)
-    elif position in ("BEFORE", "BEGIN"):
-        d1 = signal_dependency_path(doc, e2, span2, sig_tids)
-        d2 = signal_dependency_path(doc, e1, span1, sig_tids)
-    elif position == "BEGIN-BEFORE":
-        d1 = signal_dependency_path(doc, e1, span1, sig_tids)
-    elif position == "BEGIN-BETWEEN":
-        d2 = signal_dependency_path(doc, e2, span2, sig_tids)
-    m.dep1, m.dep2 = d1, d2
+    m.dep1, m.dep2 = _positioned_deps(doc, e1, e2, position, sig_tids)
     return m
+
+
+def _positioned_deps(doc: DocState, e1: Mention, e2: Mention, position: str,
+                     tids: list) -> tuple:
+    """(dep1, dep2) of a marker at ``position``, shared by the pair signal
+    and connective markers: both entities' paths BETWEEN/INSIDE, the
+    e1/e2 swap for BEFORE/BEGIN, one side only for BEGIN-BEFORE (e1) and
+    BEGIN-BETWEEN (e2), "O" otherwise."""
+    def dep(e):
+        return signal_dependency_path(
+            doc, e, span_token_ids(doc, e.start_tok, e.end_tok), tids)
+
+    if position in ("BETWEEN", "INSIDE"):
+        return dep(e1), dep(e2)
+    if position in ("BEFORE", "BEGIN"):
+        return dep(e2), dep(e1)
+    if position == "BEGIN-BEFORE":
+        return dep(e1), "O"
+    if position == "BEGIN-BETWEEN":
+        return "O", dep(e2)
+    return "O", "O"
 
 
 def _keyed_signal_marker(doc: DocState, e1: Mention, e2: Mention, signal_list,
@@ -558,20 +566,7 @@ def _connective_marker(doc: DocState, e1: Mention, e2: Mention, text: str,
     """getConnectiveMarker (1113-1137): cluster = text; dep paths with the
     same BEFORE/BEGIN e1/e2 swap as the pair signal marker."""
     m = Marker(text=text, cluster=text, position=position)
-    span1 = span_token_ids(doc, e1.start_tok, e1.end_tok)
-    span2 = span_token_ids(doc, e2.start_tok, e2.end_tok)
-    d1 = d2 = "O"
-    if position in ("BETWEEN", "INSIDE"):
-        d1 = signal_dependency_path(doc, e1, span1, conn_tids)
-        d2 = signal_dependency_path(doc, e2, span2, conn_tids)
-    elif position in ("BEFORE", "BEGIN"):
-        d1 = signal_dependency_path(doc, e2, span2, conn_tids)
-        d2 = signal_dependency_path(doc, e1, span1, conn_tids)
-    elif position == "BEGIN-BEFORE":
-        d1 = signal_dependency_path(doc, e1, span1, conn_tids)
-    elif position == "BEGIN-BETWEEN":
-        d2 = signal_dependency_path(doc, e2, span2, conn_tids)
-    m.dep1, m.dep2 = d1, d2
+    m.dep1, m.dep2 = _positioned_deps(doc, e1, e2, position, conn_tids)
     return m
 
 

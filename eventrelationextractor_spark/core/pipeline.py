@@ -37,7 +37,7 @@ from .eventrules import (event_causality_rule, event_event_anchor_rule,
 from .javacompat import java_hashmap_order
 from .lexicons import Lexicons, load_lexicons
 from .liblinear import CAUS_LABELS, TEMP_LABELS, shipped_model
-from .markers import get_causal_signal, get_causal_verb
+from .markers import _get_string, get_causal_signal, get_causal_verb
 from .timexrule import inverse_relation, normalize_dct, timex_timex_relation
 
 
@@ -241,13 +241,6 @@ def temporal_triples(doc: DocState, lexicons: Lexicons | None = None,
     return out
 
 
-def _sentence_lower_text(doc: DocState, sent) -> str:
-    i0 = doc.tokens[sent.start_tok].idx
-    i1 = doc.tokens[sent.end_tok].idx
-    return " ".join(doc.tokens[t].text.lower()
-                    for t in doc.token_arr[i0:i1 + 1])
-
-
 def _sentence_lemma_text(doc: DocState, sent) -> str:
     i0 = doc.tokens[sent.start_tok].idx
     i1 = doc.tokens[sent.end_tok].idx
@@ -276,7 +269,8 @@ def causal_candidate_pairs(doc: DocState, lx: Lexicons) -> list:
     sent_has_verb = {}
     for sid in doc.sentence_arr:
         s = doc.sentences[sid]
-        sent_has_signal[sid] = _gate_hit(_sentence_lower_text(doc, s), sig_re)
+        sent_has_signal[sid] = _gate_hit(
+            _get_string(doc, s.start_tok, s.end_tok), sig_re)
         sent_has_verb[sid] = _gate_hit(_sentence_lemma_text(doc, s), verb_re)
 
     candidates: dict = {}

@@ -12,9 +12,9 @@ exact-verified with a join proportional to candidates, the same
 gate-then-verify shape as ops.dedup.capped_bucket_pairs.
 
 Bit positions are pure md5 functions of the key, so the filter is
-reproducible across engines: the SQL oracle in __spark_entry__ replays
-the identical draws and reproduces membership EXACTLY - including any
-false positives.
+reproducible across engines and runs: any engine that replays the
+identical draws reproduces membership EXACTLY - including any false
+positives.
 
 Sizing at scale: ~10 bits/key. A 10^12-key seen-set would need a
 ~1.25-TB bitmap - beyond a single broadcast; the production path there

@@ -475,51 +475,3 @@ def pca_power(emb: DataFrame, id_col: str = "vec_id",
                     F.col("pc1_proj").cast("long")))
 
 
-def pca_oracle_sql(table_expr: str, id_col: str = "vec_id",
-                   vec_col: str = "embedding", d: int = 64,
-                   iters: int = 8, q_scale: int = 10000,
-                   v_scale: int = 1024) -> str:
-    """DuckDB replay of pca_power: quantize + trunc-div means +
-    self-join Gram + ``iters`` chained matvec/rescale CTEs + the
-    same sign fix and projection. Trunc division is spelled
-    SIGN(a)*(ABS(a)//b) so negative numerators cannot drift."""
-    blocks = [f"""q AS MATERIALIZED (
-  SELECT {id_col} AS vid, gs.i AS i,
-    CAST(floor(CAST({vec_col}[gs.i] AS DOUBLE) * {q_scale})
-         AS BIGINT) AS qv
-  FROM {table_expr},
-    LATERAL (SELECT unnest(generate_series(1, {d})) AS i) gs),
-mu AS MATERIALIZED (
-  SELECT i, CAST(CASE WHEN SUM(qv) >= 0
-    THEN ABS(SUM(qv)) // COUNT(*)
-    ELSE -(ABS(SUM(qv)) // COUNT(*)) END AS BIGINT) AS m
-  FROM q GROUP BY i),
-qc AS MATERIALIZED (
-  SELECT q.vid, q.i, q.qv - mu.m AS c
-  FROM q JOIN mu ON q.i = mu.i),
-g AS MATERIALIZED (
-  SELECT a.i AS i, b.i AS j, CAST(SUM(a.c * b.c) AS BIGINT) AS s
-  FROM qc a JOIN qc b ON a.vid = b.vid GROUP BY a.i, b.i),
-v0 AS (SELECT i, CAST(1 AS BIGINT) AS v
-       FROM (SELECT unnest(generate_series(1, {d})) AS i))"""]
-    for k in range(1, iters + 1):
-        j = k - 1
-        blocks.append(f"""w{k} AS MATERIALIZED (
-  SELECT g.i, CAST(SUM(g.s * v.v) AS BIGINT) AS w
-  FROM g JOIN v{j} v ON g.j = v.i GROUP BY g.i),
-m{k} AS (SELECT MAX(ABS(w)) AS m FROM w{k}),
-v{k} AS MATERIALIZED (
-  SELECT w.i, CAST(CASE WHEN m.m = 0 THEN
-      (SELECT v FROM v{j} pv WHERE pv.i = w.i)
-    WHEN w.w >= 0 THEN (ABS(w.w) * {v_scale}) // m.m
-    ELSE -((ABS(w.w) * {v_scale}) // m.m) END AS BIGINT) AS v
-  FROM w{k} w, m{k} m)""")
-    return ("WITH " + ",\n".join(blocks) + f""",
-piv AS (SELECT i, v FROM v{iters} ORDER BY ABS(v) DESC, i LIMIT 1),
-pc AS MATERIALIZED (
-  SELECT f.i, CAST(CASE WHEN p.v < 0 THEN -f.v ELSE f.v END
-               AS BIGINT) AS v
-  FROM v{iters} f, piv p)
-SELECT qc.vid AS {id_col},
-  CAST(SUM(qc.c * pc.v) AS BIGINT) AS pc1_proj
-FROM qc JOIN pc ON qc.i = pc.i GROUP BY qc.vid""")

@@ -101,74 +101,3 @@ def viterbi_decode(df: DataFrame, text_col: str,
                     F.expr(path).alias("vit_path")))
 
 
-def viterbi_oracle_sql(table_expr: str, text_col: str,
-                       trans: list[list[int]], emit: list[list[int]],
-                       start: list[int],
-                       id_col: str = "doc_id") -> str:
-    """DuckDB recursive-CTE replay of the identical recurrence:
-    generated from the SAME model tables so the two engines cannot
-    drift. The working set advances all documents one position per
-    recursion round (depth = longest document)."""
-    k = len(start)
-    c = len(emit[0])
-    base = [min(start[i] + trans[i][j] for i in range(k))
-            for j in range(k)]
-
-    def emit_case(j: int, tok: str) -> str:
-        whens = " ".join(f"WHEN {ci} THEN {emit[j][ci]}"
-                         for ci in range(c - 1))
-        return (f"CASE (length({tok}) % {c}) {whens}"
-                f" ELSE {emit[j][c - 1]} END")
-
-    base_cols = ", ".join(
-        f"CAST({base[j]} + {emit_case(j, 'tok')} AS BIGINT) AS c{j},"
-        f" '{j}' AS p{j}" for j in range(k))
-    step_cols = []
-    for j in range(k):
-        cands = [f"v.c{i} + {trans[i][j]}" for i in range(k)]
-        picks = [f"v.p{i}" for i in range(k)]
-        least = ("LEAST(" + ", ".join(cands) + ")") if k > 1 \
-            else cands[0]
-        step_cols.append(
-            f"CAST({least} + {emit_case(j, 't.tok')} AS BIGINT)"
-            f" AS c{j}")
-        step_cols.append(
-            f"{_argmin_case(cands, picks)} || '{j}' AS p{j}")
-    final_cands = [f"v.c{j}" for j in range(k)]
-    state = _argmin_case(final_cands, [str(j) for j in range(k)])
-    path = _argmin_case(final_cands, [f"v.p{j}" for j in range(k)])
-    cost = ("LEAST(" + ", ".join(final_cands) + ")") if k > 1 \
-        else final_cands[0]
-    empty_cands = [str(start[j]) for j in range(k)]
-    empty_state = _argmin_case(empty_cands,
-                               [str(j) for j in range(k)])
-    empty_cost = ("LEAST(" + ", ".join(empty_cands) + ")") if k > 1 \
-        else empty_cands[0]
-    return f"""
-WITH RECURSIVE d AS MATERIALIZED (
-  SELECT {id_col} AS rid,
-    list_filter(regexp_split_to_array(lower({text_col}),
-                '{TOKEN_RE}'), t -> t <> '') AS toks
-  FROM {table_expr}),
-t AS MATERIALIZED (
-  SELECT rid, gs.i AS pos, toks[gs.i] AS tok, len(toks) AS n
-  FROM d, LATERAL (SELECT unnest(generate_series(1, len(toks)))
-                   AS i) gs),
-v AS (
-  SELECT rid, pos, n, {base_cols}
-  FROM t WHERE pos = 1
-  UNION ALL
-  SELECT v.rid, t.pos, v.n, {', '.join(step_cols)}
-  FROM v JOIN t ON t.rid = v.rid AND t.pos = v.pos + 1)
-SELECT v.rid AS {id_col},
-  CAST({state} AS BIGINT) AS vit_state,
-  CAST({cost} AS BIGINT) AS vit_cost,
-  {path} AS vit_path
-FROM v WHERE v.pos = v.n
-UNION ALL
-SELECT rid AS {id_col},
-  CAST({empty_state} AS BIGINT) AS vit_state,
-  CAST({empty_cost} AS BIGINT) AS vit_cost,
-  '' AS vit_path
-FROM d WHERE len(toks) = 0
-"""

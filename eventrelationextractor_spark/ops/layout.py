@@ -249,32 +249,3 @@ def geohash_key(df: DataFrame, lat_md_col: str, lon_md_col: str,
     return d.drop("_gh_latq", "_gh_lonq", "_gh_g")
 
 
-def geohash_sql(lat_expr: str, lon_expr: str, chars: int = 6) -> str:
-    """DuckDB scalar expression computing the identical geohash from
-    the same integer milli-degree expressions — the oracle twin of
-    :func:`geohash_key` (``//`` and ``>>`` in place of div/shiftright,
-    everything else verbatim)."""
-    if not 1 <= chars <= 12:
-        raise ValueError("chars must be in 1..12")
-    total_bits = 5 * chars
-    lon_bits = (total_bits + 1) // 2
-    lat_bits = total_bits // 2
-    latq = (f"least(((({lat_expr}) + 90000) * {1 << lat_bits})"
-            f" // 180000, {(1 << lat_bits) - 1})")
-    lonq = (f"least(((({lon_expr}) + 180000) * {1 << lon_bits})"
-            f" // 360000, {(1 << lon_bits) - 1})")
-    terms = []
-    for i in range(total_bits):
-        if i % 2 == 0:
-            src, q = lon_bits - 1 - i // 2, lonq
-        else:
-            src, q = lat_bits - 1 - i // 2, latq
-        terms.append(f"((({q}) >> {src}) % 2)"
-                     f" * {1 << (total_bits - 1 - i)}")
-    g = "(" + " + ".join(terms) + ")"
-    digits = " || ".join(
-        f"substr('{GEOHASH_ALPHABET}',"
-        f" CAST((({g} >> {total_bits - 5 * (c + 1)}) % 32) + 1"
-        f" AS INTEGER), 1)"
-        for c in range(chars))
-    return "(" + digits + ")"

@@ -417,45 +417,3 @@ def gazetteer_spans(docs: DataFrame, phrases: list,
     return docs.select(id_col, text_col).mapInPandas(fn, out_schema)
 
 
-def sequential_pairs(events: DataFrame, session_col: str,
-                     pos_col: str, item_col: str, max_gap: int = 3,
-                     min_support: int = 2, k: int = 30) -> DataFrame:
-    """Gap-bounded sequential pattern mining (the size-2 core of
-    GSP/PrefixSpan) -> top-``k`` ORDERED pairs: (item_a, item_b,
-    n_pairs, n_sessions, support_ppm). "A then B within ``max_gap``
-    steps" is a different (and usually more actionable) statement
-    than frequent_pairs' unordered co-occurrence or
-    session_transitions' adjacent bigrams - it finds funnels with
-    noise events in between.
-
-    Support = DISTINCT sessions containing the pattern (the standard
-    sequence-mining definition - one chatty session can't inflate a
-    pattern), computed alongside the raw pair count.
-
-    Scale shape: the skipgram trick applied to event streams - each
-    occurrence emits ``max_gap`` probe keys (session, pos+1..pos+gap)
-    and matches by EQUI-join, never a range join; support distinct
-    rides the same pair frame; totals broadcast; final cut
-    TakeOrdered on (support desc, a, b)."""
-    g = int(max_gap)
-    t = events.select(F.col(session_col).alias("s"),
-                      F.col(pos_col).cast("long").alias("p"),
-                      F.col(item_col).alias("it"))
-    probes = t.select("s", F.col("it").alias("a"),
-                      F.explode(F.expr(f"sequence(p + 1, p + {g})"))
-                      .alias("p"))
-    pairs = (probes.join(t, ["s", "p"])
-             .select("s", "a", F.col("it").alias("b")))
-    agg = (pairs.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.countDistinct("s").cast("long").alias("n_sessions"))
-        .filter(F.col("n_sessions") >= int(min_support)))
-    tot = t.agg(F.countDistinct("s").alias("t_sessions"))
-    scored = (agg.crossJoin(F.broadcast(tot))
-              .withColumn("support_ppm", F.expr(
-                  "(1000000 * n_sessions) div t_sessions")))
-    return (scored.orderBy(F.col("n_sessions").desc(), "a", "b")
-            .limit(int(k))
-            .select(F.col("a").alias("item_a"),
-                    F.col("b").alias("item_b"),
-                    "n_pairs", "n_sessions", "support_ppm"))

@@ -1,26 +1,16 @@
 """Text-analysis operators for large-scale training-data pipelines:
-language-ID (stopword-marker heuristic), quality scoring, token counting,
+character-trigram language-ID, quality scoring, token counting,
 document fingerprinting.
 
 All four are pure built-in-function column expressions - they run entirely
 JVM-side inside whole-stage codegen (no Python UDFs), so they scale with
-the scan. Each has an exact ANSI-SQL twin in __spark_entry__.oracle_sql.
+the scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# marker-word lists per language; ordered dict -> deterministic
-# alphabetical-language tie-break (greatest(..) picks first max via the
-# explicit CASE cascade below).
-LANG_MARKERS = {
-    "de": ("der", "und", "die", "nicht"),
-    "en": ("the", "and", "of", "is"),
-    "es": ("el", "la", "que", "los"),
-    "fr": ("le", "les", "et", "des"),
-}
 
 
 def _occurrences(col, word):
@@ -30,30 +20,6 @@ def _occurrences(col, word):
     counted once by both engines - the same convention on both sides."""
     padded = F.concat(F.lit(" "), col, F.lit(" "))
     return F.size(F.split(padded, F.lit(" " + word + " "))) - 1
-
-
-def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.lower(F.col(text_col))
-    out = df
-    for lang, words in LANG_MARKERS.items():
-        score = None
-        for w in words:
-            occ = _occurrences(c, w)
-            score = occ if score is None else score + occ
-        out = out.withColumn("score_" + lang, score)
-    return out
-
-
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id, predicted_lang: argmax of marker scores, 'und' when all 0,
-    ties broken by language code order (de < en < es < fr)."""
-    scored = lang_scores(df, text_col)
-    langs = sorted(LANG_MARKERS)
-    best = F.greatest(*[F.col("score_" + lang) for lang in langs])
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in langs:
-        pred = pred.when(F.col("score_" + lang) == best, F.lit(lang))
-    return scored.withColumn("predicted_lang", pred)
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -151,8 +117,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     Pure codegen: per-row array expressions only (split/array_distinct/
     array_sort + one fold per array - the most-frequent count is the max
     run length of the sorted array, avoiding any explode/groupBy
-    shuffle). A corpus filter is then a plain WHERE over these columns.
-    Exact SQL twin in __spark_entry__ (unnest + count(*) per group)."""
+    shuffle). A corpus filter is then a plain WHERE over these columns."""
     words = F.split(F.col(text_col), F.lit(" "))
     n = F.size(words)
     nd = F.size(F.array_distinct(words))
@@ -203,9 +168,7 @@ def unigram_logprob(df: DataFrame, id_col: str = "doc_id",
     Shape: one word explode (map-side) -> vocab join (AQE picks
     broadcast for LM-sized vocabs; the self-built corpus vocab stays a
     shuffle join at corpus scale, which is correct - a 100-TB corpus
-    vocab does not broadcast) -> one partial-agg groupBy per doc. Exact
-    SQL twin in __spark_entry__ (ln/avg agree across engines well below
-    the 6-decimal rounding)."""
+    vocab does not broadcast) -> one partial-agg groupBy per doc."""
     from .dedup import normalized_text
     tok = df.select(F.col(id_col),
                     F.explode(F.split(normalized_text(F.col(text_col)),
@@ -442,7 +405,7 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     scoring is three shuffle joins keyed on words (an LM over a web
     corpus does NOT broadcast - the shuffle is inherent, and AQE picks
     broadcast automatically at small scale) plus one per-doc partial
-    agg. Exact SQL twin in __spark_entry__."""
+    agg."""
     D = float(discount)
     bag = doc_bigrams(df, id_col, text_col)
     if bigram_model is None:

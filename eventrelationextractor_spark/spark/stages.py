@@ -523,12 +523,19 @@ def extract_kg_rows(pages: DataFrame, mode: str = "temporal",
             for t in trips:
                 yield (url, "triple", None, None, None, t.source, t.rel,
                        t.target)
+            if doc.memo.get("tt_truncated"):
+                yield _kg_meta_row(url, "TRUNCATED")
         return emit
 
-    # the same meta row extract_triples emits; canonicalization skips it
     return _map_pages(*_page_source(pages), KG_ROW_SCHEMA, make_emit,
-                      lambda url: [(url, "triple", None, None, None, "_doc",
-                                    "PARSE_ERROR", "_doc")])
+                      lambda url: [_kg_meta_row(url, "PARSE_ERROR")])
+
+
+def _kg_meta_row(url: str, pred: str) -> tuple:
+    """The ``_doc`` meta triple extract_triples emits for a truncated or
+    unparseable page; canonicalization keeps only SIMULTANEOUS/IDENTITY
+    edges, so it skips these."""
+    return (url, "triple", None, None, None, "_doc", pred, "_doc")
 
 
 FEATURE_EXPORT_SCHEMA = StructType([

@@ -39,6 +39,14 @@ def test_giant_page_truncation(spark):
                                   max_timexes_per_doc=1000).collect()
     assert len([r for r in full if r.pair_type == "tt"]) > len(tt)
     assert not [r for r in full if r.stage == "tt-truncated"]
+    # the KG path accounts for the truncated page the same way
+    for cap, n_meta in ((10, 1), (1000, 0)):
+        kg = stages.extract_kg_rows(pages, "temporal",
+                                    max_timexes_per_doc=cap).collect()
+        meta = [r for r in kg if r.pred == "TRUNCATED"]
+        assert len(meta) == n_meta
+        assert all((r.row_kind, r.subj, r.obj) == ("triple", "_doc", "_doc")
+                   for r in meta)
 
 
 def test_causal_tlinks_from_temporal_changes_features(spark):
