@@ -2415,224 +2415,6 @@ def _q_haar_signature(spark, sf_dir):
     return events.haar_coefficients(_events(spark, sf_dir))
 
 
-# ----------------------------------------------------------- diag probes
-#
-# Round-3/4 driver runs carried driver-only hash-reds (rows+schema green,
-# hash red) that no local replay reproduced — including a hostile-session
-# sweep (vanilla builder, shifted TZ, ANSI, 200 shuffle partitions). The
-# driver reports only booleans + row COUNTS per query, so these probes
-# encode diagnostics into the row-count channel: each emits 0 rows when
-# everything matches the locally-pinned expectation (a green gate row)
-# and otherwise N rows where N encodes WHAT diverged, readable straight
-# from spark_rows / oracle_rows in the driver's correctness report.
-# Spark rows carry 'spark:i' and oracle rows 'duck:i', so equal nonzero
-# counts still hash-red (never a false green).
-
-_DIAG_PIN_SPARK = "4.1.2"     # local engine versions the pins were made on
-_DIAG_PIN_DUCKDB = "v1.0.0"
-
-# Per-column md5 digests of each probed query's sf0.01 output (rows
-# sorted, values CAST to string, chr(1)-joined), pinned by
-# tools/make_diag_expected.py — REGENERATE after any change to a probed
-# query. A probe's row count is the bitmask of diverging columns:
-# sum(2^i) over pinned column order.
-_DIAG_EXPECTED: dict = {
-    'tpch_pricing_summary': [
-        ('l_returnflag', 'cbcf4cc872f0baf5cff59c07de2507d8'),
-        ('l_linestatus', '8aa0bd9b180d7d813674bdb0bce687c8'),
-        ('sum_qty', '069a1e929129d06b500bd3112f189104'),
-        ('sum_base_price_c', '66d5575268dfcfa50c9dcdc4ebfbbd7f'),
-        ('sum_disc_price_c2', 'e05eec830c3ff04ade2cfb433cfd65da'),
-        ('sum_charge_c4', '39c6340ee68da4da1d2c36726f41d1bc'),
-        ('avg_qty_ppm', '81c4f272fe219607da311c5baa83b785'),
-        ('avg_price_upd', 'dc255ca97e58c4e7c643db05c834cf41'),
-        ('avg_disc_upd', '3cb27dd0fc2be114e2aeeef749532089'),
-        ('count_order', '69b1f9abaa2506352f08eb2e5cd00985'),
-    ],
-    'quality_classifier': [
-        ('doc_id', 'f94e57f3de715885c94010ba15f3b6a4'),
-        ('n_bigrams', 'de08e7981a523a2c840ec3d4ccc4808a'),
-        ('score_upm', '434813752f1c71416e1f1d9cbfcad02f'),
-    ],
-    'ivm_refresh': [
-        ('event_type', 'e9527a738161455ba3be15b1dfadf668'),
-        ('day', '2d9c42c67fbd22fa1daa37606ba5fb7f'),
-        ('n', '96f81bd091fb2783045ef7b38d6ec037'),
-        ('sum_m', '00cafd9257649e6b99a677cf508017c0'),
-        ('min_m', 'da0875b8e162956810dc0b1838986c7e'),
-        ('max_m', 'a7f270049dde5ad0988d45eebd0f8317'),
-    ],
-    'sequence_packing': [
-        ('doc_id', 'f94e57f3de715885c94010ba15f3b6a4'),
-        ('grp', 'ab8c87c9964e35b10608a393b81df959'),
-        ('n_tokens', '7c2da2ddf458f58d09d253102b36ce71'),
-        ('start_offset', 'e722bc839676b29c06ab18aaeebd04a0'),
-        ('seq_first', 'ce0036c98f6eedd4c94a00ef1317393f'),
-        ('seq_last', 'eac02e2c53db5353642374b6fc8fc76c'),
-    ],
-    'hdr_quantiles': [
-        ('q_label', '0ce4ef2fd9de11895c8ab5684253138e'),
-        ('rank', '4bd1e65dac0ecf01aa8a9e8a48869db0'),
-        ('n_total', '8e669dc326e22be755b03c8ed845011b'),
-        ('bucket_lo', '44e63b77aad7c7556eb349f6ac82aa91'),
-        ('bucket_hi', '45fb4c145882e50289cc84fe38af4a99'),
-        ('estimate', '5775afac235610149d98bad62d39872d'),
-    ],
-}
-
-
-def _diag_probe_fn(qname: str, base_fn):
-    """Spark side of a per-column digest probe: re-run the probed query,
-    digest every column independently (sort_array(collect_list(cast
-    string))) and emit 2^i-bitmask-many rows over the columns whose
-    digest differs from the pin. All-match => 0 rows => green."""
-    def fn(spark, sf_dir):
-        pins = _DIAG_EXPECTED[qname]
-        df = base_fn(spark, sf_dir)
-        aggs = [F.md5(F.concat_ws("\x01", F.sort_array(
-                    F.collect_list(F.col(c).cast("string"))))).alias(f"_d{i}")
-                for i, (c, _h) in enumerate(pins)]
-        one = df.agg(*aggs)
-        mask = F.lit(0).cast("long")
-        for i, (_c, h) in enumerate(pins):
-            mask = mask + F.when(F.col(f"_d{i}") != F.lit(h),
-                                 F.lit(2 ** i)).otherwise(F.lit(0))
-        seq = F.when(mask > 0, F.sequence(F.lit(1).cast("long"),
-                                          mask.cast("long"))) \
-            .otherwise(F.expr("CAST(array() AS ARRAY<LONG>)"))
-        return (one.select(F.explode(seq).alias("i"))
-                .select(F.concat(F.lit("spark:"),
-                                 F.col("i").cast("string")).alias("probe")))
-    return fn
-
-
-def _diag_probe_sql(qname: str, base_sql: str) -> str:
-    """DuckDB twin: identical per-column digests over the probed
-    query's ORACLE result, same bitmask encoding, rows 'duck:i'."""
-    pins = _DIAG_EXPECTED[qname]
-    dexprs = ",\n  ".join(
-        f"md5(coalesce(string_agg(CAST({c} AS VARCHAR), chr(1) "
-        f"ORDER BY CAST({c} AS VARCHAR)), '')) AS _d{i}"
-        for i, (c, _h) in enumerate(pins))
-    mask = "\n    + ".join(
-        f"(CASE WHEN _d{i} <> '{h}' THEN {2 ** i} ELSE 0 END)"
-        for i, (_c, h) in enumerate(pins))
-    return f"""
-WITH _q AS ({base_sql}),
-_d AS (SELECT {dexprs} FROM _q),
-_m AS (SELECT CAST({mask} AS BIGINT) AS mask FROM _d)
-SELECT 'duck:' || CAST(u.i AS VARCHAR) AS probe
-FROM _m, LATERAL unnest(generate_series(1, _m.mask)) AS u(i)
-"""
-
-
-def _q_diag_env(spark, sf_dir):
-    """Engine/session telemetry through the row-count channel: 0 rows
-    when the driver environment matches the pinned local one, else
-    code = version_code*4 + (tz != UTC)*2 + ansi_enabled rows, where
-    version_code = major*10000 + minor*100 + patch of the ACTUAL Spark
-    version (0 when it equals the pin). spark_rows in the driver's
-    correctness file then reads out the exact environment delta."""
-    import re
-    code = 0
-    m = re.match(r"(\d+)\.(\d+)\.(\d+)", spark.version)
-    if not m or m.group(0) != _DIAG_PIN_SPARK:
-        v = [int(x) for x in (m.groups() if m else ("9", "9", "9"))]
-        code += (v[0] * 10000 + v[1] * 100 + v[2]) * 4
-    # NB conf.get(key, default) VALIDATES the default when the key is
-    # unset (an empty-string default throws INVALID_CONF_VALUE) — use
-    # None and coalesce in Python
-    tz = spark.conf.get("spark.sql.session.timeZone", None) or ""
-    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00"):
-        code += 2
-    if str(spark.conf.get("spark.sql.ansi.enabled", None) or "false") \
-            .lower() == "true":
-        code += 1
-    rows = [(f"spark:{i}",) for i in range(1, code + 1)]
-    return spark.createDataFrame(rows, "probe string")
-
-
-_DIAG_ENV_ORACLE = rf"""
-WITH p AS (SELECT regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)',
-                                 ['ma', 'mi', 'pa']) AS v),
-m AS (SELECT CASE WHEN version() = '{_DIAG_PIN_DUCKDB}' THEN 0
-             ELSE CAST(v.ma AS BIGINT) * 10000
-                  + CAST(v.mi AS BIGINT) * 100
-                  + CAST(v.pa AS BIGINT) END AS mask FROM p)
-SELECT 'duck:' || CAST(u.i AS VARCHAR) AS probe
-FROM m, LATERAL unnest(generate_series(1, m.mask)) AS u(i)
-"""
-
-
-def _q_diag_norm(spark, sf_dir):
-    """Comparator-normalization probe: fixed rows that are identical on
-    both engines BY CONSTRUCTION (literals + one engine-computed
-    trunc-div canary). If THIS probe goes driver-red, the divergence is
-    in the harness's value normalization (type handling, float repr,
-    NULLs, unicode), not in any query. The negdiv row also canaries
-    DuckDB's integer // staying trunc-toward-zero (== Spark div)."""
-    return spark.sql("""
-SELECT * FROM VALUES
-  ('int',    CAST(123456789012345 AS BIGINT),  CAST(1.5 AS DOUBLE), 'a'),
-  ('negdiv', -7 div 2,                         CAST(0 AS DOUBLE),   'b'),
-  ('big',    CAST(4611686018427387904 AS BIGINT), CAST(0.1 AS DOUBLE), 'c'),
-  ('third',  CAST(0 AS BIGINT),                CAST(1.0 AS DOUBLE) / 3.0,
-             'd'),
-  ('neg0',   CAST(0 AS BIGINT),                CAST(-0.0 AS DOUBLE), 'e'),
-  ('uni',    CAST(0 AS BIGINT),                CAST(0.0 AS DOUBLE),
-             concat('h', char(233), 'llo')),
-  ('empty',  CAST(0 AS BIGINT),                CAST(0.0 AS DOUBLE), ''),
-  ('null',   CAST(NULL AS BIGINT),             CAST(NULL AS DOUBLE),
-             CAST(NULL AS STRING))
-AS t(tag, i, d, s)
-""")
-
-
-_DIAG_NORM_ORACLE = """
-SELECT * FROM (VALUES
-  ('int',    CAST(123456789012345 AS BIGINT),  CAST(1.5 AS DOUBLE), 'a'),
-  ('negdiv', CAST((-7) // 2 AS BIGINT),        CAST(0 AS DOUBLE),   'b'),
-  ('big',    CAST(4611686018427387904 AS BIGINT), CAST(0.1 AS DOUBLE),
-             'c'),
-  ('third',  CAST(0 AS BIGINT),                CAST(1.0 AS DOUBLE) / 3.0,
-             'd'),
-  ('neg0',   CAST(0 AS BIGINT),                CAST(-0.0 AS DOUBLE), 'e'),
-  ('uni',    CAST(0 AS BIGINT),                CAST(0.0 AS DOUBLE),
-             'h' || chr(233) || 'llo'),
-  ('empty',  CAST(0 AS BIGINT),                CAST(0.0 AS DOUBLE), ''),
-  ('null',   CAST(NULL AS BIGINT),             CAST(NULL AS DOUBLE),
-             CAST(NULL AS VARCHAR))
-) t(tag, i, d, s)
-"""
-
-
-def _q_diag_libm(spark, sf_dir):
-    """libm canary: floor(f(x) * 1e15) BIGINTs for the transcendentals
-    the float-surface queries lean on (exp/ln/pow + a sigmoid). Local
-    JVM and DuckDB agree bit-exactly on all five (verified this
-    session); if the driver shows this red, its engines' libm differs
-    in the last ulp — the root-cause class the round-4 verdict
-    hypothesized for quality_classifier's driver-only hash-red."""
-    return spark.sql("""
-SELECT CAST(floor(exp(1.0D) * 1e15) AS BIGINT)  AS exp1,
-       CAST(floor(exp(-2.5D) * 1e18) AS BIGINT) AS expm25,
-       CAST(floor(ln(3.0D) * 1e15) AS BIGINT)   AS ln3,
-       CAST(floor(power(2.0D, 0.5D) * 1e15) AS BIGINT) AS sqrt2,
-       CAST(floor((1.0D / (1.0D + exp(-0.7D))) * 1e15) AS BIGINT)
-         AS sigmoid07
-""")
-
-
-_DIAG_LIBM_ORACLE = """
-SELECT CAST(floor(exp(1.0) * 1e15) AS BIGINT)  AS exp1,
-       CAST(floor(exp(-2.5) * 1e18) AS BIGINT) AS expm25,
-       CAST(floor(ln(3.0) * 1e15) AS BIGINT)   AS ln3,
-       CAST(floor(pow(2.0, 0.5) * 1e15) AS BIGINT) AS sqrt2,
-       CAST(floor((1.0 / (1.0 + exp(-0.7))) * 1e15) AS BIGINT)
-         AS sigmoid07
-"""
-
-
 def _q_rfm_segments(spark, sf_dir):
     """RFM segmentation census (ops/events.py::rfm_segments): per-user
     recency/frequency/monetary quintiles via the bucket-offset exact
@@ -2736,23 +2518,6 @@ def _q_json_schema_infer(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # --- driver hash-gate window (first 50): diag probes first (the
-        # --- round-4 verdict's #1 item: make driver-only hash-reds
-        # --- diagnosable through the row-count channel), then the
-        # --- hardened former reds, the north-rule flagships, the
-        # --- round-4-late rotation, and one risky representative per
-        # --- family; the full set is gated locally either way
-        "diag_env": _q_diag_env,
-        "diag_norm": _q_diag_norm,
-        "diag_libm": _q_diag_libm,
-        "diag_tpch_pricing": _diag_probe_fn("tpch_pricing_summary",
-                                            _q_tpch_pricing),
-        "diag_quality_clf": _diag_probe_fn("quality_classifier",
-                                           _q_quality_classifier),
-        "diag_ivm": _diag_probe_fn("ivm_refresh", _q_ivm_refresh),
-        "diag_packing": _diag_probe_fn("sequence_packing",
-                                       _q_sequence_packing),
-        "diag_hdr": _diag_probe_fn("hdr_quantiles", _q_hdr_quantiles),
         "ivm_refresh": _q_ivm_refresh,
         "sequence_packing": _q_sequence_packing,
         "quality_classifier": _q_quality_classifier,
@@ -2795,7 +2560,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_frame_stats": _q_audio_frame_stats,
         "wl_colors": _q_wl_colors,
         "haar_signature": _q_haar_signature,
-        # --- end of the 50-query driver window ---
+        # --- end of the 42-query session-sweep window ---
         "symspell_correct": _q_symspell_correct,
         "kg_fixture_temporal": _q_fixture_temporal,
         "gazetteer_spans": _q_gazetteer_spans,
@@ -3474,9 +3239,9 @@ fl AS (SELECT f.doc_id, f.bucket, f.cnt, nd.n, lab.y
        FROM feat f JOIN nd USING (doc_id) JOIN lab USING (doc_id)),
 ntr AS (SELECT count(DISTINCT doc_id) AS nt FROM fl),
 -- fixed-point replay: everything BIGINT micro-units; DuckDB's integer
--- // truncates toward zero exactly like Spark's div (probed by the
--- diag_norm canary row), and integer sums commute exactly, so this
--- replay is bit-identical to the Spark training loop by construction.
+-- // truncates toward zero exactly like Spark's div, and integer sums
+-- commute exactly, so this replay is bit-identical to the Spark
+-- training loop by construction.
 e1 AS (SELECT DISTINCT doc_id,
               500000 - CAST(y * 1000000 AS BIGINT) AS err FROM fl),
 g1 AS (SELECT bucket, sum((e1.err * fl.cnt) // fl.n) AS gn
@@ -6553,17 +6318,6 @@ def oracle_sql() -> dict[str, str]:
     for name in fx.CAUSAL_FIXTURES:
         fixture_causal += fx.golden_predictions(name, "causal")
     return {
-        "diag_env": _DIAG_ENV_ORACLE,
-        "diag_norm": _DIAG_NORM_ORACLE,
-        "diag_libm": _DIAG_LIBM_ORACLE,
-        "diag_tpch_pricing": _diag_probe_sql("tpch_pricing_summary",
-                                             _TPCH_Q1_ORACLE),
-        "diag_quality_clf": _diag_probe_sql("quality_classifier",
-                                            _QUALITY_CLF_ORACLE),
-        "diag_ivm": _diag_probe_sql("ivm_refresh", _IVM_ORACLE),
-        "diag_packing": _diag_probe_sql("sequence_packing",
-                                        _PACKING_ORACLE),
-        "diag_hdr": _diag_probe_sql("hdr_quantiles", _HDR_ORACLE),
         "kg_temporal_triples": _TT_ORACLE,
         "kg_causal_triples": _CAUSAL_ORACLE,
         "kg_temporal_salted": _TT_ORACLE,

@@ -4,8 +4,8 @@ cascades (SURVEY.md §3.1, §3.2) as pure functions DocState -> triples.
 Semantics follow /root/reference/src/relpro/TempRelPro.java:508-615
 (testModel: tt rules -> E-DCT rule(+clf) -> E-T rule(+clf) -> E-E rule(+clf))
 and CauseRelPro.java:97-305,377-398. At the Spark layer one call of these
-functions handles one document inside an ``applyInPandas`` group - the
-corpus is embarrassingly parallel by url.
+functions handles one page inside ``spark.stages._map_pages``'
+``mapInArrow`` - the corpus is embarrassingly parallel by url.
 
 Replicated quirks:
 * the timex-timex loop iterates ``doc.getEntities().keySet().toArray()`` in

@@ -177,3 +177,14 @@ def filter_consistent(relations) -> tuple:
         ok = item[2] not in _CONSTRAINTS or g.add_relation(*item[:3])
         (kept if ok else violated).append(item)
     return kept, violated
+
+
+def keep_consistent(triples) -> list:
+    """The per-document consistency filter over triples with ``source``,
+    ``target`` and ``rel`` attributes: one sort into (source, target, rel)
+    priority order, one ``filter_consistent`` pass, and the accepted
+    triples returned in their original order."""
+    kept, _ = filter_consistent(sorted((t.source, t.target, t.rel)
+                                       for t in triples))
+    keep = set(kept)
+    return [t for t in triples if (t.source, t.target, t.rel) in keep]

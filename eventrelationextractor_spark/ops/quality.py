@@ -1467,7 +1467,7 @@ def ipw_ate(df: DataFrame, stratum_col: str, arm_col, y_col: str) \
     w_all = Window.rowsBetween(Window.unboundedPreceding,
                                Window.unboundedFollowing)
     # trunc-div twins on negatives too: Spark `div` and DuckDB `//`
-    # both truncate toward zero (measured; diag_norm carries the canary)
+    # both truncate toward zero (measured: -7 div 2 = -3 on both)
     per = (per
            .withColumn("_nu", F.sum(F.when(F.col("used") == 1,
                                            F.col("n")).otherwise(F.lit(0)))
@@ -1764,8 +1764,8 @@ def wilson_rank(df: DataFrame, group_col: str, success_col: str,
     fixed arithmetic tree over them evaluated in DOUBLE — every op
     (+ * / sqrt) is IEEE correctly-rounded, and both engines evaluate
     the IDENTICAL expression on identical integers, so
-    floor(1e6 * L) is bit-exact cross-engine (the diag_libm class of
-    guarantee: no libm transcendental is involved, sqrt is exact).
+    floor(1e6 * L) is bit-exact cross-engine (no libm transcendental
+    is involved, and sqrt is correctly rounded on both).
     A p=0 group leaves an ULP residue of ~-2e-17 (floor -> -1 ppm),
     clamped to 0 identically on both engines. Final rank orders on
     (wilson_ppm desc, group)."""

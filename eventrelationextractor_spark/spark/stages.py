@@ -165,6 +165,7 @@ def _map_pages(src: DataFrame, gen_pages, schema: StructType, make_emit,
 
 
 _TRIPLE_ERROR = ("_doc", "PARSE_ERROR", "_doc", "parse-error", "meta")
+_TRIPLE_TRUNCATED = ("_doc", "TRUNCATED", "_doc", "tt-truncated", "meta")
 
 
 def _triple_rows(url: str, trips) -> Iterator:
@@ -191,9 +192,7 @@ def extract_triples(pages: DataFrame, mode: str = "both",
     ``consistent_only``: apply the per-document timegraph consistency
     filter (G1) to the temporal triples *inside the same UDF*. The
     timegraph is doc-local (no cross-document edges exist, SURVEY.md §2.8),
-    so filtering here costs zero extra stages; the
-    groupBy.applyInPandas variant is only needed for triple tables that
-    were already materialized without the filter.
+    so filtering here costs zero extra stages.
 
     ``pages`` may be a bare doc_id frame: the synthetic page is then
     generated in the same UDF (see _page_source)."""
@@ -201,7 +200,7 @@ def extract_triples(pages: DataFrame, mode: str = "both",
     def make_emit():
         from ..core.lexicons import load_lexicons
         from ..core.pipeline import causal_triples, temporal_triples
-        from ..core.timegraph import filter_consistent
+        from ..core.timegraph import keep_consistent
         lx = load_lexicons()
 
         def emit(url, doc):
@@ -210,12 +209,7 @@ def extract_triples(pages: DataFrame, mode: str = "both",
                 temporal = temporal_triples(
                     doc, lx, max_timexes=max_timexes_per_doc)
                 if consistent_only:
-                    ordered = sorted((t.source, t.target, t.rel)
-                                     for t in temporal)
-                    kept, _ = filter_consistent(ordered)
-                    keep = set(kept)
-                    temporal = [t for t in temporal
-                                if (t.source, t.target, t.rel) in keep]
+                    temporal = keep_consistent(temporal)
                 yield from _triple_rows(url, temporal)
             if mode in ("causal", "both"):
                 tlinks_map = None
@@ -225,8 +219,7 @@ def extract_triples(pages: DataFrame, mode: str = "both",
                 yield from _triple_rows(url, causal_triples(
                     doc, tlinks_map=tlinks_map, lexicons=lx))
             if doc.memo.get("tt_truncated"):
-                yield (url, "_doc", "TRUNCATED", "_doc", "tt-truncated",
-                       "meta")
+                yield (url, *_TRIPLE_TRUNCATED)
         return emit
 
     return _map_pages(*_page_source(pages), TRIPLE_SCHEMA, make_emit,
@@ -247,9 +240,10 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
     ``salt`` copies, hash-repartitioned on (url, salt) so the copies land
     on different tasks, and each copy computes exactly the pair_slice
     (s, salt) of the tt pair space (copy 0 also runs the linear candidate
-    sieves and carries the page's one error row). Normal pages take the
-    usual shuffle-free path; the union is exactly extract_triples' output
-    - asserted in tests. A page without text counts as 0 bytes.
+    sieves and carries the page's one error row and its truncation row).
+    Normal pages take the usual shuffle-free path; the union is exactly
+    extract_triples' output - asserted in tests. A page without text
+    counts as 0 bytes.
 
     Requires a real pages input (text column): the giant/normal split
     predicate needs the text length at plan time."""
@@ -274,6 +268,8 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
                     pair_slice=(s, salt)))
             if s == 0 and mode in ("causal", "both"):
                 yield from _triple_rows(url, causal_triples(doc, lexicons=lx))
+            if s == 0 and doc.memo.get("tt_truncated"):
+                yield (url, *_TRIPLE_TRUNCATED)
         return emit
 
     return normal.unionByName(_map_pages(

@@ -1,6 +1,8 @@
 """extract_triples options: giant-page skew guard + J4 temporal->causal
 tlink feeding."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from eventrelationextractor_spark import fixtures as fx
@@ -47,6 +49,13 @@ def test_giant_page_truncation(spark):
         assert len(meta) == n_meta
         assert all((r.row_kind, r.subj, r.obj) == ("triple", "_doc", "_doc")
                    for r in meta)
+    # and so does the salted path, when the capped page takes its giant
+    # branch: the union is exactly extract_triples' rows, marker included
+    salted = stages.extract_triples_salted(pages, "temporal", salt=4,
+                                           giant_page_bytes=0,
+                                           max_timexes_per_doc=10)
+    assert (Counter(tuple(r) for r in salted.collect())
+            == Counter(tuple(r) for r in rows))
 
 
 def test_causal_tlinks_from_temporal_changes_features(spark):

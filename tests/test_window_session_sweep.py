@@ -1,12 +1,9 @@
-"""Driver-window session-config sweep (round-4 verdict item #3): every
-query in the 50-entry driver hash-gate window must produce a
-value-hash-identical result under a hostile session configuration —
-ANSI on, a shifted session timezone, an odd shuffle-partition count.
-Round 4 proved this by hand for the five driver-red queries; this
-automates the insensitivity proof for every window entry, so a future
-window addition that leans on session defaults (TZ-rendered
-timestamps, non-ANSI division, partition-count-sensitive float merge
-order) fails HERE instead of only in the driver's environment.
+"""Registry-window session-config sweep: every query in the first 42
+``queries()`` entries must produce a value-hash-identical result under a
+hostile session configuration -- ANSI on, a shifted session timezone, an
+odd shuffle-partition count. A window query that leans on session
+defaults (TZ-rendered timestamps, non-ANSI division,
+partition-count-sensitive float merge order) fails HERE.
 
 Runs at sf0.001 (hash equality is within-process, same data on both
 sides, so the smallest corpus suffices to catch config sensitivity)."""
@@ -30,9 +27,8 @@ def test_driver_window_is_session_config_insensitive(spark):
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    # diag_env EXISTS to reflect the session config through its row
-    # count (TZ / ANSI flags) — insensitivity would defeat it
-    window = [n for n in list(qs)[:50] if n != "diag_env"]
+    # the old 50-entry driver window without its 8 diagnostic probes
+    window = list(qs)[:42]
 
     def run_all():
         out = {}

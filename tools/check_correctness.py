@@ -1,8 +1,8 @@
-"""Local mirror of the driver's correctness gate: run every
+"""The local registry-vs-oracle gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same parquet tables, compare row count, schema (column
 names sorted) and a value hash (rows sorted, columns sorted by name,
-floats rounded via repr).
+floats rounded via repr). Every query must read ``ok`` at any scale.
 
 Usage: python tools/check_correctness.py [query ...]   (default: all)
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01)

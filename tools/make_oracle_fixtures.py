@@ -58,7 +58,7 @@ def doc_rows(d: int) -> tuple:
     from eventrelationextractor_spark.core.awareness import (
         temporal_awareness)
     from eventrelationextractor_spark.core.pipeline import temporal_triples
-    from eventrelationextractor_spark.core.timegraph import filter_consistent
+    from eventrelationextractor_spark.core.timegraph import keep_consistent
     from eventrelationextractor_spark.datagen import synth_page
     from eventrelationextractor_spark.spark.stages import parse_page
 
@@ -66,11 +66,8 @@ def doc_rows(d: int) -> tuple:
     doc = parse_page(page["text"], page["url"])
     temporal = temporal_triples(doc, _lexicons(), max_timexes=500)
 
-    ordered = sorted((t.source, t.target, t.rel) for t in temporal)
-    kept, _ = filter_consistent(ordered)
-    keep = set(kept)
-    cons = [(d, t.source, t.rel, t.target) for t in temporal
-            if (t.source, t.target, t.rel) in keep]
+    cons = [(d, t.source, t.rel, t.target)
+            for t in keep_consistent(temporal)]
 
     gold = [(t.source, t.target, t.rel) for t in temporal]
     pred = [r for r in gold if not (d % 9 == 0 and r[0] == "e4")]
