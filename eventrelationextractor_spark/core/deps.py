@@ -8,7 +8,7 @@ dependency-path DFS (615-670) plus the EE/ET path drivers
 
 The Java DFS iterates each token's dependent HashMap in HashMap order and
 takes the first complete path; we reproduce that order via
-``javacompat.java_hashmap_order`` so tie-breaks match. The Java never marks
+``javacompat.dependency_order`` so tie-breaks match. The Java never marks
 nodes visited (its ``visited`` list is never appended) - we guard only
 against revisiting a node already on the current DFS stack, which diverges
 solely where the Java would recurse forever.
@@ -17,7 +17,7 @@ solely where the Java would recurse forever.
 from __future__ import annotations
 
 from .docmodel import DocState, Mention
-from .javacompat import java_hashmap_order
+from .javacompat import dependency_order
 
 MODAL_VERBS = ("will", "can", "may", "shall", "should")
 
@@ -188,7 +188,7 @@ def mate_subject_from_verb(doc: DocState, tok_id: str, _depth: int = 0):
     head = mate_head_verb(doc, tok_id)
     head_tok = doc.tokens[head]
     if head_tok.deps:
-        for t in java_hashmap_order(head_tok.dep_order):
+        for t in dependency_order(head_tok.dep_order):
             if (head_tok.deps[t] == "SBJ"
                     and doc.tokens[t].lemma not in ("that", "which", "``", "`", "''", "'")):
                 return t
@@ -210,7 +210,7 @@ def mate_object_from_verb(doc: DocState, tok_id: str):
     pos_in_sent = {t: i for i, t in enumerate(sent)}
     tok = doc.tokens[tok_id]
     if tok.deps:
-        for t in java_hashmap_order(tok.dep_order):
+        for t in dependency_order(tok.dep_order):
             rel = tok.deps[t]
             if rel == "OBJ" or (rel == "VC"
                                 and pos_in_sent.get(t, -1) > pos_in_sent.get(tok_id, 1 << 30)):
@@ -255,33 +255,63 @@ def mate_main_verb(doc: DocState, e: Mention) -> str:
     return "O"
 
 
-def _dfs_first_path(doc: DocState, gov_id: str, targets, path_so_far: str,
-                    on_stack: set):
-    """generateDependencyPath (615-637): preorder DFS, first hit wins."""
-    tok = doc.tokens.get(gov_id)
-    if tok is None or not tok.deps or gov_id in on_stack:
-        return None
-    on_stack.add(gov_id)
-    try:
-        for key in java_hashmap_order(tok.dep_order):
-            rel = tok.deps[key]
-            if key in targets:
-                return path_so_far + "-" + rel
-            found = _dfs_first_path(doc, key, targets, path_so_far + "-" + rel,
-                                    on_stack)
-            if found is not None:
-                return found
-        return None
-    finally:
-        on_stack.discard(gov_id)
-
-
 def first_dependency_path(doc: DocState, gov_id: str, targets) -> str | None:
     """First DFS path from gov_id to any token in ``targets`` (with the
-    leading '-' still attached, as the Java accumulates it)."""
+    leading '-' still attached, as the Java accumulates it): the first
+    (dependent, path) pair generateDependencyPath's (615-637) preorder DFS
+    tests against the targets.
+
+    Answered from a per-governor index memoized in ``doc.memo``: the
+    preorder position and path at which the walk first reached each token,
+    and the suspended walk itself. A query whose targets are indexed takes
+    the earliest one; otherwise it resumes the walk only until a target
+    comes up, so no query walks further than the DFS would have. Each
+    governor's index is one list holding two str/int dicts and the flat
+    DFS stack, so a document's indexes add few objects for the collector
+    to scan."""
     if isinstance(targets, str):
         targets = (targets,)
-    return _dfs_first_path(doc, gov_id, frozenset(targets), "", set())
+    walks = doc.memo.get("dep_preorder")
+    if walks is None:
+        walks = doc.memo["dep_preorder"] = {}
+    index = walks.get(gov_id)
+    if index is None:
+        # [position, paths] + the stack, 5 slots per node: id, deps,
+        # dependent order, next dependent, path to it; deps None = the
+        # node is reached but not yet visited
+        index = walks[gov_id] = [{}, {}, gov_id, None, None, 0, ""]
+    position, paths = index[0], index[1]
+    best = None
+    for t in targets:
+        n = position.get(t)
+        if n is not None and (best is None or n < position[best]):
+            best = t
+    if best is not None:
+        return paths[best]
+    tokens = doc.tokens
+    while len(index) > 2:
+        if index[-4] is None:
+            node = index[-5]
+            tok = tokens.get(node)
+            if tok is None or not tok.deps or node in index[2:-5:5]:
+                del index[-5:]
+                continue
+            index[-4] = tok.deps
+            index[-3] = dependency_order(tok.dep_order)
+        deps, keys, i, path = index[-4], index[-3], index[-2], index[-1]
+        if i == len(keys):
+            del index[-5:]
+            continue
+        index[-2] = i + 1
+        dep = keys[i]
+        p = path + "-" + deps[dep]
+        index += (dep, None, None, 0, p)
+        if dep not in position:
+            position[dep] = len(position)
+            paths[dep] = p
+            if dep in targets:
+                return p
+    return None
 
 
 def _reverse_path(path: str) -> str:

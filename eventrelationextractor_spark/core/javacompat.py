@@ -43,28 +43,43 @@ def hashmap_capacity(n: int) -> int:
     return cap
 
 
-_ORDER_CACHE: dict = {}
 _HASH_CACHE: dict = {}
 
 
 def java_hashmap_order(keys_in_insertion_order) -> list:
     """Iteration order of a default HashMap<String,?> built by inserting
-    ``keys_in_insertion_order`` (unique keys) one by one. Results are
-    memoized: dependency maps repeat the same key tuples thousands of
-    times per document during the path DFS."""
-    keys = tuple(keys_in_insertion_order)
-    cached = _ORDER_CACHE.get(keys)
-    if cached is not None:
-        return cached
-    cap = hashmap_capacity(len(keys))
-    buckets: list[list] = [[] for _ in range(cap)]
-    for k in keys:
-        h = _HASH_CACHE.get(k)
+    ``keys_in_insertion_order`` (unique keys) one by one: bucket order,
+    insertion order within a bucket (a stable sort on the bucket index).
+    Key hashes are memoized (a bounded str -> int dict, which the
+    collector never scans)."""
+    keys = list(keys_in_insertion_order)
+    mask = hashmap_capacity(len(keys)) - 1
+    hashes = _HASH_CACHE
+
+    def bucket(k):
+        h = hashes.get(k)
         if h is None:
             h = _spread(java_string_hash(k))
-            _HASH_CACHE[k] = h
-        buckets[h & (cap - 1)].append(k)
-    out = [k for b in buckets for k in b]
-    if len(_ORDER_CACHE) < 1_000_000:
-        _ORDER_CACHE[keys] = out
+            if len(hashes) < 100_000:
+                hashes[k] = h
+        return h & mask
+
+    keys.sort(key=bucket)
+    return keys
+
+
+_ORDER_CACHE: dict = {}
+
+
+def dependency_order(dep_order: tuple) -> tuple:
+    """``java_hashmap_order`` of a token's dependent map (its insertion
+    order ``dep_order``), memoized per process: the path and verb walks
+    ask for the same small token-id tuples across every document. Only
+    these are cached - per-page keys (entity ids, candidate pairs) never
+    repeat - and as tuples of strings, which the collector untracks."""
+    out = _ORDER_CACHE.get(dep_order)
+    if out is None:
+        out = tuple(java_hashmap_order(dep_order))
+        if len(_ORDER_CACHE) < 100_000:
+            _ORDER_CACHE[dep_order] = out
     return out

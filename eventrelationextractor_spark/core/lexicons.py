@@ -10,6 +10,7 @@ import os
 from dataclasses import dataclass, field
 
 from ..respath import read_resource_text
+from .javacompat import java_hashmap_order
 
 
 def _read_lines(res_dir, name):
@@ -40,15 +41,6 @@ class Lexicons:
     # lazily-built caches (compiled once per process, shared by all docs)
     _compiled: dict = field(default_factory=dict, repr=False)
 
-    def compiled_causal_patterns(self) -> dict:
-        """id -> compiled ' pattern ' regex (marker search, X7)."""
-        import re
-        if "pat" not in self._compiled:
-            self._compiled["pat"] = {
-                k: re.compile(" " + p + " ")
-                for k, p in self.causal_pattern.items()}
-        return self._compiled["pat"]
-
     def gate_signal_regex(self):
         """Single alternation for the sentence gate (CauseRelPro.java:61-77;
         the keys are the numeric ids - reference bug kept)."""
@@ -73,6 +65,46 @@ class Lexicons:
                    "timex": self.temporal_timex}[which]
             self._compiled[which] = sorted(src, reverse=True)
         return self._compiled[which]
+
+    def signal_keys_in(self, which: str, words) -> list:
+        """The ``sorted_signal_keys(which)`` whose first word is in the set
+        ``words``, in that order. ``" " + key + " " in ctx`` implies that
+        key's first word is one of ``ctx.split(" ")``, so a caller passing
+        the words of every context it tests skips only keys that cannot
+        match."""
+        index = self._compiled.get(("first_word", which))
+        if index is None:
+            index = self._compiled[("first_word", which)] = {}
+            for key in self.sorted_signal_keys(which):
+                index.setdefault(key.split(" ")[0], []).append(key)
+        hits = []
+        for w in words:
+            keys = index.get(w)
+            if keys is not None:
+                hits += keys
+        hits.sort(reverse=True)
+        return hits
+
+    def causal_plan(self) -> list:
+        """(id, compiled ' pattern ' regex, leading word) per causal signal
+        (marker search, X7), in the HashMap order of the ids
+        (PairFeatureVector.java:1406). The leading word is the pattern's
+        literal ``[a-z]+`` prefix when a plain space follows it (or it is
+        the whole pattern): every match then starts with ' word ', so a
+        context whose words lack it cannot match. None - always search -
+        for any other pattern (id 53 ``th[ai][st] ...``) and for any
+        alternation."""
+        import re
+        if "plan" not in self._compiled:
+            plan = []
+            for key in java_hashmap_order(list(self.causal_cluster)):
+                raw = self.causal_pattern[key]
+                lead = re.match(r"([a-z]+)(?: (?![*+?{])|$)", raw)
+                plan.append((key, re.compile(" " + raw + " "),
+                             lead.group(1) if lead and "|" not in raw
+                             else None))
+            self._compiled["plan"] = plan
+        return self._compiled["plan"]
 
 
 _CACHE: Lexicons | None = None

@@ -21,6 +21,10 @@ Replicated quirks (all cited to the Java):
   running ``i`` offset and collision bumping.
 * The connective markers (X9) only feed features absent from every shipped
   liblinear featureList, so they are not required for pipeline parity.
+
+The searches keep each lexicon's order but skip what cannot match: a
+temporal key whose first word is not a word of its contexts, a causal
+pattern whose leading literal word is not (``Lexicons.causal_plan``).
 """
 
 from __future__ import annotations
@@ -31,7 +35,6 @@ from .deps import (first_dependency_path, is_mate_passive_verb,
                    mate_verb_from_adj, mate_verb_from_sbj_noun,
                    span_token_ids, token_attr)
 from .docmodel import DocState, Mention
-from .javacompat import java_hashmap_order
 
 
 class Marker:
@@ -58,10 +61,14 @@ def java_split_space(s: str) -> list:
 
 
 def _get_string(doc: DocState, start_tok: str, end_tok: str) -> str:
-    """PairFeatureVector.getString (653-660): lowercased token text join."""
-    i0 = doc.tokens[start_tok].idx
-    i1 = doc.tokens[end_tok].idx
-    return " ".join(doc.tokens[t].text.lower() for t in doc.token_arr[i0:i1 + 1])
+    """PairFeatureVector.getString (653-660): lowercased token text join,
+    over the document's lowered token texts (memoized once per doc)."""
+    lowered = doc.memo.get("lowered")
+    if lowered is None:
+        lowered = doc.memo["lowered"] = [doc.tokens[t].text.lower()
+                                         for t in doc.token_arr]
+    return " ".join(lowered[doc.tokens[start_tok].idx:
+                            doc.tokens[end_tok].idx + 1])
 
 
 def _tid_entity_before_after(doc: DocState, e: Mention):
@@ -276,6 +283,14 @@ def _keyed_signal_marker(doc: DocState, e1: Mention, e2: Mention, signal_list,
     return m
 
 
+def _words(*contexts) -> set:
+    """Every word of the context strings: ``ctx.split(" ")`` joined."""
+    out = set()
+    for ctx in contexts:
+        out.update(ctx.split(" "))
+    return out
+
+
 def _argmin_candidates(candidates: dict) -> Marker:
     if not candidates:
         return _NO_MARKER
@@ -288,8 +303,7 @@ def get_temporal_signal(doc: DocState, e1: Mention, e2: Mention,
     ev_list = lexicons.temporal_event
     tmx_list = lexicons.temporal_timex
     signal_list = tmx_list if e2.is_timex else ev_list
-    sig_keys = lexicons.sorted_signal_keys("timex" if e2.is_timex else "event")
-    ev_keys = lexicons.sorted_signal_keys("event")
+    which = "timex" if e2.is_timex else "event"
     candidates: dict = {}
 
     if is_same_sentence(doc, e1, e2):
@@ -305,7 +319,8 @@ def get_temporal_signal(doc: DocState, e1: Mention, e2: Mention,
         ctx_begin = _get_string(doc, s.start_tok, tid_begin)
         ctx_entity = _get_string(doc, e2.start_tok, e2.end_tok)
 
-        for key in sig_keys:
+        for key in lexicons.signal_keys_in(
+                which, _words(ctx_entity, ctx_between)):
             pad = " " + key + " "
             if pad in ctx_entity:
                 m = _pair_signal_marker(doc, e1, e2, signal_list, key,
@@ -315,7 +330,8 @@ def get_temporal_signal(doc: DocState, e1: Mention, e2: Mention,
                 m = _pair_signal_marker(doc, e1, e2, signal_list, key,
                                         "BETWEEN", ctx_between, tid_before2)
                 candidates[_signal_entity_distance(key, ctx_between, "BETWEEN") + 100] = m
-        for key in ev_keys:
+        for key in lexicons.signal_keys_in(
+                "event", _words(ctx_before, ctx_begin)):
             pad = " " + key + " "
             if pad in ctx_before:
                 m = _pair_signal_marker(doc, e1, e2, ev_list, key,
@@ -329,7 +345,7 @@ def get_temporal_signal(doc: DocState, e1: Mention, e2: Mention,
         s2 = doc.sentences[e2.sent_id]
         tid_begin2 = _tid_begin(doc, s2)
         ctx_begin2 = _get_string(doc, s2.start_tok, tid_begin2)
-        for key in ev_keys:
+        for key in lexicons.signal_keys_in("event", _words(ctx_begin2)):
             if " " + key + " " in ctx_begin2:
                 m = _pair_signal_marker(doc, e1, e2, ev_list, key,
                                         "BEGIN-BETWEEN", ctx_begin2, s2.start_tok)
@@ -352,7 +368,6 @@ def _temporal_signal_per_entity(doc: DocState, ent: Mention,
                                 lexicons) -> Marker:
     signal_list = (lexicons.temporal_timex if ent.is_timex
                    else lexicons.temporal_event)
-    sig_keys = lexicons.sorted_signal_keys("timex" if ent.is_timex else "event")
     s = doc.sentences[ent.sent_id]
     tid_before1, _ = _tid_entity_before_after(doc, ent)
     tid_start1, tid_end1 = _tid_before_after(doc, ent)
@@ -374,7 +389,9 @@ def _temporal_signal_per_entity(doc: DocState, ent: Mention,
         m.dep2 = ""
         return m
 
-    for key in sig_keys:
+    for key in lexicons.signal_keys_in(
+            "timex" if ent.is_timex else "event",
+            _words(ctx_entity, ctx_before, ctx_after, ctx_begin)):
         pad = " " + key + " "
         if pad in ctx_entity:
             m = per_entity_marker(key, "INSIDE", ctx_entity, ent.start_tok)
@@ -409,8 +426,7 @@ def get_causal_signal(doc: DocState, e1: Mention, e2: Mention,
 def _causal_signal(doc: DocState, e1: Mention, e2: Mention,
                    lexicons) -> Marker:
     signal_list = lexicons.causal_cluster
-    patterns = lexicons.compiled_causal_patterns()
-    keys = java_hashmap_order(list(signal_list))
+    plan = lexicons.causal_plan()
     candidates: dict = {}
 
     def put(distance, m, i):
@@ -435,12 +451,15 @@ def _causal_signal(doc: DocState, e1: Mention, e2: Mention,
         ctx_between = " " + _get_string(doc, tid_before2, tid_start2) + " "
         ctx_after = " " + _get_string(doc, tid_end2, tid_after2) + " "
 
+        contexts = ((ctx_between, "BETWEEN", tid_before2,
+                     _words(ctx_between)),
+                    (ctx_before, "BEFORE", tid_before1, _words(ctx_before)),
+                    (ctx_after, "AFTER", tid_end2, _words(ctx_after)))
         i = 0
-        for key in keys:
-            pat = patterns[key]
-            for ctx, pos, start_tid in ((ctx_between, "BETWEEN", tid_before2),
-                                        (ctx_before, "BEFORE", tid_before1),
-                                        (ctx_after, "AFTER", tid_end2)):
+        for key, pat, lead in plan:
+            for ctx, pos, start_tid, words in contexts:
+                if lead is not None and lead not in words:
+                    continue
                 mo = pat.search(ctx)
                 if mo:
                     m = _keyed_signal_marker(doc, e1, e2, signal_list, key,
@@ -453,10 +472,11 @@ def _causal_signal(doc: DocState, e1: Mention, e2: Mention,
         s2 = doc.sentences[e2.sent_id]
         tid_begin2 = _tid_begin(doc, s2)
         ctx_begin2 = " " + _get_string(doc, s2.start_tok, tid_begin2) + " "
+        words = _words(ctx_begin2)
         i = 0
-        for key in keys:
-            pat = patterns[key]
-            mo = pat.search(ctx_begin2)
+        for key, pat, lead in plan:
+            mo = ((lead is None or lead in words)
+                  and pat.search(ctx_begin2))
             if mo:
                 m = _keyed_signal_marker(doc, e1, e2, signal_list, key,
                                          mo.group().strip(), "BEGIN-BETWEEN",

@@ -15,14 +15,18 @@ SIMULTANEOUS/IDENTITY  s1 = s2, e1 = e2   (+ inverses)
 
 ``PointGraph`` keeps the point order as an explicitly closed relation.
 Interval endpoints get integer ids; a union-find merges equal points, and
-each class root holds two int bitmasks: its members, and every point
-strictly after it (the transitive closure). So a consistency check or a
-point query is O(1) mask tests; adding ``a < b`` ORs b's class and its
-successors into the mask of every root at or before a, and merging two
-classes ORs the merged masks into every root before either - O(classes)
-big-int operations per constraint. A relation's constraints apply
-atomically: writes made while a relation is being added go to an undo log,
-and a relation whose second constraint fails restores only those writes.
+each class root holds three int bitmasks: its members, every point
+strictly after it and every point strictly before it (the transitive
+closure both ways). So a consistency check or a point query is O(1) mask
+tests; adding ``a < b`` ORs b's class and its successors into the after
+mask of every root at or before a (the roots in a's before mask) and a's
+class and its predecessors into the before mask of every root at or after
+b, and merging two classes does the same for the merged class - big-int
+operations on the affected classes only, never a scan of every point
+(a bitmask of the class roots picks them out). A relation's constraints
+apply atomically: writes made while a relation is being added go to an
+undo log, and a relation whose second constraint fails restores only
+those writes.
 
 Documents are small (<= hundreds of mentions), so the filter runs inside
 the per-document UDF - no distributed graph is needed (SURVEY.md §2.8).
@@ -59,6 +63,8 @@ class PointGraph:
         self._parent: list = []     # union-find over point ids
         self._members: list = []    # root -> bitmask of its class
         self._after: list = []      # root -> bitmask of points after it
+        self._before: list = []     # root -> bitmask of points before it
+        self._root_bits = [0]       # [bitmask of the roots]: _set logs it
         self._log = None            # undo log while a relation is applied
 
     def _set(self, arr: list, i: int, value) -> None:
@@ -87,39 +93,55 @@ class PointGraph:
         self._parent += [s, e]
         self._members += [1 << s, 1 << e]
         self._after += [1 << e, 0]
+        self._before += [0, 1 << s]
+        self._root_bits[0] |= 3 << s
+
+    def _widen(self, arr: list, points: int, mask: int) -> None:
+        """OR ``mask`` into ``arr[r]`` for each class root r in the bitmask
+        ``points`` (the masks hold whole classes, so their roots are their
+        root bits)."""
+        log = self._log
+        roots = points & self._root_bits[0]
+        while roots:
+            low = roots & -roots
+            roots ^= low
+            r = low.bit_length() - 1
+            old = arr[r]
+            if old | mask != old:
+                if log is not None:
+                    log.append((arr, r, old))
+                arr[r] = old | mask
 
     def _add_lt(self, a: int, b: int) -> bool:
         ra, rb = self._find(a), self._find(b)
-        after = self._after
+        after, before = self._after, self._before
         if ra == rb or after[rb] >> a & 1:
             return False
         if after[ra] >> b & 1:      # already implied
             return True
+        earlier = self._members[ra] | before[ra]
         later = self._members[rb] | after[rb]
-        bit = 1 << a
-        for r in [r for r, p in enumerate(self._parent)
-                  if p == r and after[r] & bit] + [ra]:
-            if after[r] | later != after[r]:
-                self._set(after, r, after[r] | later)
+        self._widen(after, earlier, later)
+        self._widen(before, later, earlier)
         return True
 
     def _add_eq(self, a: int, b: int) -> bool:
         ra, rb = self._find(a), self._find(b)
         if ra == rb:
             return True
-        after = self._after
+        after, before = self._after, self._before
         if after[ra] >> b & 1 or after[rb] >> a & 1:
             return False
         members = self._members[ra] | self._members[rb]
+        earlier = before[ra] | before[rb]
         later = after[ra] | after[rb]
         self._set(self._parent, rb, ra)
+        self._set(self._root_bits, 0, self._root_bits[0] & ~(1 << rb))
         self._set(self._members, ra, members)
         self._set(after, ra, later)
-        merged = members | later
-        for r in [r for r, p in enumerate(self._parent)
-                  if p == r and after[r] & members]:
-            if after[r] | merged != after[r]:
-                self._set(after, r, after[r] | merged)
+        self._set(before, ra, earlier)
+        self._widen(after, earlier, members | later)
+        self._widen(before, later, members | earlier)
         return True
 
     def add_relation(self, src, tgt, rel: str) -> bool:
