@@ -283,15 +283,11 @@ def _q_ee_probabilities(spark, sf_dir):
                     F.round("prob", 6).alias("prob")))
 
 
-def _q_eval_metrics(spark, sf_dir):
-    """J6/A2 as an oracled query: per-label tp/fp/fn/P/R/F1 from
-    spark.evaluate.evaluate_pairs over gold = the closed-form synthetic
-    temporal triples and pred = a deterministic perturbation (drop the
-    e4-source rows of every 9th doc -> fn; add a spurious (e1,e2,BEFORE)
-    for every 11th doc -> fp). The SQL twin re-implements the inverse
-    normalization, full-outer pair match and per-label aggregation
-    independently."""
-    from eventrelationextractor_spark.spark import evaluate
+def _gold_and_perturbed(spark, sf_dir):
+    """(gold, pred) frames of (url, src, tgt, rel): gold = the synthetic
+    temporal triples; pred = gold without the e4-source rows of every 9th
+    doc (-> fn), plus a spurious (e1, e2, BEFORE) for every 11th doc
+    (-> fp)."""
     # localCheckpoint: gold feeds BOTH the gold side and the perturbed
     # pred side - without it each consumer re-runs the extraction
     gold = _synth_triples(spark, sf_dir, "temporal").select(
@@ -304,8 +300,17 @@ def _q_eval_metrics(spark, sf_dir):
         F.col("doc_id").cast("string").alias("url"),
         F.lit("e1").alias("src"), F.lit("e2").alias("tgt"),
         F.lit("BEFORE").alias("rel"))
-    pred = dropped.unionByName(spurious)
-    return evaluate.evaluate_pairs(gold, pred)
+    return gold, dropped.unionByName(spurious)
+
+
+def _q_eval_metrics(spark, sf_dir):
+    """J6/A2 as an oracled query: per-label tp/fp/fn/P/R/F1 from
+    spark.evaluate.evaluate_pairs over the gold and perturbed pred frames
+    of _gold_and_perturbed. The SQL twin re-implements the inverse
+    normalization, full-outer pair match and per-label aggregation
+    independently."""
+    from eventrelationextractor_spark.spark import evaluate
+    return evaluate.evaluate_pairs(*_gold_and_perturbed(spark, sf_dir))
 
 
 def _q_awareness(spark, sf_dir):
@@ -318,19 +323,7 @@ def _q_awareness(spark, sf_dir):
     extraction; system = the same deterministic perturbation
     kg_eval_metrics uses."""
     from eventrelationextractor_spark.spark import evaluate
-    # localCheckpoint: see _q_eval_metrics (gold feeds both cogroup sides)
-    gold = _synth_triples(spark, sf_dir, "temporal").select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.col("subj").alias("src"), F.col("obj").alias("tgt"),
-        F.col("pred").alias("rel")).localCheckpoint()
-    dropped = gold.filter(~((F.col("url").cast("long") % 9 == 0)
-                            & (F.col("src") == "e4")))
-    spurious = _docs(spark, sf_dir).filter(F.col("doc_id") % 11 == 0).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit("e1").alias("src"), F.lit("e2").alias("tgt"),
-        F.lit("BEFORE").alias("rel"))
-    pred = dropped.unionByName(spurious)
-    return (evaluate.awareness_scores(gold, pred)
+    return (evaluate.awareness_scores(*_gold_and_perturbed(spark, sf_dir))
             .select(F.col("url").cast("long").alias("doc_id"),
                     F.round("precision", 6).alias("precision"),
                     F.round("recall", 6).alias("recall"),

@@ -12,47 +12,36 @@ worker, minus the zip re-reads, started from a preloaded, frozen heap.
   every forked worker inherits them; then it freezes the heap, so the
   per-task collect no longer rescans the ~74k long-lived objects of those
   modules.
-* The preload runs only when the importable ``eventrelationextractor_spark``
-  is the package this file belongs to. Shipped with ``--py-files``, the zip
-  is not on the path until a task's ``setup_spark_files``; the tasks then
-  import the core themselves, and only the freeze applies.
+* The core is imported from the package that holds this module: its root
+  (the source tree, or the ``--py-files`` zip, which is not on the path
+  until a task's ``setup_spark_files``) goes first on ``sys.path``.
 
 The daemon imports a worker module only if its name starts with
 ``pyspark``."""
 
 import gc
-import importlib.util
 import os
+import sys
 import zipimport
 
 zipimport.zipimporter.invalidate_caches = lambda self: None
 
 from pyspark.worker import main  # noqa: E402,F401
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))))
 
-def _own_package() -> bool:
-    """Whether ``eventrelationextractor_spark`` resolves to the package
-    that holds this module."""
-    spec = importlib.util.find_spec("eventrelationextractor_spark")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return spec is not None and any(
-        os.path.abspath(p) == here
-        for p in spec.submodule_search_locations or ())
+import pandas  # noqa: E402,F401
+import pyarrow  # noqa: E402,F401
+import pyspark.sql.pandas.serializers  # noqa: E402,F401
+import pyspark.sql.pandas.types  # noqa: E402,F401
 
+import eventrelationextractor_spark.core.pipeline  # noqa: E402,F401
+import eventrelationextractor_spark.spark.stages  # noqa: E402,F401
+from eventrelationextractor_spark.core.lexicons import (  # noqa: E402
+    load_lexicons)
 
-if _own_package():
-    import pandas  # noqa: E402,F401
-    import pyarrow  # noqa: E402,F401
-    import pyspark.sql.pandas.serializers  # noqa: E402,F401
-    import pyspark.sql.pandas.types  # noqa: E402,F401
-
-    import eventrelationextractor_spark.core.pipeline  # noqa: E402,F401
-    import eventrelationextractor_spark.core.timegraph  # noqa: E402,F401
-    import eventrelationextractor_spark.spark.stages  # noqa: E402,F401
-    from eventrelationextractor_spark.core.lexicons import load_lexicons
-
-    load_lexicons()
-
+load_lexicons()
 gc.freeze()
 
 if __name__ == "__main__":          # spark.python.use.daemon=false

@@ -2,14 +2,13 @@
 
 Vocabularies are copied from /root/reference/src/model/feature/
 PairFeatureVector.java:39-88; block semantics from the
-addBinaryFeatureToVector switch (2615-3373). Four fixed layouts are
+addBinaryFeatureToVector switch (2615-3373). Three fixed layouts are
 produced, matching the shipped liblinear featureLists (each matrix ends
 with the label column):
 
-* DCT   (EventDctRelationClassifier.java:75-83):  pos, chunk, eventClass,
-  tense, aspect, polarity, mainVerb, hasModal                -> 167 cols
 * ET    (EventTimexRelationClassifier.java:83):    eventClass, tense,
-  aspect, polarity                                           -> 19 cols
+  aspect, polarity                                           -> 19 cols;
+  TempRelPro runs the E-DCT model on this list too (TempRelPro.java:511-512)
 * EE    (EventEventRelationClassifier.java:61-86)            -> 269 cols
 * CAUSAL(EventEventCausalClassifier.java:44-67) + the 14-wide tlink one-hot
   appended by CauseRelPro.java:213                           -> 377 cols
@@ -252,20 +251,12 @@ def _encoded(doc: DocState, mentions: list) -> tuple:
     return codes.table[idx], codes.key_table[idx]
 
 
-def et_vector(doc: DocState, pairs, dct_layout: bool) -> np.ndarray:
-    """Feature matrix for event-timex pairs ``[(event, timex, label)]``.
-    ``dct_layout`` selects the event-DCT featureList, else the plain ET
-    featureList."""
-    n = len(pairs)
+def et_vector(doc: DocState, pairs) -> np.ndarray:
+    """Feature matrix for event-timex pairs ``[(event, timex, label)]`` in
+    the ET featureList, which both event-timex models use."""
+    ev, _ = _encoded(doc, [p[0] for p in pairs])
     label = _rows([(_label_value(p[2], TEMP_LABELS),) for p in pairs], 1)
-    if not dct_layout:
-        ev, _ = _encoded(doc, [p[0] for p in pairs])
-        return np.hstack((ev[:, _EVENT_ATTRS], label))
-    rows, _ = _encoded(doc, [p[0] for p in pairs] + [p[1] for p in pairs])
-    ev, tmx = rows[:n], rows[n:]
-    return np.hstack((ev[:, _POS], tmx[:, _POS], ev[:, _CHUNK],
-                      tmx[:, _CHUNK], ev[:, _EVENT_ATTRS], ev[:, _MAIN_VERB],
-                      ev[:, _HAS_MODAL], label))
+    return np.hstack((ev[:, _EVENT_ATTRS], label))
 
 
 _PAIR_SCALARS = 6   # samePos entDistance sentDistance sameEventClass

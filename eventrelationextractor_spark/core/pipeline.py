@@ -3,9 +3,10 @@ cascades (SURVEY.md §3.1, §3.2) as pure functions DocState -> triples.
 
 Semantics follow /root/reference/src/relpro/TempRelPro.java:508-615
 (testModel: tt rules -> E-DCT rule(+clf) -> E-T rule(+clf) -> E-E rule(+clf))
-and CauseRelPro.java:97-305,377-398. At the Spark layer one call of these
-functions handles one page inside ``spark.stages._map_pages``'
-``mapInArrow`` - the corpus is embarrassingly parallel by url.
+and CauseRelPro.java:97-305,377-398. ``page_triples`` runs both cascades
+on one page and decides everything that page yields; at the Spark layer it
+is called once per page inside ``spark.stages._map_pages``' ``mapInArrow``
+- the corpus is embarrassingly parallel by url.
 
 Replicated quirks:
 * the timex-timex loop iterates ``doc.getEntities().keySet().toArray()`` in
@@ -38,7 +39,10 @@ from .javacompat import java_hashmap_order
 from .lexicons import Lexicons, load_lexicons
 from .liblinear import CAUS_LABELS, TEMP_LABELS, shipped_model
 from .markers import _get_string, get_causal_signal, get_causal_verb
+from .timegraph import keep_consistent
 from .timexrule import inverse_relation, normalize_dct, timex_timex_relation
+
+MODES = ("temporal", "causal", "both")
 
 
 @dataclass
@@ -47,7 +51,7 @@ class Triple:
     target: str
     rel: str
     stage: str          # 'tt-rule' | '{dct,et,ee}-rule' | '{dct,et,ee}-clf'
-    pair_type: str      # 'tt' | 'ed' | 'et' | 'ee' | 'causal'
+    pair_type: str      # 'tt' | 'ed' | 'et' | 'ee' | 'causal' | 'meta'
 
 
 def timex_timex_rule_links(doc: DocState,
@@ -226,10 +230,8 @@ def temporal_triples(doc: DocState, lexicons: Lexicons | None = None,
     # (TempRelPro.java:511-512); EventDctRelationClassifier's richer list is
     # unused by the shipped pipeline.
     for group, name, ptype, build in (
-            (dct_clf, "dct", "ed",
-             lambda g: features.et_vector(doc, g, False)),
-            (et_clf, "et", "et",
-             lambda g: features.et_vector(doc, g, False)),
+            (dct_clf, "dct", "ed", lambda g: features.et_vector(doc, g)),
+            (et_clf, "et", "et", lambda g: features.et_vector(doc, g)),
             (ee_clf, "ee", "ee",
              lambda g: features.ee_vector(doc, g, lx))):
         if not group:
@@ -347,6 +349,48 @@ def causal_triples(doc: DocState, tlinks_map: dict | None = None,
         for (o1, o2, _, _), rel in zip(clf, preds):
             if rel != "NONE":
                 out.append(Triple(o1.mid, o2.mid, rel, "causal-clf", "causal"))
+    return out
+
+
+def check_mode(mode: str) -> None:
+    """Raise ValueError unless ``mode`` is one of MODES."""
+    if mode not in MODES:
+        raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
+
+
+def page_triples(doc: DocState, lexicons: Lexicons, mode: str,
+                 max_timexes: int | None = None,
+                 consistent_only: bool = False,
+                 tlinks_from_temporal: bool = False,
+                 pair_slice: tuple | None = None) -> list:
+    """Every triple one page yields, in order: the temporal cascade
+    (``mode`` 'temporal' or 'both'), then the causal cascade ('causal' or
+    'both'), then one ``_doc TRUNCATED _doc`` meta triple when
+    ``max_timexes`` cut the timex-timex loop.
+
+    ``consistent_only`` passes the temporal triples through the
+    document's timegraph consistency filter (G1). ``tlinks_from_temporal``
+    is J4: the causal classifier's tlink-type feature is read from those
+    (filtered) temporal triples, as CauseRelPro.main does with an
+    externally supplied tlink map, instead of the page's annotated tlink
+    cells. A salted copy ``pair_slice=(s, k)`` with s > 0 yields only its
+    tt chunk (see ``timex_timex_rule_links``)."""
+    check_mode(mode)
+    out = []
+    if mode != "causal":
+        out = temporal_triples(doc, lexicons, max_timexes=max_timexes,
+                               pair_slice=pair_slice)
+        if consistent_only:
+            out = keep_consistent(out)
+    if pair_slice is not None and pair_slice[0] != 0:
+        return out
+    if mode != "temporal":
+        tlinks_map = ({t.source + "," + t.target: t.rel for t in out}
+                      if tlinks_from_temporal else None)
+        out += causal_triples(doc, tlinks_map=tlinks_map, lexicons=lexicons)
+    if doc.memo.get("tt_truncated"):
+        out.append(Triple("_doc", "_doc", "TRUNCATED", "tt-truncated",
+                          "meta"))
     return out
 
 

@@ -280,12 +280,11 @@ def canonicalize(linked_mentions: DataFrame,
 
 
 def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
-                   src: str = "src", dst: str = "dst",
                    stats: dict | None = None) -> DataFrame:
     """Incremental connected components: refresh (vertex, component)
-    labels with a batch of NEW edges without re-running CC over the
-    base edge set - the graph analogue of ops/maintenance.py's
-    ivm_refresh, and the shape an entity-resolution/canonicalization
+    labels with a batch of NEW edges ``delta_edges(src, dst)`` without
+    re-running CC over the base edge set - the graph analogue of
+    ops/maintenance.py's ivm_refresh, and the shape an entity-resolution/canonicalization
     pipeline needs at 100 TB, where the mention graph grows by a crawl
     batch a day and the base has 10^11 edges.
 
@@ -313,7 +312,7 @@ def cc_incremental(labels: DataFrame, delta_edges: DataFrame,
     Insert-only, like every self-maintainable aggregate: deleting an
     edge can split a component, which needs a base re-scan by nature.
     """
-    e = delta_edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = delta_edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     ls = labels.select(F.col("vertex").alias("s"),
                        F.col("component").alias("s_c"))
     ld = labels.select(F.col("vertex").alias("d"),

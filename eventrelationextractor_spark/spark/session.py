@@ -3,8 +3,8 @@
 Scale posture (SURVEY.md §4.3): AQE on (runtime re-planning + skew-join
 splitting), Arrow enabled for every pandas UDF boundary, shuffle
 partitions sized to the usable cores of the host but overridable for
-clusters (arguments, the SPARK_GRAFT_{CPUS,MASTER,SHUFFLE} environment
-variables, or any conf key through ``**extra``, applied last).
+clusters (arguments, the SPARK_GRAFT_{CPUS,MASTER} environment variables
+for the master, or any conf key through ``**extra``, applied last).
 """
 
 from __future__ import annotations
@@ -60,12 +60,12 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
 
     # defaults follow the cores this process may run on (its affinity
     # mask, which a container's CPU set narrows), not the machine size
-    usable = str(len(os.sched_getaffinity(0)))
+    usable = len(os.sched_getaffinity(0))
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", usable)
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", usable))
+        shuffle_partitions = usable
 
     builder = (SparkSession.builder
                .master(master)

@@ -12,6 +12,12 @@ Execution design (SURVEY.md §1.4, §4):
   ``PARSE_ERROR`` in the stage's label-like column, never vanishes and
   never fails the job) and frames the output columns. An extractor only
   supplies its schema, its per-page row emitter and its error row.
+* What a page yields as triples is decided in one place,
+  ``core.pipeline.page_triples``: the temporal cascade (optionally
+  consistency-filtered), the causal cascade and the truncation meta
+  triple. ``extract_triples``, the giant branch of
+  ``extract_triples_salted`` and ``extract_kg_rows`` only frame its
+  triples as rows, through one emitter (``_triple_emitter``).
 * All Python work is Arrow-batched; the per-document core
   (eventrelationextractor_spark.core) is pure Python/numpy and is loaded
   once per executor (lexicons and liblinear weights are module-level
@@ -20,9 +26,9 @@ Execution design (SURVEY.md §1.4, §4):
   (binary) at the parquet/Iceberg scan - verified via
   ``explain_scan_pruning`` in tests.
 * Giant pages: the timex-timex sieve is O(n_timex^2) per document; pages
-  whose timex count exceeds ``max_timexes_per_doc`` are truncated with
-  a lineage warning rather than stalling a task (skew guard, SURVEY.md
-  §7.1 step 8).
+  whose timex count exceeds ``max_timexes_per_doc`` are truncated, and
+  yield one ``_doc TRUNCATED _doc`` meta triple, rather than stalling a
+  task (skew guard, SURVEY.md §7.1 step 8).
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
+from ..core.deps import token_attr
 from ..core.docmodel import (FIELDS_FILE24, FIELDS_FILE28, FIELDS_TEXT16,
                              FIELDS_TEXT18, DocState, parse_txp_lines)
 
@@ -113,20 +120,25 @@ def _page_source(pages: DataFrame):
     pool and paying an extra Arrow round-trip of the full page text."""
     if "text" in pages.columns:
         return pages.select("url", "text"), (lambda batches: batches)
-
-    from ..datagen import synth_page
     ids = _repartition_for_cpu(
         pages.select(F.col("doc_id").cast("long").alias("id")))
+    return ids, _synth_batches(("url", "text"))
+
+
+def _synth_batches(columns):
+    """Arrow batch transform: each batch of an ``id`` column becomes a
+    batch of the ``columns`` of those ids' synthetic pages
+    (``datagen.synth_page``)."""
 
     def gen(batches: Iterator) -> Iterator:
         import pyarrow as pa
+        from ..datagen import synth_page
         for batch in batches:
             pg = [synth_page(d) for d in batch.column("id").to_pylist()]
             yield pa.RecordBatch.from_pydict(
-                {"url": [p["url"] for p in pg],
-                 "text": [p["text"] for p in pg]})
+                {c: [p[c] for p in pg] for c in columns})
 
-    return ids, gen
+    return gen
 
 
 def _map_pages(src: DataFrame, gen_pages, schema: StructType, make_emit,
@@ -165,10 +177,32 @@ def _map_pages(src: DataFrame, gen_pages, schema: StructType, make_emit,
 
 
 _TRIPLE_ERROR = ("_doc", "PARSE_ERROR", "_doc", "parse-error", "meta")
-_TRIPLE_TRUNCATED = ("_doc", "TRUNCATED", "_doc", "tt-truncated", "meta")
 
 
-def _triple_rows(url: str, trips) -> Iterator:
+def _triple_emitter(mode: str, frame, max_timexes: int | None,
+                    salt: int | None = None, **options):
+    """``make_emit`` of the triple extractors: ``frame(url, doc,
+    triples)`` turns the triples ``pipeline.page_triples`` decides for a
+    page into rows. With ``salt``, the page's extra column is its salt
+    copy s, which computes pair slice (s, salt). An unknown ``mode``
+    fails here, while the plan is built."""
+    from ..core.pipeline import check_mode
+    check_mode(mode)
+
+    def make_emit():
+        from ..core.lexicons import load_lexicons
+        from ..core.pipeline import page_triples
+        lx = load_lexicons()
+
+        def emit(url, doc, *s):
+            return frame(url, doc, page_triples(
+                doc, lx, mode, max_timexes,
+                pair_slice=(s[0], salt) if s else None, **options))
+        return emit
+    return make_emit
+
+
+def _triple_table(url, doc, trips) -> Iterator:
     return ((url, t.source, t.rel, t.target, t.stage, t.pair_type)
             for t in trips)
 
@@ -196,33 +230,11 @@ def extract_triples(pages: DataFrame, mode: str = "both",
 
     ``pages`` may be a bare doc_id frame: the synthetic page is then
     generated in the same UDF (see _page_source)."""
-
-    def make_emit():
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
-        from ..core.timegraph import keep_consistent
-        lx = load_lexicons()
-
-        def emit(url, doc):
-            temporal = None
-            if mode in ("temporal", "both"):
-                temporal = temporal_triples(
-                    doc, lx, max_timexes=max_timexes_per_doc)
-                if consistent_only:
-                    temporal = keep_consistent(temporal)
-                yield from _triple_rows(url, temporal)
-            if mode in ("causal", "both"):
-                tlinks_map = None
-                if causal_tlinks_from_temporal and temporal is not None:
-                    tlinks_map = {t.source + "," + t.target: t.rel
-                                  for t in temporal}
-                yield from _triple_rows(url, causal_triples(
-                    doc, tlinks_map=tlinks_map, lexicons=lx))
-            if doc.memo.get("tt_truncated"):
-                yield (url, *_TRIPLE_TRUNCATED)
-        return emit
-
-    return _map_pages(*_page_source(pages), TRIPLE_SCHEMA, make_emit,
+    return _map_pages(*_page_source(pages), TRIPLE_SCHEMA,
+                      _triple_emitter(
+                          mode, _triple_table, max_timexes_per_doc,
+                          consistent_only=consistent_only,
+                          tlinks_from_temporal=causal_tlinks_from_temporal),
                       lambda url: [(url, *_TRIPLE_ERROR)])
 
 
@@ -255,25 +267,9 @@ def extract_triples_salted(pages: DataFrame, mode: str = "both",
              .withColumn("salt",
                          F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
              .repartition("url", "salt"))
-
-    def make_emit():
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
-        lx = load_lexicons()
-
-        def emit(url, doc, s):
-            if mode in ("temporal", "both"):
-                yield from _triple_rows(url, temporal_triples(
-                    doc, lx, max_timexes=max_timexes_per_doc,
-                    pair_slice=(s, salt)))
-            if s == 0 and mode in ("causal", "both"):
-                yield from _triple_rows(url, causal_triples(doc, lexicons=lx))
-            if s == 0 and doc.memo.get("tt_truncated"):
-                yield (url, *_TRIPLE_TRUNCATED)
-        return emit
-
     return normal.unionByName(_map_pages(
-        giant, lambda batches: batches, TRIPLE_SCHEMA, make_emit,
+        giant, lambda batches: batches, TRIPLE_SCHEMA,
+        _triple_emitter(mode, _triple_table, max_timexes_per_doc, salt=salt),
         lambda url, s: [(url, *_TRIPLE_ERROR)] if s == 0 else []))
 
 
@@ -281,14 +277,8 @@ def extract_mentions(pages: DataFrame) -> DataFrame:
     """pages -> mention table (for entity linking / canonicalization)."""
 
     def make_emit():
-        from ..core.deps import token_attr
-
         def emit(url, doc):
-            for mid, m in doc.entities.items():
-                surface = lemma = None
-                if m.start_tok != "O" and m.start_tok in doc.tokens:
-                    surface = token_attr(doc, m, "token")
-                    lemma = token_attr(doc, m, "lemma")
+            for mid, m, (surface, lemma) in _mentions(doc, ("token", "lemma")):
                 yield (url, mid, m.kind, m.sent_id, m.idx, surface, lemma,
                        m.ev_class, m.tmx_type, m.tmx_value,
                        "TRUE" if m.is_dct else "FALSE")
@@ -298,6 +288,18 @@ def extract_mentions(pages: DataFrame) -> DataFrame:
     return _map_pages(*_page_source(pages), MENTION_SCHEMA, make_emit,
                       lambda url: [(url, "_doc", "PARSE_ERROR", None, -1,
                                     None, None, None, None, None, "FALSE")])
+
+
+def _mentions(doc: DocState, attrs: tuple) -> Iterator:
+    """(mention id, mention, values) for each entity of ``doc``: the
+    ``token_attr`` of each of ``attrs``, or None for each when the
+    mention's first token does not exist."""
+    missing = (None,) * len(attrs)
+    for mid, m in doc.entities.items():
+        if m.start_tok != "O" and m.start_tok in doc.tokens:
+            yield mid, m, [token_attr(doc, m, a) for a in attrs]
+        else:
+            yield mid, m, missing
 
 
 TOKEN_SCHEMA = StructType([
@@ -443,9 +445,7 @@ def extracted_text(pages: DataFrame) -> DataFrame:
 def synth_pages_df(spark, n_docs: int, partitions: int | None = None) -> DataFrame:
     """Deterministic synthetic pages corpus as a DataFrame, generated
     partition-parallel from a doc-id range (no driver-side materialize)."""
-    from ..datagen import synth_page
     ids = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
-
     schema = StructType([
         StructField("url", StringType(), False),
         StructField("warc_ts", TimestampType(), False),
@@ -453,14 +453,7 @@ def synth_pages_df(spark, n_docs: int, partitions: int | None = None) -> DataFra
         StructField("text", StringType(), False),
         StructField("lang", StringType(), False),
     ])
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            rows = [synth_page(int(d)) for d in pdf["id"]]
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(gen, schema=schema)
+    return ids.mapInArrow(_synth_batches(schema.names), schema)
 
 
 def pages_from_doc_ids(doc_ids: DataFrame) -> DataFrame:
@@ -498,40 +491,18 @@ def extract_kg_rows(pages: DataFrame, mode: str = "temporal",
     Downstream splits by ``row_kind`` after a localCheckpoint, so the
     corpus is scanned and parsed exactly once."""
 
-    def make_emit():
-        from ..core.deps import token_attr
-        from ..core.lexicons import load_lexicons
-        from ..core.pipeline import causal_triples, temporal_triples
-        lx = load_lexicons()
+    def frame(url, doc, trips):
+        for mid, m, (lemma,) in _mentions(doc, ("lemma",)):
+            yield (url, "mention", mid, m.kind, lemma, None, None, None)
+        for t in trips:
+            yield (url, "triple", None, None, None, t.source, t.rel, t.target)
 
-        def emit(url, doc):
-            for mid, m in doc.entities.items():
-                lemma = (token_attr(doc, m, "lemma")
-                         if m.start_tok != "O" and m.start_tok in doc.tokens
-                         else None)
-                yield (url, "mention", mid, m.kind, lemma, None, None, None)
-            trips = []
-            if mode in ("temporal", "both"):
-                trips += temporal_triples(doc, lx,
-                                          max_timexes=max_timexes_per_doc)
-            if mode in ("causal", "both"):
-                trips += causal_triples(doc, lexicons=lx)
-            for t in trips:
-                yield (url, "triple", None, None, None, t.source, t.rel,
-                       t.target)
-            if doc.memo.get("tt_truncated"):
-                yield _kg_meta_row(url, "TRUNCATED")
-        return emit
-
-    return _map_pages(*_page_source(pages), KG_ROW_SCHEMA, make_emit,
-                      lambda url: [_kg_meta_row(url, "PARSE_ERROR")])
-
-
-def _kg_meta_row(url: str, pred: str) -> tuple:
-    """The ``_doc`` meta triple extract_triples emits for a truncated or
-    unparseable page; canonicalization keeps only SIMULTANEOUS/IDENTITY
-    edges, so it skips these."""
-    return (url, "triple", None, None, None, "_doc", pred, "_doc")
+    # canonicalization keeps only SIMULTANEOUS/IDENTITY edges, so it
+    # skips the _doc meta triples
+    return _map_pages(*_page_source(pages), KG_ROW_SCHEMA,
+                      _triple_emitter(mode, frame, max_timexes_per_doc),
+                      lambda url: [(url, "triple", None, None, None, "_doc",
+                                    "PARSE_ERROR", "_doc")])
 
 
 FEATURE_EXPORT_SCHEMA = StructType([
@@ -567,10 +538,8 @@ def export_training_features(pages: DataFrame,
         def emit(url, doc):
             dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
             groups = (
-                ("dct", dct_pairs,
-                 lambda ps: features.et_vector(doc, ps, False)),
-                ("et", et_pairs,
-                 lambda ps: features.et_vector(doc, ps, False)),
+                ("dct", dct_pairs, lambda ps: features.et_vector(doc, ps)),
+                ("et", et_pairs, lambda ps: features.et_vector(doc, ps)),
                 ("ee", ee_pairs,
                  lambda ps: features.ee_vector(doc, ps, lx)),
             )

@@ -118,9 +118,9 @@ def test_feature_vectors_and_dep_paths_bitexact(doc_name, prefix):
     lx = load_lexicons()
     dct_pairs, et_pairs, ee_pairs = _candidate_groups(doc)
     groups = {
-        "dct": (dct_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)], False)[0],
+        "dct": (dct_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)])[0],
                 lambda e1, e2: et_dependency_path(doc, e1, e2)),
-        "et": (et_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)], False)[0],
+        "et": (et_pairs, lambda e1, e2, lb: features.et_vector(doc, [(e1, e2, lb)])[0],
                lambda e1, e2: et_dependency_path(doc, e1, e2)),
         "ee": (ee_pairs, lambda e1, e2, lb: features.ee_vector(doc, [(e1, e2, lb)], lx)[0],
                lambda e1, e2: ee_dependency_path(doc, e1, e2)),

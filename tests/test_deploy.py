@@ -54,7 +54,8 @@ def test_submit_job_from_zip_writes_triples(erex_zip, tmp_path):
 def test_build_session_from_zip_runs_the_worker_module(erex_zip, tmp_path):
     """build_session imported from the zip points the workers at
     erex.zip/eventrelationextractor_spark/_worker, and every task there
-    runs the package's worker module."""
+    runs the package's worker module, which preloaded the core from the
+    zip before the task started."""
     script = tmp_path / "probe_job.py"
     script.write_text(textwrap.dedent("""
         import json
@@ -62,7 +63,8 @@ def test_build_session_from_zip_runs_the_worker_module(erex_zip, tmp_path):
 
         def probe(_):
             import sys
-            yield "pyspark_erex_worker" in sys.modules
+            yield ("pyspark_erex_worker" in sys.modules and
+                   "eventrelationextractor_spark.core.pipeline" in sys.modules)
 
         spark = session.build_session(master="local[2]",
                                       shuffle_partitions=2)

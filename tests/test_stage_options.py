@@ -1,8 +1,9 @@
-"""extract_triples options: giant-page skew guard + J4 temporal->causal
-tlink feeding."""
+"""extract_triples options: giant-page skew guard, mode validation and J4
+temporal->causal tlink feeding."""
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from eventrelationextractor_spark import fixtures as fx
@@ -56,6 +57,30 @@ def test_giant_page_truncation(spark):
                                            max_timexes_per_doc=10)
     assert (Counter(tuple(r) for r in salted.collect())
             == Counter(tuple(r) for r in rows))
+
+
+def test_unknown_mode_fails_before_any_job(spark, tmp_path):
+    """A misspelt mode is an error while the plan is built: no job runs,
+    and the resumable writer leaves no bucket and no manifest behind."""
+    from eventrelationextractor_spark.spark import lineage
+    pages = spark.createDataFrame(fx.fixture_pages(["wsj_1014"]),
+                                  PAGES_SCHEMA)
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-mode", "extraction with an unknown mode")
+    try:
+        for build in (
+                lambda: stages.extract_triples(pages, mode="temporl"),
+                lambda: stages.extract_triples_salted(pages, mode="temporl"),
+                lambda: stages.extract_kg_rows(pages, mode="temporl"),
+                lambda: lineage.write_triples_resumable(pages, str(out),
+                                                        mode="temporl")):
+            with pytest.raises(ValueError, match="temporl"):
+                build()
+        assert sc.statusTracker().getJobIdsForGroup("unknown-mode") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not out.exists()
 
 
 def test_causal_tlinks_from_temporal_changes_features(spark):

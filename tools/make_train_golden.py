@@ -57,8 +57,8 @@ def training_lines() -> dict:
         doc = parse_page(page["text"], name)
         d, e, ee = _candidate_groups(doc)
         for g, pairs, build in (
-                ("dct", d, lambda ps: features.et_vector(doc, ps, False)),
-                ("et", e, lambda ps: features.et_vector(doc, ps, False)),
+                ("dct", d, lambda ps: features.et_vector(doc, ps)),
+                ("et", e, lambda ps: features.et_vector(doc, ps)),
                 ("ee", ee, lambda ps: features.ee_vector(doc, ps, lx))):
             for v in build(pairs):
                 if int(v[-1]) != 0:
