@@ -2,9 +2,9 @@
 
 Semantics follow /root/reference/src/parser/TXPParser.java:39-440 and the
 entity classes under /root/reference/src/parser/entities/. This module is
-pure Python: at the Spark layer one *document* is one group inside an
-``applyInPandas`` / ``mapInPandas`` batch, so all functions here run
-partition-locally with no driver involvement.
+pure Python: at the Spark layer one *document* is one page of a
+``mapInArrow`` batch (``spark/stages._map_pages``), so all functions here
+run partition-locally with no driver involvement.
 
 Replicated reference quirks (deliberate, cited):
 * An entity span is only closed when a *later token row* carries a different
@@ -23,16 +23,6 @@ Replicated reference quirks (deliberate, cited):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-# The positional-field vocabulary of TXPParser.Field (TXPParser.java:16-23).
-FIELD_NAMES = (
-    "token", "token_id", "sent_id", "pos", "lemma",
-    "deps", "tmx_id", "tmx_type", "tmx_value", "ner", "ev_class",
-    "ev_id", "role1", "role2", "role3", "is_arg_pred", "has_semrole",
-    "chunk", "main_verb", "connective", "morpho", "supersense", "ss_ner",
-    "tense_aspect_pol", "tense", "aspect", "pol", "coref_event",
-    "tlink", "clink", "tsignal", "csignal",
-)
 
 # The 16-column service layout (TempRelPro.java:659-662).
 FIELDS_TEXT16 = (
@@ -126,9 +116,6 @@ class DocState:
     dct: Mention | None = None
     _ent_idx: int = 0
     memo: dict = field(default_factory=dict, repr=False)  # per-doc caches
-
-    def token_at(self, i: int) -> Token:
-        return self.tokens[self.token_arr[i]]
 
 
 def _main_pos_uncached(pos: str) -> str:
@@ -413,8 +400,6 @@ def parse_txp_lines(lines, fields=FIELDS_TEXT16, name: str = "TEXT") -> DocState
     return doc
 
 
-def parse_txp_file_text(text: str, fields=FIELDS_FILE24, name: str = "FILE",
-                        skip_header: int = 4) -> DocState:
+def parse_txp_file_text(text: str, fields=FIELDS_FILE24) -> DocState:
     """TXPParser.parseDocument (TXPParser.java:39-65): 4 comment lines skipped."""
-    lines = text.split("\n")[skip_header:]
-    return parse_txp_lines(lines, fields, name)
+    return parse_txp_lines(text.split("\n")[4:], fields, "FILE")

@@ -9,8 +9,8 @@ Replicated reference quirks:
   never produced from the timespan branch; a TMX-END return leaves whatever
   the TMP branch set (EventTimexRelationRule.java:28-35).
 * The MEASURE branch reads the field before the 5-arg constructor sets it,
-  so MEASURE never fires (EventTimexRelationRule.java:17-38); we expose it
-  behind ``measure_rel`` for completeness but default it off.
+  so MEASURE never fires (EventTimexRelationRule.java:17-38) and is not
+  ported.
 * EE DURING/DURING_INV are post-mapped to SIMULTANEOUS
   (EventEventRelationRule.java:60-63).
 """
@@ -33,7 +33,7 @@ def _lemma_string(doc: DocState, start_tok: str, end_tok: str) -> str:
 
 
 def event_timex_rule(doc: DocState, ev: Mention, tmx: Mention,
-                     dep_path: str, measure_rel: bool = False) -> str:
+                     dep_path: str) -> str:
     """EventTimexRelationRule (23-197). Returns TLINK label or 'O'."""
     rel = "O"
     timex_code = "O"
@@ -120,8 +120,6 @@ def event_timex_rule(doc: DocState, ev: Mention, tmx: Mention,
             rel = "BEGUN_BY"
         elif timex_code == "TMX_END":  # never true: reference typo kept
             rel = "ENDED_BY"
-    if measure_rel and tmx.tmx_type == "DURATION":
-        rel = "MEASURE"
     return rel
 
 

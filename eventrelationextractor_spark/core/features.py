@@ -84,8 +84,6 @@ CAUS_SIGNAL = ("so that", "because of", "due to", "in consequence of",
                "in order to", "as a result of", "as a result", "for reason",
                "is why", "therefore", "because", "since", "as", "so", "by",
                "from")
-CAUS_VERB = ("CAUSE", "CAUSE-AMBIGUOUS", "ENABLE", "PREVENT",
-             "PREVENT-AMBIGUOUS", "AFFECT", "LINK")
 DEP_EVENT_PATH = ("COORD-CONJ", "TMP-SUB", "OPRD", "OPRD-IM", "OBJ-SUB",
                   "ADV", "OBJ", "SBJ", "ADV-SUB", "VC", "LGS-PMOD",
                   "ADV-PMOD", "LOC-PMOD", "CONJ-COORD", "SUB-TMP", "IM-OPRD",

@@ -1,22 +1,19 @@
 """S10: lexicon scan. Loads the signal/verb dictionaries shipped with the
 reference (vendored verbatim under resources/lexicons; formats per
 /root/reference/src/model/feature/TemporalSignalList.java:23-47 and
-CausalSignalList.java:25-50). These are a few KB: at the Spark layer they are
-broadcast once per job."""
+CausalSignalList.java:25-50). These are a few KB: at the Spark layer each
+worker loads them once, and the worker daemon preloads them before it forks
+(``_worker/pyspark_erex_worker.py``)."""
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from ..respath import read_resource_text
 from .javacompat import java_hashmap_order
 
 
-def _read_lines(res_dir, name):
-    if res_dir is not None:
-        with open(os.path.join(res_dir, name), encoding="utf-8") as f:
-            return f.read().split("\n")
+def _read_lines(name):
     return read_resource_text("resources", "lexicons", name).split("\n")
 
 
@@ -110,21 +107,20 @@ class Lexicons:
 _CACHE: Lexicons | None = None
 
 
-def load_lexicons(res_dir: str | None = None) -> Lexicons:
+def load_lexicons() -> Lexicons:
     global _CACHE
-    if _CACHE is not None and res_dir is None:
+    if _CACHE is not None:
         return _CACHE
     lx = Lexicons()
-    lx.temporal_event = _read_pairs(_read_lines(res_dir, "temporal_signal_event.list"))
-    lx.temporal_timex = _read_pairs(_read_lines(res_dir, "temporal_signal_timex.list"))
-    for line in _read_lines(res_dir, "causal_signal.list"):
+    lx.temporal_event = _read_pairs(_read_lines("temporal_signal_event.list"))
+    lx.temporal_timex = _read_pairs(_read_lines("temporal_signal_timex.list"))
+    for line in _read_lines("causal_signal.list"):
         line = line.rstrip("\n")
         if not line:
             continue
         cols = line.split("|||")
         lx.causal_pattern[cols[0].strip()] = cols[1].strip()
         lx.causal_cluster[cols[0].strip()] = cols[2].strip()
-    lx.causal_verb = _read_pairs(_read_lines(res_dir, "causal_verb.list"))
-    if res_dir is None:
-        _CACHE = lx
+    lx.causal_verb = _read_pairs(_read_lines("causal_verb.list"))
+    _CACHE = lx
     return lx

@@ -19,12 +19,17 @@ reproducing liblinear-java 1.95 step for step:
 
 The reference's exact training call is
 EventEventRelationClassifier.java:148-167: SolverType.L2R_L2LOSS_SVC_DUAL,
-C=1.0, eps=0.01, problem.bias=1.0.
+C=1.0, eps=0.01, problem.bias=1.0: the constants below.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+C = 1.0
+EPS = 0.01
+BIAS = 1.0
+MAX_ITER = 1000
 
 _MASK48 = (1 << 48) - 1
 _MULT = 0x5DEECE66D
@@ -78,17 +83,16 @@ def parse_libsvm(lines, bias: float = 1.0):
     return ys, rows, n
 
 
-def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, Cp, Cn, eps, rng,
-                               max_iter=1000):
+def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, rng):
     """One binary solve; returns w (python list, length n)."""
     l = len(rows)
     w = [0.0] * n
     alpha = [0.0] * l
-    diag = {+1: 0.5 / Cp, -1: 0.5 / Cn}
+    diag = 0.5 / C
     upper = float("inf")
     QD = []
     for i in range(l):
-        qd = diag[y_signs[i]]
+        qd = diag
         for _, v in rows[i]:
             qd += v * v
         QD.append(qd)
@@ -96,7 +100,7 @@ def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, Cp, Cn, eps, rng,
     active_size = l
     PGmax_old, PGmin_old = float("inf"), float("-inf")
     it = 0
-    while it < max_iter:
+    while it < MAX_ITER:
         PGmax_new, PGmin_new = float("-inf"), float("inf")
         for i in range(active_size):
             j = i + rng.next_int(active_size - i)
@@ -108,7 +112,7 @@ def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, Cp, Cn, eps, rng,
             G = 0.0
             for idx, v in rows[i]:
                 G += w[idx] * v
-            G = G * yi - 1.0 + alpha[i] * diag[yi]
+            G = G * yi - 1.0 + alpha[i] * diag
             PG = 0.0
             if alpha[i] == 0.0:
                 if G > PGmax_old:
@@ -136,7 +140,7 @@ def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, Cp, Cn, eps, rng,
                     w[idx] += d * v
             s += 1
         it += 1
-        if PGmax_new - PGmin_new <= eps:
+        if PGmax_new - PGmin_new <= EPS:
             if active_size == l:
                 break
             active_size = l
@@ -147,13 +151,13 @@ def _solve_l2r_l2loss_svc_dual(rows, y_signs, n, Cp, Cn, eps, rng,
     return w
 
 
-def train(lines, C: float = 1.0, eps: float = 0.01, bias: float = 1.0):
+def train(lines):
     """Full Linear.train for L2R_L2LOSS_SVC_DUAL: returns a
     liblinear.LinearModel equivalent to the model file liblinear-java
     would save (same label order, same weight layout)."""
     from .liblinear import LinearModel
 
-    ys, rows, n = parse_libsvm(lines, bias)
+    ys, rows, n = parse_libsvm(lines, BIAS)
     l = len(rows)
     # groupClasses: labels by first occurrence
     label_order: list[int] = []
@@ -185,12 +189,10 @@ def train(lines, C: float = 1.0, eps: float = 0.01, bias: float = 1.0):
     sub_rows = [rows[perm[i]] for i in range(l)]
 
     rng = JavaRandom(0)          # Linear.resetRandom: one shared stream
-    nr_feature = n - (1 if bias >= 0 else 0)
     if nr_class == 2:
         si, ei = 0, counts[label_order[0]]
         y_signs = [1 if si <= k < ei else -1 for k in range(l)]
-        w_cols = [_solve_l2r_l2loss_svc_dual(sub_rows, y_signs, n,
-                                             C, C, eps, rng)]
+        w_cols = [_solve_l2r_l2loss_svc_dual(sub_rows, y_signs, n, rng)]
     else:
         w_cols = []
         for lab in label_order:
@@ -198,7 +200,7 @@ def train(lines, C: float = 1.0, eps: float = 0.01, bias: float = 1.0):
             ei = si + counts[lab]
             y_signs = [1 if si <= k < ei else -1 for k in range(l)]
             w_cols.append(_solve_l2r_l2loss_svc_dual(sub_rows, y_signs, n,
-                                                     C, C, eps, rng))
+                                                     rng))
     w = np.array(w_cols, dtype=np.float64).T       # (n, nr_w)
     return LinearModel("L2R_L2LOSS_SVC_DUAL", nr_class, label_order,
-                       nr_feature, bias, w)
+                       n - 1, BIAS, w)

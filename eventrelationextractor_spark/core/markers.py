@@ -40,12 +40,12 @@ from .docmodel import DocState, Mention
 class Marker:
     __slots__ = ("text", "cluster", "position", "dep1", "dep2")
 
-    def __init__(self, text="O", cluster="O", position="O", dep1="O", dep2="O"):
+    def __init__(self, text="O", cluster="O", position="O"):
         self.text = text
         self.cluster = cluster
         self.position = position
-        self.dep1 = dep1
-        self.dep2 = dep2
+        self.dep1 = "O"
+        self.dep2 = "O"
 
 
 _NO_MARKER = Marker()

@@ -385,62 +385,57 @@ def normalize_dct(tmx_type: str, value: str):
 
 @lru_cache(maxsize=65536)
 def timex_timex_relation(type1: str, value1: str, type2: str, value2: str,
-                         dct_value: str, is_dct1: bool = False,
-                         is_dct2: bool = False, identity_rel: bool = False,
-                         same_id: bool = False) -> str:
+                         dct_value: str, identity_rel: bool = False) -> str:
     """Constructor dispatch (TimexTimexRelationRule.java:16-89).
 
     Returns a TLINK label or 'O'. ``identity_rel=False`` (the production
-    setting at TempRelPro.java:72) remaps IDENTITY -> SIMULTANEOUS.
+    setting at TempRelPro.java:72) remaps IDENTITY -> SIMULTANEOUS. The
+    caller normalizes DCT timexes (``normalize_dct``) and pairs only
+    distinct timexes, so the constructor's DCT and same-id arguments are
+    not ported.
 
     Memoized: a pure function of its (string, bool) arguments, and TIMEX3
     values repeat heavily across a corpus (dates, quarters, week ids), so
     the per-process LRU turns the O(n^2)-per-doc sieve into mostly cache
     hits at corpus scale.
     """
-    if is_dct1:
-        type1, value1 = normalize_dct(type1, value1)
-    if is_dct2:
-        type2, value2 = normalize_dct(type2, value2)
-
     rel = "O"
-    if not same_id:
-        if type1 == "DATE" and type2 == "TIME":
-            if value1 == value2:
-                rel = "IDENTITY"
-            elif value1 in value2:
-                rel = "INCLUDES"
-            else:
-                rel = _tmx_date_relation(value1, value2, dct_value)
-        elif type1 == "TIME" and type2 == "DATE":
-            if value1 == value2:
-                rel = "IDENTITY"
-            elif value2 in value1:
-                rel = "IS_INCLUDED"
-            else:
-                rel = _tmx_date_relation(value1, value2, dct_value)
-        elif type1 == "DATE" and type2 == "DATE":
-            if value1 == value2:
-                rel = "IDENTITY"
-            elif value1 in value2:
-                rel = "INCLUDES"
-            elif value2 in value1:
-                rel = "IS_INCLUDED"
-            elif (("W" in value1 or "W" in value2)
-                  and "WI" not in value1 and "WI" not in value2
-                  and "P" not in value1 and "P" not in value2):
-                rel = _week_date_relation(value1, value2)
-            else:
-                rel = _tmx_date_relation(value1, value2, dct_value)
-        elif type1 == "TIME" and type2 == "TIME":
-            dt1 = value1.split("T") if len(value1.split("T")) > 1 else [value1, ""]
-            dt2 = value2.split("T") if len(value2.split("T")) > 1 else [value2, ""]
-            if dt1[0] == dt2[0]:
-                if dt1[1] != "" and dt2[1] != "":
-                    rel = _time_relation(_time_components(dt1[1]),
-                                         _time_components(dt2[1]))
-            else:
-                rel = _tmx_date_relation(dt1[0], dt2[0], dct_value)
+    if type1 == "DATE" and type2 == "TIME":
+        if value1 == value2:
+            rel = "IDENTITY"
+        elif value1 in value2:
+            rel = "INCLUDES"
+        else:
+            rel = _tmx_date_relation(value1, value2, dct_value)
+    elif type1 == "TIME" and type2 == "DATE":
+        if value1 == value2:
+            rel = "IDENTITY"
+        elif value2 in value1:
+            rel = "IS_INCLUDED"
+        else:
+            rel = _tmx_date_relation(value1, value2, dct_value)
+    elif type1 == "DATE" and type2 == "DATE":
+        if value1 == value2:
+            rel = "IDENTITY"
+        elif value1 in value2:
+            rel = "INCLUDES"
+        elif value2 in value1:
+            rel = "IS_INCLUDED"
+        elif (("W" in value1 or "W" in value2)
+              and "WI" not in value1 and "WI" not in value2
+              and "P" not in value1 and "P" not in value2):
+            rel = _week_date_relation(value1, value2)
+        else:
+            rel = _tmx_date_relation(value1, value2, dct_value)
+    elif type1 == "TIME" and type2 == "TIME":
+        dt1 = value1.split("T") if len(value1.split("T")) > 1 else [value1, ""]
+        dt2 = value2.split("T") if len(value2.split("T")) > 1 else [value2, ""]
+        if dt1[0] == dt2[0]:
+            if dt1[1] != "" and dt2[1] != "":
+                rel = _time_relation(_time_components(dt1[1]),
+                                     _time_components(dt2[1]))
+        else:
+            rel = _tmx_date_relation(dt1[0], dt2[0], dct_value)
 
     if rel is None:
         rel = "O"

@@ -29,23 +29,11 @@ def normalized_text(text_col):
         F.regexp_replace(F.lower(text_col), r"[^a-z0-9 ]", ""), r" +", " "))
 
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """(fingerprint, canonical_id=min id, n_dups) for groups of size > 1."""
-    keyed = df.select(F.col(id_col),
-                      F.md5(normalized_text(F.col(text_col))).alias("fingerprint"))
-    return (keyed.groupBy("fingerprint")
-            .agg(F.min(id_col).alias("canonical_id"),
-                 F.count(F.lit(1)).alias("n_dups"))
-            .filter(F.col("n_dups") > 1))
-
-
 def exact_dedup_keep(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """(id, fingerprint) of the KEPT document per fingerprint group (the
     numerically smallest id) - the batch twin of
-    ``streaming_exact_dedup``, and the keep-list complement of
-    ``exact_duplicates`` (which reports the dropped groups)."""
+    ``streaming_exact_dedup``."""
     keyed = df.select(
         F.col(id_col),
         F.md5(normalized_text(F.col(text_col))).alias("fingerprint"))

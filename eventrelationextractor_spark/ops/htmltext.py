@@ -68,12 +68,11 @@ def _unescape(col: Column) -> Column:
     return col
 
 
-def html_to_text(df: DataFrame, html_col: str = "html",
-                 out_col: str = "text") -> DataFrame:
-    """Adds/replaces ``out_col`` with the extracted text of ``html_col``
+def html_to_text(df: DataFrame, out_col: str = "text") -> DataFrame:
+    """Adds/replaces ``out_col`` with the extracted text of ``html``
     (null html -> null text), one projection per step."""
     s = F.col(out_col)
-    df = df.withColumn(out_col, F.col(html_col).cast("string"))
+    df = df.withColumn(out_col, F.col("html").cast("string"))
     for pat in (r"(?s)<!--.*?-->", _element_pattern(_DROP_CONTENT),
                 _element_pattern(_BOILERPLATE)):
         df = df.withColumn(out_col, F.regexp_replace(s, pat, " "))
@@ -120,8 +119,7 @@ def wrap_html_expr(text_col: Column, key_col: Column) -> Column:
 A_PATTERN = r'(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>'
 
 
-def extract_links(df: DataFrame, url_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
+def extract_links(df: DataFrame) -> DataFrame:
     """(src_url, href, resolved_url, anchor): the crawl-graph edge
     extractor - the step between WARC/html ingestion and every
     link-graph operator (pagerank, communities, anchor rollups,
@@ -136,14 +134,13 @@ def extract_links(df: DataFrame, url_col: str = "url",
     ``#...`` hrefs are dropped (same-page references, never crawl
     edges). Anchor text is the raw inner markup (caller strips tags if
     needed - anchor_rollup tokenizes anyway)."""
-    h = F.when(F.col(html_col).cast("string").isNotNull(),
-               F.col(html_col).cast("string")).otherwise(F.lit(""))
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
     hrefs = F.regexp_extract_all(h, F.lit(A_PATTERN), F.lit(1))
     texts = F.regexp_extract_all(h, F.lit(A_PATTERN), F.lit(2))
-    base = F.regexp_extract(F.col(url_col), r"^[a-zA-Z]+://[^/?#]+", 0)
+    base = F.regexp_extract(F.col("url"), r"^[a-zA-Z]+://[^/?#]+", 0)
     pairs = F.explode(F.arrays_zip(hrefs.alias("href"),
                                    texts.alias("anchor")))
-    out = (df.select(F.col(url_col).alias("src_url"), base.alias("base"),
+    out = (df.select(F.col("url").alias("src_url"), base.alias("base"),
                      pairs.alias("p"))
            .select("src_url", "base",
                    F.col("p.href").alias("href"),
@@ -169,17 +166,15 @@ META_PATTERNS = {
 }
 
 
-def extract_metadata(df: DataFrame, url_col: str = "url",
-                     html_col: str = "html") -> DataFrame:
+def extract_metadata(df: DataFrame) -> DataFrame:
     """(url, title, meta_description, canonical_url, html_lang): the
     page-metadata head extractor - canonical-URL dedup keys, language
     routing before content-based lang-id, and title/description for
     index/snippet tables. First match wins per field; absent fields
     are NULL (regexp_extract's empty string mapped through nullif).
     Pure whole-stage codegen, rides the scan."""
-    h = F.when(F.col(html_col).cast("string").isNotNull(),
-               F.col(html_col).cast("string")).otherwise(F.lit(""))
-    cols = [F.col(url_col).alias("url")]
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
+    cols = [F.col("url")]
     for name, pat in META_PATTERNS.items():
         cols.append(F.nullif(F.regexp_extract(h, pat, 1), F.lit(""))
                     .alias(name))

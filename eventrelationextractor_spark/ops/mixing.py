@@ -328,7 +328,7 @@ def dhondt_allocation(df: DataFrame, stratum_col: str,
     the candidate table is |strata| * total rows, compared all-pairs
     (a deliberate O((S*total)^2) driver-free join on a statistic-
     scale frame - document the budget if total*|strata| grows past
-    ~10^4, same contract as burrows_delta)."""
+    ~10^4)."""
     if total < 0:
         raise ValueError("total must be >= 0")
     w = (df.groupBy(F.col(stratum_col).alias("stratum"))

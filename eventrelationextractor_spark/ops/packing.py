@@ -16,8 +16,8 @@ Scale shape: the token stream restarts every ``group_size`` doc ids
 
 The per-group window cumsum is one hash-partitioned shuffle of
 (doc_id, n_tokens) pairs - the narrowest possible carrier; text never
-moves. Token counts use the ws_tokens contract of
-textstats.token_count (+1 EOS per doc), so the DuckDB oracle mirrors
+moves. Token counts are whitespace tokens split on
+textstats.WS_PATTERN (+1 EOS per doc), so the DuckDB oracle mirrors
 the whole computation with the same regexp + window SQL.
 """
 

@@ -50,37 +50,15 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
                     6)))
 
 
-# BPE-ish pre-tokenization classes (letter runs / digit runs / single
-# non-alnum marks) - the portable core of GPT-2-style pre-tokenizers,
-# written to behave identically under Java regex (Spark) and RE2 (DuckDB)
-BPEISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r]"
-
-# Whitespace class for ws-token counting, spelled out because the two
-# engines' \s disagree on exactly one character: Java \s (Spark) is
-# [ \t\n\x0b\f\r] while RE2 \s (DuckDB) is [ \t\n\f\r] - no \x0b
-# (vertical tab). A '\s+' twin silently diverges on any text containing
+# Whitespace class for ws-token counting (ops/packing.py), spelled out
+# because the two engines' \s disagree on exactly one character: Java \s
+# (Spark) is [ \t\n\x0b\f\r] while RE2 \s (DuckDB) is [ \t\n\f\r] - no
+# \x0b (vertical tab). A '\s+' twin silently diverges on any text containing
 # \x0b (caught by tests/test_packing.py adversarial sweep). \v is NOT a
 # safe spelling either: Java \v means "vertical whitespace" (a 6-char
 # class) while RE2 \v is the single \x0b. Hex-escaped, the class is
 # byte-identical under both engines.
 WS_PATTERN = r"[ \t\n\x0b\f\r]+"
-
-
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace tokens + two BPE-ish estimates: ceil(chars/4) (the
-    common 4-chars-per-token heuristic) and a regex pre-tokenizer count
-    (letter runs / digit runs / punctuation marks, GPT-2-style word
-    splitting without the merge table)."""
-    t = F.col(text_col)
-    return (df
-            .withColumn("ws_tokens",
-                        F.size(F.split(F.trim(t), WS_PATTERN))
-                        .cast("long"))
-            .withColumn("subword_tokens",
-                        F.ceil(F.length(t) / 4.0).cast("long"))
-            .withColumn("bpeish_tokens",
-                        F.regexp_count(t, F.lit(BPEISH_PATTERN))
-                        .cast("long")))
 
 
 def _top_run(sorted_arr):
@@ -1213,81 +1191,6 @@ def term_lift(docs: DataFrame, flag_col: str = "is_new", k: int = 20,
     w = Window.orderBy(F.col("lift_ppm").desc(), F.col("term"))
     return (top.withColumn("rank", F.row_number().over(w).cast("long"))
             .select("rank", "term", "new_cnt", "ref_cnt", "lift_ppm"))
-
-
-def burrows_delta(docs: DataFrame, group_col: str = "source",
-                  n_words: int = 30, text_col: str = "text") -> DataFrame:
-    """Burrows's Delta (Burrows 2002) - the standard stylometric
-    distance for authorship/source attribution, here over corpus
-    sources: z-score the relative frequencies of the top function
-    words across sources, Delta(a, b) = mean |z_a - z_b|. The corpus-
-    forensics op that flags a 'new' source as a relabeled existing one
-    (spoof_hosts' stylistic sibling).
-
-    -> (src_a, src_b, delta) for src_a < src_b, delta 6dp. Function
-    words = the corpus-wide top ``n_words`` terms (Delta's standard
-    marker set: high-frequency closed-class words). Relative
-    frequencies are EXACT integer ppm (1e6*cnt div total); means/stds
-    are population moments over the source axis; a zero-variance term
-    contributes z = 0 everywhere (guarded - ANSI division).
-
-    Scale shape: ONE corpus-sized partial agg to (source, term)
-    counts; everything after (top-k, the sources x n_words grid via
-    crossJoin of two broadcast-sized dims, z-scores, the source-pair
-    join) runs at statistic scale - #sources * n_words rows.
-
-    CONTRACT: ``group_col`` must be statistic-scale (tens-hundreds of
-    groups). The pair join is O(#groups^2): on a corpus with
-    per-document-unique sources this goes n_docs^2 (reproduced as a
-    20+GB spill blowup at sf1.0 before the driver query was re-keyed
-    to a doc_id stratum - the kendall_tau lesson)."""
-    toks = docs.select(
-        F.col(group_col).alias("src"),
-        F.explode(F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-            lambda t: t != "")).alias("term"))
-    ct = toks.groupBy("src", "term").agg(F.count("*").alias("cnt"))
-    totals = ct.groupBy("src").agg(F.sum("cnt").alias("total"))
-    top = (ct.groupBy("term").agg(F.sum("cnt").alias("n"))
-           .orderBy(F.col("n").desc(), F.col("term"))
-           .limit(int(n_words)).select("term"))
-    grid = (totals.crossJoin(F.broadcast(top))
-            .join(ct, ["src", "term"], "left")
-            .select("src", "term",
-                    F.expr("(1000000 * coalesce(cnt, 0L)) div total")
-                    .alias("f_ppm")))
-    # moments as EXACT integers: z = (f - mu)/sigma rewritten as
-    # (n*f - s1) / sqrt(n*s2 - s1^2) - one IEEE sqrt + one division
-    # over exact integer operands, bit-identical on both engines
-    # (stddev_pop's Welford-vs-naive accumulation is NOT pinned
-    # cross-engine; this form is)
-    stats = grid.groupBy("term").agg(
-        F.count("*").alias("ns"), F.sum("f_ppm").alias("s1"),
-        F.sum(F.col("f_ppm") * F.col("f_ppm")).alias("s2"))
-    # micro-z as an exact integer via floor(x + 0.5) (the
-    # embedding_quantize rounding convention - F.round HALF_UP vs SQL
-    # round diverge on negative halves): from here on the delta is
-    # pure integer arithmetic, immune to partial-agg merge order (a
-    # float avg of 30 |z| diffs landed exactly on a 6dp rounding
-    # boundary in testing - one ulp flipped the emitted digit)
-    z = (grid.join(stats, "term")
-         .withColumn("varnum", F.col("ns") * F.col("s2")
-                     - F.col("s1") * F.col("s1"))
-         .select("src", "term", F.when(
-             F.col("varnum") == 0, F.lit(0).cast("long")).otherwise(
-             F.floor((F.col("ns") * F.col("f_ppm") - F.col("s1"))
-                     .cast("double") * 1000000.0
-                     / F.sqrt(F.col("varnum").cast("double")) + 0.5)
-             .cast("long")).alias("z_u")))
-    za = z.select(F.col("src").alias("src_a"), "term",
-                  F.col("z_u").alias("z_a"))
-    zb = z.select(F.col("src").alias("src_b"), "term",
-                  F.col("z_u").alias("z_b"))
-    return (za.join(zb, "term")
-            .filter(F.col("src_a") < F.col("src_b"))
-            .groupBy("src_a", "src_b")
-            .agg(F.expr("sum(abs(z_a - z_b)) div count(*)")
-                 .alias("delta_uppm")))
 
 
 def llr_collocations(df: DataFrame, id_col: str = "doc_id",

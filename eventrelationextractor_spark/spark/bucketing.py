@@ -15,18 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16,
-                   key: str = "url") -> None:
+def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
     (df.write.mode("overwrite")
-       .bucketBy(n_buckets, key)
-       .sortBy(key)
+       .bucketBy(n_buckets, "url")
+       .sortBy("url")
        .format("parquet")
        .saveAsTable(table))
 
 
-def colocated_join(spark: SparkSession, left_table: str, right_table: str,
-                   key: str = "url", how: str = "inner") -> DataFrame:
-    """Join two co-bucketed tables on the bucket key - shuffle-free.
+def colocated_join(spark: SparkSession, left_table: str,
+                   right_table: str) -> DataFrame:
+    """Inner-join two co-bucketed tables on the bucket key, url -
+    shuffle-free.
 
     The merge hint pins the sort-merge strategy so the bucketed layout is
     exercised; without it the planner broadcasts small test tables and
@@ -34,4 +34,4 @@ def colocated_join(spark: SparkSession, left_table: str, right_table: str,
     sizes SMJ is what the planner picks anyway and the bucket layout
     removes both Exchanges."""
     left = spark.table(left_table).hint("merge")
-    return left.join(spark.table(right_table), key, how)
+    return left.join(spark.table(right_table), "url")

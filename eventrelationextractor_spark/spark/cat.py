@@ -68,27 +68,26 @@ CAT_SCHEMA = """struct<
 >"""
 
 
-def parse_cat(df: DataFrame, xml_col: str = "xml",
-              id_col: str = "doc_id") -> DataFrame:
-    """(id, cat): typed parse of one CAT XML document per row via
+def parse_cat(df: DataFrame) -> DataFrame:
+    """(doc_id, cat): typed parse of one CAT XML document per row via
     ``from_xml`` — fully JVM-side, malformed fields null out instead of
     failing the task (PERMISSIVE mode), so one bad document never kills
     a 100-TB read."""
-    return df.select(F.col(id_col),
-                     F.from_xml(F.col(xml_col), CAT_SCHEMA).alias("cat"))
+    return df.select(F.col("doc_id"),
+                     F.from_xml(F.col("xml"), CAT_SCHEMA).alias("cat"))
 
 
-def cat_tokens(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, t_id, sent_id, number, token): the token layer."""
-    t = parsed.select(id_col, F.explode("cat.token").alias("t"))
-    return t.select(id_col, F.col("t._t_id").alias("t_id"),
+def cat_tokens(parsed: DataFrame) -> DataFrame:
+    """(doc_id, t_id, sent_id, number, token): the token layer."""
+    t = parsed.select("doc_id", F.explode("cat.token").alias("t"))
+    return t.select("doc_id", F.col("t._t_id").alias("t_id"),
                     F.col("t._sentence").alias("sent_id"),
                     F.col("t._number").alias("number"),
                     F.col("t._VALUE").alias("token"))
 
 
-def cat_markables(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, m_id, mtype, cls, value, t_ids): the markable layer,
+def cat_markables(parsed: DataFrame) -> DataFrame:
+    """(doc_id, m_id, mtype, cls, value, t_ids): the markable layer,
     EVENT / TIMEX3 / C-SIGNAL unioned with their anchor id arrays
     (sorted — CAT files list anchors in order but the contract should
     not depend on it)."""
@@ -98,26 +97,26 @@ def cat_markables(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
             lambda a: a["_t_id"]))
 
     ev = (parsed.select(
-        id_col, F.explode_outer("cat.Markables.EVENT").alias("m"))
+        "doc_id", F.explode_outer("cat.Markables.EVENT").alias("m"))
         .filter(F.col("m").isNotNull())
-        .select(id_col, F.col("m._m_id").alias("m_id"),
+        .select("doc_id", F.col("m._m_id").alias("m_id"),
                 F.lit("EVENT").alias("mtype"),
                 F.col("m._class").alias("cls"),
                 F.col("m._eid").alias("value"),
                 anchors(F.col("m.token_anchor")).alias("t_ids")))
     tmx = (parsed.select(
-        id_col, F.explode_outer("cat.Markables.TIMEX3").alias("m"))
+        "doc_id", F.explode_outer("cat.Markables.TIMEX3").alias("m"))
         .filter(F.col("m").isNotNull())
-        .select(id_col, F.col("m._m_id").alias("m_id"),
+        .select("doc_id", F.col("m._m_id").alias("m_id"),
                 F.lit("TIMEX3").alias("mtype"),
                 F.col("m._type").alias("cls"),
                 F.col("m._value").alias("value"),
                 anchors(F.col("m.token_anchor")).alias("t_ids")))
     sig = (parsed.select(
-        id_col, F.explode_outer(F.col("cat.Markables.`C-SIGNAL`"))
+        "doc_id", F.explode_outer(F.col("cat.Markables.`C-SIGNAL`"))
         .alias("m"))
         .filter(F.col("m").isNotNull())
-        .select(id_col, F.col("m._m_id").alias("m_id"),
+        .select("doc_id", F.col("m._m_id").alias("m_id"),
                 F.lit("C-SIGNAL").alias("mtype"),
                 F.lit(None).cast("string").alias("cls"),
                 F.lit(None).cast("string").alias("value"),
@@ -125,21 +124,21 @@ def cat_markables(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return ev.unionByName(tmx).unionByName(sig)
 
 
-def cat_relations(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, r_id, rtype, rel_type, source_m, target_m): TLINK + CLINK
+def cat_relations(parsed: DataFrame) -> DataFrame:
+    """(doc_id, r_id, rtype, rel_type, source_m, target_m): TLINK + CLINK
     (CLINK carries no relType in CAT; it IS the CAUSE assertion)."""
     tl = (parsed.select(
-        id_col, F.explode_outer("cat.Relations.TLINK").alias("r"))
+        "doc_id", F.explode_outer("cat.Relations.TLINK").alias("r"))
         .filter(F.col("r").isNotNull())
-        .select(id_col, F.col("r._r_id").alias("r_id"),
+        .select("doc_id", F.col("r._r_id").alias("r_id"),
                 F.lit("TLINK").alias("rtype"),
                 F.col("r._relType").alias("rel_type"),
                 F.col("r.source._m_id").alias("source_m"),
                 F.col("r.target._m_id").alias("target_m")))
     cl = (parsed.select(
-        id_col, F.explode_outer("cat.Relations.CLINK").alias("r"))
+        "doc_id", F.explode_outer("cat.Relations.CLINK").alias("r"))
         .filter(F.col("r").isNotNull())
-        .select(id_col, F.col("r._r_id").alias("r_id"),
+        .select("doc_id", F.col("r._r_id").alias("r_id"),
                 F.lit("CLINK").alias("rtype"),
                 F.lit("CAUSE").alias("rel_type"),
                 F.col("r.source._m_id").alias("source_m"),
@@ -147,19 +146,18 @@ def cat_relations(parsed: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return tl.unionByName(cl)
 
 
-def cat_to_columns(df: DataFrame, xml_col: str = "xml",
-                   id_col: str = "doc_id") -> DataFrame:
+def cat_to_columns(df: DataFrame) -> DataFrame:
     """convertCATToColumns: one row per token with per-layer labels
     (``e<m_id>``/``t<m_id>``/``s<m_id>``, ``O`` when unanchored;
     overlaps pin to the smallest m_id). One explode + one partial-agged
     groupBy on (doc, t_id) + one broadcast-free equi-join back to the
     token layer — no window, no per-row Python."""
-    parsed = parse_cat(df, xml_col, id_col)
-    toks = cat_tokens(parsed, id_col)
-    marks = cat_markables(parsed, id_col)
-    anch = (marks.select(id_col, "m_id", "mtype",
+    parsed = parse_cat(df)
+    toks = cat_tokens(parsed)
+    marks = cat_markables(parsed)
+    anch = (marks.select("doc_id", "m_id", "mtype",
                          F.explode("t_ids").alias("t_id"))
-            .groupBy(id_col, "t_id")
+            .groupBy("doc_id", "t_id")
             .agg(F.min(F.when(F.col("mtype") == "EVENT", F.col("m_id")))
                  .alias("ev_m"),
                  F.min(F.when(F.col("mtype") == "TIMEX3", F.col("m_id")))
@@ -168,16 +166,15 @@ def cat_to_columns(df: DataFrame, xml_col: str = "xml",
                  .alias("sig_m")))
     lab = lambda c, p: F.coalesce(  # noqa: E731
         F.concat(F.lit(p), F.col(c).cast("string")), F.lit("O"))
-    return (toks.join(anch, [id_col, "t_id"], "left")
-            .select(id_col, "t_id", "sent_id", "number", "token",
+    return (toks.join(anch, ["doc_id", "t_id"], "left")
+            .select("doc_id", "t_id", "sent_id", "number", "token",
                     lab("ev_m", "e").alias("ev"),
                     lab("tmx_m", "t").alias("tmx"),
                     lab("sig_m", "s").alias("sig")))
 
 
-def cat_to_timeml(df: DataFrame, xml_col: str = "xml",
-                  id_col: str = "doc_id") -> DataFrame:
-    """convertCATToTimeML: (id, timeml) — inline-annotated TimeML text:
+def cat_to_timeml(df: DataFrame) -> DataFrame:
+    """convertCATToTimeML: (doc_id, timeml) — inline-annotated TimeML text:
     tokens space-joined inside ``<TEXT>``, EVENT anchors wrapped
     ``<EVENT m_id class>``, contiguous TIMEX3 anchor spans wrapped once
     around the whole span, followed by self-closing ``<TLINK>`` /
@@ -185,16 +182,16 @@ def cat_to_timeml(df: DataFrame, xml_col: str = "xml",
     decorations come from the anchor join (span starts/ends = anchor
     positions whose predecessor/successor t_id is absent), the document
     string from one sorted-struct aggregation."""
-    parsed = parse_cat(df, xml_col, id_col)
-    toks = cat_tokens(parsed, id_col)
-    marks = cat_markables(parsed, id_col)
-    rels = cat_relations(parsed, id_col)
+    parsed = parse_cat(df)
+    toks = cat_tokens(parsed)
+    marks = cat_markables(parsed)
+    rels = cat_relations(parsed)
 
     anch = marks.select(
-        id_col, "m_id", "mtype", "cls",
+        "doc_id", "m_id", "mtype", "cls",
         F.posexplode("t_ids").alias("pos", "t_id"),
         F.size("t_ids").alias("n_anch"))
-    deco = (anch.groupBy(id_col, "t_id").agg(
+    deco = (anch.groupBy("doc_id", "t_id").agg(
         F.min(F.when((F.col("mtype") == "EVENT") & (F.col("pos") == 0),
                      F.concat(F.lit('<EVENT m_id="'),
                               F.col("m_id").cast("string"),
@@ -213,28 +210,28 @@ def cat_to_timeml(df: DataFrame, xml_col: str = "xml",
         F.max(F.when((F.col("mtype") == "TIMEX3")
                      & (F.col("pos") == F.col("n_anch") - 1),
                      F.lit("</TIMEX3>"))).alias("tmx_close")))
-    pieces = (toks.join(deco, [id_col, "t_id"], "left")
-              .select(id_col, "t_id", F.concat(
+    pieces = (toks.join(deco, ["doc_id", "t_id"], "left")
+              .select("doc_id", "t_id", F.concat(
                   F.coalesce("tmx_open", F.lit("")),
                   F.coalesce("ev_open", F.lit("")),
                   F.col("token"),
                   F.coalesce("ev_close", F.lit("")),
                   F.coalesce("tmx_close", F.lit(""))).alias("piece")))
-    text = (pieces.groupBy(id_col).agg(F.array_join(F.transform(
+    text = (pieces.groupBy("doc_id").agg(F.array_join(F.transform(
         F.array_sort(F.collect_list(F.struct("t_id", "piece"))),
         lambda s: s["piece"]), " ").alias("text")))
     rel_str = (rels.select(
-        id_col, "r_id", F.concat(
+        "doc_id", "r_id", F.concat(
             F.lit("<"), F.col("rtype"), F.lit(' r_id="'),
             F.col("r_id").cast("string"), F.lit('" relType="'),
             F.col("rel_type"), F.lit('" source="'),
             F.col("source_m").cast("string"), F.lit('" target="'),
             F.col("target_m").cast("string"), F.lit('"/>')).alias("rel"))
-        .groupBy(id_col).agg(F.array_join(F.transform(
+        .groupBy("doc_id").agg(F.array_join(F.transform(
             F.array_sort(F.collect_list(F.struct("r_id", "rel"))),
             lambda s: s["rel"]), "").alias("rels")))
-    return (text.join(rel_str, id_col, "left")
-            .select(id_col, F.concat(
+    return (text.join(rel_str, "doc_id", "left")
+            .select("doc_id", F.concat(
                 F.lit("<TimeML><TEXT>"), F.col("text"),
                 F.lit("</TEXT>"), F.coalesce("rels", F.lit("")),
                 F.lit("</TimeML>")).alias("timeml")))
@@ -246,9 +243,8 @@ _TIMEML_PIECE = (r"<EVENT [^>]*>[^<]*</EVENT>"
                  r"|[^<> ]+")
 
 
-def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
-                  id_col: str = "doc_id") -> DataFrame:
-    """convertTimeMLToCAT: (id, xml) — rebuild CAT XML from the inline
+def timeml_to_cat(df: DataFrame) -> DataFrame:
+    """convertTimeMLToCAT: (doc_id, xml) — rebuild CAT XML from the inline
     TimeML produced by :func:`cat_to_timeml`. Token stream =
     ``regexp_extract_all`` over the ``<TEXT>`` slice (wrapped spans
     come out as ONE piece and re-expand to their tokens, so multi-token
@@ -259,14 +255,12 @@ def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
     lands in sentence 1 with running numbers: the documented lossy
     axis of the TimeML leg, exactly like the reference's column files
     which carry no sentence ids through TimeML either."""
-    text = F.regexp_extract(F.col(timeml_col),
-                            "<TEXT>(.*)</TEXT>", 1)
     pieces = F.expr(
-        f"regexp_extract_all(regexp_extract({timeml_col}, "
+        "regexp_extract_all(regexp_extract(timeml, "
         f"'<TEXT>(.*)</TEXT>', 1), '{_TIMEML_PIECE}', 0)")
-    base = df.select(F.col(id_col), pieces.alias("ps"),
-                     F.col(timeml_col).alias("_tml"))
-    p = (base.select(id_col, "_tml",
+    base = df.select(F.col("doc_id"), pieces.alias("ps"),
+                     F.col("timeml").alias("_tml"))
+    p = (base.select("doc_id", "_tml",
                      F.posexplode("ps").alias("ppos", "piece"))
          .withColumn("words", F.split(F.regexp_replace(
              "piece", "<[^>]*>", ""), " "))
@@ -277,12 +271,12 @@ def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
              F.col("piece").startswith("<TIMEX3"), "TIMEX3"))
          .withColumn("cls", F.regexp_extract(
              "piece", '(?:class|type)="([^"]*)"', 1)))
-    w = (p.select(id_col, "_tml", "ppos", "m_id", "mtype", "cls",
+    w = (p.select("doc_id", "_tml", "ppos", "m_id", "mtype", "cls",
                   F.posexplode("words").alias("wpos", "word")))
     from pyspark.sql import Window
-    ww = Window.partitionBy(id_col).orderBy("ppos", "wpos")
+    ww = Window.partitionBy("doc_id").orderBy("ppos", "wpos")
     w = w.withColumn("t_id", F.row_number().over(ww))
-    tok_xml = (w.groupBy(id_col).agg(F.array_join(F.transform(
+    tok_xml = (w.groupBy("doc_id").agg(F.array_join(F.transform(
         F.array_sort(F.collect_list(F.struct("t_id", F.concat(
             F.lit('<token t_id="'), F.col("t_id").cast("string"),
             F.lit('" sentence="1" number="'),
@@ -290,14 +284,14 @@ def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
             F.col("word"), F.lit("</token>")).alias("x")))),
         lambda s: s["x"]), "").alias("toks")))
     mark_xml = (w.filter(F.col("mtype").isNotNull())
-                .groupBy(id_col, "m_id", "mtype", "cls")
+                .groupBy("doc_id", "m_id", "mtype", "cls")
                 .agg(F.array_join(F.transform(
                     F.array_sort(F.collect_list(F.struct("t_id", F.concat(
                         F.lit('<token_anchor t_id="'),
                         F.col("t_id").cast("string"),
                         F.lit('"/>')).alias("x")))),
                     lambda s: s["x"]), "").alias("anchors"))
-                .select(id_col, "m_id", F.concat(
+                .select("doc_id", "m_id", F.concat(
                     F.lit("<"), F.col("mtype"),
                     F.lit(' m_id="'), F.col("m_id").cast("string"),
                     F.when(F.col("mtype") == "EVENT",
@@ -305,20 +299,20 @@ def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
                     .otherwise(F.concat(F.lit('" type="'), F.col("cls"))),
                     F.lit('">'), F.col("anchors"),
                     F.lit("</"), F.col("mtype"), F.lit(">")).alias("m")))
-    marks = (mark_xml.groupBy(id_col).agg(F.array_join(F.transform(
+    marks = (mark_xml.groupBy("doc_id").agg(F.array_join(F.transform(
         F.array_sort(F.collect_list(F.struct("m_id", "m"))),
         lambda s: s["m"]), "").alias("marks")))
-    rel_rows = (df.select(F.col(id_col), F.explode(F.expr(
-        f"regexp_extract_all({timeml_col}, "
-        f"'<(?:TLINK|CLINK) [^>]*/>', 0)")).alias("r"))
-        .select(id_col,
+    rel_rows = (df.select(F.col("doc_id"), F.explode(F.expr(
+        "regexp_extract_all(timeml, '<(?:TLINK|CLINK) [^>]*/>', 0)"))
+        .alias("r"))
+        .select("doc_id",
                 F.regexp_extract("r", "^<(TLINK|CLINK)", 1).alias("rt"),
                 F.regexp_extract("r", 'r_id="([0-9]+)"', 1)
                 .cast("bigint").alias("r_id"),
                 F.regexp_extract("r", 'relType="([^"]*)"', 1).alias("rl"),
                 F.regexp_extract("r", 'source="([0-9]+)"', 1).alias("s"),
                 F.regexp_extract("r", 'target="([0-9]+)"', 1).alias("t")))
-    rel_xml = rel_rows.select(id_col, "r_id", F.concat(
+    rel_xml = rel_rows.select("doc_id", "r_id", F.concat(
         F.lit("<"), F.col("rt"), F.lit(' r_id="'),
         F.col("r_id").cast("string"), F.lit('"'),
         # CLINK carries no relType attribute in CAT; it IS the CAUSE edge
@@ -328,16 +322,16 @@ def timeml_to_cat(df: DataFrame, timeml_col: str = "timeml",
         F.lit('><source m_id="'), F.col("s"),
         F.lit('"/><target m_id="'), F.col("t"), F.lit('"/></'),
         F.col("rt"), F.lit(">")).alias("rel"))
-    rels = (rel_xml.groupBy(id_col).agg(F.array_join(F.transform(
+    rels = (rel_xml.groupBy("doc_id").agg(F.array_join(F.transform(
         F.array_sort(F.collect_list(F.struct("r_id", "rel"))),
         lambda s: s["rel"]), "").alias("rels")))
-    return (df.select(F.col(id_col))
-            .join(tok_xml, id_col, "left")
-            .join(marks, id_col, "left")
-            .join(rels, id_col, "left")
-            .select(id_col, F.concat(
+    return (df.select(F.col("doc_id"))
+            .join(tok_xml, "doc_id", "left")
+            .join(marks, "doc_id", "left")
+            .join(rels, "doc_id", "left")
+            .select("doc_id", F.concat(
                 F.lit('<Document doc_name="d'),
-                F.col(id_col).cast("string"), F.lit('.xml">'),
+                F.col("doc_id").cast("string"), F.lit('.xml">'),
                 F.coalesce("toks", F.lit("")),
                 F.lit("<Markables>"), F.coalesce("marks", F.lit("")),
                 F.lit("</Markables><Relations>"),

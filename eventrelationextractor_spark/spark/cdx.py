@@ -21,13 +21,13 @@ CDX_FIELDS = ("url", "status", "mime", "digest", "length", "filename",
               "offset")
 
 
-def parse_cdx(lines: DataFrame, line_col: str = "line"):
+def parse_cdx(lines: DataFrame):
     """lines(line) -> (good, bad). ``good`` = (urlkey, capture_ts,
     url, status, mime, digest, length, filename, offset); ``bad`` =
     raw lines that don't match ``urlkey timestamp {json}`` or whose
     json lacks a url. All columns stay strings except capture_ts /
     length / offset (long) - CDX writes everything as json strings."""
-    l = F.col(line_col)
+    l = F.col("line")
     parsed = lines.select(
         l.alias("raw"),
         F.regexp_extract(l, r"^(\S+) (\d{14}) (\{.*\})$", 1)
@@ -51,11 +51,10 @@ def parse_cdx(lines: DataFrame, line_col: str = "line"):
     return good, bad
 
 
-def select_captures(cdx: DataFrame, statuses: tuple = ("200",),
-                    mimes: tuple = ("text/html",)) -> DataFrame:
+def select_captures(cdx: DataFrame) -> DataFrame:
     """Fetch-list selection over parsed CDX rows: keep the LATEST
     capture per urlkey (ties: max offset - a re-crawl appended later in
-    the same second wins), restricted to wanted status/mime, then drop
+    the same second wins), restricted to status 200 text/html, then drop
     exact content duplicates by digest (lowest urlkey keeps - the
     CC-Net-style index-level dedup that avoids fetching identical
     bodies twice). -> input columns + is_canonical (False = digest
@@ -63,8 +62,8 @@ def select_captures(cdx: DataFrame, statuses: tuple = ("200",),
 
     Two windows, each a single hash Exchange on a bounded key (urlkey,
     digest); filters push into the scan before either."""
-    wanted = cdx.filter(F.col("status").isin(*statuses)
-                        & F.col("mime").isin(*mimes))
+    wanted = cdx.filter((F.col("status") == "200")
+                        & (F.col("mime") == "text/html"))
     per_url = Window.partitionBy("urlkey").orderBy(
         F.col("capture_ts").desc(), F.col("offset").desc())
     latest = (wanted

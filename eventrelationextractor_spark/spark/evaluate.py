@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..core.timexrule import INVERSE
 
 _INV_PAIRS = list(INVERSE.items())
+AWARENESS_BUCKETS = 128
 
 
 def _inverse_expr(col):
@@ -89,8 +90,7 @@ def micro_scores(gold: DataFrame, pred: DataFrame,
             "f1": 2 * tp / max(2 * tp + fp + fn, 1)}
 
 
-def awareness_scores(gold: DataFrame, pred: DataFrame,
-                     n_buckets: int = 128) -> DataFrame:
+def awareness_scores(gold: DataFrame, pred: DataFrame) -> DataFrame:
     """Per-document TempEval-3 temporal-awareness scores (core.awareness,
     golden-anchored against the reference's own evaluation tool).
 
@@ -99,13 +99,13 @@ def awareness_scores(gold: DataFrame, pred: DataFrame,
     grouped; each document runs the exact closure-based scorer inside
     one Arrow-batched applyInPandas - ONE shuffle total, no driver
     loop. The grouping key is
-    ``crc32(url) % n_buckets``, NOT the raw url: documents are tiny
+    ``crc32(url) % AWARENESS_BUCKETS``, NOT the raw url: documents are tiny
     groups (tens of relations), and per-group Arrow/pandas overhead
     dominates scoring cost at millions of single-doc groups (measured
     ~2.5x the whole query at sf0.1 in round 3).
     Each bucket group loops its documents with a pandas groupby; results
-    are identical for any n_buckets, which only tunes group size
-    (n_buckets >> cores keeps all executors busy; state per task stays
+    are identical for any bucket count, which only tunes group size
+    (buckets >> cores keeps all executors busy; state per task stays
     bounded by the bucket's documents).
     Input frames: (url, src, tgt, rel).
 
@@ -150,7 +150,7 @@ def awareness_scores(gold: DataFrame, pred: DataFrame,
     # saw a column-less pred frame -> every score silently 0). A
     # self-union has no such ambiguity, and it also halves the shuffles:
     # one Exchange of the tagged rows instead of one per cogroup side.
-    bucket = (F.crc32(F.col("url")) % n_buckets).alias("bucket")
+    bucket = (F.crc32(F.col("url")) % AWARENESS_BUCKETS).alias("bucket")
     g = gold.select(bucket, "url", "src", "tgt", "rel",
                     F.lit(1).alias("is_gold"))
     p = pred.select(bucket, "url", "src", "tgt", "rel",

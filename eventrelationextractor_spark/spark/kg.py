@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+CC_MAX_ROUNDS = 25
+
 
 def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """mentions(url, mention_id, kind, lemma, ...) ⋈ alias(alias, kind,
@@ -52,13 +54,13 @@ def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
             .drop("alias_key", "alias_kind"))
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 25,
-                         src: str = "src", dst: str = "dst",
+def connected_components(edges: DataFrame, src: str = "src",
+                         dst: str = "dst",
                          stats: dict | None = None) -> DataFrame:
     """edges(src, dst) -> (vertex, component) with component = min vertex
     id (string order) in the component. ``stats`` (optional dict) gets
     ``rounds`` = iterations run until convergence. Raises RuntimeError
-    when ``max_iterations`` rounds do not converge: the labels would be
+    when ``CC_MAX_ROUNDS`` rounds do not converge: the labels would be
     wrong."""
     # checkpoint the edge list FIRST: vertices/labels are derived from it,
     # so deriving them pre-checkpoint would re-execute the (expensive)
@@ -76,7 +78,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
 
     none = F.lit(None).cast(labels.schema["component"].dataType)
 
-    for it in range(max_iterations):
+    for it in range(CC_MAX_ROUNDS):
         if stats is not None:
             stats["rounds"] = it + 1
         # 1-hop: pull the neighbour's current component; the vertex's own
@@ -92,7 +94,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
         # pointer jump: component(v) <- component(component(v)); component
         # ids are themselves vertex ids, so a chain whose ids grow along it
         # resolves in O(log length) rounds (other id orders can still take
-        # O(diameter) rounds, up to ``max_iterations``). ``hop``
+        # O(diameter) rounds, up to ``CC_MAX_ROUNDS``). ``hop``
         # is deliberately NOT checkpointed: its aggregation feeds both
         # sides of the self-join through the SAME Exchange, which Spark's
         # ReuseExchange dedupes - one execution, no extra materialization.
@@ -120,7 +122,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
         if changed == 0:
             return labels
     raise RuntimeError(f"connected_components did not converge in "
-                       f"{max_iterations} rounds")
+                       f"{CC_MAX_ROUNDS} rounds")
 
 
 def _keyed_edges(linked_mentions: DataFrame,

@@ -54,7 +54,7 @@ def driver_memory(host_bytes: int) -> str:
     return f"{min(host_bytes // 2 // 2**20, 12 * 1024)}m"
 
 
-def build_session(master: str | None = None, app_name: str = "erex-spark",
+def build_session(master: str | None = None,
                   shuffle_partitions: int | None = None, **extra):
     from pyspark.sql import SparkSession
 
@@ -69,7 +69,7 @@ def build_session(master: str | None = None, app_name: str = "erex-spark",
 
     builder = (SparkSession.builder
                .master(master)
-               .appName(app_name)
+               .appName("erex-spark")
                # local mode shares ONE JVM heap across all executor
                # threads, and Spark's 1g default starves the task buffers
                # of a many-core host (heavy dedup tiers OOMed at sf0.1 and

@@ -558,8 +558,7 @@ def export_training_features(pages: DataFrame,
     return out
 
 
-def train_models(pages: DataFrame, groups=("dct", "et", "ee"),
-                 max_rows: int = 2_000_000) -> dict:
+def train_models(pages: DataFrame, max_rows: int = 2_000_000) -> dict:
     """M1 end-to-end through Spark: distributed feature extraction
     (export_training_features with the F4 labeled_only filter) followed
     by the in-repo liblinear-exact trainer (core.lltrain, bit-level
@@ -596,4 +595,5 @@ def train_models(pages: DataFrame, groups=("dct", "et", "ee"),
             .agg(F.sort_array(F.collect_list("libsvm")).alias("rows"))
             .collect())
     by_group = {r["group"]: list(r["rows"]) for r in rows}
-    return {g: lltrain.train(by_group[g]) for g in groups if g in by_group}
+    return {g: lltrain.train(by_group[g]) for g in ("dct", "et", "ee")
+            if g in by_group}

@@ -89,52 +89,64 @@ def parse_wet_bytes(data: bytes):
                    block.decode("utf-8", "replace"))
 
 
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """-> (url string, warc_ts timestamp, html binary) from the WARC
-    file(s) at ``path`` (glob ok)."""
+def _read_records(spark: SparkSession, path: str, parse,
+                  payload: str) -> DataFrame:
+    """-> (url string, warc_ts timestamp, <payload>) from the files at
+    ``path`` (glob ok): one ``mapInPandas`` pass over ``binaryFile``
+    rows, ``parse(file_bytes)`` yielding (url, warc_date_iso, payload)
+    per record. ``payload`` is the DDL of the third column."""
     import pandas as pd
 
     files = spark.read.format("binaryFile").load(path) \
         .select("path", "content")
+    name = payload.split(" ")[0]
 
     def gen(batches):
         for pdf in batches:
             for content in pdf["content"]:
-                rows = list(parse_warc_bytes(bytes(content)))
+                rows = list(parse(bytes(content)))
                 if rows:
                     yield pd.DataFrame(
                         {"url": [r[0] for r in rows],
                          "warc_ts": pd.to_datetime(
                              [r[1] for r in rows], utc=True, format="ISO8601"
                          ).tz_localize(None),
-                         "html": [r[2] for r in rows]})
+                         name: [r[2] for r in rows]})
 
     return files.mapInPandas(
-        gen, "url string, warc_ts timestamp, html binary")
+        gen, f"url string, warc_ts timestamp, {payload}")
+
+
+def _record(rtype: str, headers: dict, block: bytes) -> bytes:
+    """One WARC record as ``_iter_records`` frames it: version line,
+    headers, Content-Length, block, record separator."""
+    h = [b"WARC/1.0", f"WARC-Type: {rtype}".encode()]
+    for k, v in headers.items():
+        h.append(f"{k}: {v}".encode())
+    h.append(b"Content-Length: " + str(len(block)).encode())
+    return b"\r\n".join(h) + b"\r\n\r\n" + block + b"\r\n\r\n"
+
+
+_WARCINFO = b"software: eventrelationextractor_spark test\r\n"
+
+
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """-> (url string, warc_ts timestamp, html binary) from the WARC
+    file(s) at ``path`` (glob ok)."""
+    return _read_records(spark, path, parse_warc_bytes, "html binary")
 
 
 def write_warc_bytes(pages) -> bytes:
     """Serialize (url, warc_ts_iso, html_bytes) rows into a minimal WARC
     file (warcinfo record + one response record per page) - the test
     fixture generator, NOT a production sink."""
-    out = []
-
-    def record(rtype: str, headers: dict, block: bytes) -> bytes:
-        h = [b"WARC/1.0",
-             f"WARC-Type: {rtype}".encode()]
-        for k, v in headers.items():
-            h.append(f"{k}: {v}".encode())
-        h.append(b"Content-Length: " + str(len(block)).encode())
-        return b"\r\n".join(h) + b"\r\n\r\n" + block + b"\r\n\r\n"
-
-    out.append(record("warcinfo", {"WARC-Filename": "test.warc"},
-                      b"software: eventrelationextractor_spark test\r\n"))
+    out = [_record("warcinfo", {"WARC-Filename": "test.warc"}, _WARCINFO)]
     for url, ts, html in pages:
         http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
                 + html)
-        out.append(record("response",
-                          {"WARC-Target-URI": url, "WARC-Date": ts},
-                          http))
+        out.append(_record("response",
+                           {"WARC-Target-URI": url, "WARC-Date": ts},
+                           http))
     return b"".join(out)
 
 
@@ -147,45 +159,18 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     the html->text stage entirely: the conversion block IS the page
     text, so this source feeds the text operators (quality, dedup,
     lang-id) directly."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-
-    def gen(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = list(parse_wet_bytes(bytes(content)))
-                if rows:
-                    yield pd.DataFrame(
-                        {"url": [r[0] for r in rows],
-                         "warc_ts": pd.to_datetime(
-                             [r[1] for r in rows], utc=True, format="ISO8601"
-                         ).tz_localize(None),
-                         "text": [r[2] for r in rows]})
-
-    return files.mapInPandas(
-        gen, "url string, warc_ts timestamp, text string")
+    return _read_records(spark, path, parse_wet_bytes, "text string")
 
 
 def write_wet_bytes(pages) -> bytes:
     """Serialize (url, warc_ts_iso, text) rows into a minimal WET file
     (warcinfo + one conversion record per page) - the test fixture
     generator, NOT a production sink."""
-    out = []
-
-    def record(rtype: str, headers: dict, block: bytes) -> bytes:
-        h = [b"WARC/1.0", f"WARC-Type: {rtype}".encode()]
-        for k, v in headers.items():
-            h.append(f"{k}: {v}".encode())
-        h.append(b"Content-Length: " + str(len(block)).encode())
-        return b"\r\n".join(h) + b"\r\n\r\n" + block + b"\r\n\r\n"
-
-    out.append(record("warcinfo", {"WARC-Filename": "test.warc.wet"},
-                      b"software: eventrelationextractor_spark test\r\n"))
+    out = [_record("warcinfo", {"WARC-Filename": "test.warc.wet"},
+                   _WARCINFO)]
     for url, ts, text in pages:
-        out.append(record("conversion",
-                          {"WARC-Target-URI": url, "WARC-Date": ts,
-                           "Content-Type": "text/plain"},
-                          text.encode("utf-8")))
+        out.append(_record("conversion",
+                           {"WARC-Target-URI": url, "WARC-Date": ts,
+                            "Content-Type": "text/plain"},
+                           text.encode("utf-8")))
     return b"".join(out)

@@ -4,8 +4,8 @@ so their oracle_sql() entries can hash-gate values instead of rows-only.
 
 The synthetic corpus is a pure function of doc_id (datagen.py), so each
 query's per-document output is too. This tool replays, per doc_id, the
-exact per-document computation the Spark UDFs run (core.pipeline
-temporal extraction -> core.timegraph consistency filter; the
+exact per-document computation the Spark UDFs run (core.pipeline's
+page_triples, with and without the timegraph consistency filter; the
 kg_awareness gold/pred perturbation -> core.awareness closure scorer)
 and writes the results keyed by doc_id. The oracle then JOINs the
 fixture against the registered ``documents`` view, which restricts it to
@@ -14,9 +14,10 @@ through sf1.0 (doc_id < 50000 by default).
 
 Correctness of the replayed computation is anchored by the golden parity
 suite (tests/golden/ - the compiled reference's own outputs); what the
-hash gate adds on top is that the DISTRIBUTED execution (mapInPandas
-batching, cogroup bucketing, perturbation logic, round-trip through
-Arrow) reproduces the single-document core bit-for-bit at every SF.
+hash gate adds on top is that the DISTRIBUTED execution (mapInArrow
+batching, the tag-union bucketing of awareness_scores, perturbation
+logic, round-trip through Arrow) reproduces the single-document core
+bit-for-bit at every SF.
 
 Usage: python tools/make_oracle_fixtures.py [--max-doc 50000] [--procs N]
 """
@@ -52,24 +53,28 @@ def _round6_half_up(x: float) -> float:
 
 
 def doc_rows(d: int) -> tuple:
-    """-> (consistent_triple_rows, awareness_row) for one doc_id,
-    replaying spark/stages.py::extract_triples(consistent_only=True) and
-    __spark_entry__._q_awareness / spark/evaluate.py::awareness_scores."""
+    """-> (consistent_triple_rows, awareness_row) for one doc_id: the
+    triples ``pipeline.page_triples`` gives the page, as
+    spark/stages.py::extract_triples(mode="temporal") runs it with and
+    without ``consistent_only``, and the awareness row of
+    __spark_entry__._q_awareness / spark/evaluate.py::awareness_scores
+    over the unfiltered ones."""
     from eventrelationextractor_spark.core.awareness import (
         temporal_awareness)
-    from eventrelationextractor_spark.core.pipeline import temporal_triples
-    from eventrelationextractor_spark.core.timegraph import keep_consistent
+    from eventrelationextractor_spark.core.pipeline import page_triples
     from eventrelationextractor_spark.datagen import synth_page
     from eventrelationextractor_spark.spark.stages import parse_page
 
     page = synth_page(d)
-    doc = parse_page(page["text"], page["url"])
-    temporal = temporal_triples(doc, _lexicons(), max_timexes=500)
 
-    cons = [(d, t.source, t.rel, t.target)
-            for t in keep_consistent(temporal)]
+    def triples(consistent_only):
+        # a fresh parse per run, as each Spark query parses its own page
+        return page_triples(parse_page(page["text"], page["url"]),
+                            _lexicons(), "temporal", 500,
+                            consistent_only=consistent_only)
 
-    gold = [(t.source, t.target, t.rel) for t in temporal]
+    cons = [(d, t.source, t.rel, t.target) for t in triples(True)]
+    gold = [(t.source, t.target, t.rel) for t in triples(False)]
     pred = [r for r in gold if not (d % 9 == 0 and r[0] == "e4")]
     if d % 11 == 0:
         pred.append(("e1", "e2", "BEFORE"))
