@@ -20,8 +20,7 @@ Scale shape (Lloyd's algorithm, the classic Spark formulation):
 * Empty clusters keep their previous centroid (deterministic; matches
   the SQL oracle's COALESCE on a left join).
 
-Determinism contract (mirrored by the DuckDB oracle in
-__spark_entry__.py): init centroids are the vectors with ids [0, k);
+Determinism contract: init centroids are the vectors with ids [0, k);
 distance is squared Euclidean in float64; ties break to the lowest
 cell id; iteration count is fixed, not convergence-tested.
 """

@@ -1433,49 +1433,12 @@ def step_breakpoint(series: DataFrame, key_col: str, order_col: str,
                     "cost", "mean_left", "mean_right"))
 
 
-def lateness_profile(events: DataFrame, key_col: str = "user_id",
-                     arrival_col: str = "event_id",
-                     ts_col: str = "ts",
-                     bucket_seconds: int = 60,
-                     max_bucket: int = 10) -> DataFrame:
-    """Event-time lateness histogram -> (bucket, n, sum_late_us,
-    max_late_us): the telemetry that SIZES a streaming watermark.
-    lateness(e) = running-max event time seen so far (per key, in
-    arrival order) minus e's own event time - exactly the quantity
-    ``withWatermark`` trades against state size, so "what fraction of
-    events are > N minutes late" is the question this answers before
-    anyone picks N.
-
-    Arrival order is the ingest sequence column (monotone per source),
-    so the running max is ONE window per key - distributed by key, no
-    global sort - and lateness is exact integer microseconds
-    (unix_micros both engines). Buckets are lateness div
-    ``bucket_seconds``, capped at ``max_bucket`` (the overflow bucket
-    absorbs the tail); bucket 0 = in-order arrivals."""
-    w = (Window.partitionBy(key_col).orderBy(arrival_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # cast handles TIMESTAMP_NTZ (unix_micros rejects it); lateness is
-    # a DIFFERENCE, so any session-timezone offset cancels exactly
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    late = (F.max(us).over(w) - us).alias("late_us")
-    b = events.select(late).select(
-        F.least(F.expr(f"late_us div {int(bucket_seconds) * 1000000}"),
-                F.lit(int(max_bucket))).cast("long").alias("bucket"),
-        "late_us")
-    return b.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("late_us").cast("long").alias("sum_late_us"),
-        F.max("late_us").cast("long").alias("max_late_us"))
-
-
 def streaming_lateness(events: DataFrame) -> DataFrame:
     """ONLINE per-event lateness over a stream of (key, arr, ts_us)
-    rows - the stateful twin of :func:`lateness_profile`'s window, and
-    EXACTLY batch-equivalent (the running max is pure integer state,
+    rows - EXACTLY batch-equivalent (the running max is pure integer state,
     so there is no moment drift): late_us = max event time seen so far
     for the key minus this event's time. The live feed for a watermark
-    dashboard - the batch operator sizes the watermark offline, this
-    one tracks whether reality still fits it.
+    dashboard: it tracks whether the stream still fits the watermark.
 
     State per key is ONE integer (the running max). Same
     arrival-ordered contract as the other NoTimeout operators (rows

@@ -141,42 +141,6 @@ def jaro_winkler(s1: str, s2: str) -> float:
     return j
 
 
-def blocked_jw_pairs(terms: DataFrame, block_col: str = "sdx",
-                     term_col: str = "term",
-                     threshold: float = 0.85) -> DataFrame:
-    """Blocked fuzzy-matching pipeline -> (a, b, jw) for a < b with
-    jw >= threshold (6dp): candidate pairs come ONLY from shared
-    blocking keys (phonetic Soundex blocks here - the classic
-    record-linkage shape: block first, score the survivors), then
-    Jaro-Winkler verifies. Never an all-pairs product; the expensive
-    scorer runs on block-collided pairs only, and the kernel is an
-    Arrow-batched pandas UDF of the shared pure-Python JW (DuckDB
-    bit-identical, so the 6dp gate has no cross-impl slack)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # this module uses `from __future__ import annotations`, which
-    # stringifies hints and breaks pandas_udf's signature inspection -
-    # attach REAL annotation objects at runtime instead
-    def _jw_kernel(a, b):
-        return pd.Series([jaro_winkler(x, y) for x, y in zip(a, b)])
-
-    _jw_kernel.__annotations__ = {"a": pd.Series, "b": pd.Series,
-                                  "return": pd.Series}
-    jw_udf = pandas_udf(_jw_kernel, "double")
-
-    l = terms.select(F.col(block_col).alias("k"),
-                     F.col(term_col).alias("a"))
-    r = terms.select(F.col(block_col).alias("k"),
-                     F.col(term_col).alias("b"))
-    pairs = (l.join(r, "k").filter(F.col("a") < F.col("b"))
-             .select("a", "b"))
-    scored = pairs.withColumn(
-        "jw", F.round(jw_udf(F.col("a"), F.col("b")), 6))
-    return scored.filter(F.col("jw") >= float(threshold)) \
-        .select("a", "b", "jw")
-
-
 def sorted_neighborhood(df: DataFrame, id_col: str, key,
                         window: int = 8,
                         bucket_prefix: int = 3) -> DataFrame:
@@ -373,9 +337,9 @@ def blocked_dl_pairs(terms: DataFrame, block_col: str = "sdx",
                      term_col: str = "term",
                      max_dist: int = 2) -> DataFrame:
     """Blocked fuzzy matching on TRUE Damerau-Levenshtein -> (a, b,
-    dl) for a < b with dl <= ``max_dist``: the transposition-aware
-    sibling of :func:`blocked_jw_pairs` (typo linkage where 'hte' is
-    one edit from 'the', not two). Same record-linkage shape - pairs
+    dl) for a < b with dl <= ``max_dist``: transposition-aware typo
+    linkage ('hte' is one edit from 'the', not two). Record-linkage
+    shape - pairs
     come ONLY from shared blocking keys, the O(|a|*|b|) kernel runs
     on block survivors via an Arrow-batched pandas UDF, and the
     output is pure BIGINT so the hash gate has zero float slack."""

@@ -509,147 +509,6 @@ def split_leakage(docs, weights: dict, id_col: str = "doc_id",
             .select("split_a", "split_b", "n_pairs", "is_leak"))
 
 
-def equidepth_histogram(df: DataFrame, value_col: str,
-                        id_col: str = "doc_id", n_buckets: int = 8,
-                        approx: bool = False) -> DataFrame:
-    """Equi-depth histogram of a column -> (bucket, n, min_val,
-    max_val, ndv): the optimizer statistic behind selectivity
-    estimation and range-partition boundary choice (every CBO keeps
-    one per join/filter column; ``zone_map_prune`` consumes exactly
-    these boundaries).
-
-    The exact branch assigns buckets by global ntile over
-    (value, id) - a total order, so bucket membership is
-    deterministic; the ntile sort is single-partition by nature, which
-    is fine for the statistic-building pass on a COLUMN SAMPLE but not
-    for a full 100-TB scan. The ``approx=True`` branch is the scale
-    path: percentile_approx picks the n_buckets-1 boundaries in one
-    mergeable map-side sketch pass, then a partial-agged groupBy
-    assigns rows - same output schema, rank-error epsilon on the
-    boundaries. The oracle gates the exact branch (the
-    length_percentiles contract)."""
-    nb = int(n_buckets)
-    if approx:
-        ps = "array(" + ", ".join(repr(i / nb) for i in range(1, nb)) \
-            + ")"
-        bounds = df.agg(F.expr(
-            f"percentile_approx({value_col}, {ps}, 10000)").alias("bs"))
-        b = (df.crossJoin(F.broadcast(bounds))
-             .withColumn("bucket", F.expr(
-                 f"size(filter(bs, b -> b < {value_col}))")
-                 .cast("long")))
-    else:
-        b = df.withColumn("bucket", (F.ntile(nb).over(
-            Window.orderBy(F.col(value_col), F.col(id_col))) - 1)
-            .cast("long"))
-    return (b.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min(value_col).cast("long").alias("min_val"),
-        F.max(value_col).cast("long").alias("max_val"),
-        F.countDistinct(value_col).cast("long").alias("ndv")))
-
-
-def encoding_advisor(df: DataFrame, cols: list,
-                     group_col: str = "source",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Columnar-encoding advisor -> one row per candidate column:
-    (col_name, n, ndv, total_bytes, n_runs, plain_bytes, dict_bytes,
-    rle_bytes, encoding). The write-path twin of ``compaction_plan``:
-    before rewriting a 100-TB table, estimate per column whether
-    PLAIN, DICTIONARY or RLE wins, from exact integer telemetry:
-
-        plain = total_bytes + 4n              (length-prefixed)
-        dict  = distinct_bytes + (n*bits+7) div 8,
-                bits = len(bin(max(ndv-1, 1)))   (index width)
-        rle   = run_head_bytes + 4 * n_runs   (value + run length)
-
-    Runs are counted within (group, id-order) - the unit a writer
-    actually sorts (a file/partition), so the estimate is layout-aware
-    and the lag() window is per-group, never a global sort. The
-    recommendation is argmin with the fixed tie order
-    plain < dict < rle. Values are profiled as strings (the parquet
-    byte view); NULLs count 0 bytes and break runs."""
-    stack_expr = "stack({}, {}) as (col_name, val)".format(
-        len(cols), ", ".join(
-            f"'{c}', cast({c} as string)" for c in cols))
-    long_df = df.select(F.col(group_col).alias("grp"),
-                        F.col(id_col).alias("rid"),
-                        F.expr(stack_expr))
-    w = Window.partitionBy("col_name", "grp").orderBy("rid")
-    runs = (long_df
-            .withColumn("prev", F.lag("val").over(w))
-            .withColumn("is_head", (F.row_number().over(w) == 1)
-                        | ~F.col("val").eqNullSafe(F.col("prev"))))
-    base = runs.groupBy("col_name").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.coalesce(F.length("val"), F.lit(0))).cast("long")
-        .alias("total_bytes"),
-        F.sum(F.col("is_head").cast("long")).cast("long")
-        .alias("n_runs"),
-        F.sum(F.when(F.col("is_head"),
-                     F.coalesce(F.length("val"), F.lit(0)))
-              .otherwise(0)).cast("long").alias("run_head_bytes"))
-    dist = (long_df.select("col_name", "val").distinct()
-            .groupBy("col_name").agg(
-                F.count(F.lit(1)).cast("long").alias("ndv"),
-                F.sum(F.coalesce(F.length("val"), F.lit(0)))
-                .cast("long").alias("distinct_bytes")))
-    est = (base.join(dist, "col_name")
-           .withColumn("bits", F.length(F.bin(
-               F.greatest(F.col("ndv") - 1, F.lit(1)))).cast("long"))
-           .withColumn("plain_bytes",
-                       (F.col("total_bytes") + 4 * F.col("n"))
-                       .cast("long"))
-           .withColumn("dict_bytes", (F.col("distinct_bytes")
-                       + F.expr("(n * bits + 7) div 8")).cast("long"))
-           .withColumn("rle_bytes", (F.col("run_head_bytes")
-                       + 4 * F.col("n_runs")).cast("long")))
-    enc = (F.when((F.col("plain_bytes") <= F.col("dict_bytes"))
-                  & (F.col("plain_bytes") <= F.col("rle_bytes")),
-                  "plain")
-           .when(F.col("dict_bytes") <= F.col("rle_bytes"), "dict")
-           .otherwise("rle"))
-    return est.select("col_name", "n", "ndv", "total_bytes", "n_runs",
-                      "plain_bytes", "dict_bytes", "rle_bytes",
-                      enc.alias("encoding"))
-
-
-def rendezvous_shards(df: DataFrame, key_col: str,
-                      n_shards: int = 16) -> DataFrame:
-    """Rendezvous (highest-random-weight) shard assignment + balance
-    telemetry -> (shard, n_keys, pct_ppm): the consistent-hashing
-    scheme a distributed ingest tier uses so that adding/removing a
-    shard moves only 1/n of the keys (Thaler & Ravishankar 1998) -
-    unlike mod-N, which reshuffles everything. This is the planning
-    query: how even is the assignment over the real key population?
-
-    Each key picks argmax over shards of md5(key ':' shard). The
-    argmax is the string max of md5hex || ':' || zero-padded shard -
-    a plain partial-aggregable max per key (map-side combine, no
-    window), then one statistic-scale count per shard. The explode is
-    n_shards rows per key, all map-side."""
-    ns = int(n_shards)
-    pad = len(str(ns - 1))
-    tagged = (df.select(F.col(key_col).cast("string").alias("k"))
-              .distinct()
-              .select("k", F.explode(F.sequence(
-                  F.lit(0), F.lit(ns - 1))).alias("s"))
-              .select("k", F.concat(
-                  F.md5(F.concat_ws(":", F.col("k"), F.col("s"))),
-                  F.lit(":"),
-                  F.lpad(F.col("s").cast("string"), pad, "0"))
-                  .alias("hs")))
-    best = (tagged.groupBy("k").agg(F.max("hs").alias("win"))
-            .select(F.substring_index("win", ":", -1).cast("long")
-                    .alias("shard")))
-    counts = best.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"))
-    tot = counts.agg(F.sum("n_keys").alias("t"))
-    return (counts.crossJoin(F.broadcast(tot))
-            .select("shard", "n_keys",
-                    F.expr("(1000000 * n_keys) div t").alias("pct_ppm")))
-
-
 def fd_violations(df: DataFrame, fds: list) -> DataFrame:
     """Functional-dependency audit -> one row per candidate FD:
     (fd, n_rows, n_keys, n_violating_keys, g3_rows). ``fds`` is a
@@ -777,8 +636,7 @@ def hash_ring_assign(df: DataFrame, key_col: str, n_nodes: int = 8,
                      drop_node: int | None = None) -> DataFrame:
     """Consistent-hash RING assignment + minimal-movement telemetry ->
     (node, n_keys, n_moved_away): the classic Karger ring with virtual
-    nodes, the OTHER consistent-hashing scheme beside
-    :func:`rendezvous_shards` (HRW). Each of ``n_nodes * n_vnodes``
+    nodes. Each of ``n_nodes * n_vnodes``
     ring positions is md5('n<node>#<vnode>'); a key lands on the first
     ring position clockwise from md5('k<key>') (wrap = global min).
     With ``drop_node`` set, the assignment is recomputed on the ring
@@ -893,10 +751,9 @@ def huffman_dictionary(docs: DataFrame, top_n: int = 64,
                        text_col: str = "text") -> DataFrame:
     """Huffman code lengths for a top-``top_n`` term dictionary ->
     (term, freq, code_len): the optimal-prefix-code storage bound for
-    dictionary-encoded string columns — what :func:`encoding_advisor`
-    prices with fixed-width bit packing, this prices with
-    frequency-shaped codes (sum(freq*code_len) is the entropy-coded
-    byte floor a columnar writer can reach).
+    dictionary-encoded string columns, priced with frequency-shaped
+    codes (sum(freq*code_len) is the entropy-coded byte floor a
+    columnar writer can reach).
 
     The tree build is inherently sequential over the dictionary — a
     STATISTIC-SCALE object by construction (top_n via distributed
@@ -991,10 +848,10 @@ def maxdiff_histogram(df: DataFrame, value_col: str,
     """MaxDiff(V,F) histogram -> (seg, lo_bucket, hi_bucket,
     n_buckets, n_rows): the classic optimizer-statistics histogram
     (Poosala et al., VLDB 1996) that places segment boundaries at the
-    k-1 LARGEST adjacent frequency jumps — the integer-exact,
-    boundary-placing complement of ``equidepth_histogram``'s equal-
-    mass cuts (equidepth balances mass; MaxDiff isolates cliffs, so
-    skewed value domains don't smear across segments).
+    k-1 LARGEST adjacent frequency jumps — integer-exact and
+    boundary-placing (an equi-depth histogram balances mass; MaxDiff
+    isolates cliffs, so skewed value domains don't smear across
+    segments).
 
     Fully integer and window-free at corpus scale: one groupBy
     collapses the corpus to coarse value buckets (div

@@ -961,63 +961,12 @@ def spearman_rho(df: DataFrame, key_col: str, x_col: str, y_col: str) \
     return agg.select(key_col, "n", rho.alias("rho"))
 
 
-def brier_decomposition(df: DataFrame, score_ppm_col: str,
-                        label_col: str, n_bins: int = 10) -> DataFrame:
-    """Murphy (1973) decomposition of the Brier score over confidence
-    bins -> one row per bin, EVERY column an exact integer: the
-    diagnostic one level deeper than ``calibration_table`` -
-    reliability (is the score honest?) and resolution (does it
-    actually separate classes?) are different failure modes that the
-    raw Brier number conflates, and a corpus-quality scorer can be
-    well-calibrated yet useless (rel ~ 0, res ~ 0).
-
-    Per bin k:  mse_pp2      = sum((p_i - o_i*1e6)^2) div n_k
-                rel_num_pp2  = n_k * (mean_p - mean_o)^2
-                res_num_pp2  = n_k * (mean_o_k - mean_o_global)^2
-    (pp2 = ppm-squared; sum the *_num columns and div by N for the
-    scalar REL / RES, Brier = UNC + REL - RES). Means are integer-div
-    ppm - the decomposition is DEFINED on those, so the table is
-    engine-exact with zero float tolerance, merge-order-proof.
-
-    Scale shape: one partial-agged groupBy to n_bins rows + a 1-row
-    broadcast of the global positive rate."""
-    width = 1000000 // int(n_bins)
-    b = df.select(
-        F.expr(f"cast({score_ppm_col} as bigint) div {width}")
-        .alias("bin"),
-        F.col(score_ppm_col).cast("long").alias("conf"),
-        F.when(F.col(label_col).cast("boolean"), F.lit(1))
-        .otherwise(F.lit(0)).cast("long").alias("pos"))
-    agg = b.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("n_pos"),
-        F.sum("conf").cast("long").alias("conf_sum"),
-        F.sum((F.col("conf") - 1000000 * F.col("pos"))
-              * (F.col("conf") - 1000000 * F.col("pos")))
-        .cast("long").alias("se_sum"))
-    glob = agg.agg(F.sum("n").alias("n_tot"),
-                   F.sum("n_pos").alias("pos_tot")).select(
-        F.expr("(1000000 * pos_tot) div n_tot").alias("global_o_ppm"))
-    out = (agg.crossJoin(F.broadcast(glob))
-           .withColumn("mean_p_ppm", F.expr("conf_sum div n"))
-           .withColumn("mean_o_ppm", F.expr("(1000000 * n_pos) div n")))
-    gap = F.col("mean_p_ppm") - F.col("mean_o_ppm")
-    dev = F.col("mean_o_ppm") - F.col("global_o_ppm")
-    return out.select(
-        "bin", "n", "n_pos", "mean_p_ppm", "mean_o_ppm", "global_o_ppm",
-        F.expr("se_sum div n").alias("mse_pp2"),
-        (F.col("n") * gap * gap).cast("long").alias("rel_num_pp2"),
-        (F.col("n") * dev * dev).cast("long").alias("res_num_pp2"))
-
-
 def woe_iv(df: DataFrame, bin_col: str, label_col: str) -> DataFrame:
     """Weight-of-Evidence / Information-Value table per feature bin ->
     (bin, n, n_pos, n_neg, woe, iv_term): the standard scorecard
     feature-screening transform (Siddiqi 2006) - how predictive is a
     binned feature of a binary outcome, bin by bin, and in total
-    (IV = sum(iv_term): <0.02 useless, >0.3 strong). The feature-
-    engineering sibling of ``brier_decomposition`` (that one grades a
-    score, this one grades a raw feature).
+    (IV = sum(iv_term): <0.02 useless, >0.3 strong).
 
         woe_k = ln( ((2*pos_k+1)/(2*POS)) / ((2*neg_k+1)/(2*NEG)) )
         iv_k  = (pos_k/POS - neg_k/NEG) * woe_k

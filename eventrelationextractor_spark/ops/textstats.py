@@ -1193,58 +1193,6 @@ def term_lift(docs: DataFrame, flag_col: str = "is_new", k: int = 20,
             .select("rank", "term", "new_cnt", "ref_cnt", "lift_ppm"))
 
 
-def llr_collocations(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", min_count: int = 5,
-                     k: int = 50) -> DataFrame:
-    """Top-``k`` bigram collocations by Dunning's log-likelihood ratio
-    (Dunning 1993) - the significance-test sibling of
-    ``pmi_collocations``. PMI over-rewards rare pairs (two hapaxes that
-    co-occur once get the max score); LLR weights the evidence by the
-    full 2x2 contingency table over the bigram event space, so it
-    surfaces *statistically supported* multi-word expressions:
-
-        k11 = c(w1 w2)            k12 = c(w1 .) - k11
-        k21 = c(. w2) - k11       k22 = B - c(w1 .) - c(. w2) + k11
-        llr = 2 * sum_ij  k_ij * ln( k_ij * B / (row_i * col_j) )
-
-    with c(w1 .) / c(. w2) POSITIONAL marginals (bigrams starting with
-    w1 / ending with w2 - computed over ALL bigrams, before the
-    min_count cut) and B the bigram total. Zero cells contribute 0.
-
-    Scale shape: identical to pmi_collocations - the bigram count is
-    one partial-aggregated groupBy of map-side within-row pairs, the
-    marginals are two more partial aggs of that vocabulary-scale table,
-    the joins are vocabulary x vocabulary with the min_count filter
-    applied to the probe side first, totals ride a broadcast 1-row
-    frame, and the top-k is a TakeOrdered. LLR is a fixed 4-term
-    expression (deterministic summation order) over exact integer
-    counts, rounded to 6 decimals BEFORE ranking; ties break (w1, w2)."""
-    bg_all = (doc_bigrams(df, id_col, text_col)
-              .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_xy")))
-    left = bg_all.groupBy("w1").agg(F.sum("c_xy").alias("c_1dot"))
-    right = bg_all.groupBy("w2").agg(F.sum("c_xy").alias("c_dot2"))
-    btot = bg_all.agg(F.sum("c_xy").alias("b_total"))
-    cand = (bg_all.filter(F.col("c_xy") >= int(min_count))
-            .join(left, "w1").join(right, "w2")
-            .crossJoin(F.broadcast(btot)))
-    term = ("CASE WHEN {k} > 0 THEN {k} * ln(CAST({k} AS DOUBLE) * b_total"
-            " / (CAST({r} AS DOUBLE) * {c})) ELSE 0.0 END")
-    llr = ("2.0 * (" + " + ".join([
-        term.format(k="c_xy", r="c_1dot", c="c_dot2"),
-        term.format(k="(c_1dot - c_xy)", r="c_1dot",
-                    c="(b_total - c_dot2)"),
-        term.format(k="(c_dot2 - c_xy)", r="(b_total - c_1dot)",
-                    c="c_dot2"),
-        term.format(k="(b_total - c_1dot - c_dot2 + c_xy)",
-                    r="(b_total - c_1dot)", c="(b_total - c_dot2)"),
-    ]) + ")")
-    scored = cand.withColumn("llr", F.round(F.expr(llr), 6))
-    return (scored.orderBy(F.col("llr").desc(), "w1", "w2").limit(int(k))
-            .select("w1", "w2", "c_xy",
-                    F.col("c_1dot").alias("c_x"),
-                    F.col("c_dot2").alias("c_y"), "llr"))
-
-
 def mattr_diversity(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
                     window: int = 20) -> DataFrame:

@@ -749,14 +749,14 @@ def test_registry_oracle_parity_and_no_duplicate_keys():
     silent last-wins hazard the round-4 ADVICE flagged on
     gazetteer_spans."""
     import re
-    import sys
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+
     import __spark_entry__ as entry
     q = set(entry.queries())
     o = set(entry.oracle_sql())
     assert o == q, (sorted(q - o), sorted(o - q))
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = Path(entry.__file__).read_text()
     m = re.search(r'def queries\(\).*?return \{(.*?)\n    \}', src,
                   re.S)
     names = re.findall(r'"([a-z0-9_]+)":', m.group(1))

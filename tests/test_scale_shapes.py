@@ -326,61 +326,7 @@ def test_resumable_write_iceberg_branch(spark, tmp_path):
     assert r2["written"] == [] and sorted(r2["skipped"]) == list(range(4))
 
 
-# ------------------------------------------------- TPC-H suite plan shapes
-
-
-def test_tpch_suite_no_nested_loop_joins(spark):
-    """None of the 22 TPC-H query shapes may plan a CartesianProduct or
-    BroadcastNestedLoopJoin (the single-row broadcast scalars in
-    Q11/Q15/Q22 are deliberate crossJoins of ONE row and must stay
-    BNLJ-of-1 only - everything fact-scale must be hash/merge). The
-    inequality residuals in Q21's semi/anti joins are the classic way
-    to accidentally plan a nested loop; this pins them to equi-joins
-    on the orderkey with the inequality as a post-join condition."""
-    import __spark_entry__ as entry
-
-    sf = "/root/testdata/sf0.001"
-    qs = entry.queries()
-    scalar_cross = {  # single-row broadcast scalar is the intended shape
-        "tpch_top_supplier", "tpch_idle_customers", "tpch_important_parts"}
-    for name in [q for q in qs if q.startswith("tpch_")]:
-        plan = _physical(qs[name](spark, sf))
-        assert "CartesianProduct" not in plan, name
-        if name not in scalar_cross:
-            assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_tpch_waiting_suppliers_semi_anti_are_equi(spark):
-    """Q21: EXISTS -> LeftSemi and NOT EXISTS -> LeftAnti must both be
-    keyed on the orderkey (SortMergeJoin/ShuffledHashJoin residual
-    form), with the supplier inequality riding as a join condition -
-    never a nested loop over the fact."""
-    import __spark_entry__ as entry
-
-    df = entry._q_tpch_waiting_suppliers(spark, "/root/testdata/sf0.001")
-    plan = _physical(df)
-    assert "LeftSemi" in plan and "LeftAnti" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    df.collect()  # shape must also execute
-
-
-def test_tpch_order_counts_keeps_outer_join(spark):
-    """Q13: the priority filter lives ON the join (right side), so
-    order-less customers must survive into the zero bucket - a
-    post-join filter would silently turn the outer join inner."""
-    import __spark_entry__ as entry
-
-    df = entry._q_tpch_order_counts(spark, "/root/testdata/sf0.001")
-    plan = _physical(df)
-    assert "LeftOuter" in plan
-    rows = {r.c_count: r.custdist for r in df.collect()}
-    import duckdb
-    n_cust = duckdb.sql(
-        "SELECT count(*) FROM "
-        "read_parquet('/root/testdata/sf0.001/customer.parquet')"
-    ).fetchone()[0]
-    assert sum(rows.values()) == n_cust  # every customer lands in a bucket
+# ------------------------------------------------- operator plan shapes
 
 
 def test_stream_enrich_is_equi_join_with_residual_range(spark):
@@ -432,24 +378,20 @@ def test_ivm_refresh_no_base_rescan_shape(spark):
 def test_session4_new_shapes_no_nested_loops(spark):
     """Round-4 session-4 operator shapes: record_linkage's blocked pair
     generation must be an equi-join (a nested loop here is the
-    all-pairs catastrophe blocking exists to prevent); label_spread's
-    vote rounds and events_cusum's window stack must stay hash/merge.
-    Single-row scalar crossJoins (kappa/MAD medians, MAP/MRR totals,
-    vocab_growth's range row, layout quantile bounds) are the intended
-    BNLJ-of-1 and exempt."""
+    all-pairs catastrophe blocking exists to prevent), and
+    session_transitions' lead window must stay hash/merge. Single-row
+    scalar crossJoins (MAD medians, vocab_growth's range row) are the
+    intended BNLJ-of-1 and exempt."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    fact_scale = ["record_linkage", "label_spread", "events_cusum",
-                  "session_transitions"]
+    fact_scale = ["record_linkage", "session_transitions"]
     for name in fact_scale:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-    scalar_cross = ["annotator_agreement", "mad_outliers", "events_gini",
-                    "bm25_map_mrr", "calibration_bins", "vocab_growth",
-                    "hilbert_layout"]
+    scalar_cross = ["mad_outliers", "vocab_growth"]
     for name in scalar_cross:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
@@ -469,32 +411,22 @@ def test_record_linkage_blocked_equi_join(spark):
 
 
 def test_session5_new_shapes_no_nested_loops(spark):
-    """Round-4 session-5 operator shapes: the pairwise generators
-    (frequent_pairs' basket self-join, jaccard_links' wedge join,
-    mann_kendall's within-key pair join, ktruss's per-round wedge
-    joins, phrase_search's postings join) must all stay keyed equi-
-    joins - a nested loop in any of them is the all-pairs blowup the
-    operator's blocking exists to prevent. Single-row scalar
-    crossJoins (roc_auc/ks totals, MI label marginals, PSI totals,
-    frequent_pairs' n_baskets row, assortativity's final row) are the
-    intended BNLJ-of-1 and exempt from the BNLJ assert."""
+    """Round-4 session-5 operator shapes: phrase_search's postings
+    group and pr_curve's window over distinct scores must stay keyed -
+    a nested loop in either is an all-pairs blowup.
+    Single-row scalar crossJoins (roc_auc totals, MI label marginals,
+    frequent_pairs' n_baskets row) are the intended BNLJ-of-1 and
+    exempt from the BNLJ assert."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    fact_scale = ["link_truss", "link_jaccard", "trend_mann_kendall",
-                  "events_acf", "phrase_search",
-                  "events_linfit", "pr_curve"]
+    fact_scale = ["phrase_search", "pr_curve"]
     for name in fact_scale:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-    # tcloseness's group x ladder spine is an intended broadcast
-    # crossJoin of the m-row sensitive ladder (m small by contract)
-    scalar_cross = ["frequent_pairs", "roc_auc", "ks_drift",
-                    "benford_digits", "token_label_mi", "psi_drift",
-                    "link_assortativity", "tcloseness_audit",
-                    "chi2_independence"]
+    scalar_cross = ["frequent_pairs", "roc_auc", "token_label_mi"]
     for name in scalar_cross:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
@@ -515,26 +447,21 @@ def test_frequent_pairs_prunes_before_self_join(spark):
 
 def test_session7_new_shapes_no_nested_loops(spark):
     """Round-4 session-7 shapes: prefix_filter_pairs' prefix-to-prefix
-    candidate join + full-set verify join, pareto's champion join-back,
-    weighted Bellman-Ford's per-round frontier joins, weighted_median's
-    value-grain windows, min-span proximity's postings window, and
-    naive Bayes' model join must all stay keyed equi-joins / windows —
-    never a loop join. naive_bayes and kaplan_meier carry intended
-    1-row broadcast scalar crossJoins (priors / risk totals) and are
-    asserted CartesianProduct-free only."""
+    candidate join + full-set verify join and weighted_median's
+    value-grain windows must stay keyed equi-joins / windows — never a
+    loop join. naive_bayes and zipf_fit carry intended 1-row broadcast
+    scalar crossJoins (priors / fit totals) and are asserted
+    CartesianProduct-free only."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    strict = ["prefix_filter_pairs", "pareto_docs",
-              "link_shortest_paths", "proximity_minspan",
-              "weighted_median", "link_clustering",
-              "events_seasonality"]
+    strict = ["prefix_filter_pairs", "weighted_median"]
     for name in strict:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-    for name in ["naive_bayes", "events_kaplan_meier", "zipf_fit"]:
+    for name in ["naive_bayes", "zipf_fit"]:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
 
@@ -558,54 +485,43 @@ def test_prefix_filter_model_join_is_hash(spark):
 
 
 def test_session8_new_shapes_no_nested_loops(spark):
-    """Round-4 session-8 shapes: the perceptual-hash band join + verify,
-    the multi-tier pair union feeding CC, bounded_rings' frontier
-    self-joins + mutual join, RAKE's freq/degree join-back, and the
-    B-cubed cell/size joins must all stay keyed equi-joins - never a
-    loop join. isotonic_calibration is a per-group applyInPandas over
-    bin rows (no join at all) and is asserted loop-free too."""
+    """Round-4 session-8 shape: RAKE's freq/degree join-back must stay
+    a keyed equi-join - never a loop join."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    for name in ["media_phash_pairs", "dedup_multitier", "link_rings",
-                 "rake_keyphrases", "dedup_bcubed",
-                 "isotonic_calibration"]:
+    for name in ["rake_keyphrases"]:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_session9_new_shapes_no_nested_loops(spark):
-    """Round-4 session-9 shapes: SimRank's per-round in-edge x score x
-    in-edge joins, SCC's frontier sweeps + full-outer intersect,
-    harmonic's seed-tagged BFS, LTR's broadcast query semi-join,
-    posting sizing's per-term window, MaxSim's vocab equi-join and the
-    prefix/trending/stump/batching aggregations must all stay keyed -
-    never a loop join. (ams_f2 / bucketed_batching are pure
-    aggregations; gazetteer_spans is a zero-shuffle mapInPandas.)"""
+    """Round-4 session-9 shapes: SCC's frontier sweeps + full-outer
+    intersect and MaxSim's vocab equi-join must stay keyed - never a
+    loop join. (ams_f2 is a pure aggregation; gazetteer_spans is a
+    zero-shuffle mapInPandas.)"""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    for name in ["link_simrank", "scc_pivot", "harmonic_centrality",
-                 "posting_bytes", "maxsim_search",
-                 "query_completion",
-                 "bucketed_batching", "ams_f2", "gazetteer_spans"]:
+    for name in ["scc_pivot", "maxsim_search", "ams_f2",
+                 "gazetteer_spans"]:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_single_row_dimension_crossjoins(spark):
-    """ltr_features and trending_terms share bm25_topk's geometry:
-    their ONLY nested-loop join is the broadcast of a 1-row
+    """ltr_features shares bm25_topk's geometry: its ONLY nested-loop
+    join, like decision_stump's, is the broadcast of a 1-row
     corpus-stats/totals dimension (a single-row crossJoin is the
     correct plan at any scale); every data join must stay keyed."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    for name in ["ltr_features", "trending_terms", "decision_stump"]:
+    for name in ["ltr_features", "decision_stump"]:
         plan = _physical(qs[name](spark, "/root/testdata/sf0.001"))
         assert "CartesianProduct" not in plan, name
         assert plan.count("BroadcastNestedLoopJoin") == 1, name
@@ -634,23 +550,21 @@ def test_maxsim_query_side_stays_scalar(spark):
 def test_session10_new_shapes_no_nested_loops(spark):
     """Round-4 session-10 shapes: skip-gram's probe-key equi-join (a
     range join would BNLJ), symspell's delete-key equi-join, MATTR's
-    per-(doc,term) lag, the fd/encoding/brier aggregations and the
-    spearman rank windows must all stay keyed."""
+    per-(doc,term) lag, the fd aggregation and the spearman rank
+    windows must all stay keyed."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
     for name in ["symspell_correct", "mattr_diversity",
-                 "fd_violations", "encoding_advisor", "spearman_rho",
-                 "lateness_profile", "equidepth_hist"]:
+                 "fd_violations", "spearman_rho"]:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
     # these carry exactly ONE legitimate nested-loop join: the 1-row
     # totals/prior broadcast (the ltr_features contract); every DATA
     # join must stay keyed
-    for name in ["skipgram_ppmi", "llr_collocations", "target_encode",
-                 "rendezvous_shards", "woe_iv", "brier_bins"]:
+    for name in ["skipgram_ppmi", "woe_iv"]:
         plan = _physical(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert plan.count("BroadcastNestedLoopJoin") == 1, name

@@ -537,14 +537,6 @@ def test_cohort_retention_analytic(spark):
     assert (c0, 2) not in out         # nobody from cohort 0 in week 2
 
 
-def test_tpch_order_priority_is_semi_join(spark):
-    import __spark_entry__ as entry
-    df = entry._q_tpch_order_priority(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().toString().split("== Physical Plan ==")[-1]
-    assert "LeftSemi" in plan          # EXISTS probed once, never multiplied
-    assert df.count() > 0
-
-
 def test_kcore_peel_analytic(spark):
     # 4-clique (3-core) + a tail a-b-c hanging off it + an isolated pair
     e = spark.createDataFrame(
