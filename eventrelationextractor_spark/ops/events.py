@@ -1583,7 +1583,7 @@ def markov_attribution(events: DataFrame, conv_type: str = "purchase",
 
     Scale shape: one window (per-user ordering) + one groupBy to the
     |channels|^2 transition table; the fixed-point solve runs on the
-    DRIVER over that statistic-scale model (the embedding_kmeans
+    DRIVER over that statistic-scale model (the cluster.kmeans_fit
     centroid contract — never data rows). Ordering by (ts, id) uses
     calendar-free comparisons only: TZ-proof on NTZ timestamps."""
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
@@ -2038,7 +2038,7 @@ def ewma_anomalies(df: DataFrame, user_col: str = "user_id",
     floors while Spark div / DuckDB // truncate) with an anomaly
     flagged whenever |x - s_prev| > threshold BEFORE the update. The
     recurrence-structure sibling of events_anomalies (prequential
-    Welford z) and events_cusum (drift sums): EWMA weights recency
+    Welford z) and cusum_alarms (drift sums): EWMA weights recency
     geometrically, which neither of those does.
 
     Per-user sequential state -> applyInPandas over (ts, id)-ordered

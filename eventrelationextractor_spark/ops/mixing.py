@@ -261,7 +261,7 @@ def ipf_raking(cells: DataFrame, row_col: str, col_col: str,
 
     Determinism: weights live in integer MICRO-units and every scaling
     is the lockstep integer div w' = (w * target * 1e6) div margin_sum
-    — the quality_classifier fixed-point pattern, so both engines (and
+    — the train_quality_classifier_fixedpoint pattern, so both engines (and
     any partial-agg merge order) walk the identical integer sequence.
     The product w * target * 1e6 exceeds 2^63, so it runs in Spark
     DECIMAL(38,0) against DuckDB HUGEINT — measured bit-equal
@@ -269,7 +269,7 @@ def ipf_raking(cells: DataFrame, row_col: str, col_col: str,
     fits BIGINT, which it does: the quotient is the rescaled micro
     mass, <= max target * 1e6). Classical IPF converges
     geometrically; 3 lockstep rounds is the documented
-    fixed-iteration contract (same stance as embedding_kmeans /
+    fixed-iteration contract (same stance as cluster.kmeans_fit /
     lm_quality).
 
     Scale shape: the CELL table is statistic-scale (|rows| x |cols|),
@@ -412,7 +412,7 @@ def knapsack_select(df: DataFrame, group_col: str, weight_col: str,
     best_value): the optimal doc-selection-under-token-budget
     primitive (pick documents maximizing quality within a fixed
     context/mixture budget) — the exact counterpart of mixture_
-    sample's proportional draws and sequence_packing's first-fit
+    sample's proportional draws and pack_sequences' greedy fill
     (greedy packs everything; knapsack PICKS, optimally).
 
     The classic O(n * capacity) DP is per-group sequential, but its

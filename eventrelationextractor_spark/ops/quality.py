@@ -1524,7 +1524,7 @@ def boosted_stumps(df: DataFrame, feature_cols: list,
     nonlinearities the linear model can't), in the boost-by-majority
     flavor: misclassified examples DOUBLE their integer weight each
     round (no alpha = no log/exp = no float ever enters the
-    training loop - the quality_classifier fixed-point lesson taken
+    training loop - the train_quality_classifier_fixedpoint lesson taken
     to its cleanest form), and the ensemble votes unweighted
     (score = sum of +-1 stump votes).
 
@@ -1999,7 +1999,7 @@ def emd_drift(df: DataFrame, group_col: str, value_col: str,
     """1-D earth mover's (Wasserstein-1) distance between each
     group's value distribution and the pooled rest -> (g, n_g,
     n_rest, emd_ppm): the drift metric that SEES HOW FAR mass
-    moved, which ks_drift (sup gap) and psi_drift (bin log-ratios)
+    moved, which ks_two_sample (sup gap) and psi_buckets (bin log-ratios)
     do not — in 1-D it is exactly the area between normalized CDFs. CDFs are
     step functions constant between OCCUPIED buckets, so each
     occupied bucket's |cdf gap| is weighted by the distance to the

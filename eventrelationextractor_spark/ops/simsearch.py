@@ -882,7 +882,7 @@ def grid_spatial_join(points: DataFrame, rects: DataFrame,
                       id_col: str = "pid") -> DataFrame:
     """Grid-bucketed point-in-rectangle spatial join -> (rect,
     n_points, sum_x): the 2-D generalization of the bucketed 1-D
-    interval join (events_interval_join) — geofence counting,
+    interval join (events.interval_join_bucketed) — geofence counting,
     viewport queries, bbox containment — with the same no-BNLJ
     discipline: each rectangle replicates to every grid cell it
     overlaps (cell = coordinate div ``cell``, a bounded fanout by

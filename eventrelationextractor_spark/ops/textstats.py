@@ -943,7 +943,7 @@ def profile_drift(old_profile: DataFrame, new_profile: DataFrame,
         F.col("n_distinct").alias("n_distinct"))
     j = o.join(n, "column", "full_outer")
     # pure integer div: double-divide-then-truncate is not pinned
-    # across engines (the sequence_packing lesson). The isNull branch
+    # across engines (the ops/packing.py lesson). The isNull branch
     # must come FIRST: a null n_rows would otherwise fall into
     # .otherwise(0) and mask the added/removed sentinel.
     o_ppm = (F.when(F.col("o_rows").isNull(), F.lit(None))

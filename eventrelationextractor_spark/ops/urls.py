@@ -254,8 +254,9 @@ def url_spam_features(df: DataFrame, url_col: str = "url") -> DataFrame:
     Pure per-row codegen (regex + arithmetic): no shuffle, no UDF,
     column-prunable; the SQL oracle replays every expression. The score
     is a transparent linear bucket heuristic, NOT a learned model (the
-    learned tier is ops/quality.py::quality_classifier); weights chosen
-    so each feature family saturates at least-1. No counterpart in
+    learned tier is
+    ops/quality.py::train_quality_classifier_fixedpoint); weights
+    chosen so each feature family saturates at least-1. No counterpart in
     /root/reference."""
     u = F.col(url_col)
     host = F.lower(F.regexp_extract(u, HOST_RE, 1))
